@@ -51,15 +51,21 @@ def read_back(spark, root: str, sample_ids, read_rows: int | None = None) -> dic
         .agg(F.sum("doc_count"), F.sum("span_count"))
         .collect()[0]
     )
-    out = read_extracted(spark, root)
-    if read_rows is None:
-        read_rows = out.count()
-    sample = out.filter(F.col("doc_id").isin(list(sample_ids))).collect()
+    # the row count and the sample in one pass over the table
+    cols = ("doc_id", "kind", "text", "media_ref", "offset")
+    rows, sample = (
+        read_extracted(spark, root)
+        .agg(
+            F.count("*"),
+            F.collect_list(F.when(F.col("doc_id").isin(list(sample_ids)), F.struct(*cols))),
+        )
+        .collect()[0]
+    )
     return {
         "manifest_docs": int(docs or 0),
         "manifest_spans": int(spans or 0),
-        "read_rows": read_rows,
-        "sample": group_rows(sample),
+        "read_rows": rows if read_rows is None else read_rows,
+        "sample": group_rows(tuple(r) for r in sample),
     }
 
 

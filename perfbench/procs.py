@@ -39,10 +39,18 @@ def process_tree(root: int | None = None) -> list[int]:
     return tree
 
 
+def _rss(pid: int) -> int:
+    try:
+        with open(f"/proc/{pid}/statm") as f:
+            return int(f.read().split()[1]) * os.sysconf("SC_PAGE_SIZE")
+    except OSError:
+        return 0
+
+
 def _pss(pid: int) -> int:
     """Proportional set size: resident pages, each shared page divided
-    among the processes sharing it. Summed over a tree it counts shared
-    pages once, also those of a JVM child between fork and exec."""
+    among the processes sharing it. Summed over processes it counts the
+    pages a forked Python worker shares with its parent once."""
     try:
         with open(f"/proc/{pid}/smaps_rollup") as f:
             for line in f:
@@ -62,42 +70,129 @@ def _alive(pid: int) -> bool:
     return stat[stat.rindex(")") + 2] != "Z"
 
 
+def _comm(pid: int) -> str:
+    try:
+        with open(f"/proc/{pid}/comm") as f:
+            return f.read().strip()
+    except OSError:
+        return ""
+
+
+def _kind(pid: int) -> str:
+    if pid == os.getpid():
+        return "driver"
+    return "jvm" if _comm(pid) == "java" else "python_workers"
+
+
+def tree_memory_by_kind() -> dict[str, int]:
+    """Resident bytes of this process tree by kind: the JVM's RSS (reading
+    its PSS costs a third of a core at 10 samples a second), the PSS of
+    every Python process. A child of the JVM that is not (yet) Python is
+    left out: between spawn and exec it shares the JVM's memory, and
+    counting it once added the JVM's 1.4 GiB a second time."""
+    kids = _children()
+    out: dict[str, int] = defaultdict(int)
+    tree = [os.getpid()]
+    for pid in tree:
+        kind = _kind(pid)
+        out[kind] += _rss(pid) if kind == "jvm" else _pss(pid)
+        for child in kids.get(pid, ()):
+            if kind != "jvm" or _comm(child).startswith("python"):
+                tree.append(child)
+    return out
+
+
 class RssSampler:
-    """Peak of the resident memory of this process tree (summed PSS),
-    sampled every ``interval`` seconds on a daemon thread."""
+    """Peak of the resident memory of this process tree, sampled every
+    ``interval`` seconds on a daemon thread (see tree_memory_by_kind),
+    and how the peak splits between this process, the JVM and the Python
+    workers."""
 
     def __init__(self, interval: float = 0.1) -> None:
         self.interval = interval
         self.peak_bytes = 0
+        self.peak_by_kind: dict[str, int] = {}
+        self.tid: int | None = None  # the sampling thread's, once it runs
+        self._started = threading.Event()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
     def _run(self) -> None:
+        self.tid = threading.get_native_id()
+        self._started.set()
         while not self._stop.is_set():
-            total = sum(_pss(pid) for pid in process_tree())
-            self.peak_bytes = max(self.peak_bytes, total)
+            by_kind = tree_memory_by_kind()
+            total = sum(by_kind.values())
+            if total > self.peak_bytes:
+                self.peak_bytes, self.peak_by_kind = total, dict(by_kind)
             self._stop.wait(self.interval)
 
     def __enter__(self) -> "RssSampler":
         self._thread.start()
+        self._started.wait()
         return self
 
     def __exit__(self, *exc) -> None:
+        self.cpu_s = _cpu_ticks(f"/proc/self/task/{self.tid}/stat", _OWN) / os.sysconf(
+            "SC_CLK_TCK"
+        )
         self._stop.set()
         self._thread.join()
 
 
-def tree_cpu_seconds() -> float:
-    """CPU seconds used by this process tree, exited children included."""
-    total = 0
+def _cpu_ticks(stat_path: str, fields: slice) -> int:
+    try:
+        with open(stat_path) as f:
+            stat = f.read()
+    except OSError:
+        return 0
+    return sum(map(int, stat[stat.rindex(")") + 2 :].split()[fields]))
+
+
+# utime + stime, and with cutime + cstime (exited, waited-for children)
+_OWN, _WITH_CHILDREN = slice(11, 13), slice(11, 15)
+
+
+def _jvm_thread_kind(tid_dir: str) -> str | None:
+    try:
+        with open(os.path.join(tid_dir, "comm")) as f:
+            comm = f.read()
+    except OSError:
+        return None
+    if "CompilerThre" in comm:
+        return "jvm_jit"
+    if comm.startswith(("GC Thread", "G1 ")):
+        return "jvm_gc"
+    return None
+
+
+def tree_cpu_by_kind(exclude_tid: int | None = None) -> dict[str, float]:
+    """CPU seconds used by this process tree, exited children included,
+    split into this process, the JVM's JIT compiler threads, its GC
+    threads, the rest of the JVM, and the Python workers. ``exclude_tid``
+    is a thread of this process whose CPU time is left out."""
+    ticks: dict[str, int] = defaultdict(int)
+    if exclude_tid is not None:
+        ticks["driver"] -= _cpu_ticks(f"/proc/self/task/{exclude_tid}/stat", _OWN)
     for pid in process_tree():
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                stat = f.read()
-        except OSError:
-            continue
-        total += sum(map(int, stat[stat.rindex(")") + 2 :].split()[11:15]))
-    return total / os.sysconf("SC_CLK_TCK")
+        kind = _kind(pid)
+        total = _cpu_ticks(f"/proc/{pid}/stat", _WITH_CHILDREN)
+        if kind == "jvm":
+            task = f"/proc/{pid}/task"
+            try:
+                tids = os.listdir(task)
+            except OSError:
+                tids = []
+            for tid in tids:
+                sub = _jvm_thread_kind(os.path.join(task, tid))
+                if sub:
+                    t = _cpu_ticks(os.path.join(task, tid, "stat"), _OWN)
+                    ticks[sub] += t
+                    total -= t
+        ticks[kind] += total
+    hz = os.sysconf("SC_CLK_TCK")
+    return {k: v / hz for k, v in ticks.items()}
+
 
 
 def host_cpu() -> tuple[int, int, int]:
@@ -129,7 +224,14 @@ def start_spark(master: str, work_dir: str, driver_memory: str):
         master=master,
         extra_conf={
             "spark.driver.extraJavaOptions": (
-                f"-Djava.net.preferIPv4Stack=true -Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+                f"-Djava.net.preferIPv4Stack=true -Djava.io.tmpdir={tmp} -XX:-UsePerfData "
+                # a fixed heap and young generation: how far G1 grows them
+                # depends on GC timing, and moved the JVM's peak RSS
+                # between 1.5 and 2.1 GiB over runs with a 2 GiB heap
+                f"-Xms{driver_memory} -Xmn256m "
+                # compiler threads that never exit, so their CPU time stays
+                # apart from the rest of the JVM's (tree_cpu_by_kind)
+                "-XX:-UseDynamicNumberOfCompilerThreads"
             ),
             "spark.sql.warehouse.dir": os.path.join(work_dir, "warehouse"),
             "spark.ui.showConsoleProgress": "false",

@@ -1,6 +1,6 @@
 """End-to-end benchmark of the resumable extraction job.
 
-    python3 perfbench/run.py --workload mixed_resume --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload mixed_resume --seed 1 --seconds 5 --trace 0
 
 Run from the root of a checkout. One process drives one Spark session at
 ``local[2]`` in a closed loop: each operation starts after the previous
@@ -32,12 +32,10 @@ SRC = os.path.join(ROOT, "src")
 WORK = os.path.join(ROOT, ".perfbench_work")
 
 MASTER = "local[2]"
-TASK_SLOTS = 2
-DRIVER_MEMORY = "2g"
+DRIVER_MEMORY = "1g"
 CRASH_AFTER_BUCKETS = 32  # the crashed run commits buckets 0..31 of 64
 CHECK_SAMPLE_DOCS = 24
 CORE_SAMPLE_DOCS = 400
-MIXED_MEGA_INDEX = 13  # sparkextract.corpus makes doc 13 a mega doc on every seed
 
 
 @dataclass(frozen=True)
@@ -50,27 +48,44 @@ class Workload:
 
 
 WORKLOADS = {
-    "media_heavy": Workload("media", 5_000, resume=False),
-    "mixed_resume": Workload("mixed", 4_000, resume=True),
+    "media_heavy": Workload("media", 3_000, resume=False),
+    "mixed_resume": Workload("mixed", 2_000, resume=True),
 }
 
 
-def unit_of(name: str) -> str:
-    if name.endswith("per_s"):
-        return "docs/s"
-    if name.endswith("_s"):
-        return "s"
-    if name.endswith("us_per_doc"):
-        return "us"
-    if name.endswith("_mb"):
-        return "MiB"
-    if name.endswith("out_bytes"):
-        return "bytes"
-    if name.endswith("bytes_per_doc"):
-        return "bytes/doc"
-    if name.endswith(("ratio", "share")):
-        return "ratio"
-    return "count"
+def declared_units() -> dict[str, dict[str, str]]:
+    """Unit of every metric BENCHMARK.json declares, by section."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    return {sec: {m["name"]: m["unit"] for m in spec[sec]} for sec in ("end_to_end", "per_layer")}
+
+
+def mega_indices(n_docs: int) -> set[int]:
+    """Indices of the mixed corpus's mega docs (``sparkextract.corpus``:
+    index % MEGA_DOC_MODULUS == 13)."""
+    from sparkextract.corpus import MEGA_DOC_MODULUS
+
+    return set(range(13, n_docs, MEGA_DOC_MODULUS))
+
+
+def resumed(index: int) -> bool:
+    """Whether the operations of mixed_resume, not the crashed run, commit
+    the doc at ``index`` (its bucket is the index mod 64, see index_bucket)."""
+    from sparkextract import config
+
+    return index % config.MANIFEST_NUM_BUCKETS >= CRASH_AFTER_BUCKETS
+
+
+def check_indices(name: str, seed: int) -> set[int]:
+    """The seeded sample of docs whose read-back every operation compares
+    with the oracle; on the mixed corpus also every mega doc, so the split
+    and reassembly of the operation's own mega docs is checked."""
+    wl = WORKLOADS[name]
+    rng = random.Random(f"perfbench:{name}:{seed}")
+    idx = set(rng.sample(range(wl.n_docs), CHECK_SAMPLE_DOCS))
+    if wl.corpus == "mixed":
+        idx |= mega_indices(wl.n_docs)
+    return idx
 
 
 def dir_bytes(path: str) -> tuple[int, int]:
@@ -90,6 +105,21 @@ def index_bucket():
     from sparkextract import config
 
     return F.pmod(F.substring("doc_id", -9, 9).cast("long"), F.lit(config.MANIFEST_NUM_BUCKETS))
+
+
+def work_cpu_seconds(cpu_by_kind: dict[str, float]) -> float:
+    """CPU seconds of the process tree without the JVM's JIT compiler
+    threads. How much compiling lands inside a measured interval rather
+    than before it depends on how busy the host is: over two timed
+    operations of mixed_resume the compiler threads took 4.7-11.8 CPU
+    seconds between runs, the rest of the tree 27.6-30.0."""
+    return sum(v for k, v in cpu_by_kind.items() if k != "jvm_jit")
+
+
+def docs_per_cpu_s(ops: list[dict]) -> float:
+    """Docs committed per work CPU second (work_cpu_seconds) over ``ops``."""
+    cpu = sum(o["work_cpu_s"] for o in ops)
+    return sum(o["docs"] for o in ops) / cpu if cpu else 0.0
 
 
 def read_table(spark, root: str) -> int:
@@ -123,20 +153,20 @@ class Bench:
         self.tracer = Tracer(enabled=trace)
         self.spark = None
         self.ops: list[dict] = []
+        self.sampler_tid: int | None = None  # left out of the tree's CPU time
 
     # -- set-up ----------------------------------------------------------
     def setup(self) -> None:
         from perfbench import inputs
         from perfbench.check import expected_spans
-        from perfbench.procs import start_spark
+        from perfbench.procs import start_spark, tree_cpu_by_kind
         from sparkextract.spark.manifest import run_extraction_job
 
         wl, tr = self.wl, self.tracer
-        rng = random.Random(f"perfbench:{self.name}:{self.seed}")
-        check_idx = set(rng.sample(range(wl.n_docs), CHECK_SAMPLE_DOCS))
-        if wl.corpus == "mixed":
-            check_idx.add(MIXED_MEGA_INDEX)
-        core_idx = rng.sample(range(wl.n_docs), CORE_SAMPLE_DOCS)
+        check_idx = check_indices(self.name, self.seed)
+        core_idx = random.Random(f"perfbench:core:{self.name}:{self.seed}").sample(
+            range(wl.n_docs), CORE_SAMPLE_DOCS
+        )
 
         corpus = os.path.join(self.work, "corpus")
         t0 = time.perf_counter()
@@ -161,7 +191,7 @@ class Bench:
 
         # Warm-up, untimed: the first job in the fresh JVM costs about twice
         # a later one. On mixed_resume it is the crashed run whose root
-        # every operation restores, followed by one read of that root.
+        # every operation restores.
         self.start_root = os.path.join(self.work, "start")
         t0 = time.perf_counter()
         with tr.span("setup.warmup_op"):
@@ -171,32 +201,36 @@ class Bench:
                 bucket_col=self.bucket_col,
             )
             if wl.resume:
-                read_table(self.spark, self.start_root)
+                if not 0 < first["docs"] < wl.n_docs:
+                    raise RuntimeError(f"crashed run committed {first['docs']} of {wl.n_docs} docs")
+                self.todo_docs = wl.n_docs - first["docs"]
+            else:
+                shutil.rmtree(self.start_root)
+                self.todo_docs = wl.n_docs
+            # The JVM keeps compiling after the first job: the tree's CPU
+            # per operation falls from ~25 to ~12 s over the first eight.
+            # One more operation, checked like the timed ones but not
+            # measured, moves the timed ones past the steepest part.
+            self.ops.append(self.run_op(0, timed=False))
         self.warmup_op_s = time.perf_counter() - t0
-        if wl.resume:
-            if not 0 < first["docs"] < wl.n_docs:
-                raise RuntimeError(f"crashed run committed {first['docs']} of {wl.n_docs} docs")
-            self.todo_docs = wl.n_docs - first["docs"]
-        else:
-            shutil.rmtree(self.start_root)
-            self.todo_docs = wl.n_docs
         self.setup_s = time.perf_counter() - PROCESS_T0
+        self.setup_cpu_s = work_cpu_seconds(tree_cpu_by_kind(self.sampler_tid))
 
     # -- timed operations --------------------------------------------------
     def op_root(self, i: int) -> str:
         return os.path.join(self.work, f"op{i}")
 
-    def run_op(self, i: int) -> dict:
+    def run_op(self, i: int, timed: bool = True) -> dict:
         from perfbench.check import failures, read_back
-        from perfbench.procs import tree_cpu_seconds
+        from perfbench.procs import tree_cpu_by_kind
         from sparkextract.spark.manifest import run_extraction_job
 
         root, tr, run_id = self.op_root(i), self.tracer, f"op{i}"
         if self.wl.resume:
             shutil.copytree(self.start_root, root)
         tr.op_id = i
-        rec = {"op": i, "traced": tr.enabled, "ok": False, "docs": 0}
-        cpu0 = tree_cpu_seconds()
+        rec = {"op": i, "timed": timed, "traced": tr.enabled, "ok": False, "docs": 0}
+        cpu0 = tree_cpu_by_kind(self.sampler_tid)
         try:
             with tr.span("op"):
                 t0 = time.perf_counter()
@@ -212,13 +246,18 @@ class Bench:
                         read_rows = read_table(self.spark, root)
                     rec["read_s"] = time.perf_counter() - t1
                 rec["op_s"] = time.perf_counter() - t0
-            rec["cpu_s"] = tree_cpu_seconds() - cpu0
+            cpu1 = tree_cpu_by_kind(self.sampler_tid)
+            rec["cpu_by_kind"] = {k: cpu1[k] - cpu0.get(k, 0.0) for k in cpu1}
+            rec["cpu_s"] = sum(rec["cpu_by_kind"].values())
+            rec["work_cpu_s"] = work_cpu_seconds(rec["cpu_by_kind"])
+            t2 = time.perf_counter()
             with tr.span("check"):
                 seen = read_back(self.spark, root, self.expected, read_rows)
                 rec["failures"] = failures(
                     todo_docs=self.todo_docs, committed_docs=res["docs"],
                     corpus_docs=self.wl.n_docs, seen=seen, expected=self.expected,
                 )
+            rec["check_s"] = time.perf_counter() - t2
         except Exception:
             rec["failures"] = [traceback.format_exc()]
             rec.setdefault("op_s", 0.0)
@@ -237,36 +276,38 @@ class Bench:
 
     def timed_ops(self) -> None:
         """Closed loop for ``seconds`` of operation time and at least two
-        operations: the first still runs slower than later ones, so a run
-        with one operation would not be comparable. A traced run alternates
-        traced and untraced operations, at least three."""
+        operations. A traced run traces every second operation and runs at
+        least three, so its untraced operations come before and after a
+        traced one on the JVM's warm-up curve."""
         from perfbench.procs import host_cpu
 
         cpu0 = host_cpu()
-        measured = 0.0
-        min_ops = 3 if self.trace else 2
-        while measured < self.seconds or len(self.ops) < min_ops:
+        measured, n_timed = 0.0, 0
+        while measured < self.seconds or n_timed < (3 if self.trace else 2):
             i = len(self.ops)
-            if i:
-                shutil.rmtree(self.op_root(i - 1), ignore_errors=True)
-            self.tracer.enabled = self.trace and i % 2 == 0
+            shutil.rmtree(self.op_root(i - 1), ignore_errors=True)
+            self.tracer.enabled = self.trace and n_timed % 2 == 1
             self.ops.append(self.run_op(i))
+            n_timed += 1
             measured += self.ops[-1]["op_s"] or self.seconds  # a failed op uses up the time
         self.tracer.enabled = self.trace
         busy, steal, total = (b - a for a, b in zip(cpu0, host_cpu()))
         self.host_cpu = {"busy_share": busy / total, "steal_share": steal / total}
 
     # -- results -----------------------------------------------------------
+    def timed_ok(self) -> list[dict]:
+        return [o for o in self.ops if o["timed"] and o["ok"]]
+
     def end_to_end(self, peak_rss_bytes: int) -> dict:
-        ok = [o for o in self.ops if o["ok"]]
+        ok = self.timed_ok()
         return {
-            "docs_per_s": statistics.median(o["docs"] / o["op_s"] for o in ok) if ok else 0.0,
-            "setup_s": self.setup_s,
+            "docs_per_cpu_s": docs_per_cpu_s(ok),
+            "setup_s": self.setup_cpu_s,
             "peak_rss_mb": peak_rss_bytes / 2**20,
             "out_bytes_per_doc": (
                 statistics.median(o["out_bytes"] / o["docs"] for o in ok) if ok else 0.0
             ),
-            "op_ok_ratio": len(ok) / len(self.ops),
+            "op_ok_ratio": sum(o["ok"] for o in self.ops) / len(self.ops),
         }
 
     def per_layer(self) -> dict:
@@ -276,14 +317,12 @@ class Bench:
         from sparkextract.spark.manifest import filter_todo, read_manifest
         from sparkextract.spark.session import build_pyfiles_zip
 
-        ok = [o for o in self.ops if o["ok"]]
-        # the first operation still runs slower than later ones, so the
-        # traced/untraced comparison leaves it out
+        ok = self.timed_ok()
         rate = {
-            traced: [o["docs"] / o["op_s"] for o in ok[1:] if o["traced"] == traced]
+            traced: docs_per_cpu_s([o for o in ok if o["traced"] == traced])
             for traced in (True, False)
         }
-        if len(ok) < len(self.ops) or not all(rate.values()):
+        if not all(o["ok"] for o in self.ops) or not all(rate.values()):
             raise RuntimeError("the layer probes need passing traced and untraced operations")
         spark, tr = self.spark, self.tracer
         last = self.ops[-1]
@@ -325,16 +364,18 @@ class Bench:
         )
 
         m.update(core_replay(tr, self.core_docs))
+        # the share of an operation's CPU that core extraction of its docs
+        # takes, i.e. how far a core/ change can move docs_per_cpu_s
         m["core.op_share"] = (
             m["core.extract_document.us_per_doc"] * self.todo_docs / 1e6
-            / (TASK_SLOTS * m["manifest.run_job_s"])
+            / statistics.median(o["work_cpu_s"] for o in ok)
         )
         m["setup.input_gen_s"] = self.input_gen_s
         m["setup.warmup_op_s"] = self.warmup_op_s
-        m["trace.overhead_ratio"] = statistics.median(rate[True]) / statistics.median(rate[False])
+        m["trace.overhead_ratio"] = rate[True] / rate[False]
         return m
 
-    def describe(self) -> dict:
+    def describe(self, peak_rss_by_kind: dict[str, int]) -> dict:
         import pyarrow
         import pyspark
 
@@ -343,6 +384,7 @@ class Bench:
             commit = subprocess.run(
                 ["git", "rev-parse", "HEAD"], cwd=ROOT, capture_output=True, text=True, timeout=30
             ).stdout.strip()
+        ok = self.timed_ok()
         src_hash = hashlib.sha256()
         for dirpath, dirs, names in os.walk(os.path.join(SRC, "sparkextract")):
             dirs.sort()
@@ -366,18 +408,31 @@ class Bench:
             "todo_docs": self.todo_docs,
             "output_spans": [o.get("spans") for o in self.ops],
             "ops": len(self.ops),
+            "timed": [o["timed"] for o in self.ops],
             "op_s": [round(o["op_s"], 4) for o in self.ops],
             "run_job_s": [round(o.get("run_job_s", 0), 4) for o in self.ops],
             "read_s": [round(o.get("read_s", 0), 4) for o in self.ops],
+            "check_s": [round(o.get("check_s", 0), 4) for o in self.ops],
             "cpu_s": [o.get("cpu_s") for o in self.ops],
+            "work_cpu_s": [o.get("work_cpu_s") for o in self.ops],
+            "cpu_s_by_kind": [
+                {k: round(v, 2) for k, v in o.get("cpu_by_kind", {}).items()} for o in self.ops
+            ],
             "host_cpu_during_ops": self.host_cpu,
+            "docs_per_s_wall": (
+                sum(o["docs"] for o in ok) / sum(o["op_s"] for o in ok) if ok else None
+            ),
+            "peak_rss_mb_by_process": {
+                k: round(v / 2**20, 1) for k, v in peak_rss_by_kind.items()
+            },
             "setup": {
-                "setup_s": round(self.setup_s, 4),
+                "setup_cpu_s": round(self.setup_cpu_s, 4),
+                "setup_wall_s": round(self.setup_s, 4),
                 "input_gen_s": round(self.input_gen_s, 4),
                 "get_spark_s": round(self.get_spark_s, 4),
                 "warmup_op_s": round(self.warmup_op_s, 4),
-                "included": "process start, input generation, oracle sample, "
-                "session start, warm-up job (mixed_resume: the crashed run and one read)",
+                "included": "process start, input generation, oracle sample, session start, "
+                "warm-up job (mixed_resume: the crashed run), one untimed operation",
             },
         }
 
@@ -404,6 +459,7 @@ def main(argv=None) -> int:
     bench = Bench(args.workload, args.seed, args.seconds, bool(args.trace), work)
     try:
         with RssSampler() as rss:
+            bench.sampler_tid = rss.tid
             try:
                 bench.setup()
                 bench.timed_ops()
@@ -411,19 +467,25 @@ def main(argv=None) -> int:
             finally:
                 if bench.spark is not None:
                     stop_spark(bench.spark)
-        info = bench.describe()
+        info = bench.describe(rss.peak_by_kind)
+        info["rss_sampler_cpu_s"] = rss.cpu_s
     except Exception:
         traceback.print_exc()
         return 1
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
+    units = declared_units()["per_layer" if bench.trace else "end_to_end"]
+    if set(metrics) != set(units):
+        print(f"perfbench: metrics {sorted(set(metrics) ^ set(units))} do not match "
+              "BENCHMARK.json", file=sys.stderr)
+        return 1
     failed = sum(not o["ok"] for o in bench.ops)
     result = {
         "correct": failed == 0,
         "attempted": len(bench.ops),
         "failed": failed,
-        "metrics": {k: {"value": v, "unit": unit_of(k)} for k, v in metrics.items()},
+        "metrics": {k: {"value": v, "unit": units[k]} for k, v in metrics.items()},
     }
     stem = os.path.join(results, f"{args.workload}-seed{args.seed}-trace{args.trace}")
     with open(stem + ".json", "w") as f:
