@@ -11,6 +11,7 @@ every LIMIT, identical aliases in both engines.
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -464,6 +465,7 @@ def q94_corpus_clean_pipeline(spark, sf_dir):
 # (that is the point of the resume).
 _Q95_BUCKETS = 8
 _Q95_FAIL_AFTER = 4
+_Q95_REAP_AGE_S = 24 * 3600  # sibling roots older than this are reaped
 
 _Q95_ORACLE = f"""
 WITH b AS (
@@ -501,10 +503,19 @@ def _q95_root(spark, sf_dir: str) -> str:
     ).hexdigest()[:12]
     root = os.path.join(tempfile.gettempdir(), f"sparkextract_q95_{key}")
     # reap sibling roots left by earlier sessions (each session otherwise
-    # leaks one extraction-output tree in /tmp forever — round-4 ADVICE)
+    # leaks one extraction-output tree in /tmp forever — round-4 ADVICE),
+    # but only day-old ones: a fresh sibling may belong to a session that
+    # is still running. Touching our own root keeps it fresh while in use.
+    cutoff = time.time() - _Q95_REAP_AGE_S
     for stale in glob.glob(os.path.join(tempfile.gettempdir(), "sparkextract_q95_*")):
-        if stale != root:
+        try:
+            old = stale != root and os.path.getmtime(stale) < cutoff
+        except OSError:  # reaped concurrently by another session
+            continue
+        if old:
             shutil.rmtree(stale, ignore_errors=True)
+    if os.path.isdir(root):
+        os.utime(root)
     return root
 
 

@@ -187,8 +187,9 @@ g AS (
          CAST(SUM(n) AS BIGINT) AS n_tot,
          CAST(SUM(s1) AS BIGINT) AS s1_tot,
          CAST(SUM(s2) AS BIGINT) AS s2_tot,
-         SUM(CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-           AS sum_sq_over_n
+         CAST(SUM(CAST(ROUND(CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
+                             / CAST(n AS DOUBLE), 6) AS DECIMAL(18,6)))
+              AS DOUBLE) AS sum_sq_over_n
   FROM per_src
 ),
 anova AS (
@@ -237,10 +238,15 @@ def q215_design_effect(spark, sf_dir):
         F.sum("n").cast("long").alias("n_tot"),
         F.sum("s1").cast("long").alias("s1_tot"),
         F.sum("s2").cast("long").alias("s2_tot"),
+        # each s1^2/n term is frozen to DECIMAL(18,6) before the sum (the
+        # q193 chi2_total pattern): a double sum depends on row order
         F.sum(
-            F.col("s1").cast("double") * F.col("s1").cast("double")
-            / F.col("n").cast("double")
-        ).alias("sum_sq_over_n"),
+            F.round(
+                F.col("s1").cast("double") * F.col("s1").cast("double")
+                / F.col("n").cast("double"),
+                6,
+            ).cast("decimal(18,6)")
+        ).cast("double").alias("sum_sq_over_n"),
     )
     kd = F.col("k").cast("double")
     nd = F.col("n_tot").cast("double")

@@ -9,6 +9,10 @@ epoch per bucket, so a run that dies after writing data but before
 committing its manifest rows leaves invisible files, and the rerun
 reprocesses those buckets exactly once (FIXTURES.md F3 resume test).
 
+A run is one extract+write job plus one small aggregate: the write's
+observation carries the per-bucket span/table counts, and the manifest
+rows are built on the driver, never by re-running the input plan.
+
 The resume probe is the reference's SHA-256 skip-if-ingested check
 (/root/reference/src/rag/rag_pipeline.py:97-105) generalized from
 per-document to per-bucket: a left-anti join against completed buckets
@@ -24,6 +28,7 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -114,79 +119,73 @@ def run_extraction_job(
     out_bucket = bucket_expr(num_buckets) if bucket_col is None else bucket_col.cast("int")
     exploded = exploded.withColumn("bucket", out_bucket)
 
-    # Per-bucket span/table metrics ride along with the WRITE via
-    # df.observe(): at 100 TB a post-write `spark.read.parquet(out_dir)`
-    # (the previous design) is a second full pass of output I/O just for
-    # counters. One conditional-sum pair per bucket is 2*num_buckets
-    # cheap JVM-side aggregates collected by the write action itself —
-    # no extra job, no re-read, no recomputation of the extraction
-    # subtree. (Grouped aggs aren't expressible in observe(), hence the
-    # per-bucket unrolling; num_buckets is a small fixed constant.)
+    # Per-bucket span/table counts ride along with the WRITE via
+    # df.observe(): no re-read of the output and no second pass of the
+    # extraction subtree. Grouped aggs aren't expressible in observe(),
+    # so each count is a ``histogram_numeric`` over the bucket id, whose
+    # cost does not grow with num_buckets. It is exact here: Spark merges
+    # histogram bins only while it holds more than ``nb`` distinct values,
+    # and a bucket id takes at most num_buckets (``bucket_counts`` checks
+    # this against plain counts before anything commits; the double cast
+    # keeps a merged bin's fractional centre visible to that check).
     # The CollectMetrics node sits ABOVE the bucket repartition, i.e. in
     # the result/write stage: observed-metric updates from the final
     # stage are deduplicated per successful task, whereas a map-stage
     # observe can double-count under stage retry / speculation on a real
     # cluster (fetch-failure re-execution re-runs map tasks).
     obs = Observation(f"bucket_metrics_{run_id}")
-    aggs = []
-    for k in range(num_buckets):
-        in_bucket = (F.col("bucket") == k).cast("long")
-        aggs.append(F.sum(in_bucket).alias(f"sc_{k}"))
-        aggs.append(
-            F.sum(
-                ((F.col("bucket") == k) & (F.col("kind") == config.KIND_TABLE)).cast("long")
-            ).alias(f"tc_{k}")
-        )
-
-    out_dir = os.path.join(_data_dir(root), f"epoch={run_id}")
-    (
-        exploded.repartition("bucket")
-        .observe(obs, *aggs)
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(out_dir)
+    bucket = F.col("bucket").cast("double")
+    is_table = F.col("kind") == config.KIND_TABLE
+    nb = F.lit(max(num_buckets, 2))  # histogram_numeric needs nb >= 2
+    aggs = [
+        F.histogram_numeric(bucket, nb).alias("span_hist"),
+        F.count("*").alias("spans"),
+        F.histogram_numeric(F.when(is_table, bucket), nb).alias("table_hist"),
+        F.count_if(is_table).alias("tables"),
+    ]
+    observed = exploded.repartition("bucket").observe(obs, *aggs)
+    observed.write.partitionBy("bucket").mode("overwrite").parquet(
+        os.path.join(_data_dir(root), f"epoch={run_id}")
     )
-
-    # per-bucket lineage + metrics (north_rule: per-partition lineage and
-    # span-count/table-count metrics). Includes empty-output docs via the
-    # todo side so wholly-filtered buckets still commit.
     metrics = obs.get
-    doc_buckets = (
-        todo.select("doc_id", "doc_id_bucket")
-        .groupBy("doc_id_bucket").agg(F.countDistinct("doc_id").alias("doc_count"))
-    )
-    span_stats = spark.createDataFrame(
-        [
-            (k, int(metrics.get(f"sc_{k}") or 0), int(metrics.get(f"tc_{k}") or 0))
-            for k in range(num_buckets)
-        ],
-        "doc_id_bucket int, span_count long, table_count long",
-    )
+    spans = bucket_counts(metrics.get("span_hist"), metrics.get("spans", 0), num_buckets)
+    tables = bucket_counts(metrics.get("table_hist"), metrics.get("tables", 0), num_buckets)
+
+    # Per-bucket lineage + metrics rows, built on the driver: the todo
+    # side's per-bucket doc counts (<= num_buckets rows) are the one extra
+    # job, so buckets whose docs produced no spans still commit.
+    doc_counts = todo.groupBy("doc_id_bucket").agg(F.countDistinct("doc_id")).collect()
     wall_ms = int((time.time() - t0) * 1000)
-    stats = (
-        doc_buckets.join(span_stats, "doc_id_bucket", "left")
-        .na.fill({"span_count": 0, "table_count": 0})
-        .withColumn("job_run_id", F.lit(run_id))
-        .withColumn("status", F.lit("done"))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .withColumn("committed_at", F.current_timestamp())
-        .select([f.name for f in MANIFEST_SCHEMA.fields])
-    )
-    if fail_after_buckets is not None:
-        stats = stats.filter(F.col("doc_id_bucket") < fail_after_buckets)
-
-    stats.coalesce(1).write.mode("append").parquet(_manifest_dir(root))
-
-    committed = stats.agg(
-        F.sum("doc_count"), F.sum("span_count"), F.sum("table_count")
-    ).collect()[0]
+    committed_at = datetime.now(timezone.utc)
+    rows = [
+        (run_id, k, "done", n, spans.get(k, 0), tables.get(k, 0), wall_ms, committed_at)
+        for k, n in sorted(doc_counts)
+        if fail_after_buckets is None or k < fail_after_buckets
+    ]
+    if rows:  # a rerun with nothing left to do commits nothing
+        commit = spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1)
+        commit.write.mode("append").parquet(_manifest_dir(root))
     return {
         "run_id": run_id,
-        "docs": int(committed[0] or 0),
-        "spans": int(committed[1] or 0),
-        "tables": int(committed[2] or 0),
+        "docs": sum(r[3] for r in rows),
+        "spans": sum(r[4] for r in rows),
+        "tables": sum(r[5] for r in rows),
         "wall_s": time.time() - t0,
     }
+
+
+def bucket_counts(bins, total: int, num_buckets: int) -> dict[int, int]:
+    """``{bucket: count}`` from the ``(x, y)`` bins (null: no rows) of a
+    ``histogram_numeric`` over bucket ids. Raises unless every bin is an
+    integer id in ``[0, num_buckets)`` and the bins add up to ``total``."""
+    counts: dict[int, int] = {}
+    for x, y in bins or ():
+        if x != int(x) or not 0 <= x < num_buckets or y != int(y):
+            raise ValueError(f"histogram bin ({x}, {y}) is not a bucket id in [0, {num_buckets})")
+        counts[int(x)] = counts.get(int(x), 0) + int(y)
+    if sum(counts.values()) != total:
+        raise ValueError(f"histogram bins sum to {sum(counts.values())}, not the observed {total}")
+    return counts
 
 
 def read_extracted(spark: SparkSession, root: str) -> DataFrame:

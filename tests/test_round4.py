@@ -6,6 +6,7 @@ these tests pin the SEMANTICS (what the numbers mean) on the sf0.001
 corpus and on tiny synthetic frames."""
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -156,6 +157,28 @@ def test_q95_crash_resume_split(spark):
         assert r["table_count"] == 0
     n_docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).count()
     assert sum(r["doc_count"] for r in rows) == n_docs
+
+
+def test_q95_root_reaps_only_day_old_siblings(tmp_path, monkeypatch):
+    """A sibling root of another, possibly still running, session survives
+    ``_q95_root``; only one untouched for more than a day is reaped."""
+    import tempfile
+    import types
+
+    from sparkextract.queries.round4 import _Q95_REAP_AGE_S, _q95_root
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    fresh = tmp_path / "sparkextract_q95_fresh"
+    stale = tmp_path / "sparkextract_q95_stale"
+    for d in (fresh, stale):
+        (d / "manifest").mkdir(parents=True)
+    old = time.time() - _Q95_REAP_AGE_S - 60
+    os.utime(stale, (old, old))
+    fake = types.SimpleNamespace(sparkContext=types.SimpleNamespace(applicationId="app-1"))
+    root = _q95_root(fake, "/data/sf")
+    assert root.startswith(str(tmp_path)) and root not in (str(fresh), str(stale))
+    assert (fresh / "manifest").is_dir()
+    assert not stale.exists()
 
 
 def test_q96_block_dedup_first_writer_wins(spark):

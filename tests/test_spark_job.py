@@ -11,7 +11,14 @@ from sparkextract.core.extract import extract_document
 from sparkextract.corpus import generate_corpus
 from sparkextract.spark.datagen import corpus_df
 from sparkextract.spark.job import assemble_spans, extract_documents, extract_exploded
-from sparkextract.spark.manifest import read_extracted, run_extraction_job
+from sparkextract.schema import DOC_SCHEMA
+from sparkextract.spark.manifest import (
+    bucket_counts,
+    bucket_expr,
+    read_extracted,
+    read_manifest,
+    run_extraction_job,
+)
 from sparkextract.spark.session import get_spark
 
 N_DOCS = 180  # covers edge docs (i%101==3) and at least one mega doc (i%997==13)
@@ -101,7 +108,6 @@ def test_resume_idempotent(spark, docs, tmp_path_factory):
     assert resumed == full
 
     # no double-processing: every doc appears under exactly one epoch
-    from sparkextract.spark.manifest import read_manifest
     m = read_manifest(spark, root_b).filter(F.col("status") == "done")
     per_bucket = m.groupBy("doc_id_bucket").count().filter(F.col("count") > 1).count()
     assert per_bucket == 0
@@ -109,7 +115,6 @@ def test_resume_idempotent(spark, docs, tmp_path_factory):
 
 
 def test_empty_and_null_spans(spark):
-    from sparkextract.schema import DOC_SCHEMA
     df = spark.createDataFrame(
         [("d-empty", []), ("d-null", None)], schema=DOC_SCHEMA
     )
@@ -124,3 +129,97 @@ def test_assemble_roundtrip(spark, docs):
         "doc_id", "s.kind", "s.text", "s.media_ref", "s.offset"
     )
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, exploded.collect()))
+
+
+def test_bucket_counts_exact_histogram():
+    """Bins of one bucket id (split across partial aggregates) add up;
+    a null histogram is an empty observation."""
+    bins = [(0.0, 3.0), (5.0, 2.0), (0.0, 1.0), (7.0, 4.0)]
+    assert bucket_counts(bins, 10, 8) == {0: 4, 5: 2, 7: 4}
+    assert bucket_counts(None, 0, 8) == {}
+    assert bucket_counts([], 0, 8) == {}
+
+
+@pytest.mark.parametrize(
+    "bins, total",
+    [
+        ([(2.5, 2.0)], 2),  # merged bin: centre between two bucket ids
+        ([(8.0, 1.0)], 1),  # id out of [0, num_buckets)
+        ([(-1.0, 1.0)], 1),
+        ([(3.0, 1.5)], 1.5),  # fractional count
+        ([(1.0, 2.0), (2.0, 2.0)], 5),  # bins do not cover count(*)
+        (None, 3),  # rows observed but no histogram
+    ],
+)
+def test_bucket_counts_rejects_inexact_histogram(bins, total):
+    with pytest.raises(ValueError):
+        bucket_counts(bins, total, 8)
+
+
+def _check_commits(spark, docs, root, nb, runs):
+    """Every committed (bucket, epoch) carries the span/table counts of
+    that epoch's data files and the bucket's distinct input docs; each
+    run's returned totals are the sums of its own manifest rows."""
+    in_docs = dict(
+        docs.groupBy(bucket_expr(nb)).agg(F.countDistinct("doc_id")).collect()
+    )
+    manifest = read_manifest(spark, root).collect()
+    for run_id, ret in runs:
+        rows = [r for r in manifest if r["job_run_id"] == run_id]
+        assert ret == {
+            "run_id": run_id,
+            "docs": sum(r["doc_count"] for r in rows),
+            "spans": sum(r["span_count"] for r in rows),
+            "tables": sum(r["table_count"] for r in rows),
+            "wall_s": ret["wall_s"],
+        }
+        data = spark.read.parquet(os.path.join(root, "data", f"epoch={run_id}"))
+        per_bucket = {
+            r["bucket"]: (r["n"], r["t"])
+            for r in data.groupBy("bucket").agg(
+                F.count("*").alias("n"), F.count_if(F.col("kind") == "table").alias("t")
+            ).collect()
+        }
+        for r in rows:
+            k = r["doc_id_bucket"]
+            assert (r["span_count"], r["table_count"]) == per_bucket.get(k, (0, 0)), (run_id, k)
+            assert r["doc_count"] == in_docs[k], (run_id, k)
+    assert sorted(r["doc_id_bucket"] for r in manifest) == sorted(in_docs)
+
+
+@pytest.mark.parametrize("nb", [8, 64])
+@pytest.mark.parametrize("partitions", [1, 5])
+def test_manifest_counts_equal_output(spark, docs, tmp_path, nb, partitions):
+    """The observed per-bucket counts equal a groupBy of the written data,
+    for a single run and for a crashed-then-resumed one."""
+    edge = spark.createDataFrame(
+        [("edge-empty-0", []), ("edge-null-0", None), ("edge-empty-1", [])], schema=DOC_SCHEMA
+    )
+    inp = docs.unionByName(edge).repartition(partitions)
+
+    root = str(tmp_path / "single")
+    one = run_extraction_job(spark, inp, root, run_id="one", num_buckets=nb)
+    _check_commits(spark, inp, root, nb, [("one", one)])
+    assert one["docs"] == N_DOCS + 3
+
+    root = str(tmp_path / "resumed")
+    crashed = run_extraction_job(
+        spark, inp, root, run_id="crashed", num_buckets=nb, fail_after_buckets=3
+    )
+    resumed = run_extraction_job(spark, inp, root, run_id="resumed", num_buckets=nb)
+    _check_commits(spark, inp, root, nb, [("crashed", crashed), ("resumed", resumed)])
+    assert crashed["docs"] + resumed["docs"] == N_DOCS + 3
+
+
+def test_rerun_over_committed_root_is_noop(spark, docs, tmp_path):
+    """A rerun with nothing left to do commits no manifest row, returns
+    zeros (its observation is an empty histogram) and changes no output."""
+    root = str(tmp_path / "root")
+    run_extraction_job(spark, docs, root, run_id="first", num_buckets=8)
+    before = sorted(map(tuple, read_extracted(spark, root).collect()))
+    n_rows = read_manifest(spark, root).count()
+
+    again = run_extraction_job(spark, docs, root, run_id="again", num_buckets=8)
+    assert (again["docs"], again["spans"], again["tables"]) == (0, 0, 0)
+    assert read_manifest(spark, root).count() == n_rows
+    assert sorted(map(tuple, read_extracted(spark, root).collect())) == before
