@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparkextract.queries.base import load, register
+from sparkextract.queries.vector import _DIM, _dot, _norm, _plane_sign_sql, _plane_signs_py
 
 _BITS = 16
 
@@ -71,16 +72,6 @@ def q32_simhash(spark, sf_dir):
 # verify — the scale pattern for similarity dedup: candidates come from a
 # bucket hash join (shuffle on a tiny int key), never a cross join; the
 # exact cosine runs only on co-bucketed pairs.
-_DIM = 64
-
-
-def _plane_sign_sql(i_expr: str, plane: int) -> str:
-    return (
-        f"(CASE WHEN STRPOS('02468ace', SUBSTRING(md5('{plane}:' || CAST({i_expr} AS VARCHAR)), 1, 1)) > 0 "
-        f"THEN 1.0 ELSE -1.0 END)"
-    )
-
-
 def _bucket_sql(emb: str) -> str:
     return " + ".join(
         f"(CASE WHEN list_sum(list_transform(range(1, {_DIM + 1}), "
@@ -112,7 +103,6 @@ WHERE ROUND(
 def _bucket_col():
     # signs hoisted to driver-side literals (hashlib md5 == engine md5):
     # the hyperplane depends on (plane, i) only — see q28's note
-    from sparkextract.queries.vector import _plane_signs_py
 
     def plane_proj(p: int):
         signs = F.lit(_plane_signs_py(p))
@@ -126,20 +116,6 @@ def _bucket_col():
     for p in range(4):
         bucket = bucket + F.when(plane_proj(p) >= 0, F.lit(1 << (3 - p))).otherwise(F.lit(0))
     return bucket.cast("int")
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
 
 
 @register("q34_lsh_near_dup_join", oracle=_Q34_ORACLE)
@@ -366,7 +342,6 @@ def q53_banded_lsh_near_dup(spark, sf_dir):
         )
         .filter(F.col("cosine") >= 0.8)
     )
-
 
 
 # --------------------------------------------------------------------------

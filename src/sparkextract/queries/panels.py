@@ -1,15 +1,11 @@
 """Consolidated driver-facing query panels.
 
-WHY THIS EXISTS: the round driver's correctness gate records at most 50
-``queries()`` entries per round — CORRECTNESS_r02.json is exactly the
-first 50 registry entries in insertion order, so 16 green operators
-never reached the scoreboard (VERDICT r2 item 1). Rather than let
-coverage depend on ordering, the driver contract now exports a
-CONSOLIDATED view: every fine-grained query stays registered (tests and
-``tools/check_queries.py --full`` still verify each one individually),
-but same-family queries are additionally unioned into tagged PANELS so
-the exported surface stays comfortably under the cap with headroom for
-future rounds.
+The driver contract's correctness gate records at most 50 ``queries()``
+entries, so the contract exports a CONSOLIDATED view: every fine-grained
+query stays registered (tests and ``tools/check_queries.py --full``
+verify each one individually), and same-family queries are additionally
+unioned into tagged PANELS so the exported surface stays well under the
+cap.
 
 A panel is a UNION ALL of its parts over the superset of their output
 columns: each part's rows carry a ``probe`` tag naming the operator, and
@@ -60,15 +56,12 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
     "panel_dup_pairs": (
         [("left_id", "long"), ("right_id", "long"), ("score", "double"),
          ("n_shared_keys", "long"), ("jaccard_u", "long"),
-         ("edit_dist", "long"), ("sim_u", "long"), ("n_union", "long")],
+         ("n_union", "long")],
         [
             ("sorted_neighborhood", "q194_sorted_neighborhood",
              {"left_id": "left_id", "right_id": "right_id",
               "n_shared_keys": "n_common", "n_union": "n_union",
               "jaccard_u": "jac_u"}),
-            ("edit_distance", "q146_edit_distance_near_dup",
-             {"left_id": "left_id", "right_id": "right_id",
-              "edit_dist": "edit_dist", "sim_u": "sim_u"}),
             ("bitext_blocked", "q139_bitext_candidates",
              {"left_id": "left_id", "right_id": "right_id",
               "n_shared_keys": "n_shared_keys", "jaccard_u": "jaccard_u"}),
@@ -84,139 +77,41 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
              {"left_id": "left_id", "right_id": "right_id", "score": "hamming"}),
         ],
     ),
-    # D6/J1 continuation: pair output -> transitive clusters -> survivor
-    # application (the full dedup endgame), plus the keyed cluster
-    # variants (exact content-hash groups, minhash band groups) whose
-    # group key is a string signature rather than a component id.
+    # D4/D6 clusters: exact content-hash groups and the soft-dedup
+    # per-source effective token weights.
     "panel_dup_clusters": (
-        [("vec_id", "long"), ("component", "long"), ("cluster_size", "long"),
-         ("survivor_id", "long"), ("is_survivor", "boolean"),
-         ("group_key", "string"), ("n_triangles", "long"),
-         ("n_nodes", "long"), ("n_edges", "long"),
-         ("total_triangles", "long"), ("gcc_u", "long"),
-         ("n_raw_forms", "long"), ("n_in", "long"),
-         ("sum_src_logit_u", "long"), ("mean_src_logit_u", "long"),
-         ("low_quality_neighborhood", "boolean"),
-         ("source", "string"), ("n_docs", "long"), ("n_dup_docs", "long"),
-         ("raw_tokens", "long"), ("eff_tokens_u", "long"),
-         ("keeper_quality", "long"), ("best_logit_u", "long"),
-         ("differs", "boolean"), ("role", "string"), ("rnk", "long"),
-         ("doc_id", "long"), ("score_u", "long"),
-         ("entity_id", "long"), ("n_records", "long"),
-         ("n_clean", "long"), ("n_dirty", "long"),
-         ("is_pure", "boolean"), ("n_true_pairs", "long"),
-         ("rank", "long"), ("removable_chars", "long"),
-         ("cum_removable", "long"), ("total_chars", "long"),
-         ("cum_saved_frac_u", "long")],
+        [("cluster_size", "long"), ("survivor_id", "long"),
+         ("group_key", "string"), ("source", "string"), ("n_docs", "long"),
+         ("n_dup_docs", "long"), ("raw_tokens", "long"),
+         ("eff_tokens_u", "long")],
         [
-            ("quality_survivor", "q162_quality_survivor",
-             {"group_key": "sig0", "cluster_size": "cluster_size",
-              "survivor_id": "keeper_min_id",
-              "keeper_quality": "keeper_quality",
-              "best_logit_u": "best_logit_u", "differs": "differs"}),
             ("soft_dedup", "q159_soft_dedup_weights",
              {"source": "source", "n_docs": "n_docs",
               "n_dup_docs": "n_dup_docs", "raw_tokens": "raw_tokens",
               "eff_tokens_u": "eff_tokens_u"}),
-            ("neighbor_quality", "q152_neighbor_quality",
-             {"vec_id": "node", "n_in": "n_in",
-              "sum_src_logit_u": "sum_src_logit_u",
-              "mean_src_logit_u": "mean_src_logit_u",
-              "low_quality_neighborhood": "low_quality_neighborhood"}),
-            ("url_canonical", "q149_url_canonicalize",
-             {"group_key": "canonical_url", "cluster_size": "n_docs",
-              "survivor_id": "first_doc", "n_raw_forms": "n_raw_forms"}),
-            ("triangles", "q143_triangle_count",
-             {"vec_id": "node", "n_triangles": "n_triangles",
-              "n_nodes": "n_nodes", "n_edges": "n_edges",
-              "total_triangles": "total_triangles", "gcc_u": "gcc_u"}),
-            ("components", "q71_dup_components",
-             {"vec_id": "vec_id", "component": "component",
-              "cluster_size": "cluster_size"}),
-            ("hits", "q182_hits_hubs_authorities",
-             {"role": "role", "rnk": "rnk", "doc_id": "doc_id",
-              "score_u": "score_u"}),
-            ("dedup_roi", "q211_dedup_roi_curve",
-             {"rank": "rank", "group_key": "ckey",
-              "cluster_size": "cluster_size",
-              "removable_chars": "removable_chars",
-              "cum_removable": "cum_removable",
-              "total_chars": "total_chars",
-              "cum_saved_frac_u": "cum_saved_frac_u"}),
-            ("entity_resolution", "q184_entity_resolution",
-             {"entity_id": "entity_id", "n_records": "n_records",
-              "n_clean": "n_clean", "n_dirty": "n_dirty",
-              "is_pure": "is_pure", "n_true_pairs": "n_true_pairs"}),
-            ("two_phase_cc", "q165_two_phase_cc",
-             {"vec_id": "doc_id", "component": "component",
-              "cluster_size": "cluster_size"}),
-            ("survivors", "q72_dup_survivors",
-             {"vec_id": "vec_id", "survivor_id": "survivor_id",
-              "is_survivor": "is_survivor"}),
             ("exact_hash_clusters", "q11_dedup_exact",
              {"group_key": "content_hash", "cluster_size": "cluster_size",
               "survivor_id": "keeper_doc_id"}),
-            ("minhash_clusters", "q38_minhash_clusters",
-             {"group_key": "sig0", "cluster_size": "cluster_size",
-              "survivor_id": "keeper_doc_id"}),
         ],
     ),
-    # quality family: weighted score (source-grain), hard per-doc rule
-    # cascade (C4/Gopher-style keep/reject), and the composed
-    # filter->dedup->rollup cleaning pipeline.
+    # quality family: weighted score (source-grain), per-doc rule and LM
+    # gates, token entropy, the linear quality classifier and the
+    # Kneser-Ney bigram cross-entropy.
     "panel_quality": (
         [("source", "string"), ("avg_quality", "double"), ("n_good", "long"),
          ("doc_id", "long"), ("n_words", "long"), ("n_distinct", "long"),
-         ("diversity", "double"), ("mean_word_len", "double"),
          ("reject_reason", "string"), ("keep", "boolean"),
-         ("lang", "string"), ("n_docs", "long"), ("total_words", "long"),
-         ("n_suppressed", "long"), ("min_keeper", "long"),
          ("n_bigrams", "long"), ("n_distinct_bigrams", "long"),
          ("dup_frac", "double"), ("top_word_frac", "double"),
-         ("avg_logp", "double"), ("entropy", "double"),
-         ("ppl_bucket", "string"), ("n_stop", "long"), ("logit_u", "long"),
-         ("n_pos", "long"), ("n_neg", "long"), ("n_bins", "long"),
-         ("auc_u", "long"), ("threshold_u", "long"), ("tp", "long"),
-         ("fp", "long"), ("fn", "long"), ("precision_u", "long"),
-         ("recall_u", "long"), ("f1_u", "long"),
-         ("keep_rate_u", "long"), ("gini_u", "long"), ("range_u", "long"),
-         ("n00", "long"), ("n01", "long"), ("n10", "long"), ("n11", "long"),
-         ("po_u", "long"), ("pe_u", "long"), ("kappa_u", "long"),
-         ("y_max", "long"), ("frontier", "boolean"), ("bin_b", "int"),
-         ("conf_u", "long"), ("acc_u", "long"), ("gap_u", "long"),
-         ("ece_u", "long"), ("tn", "long"), ("n_match", "long"),
-         ("n_non", "long"), ("xent", "double")],
+         ("avg_logp", "double"), ("entropy", "double"), ("n_stop", "long"),
+         ("logit_u", "long"), ("xent", "double")],
         [
             ("kneser_ney", "q189_kneser_ney_lm",
              {"doc_id": "doc_id", "n_bigrams": "n_bigrams",
               "xent": "xent"}),
-            ("fs_linkage", "q176_fellegi_sunter_linkage",
-             {"threshold_u": "threshold", "n_match": "n_match",
-              "n_non": "n_non", "tp": "tp", "fp": "fp", "fn": "fn",
-              "tn": "tn"}),
-            ("pareto_frontier", "q155_pareto_frontier",
-             {"lang": "lang", "n_distinct": "x", "y_max": "y_max",
-              "n_docs": "n_docs", "frontier": "frontier"}),
-            ("calibration_ece", "q157_calibration_ece",
-             {"bin_b": "b", "n_docs": "n_b", "n_pos": "pos_b",
-              "conf_u": "conf_u", "acc_u": "acc_u", "gap_u": "gap_u",
-              "ece_u": "ece_u"}),
-            ("detector_kappa", "q151_detector_kappa",
-             {"n_docs": "n", "n00": "n00", "n01": "n01", "n10": "n10",
-              "n11": "n11", "po_u": "po_u", "pe_u": "pe_u",
-              "kappa_u": "kappa_u"}),
-            ("filter_disparity", "q148_filter_disparity",
-             {"source": "source", "n_docs": "n_docs", "n_good": "n_keep",
-              "keep_rate_u": "keep_rate_u", "gini_u": "gini_u",
-              "range_u": "range_u"}),
             ("weighted_score", "q25_quality_score",
              {"source": "source", "avg_quality": "avg_quality",
               "n_good": "n_good"}),
-            ("rule_cascade", "q75_quality_rules",
-             {"doc_id": "doc_id", "n_words": "n_words",
-              "n_distinct": "n_distinct", "diversity": "diversity",
-              "mean_word_len": "mean_word_len",
-              "reject_reason": "reject_reason", "keep": "keep"}),
             ("repetition_rules", "q84_repetition_rules",
              {"doc_id": "doc_id", "n_bigrams": "n_bigrams",
               "n_distinct_bigrams": "n_distinct_bigrams",
@@ -229,78 +124,26 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
              {"doc_id": "doc_id", "n_words": "n_tokens",
               "n_distinct": "n_types", "entropy": "entropy",
               "keep": "keep"}),
-            ("ccnet_buckets", "q133_ccnet_buckets",
-             {"doc_id": "doc_id", "lang": "lang",
-              "avg_logp": "avg_logp", "ppl_bucket": "ppl_bucket"}),
             ("classifier", "q135_quality_classifier",
              {"doc_id": "doc_id", "n_words": "n_tokens",
               "n_stop": "n_stop", "logit_u": "logit_u", "keep": "keep"}),
-            ("roc_auc", "q137_roc_auc",
-             {"n_pos": "n_pos", "n_neg": "n_neg", "n_bins": "n_bins",
-              "auc_u": "auc_u"}),
-            ("pr_thresholds", "q138_pr_thresholds",
-             {"threshold_u": "threshold_u", "tp": "tp", "fp": "fp",
-              "fn": "fn", "precision_u": "precision_u",
-              "recall_u": "recall_u", "f1_u": "f1_u"}),
-            ("clean_pipeline", "q76_clean_pipeline",
-             {"lang": "lang", "source": "source", "n_docs": "n_docs",
-              "total_words": "total_words", "n_suppressed": "n_suppressed",
-              "min_keeper": "min_keeper"}),
         ],
     ),
     # D4/F13 signature tables (64-bit simhash; 4-band minhash).
     "panel_signatures": (
-        [("doc_id", "long"), ("simhash", "long"),
-         ("sig0", "string"), ("sig1", "string"),
-         ("sig2", "string"), ("sig3", "string"),
-         ("n_exact", "long"), ("n_minhash", "long"), ("n_prefix", "long"),
-         ("n_em", "long"), ("n_ep", "long"), ("n_mp", "long"),
-         ("n_emp", "long"), ("config", "string"), ("n_bands", "long"),
-         ("rows_per_band", "long"), ("n_candidates", "long"),
-         ("n_true_pairs", "long"), ("precision_u", "long"),
-         ("t_u", "long"), ("n_docs", "long"), ("n_all_pairs", "long"),
-         ("n_cand_true", "long"), ("n_true_allpairs", "long"),
-         ("complete", "boolean"), ("prune_ratio_u", "long"),
-         ("n_rows", "long"), ("n_keys", "long"), ("exact_f2", "long"),
-         ("est_f2", "long"), ("ratio_u", "long"),
-         ("n_orders", "long"), ("n_lineitem", "long"),
-         ("exact_join_size", "long"), ("est_join_size", "long")],
+        [("doc_id", "long"), ("simhash", "long"), ("sig0", "string"),
+         ("sig1", "string"), ("sig2", "string"), ("sig3", "string")],
         [
-            ("agms_join_size", "q175_agms_join_size",
-             {"n_orders": "n_orders", "n_lineitem": "n_lineitem",
-              "exact_join_size": "exact_join_size",
-              "est_join_size": "est_join_size", "ratio_u": "ratio_u"}),
-            ("prefix_filter_audit", "q173_prefix_filter_audit",
-             {"t_u": "t_u", "n_docs": "n_docs",
-              "n_all_pairs": "n_all_pairs",
-              "n_candidates": "n_candidates",
-              "n_cand_true": "n_cand_true",
-              "n_true_allpairs": "n_true_allpairs",
-              "complete": "complete", "prune_ratio_u": "prune_ratio_u"}),
-            ("ams_f2", "q174_ams_f2_join_size",
-             {"n_rows": "n_rows", "n_keys": "n_keys",
-              "exact_f2": "exact_f2", "est_f2": "est_f2",
-              "ratio_u": "ratio_u"}),
             ("simhash64", "q32_simhash", {"doc_id": "doc_id", "simhash": "simhash"}),
             ("minhash", "q19_minhash_signature",
              {"doc_id": "doc_id", "sig0": "sig0", "sig1": "sig1",
               "sig2": "sig2", "sig3": "sig3"}),
-            ("venn_audit", "q144_dedup_venn_audit",
-             {"n_exact": "n_exact", "n_minhash": "n_minhash",
-              "n_prefix": "n_prefix", "n_em": "n_em", "n_ep": "n_ep",
-              "n_mp": "n_mp", "n_emp": "n_emp"}),
-            ("lsh_s_curve", "q169_lsh_s_curve_sweep",
-             {"config": "config", "n_bands": "n_bands",
-              "rows_per_band": "rows_per_band",
-              "n_candidates": "n_candidates",
-              "n_true_pairs": "n_true_pairs",
-              "precision_u": "precision_u"}),
         ],
     ),
     # malformed-input semantics through real extraction.
     "panel_extract_edges": (
-        [("doc_id", "string"), ("kind", "string"),
-         ("text", "string"), ("offset", "int")],
+        [("doc_id", "string"), ("kind", "string"), ("text", "string"),
+         ("offset", "int")],
         [
             ("unknown_kind", "q62_unknown_kind_fallback",
              {"doc_id": "doc_id", "kind": "kind", "text": "text", "offset": "offset"}),
@@ -310,8 +153,8 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
     ),
     # table + form capture through real extraction, pdf-layout and html.
     "panel_table_form": (
-        [("doc_id", "string"), ("kind", "string"),
-         ("text", "string"), ("offset", "int")],
+        [("doc_id", "string"), ("kind", "string"), ("text", "string"),
+         ("offset", "int")],
         [
             ("pdf_layout", "q64_pdf_table_form",
              {"doc_id": "doc_id", "kind": "kind", "text": "text", "offset": "offset"}),
@@ -319,255 +162,54 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
              {"doc_id": "doc_id", "kind": "kind", "text": "text", "offset": "offset"}),
         ],
     ),
-    # Lloyd's iterations 1 and 2 (q57 chains both; shift only exists
-    # from iteration 2).
-    "panel_kmeans": (
-        [("cell", "long"), ("n_assigned", "long"),
-         ("centroid_l2", "double"), ("centroid_shift", "double"),
-         ("vec_id", "long"), ("a_u", "long"), ("b_u", "long"),
-         ("sil_u", "long"), ("n_nodes", "long"), ("deg_sum", "long"),
-         ("e_within", "long"), ("m_edges", "long"), ("q_contrib", "double"),
-         ("cx", "long"), ("cy", "long"), ("n_points", "long"),
-         ("dense", "boolean"), ("cluster_id", "long")],
-        [
-            ("grid_dbscan", "q214_grid_dbscan",
-             {"cx": "cx", "cy": "cy", "n_points": "n_points",
-              "dense": "dense", "cluster_id": "cluster_id"}),
-            ("modularity", "q187_graph_modularity",
-             {"cell": "cell", "n_nodes": "n_nodes", "deg_sum": "deg_sum",
-              "e_within": "e_within", "m_edges": "m_edges",
-              "q_contrib": "q_contrib"}),
-            ("iter1", "q52_kmeans_step",
-             {"cell": "cell", "n_assigned": "n_assigned", "centroid_l2": "centroid_l2"}),
-            ("iter2", "q57_kmeans_step2",
-             {"cell": "cell", "n_assigned": "n_assigned",
-              "centroid_l2": "centroid_l2", "centroid_shift": "centroid_shift"}),
-            ("silhouette", "q131_simplified_silhouette",
-             {"vec_id": "vec_id", "cell": "cell", "a_u": "a_u",
-              "b_u": "b_u", "sil_u": "sil_u"}),
-        ],
-    ),
-    # per-language token/fingerprint stats (all lang-grain aggregates).
+    # sketch family: fingerprint uniqueness per language, Misra-Gries
+    # heavy hitters, KMV theta-sketch distinct counts.
     "panel_token_lang_stats": (
         [("lang", "string"), ("n_docs", "long"), ("n_unique", "long"),
-         ("total_tokens", "long"), ("avg_tokens", "double"), ("max_tokens", "long"),
-         ("bpe_tokens", "long"), ("ws_tokens", "long"), ("fertility", "double"),
-         ("token", "string"), ("true_cnt", "long"), ("est_cnt", "long"),
-         ("overcount", "long"), ("source", "string"),
-         ("n_prefixes", "long"), ("max_prefix_docs", "long"),
-         ("template_share_u", "long"), ("est", "long"), ("exact", "long"),
+         ("token", "string"), ("est", "long"), ("exact", "long"),
          ("err", "long"), ("bound", "long"), ("within_bound", "boolean"),
-         ("v_obs", "long"), ("f1", "long"), ("f2", "long"),
-         ("chao1_u", "long"), ("p0_u", "long"), ("coverage_u", "long"),
-         ("bucket", "long"), ("n_cum", "long"), ("v_cum", "long"),
-         ("beta", "double"), ("o0", "long"), ("o1", "long"),
-         ("e0", "double"), ("e1", "double"), ("chi2_lang", "double"),
-         ("chi2_total", "double"), ("dof", "long"),
          ("part", "string"), ("n_exact", "long"), ("k_eff", "long"),
-         ("kth_min", "long"), ("est_kmv", "double"),
-         ("min_df", "long"), ("v_kept", "long"), ("v_total", "long"),
-         ("mass_kept", "long"), ("m_total", "long"),
-         ("v_kept_frac_u", "long"), ("mass_kept_frac_u", "long")],
+         ("kth_min", "long"), ("est_kmv", "double")],
         [
-            ("df_pruning", "q209_df_pruning_advisor",
-             {"min_df": "min_df", "v_kept": "v_kept",
-              "v_total": "v_total", "mass_kept": "mass_kept",
-              "m_total": "m_total", "v_kept_frac_u": "v_kept_frac_u",
-              "mass_kept_frac_u": "mass_kept_frac_u"}),
             ("kmv_theta", "q196_kmv_theta_sketch",
              {"part": "part", "n_exact": "n_exact", "k_eff": "k_eff",
               "kth_min": "kth_min", "est_kmv": "est"}),
-            ("chi_square_drift", "q193_chi_square_drift",
-             {"lang": "lang", "o0": "o0", "o1": "o1", "e0": "e0",
-              "e1": "e1", "chi2_lang": "chi2_lang",
-              "chi2_total": "chi2_total", "dof": "dof"}),
-            ("heaps_law", "q188_heaps_law",
-             {"bucket": "bucket", "n_cum": "n_cum", "v_cum": "v_cum",
-              "beta": "beta"}),
-            ("vocab_richness", "q186_vocab_richness",
-             {"lang": "lang", "v_obs": "v_obs", "total_tokens": "n_tokens",
-              "f1": "f1", "f2": "f2", "chao1_u": "chao1_u",
-              "p0_u": "p0_u", "coverage_u": "coverage_u"}),
             ("mg_heavy_hitters", "q179_misra_gries_heavy_hitters",
              {"token": "token", "est": "est", "exact": "exact",
               "err": "err", "bound": "bound",
               "within_bound": "within_bound"}),
-            ("template_profile", "q160_template_prefix_profile",
-             {"source": "source", "n_docs": "n_docs",
-              "n_prefixes": "n_prefixes",
-              "max_prefix_docs": "max_prefix_docs",
-              "template_share_u": "template_share_u"}),
-            ("cms_sketch", "q85_cms_heavy_hitters",
-             {"token": "token", "true_cnt": "true_cnt",
-              "est_cnt": "est_cnt", "overcount": "overcount"}),
             ("fingerprint", "q21_fingerprint",
              {"lang": "lang", "n_docs": "n_docs", "n_unique": "n_unique"}),
-            ("whitespace", "q22_token_stats",
-             {"lang": "lang", "total_tokens": "total_tokens",
-              "avg_tokens": "avg_tokens", "max_tokens": "max_tokens"}),
-            ("bpe", "q49_bpe_token_stats",
-             {"lang": "lang", "bpe_tokens": "bpe_tokens",
-              "ws_tokens": "ws_tokens", "fertility": "fertility"}),
         ],
     ),
-    # per-language document profile: length percentiles + confidence +
-    # deterministic stratified train/val/test split counts.
-    "panel_doc_profile": (
-        [("lang", "string"), ("n_docs", "long"), ("min_chars", "long"),
-         ("p50", "double"), ("p90", "double"), ("p99", "double"),
-         ("max_chars", "long"), ("avg_conf", "double"), ("min_conf", "double"),
-         ("split", "string"), ("total_chars", "long"),
-         ("doc_id", "long"), ("n_chars", "long"), ("samp_key", "double"),
-         ("rk", "long"),
-         ("est_p50", "long"), ("est_p90", "long"), ("est_p99", "long"),
-         ("mix_weight", "double"), ("epochs_per_doc", "double"),
-         ("n_keep", "long"), ("n_folds", "long"), ("keep_rate_u", "long"),
-         ("se_u", "long"), ("ci_lo_u", "long"), ("ci_hi_u", "long"),
-         ("r", "long"), ("n_eff", "long"), ("boot_mean", "double"),
-         ("ci_lo", "double"), ("ci_hi", "double"), ("v", "long"),
-         ("cum_a", "long"), ("cum_b", "long"), ("gap_u", "long"),
-         ("n_a", "long"), ("n_b", "long"), ("ks_u", "long"),
-         ("ks_scaled", "double"), ("d", "long"), ("o", "long"),
-         ("e_benford", "double"), ("chi2_d", "double"),
-         ("dev_u", "long"), ("chi2_total", "double"), ("mad_u", "long"),
-         ("verdict", "string"), ("rs2_a", "long"), ("u2_a", "long"),
-         ("u2_b", "long"), ("tie_sum", "long"), ("z", "double"),
-         ("p_lo", "long"), ("p_hi", "long"), ("mean_plain", "double"),
-         ("mean_winsor", "double"), ("mean_trim", "double"),
-         ("n_clamped", "long"), ("med", "long"), ("mad", "long"),
-         ("n_outliers", "long"), ("outlier_frac_u", "long"),
-         ("bucket", "long"), ("cusum_n", "long"), ("mean_u", "long"),
-         ("mu0_u", "long"), ("s_up", "long"), ("s_dn", "long"),
-         ("h_u", "long"), ("alarm", "boolean"), ("n_sources", "long"),
-         ("m_bar", "double"), ("sst", "double"), ("ssb", "double"),
-         ("rho", "double"), ("deff", "double")],
-        [
-            ("design_effect", "q215_design_effect",
-             {"n_sources": "n_sources", "n_docs": "n_docs",
-              "m_bar": "m_bar", "sst": "sst", "ssb": "ssb",
-              "rho": "rho", "deff": "deff"}),
-            ("cusum_drift", "q206_cusum_drift",
-             {"bucket": "bucket", "cusum_n": "n", "mean_u": "mean_u",
-              "mu0_u": "mu0_u", "s_up": "s_up", "s_dn": "s_dn",
-              "h_u": "h_u", "alarm": "alarm"}),
-            ("winsorized", "q204_winsorized_stats",
-             {"lang": "lang", "n_docs": "n_docs", "p_lo": "p_lo",
-              "p_hi": "p_hi", "mean_plain": "mean_plain",
-              "mean_winsor": "mean_winsor", "mean_trim": "mean_trim",
-              "n_clamped": "n_clamped"}),
-            ("mad_outliers", "q205_mad_outliers",
-             {"lang": "lang", "n_docs": "n_docs", "med": "med",
-              "mad": "mad", "n_outliers": "n_outliers",
-              "outlier_frac_u": "outlier_frac_u"}),
-            ("mann_whitney", "q203_mann_whitney_u",
-             {"n_a": "n_a", "n_b": "n_b", "rs2_a": "rs2_a",
-              "u2_a": "u2_a", "u2_b": "u2_b", "tie_sum": "tie_sum",
-              "z": "z"}),
-            ("benford", "q199_benford_audit",
-             {"d": "d", "o": "o", "e_benford": "e", "chi2_d": "chi2_d",
-              "dev_u": "dev_u", "chi2_total": "chi2_total",
-              "mad_u": "mad_u", "verdict": "verdict"}),
-            ("ks_two_sample", "q197_ks_two_sample",
-             {"v": "v", "cum_a": "cum_a", "cum_b": "cum_b",
-              "gap_u": "gap_u", "n_a": "n_a", "n_b": "n_b",
-              "ks_u": "ks_u", "ks_scaled": "ks_scaled"}),
-            ("poisson_bootstrap", "q191_poisson_bootstrap",
-             {"r": "r", "n_eff": "n_eff", "boot_mean": "boot_mean",
-              "ci_lo": "ci_lo", "ci_hi": "ci_hi"}),
-            ("jackknife_ci", "q140_jackknife_ci",
-             {"n_docs": "n_docs", "n_keep": "n_keep", "n_folds": "n_folds",
-              "keep_rate_u": "keep_rate_u", "se_u": "se_u",
-              "ci_lo_u": "ci_lo_u", "ci_hi_u": "ci_hi_u"}),
-            ("mixture_weights", "q90_mixture_weights",
-             {"lang": "lang", "n_docs": "n_docs", "total_chars": "total_chars",
-              "mix_weight": "mix_weight", "epochs_per_doc": "epochs_per_doc"}),
-            ("weighted_sample", "q86_weighted_sample",
-             {"lang": "lang", "doc_id": "doc_id", "n_chars": "n_chars",
-              "samp_key": "samp_key", "rk": "rk"}),
-            ("hist_quantiles", "q89_histogram_quantiles",
-             {"lang": "lang", "n_docs": "n_docs", "est_p50": "est_p50",
-              "est_p90": "est_p90", "est_p99": "est_p99"}),
-            ("length_dist", "q60_length_distribution",
-             {"lang": "lang", "n_docs": "n_docs", "min_chars": "min_chars",
-              "p50": "p50", "p90": "p90", "p99": "p99", "max_chars": "max_chars"}),
-            ("confidence", "q51_confidence_rollup",
-             {"lang": "lang", "n_docs": "n_docs",
-              "avg_conf": "avg_conf", "min_conf": "min_conf"}),
-            ("stratified_split", "q78_stratified_split",
-             {"lang": "lang", "split": "split", "n_docs": "n_docs",
-              "total_chars": "total_chars"}),
-        ],
-    ),
-    # event_type-grain aggregates: stats + JSON-props extraction +
-    # hourly hypertable-style rollup.
+    # event aggregates: event_type stats, JSON-props extraction,
+    # gap-based sessionization.
     "panel_event_stats": (
-        [("n_sessions", "long"),
-         ("event_type", "string"), ("n_events", "long"), ("sum_value", "double"),
-         ("first_us", "long"), ("last_us", "long"),
-         ("sum_k", "long"), ("n_high", "long"),
-         ("bucket_hour", "long"), ("n_users", "long"),
-         ("user_id", "long"), ("session_seq", "long"), ("duration_us", "long"),
-         ("v_registers", "long"), ("zeros", "long"),
-         ("est_distinct", "double"), ("exact_distinct", "long"),
-         ("t2", "string"), ("est_t1", "double"), ("est_t2", "double"),
-         ("est_union", "double"), ("est_intersection", "double"),
-         ("exact_intersection", "long"), ("decayed_mass", "double"),
-         ("rank_raw", "long"), ("rank_decayed", "long"),
-         ("rank_changed", "boolean")],
+        [("event_type", "string"), ("n_events", "long"),
+         ("sum_value", "double"), ("first_us", "long"), ("last_us", "long"),
+         ("sum_k", "long"), ("n_high", "long"), ("user_id", "long"),
+         ("session_seq", "long"), ("duration_us", "long")],
         [
-            ("decayed_popularity", "q180_decayed_popularity",
-             {"event_type": "event_type", "n_events": "n_events",
-              "decayed_mass": "decayed_mass", "rank_raw": "rank_raw",
-              "rank_decayed": "rank_decayed",
-              "rank_changed": "rank_changed"}),
-            ("hll_overlap", "q171_hll_set_overlap",
-             {"event_type": "t1", "t2": "t2", "est_t1": "est_t1",
-              "est_t2": "est_t2", "est_union": "est_union",
-              "est_intersection": "est_intersection",
-              "exact_intersection": "exact_intersection"}),
             ("type_stats", "q05_event_type_stats",
              {"event_type": "event_type", "n_events": "n_events",
               "sum_value": "sum_value", "first_us": "first_us", "last_us": "last_us"}),
             ("json_props", "q26_json_props",
              {"event_type": "event_type", "sum_k": "sum_k", "n_high": "n_high"}),
-            ("time_bucket", "q80_time_bucket_rollup",
-             {"event_type": "event_type", "n_events": "n_events",
-              "sum_value": "sum_value", "bucket_hour": "bucket_hour",
-              "n_users": "n_users"}),
             ("sessionize", "q82_sessionize",
              {"user_id": "user_id", "session_seq": "session_seq",
               "n_events": "n_events", "first_us": "first_us",
               "last_us": "last_us", "duration_us": "duration_us"}),
-            ("hll_sketch", "q83_hll_distinct",
-             {"event_type": "event_type", "v_registers": "v_registers",
-              "zeros": "zeros", "est_distinct": "est_distinct",
-              "exact_distinct": "exact_distinct"}),
-            ("session_counts", "q10_sessionize",
-             {"user_id": "user_id", "n_events": "n_events",
-              "n_sessions": "n_sessions"}),
-        ],
-    ),
-    # grouping-set lattices: ROLLUP over lineitem, CUBE over documents.
-    "panel_grouping_sets": (
-        [("d1", "string"), ("d2", "string"), ("gid", "long"),
-         ("n_rows", "long"), ("sum_qty", "double"), ("total_chars", "long")],
-        [
-            ("rollup", "q29_rollup_lineitem",
-             {"d1": "returnflag", "d2": "linestatus",
-              "n_rows": "n_rows", "sum_qty": "sum_qty"}),
-            ("cube", "q61_cube_lattice",
-             {"d1": "lang", "d2": "source", "gid": "gid",
-              "n_rows": "n_docs", "total_chars": "total_chars"}),
         ],
     ),
     # multimodal binary-column family: featurize / dedup / frame-sample /
-    # pseudo-OCR decode (round 5).
+    # pseudo-OCR decode.
     "panel_media": (
-        [("media_id", "string"), ("media_type", "string"), ("n_bytes", "long"),
-         ("content_hash", "string"), ("decode_ok", "boolean"),
-         ("feature_sum", "double"), ("frame_idx", "int"),
-         ("n_frame_bytes", "int"), ("frame_hash", "string"),
-         ("ocr_text", "string"), ("n_ocr_chars", "int")],
+        [("media_id", "string"), ("media_type", "string"),
+         ("n_bytes", "long"), ("content_hash", "string"),
+         ("decode_ok", "boolean"), ("feature_sum", "double"),
+         ("frame_idx", "int"), ("n_frame_bytes", "int"),
+         ("frame_hash", "string"), ("ocr_text", "string"),
+         ("n_ocr_chars", "int")],
         [
             ("featurize", "q44_media_featurize",
              {"media_id": "media_id", "media_type": "media_type",
@@ -591,18 +233,12 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
          ("query_id", "long"), ("rnk", "long"), ("doc_id", "long"),
          ("r_bm25", "long"), ("r_tfidf", "long"), ("fused_units", "long"),
          ("step", "long"), ("rel_u", "long"), ("score_u", "long"),
-         ("n_sample", "long"), ("n_pairs", "long"), ("concordant", "long"),
-         ("discordant", "long"), ("ties", "long"), ("tau_u", "long"),
          ("dcg", "double"), ("idcg", "double"), ("ndcg_u", "long"),
          ("n_rel", "long")],
         [
             ("ndcg_eval", "q156_ndcg_eval",
              {"query_id": "query_id", "dcg": "dcg", "idcg": "idcg",
               "ndcg_u": "ndcg_u", "n_rel": "n_rel"}),
-            ("rank_agreement", "q153_rank_agreement",
-             {"n_sample": "n_sample", "n_pairs": "n_pairs",
-              "concordant": "concordant", "discordant": "discordant",
-              "ties": "ties", "tau_u": "tau_u"}),
             ("rerank_topk", "q55_rerank_topk",
              {"vec_id": "vec_id", "cosine": "cosine",
               "overlap": "overlap", "rerank_score": "rerank_score"}),
@@ -618,45 +254,23 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
               "rel_u": "rel_u", "score_u": "score_u"}),
         ],
     ),
-    # event windows + temporal joins: rank-top-k per user; running
-    # cumulative sum; as-of join; banded range join.
+    # event windows: rank-top-k per user; running cumulative sum.
     "panel_event_windows": (
         [("user_id", "long"), ("event_id", "long"), ("value", "double"),
-         ("rn", "long"), ("running_value", "double"),
-         ("view_id", "long"), ("gap_us", "long"),
-         ("click_id", "long"), ("dt_us", "long"),
-         ("n_events", "long"), ("max_rate_60s", "long"),
-         ("violates", "boolean"), ("event_type", "string"),
-         ("n_on_time", "long"), ("n_late_accepted", "long"),
-         ("n_dropped", "long"), ("max_lateness_us", "long")],
+         ("rn", "long"), ("running_value", "double")],
         [
-            ("watermark_audit", "q183_watermark_late_events",
-             {"event_type": "event_type", "n_events": "n_events",
-              "n_on_time": "n_on_time",
-              "n_late_accepted": "n_late_accepted",
-              "n_dropped": "n_dropped",
-              "max_lateness_us": "max_lateness_us"}),
-            ("rate_limit", "q163_rate_limit_audit",
-             {"user_id": "user_id", "n_events": "n_events",
-              "max_rate_60s": "max_rate_60s", "violates": "violates"}),
             ("topk_per_user", "q06_topk_events_per_user",
              {"user_id": "user_id", "event_id": "event_id",
               "value": "value", "rn": "rn"}),
             ("running_sum", "q07_running_value",
              {"user_id": "user_id", "event_id": "event_id",
               "running_value": "running_value"}),
-            ("asof_join", "q77_asof_join",
-             {"user_id": "user_id", "click_id": "click_id",
-              "view_id": "view_id", "gap_us": "gap_us"}),
-            ("range_join", "q81_range_join_banded",
-             {"user_id": "user_id", "event_id": "error_id",
-              "click_id": "click_id", "dt_us": "dt_us"}),
         ],
     ),
     # document windows: dense chunk index; cumulative char budget.
     "panel_doc_windows": (
-        [("doc_id", "long"), ("source", "string"),
-         ("offset", "long"), ("cum_chars", "long")],
+        [("doc_id", "long"), ("source", "string"), ("offset", "long"),
+         ("cum_chars", "long")],
         [
             ("chunk_index", "q09_chunk_index",
              {"doc_id": "doc_id", "source": "source", "offset": "offset"}),
@@ -664,90 +278,47 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
              {"doc_id": "doc_id", "source": "source", "cum_chars": "cum_chars"}),
         ],
     ),
-    # token index: corpus top-k tokens; per-doc token positions.
+    # token index: corpus top-k tokens; PMI co-occurrence pairs.
     "panel_token_index": (
-        [("token", "string"), ("freq", "long"),
-         ("doc_id", "long"), ("pos", "long"),
-         ("tok_b", "string"), ("pmi", "double"),
-         ("df_ante", "long"), ("df_cons", "long"),
-         ("conf_u", "long"), ("lift_u", "long"),
-         ("universe", "long"), ("ef_bits", "long"),
-         ("bitmap_bits", "long"), ("varint_bits", "long"),
-         ("best_encoding", "string")],
+        [("token", "string"), ("freq", "long"), ("tok_b", "string"),
+         ("pmi", "double")],
         [
-            ("posting_encoding", "q212_posting_encoding_advisor",
-             {"token": "token", "freq": "df", "universe": "universe",
-              "ef_bits": "ef_bits", "bitmap_bits": "bitmap_bits",
-              "varint_bits": "varint_bits",
-              "best_encoding": "best_encoding"}),
-            ("assoc_rules", "q185_association_rules",
-             {"token": "antecedent", "tok_b": "consequent",
-              "df_ante": "df_ante", "df_cons": "df_cons",
-              "freq": "df_ab", "conf_u": "conf_u", "lift_u": "lift_u"}),
             ("pmi_pairs", "q88_pmi_cooccurrence",
              {"token": "tok_a", "tok_b": "tok_b", "freq": "df_ab",
               "pmi": "pmi"}),
             ("topk", "q23_token_topk", {"token": "token", "freq": "freq"}),
-            ("positions", "q37_token_positions",
-             {"token": "tok", "doc_id": "doc_id", "pos": "pos"}),
         ],
     ),
     # existence joins: anti (resume/skip) and semi (duplicate probe).
     "panel_filter_joins": (
-        [("c_custkey", "long"), ("c_name", "string"), ("c_mktsegment", "string")],
+        [("c_custkey", "long"), ("c_name", "string"),
+         ("c_mktsegment", "string")],
         [
             ("anti", "q14_anti_join", {"c_custkey": "c_custkey", "c_name": "c_name"}),
             ("semi", "q15_semi_join",
              {"c_custkey": "c_custkey", "c_mktsegment": "c_mktsegment"}),
         ],
     ),
-    # dim-join revenue rollups (star join via region; broadcast part
-    # dim) + the salted skew-join technique (oracle = unsalted join).
-    "panel_join_revenue": (
-        [("dim", "string"), ("revenue", "double"), ("n_rows", "long"),
-         ("n_keys", "long")],
-        [
-            ("region", "q03_region_sales",
-             {"dim": "r_name", "revenue": "revenue", "n_rows": "n_lineitems"}),
-            ("brand_top5", "q16_brand_revenue",
-             {"dim": "p_brand", "revenue": "revenue", "n_rows": "n_items"}),
-            ("salted_skew", "q79_salted_skew_join",
-             {"dim": "seg", "revenue": "sum_value", "n_rows": "n_rows",
-              "n_keys": "n_keys"}),
-        ],
-    ),
-    # embedding diagnostics: LSH bucket histogram; per-label quality;
-    # int8 quantization fidelity; JL projection distortion histogram
-    # (round 5 absorptions).
+    # embedding diagnostics: LSH bucket histogram; per-label quality.
     "panel_embedding_stats": (
         [("bucket", "int"), ("label", "int"), ("n_vectors", "long"),
          ("min_vec_id", "long"), ("avg_l2", "double"),
-         ("n_zero_components", "long"), ("vec_id", "long"),
-         ("cos_quant", "double"), ("cos_exact", "double"),
-         ("ratio_bin", "long"), ("mean_ratio", "double"),
-         ("min_ratio", "double"), ("max_ratio", "double")],
+         ("n_zero_components", "long")],
         [
-            ("jl_distortion", "q166_jl_distortion",
-             {"ratio_bin": "ratio_bin", "n_vectors": "n_pairs",
-              "mean_ratio": "mean_ratio", "min_ratio": "min_ratio",
-              "max_ratio": "max_ratio"}),
             ("lsh_hist", "q28_lsh_buckets",
              {"bucket": "bucket", "n_vectors": "n_vectors",
               "min_vec_id": "min_vec_id"}),
             ("label_quality", "q31_embedding_quality",
              {"label": "label", "n_vectors": "n_vectors", "avg_l2": "avg_l2",
               "n_zero_components": "n_zero_components"}),
-            ("int8_quant", "q102_int8_quantization",
-             {"vec_id": "vec_id", "label": "label",
-              "cos_quant": "cos_quant", "cos_exact": "cos_exact"}),
         ],
     ),
-    # keyed event dedup: priority keeper rows; distinct-key seen-set.
+    # keyed event dedup: priority keeper rows; distinct-key seen-set;
+    # the applyInPandasWithState streaming dedup.
     "panel_event_dedup": (
-        [("user_id", "long"), ("event_type", "string"),
-         ("event_id", "long"), ("value", "double"),
-         ("content_hash", "string"), ("doc_id", "string"),
-         ("first_len", "int")],
+        [("user_id", "long"), ("event_type", "string"), ("event_id", "long"),
+         ("value", "double"), ("content_hash", "string"),
+         ("doc_id", "string"), ("first_len", "int")],
         [
             ("priority_keeper", "q12_dedup_priority",
              {"user_id": "user_id", "event_type": "event_type",
@@ -759,7 +330,7 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
               "first_len": "first_len"}),
         ],
     ),
-    # round-3 reference-parity singles: form-field keyword grouping (F6),
+    # reference-parity singles: form-field keyword grouping (F6),
     # cross-method positional comparison (J4), TF-IDF keyword extraction,
     # and the LLM-answer confidence heuristic (F8).
     "panel_round3": (
@@ -790,10 +361,10 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
     # stringified (two parts key by string doc ids, two by long).
     "panel_span_ops": (
         [("doc_id", "string"), ("offset", "int"), ("chunk_len", "int"),
-         ("chunk_md5", "string"), ("clean_md5", "string"),
-         ("n_words", "int"), ("conf", "double"), ("kind", "string"),
-         ("confidence", "double"), ("n_fingerprints", "long"),
-         ("fp_checksum", "long"), ("fp_min", "long")],
+         ("chunk_md5", "string"), ("clean_md5", "string"), ("n_words", "int"),
+         ("conf", "double"), ("kind", "string"), ("confidence", "double"),
+         ("n_fingerprints", "long"), ("fp_checksum", "long"),
+         ("fp_min", "long")],
         [
             ("chunk_overlap", "q54_chunk_overlap",
              {"doc_id": "doc_id", "offset": "offset",
@@ -811,8 +382,8 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
     ),
     # the extraction core through mapInPandas: span passthrough, kind
     # stats, mega-doc salt/split/reassemble, doc-grain assembly, and the
-    # structured-streaming incremental drain (round 5 — full-row checked
-    # against the same passthrough expectation).
+    # structured-streaming incremental drain (full-row checked against
+    # the same passthrough expectation).
     "panel_extract_core": (
         [("doc_id", "string"), ("kind", "string"), ("text", "string"),
          ("media_ref", "string"), ("offset", "int"), ("n_spans", "long"),
@@ -838,7 +409,7 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
         ],
     ),
     # relational headliners: TPC-H-style pricing summary, top revenue,
-    # doc stats, top docs, priority share-of-total.
+    # doc stats.
     "panel_relational": (
         [("l_returnflag", "string"), ("l_linestatus", "string"),
          ("sum_qty", "double"), ("sum_base_price", "double"),
@@ -846,9 +417,7 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
          ("avg_qty", "double"), ("o_orderkey", "long"),
          ("o_orderpriority", "string"), ("revenue", "double"),
          ("lang", "string"), ("source", "string"), ("n_docs", "long"),
-         ("total_chars", "long"), ("avg_chars", "double"),
-         ("doc_id", "long"), ("n_chars", "long"), ("n_orders", "long"),
-         ("share", "double")],
+         ("total_chars", "long"), ("avg_chars", "double")],
         [
             ("pricing", "q01_pricing_summary",
              {"l_returnflag": "l_returnflag", "l_linestatus": "l_linestatus",
@@ -861,49 +430,26 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
             ("doc_stats", "q04_doc_stats",
              {"lang": "lang", "source": "source", "n_docs": "n_docs",
               "total_chars": "total_chars", "avg_chars": "avg_chars"}),
-            ("top_docs", "q17_top_docs_by_chars",
-             {"doc_id": "doc_id", "n_chars": "n_chars"}),
-            ("priority_share", "q33_priority_share",
-             {"o_orderpriority": "o_orderpriority", "n_orders": "n_orders",
-              "share": "share"}),
         ],
     ),
-    # text-analysis singles: language-ID confusion counts, lang x source
-    # pivot, page-marker concat, keyword-overlap scores.
+    # text-analysis singles: page-marker concat, keyword-overlap scores.
     "panel_text": (
-        [("lang", "string"), ("predicted", "string"), ("n", "long"),
-         ("n_total", "long"), ("n_src0", "long"), ("n_src1", "long"),
-         ("n_src2", "long"), ("source", "string"),
-         ("paged_text", "string"), ("doc_id", "long"),
+        [("source", "string"), ("paged_text", "string"), ("doc_id", "long"),
          ("overlap_score", "double")],
         [
-            ("lang_id", "q24_lang_id",
-             {"lang": "lang", "predicted": "predicted", "n": "n"}),
-            ("lang_pivot", "q30_lang_pivot",
-             {"lang": "lang", "n_total": "n_total", "n_src0": "n_src0",
-              "n_src1": "n_src1", "n_src2": "n_src2"}),
             ("page_concat", "q35_page_concat",
              {"source": "source", "paged_text": "paged_text"}),
             ("keyword_overlap", "q36_keyword_overlap",
              {"doc_id": "doc_id", "overlap_score": "overlap_score"}),
         ],
     ),
-    # contamination family (round-5 consolidation of the round-4
-    # standalones): 13-gram eval-set decontamination, the broadcast
-    # Bloom-probe variant, and the sampled LSH precision/recall eval.
+    # contamination family: 13-gram eval-set decontamination and its
+    # Bloom- and cuckoo-filter probe variants.
     "panel_decontamination": (
         [("doc_id", "long"), ("n_kgrams", "long"), ("n_contam", "long"),
-         ("contam_frac", "double"), ("keep", "boolean"),
-         ("n_bloom", "long"), ("n_exact", "long"), ("n_false_pos", "long"),
-         ("n_truth", "long"), ("n_candidates", "long"), ("n_hit", "long"),
-         ("precision", "double"), ("recall", "double"),
-         ("n_cuckoo", "long"), ("eval_id", "long"), ("jac_u", "long"),
-         ("exact_contaminated", "boolean")],
+         ("contam_frac", "double"), ("keep", "boolean"), ("n_bloom", "long"),
+         ("n_exact", "long"), ("n_false_pos", "long"), ("n_cuckoo", "long")],
         [
-            ("fuzzy_minhash", "q210_fuzzy_decontamination",
-             {"doc_id": "corpus_id", "eval_id": "eval_id",
-              "jac_u": "jac_u",
-              "exact_contaminated": "exact_contaminated"}),
             ("cuckoo_probe", "q198_cuckoo_filter_probe",
              {"doc_id": "doc_id", "n_kgrams": "n_kgrams",
               "n_cuckoo": "n_cuckoo", "n_exact": "n_exact",
@@ -916,62 +462,37 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
              {"doc_id": "doc_id", "n_kgrams": "n_kgrams",
               "n_bloom": "n_bloom", "n_exact": "n_exact",
               "n_false_pos": "n_false_pos"}),
-            ("lsh_eval", "q107_lsh_recall_eval",
-             {"n_truth": "n_truth", "n_candidates": "n_candidates",
-              "n_hit": "n_hit", "precision": "precision",
-              "recall": "recall"}),
         ],
     ),
     # corpus-clean family: the end-to-end extract->quality->dedup
-    # composition plus the block / PII / exact-substring scrub passes.
+    # composition plus the block / exact-substring / CDC-chunk dedup,
+    # watermark, encoding-repair and secret-scan passes.
     "panel_corpus_clean": (
         [("doc_id", "long"), ("n_tokens", "long"), ("stage", "string"),
          ("survivor_id", "long"), ("n_blocks", "long"), ("n_kept", "long"),
          ("kept_frac", "double"), ("kept_text_md5", "string"),
-         ("n_emails", "int"), ("n_phones", "int"), ("has_pii", "boolean"),
-         ("redacted_md5", "string"), ("n_windows", "long"), ("n_dup", "long"),
-         ("dup_frac", "double"), ("flagged", "boolean"),
-         ("lang", "string"), ("source", "string"), ("len_bucket", "long"),
-         ("g0", "long"), ("g1", "long"), ("anon_level", "int"),
-         ("released", "boolean"), ("was_mojibake", "boolean"),
+         ("n_windows", "long"), ("n_dup", "long"), ("dup_frac", "double"),
+         ("flagged", "boolean"), ("was_mojibake", "boolean"),
          ("n_bad_seqs", "long"), ("repaired_md5", "string"),
-         ("roundtrip_ok", "boolean"), ("n_green", "long"),
-         ("z_u", "long"), ("detector", "string"), ("tp", "long"),
-         ("fp", "long"), ("fn", "long"), ("precision_u", "long"),
-         ("recall_u", "long"), ("n_spans", "long"), ("n_islands", "long"),
-         ("covered_tokens", "long"), ("max_island_len", "long"),
+         ("roundtrip_ok", "boolean"), ("n_green", "long"), ("z_u", "long"),
+         ("detector", "string"), ("tp", "long"), ("fp", "long"),
+         ("fn", "long"), ("precision_u", "long"), ("recall_u", "long"),
          ("n_cdc", "long"), ("shared_cdc", "long"), ("n_fix", "long"),
-         ("shared_fix", "long"), ("bl_entry", "string"),
-         ("n_blocked", "long"), ("min_doc", "long")],
+         ("shared_fix", "long")],
         [
-            ("suffix_blocklist", "q158_suffix_blocklist",
-             {"bl_entry": "entry", "n_blocked": "n_blocked",
-              "min_doc": "min_doc"}),
             ("cdc_chunking", "q154_cdc_chunking",
              {"doc_id": "doc_id", "n_cdc": "n_cdc",
               "shared_cdc": "shared_cdc", "n_fix": "n_fix",
               "shared_fix": "shared_fix"}),
-            ("span_merge", "q147_span_interval_merge",
-             {"doc_id": "doc_id", "n_spans": "n_spans",
-              "n_islands": "n_islands", "covered_tokens": "covered_tokens",
-              "max_island_len": "max_island_len"}),
             ("pipeline", "q94_corpus_clean_pipeline",
              {"doc_id": "doc_id", "n_tokens": "n_tokens",
               "stage": "stage", "survivor_id": "survivor_id"}),
             ("block_dedup", "q96_block_dedup",
              {"doc_id": "doc_id", "n_blocks": "n_blocks", "n_kept": "n_kept",
               "kept_frac": "kept_frac", "kept_text_md5": "kept_text_md5"}),
-            ("pii_redaction", "q97_pii_redaction",
-             {"doc_id": "doc_id", "n_emails": "n_emails",
-              "n_phones": "n_phones", "has_pii": "has_pii",
-              "redacted_md5": "redacted_md5"}),
             ("exact_substring", "q99_exact_substring_dedup",
              {"doc_id": "doc_id", "n_windows": "n_windows", "n_dup": "n_dup",
               "dup_frac": "dup_frac", "flagged": "flagged"}),
-            ("k_anonymity", "q129_k_anonymity",
-             {"doc_id": "doc_id", "lang": "lang", "source": "source",
-              "len_bucket": "len_bucket", "g0": "g0", "g1": "g1",
-              "anon_level": "anon_level", "released": "released"}),
             ("watermark", "q136_watermark_detect",
              {"doc_id": "doc_id", "n_windows": "n_bigrams",
               "n_green": "n_green", "z_u": "z_u", "flagged": "flagged"}),
@@ -984,159 +505,15 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
               "precision_u": "precision_u", "recall_u": "recall_u"}),
         ],
     ),
-    # corpus-layout family: sequence packing, leakage-safe split,
-    # deterministic global shuffle, domain rollup.
-    "panel_corpus_layout": (
-        [("doc_id", "long"), ("shard", "int"), ("n_tokens", "long"),
-         ("start_pos", "long"), ("first_window", "int"),
-         ("last_window", "int"), ("n_windows", "int"),
-         ("vec_id", "long"), ("cluster_id", "long"),
-         ("in_cluster", "boolean"), ("split", "string"),
-         ("global_pos", "long"), ("domain", "string"), ("n_docs", "long"),
-         ("total_chars", "long"), ("mean_chars", "double"),
-         ("mode", "string"), ("len_prefix", "long"), ("len_middle", "long"),
-         ("len_suffix", "long"), ("fim_md5", "string"), ("lang", "string"),
-         ("slot", "long"), ("k", "long"), ("sched_key", "long"),
-         ("source", "string"), ("base_quota", "long"),
-         ("extra_seat", "boolean"), ("final_quota", "long"),
-         ("policy", "string"), ("n_pairs", "long"), ("n_cross", "long"),
-         ("cross_frac_u", "long"), ("n_moved", "long"),
-         ("moved_frac_u", "long"), ("n_buckets", "long"),
-         ("n_empty", "long"), ("max_rows", "long"),
-         ("imbalance_u", "long"), ("gini_u", "long"),
-         ("n_batches", "long"), ("total_tokens", "long"),
-         ("padded_tokens", "long"), ("waste_u", "long"),
-         ("n_sampled_old", "long"), ("n_sampled_new", "long"),
-         ("n_overlap", "long"), ("n_lost_surviving", "long"),
-         ("churn_u", "long"), ("true_n", "long"), ("noise", "double"),
-         ("noisy", "double"), ("rank_true", "long"),
-         ("rank_noisy", "long"), ("rank_shift", "long"),
-         ("l1_err", "double"), ("sum_chars", "long"),
-         ("full_mean", "double"), ("loo_mean", "double"),
-         ("influence", "double"), ("influence_rank", "long"),
-         ("total_bytes", "long"), ("p50_bytes", "long"),
-         ("p99_bytes", "long"), ("max_bytes", "long"),
-         ("n_mega", "long"), ("rec_partitions", "long"),
-         ("needs_salting", "boolean"), ("advisory", "string"),
-         ("n_instances", "long"), ("n_distinct_grams", "long"),
-         ("n_repeated", "long"), ("repeat_frac_u", "long"),
-         ("dict_worthy", "boolean"), ("n_kept", "long"),
-         ("mean_u", "long"), ("bonus", "double"), ("ucb", "double"),
-         ("priority", "long"), ("n_h", "long"), ("sigma_u", "long"),
-         ("neyman_quota", "long"), ("prop_quota", "long"),
-         ("delta_vs_proportional", "long"), ("ring_moved", "long"),
-         ("mod_moved", "long"), ("ring_moved_frac_u", "long"),
-         ("mod_moved_frac_u", "long"), ("layout", "string"),
-         ("n_zones", "long"), ("n_pruned", "long"),
-         ("rows_scanned", "long"), ("rows_matched", "long"),
-         ("scan_amp_u", "long")],
-        [
-            ("zone_map_pruning", "q213_zone_map_pruning",
-             {"layout": "layout", "n_zones": "n_zones",
-              "n_pruned": "n_pruned", "rows_scanned": "rows_scanned",
-              "rows_matched": "rows_matched", "scan_amp_u": "scan_amp_u"}),
-            ("neyman_allocation", "q207_neyman_allocation",
-             {"lang": "lang", "n_h": "n_h", "sigma_u": "sigma_u",
-              "base_quota": "base_quota", "extra_seat": "extra_seat",
-              "neyman_quota": "neyman_quota", "prop_quota": "prop_quota",
-              "delta_vs_proportional": "delta_vs_proportional"}),
-            ("hash_ring", "q208_consistent_hash_ring",
-             {"shard": "shard", "n_docs": "n_docs",
-              "ring_moved": "ring_moved", "mod_moved": "mod_moved",
-              "ring_moved_frac_u": "ring_moved_frac_u",
-              "mod_moved_frac_u": "mod_moved_frac_u"}),
-            ("ucb_scheduler", "q202_ucb_crawl_scheduler",
-             {"source": "source", "n_docs": "n_docs", "n_kept": "n_kept",
-              "mean_u": "mean_u", "bonus": "bonus", "ucb": "ucb",
-              "priority": "priority"}),
-            ("partition_advisor", "q200_partition_advisor",
-             {"source": "source", "n_docs": "n_docs",
-              "total_bytes": "total_bytes", "p50_bytes": "p50_bytes",
-              "p99_bytes": "p99_bytes", "max_bytes": "max_bytes",
-              "n_mega": "n_mega", "rec_partitions": "rec_partitions",
-              "needs_salting": "needs_salting", "advisory": "advisory"}),
-            ("compression_proxy", "q201_compression_proxy",
-             {"source": "source", "n_instances": "n_instances",
-              "n_distinct_grams": "n_distinct", "n_repeated": "n_repeated",
-              "repeat_frac_u": "repeat_frac_u",
-              "dict_worthy": "dict_worthy"}),
-            ("loo_influence", "q192_loo_influence",
-             {"source": "source", "n_docs": "n_docs",
-              "sum_chars": "sum_chars", "full_mean": "full_mean",
-              "loo_mean": "loo_mean", "influence": "influence",
-              "influence_rank": "influence_rank"}),
-            ("dp_release", "q190_dp_noisy_release",
-             {"source": "source", "true_n": "true_n", "noise": "noise",
-              "noisy": "noisy", "rank_true": "rank_true",
-              "rank_noisy": "rank_noisy", "rank_shift": "rank_shift",
-              "l1_err": "l1_err"}),
-            ("sample_churn", "q181_sample_churn_audit",
-             {"policy": "policy", "n_sampled_old": "n_sampled_old",
-              "n_sampled_new": "n_sampled_new", "n_overlap": "n_overlap",
-              "n_lost_surviving": "n_lost_surviving",
-              "churn_u": "churn_u"}),
-            ("padding_waste", "q178_padding_waste_audit",
-             {"policy": "policy", "n_batches": "n_batches",
-              "total_tokens": "total_tokens",
-              "padded_tokens": "padded_tokens", "waste_u": "waste_u"}),
-            ("skew_audit", "q167_partition_skew_audit",
-             {"policy": "policy", "n_buckets": "n_buckets",
-              "n_empty": "n_empty", "max_rows": "max_rows",
-              "imbalance_u": "imbalance_u", "gini_u": "gini_u"}),
-            ("rebalance", "q164_rendezvous_rebalance",
-             {"policy": "policy", "n_docs": "n_docs",
-              "n_moved": "n_moved", "moved_frac_u": "moved_frac_u"}),
-            ("leakage_audit", "q161_split_leakage_audit",
-             {"policy": "policy", "n_pairs": "n_pairs",
-              "n_cross": "n_cross", "cross_frac_u": "cross_frac_u"}),
-            ("quota_apportionment", "q150_quota_apportionment",
-             {"lang": "lang", "source": "source", "n_docs": "n_docs",
-              "base_quota": "base_quota", "extra_seat": "extra",
-              "final_quota": "final_quota"}),
-            ("stride_schedule", "q142_stride_schedule",
-             {"slot": "slot", "doc_id": "doc_id", "lang": "lang",
-              "k": "k", "sched_key": "sched_key"}),
-            ("packing", "q100_sequence_packing",
-             {"doc_id": "doc_id", "shard": "shard", "n_tokens": "n_tokens",
-              "start_pos": "start_pos", "first_window": "first_window",
-              "last_window": "last_window", "n_windows": "n_windows"}),
-            ("leakage_split", "q101_leakage_safe_split",
-             {"vec_id": "vec_id", "cluster_id": "cluster_id",
-              "in_cluster": "in_cluster", "split": "split"}),
-            ("det_shuffle", "q105_deterministic_shuffle",
-             {"doc_id": "doc_id", "shard": "shard",
-              "global_pos": "global_pos"}),
-            ("domain_rollup", "q98_domain_rollup",
-             {"domain": "domain", "n_docs": "n_docs",
-              "total_chars": "total_chars", "mean_chars": "mean_chars"}),
-            ("fim_transform", "q134_fim_transform",
-             {"doc_id": "doc_id", "mode": "mode",
-              "len_prefix": "len_prefix", "len_middle": "len_middle",
-              "len_suffix": "len_suffix", "fim_md5": "fim_md5"}),
-        ],
-    ),
-    # CDC / resume family: manifest crash+resume state, snapshot diff,
-    # and the incremental diff->extract composition.
+    # CDC / resume family: manifest crash+resume state, Merkle snapshot
+    # diff, and the incremental diff->extract composition.
     "panel_cdc_resume": (
         [("doc_id_bucket", "int"), ("doc_count", "long"),
          ("span_count", "long"), ("table_count", "long"),
          ("status", "string"), ("run_seq", "int"), ("doc_id", "long"),
-         ("content_md5", "string"), ("needs_extraction", "boolean"),
-         ("source", "string"), ("dirty", "boolean"),
-         ("sum_chars", "long"), ("min_chars", "long"),
-         ("max_chars", "long"), ("matches_full", "boolean"),
-         ("old_count", "long"), ("new_count", "long"),
-         ("clean", "boolean"), ("n_added", "long"),
-         ("n_changed", "long"), ("n_removed", "long"),
-         ("file_id", "long"), ("size_bytes", "long"),
-         ("is_small", "boolean"), ("bin", "long"),
-         ("disposition", "string"), ("bin_fill", "long")],
+         ("old_count", "long"), ("new_count", "long"), ("clean", "boolean"),
+         ("n_added", "long"), ("n_changed", "long"), ("n_removed", "long")],
         [
-            ("compaction_plan", "q195_compaction_planner",
-             {"file_id": "file_id", "size_bytes": "size_bytes",
-              "doc_count": "n_docs", "is_small": "is_small",
-              "bin": "bin", "disposition": "disposition",
-              "bin_fill": "bin_fill"}),
             ("merkle_diff", "q172_merkle_snapshot_diff",
              {"doc_id_bucket": "leaf", "old_count": "old_count",
               "new_count": "new_count", "clean": "clean",
@@ -1146,40 +523,9 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
              {"doc_id_bucket": "doc_id_bucket", "doc_count": "doc_count",
               "span_count": "span_count", "table_count": "table_count",
               "status": "status", "run_seq": "run_seq"}),
-            ("snapshot_diff", "q103_snapshot_diff",
-             {"doc_id": "doc_id", "status": "status",
-              "content_md5": "content_md5",
-              "needs_extraction": "needs_extraction"}),
             ("incremental", "q106_incremental_extraction",
              {"doc_id": "doc_id", "status": "status",
               "span_count": "span_count"}),
-            ("view_maintenance", "q170_incremental_view_maintenance",
-             {"source": "source", "dirty": "dirty",
-              "doc_count": "n_docs", "sum_chars": "sum_chars",
-              "min_chars": "min_chars", "max_chars": "max_chars",
-              "matches_full": "matches_full"}),
-        ],
-    ),
-    # deterministic RAG analogs: citation assembly + query expansion
-    # (the reference's last two LLM-adjacent behaviors).
-    "panel_rag_analogs": (
-        [("cite_index", "int"), ("filename", "string"),
-         ("page_number", "int"), ("content_type", "string"),
-         ("similarity_score", "double"), ("confidence_score", "double"),
-         ("citation", "string"), ("variant_rank", "int"),
-         ("base_term", "string"), ("added_token", "string"),
-         ("df_ab", "long"), ("expanded_query", "string")],
-        [
-            ("citations", "q92_citation_assembly",
-             {"cite_index": "cite_index", "filename": "filename",
-              "page_number": "page_number", "content_type": "content_type",
-              "similarity_score": "similarity_score",
-              "confidence_score": "confidence_score",
-              "citation": "citation"}),
-            ("expansion", "q93_query_expansion",
-             {"variant_rank": "variant_rank", "base_term": "base_term",
-              "added_token": "added_token", "df_ab": "df_ab",
-              "expanded_query": "expanded_query"}),
         ],
     ),
     # ANN / retrieval family: brute-force cosine top-k, IVF probe,
@@ -1188,18 +534,8 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
         [("vec_id", "long"), ("label", "int"), ("cosine", "double"),
          ("cell", "long"), ("doc_id", "long"), ("lang", "string"),
          ("n_chars", "long"), ("conf", "double"), ("n_overlap", "long"),
-         ("recall_at_10", "double"), ("recall_u", "long"),
-         ("raw_top", "long"), ("raw_cos_u", "long"),
-         ("margin_top", "long"), ("margin_u", "long"),
-         ("changed", "boolean")],
+         ("recall_at_10", "double")],
         [
-            ("matryoshka_recall", "q168_matryoshka_recall",
-             {"vec_id": "query_id", "n_overlap": "n_overlap",
-              "recall_u": "recall_u"}),
-            ("margin_alignment", "q177_margin_alignment",
-             {"vec_id": "query_id", "raw_top": "raw_top",
-              "raw_cos_u": "raw_cos_u", "margin_top": "margin_top",
-              "margin_u": "margin_u", "changed": "changed"}),
             ("brute_topk", "q27_cosine_topk",
              {"vec_id": "vec_id", "label": "label", "cosine": "cosine"}),
             ("ivf_topk", "q46_ivf_topk",
@@ -1266,58 +602,13 @@ PANELED: frozenset[str] = frozenset(
     fine for _cols, parts in PANEL_SPECS.values() for _tag, fine, _m in parts
 )
 
-# driver-view ordering hedge: if the driver's gate is time-bounded rather
-# than count-bounded, the entries new or restructured this round (the five
-# round-5 consolidation panels and the three panels that absorbed
-# q102/q108/q109) must run first
-_FRONT = [
-    "panel_event_dedup",
-    "panel_signatures",
-    "panel_dup_pairs",
-    "panel_decontamination",
-    "panel_corpus_clean",
-    "panel_corpus_layout",
-    "panel_cdc_resume",
-    "panel_rag_analogs",
-    "panel_extract_core",
-    "panel_media",
-    "panel_embedding_stats",
-    "panel_round3",
-    "panel_span_ops",
-    "panel_relational",
-    "panel_text",
-    "panel_ann",
-    "panel_dup_clusters",
-    "panel_event_stats",
-    "panel_quality",
-    "panel_event_windows",
-    "panel_join_revenue",
-    "panel_doc_profile",
-    "panel_token_lang_stats",
-    "panel_token_index",
-    "panel_table_form",
-    "panel_extract_edges",
-    "panel_kmeans",
-    "panel_retrieval",
-    "panel_grouping_sets",
-]
-
-
 def driver_view() -> tuple[dict, dict]:
-    """The consolidated ``queries()``/``oracle_sql()`` surface: panels +
-    every fine-grained query not absorbed by one, ordered so previously
-    unrecorded operators hit the driver's bounded run list first."""
-    psq, posql = build_panels()
-    sq = dict(psq)
-    osql = dict(posql)
+    """The consolidated ``queries()``/``oracle_sql()`` surface: every
+    panel, then every fine-grained query not absorbed by one."""
+    sq, osql = build_panels()
     for name, fn in SPARK_QUERIES.items():
         if name not in PANELED:
             sq[name] = fn
             if name in ORACLE_SQL:
                 osql[name] = ORACLE_SQL[name]
-    ordered = [n for n in _FRONT if n in sq]
-    ordered += [n for n in sq if n not in ordered]
-    return (
-        {n: sq[n] for n in ordered},
-        {n: osql[n] for n in ordered if n in osql},
-    )
+    return sq, osql

@@ -21,37 +21,13 @@ import sparkextract.queries.round5  # noqa: F401
 import sparkextract.queries.round5b  # noqa: F401
 import sparkextract.queries.round5c  # noqa: F401
 import sparkextract.queries.round5d  # noqa: F401
-import sparkextract.queries.round5e  # noqa: F401
-import sparkextract.queries.round5f  # noqa: F401
 import sparkextract.queries.round5g  # noqa: F401
 import sparkextract.queries.round5h  # noqa: F401
-import sparkextract.queries.round5i  # noqa: F401
-import sparkextract.queries.round5j  # noqa: F401
-import sparkextract.queries.round5k  # noqa: F401
-import sparkextract.queries.round5l  # noqa: F401
-import sparkextract.queries.round5m  # noqa: F401
-import sparkextract.queries.round5n  # noqa: F401
 import sparkextract.queries.round5o  # noqa: F401
-import sparkextract.queries.round5p  # noqa: F401
 import sparkextract.queries.round5q  # noqa: F401
-import sparkextract.queries.round5r  # noqa: F401
-import sparkextract.queries.round5s  # noqa: F401
-import sparkextract.queries.round5t  # noqa: F401
-import sparkextract.queries.round5u  # noqa: F401
 import sparkextract.queries.round5v  # noqa: F401
-import sparkextract.queries.round5w  # noqa: F401
-import sparkextract.queries.round5x  # noqa: F401
 import sparkextract.queries.round5y  # noqa: F401
 import sparkextract.queries.round5aa  # noqa: F401
-import sparkextract.queries.round5ab  # noqa: F401
-import sparkextract.queries.round5ac  # noqa: F401
-import sparkextract.queries.round5ad  # noqa: F401
-import sparkextract.queries.round5ae  # noqa: F401
-import sparkextract.queries.round5af  # noqa: F401
-import sparkextract.queries.round5ag  # noqa: F401
-import sparkextract.queries.round5ah  # noqa: F401
-import sparkextract.queries.round5ai  # noqa: F401
-import sparkextract.queries.round5aj  # noqa: F401
 import sparkextract.queries.round5z  # noqa: F401
 import sparkextract.queries.text  # noqa: F401
 import sparkextract.queries.text2  # noqa: F401

@@ -269,39 +269,6 @@ def q09_chunk_index(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Sessionization via lag (gap > 30 min starts a new session) — the
-# window-shaped operator family's stateful cousin, batch form.
-@register(
-    "q10_sessionize",
-    oracle="""
-    SELECT user_id,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(1 + SUM(is_new) AS BIGINT) AS n_sessions
-    FROM (
-      SELECT user_id,
-             CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)) > 1800000000
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-    )
-    GROUP BY user_id
-    """,
-)
-def q10_sessionize(spark, sf_dir):
-    ev = load(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    ts = F.col("ts").cast("timestamp")  # NTZ -> LTZ under UTC session
-    gap = F.unix_micros(ts) - F.unix_micros(F.lag(ts).over(w))
-    return (
-        ev.withColumn("is_new", F.when(gap > 1_800_000_000, 1).otherwise(0))
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            (F.lit(1) + F.sum("is_new")).cast("long").alias("n_sessions"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
 # J2: anti-join (the resume/skip-if-processed operator) — customers that
 # placed no order above the threshold.
 @register(
@@ -343,54 +310,6 @@ def q15_semi_join(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Broadcast dim join + grouped top-k (A4 argmax family).
-@register(
-    "q16_brand_revenue",
-    oracle=f"""
-    SELECT p.p_brand,
-           CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4)) * CAST(1 - l.l_discount AS DECIMAL(18,4))), 4) AS DOUBLE) AS revenue,
-           CAST(COUNT(*) AS BIGINT) AS n_items
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    GROUP BY p.p_brand
-    ORDER BY revenue DESC, p_brand ASC
-    LIMIT 5
-    """,
-)
-def q16_brand_revenue(spark, sf_dir):
-    li = load(spark, sf_dir, "lineitem")
-    part = load(spark, sf_dir, "part")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("p_brand")
-        .agg(
-            F.round(
-                F.sum(_dec("l_extendedprice") * (F.lit(1) - F.col("l_discount")).cast("decimal(18,4)")),
-                4,
-            )
-            .cast("double")
-            .alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-        .orderBy(F.desc("revenue"), F.asc("p_brand"))
-        .limit(5)
-    )
-
-
-# --------------------------------------------------------------------------
-# T1: global top-k with full tie-break.
-@register(
-    "q17_top_docs_by_chars",
-    oracle="""
-    SELECT doc_id, n_chars FROM documents
-    ORDER BY n_chars DESC, doc_id ASC LIMIT 10
-    """,
-)
-def q17_top_docs_by_chars(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    return docs.orderBy(F.desc("n_chars"), F.asc("doc_id")).limit(10).select("doc_id", "n_chars")
-
-
-# --------------------------------------------------------------------------
 # D1: priority dedup via row_number (first-writer-wins on a key with an
 # explicit priority order — reference form_extractor.py:478-506).
 @register(
@@ -416,75 +335,3 @@ def q12_dedup_priority(spark, sf_dir):
     )
 
 
-# --------------------------------------------------------------------------
-# Rollup (Spark gives grouping sets for free — SURVEY §2.4 note).
-@register(
-    "q29_rollup_lineitem",
-    oracle=f"""
-    SELECT COALESCE(l_returnflag, '(all)') AS returnflag,
-           COALESCE(l_linestatus, '(all)') AS linestatus,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           {dsum('l_quantity')} AS sum_qty
-    FROM lineitem
-    GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    """,
-)
-def q29_rollup_lineitem(spark, sf_dir):
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("(all)")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("(all)")).alias("linestatus"),
-            "n_rows",
-            "sum_qty",
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Manual pivot (per-lang source histogram) — FILTER-agg form in both.
-@register(
-    "q30_lang_pivot",
-    oracle="""
-    SELECT lang,
-           CAST(COUNT(*) AS BIGINT) AS n_total,
-           CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT) AS n_src0,
-           CAST(SUM(CASE WHEN source = 'src1' THEN 1 ELSE 0 END) AS BIGINT) AS n_src1,
-           CAST(SUM(CASE WHEN source = 'src2' THEN 1 ELSE 0 END) AS BIGINT) AS n_src2
-    FROM documents GROUP BY lang
-    """,
-)
-def q30_lang_pivot(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    return docs.groupBy("lang").agg(
-        F.count("*").alias("n_total"),
-        F.sum(F.when(F.col("source") == "src0", 1).otherwise(0)).alias("n_src0"),
-        F.sum(F.when(F.col("source") == "src1", 1).otherwise(0)).alias("n_src1"),
-        F.sum(F.when(F.col("source") == "src2", 1).otherwise(0)).alias("n_src2"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Share-of-total via window over aggregate (priority mix).
-@register(
-    "q33_priority_share",
-    oracle="""
-    SELECT o_orderpriority,
-           CAST(n AS BIGINT) AS n_orders,
-           ROUND(CAST(n AS DOUBLE) / SUM(n) OVER (), 6) AS share
-    FROM (SELECT o_orderpriority, COUNT(*) AS n FROM orders GROUP BY o_orderpriority)
-    """,
-)
-def q33_priority_share(spark, sf_dir):
-    orders = load(spark, sf_dir, "orders")
-    agg = orders.groupBy("o_orderpriority").agg(F.count("*").alias("n"))
-    return agg.select(
-        "o_orderpriority",
-        F.col("n").alias("n_orders"),
-        F.round(F.col("n").cast("double") / F.sum("n").over(W.partitionBy()), 6).alias("share"),
-    )

@@ -26,8 +26,7 @@ from functools import reduce
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from sparkextract.queries.base import load, md5_bucket, md5_bucket_sql, register
-from sparkextract.queries.dedup2 import _Q53_ORACLE, q53_banded_lsh_near_dup
+from sparkextract.queries.base import load, register
 
 # --------------------------------------------------------------------------
 # q69: form-field grouping (F6). Keyword lists and their precedence are
@@ -203,58 +202,6 @@ def q70_text_similarity(spark, sf_dir):
     )
 
 
-# --------------------------------------------------------------------------
-# q71: duplicate-pair -> duplicate-cluster connected components over
-# q53's near-dup pair output, via iterated min-label propagation (each
-# node repeatedly adopts the minimum label among itself and its
-# neighbors until a fixed point — the classic distributed
-# connected-components loop; see also q52/q57's iterative shape).
-# Scale shape: each iteration is ONE shuffle of label-sized rows on the
-# node id plus an edge join on the same key; iteration count is the
-# component diameter (tiny for near-dup clusters). The label frame is
-# localCheckpoint()ed every iteration so lineage (and replay cost) stays
-# O(1) per round instead of O(rounds) — the same persist-between-
-# iterations discipline a 100 TB Lloyd's run needs (q57 docstring).
-# Oracle: DuckDB recursive CTE computing min reachable id per node.
-_Q71_ORACLE = f"""
-WITH RECURSIVE pairs AS (
-  {_Q53_ORACLE}
-),
-edges AS (
-  SELECT left_id AS a, right_id AS b FROM pairs
-  UNION ALL
-  SELECT right_id, left_id FROM pairs
-),
-nodes AS (SELECT DISTINCT a AS id FROM edges),
-reach AS (
-  SELECT id, id AS lbl FROM nodes
-  UNION
-  SELECT e.b AS id, r.lbl FROM reach r JOIN edges e ON e.a = r.id
-)
-SELECT vec_id, component,
-       CAST(COUNT(*) OVER (PARTITION BY component) AS BIGINT) AS cluster_size
-FROM (
-  SELECT id AS vec_id, MIN(lbl) AS component FROM reach GROUP BY id
-)
-"""
-
-
-# the propagation loop runs actions eagerly (convergence tests), so when
-# q71 and q72 share one session+input (the panel view unions both) the
-# localCheckpoint()ed fixed point is reused instead of recomputed. The
-# key carries an input-content token (file names/sizes/mtimes), so a
-# caller that rewrites the parquet under sf_dir in-session gets fresh
-# components instead of stale checkpointed labels (round-3 ADVICE item;
-# regression-tested in test_round5.py).
-# FIFO-bounded: entries for stopped sessions would otherwise pin dead
-# DataFrame/JVM-gateway references for the process lifetime (pytest and
-# repeated driver rounds run many sessions in one process); eviction
-# drops the reference and leaves block reclamation to ContextCleaner GC
-# (localCheckpoint blocks are not unpersist()-able).
-_COMPONENTS_MEMO: dict[tuple[str, str, str], object] = {}
-_COMPONENTS_MEMO_CAP = 8
-
-
 def label_propagation(pair_df):
     """(left_id, right_id) dup pairs -> (id, lbl) connected-component
     labels via iterated min-label propagation. Each iteration is ONE
@@ -292,72 +239,6 @@ def label_propagation(pair_df):
     labels = joined.drop("old")
     edges.unpersist()
     return labels
-
-
-def _dup_components(spark, sf_dir):
-    from sparkextract.queries.base import input_token
-
-    memo_key = (spark.sparkContext.applicationId, input_token(sf_dir), sf_dir)
-    cached = _COMPONENTS_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
-    labels = label_propagation(q53_banded_lsh_near_dup(spark, sf_dir))
-    while len(_COMPONENTS_MEMO) >= _COMPONENTS_MEMO_CAP:
-        _COMPONENTS_MEMO.pop(next(iter(_COMPONENTS_MEMO)))
-    _COMPONENTS_MEMO[memo_key] = labels
-    return labels
-
-
-@register("q71_dup_components", oracle=_Q71_ORACLE)
-def q71_dup_components(spark, sf_dir):
-    labels = _dup_components(spark, sf_dir)
-    w = F.count("*").over(Window.partitionBy("lbl"))
-    return labels.select(
-        F.col("id").alias("vec_id"),
-        F.col("lbl").alias("component"),
-        w.alias("cluster_size"),
-    )
-
-
-# --------------------------------------------------------------------------
-# q72: apply the q71 clusters back to the corpus — the step a real
-# training-data dedup pipeline actually ends with: every vector keeps a
-# canonical ``survivor_id`` (its component's min id under min-label
-# propagation, i.e. the component label itself; unclustered rows survive
-# as themselves) and non-survivor cluster members are the rows a cleaned
-# corpus drops. Scale shape: the labels side holds ONLY clustered nodes
-# (a tiny fraction of the corpus), so the left join is broadcast; the
-# corpus is never shuffled.
-_Q72_ORACLE = f"""
-WITH comp AS (
-  SELECT vec_id, component FROM ({_Q71_ORACLE}) _c
-)
-SELECT e.vec_id,
-       COALESCE(c.component, e.vec_id) AS survivor_id,
-       (c.component IS NULL OR c.component = e.vec_id) AS is_survivor
-FROM embeddings e
-LEFT JOIN comp c ON c.vec_id = e.vec_id
-"""
-
-
-@register("q72_dup_survivors", oracle=_Q72_ORACLE)
-def q72_dup_survivors(spark, sf_dir):
-    from pyspark.sql.functions import broadcast
-
-    labels = _dup_components(spark, sf_dir).select(
-        F.col("id").alias("c_vec_id"), F.col("lbl").alias("component")
-    )
-    emb = load(spark, sf_dir, "embeddings")
-    survivor = F.coalesce("component", "vec_id")
-    return emb.join(
-        broadcast(labels), emb["vec_id"] == labels["c_vec_id"], "left"
-    ).select(
-        "vec_id",
-        survivor.alias("survivor_id"),
-        (F.col("component").isNull() | (F.col("component") == F.col("vec_id"))).alias(
-            "is_survivor"
-        ),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -558,474 +439,6 @@ def q74_answer_confidence(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# q75: rule-based document-quality filter — the C4/Gopher-style cleaning
-# pass a web-scale training-data pipeline runs before anything else:
-# per-document word count bounds, mean-word-length band, and lexical-
-# diversity floor, each doc tagged keep/reject with the FIRST failing
-# rule as its reject_reason (rules are ordered, like the published
-# pipelines' cascades). Complements q25 (weighted quality score,
-# source-grain): this is the hard per-doc verdict.
-# Float discipline: diversity and mean_word_len are each ONE IEEE
-# division of exact integers (identical in both engines); threshold
-# compares run on the raw quotient, ROUND only for display.
-# Scale shape: map-only over one scan — no shuffle, fully codegen'd.
-_Q75_MIN_WORDS = 50
-_Q75_MAX_WORDS = 5000
-_Q75_WLEN_LO = 2.0
-_Q75_WLEN_HI = 12.0
-_Q75_MIN_DIVERSITY = 0.05
-
-# shared word-metric definitions: q75's rule filter and q76's composed
-# pipeline MUST tokenize identically in BOTH engines, so each metric has
-# exactly one SQL fragment and one Spark builder (drift between the two
-# queries would be invisible to the oracle gate — both engines would
-# drift together)
-_SQL_N_WORDS = "CAST(LENGTH(regexp_extract_all(text, '\\S+')) AS BIGINT)"
-_SQL_N_DISTINCT = (
-    "CAST(LENGTH(list_distinct(list_filter("
-    "regexp_split_to_array(text, '\\s+'), x -> x <> ''))) AS BIGINT)"
-)
-
-
-def _n_words_col():
-    return F.regexp_count("text", F.lit(r"\S+")).cast("long")
-
-
-def _n_distinct_col():
-    return F.size(
-        F.array_distinct(F.filter(F.split("text", r"\s+"), lambda x: x != ""))
-    ).cast("long")
-
-
-_Q75_ORACLE = f"""
-WITH m AS (
-  SELECT doc_id,
-         {_SQL_N_WORDS} AS n_words,
-         {_SQL_N_DISTINCT} AS n_distinct,
-         CAST(LENGTH(regexp_replace(text, '\\s+', '', 'g')) AS BIGINT) AS n_nonspace
-  FROM documents
-),
-v AS (
-  SELECT doc_id, n_words, n_distinct,
-         CAST(n_distinct AS DOUBLE) / n_words AS diversity,
-         CAST(n_nonspace AS DOUBLE) / n_words AS mean_wlen
-  FROM m
-)
-SELECT doc_id, n_words, n_distinct,
-       ROUND(diversity, 6) AS diversity,
-       ROUND(mean_wlen, 6) AS mean_word_len,
-       CASE WHEN n_words < {_Q75_MIN_WORDS} THEN 'too_short'
-            WHEN n_words > {_Q75_MAX_WORDS} THEN 'too_long'
-            WHEN mean_wlen < {_Q75_WLEN_LO} OR mean_wlen > {_Q75_WLEN_HI} THEN 'word_len'
-            WHEN diversity < {_Q75_MIN_DIVERSITY} THEN 'repetitive'
-            ELSE 'pass' END AS reject_reason,
-       (n_words >= {_Q75_MIN_WORDS} AND n_words <= {_Q75_MAX_WORDS}
-        AND mean_wlen >= {_Q75_WLEN_LO} AND mean_wlen <= {_Q75_WLEN_HI}
-        AND diversity >= {_Q75_MIN_DIVERSITY}) AS keep
-FROM v
-"""
-
-
-@register("q75_quality_rules", oracle=_Q75_ORACLE)
-def q75_quality_rules(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    n_nonspace = F.length(F.regexp_replace("text", r"\s+", "")).cast("long")
-    m = docs.select(
-        "doc_id",
-        _n_words_col().alias("n_words"),
-        _n_distinct_col().alias("n_distinct"),
-        n_nonspace.alias("n_nonspace"),
-    )
-    # NULL (not NaN) for zero-word docs: Spark's double x/0 is IEEE NaN
-    # while DuckDB's is NULL — guard the divisions so a whitespace-only
-    # document (the exact junk this filter exists for) cannot split the
-    # engines; reject_reason still reads 'too_short' via the first rule
-    nz_words = F.when(F.col("n_words") > 0, F.col("n_words"))
-    diversity = F.col("n_distinct").cast("double") / nz_words
-    mean_wlen = F.col("n_nonspace").cast("double") / nz_words
-    reason = (
-        F.when(F.col("n_words") < _Q75_MIN_WORDS, "too_short")
-        .when(F.col("n_words") > _Q75_MAX_WORDS, "too_long")
-        .when((mean_wlen < _Q75_WLEN_LO) | (mean_wlen > _Q75_WLEN_HI), "word_len")
-        .when(diversity < _Q75_MIN_DIVERSITY, "repetitive")
-        .otherwise("pass")
-    )
-    keep = (
-        (F.col("n_words") >= _Q75_MIN_WORDS)
-        & (F.col("n_words") <= _Q75_MAX_WORDS)
-        & (mean_wlen >= _Q75_WLEN_LO)
-        & (mean_wlen <= _Q75_WLEN_HI)
-        & (diversity >= _Q75_MIN_DIVERSITY)
-    )
-    return m.select(
-        "doc_id",
-        "n_words",
-        "n_distinct",
-        F.round(diversity, 6).alias("diversity"),
-        F.round(mean_wlen, 6).alias("mean_word_len"),
-        reason.alias("reject_reason"),
-        keep.alias("keep"),
-    )
-
-
-# --------------------------------------------------------------------------
-# q76: the cleaning pipeline END-TO-END in one declarative plan — what a
-# training-data job actually runs nightly: inject duplicates (q11's
-# corpus construction), apply the q75 rule cascade, collapse exact
-# duplicates to their min-doc_id survivor, then roll the surviving
-# corpus up per (lang, source). Composition matters here: Catalyst fuses
-# the quality predicates into the scan stage, the dedup is ONE
-# map-side-combined groupBy on md5(text), and the final rollup is a
-# second small shuffle — no driver round-trips anywhere.
-# Scale shape: scan -> codegen'd filter -> hash-agg on content hash
-# (partial+final) -> hash-agg on (lang, source). Two key-partitioned
-# shuffles total, the second over already-deduped rows.
-_Q76_ORACLE = f"""
-WITH corpus AS (
-  SELECT doc_id, text, lang, source FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000, text, lang, source FROM documents WHERE doc_id % 7 = 0
-),
-m AS (
-  SELECT doc_id, text, lang, source,
-         {_SQL_N_WORDS} AS n_words,
-         {_SQL_N_DISTINCT} AS n_distinct
-  FROM corpus
-),
-kept AS (
-  SELECT * FROM m
-  WHERE n_words >= {_Q75_MIN_WORDS} AND n_words <= {_Q75_MAX_WORDS}
-    AND CAST(n_distinct AS DOUBLE) / n_words >= {_Q75_MIN_DIVERSITY}
-),
-deduped AS (
-  SELECT md5(text) AS h, MIN(doc_id) AS keeper, COUNT(*) AS n_copies,
-         MIN(lang) AS lang, MIN(source) AS source, MIN(n_words) AS n_words
-  FROM kept GROUP BY md5(text)
-)
-SELECT lang, source,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_words) AS BIGINT) AS total_words,
-       CAST(SUM(n_copies - 1) AS BIGINT) AS n_suppressed,
-       CAST(MIN(keeper) AS BIGINT) AS min_keeper
-FROM deduped GROUP BY lang, source
-"""
-
-
-@register("q76_clean_pipeline", oracle=_Q76_ORACLE)
-def q76_clean_pipeline(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text", "lang", "source")
-    dup = docs.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text", "lang", "source"
-    )
-    corpus = docs.unionByName(dup)
-    m = corpus.select("doc_id", "text", "lang", "source",
-                      _n_words_col().alias("n_words"),
-                      _n_distinct_col().alias("n_distinct"))
-    kept = m.filter(
-        (F.col("n_words") >= _Q75_MIN_WORDS)
-        & (F.col("n_words") <= _Q75_MAX_WORDS)
-        & (F.col("n_distinct").cast("double") / F.col("n_words") >= _Q75_MIN_DIVERSITY)
-    )
-    deduped = kept.groupBy(F.md5("text").alias("h")).agg(
-        F.min("doc_id").alias("keeper"),
-        F.count("*").alias("n_copies"),
-        F.min("lang").alias("lang"),
-        F.min("source").alias("source"),
-        F.min("n_words").alias("n_words"),
-    )
-    return deduped.groupBy("lang", "source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_words").alias("total_words"),
-        F.sum(F.col("n_copies") - 1).alias("n_suppressed"),
-        F.min("keeper").alias("min_keeper"),
-    )
-
-
-# --------------------------------------------------------------------------
-# q77: AS-OF JOIN — for every 'click' event, the latest 'view' event of
-# the same user at or before it (plus the gap). Spark has no asof-join
-# operator; the scale-safe construction is NOT a range join (O(n*m)
-# per key) but a tagged UNION + one ordered window per key: views carry
-# their own id/timestamp as ref columns, clicks carry NULLs, and
-# last(ref, ignorenulls) over (user ORDER BY us, is_probe, event_id
-# ROWS UNBOUNDED PRECEDING..CURRENT) resolves each click's predecessor
-# in a single pass. ONE shuffle on user_id; ties at equal timestamps
-# are deterministic (views sort before clicks, then by event_id).
-# Clicks with no prior view keep NULLs — left-asof semantics.
-_Q77_ORACLE = """
-WITH tagged AS (
-  SELECT user_id, CAST(epoch_us(ts) AS BIGINT) AS us, 0 AS is_probe, event_id,
-         event_id AS ref_id, CAST(epoch_us(ts) AS BIGINT) AS ref_us
-  FROM events WHERE event_type = 'view'
-  UNION ALL
-  SELECT user_id, CAST(epoch_us(ts) AS BIGINT), 1, event_id, NULL, NULL
-  FROM events WHERE event_type = 'click'
-),
-w AS (
-  SELECT *,
-         last_value(ref_id IGNORE NULLS) OVER win AS view_id,
-         last_value(ref_us IGNORE NULLS) OVER win AS view_us
-  FROM tagged
-  WINDOW win AS (PARTITION BY user_id ORDER BY us, is_probe, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT user_id, event_id AS click_id,
-       CAST(view_id AS BIGINT) AS view_id,
-       CAST(us - view_us AS BIGINT) AS gap_us
-FROM w WHERE is_probe = 1
-"""
-
-
-@register("q77_asof_join", oracle=_Q77_ORACLE)
-def q77_asof_join(spark, sf_dir):
-    ev = load(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id",
-        "us",
-        F.lit(0).alias("is_probe"),
-        "event_id",
-        F.col("event_id").alias("ref_id"),
-        F.col("us").alias("ref_us"),
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        "us",
-        F.lit(1).alias("is_probe"),
-        "event_id",
-        F.lit(None).cast("long").alias("ref_id"),
-        F.lit(None).cast("long").alias("ref_us"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("us", "is_probe", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    tagged = views.unionByName(clicks).select(
-        "*",
-        F.last("ref_id", ignorenulls=True).over(w).alias("view_id"),
-        F.last("ref_us", ignorenulls=True).over(w).alias("view_us"),
-    )
-    return tagged.filter(F.col("is_probe") == 1).select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        "view_id",
-        (F.col("us") - F.col("view_us")).alias("gap_us"),
-    )
-
-
-# --------------------------------------------------------------------------
-# q78: deterministic stratified train/val/test split — the last step of
-# a training-data pipeline: every document lands in a split by an
-# md5-derived hash bucket of its id (90/5/5), NEVER by rand() — the
-# assignment must be reproducible across runs, engines, and
-# repartitioning, which is exactly the repo's md5-pseudo-randomness
-# discipline (engine hash() functions differ; md5 is bit-identical
-# everywhere). Stratification is reported per (lang, split) so mixture
-# weights are auditable. Map-only projection + one grouped agg.
-_Q78_ORACLE = f"""
-WITH assigned AS (
-  SELECT lang, n_chars,
-         {md5_bucket_sql('doc_id', 100)} AS bucket
-  FROM documents
-)
-SELECT lang,
-       CASE WHEN bucket < 90 THEN 'train'
-            WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_chars) AS BIGINT) AS total_chars
-FROM assigned GROUP BY 1, 2
-"""
-
-
-@register("q78_stratified_split", oracle=_Q78_ORACLE)
-def q78_stratified_split(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    bucket = md5_bucket(F.col("doc_id"), 100)
-    split = (
-        F.when(bucket < 90, "train").when(bucket < 95, "val").otherwise("test")
-    )
-    return (
-        docs.select("lang", split.alias("split"), "n_chars")
-        .groupBy("lang", "split")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# q79: SALTED SKEW JOIN — the manual-salting technique as a standalone,
-# oracle-proven operator (q42 applies it inside the extraction job; this
-# is the relational form). A skewed fact key (every third user collapsed
-# onto user 0, ~33% of the table) would put one-third of the shuffle on
-# a single reducer in a plain key-join. Instead: the fact side gets a
-# deterministic salt (md5-derived, engine-identical — NEVER engine
-# hash()/rand()), the small dim side is replicated across all S salts,
-# and the join key becomes (key, salt) — the hot key's rows spread over
-# S reducers. The oracle is the UNSALTED join: identical results prove
-# salting is a pure physical rewrite. At 100 TB you'd drive S from the
-# observed key histogram (or lean on AQE skew-join for sort-merge
-# plans); the shape here is the one you need when the dim is
-# broadcast-too-big and AQE can't split (e.g. bucketed SHJ).
-_Q79_SALTS = 8
-
-_Q79_ORACLE = """
-WITH fact AS (
-  SELECT CASE WHEN user_id % 3 = 0 THEN 0 ELSE user_id END AS k, value
-  FROM events
-),
-dim AS (
-  SELECT DISTINCT CASE WHEN user_id % 3 = 0 THEN 0 ELSE user_id END AS k
-  FROM events
-),
-labeled AS (
-  SELECT k, CASE WHEN k = 0 THEN 'hot' ELSE 'uniform' END AS seg FROM dim
-)
-SELECT l.seg,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(CAST(f.value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value,
-       CAST(COUNT(DISTINCT f.k) AS BIGINT) AS n_keys
-FROM fact f JOIN labeled l ON f.k = l.k
-GROUP BY l.seg
-"""
-
-
-@register("q79_salted_skew_join", oracle=_Q79_ORACLE)
-def q79_salted_skew_join(spark, sf_dir):
-    ev = load(spark, sf_dir, "events")
-    k = F.when(F.col("user_id") % 3 == 0, F.lit(0)).otherwise(F.col("user_id"))
-    # deterministic fact-side salt (md5 of the row id, engine-portable)
-    salt = md5_bucket(F.col("event_id"), _Q79_SALTS)
-    fact = ev.select(k.alias("k"), salt.alias("salt"), "value")
-    dim = (
-        ev.select(k.alias("k"))
-        .distinct()
-        .select("k", F.when(F.col("k") == 0, "hot").otherwise("uniform").alias("seg"))
-    )
-    # replicate the dim across every salt value (dim is small; the
-    # replication factor S multiplies only the SMALL side)
-    dim_salted = dim.crossJoin(
-        spark.range(_Q79_SALTS).select(F.col("id").cast("long").alias("salt"))
-    )
-    joined = fact.hint("shuffle_hash").join(dim_salted, ["k", "salt"])
-    return joined.groupBy("seg").agg(
-        F.count("*").alias("n_rows"),
-        F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
-        F.countDistinct("k").alias("n_keys"),
-    )
-
-
-# --------------------------------------------------------------------------
-# q80: time-bucket rollup (hypertable-style continuous aggregate): hourly
-# buckets per event_type with count / exact decimal sum / distinct users.
-# Bucketing is INTEGER division of epoch microseconds (`div` in Spark,
-# `//` in DuckDB) — float division of large epochs can misbucket at
-# boundaries, so neither engine touches a double until the sum renders.
-# Scale shape: single groupBy on (bucket, type) — partial agg map-side;
-# at 100 TB this is the query you materialize incrementally per
-# ingestion window, and the bucket key is the partition column.
-_Q80_BUCKET_US = 3_600_000_000  # 1 hour
-
-_Q80_ORACLE = f"""
-SELECT CAST(epoch_us(ts) // {_Q80_BUCKET_US} AS BIGINT) AS bucket_hour,
-       event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-FROM events
-GROUP BY 1, 2
-"""
-
-
-@register("q80_time_bucket_rollup", oracle=_Q80_ORACLE)
-def q80_time_bucket_rollup(spark, sf_dir):
-    ev = load(spark, sf_dir, "events").withColumn(
-        "us", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    bucket = F.expr(f"us div {_Q80_BUCKET_US}")
-    return (
-        ev.select(bucket.alias("bucket_hour"), "event_type", "value", "user_id")
-        .groupBy("bucket_hour", "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# q81: BANDED RANGE JOIN — every 'click' within ±2h of an 'error' for
-# the same user. A naive range join is a per-key cross product; the
-# scale-safe construction BANDS time into window-width buckets: each
-# error probes (band-1, band, band+1) — any |dt| <= W pair must share
-# one of those — so candidate generation is an EQUI-join on (user_id,
-# band) and the exact |dt| predicate runs only on co-banded pairs.
-# Exactly the q53/q68 LSH shape transplanted to the time axis; band
-# width is the knob that bounds expected bucket size. (Spark would
-# otherwise plan this theta-join as BroadcastNestedLoopJoin.)
-_Q81_W_US = 7_200_000_000  # ±2 hours
-
-_Q81_ORACLE = f"""
-WITH e AS (
-  SELECT user_id, event_id AS error_id, CAST(epoch_us(ts) AS BIGINT) AS eus
-  FROM events WHERE event_type = 'error'
-),
-c AS (
-  SELECT user_id, event_id AS click_id, CAST(epoch_us(ts) AS BIGINT) AS cus
-  FROM events WHERE event_type = 'click'
-)
-SELECT e.user_id, e.error_id, c.click_id,
-       CAST(c.cus - e.eus AS BIGINT) AS dt_us
-FROM e JOIN c ON e.user_id = c.user_id
-             AND ABS(c.cus - e.eus) <= {_Q81_W_US}
-"""
-
-
-@register("q81_range_join_banded", oracle=_Q81_ORACLE)
-def q81_range_join_banded(spark, sf_dir):
-    ev = load(spark, sf_dir, "events").withColumn(
-        "us", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "user_id", F.col("event_id").alias("error_id"), F.col("us").alias("eus")
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("us").alias("cus"),
-        F.expr(f"us div {_Q81_W_US}").alias("band"),
-    )
-    probe = errors.select(
-        "*",
-        F.explode(
-            F.array(
-                F.expr(f"eus div {_Q81_W_US}") - 1,
-                F.expr(f"eus div {_Q81_W_US}"),
-                F.expr(f"eus div {_Q81_W_US}") + 1,
-            )
-        ).alias("band"),
-    )
-    return (
-        probe.hint("shuffle_hash")
-        .join(clicks, ["user_id", "band"])
-        .filter(F.abs(F.col("cus") - F.col("eus")) <= _Q81_W_US)
-        .select(
-            "user_id",
-            "error_id",
-            "click_id",
-            (F.col("cus") - F.col("eus")).alias("dt_us"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
 # q82: GAP-BASED SESSIONIZATION — the canonical event-stream operator:
 # per user, a new session starts when the gap to the previous event
 # exceeds 12 h; sessions are then aggregated to (n_events, span). The
@@ -1090,111 +503,6 @@ def q82_sessionize(spark, sf_dir):
         F.max("us").alias("last_us"),
         (F.max("us") - F.min("us")).alias("duration_us"),
     )
-
-
-# --------------------------------------------------------------------------
-# q83: DETERMINISTIC HYPERLOGLOG — distinct-user estimate per event_type
-# as a real register sketch, built entirely from engine-portable md5
-# bits (never engine hash()/approx_count_distinct, whose internals
-# differ across engines and versions). 32-bit hash h = first 8 md5 hex
-# digits; m=64 registers: register = h % 64, remaining 26-bit stream
-# w = h div 64, rho = leading zeros in w + 1 = 27 - bitlength(w)
-# (27 when w = 0). Estimate = alpha_64 * m^2 / Z with
-# Z = sum(2^-M_j) + (#empty registers); every term is a dyadic rational
-# with denominator <= 2^27, so Z is EXACT in double in both engines and
-# the raw estimate is bit-identical. The linear-counting small-range
-# branch (raw <= 2.5m and empty registers exist) uses ln(), which can
-# differ in the last ulp, so it is ROUND(...,6)-ed. Scale shape: the
-# whole sketch is two mergeable partial aggs — groupBy (type, register)
-# max(rho), then groupBy type — register-grain data only ever shuffles;
-# this is exactly how a 100 TB HLL rollup is built and merged.
-_Q83_M = 64
-_Q83_ALPHA_M2 = 0.709 * _Q83_M * _Q83_M  # python-folded: identical double in both
-
-_Q83_ORACLE = f"""
-WITH h AS (
-  SELECT event_type,
-    {md5_bucket_sql("user_id", 1 << 32)} AS hv
-  FROM events
-),
-bits AS (
-  SELECT event_type,
-    CAST(hv % {_Q83_M} AS BIGINT) AS reg,
-    CAST(hv // {_Q83_M} AS BIGINT) AS w
-  FROM h
-),
-regs AS (
-  SELECT event_type, reg,
-    MAX(CASE WHEN w > 0 THEN 27 - LENGTH(bin(w)) ELSE 27 END) AS m_reg
-  FROM bits GROUP BY event_type, reg
-),
-agg AS (
-  SELECT event_type,
-    CAST(COUNT(*) AS BIGINT) AS v_registers,
-    CAST({_Q83_M} - COUNT(*) AS BIGINT) AS zeros,
-    SUM(1.0 / POWER(CAST(2.0 AS DOUBLE), m_reg)) AS z_present
-  FROM regs GROUP BY event_type
-),
-est AS (
-  SELECT event_type, v_registers, zeros,
-    CAST({_Q83_ALPHA_M2!r} AS DOUBLE)
-      / (z_present + CAST(zeros AS DOUBLE)) AS raw
-  FROM agg
-)
-SELECT e.event_type, e.v_registers, e.zeros,
-  ROUND(CASE WHEN e.raw <= {2.5 * _Q83_M} AND e.zeros > 0
-        THEN {_Q83_M} * ln(CAST({_Q83_M} AS DOUBLE) / e.zeros)
-        ELSE e.raw END, 6) AS est_distinct,
-  x.exact_distinct
-FROM est e
-JOIN (SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_distinct
-      FROM events GROUP BY event_type) x USING (event_type)
-"""
-
-
-@register("q83_hll_distinct", oracle=_Q83_ORACLE)
-def q83_hll_distinct(spark, sf_dir):
-    ev = load(spark, sf_dir, "events")
-    # one shared-helper hash (md5_bucket with a no-op 2^32 modulus, the
-    # oracle uses the md5_bucket_sql twin), materialized as a column so
-    # reg and w derive from a single expression style
-    hashed = ev.select(
-        "event_type", md5_bucket(F.col("user_id"), 1 << 32).alias("hv")
-    )
-    bits = hashed.select(
-        "event_type",
-        (F.col("hv") % _Q83_M).alias("reg"),
-        F.expr(f"hv div {_Q83_M}").alias("w"),
-    )
-    regs = bits.groupBy("event_type", "reg").agg(
-        F.max(
-            F.when(F.col("w") > 0, F.lit(27) - F.length(F.bin("w"))).otherwise(
-                F.lit(27)
-            )
-        ).alias("m_reg")
-    )
-    agg = regs.groupBy("event_type").agg(
-        F.count("*").alias("v_registers"),
-        (F.lit(_Q83_M) - F.count("*")).alias("zeros"),
-        F.sum(F.lit(1.0) / F.pow(F.lit(2.0), F.col("m_reg"))).alias("z_present"),
-    )
-    raw = F.lit(_Q83_ALPHA_M2) / (F.col("z_present") + F.col("zeros").cast("double"))
-    est = agg.select(
-        "event_type",
-        "v_registers",
-        "zeros",
-        F.round(
-            F.when(
-                (raw <= 2.5 * _Q83_M) & (F.col("zeros") > 0),
-                F.lit(float(_Q83_M)) * F.log(F.lit(float(_Q83_M)) / F.col("zeros")),
-            ).otherwise(raw),
-            6,
-        ).alias("est_distinct"),
-    )
-    exact = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("exact_distinct")
-    )
-    return est.join(exact, "event_type")
 
 
 # --------------------------------------------------------------------------
@@ -1323,144 +631,6 @@ def q84_repetition_rules(spark, sf_dir):
     )
     return scored.select(
         "*", keep.alias("keep"), reason.alias("reject_reason")
-    )
-
-
-# --------------------------------------------------------------------------
-# q85: COUNT-MIN SKETCH heavy hitters — the second deterministic sketch
-# family (q83 = HLL for distinct counts; CMS = frequency estimates).
-# D=4 hash rows x W=16 columns, every hash an engine-portable
-# md5-bucket of 'row:token' (never engine hash()); counter(r, c) sums
-# the token counts landing in (r, c), and a token's estimate is the MIN
-# over its D probes — always >= the true count, with the overcount
-# showing real collisions (the 31-token vocabulary over 16 columns
-# collides by construction, so the sketch property is exercised, not
-# vacuously zero). Scale shape: counters are ONE mergeable
-# groupBy(r, c) agg over D*W cells — at 100 TB the sketch is built
-# map-side and merged, never the vocabulary itself; the probe join
-# broadcasts the D*W-row counter table.
-_Q85_D = 4
-_Q85_W = 16
-_Q85_TOPK = 10
-
-_Q85_ORACLE = f"""
-WITH tf AS (
-  SELECT token, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-    SELECT unnest(string_split(text, ' ')) AS token FROM documents
-  ) WHERE token != '' GROUP BY token
-),
-cells AS (
-  SELECT r, {md5_bucket_sql("r || ':' || token", _Q85_W)} AS c,
-         SUM(cnt) AS counter
-  FROM tf, (SELECT UNNEST(range({_Q85_D})) AS r)
-  GROUP BY 1, 2
-),
-top AS (
-  SELECT token, cnt FROM tf ORDER BY cnt DESC, token LIMIT {_Q85_TOPK}
-),
-probes AS (
-  SELECT t.token, t.cnt, cl.counter
-  FROM top t, (SELECT UNNEST(range({_Q85_D})) AS r) rs
-  JOIN cells cl
-    ON cl.r = rs.r AND cl.c = {md5_bucket_sql("rs.r || ':' || t.token", _Q85_W)}
-)
-SELECT token, cnt AS true_cnt,
-       CAST(MIN(counter) AS BIGINT) AS est_cnt,
-       CAST(MIN(counter) - cnt AS BIGINT) AS overcount
-FROM probes GROUP BY token, cnt
-"""
-
-
-@register("q85_cms_heavy_hitters", oracle=_Q85_ORACLE)
-def q85_cms_heavy_hitters(spark, sf_dir):
-    from pyspark.sql.functions import broadcast
-
-    docs = load(spark, sf_dir, "documents")
-    tf = (
-        docs.select(F.explode(F.split("text", " ")).alias("token"))
-        .filter(F.col("token") != "")
-        .groupBy("token")
-        .agg(F.count("*").alias("cnt"))
-    )
-    probe_cols = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(r).alias("r"),
-                    md5_bucket(
-                        F.concat(F.lit(f"{r}:"), F.col("token")), _Q85_W
-                    ).alias("c"),
-                )
-                for r in range(_Q85_D)
-            ]
-        )
-    )
-    keyed = tf.select("token", "cnt", probe_cols.alias("p")).select(
-        "token", "cnt", "p.r", "p.c"
-    )
-    cells = keyed.groupBy("r", "c").agg(F.sum("cnt").alias("counter"))
-    top = tf.orderBy(F.desc("cnt"), F.asc("token")).limit(_Q85_TOPK)
-    top_probes = top.select("token", "cnt", probe_cols.alias("p")).select(
-        "token", "cnt", "p.r", "p.c"
-    )
-    return (
-        top_probes.join(broadcast(cells), ["r", "c"])
-        .groupBy("token", "cnt")
-        .agg(F.min("counter").alias("est_cnt"))
-        .select(
-            "token",
-            F.col("cnt").alias("true_cnt"),
-            "est_cnt",
-            (F.col("est_cnt") - F.col("cnt")).alias("overcount"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# q86: DETERMINISTIC WEIGHTED RESERVOIR SAMPLE (Efraimidis-Spirakis
-# A-ExpJ form) — per-language sample of k=5 docs with inclusion
-# probability proportional to n_chars: u = md5-uniform in (0, 1],
-# key = -ln(u) / weight, keep the k SMALLEST keys. md5-derived u makes
-# the sample reproducible across runs, engines, and partitionings
-# (never rand()); the key is scaled x1e6 and ROUND(...,6)-ed BEFORE
-# ordering (ln differs in the last ulp across engines) with doc_id as
-# the total-order tie-break. Scale shape: one shuffle on lang for the
-# top-k window — at 100 TB the same key supports per-partition
-# partial top-k then merge, because min-k of a union is min-k of
-# per-part min-ks.
-_Q86_K = 5
-
-_Q86_ORACLE = f"""
-WITH keyed AS (
-  SELECT lang, doc_id, n_chars,
-    ROUND(
-      -ln((({md5_bucket_sql("doc_id", 1 << 32)}) + 1.0) / 4294967296.0)
-      * 1000000.0 / n_chars, 6) AS samp_key
-  FROM documents
-)
-SELECT lang, doc_id, n_chars, samp_key, CAST(rk AS BIGINT) AS rk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (
-    PARTITION BY lang ORDER BY samp_key, doc_id) AS rk
-  FROM keyed
-) WHERE rk <= {_Q86_K}
-"""
-
-
-@register("q86_weighted_sample", oracle=_Q86_ORACLE)
-def q86_weighted_sample(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    u = (md5_bucket(F.col("doc_id"), 1 << 32) + 1.0) / 4294967296.0
-    keyed = docs.select(
-        "lang",
-        "doc_id",
-        "n_chars",
-        F.round(-F.log(u) * 1000000.0 / F.col("n_chars"), 6).alias("samp_key"),
-    )
-    w = Window.partitionBy("lang").orderBy("samp_key", "doc_id")
-    return (
-        keyed.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _Q86_K)
     )
 
 
@@ -1668,121 +838,3 @@ def q88_pmi_cooccurrence(spark, sf_dir):
     )
 
 
-# --------------------------------------------------------------------------
-# q89: EQUI-WIDTH HISTOGRAM QUANTILE SKETCH — the third sketch family
-# member (q83 HLL = distinct counts, q85 CMS = frequencies, q89 =
-# quantiles): per-language approximate p50/p90/p99 of n_chars from a
-# W=16-wide bin histogram, answering the quantile question a 100 TB
-# run cannot sort for. The estimate is the upper edge of the first bin
-# whose cumulative count reaches ceil(q * total) — every step is
-# INTEGER math (bin = n_chars div W), so the sketch is bit-exact
-# across engines with no rounding discipline needed; ceil(q*total)
-# computes the same double product from the same operands in both.
-# Scale shape: ONE mergeable groupBy(lang, bin) agg (the histogram),
-# then windows/aggregates over bin-grain data only (~35 bins here) —
-# histograms merge by adding counts, the map-side-combine sketch
-# property. Accuracy is +-W by construction.
-_Q89_W = 16
-
-_Q89_ORACLE = f"""
-WITH hist AS (
-  SELECT lang, n_chars // {_Q89_W} AS bin, COUNT(*) AS cnt
-  FROM documents GROUP BY 1, 2
-),
-cum AS (
-  SELECT lang, bin, cnt,
-    SUM(cnt) OVER (PARTITION BY lang ORDER BY bin) AS cum,
-    SUM(cnt) OVER (PARTITION BY lang) AS total
-  FROM hist
-)
-SELECT lang, CAST(MAX(total) AS BIGINT) AS n_docs,
-  CAST(MIN(CASE WHEN cum >= CAST(CEIL(0.5 * total) AS BIGINT)
-       THEN (bin + 1) * {_Q89_W} - 1 END) AS BIGINT) AS est_p50,
-  CAST(MIN(CASE WHEN cum >= CAST(CEIL(0.9 * total) AS BIGINT)
-       THEN (bin + 1) * {_Q89_W} - 1 END) AS BIGINT) AS est_p90,
-  CAST(MIN(CASE WHEN cum >= CAST(CEIL(0.99 * total) AS BIGINT)
-       THEN (bin + 1) * {_Q89_W} - 1 END) AS BIGINT) AS est_p99
-FROM cum GROUP BY lang
-"""
-
-
-@register("q89_histogram_quantiles", oracle=_Q89_ORACLE)
-def q89_histogram_quantiles(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    hist = (
-        docs.select("lang", F.expr(f"n_chars div {_Q89_W}").alias("bin"))
-        .groupBy("lang", "bin")
-        .agg(F.count("*").alias("cnt"))
-    )
-    w_cum = Window.partitionBy("lang").orderBy("bin")
-    w_all = Window.partitionBy("lang")
-    cum = hist.select(
-        "lang",
-        "bin",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(w_all).alias("total"),
-    )
-
-    def est(q):
-        k = F.ceil(F.lit(q) * F.col("total")).cast("long")
-        edge = (F.col("bin") + 1) * _Q89_W - 1
-        return F.min(F.when(F.col("cum") >= k, edge))
-
-    return cum.groupBy("lang").agg(
-        F.max("total").alias("n_docs"),
-        est(0.5).alias("est_p50"),
-        est(0.9).alias("est_p90"),
-        est(0.99).alias("est_p99"),
-    )
-
-
-# --------------------------------------------------------------------------
-# q90: TEMPERATURE-SCALED MIXTURE WEIGHTS — the data-mixing step of a
-# multilingual training pipeline (mT5 / XLM-R style): per-language
-# sampling weight w_l proportional to n_l^alpha with alpha = 0.5, which
-# up-weights low-resource languages relative to their raw share, plus
-# the resulting expected epochs-per-document for a fixed sampling
-# budget (how many times each 'fr' doc is seen vs each 'en' doc).
-# Numeric discipline: alpha = 0.5 exactly so the power IS SQRT — IEEE
-# requires sqrt correctly rounded, so Spark and DuckDB agree bit-exact
-# (POW carries no such guarantee); the sqrt is ROUND(...,4)-ed into
-# DECIMAL(18,4) so the normalizing sum is exact decimal addition in
-# any order, and the final double divisions round once at 6 dp.
-# Scale shape: ONE mergeable groupBy(lang) count/sum over the corpus,
-# then a global window over the post-agg lang-grain micro-set (5 rows
-# here, bounded by distinct languages) — the q33 share-of-total shape,
-# benign by construction.
-_Q90_BUDGET = 1_000_000
-
-_Q90_ORACLE = f"""
-WITH s AS (
-  SELECT lang, COUNT(*) AS n_docs, SUM(n_chars) AS total_chars,
-         CAST(ROUND(SQRT(COUNT(*)), 4) AS DECIMAL(18,4)) AS p
-  FROM documents GROUP BY lang
-)
-SELECT lang, n_docs, total_chars,
-  ROUND(CAST(p AS DOUBLE) / CAST(SUM(p) OVER () AS DOUBLE), 6) AS mix_weight,
-  ROUND(((CAST(p AS DOUBLE) / CAST(SUM(p) OVER () AS DOUBLE))
-         * {_Q90_BUDGET}) / n_docs, 6) AS epochs_per_doc
-FROM s
-"""
-
-
-@register("q90_mixture_weights", oracle=_Q90_ORACLE)
-def q90_mixture_weights(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    agg = docs.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.round(F.sqrt(F.count("*")), 4).cast("decimal(18,4)").alias("p"),
-    )
-    p_dbl = F.col("p").cast("double")
-    tot_dbl = F.sum("p").over(Window.partitionBy()).cast("double")
-    w = p_dbl / tot_dbl
-    return agg.select(
-        "lang",
-        "n_docs",
-        "total_chars",
-        F.round(w, 6).alias("mix_weight"),
-        F.round((w * _Q90_BUDGET) / F.col("n_docs"), 6).alias("epochs_per_doc"),
-    )

@@ -137,177 +137,6 @@ def q91_ngram_decontamination(spark, sf_dir):
         (frac <= _Q91_MAX_FRAC).alias("keep"),
     )
 
-# --------------------------------------------------------------------------
-# q92: CITATION ASSEMBLY — the deterministic analog of the reference's
-# source-attribution step (_generate_citations,
-# /root/reference/src/rag/rag_pipeline.py:620-638, and _build_context's
-# "Source N (filename, Page P, Type):" formatting at :587-607): the
-# retrieved+reranked+budgeted chunks from q58 are ranked, hydrated from
-# the documents table, and rendered as one citation row each. Field
-# analogs on this corpus: filename = 'doc_<id>.pdf'; page_number the
-# deterministic doc_id%40+1 (the flat corpus carries no page metadata);
-# content_type = source; similarity_score = rerank_score;
-# confidence_score = the repo's q47 convention least(n_chars/1000, 1).
-# Scale shape: q58's output is a <=10-row context set -> every join
-# here broadcasts it; the big documents table never shuffles.
-_Q92_ORACLE = None  # assigned below (needs wave5's q58 oracle)
-
-
-def _q92_oracle() -> str:
-    from sparkextract.queries.wave5 import _Q58_ORACLE
-
-    return f"""
-WITH retrieved AS (
-  {_Q58_ORACLE}
-),
-ranked AS (
-  SELECT vec_id, rerank_score,
-         CAST(ROW_NUMBER() OVER (ORDER BY rerank_score DESC, vec_id ASC) AS INT)
-           AS cite_index
-  FROM retrieved
-)
-SELECT r.cite_index,
-       'doc_' || CAST(r.vec_id AS VARCHAR) || '.pdf' AS filename,
-       CAST(r.vec_id % 40 + 1 AS INT) AS page_number,
-       d.source AS content_type,
-       r.rerank_score AS similarity_score,
-       ROUND(LEAST(d.n_chars / 1000.0, 1.0), 6) AS confidence_score,
-       'Source ' || CAST(r.cite_index AS VARCHAR)
-         || ' (doc_' || CAST(r.vec_id AS VARCHAR) || '.pdf, Page '
-         || CAST(r.vec_id % 40 + 1 AS VARCHAR) || ', ' || d.source || ')'
-         AS citation
-FROM ranked r JOIN documents d ON d.doc_id = r.vec_id
-"""
-
-
-@register("q92_citation_assembly", oracle=_q92_oracle())
-def q92_citation_assembly(spark, sf_dir):
-    from sparkextract.queries.wave5 import q58_retrieval_pipeline
-
-    retrieved = q58_retrieval_pipeline(spark, sf_dir)
-    w = Window.orderBy(F.desc("rerank_score"), F.asc("vec_id"))
-    ranked = retrieved.select(
-        "vec_id", "rerank_score", F.row_number().over(w).cast("int").alias("cite_index")
-    )
-    docs = load(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    page = (F.col("vec_id") % 40 + 1).cast("int")
-    filename = F.concat(F.lit("doc_"), F.col("vec_id").cast("string"), F.lit(".pdf"))
-    return docs.join(
-        F.broadcast(ranked), docs["doc_id"] == ranked["vec_id"]
-    ).select(
-        "cite_index",
-        filename.alias("filename"),
-        page.alias("page_number"),
-        F.col("source").alias("content_type"),
-        F.col("rerank_score").alias("similarity_score"),
-        F.round(F.least(F.col("n_chars") / 1000.0, F.lit(1.0)), 6).alias(
-            "confidence_score"
-        ),
-        F.concat(
-            F.lit("Source "), F.col("cite_index").cast("string"),
-            F.lit(" ("), filename, F.lit(", Page "), page.cast("string"),
-            F.lit(", "), F.col("source"), F.lit(")"),
-        ).alias("citation"),
-    )
-
-
-# --------------------------------------------------------------------------
-# q93: QUERY EXPANSION — the deterministic analog of the reference's
-# LLM query expansion (generate_query_expansion,
-# /root/reference/src/rag/ollama_client.py:323-348): the LLM's "2-3
-# alternative phrasings" become the top-2 corpus-co-occurring tokens per
-# query term (presence-based document co-occurrence, df_ab desc with
-# token tie-break), each appended to the original query; the original
-# query rides along as variant 0 exactly like the reference's
-# [original] + expansions. The q74/F8 porting pattern: deterministic
-# heuristic in, LLM serving out.
-# Scale shape: the query-term table is tiny -> broadcast into the
-# token-presence table; the only shuffles are the (term, tok)
-# co-occurrence agg and the per-term top-k window — both key-partitioned.
-_Q93_QUERY = "table join window filter merge"
-_Q93_TOPK = 2
-
-_Q93_ORACLE = f"""
-WITH dt AS (
-  SELECT DISTINCT doc_id, t AS tok FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents
-  ) WHERE t != ''
-),
-qt AS (SELECT unnest(string_split('{_Q93_QUERY}', ' ')) AS term),
-hits AS (
-  SELECT q.term, d.doc_id FROM qt q JOIN dt d ON d.tok = q.term
-),
-co AS (
-  SELECT h.term, d.tok, CAST(COUNT(*) AS BIGINT) AS df_ab
-  FROM hits h JOIN dt d ON d.doc_id = h.doc_id
-  WHERE d.tok <> h.term AND d.tok NOT IN (SELECT term FROM qt)
-  GROUP BY h.term, d.tok
-),
-ranked AS (
-  SELECT term, tok, df_ab,
-         ROW_NUMBER() OVER (PARTITION BY term ORDER BY df_ab DESC, tok ASC) AS rk
-  FROM co
-)
-SELECT CAST(0 AS INT) AS variant_rank, '' AS base_term, '' AS added_token,
-       CAST(0 AS BIGINT) AS df_ab, '{_Q93_QUERY}' AS expanded_query
-UNION ALL
-SELECT CAST(rk AS INT) AS variant_rank, term AS base_term, tok AS added_token,
-       df_ab, '{_Q93_QUERY} ' || tok AS expanded_query
-FROM ranked WHERE rk <= {_Q93_TOPK}
-"""
-
-
-@register("q93_query_expansion", oracle=_Q93_ORACLE)
-def q93_query_expansion(spark, sf_dir):
-    from sparkextract.queries.base import checkpoint_memo
-
-    # the token-presence table feeds BOTH the term-hit join and the
-    # co-occurrence join (sibling subtrees — AQE shares no exchange
-    # across them), so it is materialized once per session+input; at
-    # real scale this is the inverted-index build a retrieval system
-    # persists anyway
-    dt = checkpoint_memo(
-        spark,
-        sf_dir,
-        "q93_dt",
-        lambda: load(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .distinct(),
-    )
-    terms = _Q93_QUERY.split(" ")
-    qt = F.broadcast(
-        dt.sparkSession.createDataFrame([(t,) for t in terms], "term string")
-    )
-    hits = qt.join(dt.withColumnRenamed("tok", "term"), "term").select(
-        "term", "doc_id"
-    )
-    co = (
-        hits.join(dt, "doc_id")
-        .filter(F.col("tok") != F.col("term"))
-        .filter(~F.col("tok").isin(terms))
-        .groupBy("term", "tok")
-        .agg(F.count("*").alias("df_ab"))
-    )
-    w = Window.partitionBy("term").orderBy(F.desc("df_ab"), F.asc("tok"))
-    ranked = (
-        co.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _Q93_TOPK)
-        .select(
-            F.col("rk").cast("int").alias("variant_rank"),
-            F.col("term").alias("base_term"),
-            F.col("tok").alias("added_token"),
-            "df_ab",
-            F.concat(F.lit(_Q93_QUERY + " "), F.col("tok")).alias("expanded_query"),
-        )
-    )
-    original = dt.sparkSession.createDataFrame(
-        [(0, "", "", 0, _Q93_QUERY)],
-        "variant_rank int, base_term string, added_token string, "
-        "df_ab long, expanded_query string",
-    )
-    return original.unionByName(ranked)
-
 
 # --------------------------------------------------------------------------
 # q94: END-TO-END CORPUS CLEAN — the flagship composition: REAL
@@ -675,167 +504,6 @@ def q96_block_dedup(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# q97: PII REDACTION — the scrub pass every public-web training corpus
-# runs before tokenization: emails and phone-shaped strings are replaced
-# by typed placeholder tags and counted per document. The corpus carries
-# no natural PII, so deterministic PII is injected first (doc_id%7 adds
-# an email, doc_id%13 adds a phone — the q68 injection pattern); the
-# operator is the redaction itself. Patterns stay in the portable
-# regex subset (character classes, +, {m,n}, \b) that Java regex (Spark)
-# and RE2 (DuckDB) evaluate identically. Reference analog: the OCR
-# text-clean regex chain (/root/reference/src/utils/validation.py via
-# core/normalize.py:42) applied to privacy scrubbing.
-# Scale shape: map-only — one scan, zero shuffles at any corpus size.
-_Q97_EMAIL_RE = r"[a-z0-9._]+@[a-z0-9.-]+\.[a-z]{2,}"
-_Q97_PHONE_RE = r"\b555-[0-9]{4}\b"
-
-_Q97_CORPUS = """
-  SELECT doc_id,
-         text || CASE WHEN doc_id % 7 = 0
-                      THEN ' contact user' || CAST(doc_id AS VARCHAR)
-                           || '@example.com now'
-                      ELSE '' END
-              || CASE WHEN doc_id % 13 = 0
-                      THEN ' call 555-' || SUBSTRING(
-                             CAST(10000 + doc_id % 10000 AS VARCHAR), 2, 4)
-                      ELSE '' END AS text
-  FROM documents
-"""
-
-_Q97_ORACLE = f"""
-WITH corpus AS (
-  {_Q97_CORPUS}
-)
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text, '{_Q97_EMAIL_RE}')) AS INT) AS n_emails,
-       CAST(len(regexp_extract_all(text, '{_Q97_PHONE_RE}')) AS INT) AS n_phones,
-       (len(regexp_extract_all(text, '{_Q97_EMAIL_RE}'))
-        + len(regexp_extract_all(text, '{_Q97_PHONE_RE}'))) > 0 AS has_pii,
-       md5(regexp_replace(regexp_replace(text, '{_Q97_EMAIL_RE}', '<EMAIL>', 'g'),
-                          '{_Q97_PHONE_RE}', '<PHONE>', 'g')) AS redacted_md5
-FROM corpus
-"""
-
-
-@register("q97_pii_redaction", oracle=_Q97_ORACLE)
-def q97_pii_redaction(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    phone4 = F.substring(
-        (10000 + F.col("doc_id") % 10000).cast("string"), 2, 4
-    )
-    text = F.concat(
-        F.col("text"),
-        F.when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(
-                F.lit(" contact user"),
-                F.col("doc_id").cast("string"),
-                F.lit("@example.com now"),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 13 == 0, F.concat(F.lit(" call 555-"), phone4))
-        .otherwise(F.lit("")),
-    )
-    n_emails = F.regexp_count(text, F.lit(_Q97_EMAIL_RE)).cast("int")
-    n_phones = F.regexp_count(text, F.lit(_Q97_PHONE_RE)).cast("int")
-    redacted = F.regexp_replace(
-        F.regexp_replace(text, _Q97_EMAIL_RE, "<EMAIL>"), _Q97_PHONE_RE, "<PHONE>"
-    )
-    return docs.select(
-        "doc_id",
-        n_emails.alias("n_emails"),
-        n_phones.alias("n_phones"),
-        ((n_emails + n_phones) > 0).alias("has_pii"),
-        F.md5(redacted).alias("redacted_md5"),
-    )
-
-
-# --------------------------------------------------------------------------
-# q98: DOMAIN-LEVEL FILTERING + ROLLUP — the web-pipeline step that
-# scores and gates whole domains (spam/SEO domains are dropped as a
-# unit, per-domain quotas cap crawl skew). Each doc carries a
-# deterministic synthetic URL; the DOMAIN IS PARSED FROM THE URL STRING
-# (split on '/'), never recomputed from doc_id — string parsing is the
-# operator. The blocklist is the md5-bucket(domain)%11==0 slice,
-# applied as a BROADCAST ANTI-JOIN (a real blocklist is a curated list,
-# not a predicate). Output: per surviving domain, doc count, total
-# chars, mean quality. Reference analog: content-type/min-confidence
-# retrieval filters (/root/reference/src/rag/vector_store.py filters)
-# lifted to domain grain.
-# Scale shape: one groupBy(domain) keyed shuffle; the blocklist is a
-# CURATED EXTERNAL LIST (built driver-side from the known domain
-# universe, exactly how a real blocklist arrives) so the corpus is
-# scanned once — deriving it from the corpus would either re-scan or
-# rely on ReuseExchange firing across sibling subtrees (it doesn't
-# under AQE). The anti-join broadcasts the list; at web scale
-# (~millions of domains) it still broadcasts, or at worst falls back
-# to a keyed join on the ALREADY-AGGREGATED domain grain, never the
-# doc grain.
-_Q98_DOMAINS = 97
-_Q98_BLOCK_BUCKETS = 11
-
-_Q98_URLS = f"""
-  SELECT doc_id, n_chars,
-         'https://site' || CAST(doc_id % {_Q98_DOMAINS} AS VARCHAR)
-           || '.example.com/p/' || CAST(doc_id AS VARCHAR) AS url
-  FROM documents
-"""
-
-_Q98_ORACLE = f"""
-WITH urls AS (
-  {_Q98_URLS}
-),
-parsed AS (
-  SELECT doc_id, n_chars, split_part(url, '/', 3) AS domain FROM urls
-),
-per_domain AS (
-  SELECT domain,
-         CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-         ROUND(SUM(n_chars) * 1.0 / COUNT(*), 6) AS mean_chars
-  FROM parsed GROUP BY domain
-)
-SELECT domain, n_docs, total_chars, mean_chars
-FROM per_domain
-WHERE {md5_bucket_sql("domain", _Q98_BLOCK_BUCKETS)} <> 0
-"""
-
-
-@register("q98_domain_rollup", oracle=_Q98_ORACLE)
-def q98_domain_rollup(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        "n_chars",
-        F.concat(
-            F.lit("https://site"),
-            (F.col("doc_id") % _Q98_DOMAINS).cast("string"),
-            F.lit(".example.com/p/"),
-            F.col("doc_id").cast("string"),
-        ).alias("url"),
-    )
-    parsed = docs.select(
-        "n_chars", F.element_at(F.split("url", "/"), 3).alias("domain")
-    )
-    per_domain = parsed.groupBy("domain").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.round(F.sum("n_chars").cast("double") / F.count("*"), 6).alias(
-            "mean_chars"
-        ),
-    )
-    import hashlib
-
-    blocked = [
-        (d,)
-        for i in range(_Q98_DOMAINS)
-        for d in [f"site{i}.example.com"]
-        if int(hashlib.md5(d.encode()).hexdigest()[:8], 16) % _Q98_BLOCK_BUCKETS == 0
-    ]
-    blocklist = spark.createDataFrame(blocked, "domain string")
-    return per_domain.join(F.broadcast(blocklist), "domain", "left_anti")
-
-
-# --------------------------------------------------------------------------
 # q99: EXACT-SUBSTRING SELF-DEDUP — the ExactSubstr check of
 # "Deduplicating Training Data Makes Language Models Better" (Lee et
 # al., 2022) at K-token-window grain: a window is duplicated if the
@@ -926,249 +594,6 @@ def q99_exact_substring_dedup(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# q100: SEQUENCE PACKING — the GPT-style pretraining layout pass:
-# documents are concatenated into a token stream per shard and the
-# stream is cut into fixed CTX-token training windows; the operator
-# reports each document's position in the stream and which windows it
-# spans (a doc straddling a window boundary is split across examples —
-# the packing bookkeeping a data loader needs). Shard = md5 bucket of
-# doc_id; within a shard the order is (n_tokens DESC, doc_id) —
-# deterministic, and size-descending keeps long docs from straddling
-# more windows than necessary.
-# Scale shape: ONE keyed shuffle (shard) + an in-shard sort window for
-# the running sum; shard count scales with the corpus so per-shard
-# state is bounded. No joins, no driver state.
-_Q100_CTX = 256
-_Q100_SHARDS = 8
-
-_Q100_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id,
-         {md5_bucket_sql("doc_id", _Q100_SHARDS)} AS shard,
-         len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_tokens
-  FROM documents
-),
-pos AS (
-  SELECT doc_id, CAST(shard AS INT) AS shard, CAST(n_tokens AS BIGINT) AS n_tokens,
-         SUM(n_tokens) OVER (PARTITION BY shard
-                             ORDER BY n_tokens DESC, doc_id
-                             ROWS UNBOUNDED PRECEDING) AS cum
-  FROM t WHERE n_tokens >= 1
-)
-SELECT doc_id, shard, n_tokens,
-       CAST(cum - n_tokens AS BIGINT) AS start_pos,
-       CAST((cum - n_tokens) // {_Q100_CTX} AS INT) AS first_window,
-       CAST((cum - 1) // {_Q100_CTX} AS INT) AS last_window,
-       CAST((cum - 1) // {_Q100_CTX} - (cum - n_tokens) // {_Q100_CTX} + 1 AS INT)
-         AS n_windows
-FROM pos
-"""
-
-
-@register("q100_sequence_packing", oracle=_Q100_ORACLE)
-def q100_sequence_packing(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
-    t = docs.select(
-        "doc_id",
-        md5_bucket(F.col("doc_id"), _Q100_SHARDS).cast("int").alias("shard"),
-        F.size(toks).cast("long").alias("n_tokens"),
-    ).filter(F.col("n_tokens") >= 1)
-    w = (
-        Window.partitionBy("shard")
-        .orderBy(F.desc("n_tokens"), F.asc("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum("n_tokens").over(w)
-    start = (cum - F.col("n_tokens")).cast("long")
-    first_w = F.floor(start / _Q100_CTX).cast("int")
-    last_w = F.floor((cum - 1) / _Q100_CTX).cast("int")
-    return t.select(
-        "doc_id",
-        "shard",
-        "n_tokens",
-        start.alias("start_pos"),
-        first_w.alias("first_window"),
-        last_w.alias("last_window"),
-        (last_w - first_w + 1).cast("int").alias("n_windows"),
-    )
-
-
-# --------------------------------------------------------------------------
-# q101: LEAKAGE-SAFE TRAIN/VAL/TEST SPLIT — a naive per-doc random
-# split leaks near-duplicates across the boundary (the test set scores
-# inflate because a sibling of every test doc sits in train); the
-# correct split assigns the WHOLE near-dup cluster one way, keyed on
-# the cluster's survivor id. Reuses q71's connected components over
-# the q53 banded-LSH pairs (memoized per session+input) and q78's
-# md5-bucket determinism: buckets 0-7 train, 8 val, 9 test.
-# Scale shape: the label frame is clustered nodes only (a tiny
-# fraction of the corpus) -> broadcast left join; the split assignment
-# is map-only on top.
-_Q101_BUCKETS = 10
-
-_Q101_ORACLE = None  # built below from q71's recursive-CTE components
-
-
-def _q101_oracle() -> str:
-    from sparkextract.queries.round3 import _Q71_ORACLE
-
-    split_case = f"""CASE
-      WHEN {md5_bucket_sql("COALESCE(c.component, e.vec_id)", _Q101_BUCKETS)} <= 7
-        THEN 'train'
-      WHEN {md5_bucket_sql("COALESCE(c.component, e.vec_id)", _Q101_BUCKETS)} = 8
-        THEN 'val'
-      ELSE 'test' END"""
-    return f"""
-WITH comp AS (
-  SELECT vec_id, component FROM ({_Q71_ORACLE}) _c
-)
-SELECT e.vec_id,
-       COALESCE(c.component, e.vec_id) AS cluster_id,
-       (c.component IS NOT NULL) AS in_cluster,
-       {split_case} AS split
-FROM embeddings e
-LEFT JOIN comp c ON c.vec_id = e.vec_id
-"""
-
-
-@register("q101_leakage_safe_split", oracle=_q101_oracle())
-def q101_leakage_safe_split(spark, sf_dir):
-    from sparkextract.queries.round3 import _dup_components
-
-    labels = _dup_components(spark, sf_dir).select(
-        F.col("id").alias("c_vec_id"), F.col("lbl").alias("component")
-    )
-    emb = load(spark, sf_dir, "embeddings")
-    cluster = F.coalesce("component", "vec_id")
-    b = md5_bucket(cluster, _Q101_BUCKETS)
-    split = (
-        F.when(b <= 7, F.lit("train")).when(b == 8, F.lit("val")).otherwise(
-            F.lit("test")
-        )
-    )
-    return emb.join(
-        F.broadcast(labels), emb["vec_id"] == labels["c_vec_id"], "left"
-    ).select(
-        "vec_id",
-        cluster.alias("cluster_id"),
-        F.col("component").isNotNull().alias("in_cluster"),
-        split.alias("split"),
-    )
-
-
-# --------------------------------------------------------------------------
-# q102: INT8 EMBEDDING QUANTIZATION — the memory-scale path for
-# similarity search (a 100 TB embedding store is 4x smaller at int8;
-# FAISS SQ8 / pgvector halfvec ship exactly this): per-vector min/max
-# scalar quantization to 8-bit codes, midpoint dequantization, and the
-# top-10 neighbors ranked by QUANTIZED cosine with the exact cosine
-# alongside — the ranking-degradation evidence a recall report needs.
-# Reference analog: the pgvector embedding store + cosine retrieval
-# (/root/reference/src/rag/vector_store.py) with the storage format
-# dropped from float32 to int8.
-# Determinism: codes are floor((x-min)/scale) over doubles — identical
-# IEEE ops in both engines (never round(), whose tie rule differs);
-# cosines fold in element order and are ROUND(...,6)-ed before the
-# ORDER BY with a vec_id tie-break.
-# Scale shape: quantization is map-only; the query vector broadcasts
-# (1 row); top-k is TakeOrderedAndProject — the q27 no-shuffle shape.
-_Q102_LEVELS = 255
-
-_Q102_DEQ = f"""
-  SELECT vec_id, label,
-         CASE WHEN list_max(embedding) = list_min(embedding)
-              THEN list_transform(embedding, x -> CAST(list_min(embedding) AS DOUBLE))
-              ELSE list_transform(embedding, x ->
-                CAST(list_min(embedding) AS DOUBLE)
-                + (LEAST({_Q102_LEVELS}, GREATEST(0, floor(
-                     (CAST(x AS DOUBLE) - CAST(list_min(embedding) AS DOUBLE))
-                     / ((CAST(list_max(embedding) AS DOUBLE)
-                         - CAST(list_min(embedding) AS DOUBLE)) / {_Q102_LEVELS}))))
-                   + 0.5)
-                  * ((CAST(list_max(embedding) AS DOUBLE)
-                      - CAST(list_min(embedding) AS DOUBLE)) / {_Q102_LEVELS}))
-         END AS deq,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ex
-  FROM embeddings
-"""
-
-
-def _q102_cos_sql(a: str, b: str) -> str:
-    from sparkextract.queries.vector import _DIM
-
-    def dot(u, v):
-        return (
-            f"list_sum(list_transform(range(1, {_DIM + 1}),"
-            f" i -> {u}[i] * {v}[i]))"
-        )
-
-    return f"ROUND({dot(a, b)} / (sqrt({dot(a, a)}) * sqrt({dot(b, b)})), 6)"
-
-
-_Q102_ORACLE = f"""
-WITH deq AS (
-  {_Q102_DEQ}
-),
-q AS (SELECT deq AS qd, ex AS qe FROM deq WHERE vec_id = 0)
-SELECT d.vec_id, d.label,
-       {_q102_cos_sql("d.deq", "q.qd")} AS cos_quant,
-       {_q102_cos_sql("d.ex", "q.qe")} AS cos_exact
-FROM deq d, q
-WHERE d.vec_id != 0
-ORDER BY cos_quant DESC, d.vec_id ASC
-LIMIT 10
-"""
-
-
-def _q102_deq_col():
-    lo = F.array_min("embedding").cast("double")
-    hi = F.array_max("embedding").cast("double")
-    scale = (hi - lo) / _Q102_LEVELS
-    code = lambda x: F.least(  # noqa: E731
-        F.lit(_Q102_LEVELS),
-        F.greatest(F.lit(0), F.floor((x.cast("double") - lo) / scale)),
-    )
-    return F.when(hi == lo, F.transform("embedding", lambda x: lo)).otherwise(
-        F.transform("embedding", lambda x: lo + (code(x) + 0.5) * scale)
-    )
-
-
-@register("q102_int8_quantization", oracle=_Q102_ORACLE)
-def q102_int8_quantization(spark, sf_dir):
-    from sparkextract.queries.vector import _dot, _norm
-
-    emb = load(spark, sf_dir, "embeddings")
-    deq = emb.select(
-        "vec_id",
-        "label",
-        _q102_deq_col().alias("deq"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("ex"),
-    )
-    q = F.broadcast(
-        deq.filter(F.col("vec_id") == 0).select(
-            F.col("deq").alias("qd"), F.col("ex").alias("qe")
-        )
-    )
-
-    def cos(a, b):
-        return F.round(_dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b))), 6)
-
-    return (
-        deq.filter(F.col("vec_id") != 0)
-        .crossJoin(q)
-        .select(
-            "vec_id",
-            "label",
-            cos("deq", "qd").alias("cos_quant"),
-            cos("ex", "qe").alias("cos_exact"),
-        )
-        .orderBy(F.desc("cos_quant"), F.asc("vec_id"))
-        .limit(10)
-    )
-
-
-# --------------------------------------------------------------------------
 # q103: SNAPSHOT DIFF (CDC) — the incremental-ingest primitive of a
 # lakehouse corpus: given the previous snapshot and the current one,
 # classify every doc as added / changed / unchanged by content hash and
@@ -1182,19 +607,19 @@ def q102_int8_quantization(spark, sf_dir):
 # Scale shape: ONE equi-join on doc_id between two corpus-sized sides —
 # co-partitioned keyed shuffle (or zero shuffle when both snapshots are
 # bucketed by doc_id in the lake); the hash compare is map-side.
-_Q103_BUCKETS = 10
+_SNAPSHOT_BUCKETS = 10
 
-_Q103_OLD = f"""
+_SNAPSHOT_OLD = f"""
   SELECT doc_id,
-         CASE WHEN {md5_bucket_sql("doc_id", _Q103_BUCKETS)} = 1
+         CASE WHEN {md5_bucket_sql("doc_id", _SNAPSHOT_BUCKETS)} = 1
               THEN 'stale ' || text ELSE text END AS text
   FROM documents
-  WHERE {md5_bucket_sql("doc_id", _Q103_BUCKETS)} <> 0
+  WHERE {md5_bucket_sql("doc_id", _SNAPSHOT_BUCKETS)} <> 0
 """
 
-_Q103_ORACLE = f"""
+_SNAPSHOT_DIFF_ORACLE = f"""
 WITH old AS (
-  {_Q103_OLD}
+  {_SNAPSHOT_OLD}
 )
 SELECT n.doc_id,
        CASE WHEN o.doc_id IS NULL THEN 'added'
@@ -1206,10 +631,9 @@ FROM documents n LEFT JOIN old o ON o.doc_id = n.doc_id
 """
 
 
-@register("q103_snapshot_diff", oracle=_Q103_ORACLE)
-def q103_snapshot_diff(spark, sf_dir):
+def snapshot_diff(spark, sf_dir):
     new = load(spark, sf_dir, "documents").select("doc_id", "text")
-    b = md5_bucket(F.col("doc_id"), _Q103_BUCKETS)
+    b = md5_bucket(F.col("doc_id"), _SNAPSHOT_BUCKETS)
     old = (
         new.filter(b != 0)
         .select(
@@ -1258,7 +682,6 @@ def q103_snapshot_diff(spark, sf_dir):
 # corpus shuffles only for the final doc_id rollup.
 _Q104_K = 13
 _Q104_BITS = 131072
-_Q104_WORDS = _Q104_BITS // 64
 _Q104_EVAL_BUCKETS = 20  # same eval slice as q91
 
 
@@ -1496,11 +919,11 @@ def q105_deterministic_shuffle(spark, sf_dir):
 _Q106_ORACLE = f"""
 WITH status AS (
   SELECT doc_id,
-         CASE WHEN {md5_bucket_sql("doc_id", _Q103_BUCKETS)} = 0 THEN 'added'
+         CASE WHEN {md5_bucket_sql("doc_id", _SNAPSHOT_BUCKETS)} = 0 THEN 'added'
               ELSE 'changed' END AS status,
          n_chars
   FROM documents
-  WHERE {md5_bucket_sql("doc_id", _Q103_BUCKETS)} IN (0, 1)
+  WHERE {md5_bucket_sql("doc_id", _SNAPSHOT_BUCKETS)} IN (0, 1)
 )
 SELECT doc_id, status,
        CAST(CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END
@@ -1515,7 +938,7 @@ def q106_incremental_extraction(spark, sf_dir):
     from sparkextract.queries.extraction import wrap_docs
     from sparkextract.spark.job import extract_exploded
 
-    diff = q103_snapshot_diff(spark, sf_dir)
+    diff = snapshot_diff(spark, sf_dir)
     todo = diff.filter("needs_extraction").select("doc_id")
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     ext_in = docs.join(todo, "doc_id")
@@ -1529,7 +952,7 @@ def q106_incremental_extraction(spark, sf_dir):
     # so it is re-derived map-side here instead of joining the diff a
     # second time — one fewer pass over both snapshot subtrees.
     status = F.when(
-        md5_bucket(F.col("doc_id"), _Q103_BUCKETS) == 0, F.lit("added")
+        md5_bucket(F.col("doc_id"), _SNAPSHOT_BUCKETS) == 0, F.lit("added")
     ).otherwise(F.lit("changed"))
     return todo.join(counts, "doc_id", "left").select(
         "doc_id",
@@ -1538,120 +961,3 @@ def q106_incremental_extraction(spark, sf_dir):
     )
 
 
-# --------------------------------------------------------------------------
-# q107: LSH PRECISION/RECALL EVAL — the quality harness every
-# approximate-dedup deployment needs: banded-LSH candidate pairs (q53)
-# are scored against EXACT all-pairs cosine ground truth on a bounded
-# evaluation subset (the standard sampled-ground-truth protocol: exact
-# all-pairs is O(S^2) and runs only on the sample, exactly like q50's
-# ANN recall query set). The subset is base vec_id < 250 of q53's
-# corpus INCLUDING its injected perturbed twins (+1,000,000 ids,
-# first coordinate +0.25 — dedup2.py:236-247; the natural corpus has
-# zero >=0.8 pairs, measured) so both precision and recall are
-# exercised against real positives.
-# Scale shape: the q53 candidate side keeps its banded shape; the
-# exact side is a broadcast self-join of the <=S+S/7-row sample.
-_Q107_SUB = 250
-
-_Q107_ORACLE = f"""
-WITH sub AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings WHERE vec_id < {_Q107_SUB}
-  UNION ALL
-  SELECT vec_id + 1000000,
-         list_transform(range(1, 65),
-           i -> CASE WHEN i = 1 THEN CAST(embedding[1] AS DOUBLE) + 0.25
-                     ELSE CAST(embedding[i] AS DOUBLE) END)
-  FROM embeddings WHERE vec_id % 7 = 0 AND vec_id < {_Q107_SUB}
-),
-truth AS (
-  SELECT x.vec_id AS l, y.vec_id AS r
-  FROM sub x JOIN sub y ON x.vec_id < y.vec_id
-  WHERE ROUND(
-    list_sum(list_transform(range(1, 65), i -> x.e[i] * y.e[i]))
-    / (sqrt(list_sum(list_transform(range(1, 65), i -> x.e[i] * x.e[i])))
-     * sqrt(list_sum(list_transform(range(1, 65), i -> y.e[i] * y.e[i])))),
-    6) >= 0.8
-),
-cand AS (
-  SELECT left_id AS l, right_id AS r FROM ({{Q53}}) _q53
-  WHERE left_id % 1000000 < {_Q107_SUB} AND right_id % 1000000 < {_Q107_SUB}
-),
-hit AS (SELECT t.l, t.r FROM truth t JOIN cand c ON t.l = c.l AND t.r = c.r)
-SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth,
-       CAST((SELECT COUNT(*) FROM cand) AS BIGINT) AS n_candidates,
-       CAST((SELECT COUNT(*) FROM hit) AS BIGINT) AS n_hit,
-       ROUND((SELECT COUNT(*) FROM hit) * 1.0
-             / GREATEST((SELECT COUNT(*) FROM cand), 1), 6) AS precision,
-       ROUND((SELECT COUNT(*) FROM hit) * 1.0
-             / GREATEST((SELECT COUNT(*) FROM truth), 1), 6) AS recall
-"""
-
-
-def _q107_oracle() -> str:
-    from sparkextract.queries.dedup2 import _Q53_ORACLE
-
-    return _Q107_ORACLE.replace("{Q53}", _Q53_ORACLE)
-
-
-@register("q107_lsh_recall_eval", oracle=_q107_oracle())
-def q107_lsh_recall_eval(spark, sf_dir):
-    from sparkextract.queries.dedup2 import (
-        _banded_corpus,
-        q53_banded_lsh_near_dup,
-    )
-    from sparkextract.queries.vector import _dot, _norm
-
-    sub = _banded_corpus(spark, sf_dir).filter(
-        F.col("vec_id") % 1000000 < _Q107_SUB
-    )
-    x = sub.select(F.col("vec_id").alias("l"), F.col("e").alias("ex"))
-    y = sub.select(F.col("vec_id").alias("r"), F.col("e").alias("ey"))
-    cos = F.round(
-        _dot(F.col("ex"), F.col("ey")) / (_norm(F.col("ex")) * _norm(F.col("ey"))),
-        6,
-    )
-    # the three count aggregates below each re-evaluate their subtree
-    # (hit references both), so the sample-sized truth and candidate
-    # frames are materialized once (checkpoint_memo)
-    from sparkextract.queries.base import checkpoint_memo
-
-    truth = checkpoint_memo(
-        spark,
-        sf_dir,
-        "q107_truth",
-        lambda: x.join(F.broadcast(y), F.col("l") < F.col("r"))
-        .filter(cos >= 0.8)
-        .select("l", "r"),
-    )
-    cand = checkpoint_memo(
-        spark,
-        sf_dir,
-        "q107_cand",
-        lambda: q53_banded_lsh_near_dup(spark, sf_dir)
-        .filter(
-            (F.col("left_id") % 1000000 < _Q107_SUB)
-            & (F.col("right_id") % 1000000 < _Q107_SUB)
-        )
-        .select(F.col("left_id").alias("l"), F.col("right_id").alias("r")),
-    )
-    hit = truth.join(cand, ["l", "r"])
-    counts = (
-        truth.agg(F.count("*").alias("n_truth"))
-        .crossJoin(cand.agg(F.count("*").alias("n_candidates")))
-        .crossJoin(hit.agg(F.count("*").alias("n_hit")))
-    )
-    return counts.select(
-        "n_truth",
-        "n_candidates",
-        "n_hit",
-        F.round(
-            F.col("n_hit").cast("double")
-            / F.greatest(F.col("n_candidates"), F.lit(1)),
-            6,
-        ).alias("precision"),
-        F.round(
-            F.col("n_hit").cast("double") / F.greatest(F.col("n_truth"), F.lit(1)),
-            6,
-        ).alias("recall"),
-    )

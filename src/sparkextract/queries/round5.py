@@ -146,7 +146,7 @@ def _cos_pair_sql(a: str, b: str, dim: int) -> str:
 
 
 def _q110_oracle() -> str:
-    from sparkextract.queries.dedup2 import _DIM
+    from sparkextract.queries.vector import _DIM
 
     return f"""
     WITH corpus AS (
@@ -189,7 +189,8 @@ def _q110_oracle() -> str:
 @register("q110_semantic_dedup", oracle=_q110_oracle())
 def q110_semantic_dedup(spark, sf_dir):
     from sparkextract.queries.base import checkpoint_memo
-    from sparkextract.queries.dedup2 import _banded_corpus, _dot, _norm
+    from sparkextract.queries.dedup2 import _banded_corpus
+    from sparkextract.queries.vector import _dot, _norm
 
     def build_assign():
         corpus = _banded_corpus(spark, sf_dir)
@@ -423,217 +424,6 @@ def q111_pq_adc_topk(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# q112: DSIR IMPORTANCE RESAMPLING — hashed-bigram importance weights
-# (Xie et al. 2023, "Data Selection for Language Models via Importance
-# Resampling"): estimate a target-domain feature distribution (here the
-# lang='en' slice stands in for the curated target) and the raw-corpus
-# distribution over B=64 md5-hashed bigram buckets, score every document
-# by the log-likelihood ratio of its features under target vs raw, and
-# keep the top-scoring docs. Beyond-reference training-pipeline op (the
-# reference stops at extraction; this is the selection step a 100 TB
-# pretraining corpus runs next).
-#
-# Numeric discipline: the per-bucket log-ratio is ROUND(...,6)-ed and
-# frozen as DECIMAL(12,6) on the 64-row bucket table, so the per-doc
-# score is an EXACT decimal sum (engine-order-independent) of
-# count * ratio — the only float op is one ln over a ratio of doubles
-# built from exact integer counts, each factor cast to double BEFORE
-# multiplying (IEEE-identical in both engines, and immune to int64
-# overflow at 10^12-token scale where a bigint product would wrap).
-# Scale shape: tokenize once (checkpoint_memo), one mergeable
-# (doc_id, bucket) count, bucket marginals derived FROM those counts
-# (no second corpus pass), the 64-row ratio table broadcast back, and
-# the final selection is TakeOrderedAndProject — no window, no
-# corpus-wide sort, nothing keyed on a skewable value.
-_Q112_BUCKETS = 64
-_Q112_TOPK = 40
-
-_Q112_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, lang, list_filter(string_split(text, ' '), t -> t <> '') AS a
-  FROM documents
-),
-inst AS (
-  SELECT doc_id, lang,
-    unnest(list_transform(range(1, len(a)), i -> a[i] || ' ' || a[i+1])) AS bigram
-  FROM toks
-),
-instb AS (
-  SELECT doc_id, lang,
-    CAST(CAST(('0x' || SUBSTRING(md5(CAST(bigram AS VARCHAR)), 1, 8)) AS UBIGINT)
-         % {_Q112_BUCKETS} AS BIGINT) AS b
-  FROM inst
-),
-docb AS (
-  SELECT doc_id, lang, b, CAST(COUNT(*) AS BIGINT) AS c
-  FROM instb GROUP BY doc_id, lang, b
-),
-raw AS (SELECT b, CAST(SUM(c) AS BIGINT) AS cr FROM docb GROUP BY b),
-tgt AS (SELECT b, CAST(SUM(c) AS BIGINT) AS ct FROM docb WHERE lang = 'en' GROUP BY b),
-tot AS (
-  SELECT (SELECT CAST(SUM(cr) AS BIGINT) FROM raw) AS tr,
-         (SELECT CAST(COALESCE(SUM(ct), 0) AS BIGINT) FROM tgt) AS tt
-),
-lr AS (
-  SELECT r.b,
-    CAST(ROUND(ln(
-      (CAST(COALESCE(t.ct, 0) + 1 AS DOUBLE) * CAST(tot.tr + {_Q112_BUCKETS} AS DOUBLE))
-      / (CAST(tot.tt + {_Q112_BUCKETS} AS DOUBLE) * CAST(r.cr + 1 AS DOUBLE))
-    ), 6) AS DECIMAL(12,6)) AS lw
-  FROM raw r LEFT JOIN tgt t USING (b) CROSS JOIN tot
-)
-SELECT d.doc_id, d.lang,
-       CAST(SUM(d.c) AS BIGINT) AS n_features,
-       CAST(SUM(d.c * l.lw) AS DOUBLE) AS dsir_weight
-FROM docb d JOIN lr l USING (b)
-GROUP BY d.doc_id, d.lang
-ORDER BY dsir_weight DESC, d.doc_id
-LIMIT {_Q112_TOPK}
-"""
-
-
-@register("q112_dsir_resampling", oracle=_Q112_ORACLE)
-def q112_dsir_resampling(spark, sf_dir):
-    from sparkextract.queries.base import checkpoint_memo, md5_bucket
-
-    b = _Q112_BUCKETS
-    # the memoized grain is the COUNTED (doc, bucket) table, not the raw
-    # hashed instances: three subtrees (raw marginal, target marginal,
-    # final score) reuse it, and it is bounded by docs * B rather than
-    # by token count — the explode+md5 pass runs exactly once
-    docb = checkpoint_memo(
-        spark,
-        sf_dir,
-        "q112_docb",
-        lambda: load(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            "lang",
-            F.filter(F.split("text", " "), lambda t: t != F.lit("")).alias("a"),
-        )
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.when(
-                    F.size("a") >= 2,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("a") - 1),
-                        lambda i: F.concat_ws(
-                            " ", F.element_at("a", i), F.element_at("a", i + 1)
-                        ),
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            ).alias("bigram"),
-        )
-        .select("doc_id", "lang", md5_bucket(F.col("bigram"), b).alias("b"))
-        .groupBy("doc_id", "lang", "b")
-        .agg(F.count("*").alias("c")),
-    )
-    # bucket marginals derive from the (doc, bucket) counts — no second
-    # pass over the instance table; both are 64-row results
-    raw = docb.groupBy("b").agg(F.sum("c").alias("cr"))
-    tgt = (
-        docb.filter(F.col("lang") == "en").groupBy("b").agg(F.sum("c").alias("ct"))
-    )
-    tot = (
-        raw.agg(F.sum("cr").alias("tr"))
-        .crossJoin(
-            tgt.agg(F.coalesce(F.sum("ct"), F.lit(0).cast("long")).alias("tt"))
-        )
-    )
-    num = (F.coalesce(F.col("ct"), F.lit(0)) + 1).cast("double") * (
-        F.col("tr") + b
-    ).cast("double")
-    den = (F.col("tt") + b).cast("double") * (F.col("cr") + 1).cast("double")
-    lr = (
-        raw.join(tgt, "b", "left")
-        .crossJoin(F.broadcast(tot))
-        .select("b", F.round(F.log(num / den), 6).cast("decimal(12,6)").alias("lw"))
-    )
-    return (
-        docb.join(F.broadcast(lr), "b")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.sum("c").alias("n_features"),
-            F.sum(F.col("c") * F.col("lw")).cast("double").alias("dsir_weight"),
-        )
-        .orderBy(F.desc("dsir_weight"), "doc_id")
-        .limit(_Q112_TOPK)
-    )
-
-
-# --------------------------------------------------------------------------
-# q113: VOCABULARY COVERAGE CURVE — what fraction of all token
-# occurrences the top-V most frequent types cover, at the vocab sizes a
-# tokenizer-budget decision actually compares. The op behind "how big
-# must the vocabulary be": token-type frequencies (one mergeable
-# groupBy), the top 1024 types via TakeOrderedAndProject (count desc,
-# token asc — a total order, so the 1024-boundary cut is identical in
-# both engines), then the cumulative curve over that BOUNDED table
-# (the single-partition window touches <= 1024 rows by construction —
-# the q90 tiny-grain global-window shape, never a corpus-wide window).
-_Q113_SIZES = (16, 64, 256, 1024)
-
-_Q113_ORACLE = f"""
-WITH tok AS (
-  SELECT unnest(string_split(text, ' ')) AS t FROM documents
-),
-tc AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS c FROM tok WHERE t <> '' GROUP BY t),
-tot AS (SELECT CAST(SUM(c) AS BIGINT) AS s FROM tc),
-ranked AS (
-  SELECT t, c, ROW_NUMBER() OVER (ORDER BY c DESC, t) AS rn FROM tc
-),
-top AS (SELECT * FROM ranked WHERE rn <= {max(_Q113_SIZES)})
-SELECT CAST(v.vocab_size AS INT) AS vocab_size,
-       CAST(SUM(top.c) AS BIGINT) AS covered_tokens,
-       ROUND(CAST(SUM(top.c) AS DOUBLE) / CAST(MAX(tot.s) AS DOUBLE), 6) AS coverage
-FROM (VALUES {", ".join(f"({v})" for v in _Q113_SIZES)}) AS v(vocab_size)
-JOIN top ON top.rn <= v.vocab_size
-CROSS JOIN tot
-GROUP BY v.vocab_size
-ORDER BY vocab_size
-"""
-
-
-@register("q113_vocab_coverage", oracle=_Q113_ORACLE)
-def q113_vocab_coverage(spark, sf_dir):
-    from pyspark.sql import Window
-
-    top_n = max(_Q113_SIZES)
-    tc = (
-        load(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("t"))
-        .filter(F.col("t") != "")
-        .groupBy("t")
-        .agg(F.count("*").alias("c"))
-    )
-    tot = tc.agg(F.sum("c").alias("s"))
-    # bounded: orderBy+limit is TakeOrderedAndProject; the row_number
-    # window then runs over <= top_n rows, not the corpus vocabulary
-    top = (
-        tc.orderBy(F.desc("c"), "t")
-        .limit(top_n)
-        .withColumn("rn", F.row_number().over(Window.orderBy(F.desc("c"), "t")))
-    )
-    sizes = spark.range(1).select(
-        F.explode(F.array(*[F.lit(v) for v in _Q113_SIZES])).alias("vocab_size")
-    )
-    return (
-        top.join(F.broadcast(sizes), F.col("rn") <= F.col("vocab_size"))
-        .crossJoin(F.broadcast(tot))
-        .groupBy("vocab_size")
-        .agg(
-            F.sum("c").alias("covered_tokens"),
-            F.round(
-                F.sum("c").cast("double") / F.max("s").cast("double"), 6
-            ).alias("coverage"),
-        )
-        .orderBy("vocab_size")
-    )
-
-
-# --------------------------------------------------------------------------
 # q114: SNAPSHOT TOKEN-DISTRIBUTION DRIFT — the corpus-refresh QA step
 # that runs right after the q103 CDC diff: how far did the refreshed
 # corpus's token distribution move from the previous snapshot's?
@@ -656,9 +446,9 @@ def q113_vocab_coverage(spark, sf_dir):
 # token-grain table is memoized because the totals and the scoring
 # pass both read it. Nothing is keyed on a skewable value (token keys
 # carry counts, not rows).
-_Q114_TOPK = 25
+_DRIFT_TOPK = 25
 
-_Q114_OLD = """
+_DRIFT_OLD = """
   SELECT doc_id,
          CASE WHEN CAST(('0x' || SUBSTRING(md5(CAST(doc_id AS VARCHAR)), 1, 8))
                    AS UBIGINT) % 10 = 1
@@ -668,9 +458,9 @@ _Q114_OLD = """
              AS UBIGINT) % 10 <> 0
 """
 
-_Q114_ORACLE = f"""
+_DRIFT_ORACLE = f"""
 WITH old_toks AS (
-  SELECT unnest(string_split(text, ' ')) AS t FROM ({_Q114_OLD})
+  SELECT unnest(string_split(text, ' ')) AS t FROM ({_DRIFT_OLD})
 ),
 new_toks AS (
   SELECT unnest(string_split(text, ' ')) AS t FROM documents
@@ -705,12 +495,11 @@ SELECT s.token, s.co AS c_old, s.cn AS c_new, s.delta_share,
        CAST(s.contrib AS DOUBLE) AS js_contrib, total.jsd_total
 FROM scored s CROSS JOIN total
 ORDER BY ROUND(ABS(s.delta_share), 9) DESC, s.token
-LIMIT {_Q114_TOPK}
+LIMIT {_DRIFT_TOPK}
 """
 
 
-@register("q114_snapshot_token_drift", oracle=_Q114_ORACLE)
-def q114_snapshot_token_drift(spark, sf_dir):
+def snapshot_token_drift(spark, sf_dir):
     from sparkextract.queries.base import checkpoint_memo, md5_bucket
 
     def build():
@@ -775,84 +564,7 @@ def q114_snapshot_token_drift(spark, sf_dir):
             "jsd_total",
         )
         .orderBy(F.round(F.abs(F.col("delta_share")), 9).desc(), "token")
-        .limit(_Q114_TOPK)
-    )
-
-
-# --------------------------------------------------------------------------
-# q115: ZIPF SLOPE — the corpus-health diagnostic behind "does this
-# corpus look like natural language": least-squares slope of
-# ln(frequency) vs ln(rank) over the top-256 token types (natural text
-# sits near -1; heavily templated/duplicated corpora flatten or
-# steepen). All regression sums run over the BOUNDED top-256 table
-# (TakeOrderedAndProject under the total order (count desc, token asc),
-# same cut rule as q113), so the fit costs one mergeable token count
-# plus O(1) arithmetic; slope/intercept are computed with the identical
-# formula shape in both engines and ROUND(...,6)-ed (ln ulp + 256-term
-# sum reorder stay ~1e-13, far under the rounding grain).
-_Q115_TOPN = 256
-
-_Q115_ORACLE = f"""
-WITH tok AS (
-  SELECT unnest(string_split(text, ' ')) AS t FROM documents
-),
-tc AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS c FROM tok WHERE t <> '' GROUP BY t),
-ranked AS (
-  SELECT c, ROW_NUMBER() OVER (ORDER BY c DESC, t) AS rn FROM tc
-),
-top AS (
-  SELECT ln(CAST(rn AS DOUBLE)) AS x, ln(CAST(c AS DOUBLE)) AS y
-  FROM ranked WHERE rn <= {_Q115_TOPN}
-),
-s AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(x) AS sx, SUM(y) AS sy,
-         SUM(x * y) AS sxy, SUM(x * x) AS sxx
-  FROM top
-)
-SELECT n AS n_points,
-       ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS zipf_slope,
-       ROUND((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n, 6)
-         AS intercept
-FROM s
-"""
-
-
-@register("q115_zipf_slope", oracle=_Q115_ORACLE)
-def q115_zipf_slope(spark, sf_dir):
-    from pyspark.sql import Window
-
-    tc = (
-        load(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("t"))
-        .filter(F.col("t") != "")
-        .groupBy("t")
-        .agg(F.count("*").alias("c"))
-    )
-    top = (
-        tc.orderBy(F.desc("c"), "t")
-        .limit(_Q115_TOPN)
-        .withColumn("rn", F.row_number().over(Window.orderBy(F.desc("c"), "t")))
-        .select(
-            F.log(F.col("rn").cast("double")).alias("x"),
-            F.log(F.col("c").cast("double")).alias("y"),
-        )
-    )
-    s = top.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    slope_raw = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
-    return s.select(
-        F.col("n").alias("n_points"),
-        F.round(slope_raw, 6).alias("zipf_slope"),
-        F.round((F.col("sy") - slope_raw * F.col("sx")) / F.col("n"), 6).alias(
-            "intercept"
-        ),
+        .limit(_DRIFT_TOPK)
     )
 
 
@@ -866,9 +578,9 @@ def q115_zipf_slope(spark, sf_dir):
 # delta (~20% under this deterministic rule: md5 bucket 0 of vec_id =
 # added, bucket 1 = changed), and the status pass is map-only.
 # Composes with q103 (same snapshot rule) and q46 (same IVF cells).
-def _q116_oracle() -> str:
+def _incremental_ivf_oracle() -> str:
     from sparkextract.queries.base import md5_bucket_sql
-    from sparkextract.queries.dedup2 import _DIM
+    from sparkextract.queries.vector import _DIM
 
     return f"""
     WITH e AS (
@@ -903,10 +615,9 @@ def _q116_oracle() -> str:
     """
 
 
-@register("q116_incremental_ivf", oracle=_q116_oracle())
-def q116_incremental_ivf(spark, sf_dir):
+def incremental_ivf(spark, sf_dir):
     from sparkextract.queries.base import md5_bucket
-    from sparkextract.queries.dedup2 import _dot, _norm
+    from sparkextract.queries.vector import _dot, _norm
 
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -948,28 +659,13 @@ def q116_incremental_ivf(spark, sf_dir):
     )
 
 
-# --------------------------------------------------------------------------
-# q117: CORPUS-REFRESH PIPELINE — the composed CDC flagship (the q94
-# pattern applied to the refresh path): one query chaining the four
-# operators a periodic corpus refresh actually runs, reported as a
-# stage summary: (1) q103 snapshot diff (added/changed/unchanged
-# counts), (2) q106 incremental extraction (spans re-extracted for the
-# delta only), (3) q114 token-drift monitor (total JS divergence), and
-# (4) q116 incremental IVF maintenance (vectors reassigned). Each stage
-# aggregates the SAME registered operator the standalone entry gates,
-# so the composition proves the stages agree end-to-end, not just in
-# isolation. Scale shape inherits from the parts: everything is keyed
-# or broadcast, and only the CDC delta re-enters extraction/indexing.
-_Q117_ORACLE = None  # built lazily below (needs round4 oracles)
-
-
 def _q117_oracle() -> str:
-    from sparkextract.queries.round4 import _Q103_ORACLE, _Q106_ORACLE
+    from sparkextract.queries.round4 import _SNAPSHOT_DIFF_ORACLE, _Q106_ORACLE
 
     return f"""
     SELECT 'diff' AS stage, status AS probe,
            CAST(COUNT(*) AS BIGINT) AS n, CAST(NULL AS DOUBLE) AS metric
-    FROM ({_Q103_ORACLE}) GROUP BY status
+    FROM ({_SNAPSHOT_DIFF_ORACLE}) GROUP BY status
     UNION ALL
     SELECT 'extract', 'spans_reextracted',
            CAST(SUM(span_count) AS BIGINT), CAST(NULL AS DOUBLE)
@@ -977,25 +673,25 @@ def _q117_oracle() -> str:
     UNION ALL
     SELECT 'drift', 'jsd_total',
            CAST(COUNT(*) AS BIGINT), MAX(jsd_total)
-    FROM ({_Q114_ORACLE})
+    FROM ({_DRIFT_ORACLE})
     UNION ALL
     SELECT 'index', 'reassigned',
            CAST(SUM(CASE WHEN needs_index THEN 1 ELSE 0 END) AS BIGINT),
            CAST(NULL AS DOUBLE)
-    FROM ({_q116_oracle()})
+    FROM ({_incremental_ivf_oracle()})
     """
 
 
 @register("q117_corpus_refresh_pipeline", oracle=_q117_oracle())
 def q117_corpus_refresh_pipeline(spark, sf_dir):
     from sparkextract.queries.round4 import (
-        q103_snapshot_diff,
+        snapshot_diff,
         q106_incremental_extraction,
     )
 
     null_metric = F.lit(None).cast("double")
     diff = (
-        q103_snapshot_diff(spark, sf_dir)
+        snapshot_diff(spark, sf_dir)
         .groupBy("status")
         .agg(F.count("*").alias("n"))
         .select(
@@ -1011,13 +707,13 @@ def q117_corpus_refresh_pipeline(spark, sf_dir):
         F.sum("span_count").cast("long").alias("n"),
         null_metric.alias("metric"),
     )
-    drift = q114_snapshot_token_drift(spark, sf_dir).agg(
+    drift = snapshot_token_drift(spark, sf_dir).agg(
         F.lit("drift").alias("stage"),
         F.lit("jsd_total").alias("probe"),
         F.count(F.lit(1)).cast("long").alias("n"),
         F.max("jsd_total").alias("metric"),
     )
-    index = q116_incremental_ivf(spark, sf_dir).agg(
+    index = incremental_ivf(spark, sf_dir).agg(
         F.lit("index").alias("stage"),
         F.lit("reassigned").alias("probe"),
         F.sum(F.col("needs_index").cast("long")).cast("long").alias("n"),
@@ -1026,111 +722,3 @@ def q117_corpus_refresh_pipeline(spark, sf_dir):
     return diff.unionByName(extract).unionByName(drift).unionByName(index)
 
 
-# --------------------------------------------------------------------------
-# q118: INCREMENTAL DEDUP — near-dup detection for a corpus refresh
-# WITHOUT re-hashing the corpus: only the CDC delta (q103's added/
-# changed rule) computes fresh q19 MinHash band signatures; the
-# unchanged majority is represented by its persisted signature index
-# (memoized here, a stored table at scale — signatures are computed
-# once at ingest and never again). Candidates are (1) delta-vs-index
-# and (2) delta-vs-delta band collisions, reported per pair with how
-# many of the 4 bands matched.
-#
-# Scale shape: the delta side is ~20% (and in steady state ~arrival
-# rate); band matching is the UNPIVOTED form — (band, sig) equi-join —
-# never an OR-of-bands join (which both engines would execute as a
-# nested loop over the corpus); pair aggregation is a mergeable
-# groupBy. The index side is scanned once to build the memo and then
-# reused by both candidate joins.
-def _q118_sigs_sql() -> str:
-    import sparkextract.queries.text  # noqa: F401 — registers q19 first
-
-    from sparkextract.queries.base import ORACLE_SQL
-
-    return ORACLE_SQL["q19_minhash_signature"]
-
-
-def _q118_oracle() -> str:
-    from sparkextract.queries.base import md5_bucket_sql
-
-    return f"""
-    WITH sigs AS (
-      {_q118_sigs_sql()}
-    ),
-    st AS (
-      SELECT s.*,
-             CAST({md5_bucket_sql("doc_id", 10)} AS BIGINT) < 2 AS is_delta
-      FROM sigs s
-    ),
-    bands AS (
-      SELECT doc_id, is_delta, 0 AS b, sig0 AS sig FROM st
-      UNION ALL SELECT doc_id, is_delta, 1, sig1 FROM st
-      UNION ALL SELECT doc_id, is_delta, 2, sig2 FROM st
-      UNION ALL SELECT doc_id, is_delta, 3, sig3 FROM st
-    ),
-    delta_bands AS (SELECT doc_id, b, sig FROM bands WHERE is_delta),
-    index_bands AS (SELECT doc_id, b, sig FROM bands WHERE NOT is_delta),
-    cand AS (
-      SELECT d.doc_id AS new_doc_id, i.doc_id AS dup_of, 'index' AS kind, d.b
-      FROM delta_bands d JOIN index_bands i ON d.b = i.b AND d.sig = i.sig
-      UNION ALL
-      SELECT a.doc_id, bb.doc_id, 'delta', a.b
-      FROM delta_bands a JOIN delta_bands bb
-        ON a.b = bb.b AND a.sig = bb.sig AND a.doc_id < bb.doc_id
-    )
-    SELECT new_doc_id, dup_of, kind,
-           CAST(COUNT(DISTINCT b) AS BIGINT) AS n_bands
-    FROM cand
-    GROUP BY new_doc_id, dup_of, kind
-    """
-
-
-@register("q118_incremental_dedup", oracle=_q118_oracle())
-def q118_incremental_dedup(spark, sf_dir):
-    from sparkextract.queries.base import checkpoint_memo, md5_bucket
-    from sparkextract.queries.text import q19_minhash_signature
-
-    def build():
-        sigs = q19_minhash_signature(spark, sf_dir)
-        is_delta = md5_bucket(F.col("doc_id"), 10) < 2
-        return sigs.select(
-            "doc_id",
-            is_delta.alias("is_delta"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("b"), F.col(f"sig{b}").alias("sig")
-                        )
-                        for b in range(4)
-                    ]
-                )
-            ).alias("bs"),
-        ).select("doc_id", "is_delta", F.col("bs.b").alias("b"), F.col("bs.sig").alias("sig"))
-
-    # the banded signature table is the persisted index at scale; both
-    # candidate joins read it, so materialize once
-    bands = checkpoint_memo(spark, sf_dir, "q118_bands", build)
-    delta = bands.filter("is_delta").select("doc_id", "b", "sig")
-    index = bands.filter(~F.col("is_delta")).select(
-        F.col("doc_id").alias("dup_of"), "b", "sig"
-    )
-    vs_index = delta.join(index, ["b", "sig"]).select(
-        F.col("doc_id").alias("new_doc_id"), "dup_of", F.lit("index").alias("kind"), "b"
-    )
-    right = delta.select(F.col("doc_id").alias("dup_of"), "b", "sig")
-    vs_delta = (
-        delta.join(right, ["b", "sig"])
-        .filter(F.col("doc_id") < F.col("dup_of"))
-        .select(
-            F.col("doc_id").alias("new_doc_id"),
-            "dup_of",
-            F.lit("delta").alias("kind"),
-            "b",
-        )
-    )
-    return (
-        vs_index.unionByName(vs_delta)
-        .groupBy("new_doc_id", "dup_of", "kind")
-        .agg(F.countDistinct("b").alias("n_bands"))
-    )

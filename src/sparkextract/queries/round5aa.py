@@ -249,97 +249,3 @@ def q198_cuckoo_filter_probe(spark, sf_dir):
     )
 
 
-# ---------------------------------------------------------------------
-# q199
-_Q199_ORACLE = """
-WITH digits AS (
-  SELECT CAST(SUBSTRING(CAST(n_chars AS VARCHAR), 1, 1) AS BIGINT) AS d
-  FROM documents WHERE n_chars > 0
-),
-obs AS (
-  SELECT d, CAST(COUNT(*) AS BIGINT) AS o FROM digits GROUP BY d
-),
-grid AS (SELECT unnest(range(1, 10)) AS d),
-n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM digits),
-cells AS (
-  SELECT g.d,
-         COALESCE(o.o, 0) AS o,
-         ROUND(CAST(n.n AS DOUBLE) * ln(1.0 + 1.0 / g.d) / ln(10.0), 6) AS e,
-         n.n
-  FROM grid g LEFT JOIN obs o ON o.d = g.d CROSS JOIN n
-),
-scored AS (
-  SELECT d, o, e, n,
-         ROUND((CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e) / e, 6)
-           AS chi2_d,
-         CAST(ABS(o * 1000000 - CAST(ROUND(e * 1000000) AS BIGINT))
-              // n AS BIGINT) AS dev_u
-  FROM cells
-),
-tot AS (
-  SELECT ROUND(CAST(SUM(CAST(chi2_d AS DECIMAL(18,6))) AS DOUBLE), 6)
-           AS chi2_total,
-         CAST(SUM(dev_u) // 9 AS BIGINT) AS mad_u
-  FROM scored
-)
-SELECT s.d, s.o, s.e, s.chi2_d, s.dev_u, t.chi2_total, t.mad_u,
-       CASE WHEN t.mad_u < 6000 THEN 'close'
-            WHEN t.mad_u < 15000 THEN 'acceptable'
-            ELSE 'nonconforming' END AS verdict
-FROM scored s CROSS JOIN tot t
-"""
-
-
-@register("q199_benford_audit", oracle=_Q199_ORACLE)
-def q199_benford_audit(spark, sf_dir):
-    digits = (
-        load(spark, sf_dir, "documents")
-        .filter(F.col("n_chars") > 0)
-        .select(F.substring(F.col("n_chars").cast("string"), 1, 1).cast("long").alias("d"))
-    )
-    obs = digits.groupBy("d").agg(F.count("*").cast("long").alias("o"))
-    n = digits.agg(F.count("*").cast("long").alias("n"))
-    # grid is the LEFT side of a left join — Spark cannot build-left
-    # there, so no broadcast hint (the 9-row frame is trivial anyway)
-    grid = obs.sparkSession.range(1, 10).select(F.col("id").cast("long").alias("d"))
-    cells = (
-        grid.join(obs, "d", "left")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "d",
-            F.coalesce("o", F.lit(0)).cast("long").alias("o"),
-            F.round(
-                F.col("n").cast("double")
-                * F.log(1.0 + 1.0 / F.col("d").cast("double"))
-                / F.log(F.lit(10.0)),
-                6,
-            ).alias("e"),
-            "n",
-        )
-    )
-    chi2_d = F.round(
-        (F.col("o").cast("double") - F.col("e"))
-        * (F.col("o").cast("double") - F.col("e"))
-        / F.col("e"),
-        6,
-    )
-    dev_u = F.expr(
-        "abs(o * 1000000 - cast(round(e * 1000000) as bigint)) div n"
-    ).cast("long")
-    scored = cells.select("d", "o", "e", chi2_d.alias("chi2_d"), dev_u.alias("dev_u"), "n")
-    tot = scored.agg(
-        F.round(
-            F.sum(F.col("chi2_d").cast("decimal(18,6)")).cast("double"), 6
-        ).alias("chi2_total"),
-        F.expr("sum(dev_u) div 9").cast("long").alias("mad_u"),
-    )
-    verdict = (
-        F.when(F.col("mad_u") < 6000, F.lit("close"))
-        .when(F.col("mad_u") < 15000, F.lit("acceptable"))
-        .otherwise(F.lit("nonconforming"))
-    )
-    return (
-        scored.drop("n")
-        .crossJoin(F.broadcast(tot))
-        .select("d", "o", "e", "chi2_d", "dev_u", "chi2_total", "mad_u", verdict.alias("verdict"))
-    )

@@ -150,88 +150,6 @@ def q119_pagerank(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# q120: CLUSTERING-AGREEMENT RAND INDEX — pair-counting agreement
-# between the stored assignment (label) and a re-derived geometric one
-# (3-bit sign bucket of the embedding's leading components). This is
-# the snapshot-drift monitor for an embedding/cluster index: RI near 1
-# means the new partition agrees with the stored one.
-#
-# Everything reduces to the contingency table n_ij = |label i ∩ bucket
-# j| — one mergeable groupBy; all pair counts are BIGINT binomials
-# (c*(c-1))/2 so the only double op is the final single division.
-# Scale shape: the contingency table has ≤ |labels|*|buckets| cells
-# regardless of corpus size; the whole metric is one map-side-combined
-# shuffle plus constant-size arithmetic.
-_Q120_ORACLE = """
-WITH cells AS (
-  SELECT label,
-         (CASE WHEN embedding[1] >= 0 THEN 4 ELSE 0 END
-        + CASE WHEN embedding[2] >= 0 THEN 2 ELSE 0 END
-        + CASE WHEN embedding[3] >= 0 THEN 1 ELSE 0 END) AS bucket,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM embeddings GROUP BY 1, 2
-),
-a AS (SELECT SUM(c * (c - 1) // 2) AS sa
-      FROM (SELECT SUM(c) AS c FROM cells GROUP BY label)),
-b AS (SELECT SUM(c * (c - 1) // 2) AS sb
-      FROM (SELECT SUM(c) AS c FROM cells GROUP BY bucket)),
-ij AS (SELECT SUM(c * (c - 1) // 2) AS sij, SUM(c) AS n,
-              CAST(COUNT(*) AS BIGINT) AS n_cells FROM cells)
-SELECT CAST(ij.n AS BIGINT) AS n_points,
-       ij.n_cells,
-       CAST(ij.sij AS BIGINT) AS pairs_both,
-       CAST(a.sa AS BIGINT) AS pairs_a,
-       CAST(b.sb AS BIGINT) AS pairs_b,
-       ROUND(
-         CAST(ij.n * (ij.n - 1) // 2 + 2 * ij.sij - a.sa - b.sb AS DOUBLE)
-         / CAST(ij.n * (ij.n - 1) // 2 AS DOUBLE), 6) AS rand_index
-FROM ij, a, b
-"""
-
-
-@register("q120_cluster_drift", oracle=_Q120_ORACLE)
-def q120_cluster_drift(spark, sf_dir):
-    emb = load(spark, sf_dir, "embeddings")
-    bucket = (
-        F.when(F.col("embedding").getItem(0) >= 0, 4).otherwise(0)
-        + F.when(F.col("embedding").getItem(1) >= 0, 2).otherwise(0)
-        + F.when(F.col("embedding").getItem(2) >= 0, 1).otherwise(0)
-    )
-    cells = emb.groupBy("label", bucket.alias("bucket")).agg(
-        F.count("*").cast("long").alias("c")
-    )
-    pairs = lambda c: F.expr(f"{c} * ({c} - 1) div 2")  # noqa: E731
-    a = cells.groupBy("label").agg(F.sum("c").alias("c")).agg(
-        F.sum(pairs("c")).alias("sa")
-    )
-    b = cells.groupBy("bucket").agg(F.sum("c").alias("c")).agg(
-        F.sum(pairs("c")).alias("sb")
-    )
-    ij = cells.agg(
-        F.sum(pairs("c")).alias("sij"),
-        F.sum("c").alias("n"),
-        F.count("*").cast("long").alias("n_cells"),
-    )
-    total = F.expr("n * (n - 1) div 2")
-    return (
-        ij.crossJoin(a)
-        .crossJoin(b)
-        .select(
-            F.col("n").cast("long").alias("n_points"),
-            "n_cells",
-            F.col("sij").cast("long").alias("pairs_both"),
-            F.col("sa").cast("long").alias("pairs_a"),
-            F.col("sb").cast("long").alias("pairs_b"),
-            F.round(
-                (total + 2 * F.col("sij") - F.col("sa") - F.col("sb")).cast("double")
-                / total.cast("double"),
-                6,
-            ).alias("rand_index"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
 # q121: ROUGE-1/ROUGE-2 EVAL — clipped-multiset n-gram
 # precision/recall/F1 between paired documents (even doc d = reference,
 # d+1 = candidate): the summarization-eval metric as dataflow. Clipped
@@ -511,188 +429,6 @@ def q122_bpe_merge(spark, sf_dir):
     )
     p1 = _adjacent_pairs(rewritten)
     return _topk_pairs(p0, 0).unionAll(_topk_pairs(p1, 1)).orderBy("stage", "rnk")
-
-
-# --------------------------------------------------------------------------
-# q123: HARD-NEGATIVE MINING (DPR-style) — for each query vector
-# (vec_id % 50 == 0), the top-5 most-similar vectors whose label
-# DIFFERS from the query's: the contrastive-training pairs an
-# embedding-model pipeline mines after dedup. Exact-cosine baseline;
-# the 100 TB path swaps the scored cross join for the IVF candidate
-# join (q46) or the LSH bucket join (q34) — same ranking tail.
-# Ordering uses the ROUNDED cosine (6 dp) + vec_id so ranks are
-# engine-stable; the query set is a broadcast (n/50 rows), scoring is
-# map-side over the embedding scan, and the per-query top-k is one
-# window over the query key.
-_Q123_K = 5
-_Q123_STRIDE = 50
-_Q123_DIM = 64
-
-_Q123_ORACLE = f"""
-WITH q AS (
-  SELECT vec_id AS query_id, label AS qlabel, embedding AS qv
-  FROM embeddings WHERE vec_id % {_Q123_STRIDE} = 0
-),
-scored AS (
-  SELECT q.query_id, e.vec_id AS neg_id, e.label AS neg_label,
-         ROUND(
-           list_sum(list_transform(range(1, {_Q123_DIM + 1}),
-             i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))
-           / ( sqrt(list_sum(list_transform(range(1, {_Q123_DIM + 1}),
-                 i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))))
-             * sqrt(list_sum(list_transform(range(1, {_Q123_DIM + 1}),
-                 i -> CAST(q.qv[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))) ),
-           6) AS cosine
-  FROM embeddings e JOIN q ON e.label <> q.qlabel
-)
-SELECT query_id, neg_id, neg_label, cosine, CAST(rnk AS BIGINT) AS rnk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, neg_id ASC) AS rnk
-  FROM scored
-)
-WHERE rnk <= {_Q123_K}
-ORDER BY query_id, rnk
-"""
-
-
-@register("q123_hard_negatives", oracle=_Q123_ORACLE)
-def q123_hard_negatives(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from sparkextract.queries.vector import _dot, _norm
-
-    emb = load(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") % _Q123_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("qv"),
-    )
-    scored = (
-        emb.join(F.broadcast(q), F.col("label") != F.col("qlabel"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neg_id"),
-            F.col("label").alias("neg_label"),
-            F.round(
-                _dot(F.col("embedding"), F.col("qv"))
-                / (_norm(F.col("embedding")) * _norm(F.col("qv"))),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neg_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= _Q123_K)
-        .orderBy("query_id", "rnk")
-    )
-
-
-# --------------------------------------------------------------------------
-# q124: CONTAINMENT DEDUP (Broder 1997) — the ASYMMETRIC companion to
-# the Jaccard family (q20/q34/q53): containment C(A,B) = |A∩B| / |A|
-# catches a document embedded inside a larger one (boilerplate wrap,
-# quote-and-extend, page concatenation), which symmetric Jaccard
-# dilutes below threshold. Shingle sets are word-trigram md5 keys;
-# candidate pairs come from a min-shingle equi-join (each doc carries
-# ONE candidate key, so candidate generation is a keyed self-join —
-# never corpus all-pairs; a hot min-shingle would get the q96 salt
-# treatment at scale); exact bidirectional containment is then computed
-# on the candidates' shingle arrays and classified:
-#   mutual_dup (both ≥ 0.9) / left_in_right / right_in_left (one side
-#   ≥ 0.9) / overlap otherwise — emitted for max(c) ≥ 0.5.
-# Ratios are single divisions of exact set cardinalities, ROUND(...,6).
-_Q124_HI = 0.9
-_Q124_LO = 0.5
-
-_Q124_ORACLE = f"""
-WITH sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, len(t) - 2 + 1),
-           i -> md5(t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]))) AS s
-  FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS t
-        FROM documents)
-  WHERE len(t) >= 3
-),
-keyed AS (SELECT doc_id, s, list_min(s) AS k FROM sh),
-cand AS (
-  SELECT a.doc_id AS left_id, b.doc_id AS right_id,
-         LENGTH(list_intersect(a.s, b.s)) AS inter,
-         LENGTH(a.s) AS na, LENGTH(b.s) AS nb
-  FROM keyed a JOIN keyed b ON a.k = b.k AND a.doc_id < b.doc_id
-)
-SELECT left_id, right_id,
-       ROUND(CAST(inter AS DOUBLE) / na, 6) AS c_left,
-       ROUND(CAST(inter AS DOUBLE) / nb, 6) AS c_right,
-       CASE
-         WHEN inter >= {_Q124_HI} * na AND inter >= {_Q124_HI} * nb THEN 'mutual_dup'
-         WHEN inter >= {_Q124_HI} * na THEN 'left_in_right'
-         WHEN inter >= {_Q124_HI} * nb THEN 'right_in_left'
-         ELSE 'overlap'
-       END AS relation
-FROM cand
-WHERE inter >= {_Q124_LO} * na OR inter >= {_Q124_LO} * nb
-ORDER BY left_id, right_id
-"""
-
-
-@register("q124_containment_dedup", oracle=_Q124_ORACLE)
-def q124_containment_dedup(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.filter(F.split("text", " "), lambda x: x != F.lit("")).alias("t")
-    ).filter(F.size("t") >= 3)
-    tri = F.transform(
-        F.sequence(F.lit(1), F.size("t") - 2),
-        lambda i: F.md5(
-            F.concat_ws(
-                " ",
-                F.element_at(F.col("t"), i),
-                F.element_at(F.col("t"), i + 1),
-                F.element_at(F.col("t"), i + 2),
-            )
-        ),
-    )
-    keyed = toks.select(
-        "doc_id", F.array_distinct(tri).alias("s")
-    ).withColumn("k", F.array_min("s"))
-    a = keyed.select(
-        F.col("doc_id").alias("left_id"), F.col("s").alias("sa"), "k"
-    )
-    b = keyed.select(
-        F.col("doc_id").alias("right_id"), F.col("s").alias("sb"), "k"
-    )
-    cand = a.join(b, "k").filter(F.col("left_id") < F.col("right_id")).select(
-        "left_id",
-        "right_id",
-        F.size(F.array_intersect("sa", "sb")).alias("inter"),
-        F.size("sa").alias("na"),
-        F.size("sb").alias("nb"),
-    )
-    hi, lo = F.lit(_Q124_HI), F.lit(_Q124_LO)
-    rel = (
-        F.when(
-            (F.col("inter") >= hi * F.col("na")) & (F.col("inter") >= hi * F.col("nb")),
-            "mutual_dup",
-        )
-        .when(F.col("inter") >= hi * F.col("na"), "left_in_right")
-        .when(F.col("inter") >= hi * F.col("nb"), "right_in_left")
-        .otherwise("overlap")
-    )
-    return (
-        cand.filter(
-            (F.col("inter") >= lo * F.col("na")) | (F.col("inter") >= lo * F.col("nb"))
-        )
-        .select(
-            "left_id",
-            "right_id",
-            F.round(F.col("inter").cast("double") / F.col("na"), 6).alias("c_left"),
-            F.round(F.col("inter").cast("double") / F.col("nb"), 6).alias("c_right"),
-            rel.alias("relation"),
-        )
-        .orderBy("left_id", "right_id")
-    )
 
 
 # --------------------------------------------------------------------------

@@ -274,87 +274,6 @@ def q128_mmr_rerank(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# q129: K-ANONYMITY RELEASE GATE (Sweeney 2002) — the privacy screen a
-# corpus release runs AFTER content-level PII redaction (q97): a
-# document is re-identifiable not just by what its text says but by its
-# metadata footprint, so the release checks the quasi-identifier tuple
-# (lang, source, length-bucket) against a minimum group size K. A doc is
-# released at level 0 if >= K docs share its full QI tuple; otherwise
-# the standard generalization-ladder step drops the most identifying
-# attribute (source) and re-tests (lang, length-bucket) — level 1; docs
-# still in a group < K are SUPPRESSED (level 2). Reference intent: the
-# reference's metadata/summary surfaces expose (source, size) per
-# document (/root/reference/src/pdf_extraction/pdf_table_extractor.py
-# summary tables); this is the release-side control over exactly those
-# attributes.
-#
-# Numeric discipline: pure integer arithmetic end to end (counts and an
-# exact integer division length bucket) — nothing to round.
-# Scale shape: two map-side-combinable groupBy counts whose results are
-# DIMENSION-TABLE sized (|lang| x |source| x |bucket|), broadcast back
-# onto the doc scan — zero corpus-sized shuffles; never a window over
-# the QI key (the q96/q99 de-skew rule: a hot QI group lands on one
-# task under a window, but a broadcast-join count is skew-immune).
-_Q129_K = 5
-
-_Q129_ORACLE = f"""
-WITH d AS (
-  SELECT doc_id, lang, source, CAST(n_chars // 200 AS BIGINT) AS len_bucket
-  FROM documents
-),
-g0 AS (SELECT lang, source, len_bucket, COUNT(*) AS g0
-       FROM d GROUP BY lang, source, len_bucket),
-g1 AS (SELECT lang, len_bucket, COUNT(*) AS g1
-       FROM d GROUP BY lang, len_bucket)
-SELECT d.doc_id, d.lang, d.source, d.len_bucket,
-       CAST(g0.g0 AS BIGINT) AS g0, CAST(g1.g1 AS BIGINT) AS g1,
-       CAST(CASE WHEN g0.g0 >= {_Q129_K} THEN 0
-                 WHEN g1.g1 >= {_Q129_K} THEN 1
-                 ELSE 2 END AS INTEGER) AS anon_level,
-       (g0.g0 >= {_Q129_K} OR g1.g1 >= {_Q129_K}) AS released
-FROM d
-JOIN g0 USING (lang, source, len_bucket)
-JOIN g1 USING (lang, len_bucket)
-"""
-
-
-@register("q129_k_anonymity", oracle=_Q129_ORACLE)
-def q129_k_anonymity(spark, sf_dir):
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        "source",
-        F.expr("CAST(n_chars div 200 AS BIGINT)").alias("len_bucket"),
-    )
-    g0 = d.groupBy("lang", "source", "len_bucket").agg(
-        F.count("*").alias("g0")
-    )
-    g1 = d.groupBy("lang", "len_bucket").agg(F.count("*").alias("g1"))
-    anon = (
-        F.when(F.col("g0") >= _Q129_K, 0)
-        .when(F.col("g1") >= _Q129_K, 1)
-        .otherwise(2)
-        .cast("int")
-    )
-    return (
-        d.join(F.broadcast(g0), ["lang", "source", "len_bucket"])
-        .join(F.broadcast(g1), ["lang", "len_bucket"])
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            "len_bucket",
-            "g0",
-            "g1",
-            anon.alias("anon_level"),
-            (
-                (F.col("g0") >= _Q129_K) | (F.col("g1") >= _Q129_K)
-            ).alias("released"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
 # q130: UNIGRAM SHANNON ENTROPY quality gate — the information-density
 # signal the Gopher/C4-style rule cascades (q75 length/diversity, q84
 # repetition, q87 LM logprob) are missing: a document whose token
@@ -363,8 +282,8 @@ def q129_k_anonymity(spark, sf_dir):
 # from two types has diversity 0.002 but the q84 top_word_frac gate at
 # 0.2 ignores the second type; entropy ln(2)=0.69 catches it directly).
 # Reference intent: the reference keeps only "meaningful" extracted
-# text via flat heuristics (/root/reference/src/pdf_extraction/
-# text_processor.py meaningful-text predicate); this is that gate's
+# text via a flat length heuristic (its meaningful-OCR predicate,
+# `src/image_extractor.py:635`); this is that gate's
 # information-theoretic form at corpus scale.
 #
 # Implementation identity: H = -sum_t (c_t/n) ln(c_t/n) needs n before
@@ -435,106 +354,6 @@ def q130_token_entropy(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# q131: SIMPLIFIED SILHOUETTE (centroid-based; Rousseeuw 1987 silhouette
-# with the O(N*k) centroid approximation that actual large-scale
-# clustering evals use — true silhouette is O(N^2) pairwise and cannot
-# run at corpus scale). Completes the cluster-diagnostics family: q52/
-# q57 produce the Lloyd's iterations, q120 measures assignment DRIFT
-# between snapshots, this measures assignment QUALITY within one
-# snapshot: per point, a = Euclidean distance to its own (nearest)
-# centroid, b = distance to the best OTHER centroid, s = (b-a)/max(a,b)
-# in [0,1] here (a <= b by construction of nearest-centroid assignment).
-# Same seed-centroid scheme as q52 (quantized vectors of vec_id 1..8,
-# assignment ordering on the raw double squared-L2 with cent_id
-# tie-break — the proven cross-engine recipe), then every distance is
-# snapped to BIGINT micro-units and s is computed by pure integer
-# division, so the score surface is bit-identical across engines.
-# Reference intent: embedding-space quality checks over the pgvector
-# store, /root/reference/src/rag/vector_database.py:156-189.
-#
-# Scale shape: the centroid table is k broadcast rows; distances are
-# computed map-side on the embedding scan; the per-point (a, b, cell)
-# reduction is ONE vec_id-keyed conditional aggregation (no self-join,
-# no second scan); per-cluster rollup is a k-group mergeable agg.
-_Q131_K = 8
-
-
-def _q131_oracle() -> str:
-    return f"""
-    WITH eq AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> ROUND(CAST(x AS DOUBLE), 3)) AS e
-      FROM embeddings
-    ),
-    cents AS (SELECT vec_id AS cent_id, e AS c FROM eq
-              WHERE vec_id BETWEEN 1 AND {_Q131_K}),
-    dists AS (
-      SELECT d.vec_id, c.cent_id,
-             list_sum(list_transform(range(1, 65),
-               i -> (d.e[i] - c.c[i]) * (d.e[i] - c.c[i]))) AS d2,
-             ROW_NUMBER() OVER (
-               PARTITION BY d.vec_id ORDER BY
-               list_sum(list_transform(range(1, 65),
-                 i -> (d.e[i] - c.c[i]) * (d.e[i] - c.c[i]))) ASC,
-               c.cent_id ASC) AS rn
-      FROM eq d, cents c
-      WHERE d.vec_id > {_Q131_K}
-    ),
-    ab AS (
-      SELECT vec_id,
-             CAST(MAX(CASE WHEN rn = 1 THEN cent_id END) AS BIGINT) AS cell,
-             CAST(ROUND(SQRT(MAX(CASE WHEN rn = 1 THEN d2 END)) * 1000000)
-                  AS BIGINT) AS a_u,
-             CAST(ROUND(SQRT(MAX(CASE WHEN rn = 2 THEN d2 END)) * 1000000)
-                  AS BIGINT) AS b_u
-      FROM dists WHERE rn <= 2 GROUP BY vec_id
-    )
-    SELECT vec_id, cell, a_u, b_u,
-           CAST(CASE WHEN GREATEST(a_u, b_u) = 0 THEN 0
-                ELSE (b_u - a_u) * 1000000 // GREATEST(a_u, b_u)
-                END AS BIGINT) AS sil_u
-    FROM ab
-    """
-
-
-@register("q131_simplified_silhouette", oracle=_q131_oracle())
-def q131_simplified_silhouette(spark, sf_dir):
-    from sparkextract.queries.wave4 import _km_quantized
-
-    eq = _km_quantized(spark, sf_dir)
-    cents = eq.filter(
-        (F.col("vec_id") >= 1) & (F.col("vec_id") <= _Q131_K)
-    ).select(F.col("vec_id").alias("cent_id"), F.col("e").alias("c"))
-    d2 = F.aggregate(
-        F.zip_with(F.col("e"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cent_id"))
-    dists = (
-        eq.filter(F.col("vec_id") > _Q131_K)
-        .crossJoin(F.broadcast(cents))
-        .select("vec_id", "cent_id", d2.alias("d2"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 2)
-    )
-    snap = lambda col: F.round(F.sqrt(col) * F.lit(1000000.0)).cast("long")
-    ab = dists.groupBy("vec_id").agg(
-        F.max(F.when(F.col("rn") == 1, F.col("cent_id")))
-        .cast("long")
-        .alias("cell"),
-        snap(F.max(F.when(F.col("rn") == 1, F.col("d2")))).alias("a_u"),
-        snap(F.max(F.when(F.col("rn") == 2, F.col("d2")))).alias("b_u"),
-    )
-    sil = F.when(F.greatest("a_u", "b_u") == 0, F.lit(0)).otherwise(
-        F.expr("(b_u - a_u) * 1000000 div greatest(a_u, b_u)")
-    )
-    return ab.select(
-        "vec_id", "cell", "a_u", "b_u", sil.cast("long").alias("sil_u")
-    )
-
-
-# --------------------------------------------------------------------------
 # q132: ENCODING REPAIR (fix-unicode / ftfy pass) — the first text-fix
 # step of every published pretraining pipeline (C4, Gopher, RefinedWeb
 # all "fix unicode" before any quality rule runs): a crawl shard that
@@ -548,10 +367,9 @@ def q131_simplified_silhouette(spark, sf_dir):
 # mis-decode) and PROVES per doc that repair restores the intended
 # text (roundtrip_ok). The pytest grounds the simulated byte mapping
 # in the actual encode/decode round trip.
-# Reference intent: the reference's OCR/text clean chain normalizes
-# extractor artifacts before storage (/root/reference/src/pdf_extraction/
-# text_processor.py clean chain); this is the encoding-level member of
-# that family at corpus scale.
+# Reference intent: the reference's OCR text clean chain normalizes
+# extractor artifacts before storage (`src/image_extractor.py:533-549`);
+# this is the encoding-level member of that family at corpus scale.
 #
 # Numeric discipline: string equality and integer counts only.
 # Scale shape: pure map-side string work on ONE narrow scan — zero
@@ -645,282 +463,3 @@ def q132_encoding_repair(spark, sf_dir):
     )
 
 
-# --------------------------------------------------------------------------
-# q133: CCNet HEAD/MIDDLE/TAIL PERPLEXITY BUCKETS (Wenzek et al. 2020)
-# — the op q87 deliberately does not do: q87 trains its LM on the
-# corpus ITSELF (self-perplexity gate); CCNet's defining move is to
-# train on a trusted REFERENCE slice (Wikipedia) and split every
-# language's crawl into head/middle/tail TERCILES of reference
-# perplexity, so downstream mixing can up/down-weight by distance from
-# the reference distribution. Here the trusted slice is source='src0'
-# (deterministic stand-in for the wiki dump): add-one unigram LM
-# p(t) = (c_ref(t)+1)/(N_ref+V) with V = full-corpus vocabulary (so
-# ref-unseen tokens get smoothed mass), per-doc score = mean ln p, and
-# per-LANGUAGE tercile assignment.
-#
-# Scale shape (the part that must survive 100x): terciles need per-lang
-# rank, and a window over (lang) at DOC grain is exactly the hot-key
-# window the q96/q99 de-skew rule forbids ('en' is half the corpus).
-# Instead ranks are computed on the SCORE-GRAIN table — groupBy(lang,
-# score) counts first (mergeable), then the cumulative window runs over
-# distinct rounded scores per lang, a grain bounded by (score range /
-# 1e-6 quantum) INDEPENDENT of corpus size — and docs get their bucket
-# back via an equi-join on (lang, score). The LM scoring join is
-# token-keyed like q73/q87 (no broadcast assumption: a web-scale
-# unigram table is large); the tokenized corpus is materialized once
-# (checkpoint_memo, the q87 single-scan discipline). Tercile boundaries
-# use first-rank-of-tie-group semantics (cum_excl < ceil(n/3)) so every
-# doc sharing a rounded score lands in the same bucket — deterministic
-# in both engines, no intra-tie ordering dependence.
-#
-# Numeric discipline: ln arg is a single division of exact-integer
-# doubles; per-doc score is ROUND(AVG(ln ...), 6) — the q87-vetted form
-# (sum-order error ~1e-13 against the 5e-7 quantum); the (lang, score)
-# join key is that rounded double, identical in both engines.
-# Reference intent: quality-weighted retrieval/storage decisions over
-# chunk confidence (/root/reference/src/rag/text_processor.py:578-581)
-# lifted to the corpus-mixing decision a pretraining pipeline makes.
-_Q133_REF_SOURCE = "src0"
-
-_Q133_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, lang, source, unnest(list_filter(string_split(text, ' '),
-         t -> t <> '')) AS t
-  FROM documents
-),
-cref AS (
-  SELECT t, CAST(COUNT(*) AS BIGINT) AS c
-  FROM toks WHERE source = '{_Q133_REF_SOURCE}' GROUP BY t
-),
-consts AS (
-  SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM toks
-          WHERE source = '{_Q133_REF_SOURCE}') AS n_ref,
-         (SELECT CAST(COUNT(DISTINCT t) AS BIGINT) FROM toks) AS v
-),
-scored AS (
-  SELECT toks.doc_id, toks.lang,
-         ROUND(AVG(ln(CAST(COALESCE(cref.c, 0) + 1 AS DOUBLE)
-                      / (consts.n_ref + consts.v))), 6) AS avg_logp
-  FROM toks LEFT JOIN cref USING (t) CROSS JOIN consts
-  GROUP BY toks.doc_id, toks.lang
-),
-sg AS (
-  SELECT lang, avg_logp, CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM scored GROUP BY lang, avg_logp
-),
-nl AS (SELECT lang, CAST(SUM(cnt) AS BIGINT) AS n FROM sg GROUP BY lang),
-ranked AS (
-  SELECT sg.lang, sg.avg_logp,
-         COALESCE(SUM(sg.cnt) OVER (
-           PARTITION BY sg.lang ORDER BY sg.avg_logp DESC
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_excl,
-         nl.n AS n
-  FROM sg JOIN nl USING (lang)
-),
-buckets AS (
-  SELECT lang, avg_logp,
-         CASE WHEN cum_excl < (n + 2) // 3 THEN 'head'
-              WHEN cum_excl < (2 * n + 2) // 3 THEN 'middle'
-              ELSE 'tail' END AS ppl_bucket
-  FROM ranked
-)
-SELECT s.doc_id, s.lang, s.avg_logp, b.ppl_bucket
-FROM scored s JOIN buckets b ON s.lang = b.lang AND s.avg_logp = b.avg_logp
-"""
-
-
-@register("q133_ccnet_buckets", oracle=_Q133_ORACLE)
-def q133_ccnet_buckets(spark, sf_dir):
-    toks = checkpoint_memo(
-        spark,
-        sf_dir,
-        "q133_toks",
-        lambda: (
-            load(spark, sf_dir, "documents")
-            .select(
-                "doc_id",
-                "lang",
-                "source",
-                F.explode(F.split("text", " ")).alias("t"),
-            )
-            .filter(F.col("t") != "")
-        ),
-    )
-    ref = toks.filter(F.col("source") == _Q133_REF_SOURCE)
-    cref = ref.groupBy("t").agg(F.count("*").alias("c"))
-    consts = ref.agg(F.count("*").alias("n_ref")).crossJoin(
-        toks.agg(F.countDistinct("t").alias("v"))
-    )
-    p = (F.coalesce(F.col("c"), F.lit(0)) + F.lit(1)).cast("double") / (
-        F.col("n_ref") + F.col("v")
-    )
-    scored = (
-        toks.join(cref, "t", "left")
-        .crossJoin(F.broadcast(consts))
-        .groupBy("doc_id", "lang")
-        .agg(F.round(F.avg(F.log(p)), 6).alias("avg_logp"))
-    )
-    sg = scored.groupBy("lang", "avg_logp").agg(F.count("*").alias("cnt"))
-    nl = sg.groupBy("lang").agg(F.sum("cnt").alias("n"))
-    wc = (
-        Window.partitionBy("lang")
-        .orderBy(F.desc("avg_logp"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = sg.join(F.broadcast(nl), "lang").withColumn(
-        "cum_excl", F.coalesce(F.sum("cnt").over(wc), F.lit(0))
-    )
-    buckets = ranked.select(
-        "lang",
-        "avg_logp",
-        F.when(F.col("cum_excl") < F.expr("(n + 2) div 3"), "head")
-        .when(F.col("cum_excl") < F.expr("(2 * n + 2) div 3"), "middle")
-        .otherwise("tail")
-        .alias("ppl_bucket"),
-    )
-    return scored.join(F.broadcast(buckets), ["lang", "avg_logp"]).select(
-        "doc_id", "lang", "avg_logp", "ppl_bucket"
-    )
-
-
-# --------------------------------------------------------------------------
-# q134: FIM (FILL-IN-THE-MIDDLE) TRANSFORM (Bavarian et al. 2022,
-# "Efficient Training of Language Models to Fill in the Middle") — the
-# data-prep step that turns a causal-LM corpus into one that also
-# teaches infilling: for a sampled fraction of documents, split the
-# text at two pseudo-random character positions into (prefix, middle,
-# suffix) and re-serialize as PSM '<PRE>p<SUF>s<MID>m' or SPM
-# '<SUF>s<PRE>p<MID>m'; the rest pass through unchanged. This is the
-# training-OBJECTIVE-side member of the corpus-layout family (q100
-# packs, q105 orders, q101 splits — q134 rewrites the example itself).
-# All randomness is the repo's engine-portable md5 discipline: the
-# FIM/plain coin, both cut positions, and the PSM/SPM coin are each
-# salted md5 buckets of doc_id, so the transform is deterministic,
-# resumable, and identically computable in the DuckDB oracle.
-# Reference intent: the reference re-serializes extracted content into
-# model-facing text layouts (table -> CSV / 'col: val' renderings,
-# /root/reference/src/rag/text_processor.py:387-423); this is that
-# re-serialization shape applied to the pretraining objective.
-#
-# Scale shape: pure map-side string arithmetic on ONE narrow scan —
-# zero shuffles, zero Python, whole-stage codegen (like q132).
-# Numeric discipline: integer positions and exact strings only; the
-# output text is compared by md5.
-_Q134_SENT = {"pre": "<PRE>", "suf": "<SUF>", "mid": "<MID>"}
-
-
-def _q134_h_sql(salt: str) -> str:
-    return (
-        f"CAST(('0x' || SUBSTRING(md5(CAST(doc_id AS VARCHAR) || '{salt}'),"
-        f" 1, 8)) AS UBIGINT)"
-    )
-
-
-_Q134_ORACLE = f"""
-WITH d AS (
-  SELECT doc_id, text, CAST(LENGTH(text) AS BIGINT) AS n,
-         {_q134_h_sql(':fim')} % 2 = 0 AND LENGTH(text) >= 2 AS is_fim,
-         {_q134_h_sql(':spm')} % 2 = 1 AS is_spm
-  FROM documents
-),
-cuts AS (
-  SELECT doc_id, text, n, is_fim, is_spm,
-         LEAST({_q134_h_sql(':c1')} % n, {_q134_h_sql(':c2')} % n) AS lo,
-         GREATEST({_q134_h_sql(':c1')} % n, {_q134_h_sql(':c2')} % n) AS hi
-  FROM d WHERE is_fim
-),
-fim AS (
-  SELECT doc_id,
-         CASE WHEN is_spm THEN 'spm' ELSE 'psm' END AS mode,
-         lo AS len_prefix, hi - lo AS len_middle, n - hi AS len_suffix,
-         CASE WHEN is_spm
-           THEN '{_Q134_SENT["suf"]}' || SUBSTRING(text, CAST(hi + 1 AS INT))
-                || '{_Q134_SENT["pre"]}' || SUBSTRING(text, 1, CAST(lo AS INT))
-                || '{_Q134_SENT["mid"]}' || SUBSTRING(text, CAST(lo + 1 AS INT), CAST(hi - lo AS INT))
-           ELSE '{_Q134_SENT["pre"]}' || SUBSTRING(text, 1, CAST(lo AS INT))
-                || '{_Q134_SENT["suf"]}' || SUBSTRING(text, CAST(hi + 1 AS INT))
-                || '{_Q134_SENT["mid"]}' || SUBSTRING(text, CAST(lo + 1 AS INT), CAST(hi - lo AS INT))
-         END AS fim_text
-  FROM cuts
-),
-plain AS (
-  SELECT doc_id, 'plain' AS mode,
-         n AS len_prefix, CAST(0 AS BIGINT) AS len_middle,
-         CAST(0 AS BIGINT) AS len_suffix, text AS fim_text
-  FROM d WHERE NOT is_fim
-)
-SELECT doc_id, mode,
-       CAST(len_prefix AS BIGINT) AS len_prefix,
-       CAST(len_middle AS BIGINT) AS len_middle,
-       CAST(len_suffix AS BIGINT) AS len_suffix,
-       md5(fim_text) AS fim_md5
-FROM (SELECT * FROM fim UNION ALL SELECT * FROM plain)
-"""
-
-
-def _q134_h(salt: str):
-    return F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(salt))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("long")
-
-
-@register("q134_fim_transform", oracle=_Q134_ORACLE)
-def q134_fim_transform(spark, sf_dir):
-    # single-scan CASE form: the oracle unions a fim and a plain CTE for
-    # SQL clarity, but scanning the corpus twice for a row-local rewrite
-    # is exactly the 2x read a 100 TB run cannot afford — every branch
-    # here is a conditional expression over ONE pass (PLANS.md: 1 scan,
-    # 0 shuffles). On plain rows with n = 0 the cut exprs go NULL
-    # (Spark's % 0) but the CASE never selects them.
-    pre, suf, mid = (
-        F.lit(_Q134_SENT["pre"]),
-        F.lit(_Q134_SENT["suf"]),
-        F.lit(_Q134_SENT["mid"]),
-    )
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        "text",
-        F.length("text").cast("long").alias("n"),
-        ((_q134_h(":fim") % 2 == 0) & (F.length("text") >= 2)).alias("is_fim"),
-        (_q134_h(":spm") % 2 == 1).alias("is_spm"),
-    )
-    c1, c2 = _q134_h(":c1") % F.col("n"), _q134_h(":c2") % F.col("n")
-    cuts = d.select(
-        "doc_id",
-        "text",
-        "n",
-        "is_fim",
-        "is_spm",
-        F.least(c1, c2).alias("lo"),
-        F.greatest(c1, c2).alias("hi"),
-    )
-    prefix = F.expr("substring(text, 1, cast(lo as int))")
-    middle = F.expr("substring(text, cast(lo + 1 as int), cast(hi - lo as int))")
-    suffix = F.expr("substring(text, cast(hi + 1 as int))")
-    is_fim = F.col("is_fim")
-    fim_text = (
-        F.when(~is_fim, F.col("text"))
-        .when(F.col("is_spm"), F.concat(suf, suffix, pre, prefix, mid, middle))
-        .otherwise(F.concat(pre, prefix, suf, suffix, mid, middle))
-    )
-    return cuts.select(
-        "doc_id",
-        F.when(~is_fim, "plain")
-        .when(F.col("is_spm"), "spm")
-        .otherwise("psm")
-        .alias("mode"),
-        F.when(is_fim, F.col("lo")).otherwise(F.col("n")).alias("len_prefix"),
-        F.when(is_fim, F.col("hi") - F.col("lo"))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("len_middle"),
-        F.when(is_fim, F.col("n") - F.col("hi"))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("len_suffix"),
-        F.md5(fim_text.cast("binary")).alias("fim_md5"),
-    )

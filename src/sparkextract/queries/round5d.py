@@ -113,7 +113,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sparkextract.queries.base import (
@@ -317,171 +316,12 @@ def q136_watermark_detect(spark, sf_dir):
 # --------------------------------------------------------------------------
 # q137 / q138: classifier evaluation over the binned score histogram
 
-_Q137_BIN_U = 500_000  # histogram bin width in logit micro-units
-_Q137_BIN_CLAMP = 40  # bins clamp to [-40, 40] -> <= 81 rows, provably tiny
-
-# shared histogram: (b, pos_b, neg_b) — label is lang = 'en'
-_Q137_HIST_SQL = f"""
-  SELECT LEAST(GREATEST(CAST(FLOOR(logit_u / {_Q137_BIN_U}.0) AS INTEGER),
-                        -{_Q137_BIN_CLAMP}), {_Q137_BIN_CLAMP}) AS b,
-         CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-           AS pos_b,
-         CAST(SUM(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS BIGINT)
-           AS neg_b
-  FROM ({_Q135_CORE_SQL})
-  GROUP BY 1
-"""
-
-_Q137_ORACLE = f"""
-WITH bkt AS ({_Q137_HIST_SQL}),
-c AS (
-  SELECT b, pos_b, neg_b,
-         COALESCE(SUM(neg_b) OVER (ORDER BY b
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS cumneg_lt
-  FROM bkt
-)
-SELECT CAST(SUM(pos_b) AS BIGINT) AS n_pos,
-       CAST(SUM(neg_b) AS BIGINT) AS n_neg,
-       CAST(COUNT(*) AS BIGINT) AS n_bins,
-       CAST(ROUND(CAST(SUM(2 * pos_b * cumneg_lt + pos_b * neg_b)
-                       AS DOUBLE) * 1000000.0
-                  / (2.0 * SUM(pos_b) * SUM(neg_b))) AS BIGINT) AS auc_u
-FROM c
-"""
-
-
-def _q137_hist(spark, sf_dir):
-    f = _q135_features(spark, sf_dir)
-    b = F.least(
-        F.greatest(
-            F.floor(F.col("logit_u") / F.lit(float(_Q137_BIN_U))).cast("int"),
-            F.lit(-_Q137_BIN_CLAMP),
-        ),
-        F.lit(_Q137_BIN_CLAMP),
-    )
-    pos = F.when(F.col("lang") == "en", 1).otherwise(0)
-    return f.groupBy(b.alias("b")).agg(
-        F.sum(pos).cast("long").alias("pos_b"),
-        F.sum(1 - pos).cast("long").alias("neg_b"),
-    )
-
-
-@register("q137_roc_auc", oracle=_Q137_ORACLE)
-def q137_roc_auc(spark, sf_dir):
-    bkt = _q137_hist(spark, sf_dir)
-    # <= 81 rows: the documented tiny-grain exception to the
-    # no-global-window rule (CLAUDE.md) — identical shape to the oracle
-    w = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-    c = bkt.select(
-        "b",
-        "pos_b",
-        "neg_b",
-        F.coalesce(F.sum("neg_b").over(w), F.lit(0)).alias("cumneg_lt"),
-    )
-    num2 = F.sum(
-        2 * F.col("pos_b") * F.col("cumneg_lt")
-        + F.col("pos_b") * F.col("neg_b")
-    )
-    p = F.sum("pos_b")
-    n = F.sum("neg_b")
-    return c.agg(
-        p.cast("long").alias("n_pos"),
-        n.cast("long").alias("n_neg"),
-        F.count("*").cast("long").alias("n_bins"),
-        F.round(
-            num2.cast("double") * F.lit(1000000.0)
-            / (F.lit(2.0) * p * n)
-        )
-        .cast("long")
-        .alias("auc_u"),
-    )
-
-
-# thresholds: multiples of the bin width, so logit_u >= t <=> b >= t/width
-_Q138_THRESHOLDS_U = (
-    -2_000_000,
-    -1_500_000,
-    -1_000_000,
-    -500_000,
-    0,
-    500_000,
-    1_000_000,
-)
-
 
 def _q138_ratio_sql(num: str, den: str) -> str:
     return (
         f"CASE WHEN {den} = 0 THEN CAST(-1 AS BIGINT) "
         f"ELSE CAST(ROUND(CAST({num} AS DOUBLE) * 1000000.0 "
         f"/ ({den})) AS BIGINT) END"
-    )
-
-
-_Q138_ORACLE = f"""
-WITH bkt AS ({_Q137_HIST_SQL}),
-thr AS (
-  SELECT UNNEST([{", ".join(str(t) for t in _Q138_THRESHOLDS_U)}])
-    AS threshold_u
-),
-cm AS (
-  SELECT t.threshold_u,
-         CAST(SUM(CASE WHEN b.b >= t.threshold_u / {_Q137_BIN_U}
-                       THEN b.pos_b ELSE 0 END) AS BIGINT) AS tp,
-         CAST(SUM(CASE WHEN b.b >= t.threshold_u / {_Q137_BIN_U}
-                       THEN b.neg_b ELSE 0 END) AS BIGINT) AS fp,
-         CAST(SUM(CASE WHEN b.b >= t.threshold_u / {_Q137_BIN_U}
-                       THEN 0 ELSE b.pos_b END) AS BIGINT) AS fn
-  FROM thr t CROSS JOIN bkt b
-  GROUP BY 1
-)
-SELECT threshold_u, tp, fp, fn,
-       {_q138_ratio_sql('tp', 'tp + fp')} AS precision_u,
-       {_q138_ratio_sql('tp', 'tp + fn')} AS recall_u,
-       {_q138_ratio_sql('2 * tp', '2 * tp + fp + fn')} AS f1_u
-FROM cm
-"""
-
-
-@register("q138_pr_thresholds", oracle=_Q138_ORACLE)
-def q138_pr_thresholds(spark, sf_dir):
-    bkt = _q137_hist(spark, sf_dir)
-    thr = spark.createDataFrame(
-        [(t,) for t in _Q138_THRESHOLDS_U], "threshold_u long"
-    )
-    # tiny x tiny: <= 81-row histogram against 7 broadcast thresholds
-    k = (F.col("threshold_u") / _Q137_BIN_U).cast("int")
-    hit = F.col("b") >= k
-    cm = (
-        bkt.crossJoin(F.broadcast(thr))
-        .groupBy("threshold_u")
-        .agg(
-            F.sum(F.when(hit, F.col("pos_b")).otherwise(0))
-            .cast("long")
-            .alias("tp"),
-            F.sum(F.when(hit, F.col("neg_b")).otherwise(0))
-            .cast("long")
-            .alias("fp"),
-            F.sum(F.when(hit, F.lit(0)).otherwise(F.col("pos_b")))
-            .cast("long")
-            .alias("fn"),
-        )
-    )
-
-    def _ratio(num, den):
-        return F.when(den == 0, F.lit(-1).cast("long")).otherwise(
-            F.round(num.cast("double") * F.lit(1000000.0) / den).cast("long")
-        )
-
-    tp, fp, fn = F.col("tp"), F.col("fp"), F.col("fn")
-    return cm.select(
-        "threshold_u",
-        "tp",
-        "fp",
-        "fn",
-        _ratio(tp, tp + fp).alias("precision_u"),
-        _ratio(tp, tp + fn).alias("recall_u"),
-        _ratio(2 * tp, 2 * tp + fp + fn).alias("f1_u"),
     )
 
 
@@ -603,118 +443,6 @@ def q139_bitext_candidates(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # q140: delete-group jackknife CI for the corpus keep rate
-
-_Q140_FOLDS = 32
-
-_Q140_ORACLE = f"""
-WITH f AS ({_Q135_CORE_SQL}),
-d AS (
-  SELECT {md5_bucket_sql("doc_id", _Q140_FOLDS)} AS fold,
-         (logit_u >= 0) AS keep
-  FROM f
-),
-per AS (
-  SELECT fold, CAST(count(*) AS BIGINT) AS n_i,
-         CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS k_i
-  FROM d GROUP BY 1
-),
-tot AS (
-  SELECT CAST(SUM(n_i) AS BIGINT) AS n, CAST(SUM(k_i) AS BIGINT) AS k,
-         CAST(COUNT(*) AS BIGINT) AS nf
-  FROM per
-),
-rep AS (
-  SELECT p.fold, t.n, t.k, t.nf,
-         CAST(t.k - p.k_i AS DOUBLE) / (t.n - p.n_i) AS p_i
-  FROM per p CROSS JOIN tot t
-),
-m AS (
-  SELECT n, k, nf,
-         CAST(SUM(CAST(ROUND(p_i, 12) AS DECIMAL(18,12))) AS DOUBLE) / nf
-           AS pbar
-  FROM rep GROUP BY n, k, nf
-),
-dev AS (
-  SELECT r.n, r.k, r.nf,
-         CAST(SUM(CAST(ROUND((r.p_i - m.pbar) * (r.p_i - m.pbar), 12)
-                       AS DECIMAL(18,12))) AS DOUBLE) AS ss
-  FROM rep r CROSS JOIN m
-  GROUP BY r.n, r.k, r.nf
-)
-SELECT n AS n_docs, k AS n_keep, nf AS n_folds,
-       CAST(ROUND(CAST(k AS DOUBLE) / n * 1000000.0) AS BIGINT)
-         AS keep_rate_u,
-       CAST(ROUND(sqrt((nf - 1.0) / nf * ss) * 1000000.0) AS BIGINT)
-         AS se_u,
-       CAST(ROUND((CAST(k AS DOUBLE) / n
-                   - 1.96 * sqrt((nf - 1.0) / nf * ss)) * 1000000.0)
-            AS BIGINT) AS ci_lo_u,
-       CAST(ROUND((CAST(k AS DOUBLE) / n
-                   + 1.96 * sqrt((nf - 1.0) / nf * ss)) * 1000000.0)
-            AS BIGINT) AS ci_hi_u
-FROM dev
-"""
-
-
-@register("q140_jackknife_ci", oracle=_Q140_ORACLE)
-def q140_jackknife_ci(spark, sf_dir):
-    f = _q135_features(spark, sf_dir)
-    d = f.select(
-        md5_bucket(F.col("doc_id"), _Q140_FOLDS).alias("fold"),
-        (F.col("logit_u") >= 0).alias("keep"),
-    )
-    per = d.groupBy("fold").agg(
-        F.count("*").cast("long").alias("n_i"),
-        F.sum(F.when(F.col("keep"), 1).otherwise(0))
-        .cast("long")
-        .alias("k_i"),
-    )
-    tot = per.agg(
-        F.sum("n_i").cast("long").alias("n"),
-        F.sum("k_i").cast("long").alias("k"),
-        F.count("*").cast("long").alias("nf"),
-    )
-    rep = per.crossJoin(F.broadcast(tot)).select(
-        "fold",
-        "n",
-        "k",
-        "nf",
-        ((F.col("k") - F.col("k_i")).cast("double") / (F.col("n") - F.col("n_i")))
-        .alias("p_i"),
-    )
-    m = rep.groupBy("n", "k", "nf").agg(
-        (
-            F.sum(F.round("p_i", 12).cast("decimal(18,12)")).cast("double")
-            / F.col("nf")
-        ).alias("pbar")
-    )
-    dev = (
-        rep.crossJoin(F.broadcast(m.select("pbar")))
-        .groupBy("n", "k", "nf")
-        .agg(
-            F.sum(
-                F.round(
-                    (F.col("p_i") - F.col("pbar"))
-                    * (F.col("p_i") - F.col("pbar")),
-                    12,
-                ).cast("decimal(18,12)")
-            )
-            .cast("double")
-            .alias("ss")
-        )
-    )
-    n_d = F.col("n").cast("double")
-    rate = F.col("k").cast("double") / n_d
-    se = F.sqrt((F.col("nf") - F.lit(1.0)) / F.col("nf") * F.col("ss"))
-    return dev.select(
-        F.col("n").alias("n_docs"),
-        F.col("k").alias("n_keep"),
-        F.col("nf").alias("n_folds"),
-        F.round(rate * 1000000.0).cast("long").alias("keep_rate_u"),
-        F.round(se * 1000000.0).cast("long").alias("se_u"),
-        F.round((rate - 1.96 * se) * 1000000.0).cast("long").alias("ci_lo_u"),
-        F.round((rate + 1.96 * se) * 1000000.0).cast("long").alias("ci_hi_u"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -874,108 +602,6 @@ def q141_secret_scan_eval(spark, sf_dir):
 # stride against rounding to zero when a language's char mass exceeds
 # the scale constant.
 
-_Q142_SHARDS = 64
-_Q142_SPAN = (1 << 32) // _Q142_SHARDS
-_Q142_SCALE = 1_000_000_000_000  # must exceed per-language char mass
-_Q142_TOPN = 100
-
-
-def _q142_h_sql(col: str) -> str:
-    return (
-        f"CAST(('0x' || SUBSTRING(md5(CAST({col} AS VARCHAR)), 1, 8))"
-        f" AS UBIGINT)"
-    )
-
-
-_Q142_ORACLE = f"""
-WITH w AS (
-  SELECT lang, CAST(SUM(n_chars) AS BIGINT) AS wc
-  FROM documents GROUP BY lang
-),
-r AS (
-  SELECT doc_id, lang,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY lang
-           ORDER BY {_q142_h_sql("doc_id")}, doc_id) - 1 AS BIGINT) AS k
-  FROM documents
-),
-keyed AS (
-  SELECT r.doc_id, r.lang, r.k,
-         (2 * r.k + 1)
-           * GREATEST(CAST(ROUND({_Q142_SCALE}.0 / w.wc) AS BIGINT), 1)
-           AS sched_key
-  FROM r JOIN w USING (lang)
-),
-top AS (
-  SELECT * FROM keyed ORDER BY sched_key, lang, k LIMIT {_Q142_TOPN}
-)
-SELECT CAST(ROW_NUMBER() OVER (ORDER BY sched_key, lang, k) AS BIGINT)
-         AS slot,
-       doc_id, lang, k, sched_key
-FROM top
-"""
-
-
-@register("q142_stride_schedule", oracle=_Q142_ORACLE)
-def q142_stride_schedule(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    hk = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
-    h = docs.select(
-        "doc_id",
-        "lang",
-        "n_chars",
-        hk.alias("hk"),
-        F.floor(hk / _Q142_SPAN).cast("int").alias("shard"),
-    )
-    wr = Window.partitionBy("lang", "shard").orderBy("hk", "doc_id")
-    ranked = checkpoint_memo(
-        spark,
-        sf_dir,
-        "q142_ranked",
-        lambda: h.withColumn("rk", F.row_number().over(wr).cast("long")),
-    )
-    sizes = ranked.groupBy("lang", "shard").agg(F.max("rk").alias("cnt"))
-    # lang x shard grain (<= 5*64 rows): tiny cumulative for the offsets
-    wo = (
-        Window.partitionBy("lang")
-        .orderBy("shard")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = sizes.select(
-        "lang",
-        "shard",
-        F.coalesce(F.sum("cnt").over(wo), F.lit(0)).alias("offset"),
-    )
-    k = (F.col("offset") + F.col("rk") - 1).cast("long")
-    weights = ranked.groupBy("lang").agg(
-        F.sum("n_chars").cast("long").alias("wc")
-    )
-    stride = F.greatest(
-        F.round(F.lit(float(_Q142_SCALE)) / F.col("wc")).cast("long"),
-        F.lit(1).cast("long"),
-    )
-    keyed = (
-        ranked.join(F.broadcast(offsets), ["lang", "shard"])
-        .join(F.broadcast(weights), "lang")
-        .select(
-            "doc_id",
-            "lang",
-            k.alias("k"),
-            ((2 * k + 1) * stride).alias("sched_key"),
-        )
-    )
-    top = keyed.orderBy("sched_key", "lang", "k").limit(_Q142_TOPN)
-    ws = Window.orderBy("sched_key", "lang", "k")  # 100 rows: tiny grain
-    return top.select(
-        F.row_number().over(ws).cast("long").alias("slot"),
-        "doc_id",
-        "lang",
-        "k",
-        "sched_key",
-    )
-
 
 # --------------------------------------------------------------------------
 # q143: TRIANGLE COUNT + GLOBAL CLUSTERING COEFFICIENT over the q119
@@ -996,183 +622,6 @@ def q142_stride_schedule(spark, sf_dir):
 # materialized once via checkpoint_memo (each feeds two subtrees);
 # every join is keyed (node or canonical edge), nothing broadcasts a
 # corpus-sized side, no window anywhere.
-
-_Q143_FANOUT = 3
-_Q143_TOPK = 10
-
-
-def _q143_oracle() -> str:
-    from sparkextract.queries.round5b import _cite_bucket_sql
-
-    edges_sel = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {_cite_bucket_sql(j)} AS dst"
-        f" FROM documents, n"
-        for j in range(_Q143_FANOUT)
-    )
-    return f"""
-WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-edges0 AS ({edges_sel}),
-eu AS (
-  SELECT DISTINCT LEAST(src, dst) AS lo, GREATEST(src, dst) AS hi
-  FROM edges0 WHERE src <> dst
-),
-deg AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS d
-  FROM (SELECT lo AS node FROM eu UNION ALL SELECT hi FROM eu)
-  GROUP BY 1
-),
-ori AS (
-  SELECT CASE WHEN (dl.d, e.lo) < (dh.d, e.hi) THEN e.lo ELSE e.hi END AS u,
-         CASE WHEN (dl.d, e.lo) < (dh.d, e.hi) THEN e.hi ELSE e.lo END AS v
-  FROM eu e
-  JOIN deg dl ON dl.node = e.lo
-  JOIN deg dh ON dh.node = e.hi
-),
-wedge AS (
-  SELECT a.u AS w, a.v AS x, b.v AS y
-  FROM ori a JOIN ori b ON a.u = b.u AND a.v < b.v
-),
-tri AS (
-  SELECT w.w AS a, w.x AS b, w.y AS c
-  FROM wedge w
-  JOIN eu ON eu.lo = LEAST(w.x, w.y) AND eu.hi = GREATEST(w.x, w.y)
-),
-pernode AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS n_triangles
-  FROM (SELECT a AS node FROM tri
-        UNION ALL SELECT b FROM tri
-        UNION ALL SELECT c FROM tri)
-  GROUP BY 1
-),
-globals AS (
-  SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM deg) AS n_nodes,
-         (SELECT CAST(COUNT(*) AS BIGINT) FROM eu) AS n_edges,
-         (SELECT CAST(COUNT(*) AS BIGINT) FROM tri) AS total_triangles,
-         (SELECT CAST(SUM(d * (d - 1) // 2) AS BIGINT) FROM deg)
-           AS n_wedges
-)
-SELECT p.node, p.n_triangles, g.n_nodes, g.n_edges, g.total_triangles,
-       CAST(ROUND(CAST(3 * g.total_triangles AS DOUBLE) * 1000000.0
-                  / g.n_wedges) AS BIGINT) AS gcc_u
-FROM pernode p CROSS JOIN globals g
-ORDER BY p.n_triangles DESC, p.node ASC
-LIMIT {_Q143_TOPK}
-"""
-
-
-@register("q143_triangle_count", oracle=_q143_oracle())
-def q143_triangle_count(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    n_docs = docs.count()
-
-    def _cite(j):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("doc_id").cast("string"), F.lit(f"#{j}")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % n_docs
-        )
-
-    def _build_eu():
-        parts = [
-            docs.select(
-                F.col("doc_id").alias("src"), _cite(j).alias("dst")
-            )
-            for j in range(_Q143_FANOUT)
-        ]
-        e = parts[0]
-        for p in parts[1:]:
-            e = e.unionByName(p)
-        e = e.filter(F.col("src") != F.col("dst"))
-        return e.select(
-            F.least("src", "dst").alias("lo"),
-            F.greatest("src", "dst").alias("hi"),
-        ).distinct()
-
-    # eu feeds three subtrees (degree table, orientation, closing join)
-    eu = checkpoint_memo(spark, sf_dir, "q143_eu", _build_eu)
-
-    def _build_ori():
-        deg = (
-            eu.select(F.col("lo").alias("node"))
-            .unionByName(eu.select(F.col("hi").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").cast("long").alias("d"))
-        )
-        dl = deg.select(F.col("node").alias("lo"), F.col("d").alias("d_lo"))
-        dh = deg.select(F.col("node").alias("hi"), F.col("d").alias("d_hi"))
-        j = eu.join(dl, "lo").join(dh, "hi")
-        lo_first = (F.col("d_lo") < F.col("d_hi")) | (
-            (F.col("d_lo") == F.col("d_hi")) & (F.col("lo") < F.col("hi"))
-        )
-        return j.select(
-            F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
-            F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
-        )
-
-    # the oriented adjacency self-joins with itself — materialize once
-    ori = checkpoint_memo(spark, sf_dir, "q143_ori", _build_ori)
-    a = ori.select(F.col("u").alias("w"), F.col("v").alias("x"))
-    b = ori.select(F.col("u").alias("w"), F.col("v").alias("y"))
-    wedge = a.join(b, "w").filter(F.col("x") < F.col("y"))
-    tri = wedge.join(
-        eu,
-        (eu["lo"] == F.least("x", "y")) & (eu["hi"] == F.greatest("x", "y")),
-    ).select("w", "x", "y")
-    tri = checkpoint_memo(spark, sf_dir, "q143_tri", lambda: tri)
-    pernode = (
-        tri.select(F.col("w").alias("node"))
-        .unionByName(tri.select(F.col("x").alias("node")))
-        .unionByName(tri.select(F.col("y").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("n_triangles"))
-    )
-    deg_und = (
-        eu.select(F.col("lo").alias("node"))
-        .unionByName(eu.select(F.col("hi").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("d"))
-    )
-    globals_df = (
-        deg_und.agg(
-            F.count("*").cast("long").alias("n_nodes"),
-            F.sum(
-                (F.col("d") * (F.col("d") - 1) / 2).cast("long")
-            ).alias("n_wedges"),
-        )
-        .crossJoin(eu.agg(F.count("*").cast("long").alias("n_edges")))
-        .crossJoin(
-            tri.agg(F.count("*").cast("long").alias("total_triangles"))
-        )
-    )
-    gcc = F.round(
-        (3 * F.col("total_triangles")).cast("double")
-        * F.lit(1000000.0)
-        / F.col("n_wedges")
-    ).cast("long")
-    return (
-        pernode.crossJoin(F.broadcast(globals_df))
-        .select(
-            "node",
-            "n_triangles",
-            "n_nodes",
-            "n_edges",
-            "total_triangles",
-            gcc.alias("gcc_u"),
-        )
-        .orderBy(F.desc("n_triangles"), F.asc("node"))
-        .limit(_Q143_TOPK)
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1198,136 +647,6 @@ def q143_triangle_count(spark, sf_dir):
 # Scale shape: three groupBys over method keys (map-side combinable)
 # + doc_id-keyed semi-joins for the intersections; the flagged sets
 # are corpus-fraction sized; nothing is all-pairs.
-
-_Q144_CORPUS = """
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text
-  FROM documents WHERE doc_id % 13 = 0
-  UNION ALL
-  SELECT doc_id + 2000000 AS doc_id, text || ' extra' AS text
-  FROM documents WHERE doc_id % 7 = 0
-"""
-
-_Q144_PREFIX_K = 8
-
-_Q144_ORACLE = f"""
-WITH corpus AS ({_Q144_CORPUS}),
-t AS (
-  SELECT doc_id, text,
-         list_filter(string_split(text, ' '), x -> x <> '') AS l
-  FROM corpus
-),
-feat AS (
-  SELECT doc_id,
-         md5(text) AS ek,
-         CASE WHEN len(l) >= 2 THEN
-           list_min(list_transform(range(2, len(l) + 1),
-                                   i -> md5(l[i - 1] || '|' || l[i])))
-         ELSE md5(text) END AS mk,
-         md5(array_to_string(l[1:{_Q144_PREFIX_K}], ' ')) AS pk
-  FROM t
-),
-fe AS (SELECT doc_id FROM feat
-       WHERE ek IN (SELECT ek FROM feat GROUP BY ek HAVING COUNT(*) > 1)),
-fm AS (SELECT doc_id FROM feat
-       WHERE mk IN (SELECT mk FROM feat GROUP BY mk HAVING COUNT(*) > 1)),
-fp AS (SELECT doc_id FROM feat
-       WHERE pk IN (SELECT pk FROM feat GROUP BY pk HAVING COUNT(*) > 1))
-SELECT
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM fe) AS n_exact,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM fm) AS n_minhash,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM fp) AS n_prefix,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM fe WHERE doc_id IN
-     (SELECT doc_id FROM fm)) AS n_em,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM fe WHERE doc_id IN
-     (SELECT doc_id FROM fp)) AS n_ep,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM fm WHERE doc_id IN
-     (SELECT doc_id FROM fp)) AS n_mp,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM fe WHERE doc_id IN
-     (SELECT doc_id FROM fm) AND doc_id IN
-     (SELECT doc_id FROM fp)) AS n_emp
-"""
-
-
-@register("q144_dedup_venn_audit", oracle=_Q144_ORACLE)
-def q144_dedup_venn_audit(spark, sf_dir):
-    def _build_feat():
-        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        clones = docs.filter(F.col("doc_id") % 13 == 0).select(
-            (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-        )
-        near = docs.filter(F.col("doc_id") % 7 == 0).select(
-            (F.col("doc_id") + 2000000).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" extra")).alias("text"),
-        )
-        corpus = docs.unionByName(clones).unionByName(near)
-        l = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
-        c = corpus.select("doc_id", "text", l.alias("l"))
-        lcol = F.col("l")
-        bigram_mins = F.array_min(
-            F.transform(
-                F.sequence(F.lit(2), F.size(lcol)),
-                lambda i: F.md5(
-                    F.concat(
-                        F.element_at(lcol, i - F.lit(1)),
-                        F.lit("|"),
-                        F.element_at(lcol, i),
-                    )
-                ),
-            )
-        )
-        mk = F.when(F.size(lcol) >= 2, bigram_mins).otherwise(F.md5("text"))
-        pk = F.md5(
-            F.array_join(F.slice(lcol, 1, _Q144_PREFIX_K), " ")
-        )
-        return c.select(
-            "doc_id",
-            F.md5("text").alias("ek"),
-            mk.alias("mk"),
-            pk.alias("pk"),
-        )
-
-    # the feature table feeds six subtrees (3 dup-key filters + the
-    # intersection joins) — materialize once per (session, input)
-    feat = checkpoint_memo(spark, sf_dir, "q144_feat", _build_feat)
-
-    def _flagged(key):
-        dupkeys = (
-            feat.groupBy(key)
-            .count()
-            .filter(F.col("count") > 1)
-            .select(key)
-        )
-        return feat.join(dupkeys, key).select("doc_id")
-
-    fe = checkpoint_memo(
-        spark, sf_dir, "q144_fe", lambda: _flagged("ek")
-    )
-    fm = checkpoint_memo(
-        spark, sf_dir, "q144_fm", lambda: _flagged("mk")
-    )
-    fp = checkpoint_memo(
-        spark, sf_dir, "q144_fp", lambda: _flagged("pk")
-    )
-
-    def _n(df):
-        return df.agg(F.count("*").cast("long"))
-
-    def _n2(a, b):
-        return a.join(b, "doc_id", "semi").agg(F.count("*").cast("long"))
-
-    em = fe.join(fm, "doc_id", "semi")
-    out = (
-        _n(fe).toDF("n_exact")
-        .crossJoin(_n(fm).toDF("n_minhash"))
-        .crossJoin(_n(fp).toDF("n_prefix"))
-        .crossJoin(_n2(fe, fm).toDF("n_em"))
-        .crossJoin(_n2(fe, fp).toDF("n_ep"))
-        .crossJoin(_n2(fm, fp).toDF("n_mp"))
-        .crossJoin(_n2(em, fp).toDF("n_emp"))
-    )
-    return out
 
 
 # --------------------------------------------------------------------------

@@ -81,7 +81,6 @@ from sparkextract.queries.base import (
     register,
 )
 from sparkextract.queries.round5b import _Q125_ORACLE, q125_bm25_topk
-from sparkextract.queries.round5d import _Q137_HIST_SQL, _q137_hist
 
 # --------------------------------------------------------------------------
 # q154: content-defined chunking + shift-invariance audit
@@ -256,56 +255,6 @@ def q154_cdc_chunking(spark, sf_dir):
 # --------------------------------------------------------------------------
 # q155: Pareto-frontier data selection over (distinct tokens, length)
 
-_Q155_ORACLE = """
-WITH per_doc AS (
-  SELECT lang,
-         CAST(LENGTH(list_distinct(string_split(text, ' '))) AS BIGINT)
-           AS x,
-         CAST(n_chars AS BIGINT) AS y
-  FROM documents
-), grp AS (
-  SELECT lang, x,
-         CAST(MAX(y) AS BIGINT) AS y_max,
-         CAST(COUNT(*) AS BIGINT) AS n_docs
-  FROM per_doc GROUP BY lang, x
-)
-SELECT lang, x, y_max, n_docs,
-       (y_max > COALESCE(MAX(y_max) OVER (PARTITION BY lang ORDER BY x ASC
-          RANGE BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING), -1))
-         AS frontier
-FROM grp
-"""
-
-
-@register("q155_pareto_frontier", oracle=_Q155_ORACLE)
-def q155_pareto_frontier(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    per_doc = docs.select(
-        "lang",
-        F.size(F.array_distinct(F.split("text", " "))).cast("long").alias("x"),
-        F.col("n_chars").cast("long").alias("y"),
-    )
-    grp = per_doc.groupBy("lang", "x").agg(
-        F.max("y").cast("long").alias("y_max"),
-        F.count("*").cast("long").alias("n_docs"),
-    )
-    # suffix max over the tiny (lang, x) grain: all rows with strictly
-    # larger x (the documented tiny-grain window exception)
-    w = (
-        Window.partitionBy("lang")
-        .orderBy(F.col("x").asc())
-        .rangeBetween(1, Window.unboundedFollowing)
-    )
-    return grp.select(
-        "lang",
-        "x",
-        "y_max",
-        "n_docs",
-        (F.col("y_max") > F.coalesce(F.max("y_max").over(w), F.lit(-1))).alias(
-            "frontier"
-        ),
-    )
-
 
 # --------------------------------------------------------------------------
 # q156: nDCG@k over the q125 BM25 ranking
@@ -393,64 +342,6 @@ def q156_ndcg_eval(spark, sf_dir):
 # --------------------------------------------------------------------------
 # q157: binned expected calibration error over the q137 histogram
 
-_Q157_BIN_U = 500_000  # = _Q137_BIN_U; bin center sigmoid arg is
 # (b + 0.5) * 0.5 in logits
 
-_Q157_ORACLE = f"""
-WITH bkt AS ({_Q137_HIST_SQL}),
-per_bin AS (
-  SELECT b,
-         CAST(pos_b + neg_b AS BIGINT) AS n_b,
-         CAST(pos_b AS BIGINT) AS pos_b,
-         CAST(ROUND(1000000.0 / (1.0 + EXP(-((b + 0.5) * 0.5)))) AS BIGINT)
-           AS conf_u,
-         CAST(ROUND(1000000.0 * pos_b / (pos_b + neg_b)) AS BIGINT) AS acc_u
-  FROM bkt
-)
-SELECT b, n_b, pos_b, conf_u, acc_u,
-       CAST(ABS(acc_u - conf_u) AS BIGINT) AS gap_u,
-       CAST(ROUND(CAST(SUM(ABS(acc_u - conf_u) * n_b) OVER () AS DOUBLE)
-                  / SUM(n_b) OVER ()) AS BIGINT) AS ece_u
-FROM per_bin
-"""
 
-
-@register("q157_calibration_ece", oracle=_Q157_ORACLE)
-def q157_calibration_ece(spark, sf_dir):
-    bkt = _q137_hist(spark, sf_dir)
-    n_b = (F.col("pos_b") + F.col("neg_b")).cast("long")
-    conf_u = (
-        F.round(
-            F.lit(1000000.0)
-            / (F.lit(1.0) + F.exp(-((F.col("b") + F.lit(0.5)) * F.lit(0.5))))
-        )
-        .cast("long")
-    )
-    acc_u = (
-        F.round(F.lit(1000000.0) * F.col("pos_b") / (F.col("pos_b") + F.col("neg_b")))
-        .cast("long")
-    )
-    per_bin = bkt.select(
-        "b",
-        n_b.alias("n_b"),
-        F.col("pos_b").cast("long").alias("pos_b"),
-        conf_u.alias("conf_u"),
-        acc_u.alias("acc_u"),
-    )
-    # <= 81 rows: the documented tiny-grain exception
-    w = Window.partitionBy()
-    gap = F.abs(F.col("acc_u") - F.col("conf_u"))
-    return per_bin.select(
-        "b",
-        "n_b",
-        "pos_b",
-        "conf_u",
-        "acc_u",
-        gap.cast("long").alias("gap_u"),
-        F.round(
-            F.sum(gap * F.col("n_b")).over(w).cast("double")
-            / F.sum("n_b").over(w)
-        )
-        .cast("long")
-        .alias("ece_u"),
-    )

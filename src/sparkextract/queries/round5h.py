@@ -58,99 +58,6 @@ from sparkextract.queries.base import load, register
 # --------------------------------------------------------------------------
 # q158: domain-suffix blocklist via bounded suffix explode + broadcast join
 
-_Q158_HOSTS_SQL = """
-  SELECT doc_id,
-         'h' || CAST(doc_id % 5 AS VARCHAR)
-           || '.site' || CAST(doc_id % 23 AS VARCHAR)
-           || '.' || (CASE doc_id % 3 WHEN 0 THEN 'com' WHEN 1 THEN 'org'
-                      ELSE 'net' END) AS host
-  FROM documents
-"""
-
-_Q158_BLOCKLIST = (
-    "org",            # a whole TLD
-    "site7.com",      # a registrable domain (all its hosts)
-    "site16.net",     # another, on the third TLD
-    "h2.site11.net",  # one exact host
-    "absent.example", # never matches — proves no-hit entries still report
-)
-
-_Q158_BL_SQL = " UNION ALL ".join(
-    f"SELECT '{e}' AS entry" for e in _Q158_BLOCKLIST
-)
-
-_Q158_ORACLE = f"""
-WITH hosts AS ({_Q158_HOSTS_SQL}),
-suffixes AS (
-  SELECT doc_id, host,
-         array_to_string(labels[i:], '.') AS suffix
-  FROM (
-    SELECT doc_id, host, string_split(host, '.') AS labels FROM hosts
-  ), UNNEST(generate_series(1, len(labels))) AS t(i)
-),
-bl AS ({_Q158_BL_SQL}),
-hits AS (
-  SELECT bl.entry, s.doc_id
-  FROM bl LEFT JOIN suffixes s ON s.suffix = bl.entry
-)
-SELECT entry,
-       CAST(COUNT(doc_id) AS BIGINT) AS n_blocked,
-       CAST(COALESCE(MIN(doc_id), -1) AS BIGINT) AS min_doc
-FROM hits GROUP BY entry
-"""
-
-
-@register("q158_suffix_blocklist", oracle=_Q158_ORACLE)
-def q158_suffix_blocklist(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    host = F.concat(
-        F.lit("h"),
-        (F.col("doc_id") % 5).cast("string"),
-        F.lit(".site"),
-        (F.col("doc_id") % 23).cast("string"),
-        F.lit("."),
-        F.when(F.col("doc_id") % 3 == 0, "com")
-        .when(F.col("doc_id") % 3 == 1, "org")
-        .otherwise("net"),
-    )
-    labeled = docs.select("doc_id", F.split(host, "\\.").alias("labels"))
-    # bounded map-side fan-out: one row per label-suffix (<= host depth)
-    suffixes = labeled.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("labels") - 1),
-                lambda i: F.array_join(
-                    F.slice(
-                        F.col("labels"), i + 1, F.size("labels") - i
-                    ),
-                    ".",
-                ),
-            )
-        ).alias("suffix"),
-    )
-    bl = spark.createDataFrame(
-        [(e,) for e in _Q158_BLOCKLIST], "entry string"
-    )
-    # corpus-side match is an INNER BroadcastHashJoin (Spark cannot
-    # broadcast the preserved side of an outer join); no-hit entries are
-    # restored by a 5-row x 5-row left join afterwards
-    hits = (
-        suffixes.join(
-            F.broadcast(bl), suffixes["suffix"] == bl["entry"], "inner"
-        )
-        .groupBy("entry")
-        .agg(
-            F.count("doc_id").cast("long").alias("nb"),
-            F.min("doc_id").cast("long").alias("md"),
-        )
-    )
-    return bl.join(hits, "entry", "left").select(
-        "entry",
-        F.coalesce(F.col("nb"), F.lit(0)).cast("long").alias("n_blocked"),
-        F.coalesce(F.col("md"), F.lit(-1)).cast("long").alias("min_doc"),
-    )
-
 
 # --------------------------------------------------------------------------
 # q159: soft-dedup inverse-multiplicity weights -> per-source ledger
@@ -232,49 +139,4 @@ def q159_soft_dedup_weights(spark, sf_dir):
 # --------------------------------------------------------------------------
 # q160: per-source 2-token-prefix template profiling
 
-_Q160_PREFIX_N = 2
 
-_Q160_ORACLE = f"""
-WITH d AS (
-  SELECT source,
-         array_to_string(string_split(text, ' ')[1:{_Q160_PREFIX_N}], ' ')
-           AS prefix
-  FROM documents
-),
-per_prefix AS (
-  SELECT source, prefix, CAST(COUNT(*) AS BIGINT) AS c
-  FROM d GROUP BY source, prefix
-)
-SELECT source,
-       CAST(SUM(c) AS BIGINT) AS n_docs,
-       CAST(COUNT(*) AS BIGINT) AS n_prefixes,
-       CAST(MAX(c) AS BIGINT) AS max_prefix_docs,
-       CAST(ROUND(SUM(CASE WHEN c > 1 THEN c ELSE 0 END) * 1000000.0
-                  / SUM(c)) AS BIGINT) AS template_share_u
-FROM per_prefix GROUP BY source
-"""
-
-
-@register("q160_template_prefix_profile", oracle=_Q160_ORACLE)
-def q160_template_prefix_profile(spark, sf_dir):
-    d = load(spark, sf_dir, "documents").select(
-        "source",
-        F.array_join(
-            F.slice(F.split("text", " "), 1, _Q160_PREFIX_N), " "
-        ).alias("prefix"),
-    )
-    per_prefix = d.groupBy("source", "prefix").agg(
-        F.count("*").cast("long").alias("c")
-    )
-    return per_prefix.groupBy("source").agg(
-        F.sum("c").cast("long").alias("n_docs"),
-        F.count("*").cast("long").alias("n_prefixes"),
-        F.max("c").cast("long").alias("max_prefix_docs"),
-        F.round(
-            F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(0))
-            * F.lit(1000000.0)
-            / F.sum("c")
-        )
-        .cast("long")
-        .alias("template_share_u"),
-    )

@@ -70,169 +70,6 @@ from sparkextract.queries.base import (
     register,
 )
 
-# --------------------------------------------------------------------------
-_Q171_M = 64
-_Q171_ALPHA_M2 = 0.709 * _Q171_M * _Q171_M  # python-folded, as q83
-
-
-def _q171_est_sql(src: str, keys: str) -> str:
-    """Estimate CTE body over a (keys, reg, m_reg) table — q83's exact
-    formula shape so doubles are bit-identical across engines."""
-    return f"""
-  SELECT {keys},
-    ROUND(CASE WHEN raw <= {2.5 * _Q171_M} AND zeros > 0
-          THEN {_Q171_M} * ln(CAST({_Q171_M} AS DOUBLE) / zeros)
-          ELSE raw END, 6) AS est
-  FROM (
-    SELECT {keys}, zeros,
-      CAST({_Q171_ALPHA_M2!r} AS DOUBLE)
-        / (z_present + CAST(zeros AS DOUBLE)) AS raw
-    FROM (
-      SELECT {keys},
-        CAST({_Q171_M} - COUNT(*) AS BIGINT) AS zeros,
-        SUM(1.0 / POWER(CAST(2.0 AS DOUBLE), m_reg)) AS z_present
-      FROM {src} GROUP BY {keys}
-    )
-  )"""
-
-
-_Q171_ORACLE = f"""
-WITH bits AS (
-  SELECT event_type,
-    CAST(hv % {_Q171_M} AS BIGINT) AS reg,
-    CAST(hv // {_Q171_M} AS BIGINT) AS w
-  FROM (
-    SELECT event_type, {md5_bucket_sql("user_id", 1 << 32)} AS hv
-    FROM events
-  )
-),
-regs AS (
-  SELECT event_type, reg,
-    MAX(CASE WHEN w > 0 THEN 27 - LENGTH(bin(w)) ELSE 27 END) AS m_reg
-  FROM bits GROUP BY event_type, reg
-),
-single AS ({_q171_est_sql("regs", "event_type")}),
-pairs AS (
-  SELECT a.event_type AS t1, b.event_type AS t2
-  FROM (SELECT DISTINCT event_type FROM regs) a
-  JOIN (SELECT DISTINCT event_type FROM regs) b ON a.event_type < b.event_type
-),
-uregs AS (
-  SELECT p.t1, p.t2, r.reg, MAX(r.m_reg) AS m_reg
-  FROM pairs p JOIN regs r ON r.event_type IN (p.t1, p.t2)
-  GROUP BY p.t1, p.t2, r.reg
-),
-uest AS ({_q171_est_sql("uregs", "t1, t2")}),
-du AS (SELECT DISTINCT event_type, user_id FROM events),
-exact AS (
-  SELECT a.event_type AS t1, b.event_type AS t2,
-         CAST(COUNT(*) AS BIGINT) AS exact_intersection
-  FROM du a JOIN du b
-    ON a.user_id = b.user_id AND a.event_type < b.event_type
-  GROUP BY a.event_type, b.event_type
-)
-SELECT p.t1, p.t2,
-  s1.est AS est_t1, s2.est AS est_t2, u.est AS est_union,
-  ROUND((s1.est + s2.est) - u.est, 6) AS est_intersection,
-  COALESCE(e.exact_intersection, 0) AS exact_intersection
-FROM pairs p
-JOIN single s1 ON s1.event_type = p.t1
-JOIN single s2 ON s2.event_type = p.t2
-JOIN uest u ON u.t1 = p.t1 AND u.t2 = p.t2
-LEFT JOIN exact e ON e.t1 = p.t1 AND e.t2 = p.t2
-"""
-
-
-def _q171_est(df, keys):
-    agg = df.groupBy(*keys).agg(
-        (F.lit(_Q171_M) - F.count("*")).alias("zeros"),
-        F.sum(F.lit(1.0) / F.pow(F.lit(2.0), F.col("m_reg"))).alias("z_present"),
-    )
-    raw = F.lit(_Q171_ALPHA_M2) / (F.col("z_present") + F.col("zeros").cast("double"))
-    return agg.select(
-        *keys,
-        F.round(
-            F.when(
-                (raw <= 2.5 * _Q171_M) & (F.col("zeros") > 0),
-                F.lit(float(_Q171_M)) * F.log(F.lit(float(_Q171_M)) / F.col("zeros")),
-            ).otherwise(raw),
-            6,
-        ).alias("est"),
-    )
-
-
-@register("q171_hll_set_overlap", oracle=_Q171_ORACLE)
-def q171_hll_set_overlap(spark, sf_dir):
-    ev = load(spark, sf_dir, "events")
-    bits = ev.select(
-        "event_type", md5_bucket(F.col("user_id"), 1 << 32).alias("hv")
-    ).select(
-        "event_type",
-        (F.col("hv") % _Q171_M).alias("reg"),
-        F.expr(f"hv div {_Q171_M}").alias("w"),
-    )
-    regs = bits.groupBy("event_type", "reg").agg(
-        F.max(
-            F.when(F.col("w") > 0, F.lit(27) - F.length(F.bin("w"))).otherwise(
-                F.lit(27)
-            )
-        ).alias("m_reg")
-    )
-    single = _q171_est(regs, ["event_type"])
-    types = regs.select("event_type").distinct()
-    pairs = (
-        types.select(F.col("event_type").alias("t1"))
-        .join(
-            types.select(F.col("event_type").alias("t2")),
-            F.col("t1") < F.col("t2"),
-        )
-    )
-    # register-wise max over the two collections = the HLL union sketch;
-    # pairs is a handful of rows, so the join broadcasts
-    uregs = (
-        F.broadcast(pairs)
-        .join(
-            regs,
-            (F.col("event_type") == F.col("t1"))
-            | (F.col("event_type") == F.col("t2")),
-        )
-        .groupBy("t1", "t2", "reg")
-        .agg(F.max("m_reg").alias("m_reg"))
-    )
-    uest = _q171_est(uregs, ["t1", "t2"])
-    du = ev.select("event_type", "user_id").distinct()
-    exact = (
-        du.select(F.col("event_type").alias("t1"), "user_id")
-        .join(
-            du.select(F.col("event_type").alias("t2"), "user_id"),
-            "user_id",
-        )
-        .where(F.col("t1") < F.col("t2"))
-        .groupBy("t1", "t2")
-        .agg(F.count("*").cast("long").alias("exact_intersection"))
-    )
-    s1 = single.select(F.col("event_type").alias("t1"), F.col("est").alias("est_t1"))
-    s2 = single.select(F.col("event_type").alias("t2"), F.col("est").alias("est_t2"))
-    return (
-        pairs.join(s1, "t1")
-        .join(s2, "t2")
-        .join(uest.withColumnRenamed("est", "est_union"), ["t1", "t2"])
-        .join(exact, ["t1", "t2"], "left")
-        .select(
-            "t1",
-            "t2",
-            "est_t1",
-            "est_t2",
-            "est_union",
-            F.round(
-                (F.col("est_t1") + F.col("est_t2")) - F.col("est_union"), 6
-            ).alias("est_intersection"),
-            F.coalesce("exact_intersection", F.lit(0)).cast("long").alias(
-                "exact_intersection"
-            ),
-        )
-    )
-
 
 # --------------------------------------------------------------------------
 _Q172_LEAVES = 64
@@ -378,334 +215,3 @@ def q172_merkle_snapshot_diff(spark, sf_dir):
     )
 
 
-# --------------------------------------------------------------------------
-_Q173_HEAD = 200
-_Q173_CLONE_MOD = 13
-_Q173_SAMPLE_BUCKETS = 8  # audit runs on the bucket-0 eighth of the corpus
-_Q173_THRESHOLDS = [(1, 2), (4, 5)]  # Jaccard t as exact fractions
-
-_Q173_SHINGLES_SQL = (
-    "list_distinct(list_transform(range(1, GREATEST(LENGTH(head) - 7, 1) + 1), "
-    "i -> SUBSTRING(head, i, 8)))"
-)
-
-
-def _q173_oracle() -> str:
-    branches = []
-    for num, den in _Q173_THRESHOLDS:
-        plen = f"len(lst) - ({num} * len(lst) + {den} - 1) // {den} + 1"
-        branches.append(f"""
-  SELECT CAST({1000000 * num} // {den} AS BIGINT) AS t_u,
-         CAST(COUNT(*) AS BIGINT) AS n_candidates,
-         CAST(SUM(CASE WHEN {den} * i >= {num} * u THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_cand_true
-  FROM (
-    SELECT p.l, p.r,
-           LENGTH(list_intersect(sa.lst, sb.lst)) AS i,
-           LENGTH(sa.lst) + LENGTH(sb.lst)
-             - LENGTH(list_intersect(sa.lst, sb.lst)) AS u
-    FROM (
-      SELECT DISTINCT a.doc_id AS l, b.doc_id AS r
-      FROM (SELECT doc_id, len(lst) AS sz,
-                   unnest(list_slice(lst, 1, {plen})) AS t FROM sorted) a
-      JOIN (SELECT doc_id, len(lst) AS sz,
-                   unnest(list_slice(lst, 1, {plen})) AS t FROM sorted) b
-        ON a.t = b.t AND a.doc_id < b.doc_id
-       AND {den} * a.sz >= {num} * b.sz AND {den} * b.sz >= {num} * a.sz
-    ) p
-    JOIN sorted sa ON sa.doc_id = p.l
-    JOIN sorted sb ON sb.doc_id = p.r
-  )""")
-    cand = "\n  UNION ALL\n  ".join(branches)
-    truth = " UNION ALL ".join(
-        f"SELECT CAST({1000000 * num} // {den} AS BIGINT) AS t_u,"
-        f" CAST({num} AS BIGINT) AS t_num, CAST({den} AS BIGINT) AS t_den"
-        for num, den in _Q173_THRESHOLDS
-    )
-    return f"""
-WITH corpus AS (
-  SELECT doc_id, SUBSTRING(text, 1, {_Q173_HEAD}) AS head
-  FROM documents
-  WHERE {md5_bucket_sql("doc_id", _Q173_SAMPLE_BUCKETS)} = 0
-  UNION ALL
-  SELECT doc_id + 2000000 AS doc_id,
-         SUBSTRING('qq ' || text, 1, {_Q173_HEAD}) AS head
-  FROM documents
-  WHERE {md5_bucket_sql("doc_id", _Q173_SAMPLE_BUCKETS)} = 0
-    AND doc_id % {_Q173_CLONE_MOD} = 0
-),
-tok AS (
-  SELECT doc_id, unnest({_Q173_SHINGLES_SQL}) AS t FROM corpus
-),
-df AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS dfreq FROM tok GROUP BY t),
-sorted AS (
-  SELECT doc_id, list(t ORDER BY dfreq, t) AS lst
-  FROM tok JOIN df USING (t) GROUP BY doc_id
-),
-allpairs AS (
-  SELECT LENGTH(list_intersect(a.lst, b.lst)) AS i,
-         LENGTH(a.lst) + LENGTH(b.lst)
-           - LENGTH(list_intersect(a.lst, b.lst)) AS u
-  FROM sorted a JOIN sorted b ON a.doc_id < b.doc_id
-),
-nstats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(COUNT(*) * (COUNT(*) - 1) // 2 AS BIGINT) AS n_all_pairs
-  FROM sorted
-),
-thresholds AS ({truth}),
-truth AS (
-  SELECT t.t_u,
-         CAST(SUM(CASE WHEN t.t_den * ap.i >= t.t_num * ap.u
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_true_allpairs
-  FROM thresholds t, allpairs ap GROUP BY t.t_u
-),
-cand AS (
-  {cand}
-)
-SELECT c.t_u, n.n_docs, n.n_all_pairs, c.n_candidates, c.n_cand_true,
-       tr.n_true_allpairs,
-       (c.n_cand_true = tr.n_true_allpairs) AS complete,
-       (1000000 * c.n_candidates) // n.n_all_pairs AS prune_ratio_u
-FROM cand c JOIN truth tr ON tr.t_u = c.t_u CROSS JOIN nstats n
-"""
-
-
-def _q173_sorted(spark, sf_dir):
-    from sparkextract.queries.base import checkpoint_memo
-
-    def build():
-        docs = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .where(md5_bucket(F.col("doc_id"), _Q173_SAMPLE_BUCKETS) == 0)
-        )
-        corpus = docs.select(
-            "doc_id", F.substring("text", 1, _Q173_HEAD).alias("head")
-        ).unionByName(
-            docs.filter(F.col("doc_id") % _Q173_CLONE_MOD == 0).select(
-                (F.col("doc_id") + 2000000).alias("doc_id"),
-                F.substring(
-                    F.concat(F.lit("qq "), F.col("text")), 1, _Q173_HEAD
-                ).alias("head"),
-            )
-        )
-        sset = F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.length("head") - 7, F.lit(1))),
-                lambda i: F.col("head").substr(i, F.lit(8)),
-            )
-        )
-        tok = corpus.select("doc_id", F.explode(sset).alias("t"))
-        dfreq = tok.groupBy("t").agg(F.count("*").cast("long").alias("dfreq"))
-        # global total order (dfreq asc, shingle asc): rarest first, so
-        # each doc's prefix keys are its globally rarest shingles
-        return (
-            tok.join(dfreq, "t")
-            .groupBy("doc_id")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("dfreq", "t"))),
-                    lambda s: s["t"],
-                ).alias("lst")
-            )
-        )
-
-    return checkpoint_memo(spark, sf_dir, "q173_sorted", build)
-
-
-@register("q173_prefix_filter_audit", oracle=_q173_oracle())
-def q173_prefix_filter_audit(spark, sf_dir):
-    sorted_df = _q173_sorted(spark, sf_dir)
-    # exact all-pairs ground truth exists ONLY on the bounded sample
-    # (q107 protocol): one broadcast self-join of the sample
-    a = sorted_df.select(F.col("doc_id").alias("l"), F.col("lst").alias("la"))
-    b = sorted_df.select(F.col("doc_id").alias("r"), F.col("lst").alias("lb"))
-    inter = F.size(F.array_intersect("la", "lb")).cast("long")
-    allpairs = (
-        a.join(F.broadcast(b), F.col("l") < F.col("r"))
-        .select(
-            inter.alias("i"),
-            (F.size("la").cast("long") + F.size("lb") - inter).alias("u"),
-        )
-    )
-    nstats = sorted_df.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.expr("count(*) * (count(*) - 1) div 2").cast("long").alias(
-            "n_all_pairs"
-        ),
-    )
-    frames = []
-    for num, den in _Q173_THRESHOLDS:
-        t_u = 1000000 * num // den
-        plen = (
-            F.size("lst")
-            - F.expr(f"({num} * size(lst) + {den} - 1) div {den}")
-            + 1
-        )
-        pre = sorted_df.select(
-            "doc_id",
-            F.size("lst").alias("sz"),
-            F.explode(F.slice("lst", F.lit(1), plen)).alias("t"),
-        )
-        pairs = (
-            pre.alias("x")
-            .join(
-                pre.alias("y"),
-                (F.col("x.t") == F.col("y.t"))
-                & (F.col("x.doc_id") < F.col("y.doc_id"))
-                & (den * F.col("x.sz") >= num * F.col("y.sz"))
-                & (den * F.col("y.sz") >= num * F.col("x.sz")),
-            )
-            .select(
-                F.col("x.doc_id").alias("l"), F.col("y.doc_id").alias("r")
-            )
-            .distinct()
-        )
-        verified = (
-            pairs.join(a, "l")
-            .join(b, "r")
-            .select(
-                inter.alias("i"),
-                (F.size("la").cast("long") + F.size("lb") - inter).alias("u"),
-            )
-        )
-        frames.append(
-            verified.agg(
-                F.lit(t_u).cast("long").alias("t_u"),
-                F.count("*").cast("long").alias("n_candidates"),
-                F.sum(
-                    F.when(den * F.col("i") >= num * F.col("u"), 1).otherwise(0)
-                )
-                .cast("long")
-                .alias("n_cand_true"),
-            )
-        )
-        frames.append(
-            allpairs.agg(
-                F.lit(t_u).cast("long").alias("t_u2"),
-                F.sum(
-                    F.when(den * F.col("i") >= num * F.col("u"), 1).otherwise(0)
-                )
-                .cast("long")
-                .alias("n_true_allpairs"),
-            )
-        )
-    cand = frames[0].unionByName(frames[2])
-    truth = frames[1].unionByName(frames[3]).withColumnRenamed("t_u2", "t_u")
-    return (
-        cand.join(truth, "t_u")
-        .crossJoin(F.broadcast(nstats))
-        .select(
-            "t_u",
-            "n_docs",
-            "n_all_pairs",
-            "n_candidates",
-            "n_cand_true",
-            "n_true_allpairs",
-            (F.col("n_cand_true") == F.col("n_true_allpairs")).alias("complete"),
-            F.expr("(1000000 * n_candidates) div n_all_pairs").alias(
-                "prune_ratio_u"
-            ),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-_Q174_NEST = 9  # odd estimator count -> integer median
-_Q174_HEADLEN = 128
-
-_Q174_CORPUS = f"""
-  SELECT doc_id, md5(SUBSTRING(text, 1, {_Q174_HEADLEN})) AS kh FROM documents
-  UNION ALL
-  SELECT doc_id + 2000000, md5(SUBSTRING(text, 1, {_Q174_HEADLEN}))
-  FROM documents WHERE doc_id % 7 = 0
-  UNION ALL
-  SELECT doc_id + 4000000, md5(SUBSTRING(text, 1, {_Q174_HEADLEN}))
-  FROM documents WHERE doc_id % 21 = 0
-"""
-
-
-def _q174_oracle() -> str:
-    terms = []
-    for j in range(_Q174_NEST):
-        bucket = md5_bucket_sql("'j" + str(j) + "|' || kh", 2)
-        terms.append(
-            f"CAST(SUM(CASE WHEN {bucket} = 0"
-            f" THEN 1 ELSE -1 END) AS BIGINT) AS z{j}"
-        )
-    zs = ", ".join(terms)
-    sq = ", ".join(f"z{j} * z{j}" for j in range(_Q174_NEST))
-    return f"""
-WITH corpus AS (
-  {_Q174_CORPUS}
-),
-sketch AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, {zs} FROM corpus
-),
-exact AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
-         CAST(SUM(c * c) AS BIGINT) AS exact_f2
-  FROM (SELECT kh, COUNT(*) AS c FROM corpus GROUP BY kh)
-),
-est AS (
-  SELECT n_rows, list_sort([{sq}])[{_Q174_NEST // 2 + 1}] AS est_f2
-  FROM sketch
-)
-SELECT e.n_rows, x.n_keys, x.exact_f2, e.est_f2,
-       (1000000 * e.est_f2) // x.exact_f2 AS ratio_u
-FROM est e, exact x
-"""
-
-
-@register("q174_ams_f2_join_size", oracle=_q174_oracle())
-def q174_ams_f2_join_size(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    kh = F.md5(F.substring("text", 1, _Q174_HEADLEN)).alias("kh")
-    corpus = (
-        docs.select("doc_id", kh)
-        .unionByName(
-            docs.filter(F.col("doc_id") % 7 == 0).select(
-                (F.col("doc_id") + 2000000).alias("doc_id"), kh
-            )
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % 21 == 0).select(
-                (F.col("doc_id") + 4000000).alias("doc_id"), kh
-            )
-        )
-    )
-    signs = [
-        F.sum(
-            F.when(
-                md5_bucket(F.concat(F.lit(f"j{j}|"), F.col("kh")), 2) == 0, 1
-            ).otherwise(-1)
-        )
-        .cast("long")
-        .alias(f"z{j}")
-        for j in range(_Q174_NEST)
-    ]
-    sketch = corpus.agg(F.count("*").cast("long").alias("n_rows"), *signs)
-    est = sketch.select(
-        "n_rows",
-        F.array_sort(
-            F.array(*[F.col(f"z{j}") * F.col(f"z{j}") for j in range(_Q174_NEST)])
-        )
-        .getItem(_Q174_NEST // 2)
-        .alias("est_f2"),
-    )
-    exact = (
-        corpus.groupBy("kh")
-        .agg(F.count("*").alias("c"))
-        .agg(
-            F.count("*").cast("long").alias("n_keys"),
-            F.sum(F.col("c") * F.col("c")).cast("long").alias("exact_f2"),
-        )
-    )
-    return est.crossJoin(F.broadcast(exact)).select(
-        "n_rows",
-        "n_keys",
-        "exact_f2",
-        "est_f2",
-        F.expr("(1000000 * est_f2) div exact_f2").alias("ratio_u"),
-    )

@@ -161,88 +161,3 @@ def q179_misra_gries_heavy_hitters(spark, sf_dir):
     )
 
 
-# --------------------------------------------------------------------------
-_Q180_STEP_US = 3_600_000_000  # 1 h decay quantum
-_Q180_MAX_E = 18  # 2^-18 < 4e-6: older mass is exactly zero weight
-
-# exact decimal literals for 2^-e (2^-e = 5^e * 10^-e: scale e <= 18)
-_Q180_WEIGHTS = {
-    e: ("{0:.18f}".format(0.5**e) if e else "1.000000000000000000")
-    for e in range(_Q180_MAX_E + 1)
-}
-
-
-def _q180_weight_case(evar: str) -> str:
-    arms = " ".join(
-        f"WHEN {e} THEN CAST({w} AS DECIMAL(20,18))"
-        for e, w in _Q180_WEIGHTS.items()
-    )
-    return f"CASE {evar} {arms} ELSE CAST(0 AS DECIMAL(20,18)) END"
-
-
-_Q180_ORACLE = f"""
-WITH ev AS (
-  SELECT event_type, epoch_us(ts) AS t_us FROM events
-),
-t0 AS (SELECT MAX(t_us) AS tmax FROM ev),
-w AS (
-  SELECT event_type,
-    {_q180_weight_case(f"LEAST((t0.tmax - t_us) // {_Q180_STEP_US}, {_Q180_MAX_E})")}
-      AS wgt
-  FROM ev, t0
-),
-agg AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-         CAST(SUM(wgt) AS DECIMAL(38,18)) AS decayed
-  FROM w GROUP BY event_type
-)
-SELECT event_type, n_events,
-  CAST(ROUND(decayed, 6) AS DOUBLE) AS decayed_mass,
-  CAST(ROW_NUMBER() OVER (ORDER BY n_events DESC, event_type) AS BIGINT)
-    AS rank_raw,
-  CAST(ROW_NUMBER() OVER (ORDER BY decayed DESC, event_type) AS BIGINT)
-    AS rank_decayed,
-  (ROW_NUMBER() OVER (ORDER BY n_events DESC, event_type)
-   <> ROW_NUMBER() OVER (ORDER BY decayed DESC, event_type)) AS rank_changed
-FROM agg
-"""
-
-
-@register("q180_decayed_popularity", oracle=_Q180_ORACLE)
-def q180_decayed_popularity(spark, sf_dir):
-    ev = load(spark, sf_dir, "events").select(
-        "event_type", F.unix_micros(F.col("ts").cast("timestamp")).alias("t_us")
-    )
-    t0 = ev.agg(F.max("t_us").alias("tmax"))
-    e = F.least(
-        F.expr(f"(tmax - t_us) div {_Q180_STEP_US}"), F.lit(_Q180_MAX_E)
-    )
-    wgt = None
-    for k, lit in _Q180_WEIGHTS.items():
-        arm = F.lit(lit).cast("decimal(20,18)")
-        wgt = F.when(e == k, arm) if wgt is None else wgt.when(e == k, arm)
-    wgt = wgt.otherwise(F.lit("0").cast("decimal(20,18)"))
-    agg = (
-        ev.crossJoin(F.broadcast(t0))
-        .select("event_type", wgt.alias("wgt"))
-        .groupBy("event_type")
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.sum("wgt").cast("decimal(38,18)").alias("decayed"),
-        )
-    )
-    wraw = Window.orderBy(F.desc("n_events"), F.asc("event_type"))
-    wdec = Window.orderBy(F.desc("decayed"), F.asc("event_type"))
-    return agg.select(
-        "event_type",
-        "n_events",
-        # ROUND in decimal before the double cast: a scale-18 sum's
-        # scaled integer passes 2^53, where DuckDB's decimal->double
-        # double-rounds (the documented scale-8 bug class)
-        F.round(F.col("decayed"), 6).cast("double").alias("decayed_mass"),
-        F.row_number().over(wraw).cast("long").alias("rank_raw"),
-        F.row_number().over(wdec).cast("long").alias("rank_decayed"),
-        (
-            F.row_number().over(wraw) != F.row_number().over(wdec)
-        ).alias("rank_changed"),
-    )

@@ -46,105 +46,8 @@ sized instance table is touched exactly once.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from sparkextract.queries.base import (
-    checkpoint_memo,
-    load,
-    md5_bucket,
-    md5_bucket_sql,
-    register,
-)
-
-# ---------------------------------------------------------------------
-# q188
-_Q188_BUCKETS = 10
-
-_Q188_ORACLE = f"""
-WITH d AS (
-  SELECT CAST({md5_bucket_sql("doc_id", _Q188_BUCKETS)} AS BIGINT) AS b, text
-  FROM documents
-),
-toks AS (
-  SELECT b, unnest(list_filter(string_split(text, ' '), t -> t <> '')) AS t
-  FROM d
-),
-per_bucket AS (
-  SELECT b, CAST(COUNT(*) AS BIGINT) AS n_toks FROM toks GROUP BY b
-),
-first_seen AS (
-  SELECT t, MIN(b) AS fb FROM toks GROUP BY t
-),
-vnew AS (
-  SELECT fb AS b, CAST(COUNT(*) AS BIGINT) AS v_new FROM first_seen GROUP BY fb
-),
-cum AS (
-  SELECT pb.b,
-         CAST(SUM(pb.n_toks) OVER (ORDER BY pb.b) AS BIGINT) AS n_cum,
-         CAST(SUM(COALESCE(v.v_new, 0)) OVER (ORDER BY pb.b) AS BIGINT) AS v_cum
-  FROM per_bucket pb LEFT JOIN vnew v ON v.b = pb.b
-),
-lagged AS (
-  SELECT b, n_cum, v_cum,
-         LAG(n_cum) OVER (ORDER BY b) AS pn,
-         LAG(v_cum) OVER (ORDER BY b) AS pv
-  FROM cum
-)
-SELECT b AS bucket, n_cum, v_cum,
-       ROUND(CASE WHEN pn IS NULL OR n_cum = pn THEN 0.0
-             ELSE (ln(CAST(v_cum AS DOUBLE)) - ln(CAST(pv AS DOUBLE)))
-                  / (ln(CAST(n_cum AS DOUBLE)) - ln(CAST(pn AS DOUBLE)))
-             END, 6) AS beta
-FROM lagged
-"""
-
-
-@register("q188_heaps_law", oracle=_Q188_ORACLE)
-def q188_heaps_law(spark, sf_dir):
-    toks = (
-        load(spark, sf_dir, "documents")
-        .select(
-            md5_bucket(F.col("doc_id"), _Q188_BUCKETS).alias("b"),
-            F.explode(F.split("text", " ")).alias("t"),
-        )
-        .filter(F.col("t") != "")
-    )
-    per_bucket = toks.groupBy("b").agg(F.count("*").cast("long").alias("n_toks"))
-    vnew = (
-        toks.groupBy("t")
-        .agg(F.min("b").alias("fb"))
-        .groupBy(F.col("fb").alias("b"))
-        .agg(F.count("*").cast("long").alias("v_new"))
-    )
-    w = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, 0)
-    cum = (
-        per_bucket.join(vnew, "b", "left")
-        .select(
-            "b",
-            F.sum("n_toks").over(w).cast("long").alias("n_cum"),
-            F.sum(F.coalesce("v_new", F.lit(0))).over(w).cast("long").alias("v_cum"),
-        )
-    )
-    wl = Window.orderBy("b")
-    lagged = cum.select(
-        "b",
-        "n_cum",
-        "v_cum",
-        F.lag("n_cum").over(wl).alias("pn"),
-        F.lag("v_cum").over(wl).alias("pv"),
-    )
-    beta = F.when(
-        F.col("pn").isNull() | (F.col("n_cum") == F.col("pn")), F.lit(0.0)
-    ).otherwise(
-        (F.log(F.col("v_cum").cast("double")) - F.log(F.col("pv").cast("double")))
-        / (F.log(F.col("n_cum").cast("double")) - F.log(F.col("pn").cast("double")))
-    )
-    return lagged.select(
-        F.col("b").alias("bucket"),
-        "n_cum",
-        "v_cum",
-        F.round(beta, 6).alias("beta"),
-    )
+from sparkextract.queries.base import checkpoint_memo, load, register
 
 
 # ---------------------------------------------------------------------

@@ -12,9 +12,9 @@ union of candidates, then one exact verify: token-set Jaccard >= 0.5
 in integer micro-units (jac_u = 1e6 * |A∩B| div |A∪B|). Window pairs
 are generated by LEAD over the sorted order (no self-join for
 candidate generation at all).
-Reference intent: duplicate-table detection joins
-(/root/reference/src/pdf_extraction/table_extractor.py similarity
-suppression) re-expressed with the blocking method that scales.
+Reference intent: duplicate-table detection joins (the reference's
+similarity suppression, `src/table_extractor.py:144-152,200-218`)
+re-expressed with the blocking method that scales.
 
 Scale shape: each pass is a window over (block, key, doc_id) where
 block is the key's leading bytes — the global sort becomes
@@ -50,11 +50,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sparkextract.queries.base import load, md5_bucket_sql, register
+from sparkextract.queries.base import load, register
 
-# ---------------------------------------------------------------------
-# q194
-_Q194_W = 3  # window size: each record pairs with its next w-1 neighbors
 _Q194_MIN_JAC_U = 500_000
 
 
@@ -158,92 +155,3 @@ def q194_sorted_neighborhood(spark, sf_dir):
     ).filter(F.col("jac_u") >= _Q194_MIN_JAC_U)
 
 
-# ---------------------------------------------------------------------
-# q195
-_Q195_FILES = 256
-_Q195_TARGET = 200_000  # target compacted file size (chars as bytes proxy)
-
-_Q195_ORACLE = f"""
-WITH manifest AS (
-  SELECT CAST({md5_bucket_sql("doc_id", _Q195_FILES)} AS BIGINT) AS file_id,
-         CAST(SUM(n_chars) AS BIGINT) AS size_bytes,
-         CAST(COUNT(*) AS BIGINT) AS n_docs
-  FROM documents GROUP BY file_id
-),
-small AS (
-  SELECT file_id, size_bytes, n_docs,
-         size_bytes < {_Q195_TARGET} AS is_small,
-         CASE WHEN size_bytes < {_Q195_TARGET}
-              THEN COALESCE(SUM(CASE WHEN size_bytes < {_Q195_TARGET}
-                                     THEN size_bytes END)
-                   OVER (ORDER BY file_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              END AS cum_before
-  FROM manifest
-),
-binned AS (
-  SELECT file_id, size_bytes, n_docs, is_small,
-         CASE WHEN is_small THEN cum_before // {_Q195_TARGET} ELSE -1 END AS bin
-  FROM small
-)
-SELECT file_id, size_bytes, n_docs, is_small, CAST(bin AS BIGINT) AS bin,
-       CASE WHEN is_small THEN 'compact' ELSE 'keep' END AS disposition,
-       CAST(SUM(CASE WHEN is_small THEN size_bytes ELSE 0 END)
-            OVER (PARTITION BY bin) AS BIGINT) AS bin_fill
-FROM binned
-"""
-
-
-@register("q195_compaction_planner", oracle=_Q195_ORACLE)
-def q195_compaction_planner(spark, sf_dir):
-    from sparkextract.queries.base import md5_bucket
-
-    manifest = (
-        load(spark, sf_dir, "documents")
-        .groupBy(md5_bucket(F.col("doc_id"), _Q195_FILES).alias("file_id"))
-        .agg(
-            F.sum("n_chars").cast("long").alias("size_bytes"),
-            F.count("*").cast("long").alias("n_docs"),
-        )
-    )
-    is_small = F.col("size_bytes") < _Q195_TARGET
-    wcum = Window.orderBy("file_id").rowsBetween(Window.unboundedPreceding, -1)
-    small = manifest.select(
-        "file_id",
-        "size_bytes",
-        "n_docs",
-        is_small.alias("is_small"),
-        F.when(
-            is_small,
-            F.coalesce(
-                F.sum(F.when(is_small, F.col("size_bytes"))).over(wcum), F.lit(0)
-            ),
-        ).alias("cum_before"),
-    )
-    binned = small.select(
-        "file_id",
-        "size_bytes",
-        "n_docs",
-        "is_small",
-        F.when(
-            F.col("is_small"), F.expr(f"cum_before div {_Q195_TARGET}")
-        )
-        .otherwise(F.lit(-1))
-        .cast("long")
-        .alias("bin"),
-    )
-    wbin = Window.partitionBy("bin")
-    return binned.select(
-        "file_id",
-        "size_bytes",
-        "n_docs",
-        "is_small",
-        "bin",
-        F.when(F.col("is_small"), F.lit("compact")).otherwise(F.lit("keep")).alias(
-            "disposition"
-        ),
-        F.sum(F.when(F.col("is_small"), F.col("size_bytes")).otherwise(F.lit(0)))
-        .over(wbin)
-        .cast("long")
-        .alias("bin_fill"),
-    )

@@ -222,87 +222,3 @@ def q196_kmv_theta_sketch(spark, sf_dir):
     return halves.unionByName(inter)
 
 
-# ---------------------------------------------------------------------
-# q197
-_Q197_TOPN = 20
-
-_Q197_ORACLE = f"""
-WITH d AS (
-  SELECT CAST({md5_bucket_sql("doc_id", 2)} AS BIGINT) AS half, n_chars
-  FROM documents
-),
-vals AS (
-  SELECT n_chars AS v,
-         CAST(SUM(CASE WHEN half = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_a,
-         CAST(SUM(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c_b
-  FROM d GROUP BY n_chars
-),
-g AS (SELECT CAST(SUM(c_a) AS BIGINT) AS n_a, CAST(SUM(c_b) AS BIGINT) AS n_b
-      FROM vals),
-cdf AS (
-  SELECT v,
-         CAST(SUM(c_a) OVER (ORDER BY v) AS BIGINT) AS cum_a,
-         CAST(SUM(c_b) OVER (ORDER BY v) AS BIGINT) AS cum_b
-  FROM vals
-),
-gaps AS (
-  SELECT c.v, c.cum_a, c.cum_b,
-         CAST(ABS(c.cum_a * g.n_b - c.cum_b * g.n_a) * 1000000
-              // (g.n_a * g.n_b) AS BIGINT) AS gap_u,
-         g.n_a, g.n_b
-  FROM cdf c CROSS JOIN g
-),
-ks AS (SELECT CAST(MAX(gap_u) AS BIGINT) AS ks_u FROM gaps)
-SELECT v, cum_a, cum_b, gap_u, n_a, n_b, ks.ks_u,
-       ROUND(SQRT(CAST(n_a * n_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-             * CAST(ks.ks_u AS DOUBLE) / 1000000.0, 6) AS ks_scaled
-FROM gaps CROSS JOIN ks
-ORDER BY gap_u DESC, v ASC
-LIMIT {_Q197_TOPN}
-"""
-
-
-@register("q197_ks_two_sample", oracle=_Q197_ORACLE)
-def q197_ks_two_sample(spark, sf_dir):
-    from sparkextract.queries.base import md5_bucket
-
-    d = load(spark, sf_dir, "documents").select(
-        md5_bucket(F.col("doc_id"), 2).alias("half"), "n_chars"
-    )
-    vals = d.groupBy(F.col("n_chars").alias("v")).agg(
-        F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).cast("long").alias("c_a"),
-        F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).cast("long").alias("c_b"),
-    )
-    g = vals.agg(
-        F.sum("c_a").cast("long").alias("n_a"),
-        F.sum("c_b").cast("long").alias("n_b"),
-    )
-    wc = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    cdf = vals.select(
-        "v",
-        F.sum("c_a").over(wc).cast("long").alias("cum_a"),
-        F.sum("c_b").over(wc).cast("long").alias("cum_b"),
-    )
-    gaps = cdf.crossJoin(F.broadcast(g)).select(
-        "v",
-        "cum_a",
-        "cum_b",
-        F.expr("abs(cum_a * n_b - cum_b * n_a) * 1000000 div (n_a * n_b)")
-        .cast("long")
-        .alias("gap_u"),
-        "n_a",
-        "n_b",
-    )
-    ks = gaps.agg(F.max("gap_u").cast("long").alias("ks_u"))
-    scaled = F.round(
-        F.sqrt((F.col("n_a") * F.col("n_b")).cast("double") / (F.col("n_a") + F.col("n_b")).cast("double"))
-        * F.col("ks_u").cast("double")
-        / 1000000.0,
-        6,
-    )
-    return (
-        gaps.crossJoin(F.broadcast(ks))
-        .select("v", "cum_a", "cum_b", "gap_u", "n_a", "n_b", "ks_u", scaled.alias("ks_scaled"))
-        .orderBy(F.desc("gap_u"), F.asc("v"))
-        .limit(_Q197_TOPN)
-    )

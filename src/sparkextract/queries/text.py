@@ -182,28 +182,6 @@ def q21_fingerprint(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Token counting (whitespace tokenizer) — F1/F2 stats family.
-@register(
-    "q22_token_stats",
-    oracle="""
-    SELECT lang,
-           CAST(SUM(LENGTH(regexp_extract_all(text, '\\S+'))) AS BIGINT) AS total_tokens,
-           CAST(SUM(LENGTH(regexp_extract_all(text, '\\S+'))) AS DOUBLE) / COUNT(*) AS avg_tokens,
-           CAST(MAX(LENGTH(regexp_extract_all(text, '\\S+'))) AS BIGINT) AS max_tokens
-    FROM documents GROUP BY lang
-    """,
-)
-def q22_token_stats(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    ntok = F.regexp_count("text", F.lit(r"\S+"))
-    return docs.groupBy("lang").agg(
-        F.sum(ntok).alias("total_tokens"),
-        (F.sum(ntok).cast("double") / F.count("*")).alias("avg_tokens"),
-        F.max(ntok).cast("long").alias("max_tokens"),
-    )
-
-
-# --------------------------------------------------------------------------
 # Top-20 token frequency (explode + agg + top-k with tie-break).
 @register(
     "q23_token_topk",
@@ -225,34 +203,6 @@ def q23_token_topk(spark, sf_dir):
         .agg(F.count("*").alias("freq"))
         .orderBy(F.desc("freq"), F.asc("token"))
         .limit(20)
-    )
-
-
-# --------------------------------------------------------------------------
-# Language-ID heuristic (stopword-hit n-gram scoring, F6 classify chain).
-@register(
-    "q24_lang_id",
-    oracle="""
-    SELECT lang, predicted, CAST(COUNT(*) AS BIGINT) AS n FROM (
-      SELECT lang,
-             CASE WHEN LENGTH(regexp_extract_all(text, '\\b(the|a|of)\\b')) >= 3 THEN 'en'
-                  WHEN LENGTH(regexp_extract_all(text, '\\b(data|table|row)\\b')) >= 3 THEN 'tech'
-                  ELSE 'other' END AS predicted
-      FROM documents
-    ) GROUP BY lang, predicted
-    """,
-)
-def q24_lang_id(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    en_hits = F.regexp_count("text", F.lit(r"\b(the|a|of)\b"))
-    tech_hits = F.regexp_count("text", F.lit(r"\b(data|table|row)\b"))
-    predicted = (
-        F.when(en_hits >= 3, "en").when(tech_hits >= 3, "tech").otherwise("other")
-    )
-    return (
-        docs.select("lang", predicted.alias("predicted"))
-        .groupBy("lang", "predicted")
-        .agg(F.count("*").alias("n"))
     )
 
 

@@ -80,75 +80,3 @@ def q36_keyword_overlap(spark, sf_dir):
     )
 
 
-# --------------------------------------------------------------------------
-# W3: positional ordinals via posexplode (the enumerate(pages, 1) analog,
-# reference table_extractor.py:423) — first two tokens of each doc with
-# their positions.
-@register(
-    "q37_token_positions",
-    oracle="""
-    SELECT doc_id, CAST(pos - 1 AS BIGINT) AS pos, tok
-    FROM (
-      SELECT doc_id,
-             unnest(string_split(text, ' ')) AS tok,
-             generate_subscripts(string_split(text, ' '), 1) AS pos
-      FROM documents
-    ) WHERE pos <= 2
-    """,
-)
-def q37_token_positions(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    return (
-        docs.select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok"))
-        .filter(F.col("pos") <= 1)
-        .select("doc_id", F.col("pos").cast("long").alias("pos"), "tok")
-    )
-
-
-# --------------------------------------------------------------------------
-# MinHash band -> bucket equi-join clustering (the step after q19's
-# signatures): docs sharing a band signature form candidate dup clusters.
-# The corpus is dup-free, so near-dup pairs are injected (a copy of every
-# 11th doc with its first 10 chars changed — MinHash over the 256-char
-# head still collides on most shingles; band-0 min is unchanged whenever
-# the minimum shingle lies beyond the edit).
-@register(
-    "q38_minhash_clusters",
-    oracle="""
-    WITH corpus AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 2000000 AS doc_id, 'xxxxxxxxxx' || SUBSTRING(text, 11) AS text
-      FROM documents WHERE doc_id % 11 = 0
-    ), sigs AS (
-      SELECT doc_id,
-             list_min(list_transform(range(1, GREATEST(LENGTH(SUBSTRING(text,1,256)) - 7, 1) + 1),
-                      i -> md5('b0|' || SUBSTRING(SUBSTRING(text,1,256), i, 8)))) AS sig0
-      FROM corpus
-    )
-    SELECT sig0, CAST(COUNT(*) AS BIGINT) AS cluster_size,
-           CAST(MIN(doc_id) AS BIGINT) AS keeper_doc_id
-    FROM sigs GROUP BY sig0 HAVING COUNT(*) > 1
-    """,
-)
-def q38_minhash_clusters(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    near = docs.filter(F.col("doc_id") % 11 == 0).select(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.concat(F.lit("xxxxxxxxxx"), F.expr("substring(text, 11)")).alias("text"),
-    )
-    corpus = docs.unionByName(near)
-    head = F.substring("text", 1, 256)
-    n_sh = F.greatest(F.length(head) - 7, F.lit(1))
-    sig0 = F.array_min(
-        F.transform(
-            F.sequence(F.lit(1), n_sh),
-            lambda i: F.md5(F.concat(F.lit("b0|"), F.substring(head, i, F.lit(8)))),
-        )
-    )
-    return (
-        corpus.select("doc_id", sig0.alias("sig0"))
-        .groupBy("sig0")
-        .agg(F.count("*").alias("cluster_size"), F.min("doc_id").alias("keeper_doc_id"))
-        .filter(F.col("cluster_size") > 1)
-    )

@@ -32,23 +32,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparkextract.queries.base import load, register
-
-_DIM = 64
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
-
+from sparkextract.queries.vector import _DIM, _dot, _norm
 
 def _cos_sql(vec: str, other: str) -> str:
     """DuckDB cosine between two FLOAT[] columns, element order fixed."""

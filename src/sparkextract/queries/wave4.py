@@ -19,38 +19,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparkextract.queries.base import load, register
-from sparkextract.queries.wave3 import _Q46_ORACLE, _cos_sql, _dot, _norm, q46_ivf_topk
-
-# \s / \S are NOT portable between Java regex (Spark) and RE2 (DuckDB):
-# Java's \s includes U+000B vertical tab, RE2's does not. Both patterns
-# therefore spell the whitespace class out explicitly.
-_WS_CLASS = r" \t\n\x0B\f\r"
-_BPE_RE = rf" ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9{_WS_CLASS}]+"
-_NON_WS_RE = rf"[^{_WS_CLASS}]+"
-
-
-@register(
-    "q49_bpe_token_stats",
-    oracle=f"""
-    SELECT lang,
-           CAST(SUM(LENGTH(regexp_extract_all(text, '{_BPE_RE}'))) AS BIGINT) AS bpe_tokens,
-           CAST(SUM(LENGTH(regexp_extract_all(text, '{_NON_WS_RE}'))) AS BIGINT) AS ws_tokens,
-           ROUND(CAST(SUM(LENGTH(regexp_extract_all(text, '{_BPE_RE}'))) AS DOUBLE)
-                 / SUM(LENGTH(regexp_extract_all(text, '{_NON_WS_RE}'))), 6) AS fertility
-    FROM documents GROUP BY lang
-    """,
-)
-def q49_bpe_token_stats(spark, sf_dir):
-    """Subword-per-word "fertility" per language — the throughput-planning
-    stat for tokenized training data. Single scan, partial-agg shuffle."""
-    docs = load(spark, sf_dir, "documents")
-    bpe = F.size(F.regexp_extract_all("text", F.lit(_BPE_RE), F.lit(0)))
-    ws = F.regexp_count("text", F.lit(_NON_WS_RE))
-    return docs.groupBy("lang").agg(
-        F.sum(bpe).alias("bpe_tokens"),
-        F.sum(ws).alias("ws_tokens"),
-        F.round(F.sum(bpe).cast("double") / F.sum(ws), 6).alias("fertility"),
-    )
+from sparkextract.queries.vector import _dot, _norm
+from sparkextract.queries.wave3 import _Q46_ORACLE, _cos_sql, q46_ivf_topk
 
 
 _Q50_ORACLE = f"""
@@ -133,139 +103,3 @@ def q51_confidence_rollup(spark, sf_dir):
     )
 
 
-_Q52_CTES = """eq AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> ROUND(CAST(x AS DOUBLE), 3)) AS e
-      FROM embeddings
-    ),
-    cents AS (SELECT vec_id AS cent_id, e AS c FROM eq WHERE vec_id BETWEEN 1 AND 8),
-    assign AS (
-      SELECT d.vec_id, c.cent_id,
-             list_sum(list_transform(range(1, 65),
-               i -> (d.e[i] - c.c[i]) * (d.e[i] - c.c[i]))) AS dist
-      FROM eq d, cents c
-      WHERE d.vec_id > 8
-      QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY d.vec_id ORDER BY dist ASC, c.cent_id ASC) = 1
-    ),
-    comps AS (
-      SELECT a.cent_id AS cell, i.i AS dim,
-             CAST(SUM(CAST(d.e[i.i] AS DECIMAL(18,4))) AS DOUBLE)
-               / COUNT(*) AS mean_raw
-      FROM assign a
-      JOIN eq d USING (vec_id)
-      CROSS JOIN (SELECT UNNEST(range(1, 65)) AS i) i
-      GROUP BY a.cent_id, i.i
-    ),
-    newc AS (
-      SELECT cell, dim, ROUND(mean_raw, 6) AS comp FROM comps
-    )"""
-
-_Q52_ORACLE = f"""
-    WITH {_Q52_CTES}
-    SELECT n.cell,
-           CAST(a.n AS BIGINT) AS n_assigned,
-           ROUND(SQRT(CAST(SUM(CAST(n.comp AS DECIMAL(18,6)) * CAST(n.comp AS DECIMAL(18,6))) AS DOUBLE)), 6) AS centroid_l2
-    FROM newc n
-    JOIN (SELECT cent_id AS cell, COUNT(*) AS n FROM assign GROUP BY cent_id) a
-      USING (cell)
-    GROUP BY n.cell, a.n
-    ORDER BY n.cell
-"""
-
-
-def _km_quantized(spark, sf_dir):
-    """Embeddings with components quantized to 3 decimals (vec_id, e)."""
-    return load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: F.round(x.cast("double"), 3)).alias("e"),
-    )
-
-
-def _km_assign(emb, cents):
-    """Assign each vector (vec_id > 8) to its nearest centroid by squared
-    L2 (argmin, cent_id tie-break). ``cents``: (cent_id, c array<double>),
-    broadcast — assignment is map-side. Returns (vec_id, cell, e)."""
-    from pyspark.sql.window import Window as W
-
-    dist = F.aggregate(
-        F.zip_with(F.col("e"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        emb.filter(F.col("vec_id") > 8)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("dist", dist)
-        .withColumn(
-            "rn",
-            F.row_number().over(W.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("cent_id"))),
-        )
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cent_id").alias("cell"), "e")
-    )
-
-
-def _km_comps(assign):
-    """Recompute centroids as exact decimal element-wise means quantized
-    to 6 decimals. Shuffles only (cell, dim, partial-sum) — |cells| x dim
-    groups regardless of table size. Returns (cell, dim0, comp)."""
-    return (
-        assign.select("cell", F.posexplode("e").alias("dim0", "val"))
-        .groupBy("cell", "dim0")
-        .agg(
-            F.round(
-                F.sum(F.col("val").cast("decimal(18,4)")).cast("double") / F.count("*"), 6
-            ).alias("comp")
-        )
-    )
-
-
-def _km_cent_arrays(comps):
-    """(cell, dim0, comp) rows -> (cent_id, c array<double>) ordered by dim."""
-    return (
-        comps.groupBy("cell")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("dim0", "comp"))),
-                lambda x: x["comp"],
-            ).alias("c")
-        )
-        .select(F.col("cell").alias("cent_id"), "c")
-    )
-
-
-@register("q52_kmeans_step", oracle=_Q52_ORACLE)
-def q52_kmeans_step(spark, sf_dir):
-    """One deterministic Lloyd's-iteration step (the trained-IVF path):
-    quantize components to 3 decimals, assign every vector to its nearest
-    of 8 seed centroids by squared L2 (argmin, cent_id tie-break), then
-    recompute centroids as exact decimal element-wise means (quantized to
-    6 decimals). Output per refreshed cell: assignment count + centroid
-    L2 norm. Scale path: centroids broadcast; assignment is map-side; the
-    centroid update shuffles only (cell, dim, partial-sum) — 8x64 groups
-    regardless of table size (classic map-side-combine friendly agg).
-    Reference ancestry: pgvector ivfflat lists
-    (/root/reference/src/rag/vector_database.py:184-189), here as
-    explicit DataFrame algebra one training step deep."""
-    emb = _km_quantized(spark, sf_dir)
-    cents = emb.filter(F.col("vec_id").between(1, 8)).select(
-        F.col("vec_id").alias("cent_id"), F.col("e").alias("c")
-    )
-    assign = _km_assign(emb, cents)
-    comps = _km_comps(assign)
-    counts = assign.groupBy("cell").agg(F.count("*").alias("n_assigned"))
-    # comp is quantized to 6 decimals, so square-and-sum in DECIMAL
-    # (exact at scale 12, order-independent) before the lone double sqrt
-    comp_dec = F.col("comp").cast("decimal(18,6)")
-    return (
-        comps.groupBy("cell")
-        .agg(
-            F.round(F.sqrt(F.sum(comp_dec * comp_dec).cast("double")), 6).alias(
-                "centroid_l2"
-            )
-        )
-        .join(F.broadcast(counts), "cell")
-        .select("cell", "n_assigned", "centroid_l2")
-        .orderBy("cell")
-    )

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparkextract.queries.base import load, register
+from sparkextract.queries.text2 import _QUERY_WORDS
 
 _Q54_ORACLE = """
     WITH p AS (
@@ -113,7 +114,6 @@ def q54_chunk_overlap(spark, sf_dir):
 # window composition in a single plan. Scale shape: the candidate set is
 # top-k (tiny) and BROADCAST into the documents join, so the big table
 # never shuffles; the final top-3 is a TakeOrderedAndProject.
-_QUERY_WORDS = "table join window filter merge"
 
 _Q55_ORACLE = f"""
     WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
@@ -146,7 +146,7 @@ _Q55_ORACLE = f"""
 
 @register("q55_rerank_topk", oracle=_Q55_ORACLE)
 def q55_rerank_topk(spark, sf_dir):
-    from sparkextract.queries.wave3 import _dot, _norm
+    from sparkextract.queries.vector import _dot, _norm
 
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
@@ -260,112 +260,6 @@ def q56_ocr_clean_chain(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# q57: a SECOND deterministic Lloyd's iteration chained on q52's output
-# centroids, plus a centroid-shift convergence metric — proof that the
-# iterative-algorithm shape (a training loop expressed as DataFrame
-# algebra, one materialization-free plan per step) stays oracle-exact
-# across steps. Numeric discipline per step: components quantized to 3
-# decimals, refreshed centroids to 6; distances are fixed-order double
-# folds (identical in both engines); means are exact DECIMAL(18,4) sums;
-# the L2/shift square-sums run in DECIMAL(18,6) (exact at scale 12)
-# before the lone double sqrt. Scale shape: each step broadcasts 8
-# centroids and shuffles only (cell, dim, partial-sum) — 8x64 groups
-# per step regardless of corpus size.
-def _q57_oracle() -> str:
-    from sparkextract.queries.wave4 import _Q52_CTES
-
-    return f"""
-    WITH {_Q52_CTES},
-    c2 AS (
-      SELECT cell AS cent_id, list(comp ORDER BY dim) AS c
-      FROM newc GROUP BY cell
-    ),
-    assign2 AS (
-      SELECT d.vec_id, c2.cent_id AS cell,
-             list_sum(list_transform(range(1, 65),
-               i -> (d.e[i] - c2.c[i]) * (d.e[i] - c2.c[i]))) AS dist
-      FROM eq d, c2
-      WHERE d.vec_id > 8
-      QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY d.vec_id ORDER BY dist ASC, c2.cent_id ASC) = 1
-    ),
-    comps2 AS (
-      SELECT a.cell, i.i AS dim,
-             ROUND(CAST(SUM(CAST(d.e[i.i] AS DECIMAL(18,4))) AS DOUBLE)
-               / COUNT(*), 6) AS comp
-      FROM assign2 a
-      JOIN eq d USING (vec_id)
-      CROSS JOIN (SELECT UNNEST(range(1, 65)) AS i) i
-      GROUP BY a.cell, i.i
-    ),
-    counts2 AS (SELECT cell, COUNT(*) AS n FROM assign2 GROUP BY cell),
-    l2 AS (
-      SELECT cell,
-             ROUND(SQRT(CAST(SUM(CAST(comp AS DECIMAL(18,6)) * CAST(comp AS DECIMAL(18,6))) AS DOUBLE)), 6) AS centroid_l2
-      FROM comps2 GROUP BY cell
-    ),
-    shift AS (
-      SELECT n2.cell,
-             ROUND(SQRT(CAST(SUM(
-               (CAST(n2.comp AS DECIMAL(18,6)) - CAST(n1.comp AS DECIMAL(18,6)))
-             * (CAST(n2.comp AS DECIMAL(18,6)) - CAST(n1.comp AS DECIMAL(18,6)))
-             ) AS DOUBLE)), 6) AS centroid_shift
-      FROM comps2 n2 JOIN newc n1 USING (cell, dim)
-      GROUP BY n2.cell
-    )
-    SELECT l2.cell, CAST(counts2.n AS BIGINT) AS n_assigned,
-           l2.centroid_l2, shift.centroid_shift
-    FROM l2 JOIN counts2 USING (cell) JOIN shift USING (cell)
-    ORDER BY l2.cell
-"""
-
-
-@register("q57_kmeans_step2", oracle=_q57_oracle())
-def q57_kmeans_step2(spark, sf_dir):
-    """Two chained Lloyd's iterations. At 100 TB, persist (or write out)
-    the assignment DataFrame between iterations — otherwise each
-    iteration's `_km_assign` re-scans the full embeddings table; at gate
-    scale the double scan is cheaper than a cache, so it is left
-    unpersisted here (q71 shows the per-iteration localCheckpoint form)."""
-    from sparkextract.queries.wave4 import (
-        _km_assign,
-        _km_cent_arrays,
-        _km_comps,
-        _km_quantized,
-    )
-
-    emb = _km_quantized(spark, sf_dir)
-    seeds = emb.filter(F.col("vec_id").between(1, 8)).select(
-        F.col("vec_id").alias("cent_id"), F.col("e").alias("c")
-    )
-    comps1 = _km_comps(_km_assign(emb, seeds))
-    assign2 = _km_assign(emb, _km_cent_arrays(comps1))
-    comps2 = _km_comps(assign2)
-    counts2 = assign2.groupBy("cell").agg(F.count("*").alias("n_assigned"))
-    comp_dec = F.col("comp").cast("decimal(18,6)")
-    l2 = comps2.groupBy("cell").agg(
-        F.round(F.sqrt(F.sum(comp_dec * comp_dec).cast("double")), 6).alias("centroid_l2")
-    )
-    d = (
-        F.col("n2.comp").cast("decimal(18,6)") - F.col("n1.comp").cast("decimal(18,6)")
-    )
-    # comps1 is |cells| x dim rows (8x64) regardless of corpus size —
-    # broadcast it so the shift join never becomes a sort-merge shuffle
-    shift = (
-        comps2.alias("n2")
-        .join(F.broadcast(comps1.alias("n1")), ["cell", "dim0"])
-        .groupBy("cell")
-        .agg(F.round(F.sqrt(F.sum(d * d).cast("double")), 6).alias("centroid_shift"))
-    )
-    return (
-        l2.join(F.broadcast(counts2), "cell")
-        .join(F.broadcast(shift), "cell")
-        .select("cell", "n_assigned", "centroid_l2", "centroid_shift")
-        .orderBy("cell")
-    )
-
-
-# --------------------------------------------------------------------------
 # q58: the FULL RAG-query lifecycle (SURVEY.md §3.3 steps 3-6) as ONE
 # plan: kNN retrieve (top-10 by cosine) -> content dedup (D3, md5 key,
 # lowest-id survivor) -> heuristic rerank (similarity + overlap*0.01,
@@ -427,7 +321,7 @@ _Q58_ORACLE = f"""
 def q58_retrieval_pipeline(spark, sf_dir):
     from pyspark.sql.window import Window as W
 
-    from sparkextract.queries.wave3 import _dot, _norm
+    from sparkextract.queries.vector import _dot, _norm
 
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
@@ -517,80 +411,6 @@ def q59_frame_sample(spark, sf_dir):
     video = _media_df(spark, sf_dir, 200).filter(F.col("media_type") == "video")
     return sample_frames(video, n_frames=_Q59_FRAMES).select(
         "media_id", "frame_idx", "n_frame_bytes", "frame_hash"
-    )
-
-
-# --------------------------------------------------------------------------
-# q60: document-length distribution stats per language — exact
-# interpolated percentiles (median / p90 / p99), the curriculum- and
-# packing-planning stat a training pipeline reads before batching.
-# Spark `percentile` and DuckDB `quantile_cont` share the (n-1)
-# interpolation convention, verified to agree bit-for-bit on integer
-# inputs. Scale shape: exact percentiles need a per-group sort — fine
-# for per-language groups (bounded group count, partial agg shuffles
-# only); at petabyte scale swap in approx_percentile and drop the
-# oracle row (documented tradeoff, not a silent cap).
-@register(
-    "q60_length_distribution",
-    oracle="""
-    SELECT lang,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(MIN(n_chars) AS BIGINT) AS min_chars,
-           ROUND(quantile_cont(n_chars, 0.5), 6) AS p50,
-           ROUND(quantile_cont(n_chars, 0.9), 6) AS p90,
-           ROUND(quantile_cont(n_chars, 0.99), 6) AS p99,
-           CAST(MAX(n_chars) AS BIGINT) AS max_chars
-    FROM documents GROUP BY lang
-    """,
-)
-def q60_length_distribution(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    return docs.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.min("n_chars").alias("min_chars"),
-        F.round(F.expr("percentile(n_chars, 0.5D)"), 6).alias("p50"),
-        F.round(F.expr("percentile(n_chars, 0.9D)"), 6).alias("p90"),
-        F.round(F.expr("percentile(n_chars, 0.99D)"), 6).alias("p99"),
-        F.max("n_chars").alias("max_chars"),
-    )
-
-
-# --------------------------------------------------------------------------
-# q61: CUBE aggregation with grouping_id — the full-lattice completion of
-# q29's ROLLUP (A7 family): per-(lang, source) counts plus every
-# subtotal level, disambiguated by the SQL-standard grouping id (Spark
-# grouping_id() and DuckDB GROUPING() share the leftmost-is-MSB bit
-# convention, verified). Scale shape: CUBE expands each input row into
-# 2^k lattice rows BEFORE the shuffle but partial aggregation collapses
-# them map-side; group count stays bounded by |lang| x |source|.
-@register(
-    "q61_cube_lattice",
-    oracle="""
-    SELECT COALESCE(lang, '(all)') AS lang, COALESCE(source, '(all)') AS source,
-           CAST(GROUPING(lang, source) AS INT) AS gid,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_chars) AS BIGINT) AS total_chars
-    FROM documents GROUP BY CUBE (lang, source)
-    """,
-)
-def q61_cube_lattice(spark, sf_dir):
-    # superaggregate NULLs are rendered '(all)' (q29's convention); gid
-    # still disambiguates a real '(all)' value from a lattice level
-    docs = load(spark, sf_dir, "documents")
-    return (
-        docs.cube("lang", "source")
-        .agg(
-            F.grouping_id().alias("gid"),
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-        )
-        .select(
-            F.coalesce("lang", F.lit("(all)")).alias("lang"),
-            F.coalesce("source", F.lit("(all)")).alias("source"),
-            "gid",
-            "n_docs",
-            "total_chars",
-        )
     )
 
 

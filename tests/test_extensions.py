@@ -1,7 +1,6 @@
 """Tests for the extension modules: multimodal plumbing, streaming
 incremental ingest, confidence metrics."""
 
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -125,7 +124,7 @@ def test_ivf_topk_probes_two_cells(spark):
 def test_wave4_ann_recall_bounds(spark):
     from sparkextract.queries.registry import ORACLE_SQL, SPARK_QUERIES
 
-    assert "q49_bpe_token_stats" in ORACLE_SQL and "q50_ann_recall" in ORACLE_SQL
+    assert "q50_ann_recall" in ORACLE_SQL
     row = SPARK_QUERIES["q50_ann_recall"](spark, "/root/testdata/sf0.001").collect()[0]
     assert 0 <= row["n_overlap"] <= 10
     assert row["recall_at_10"] == row["n_overlap"] / 10.0
@@ -265,15 +264,14 @@ def test_simhash_bigrams_spaceless_doc(spark):
 
 
 def test_driver_view_fits_cap_and_covers_registry():
-    # the round driver records at most 50 queries() entries
-    # (CORRECTNESS_r02.json == first 50 registry entries): the exported
-    # view must stay under the cap with headroom, keep 1:1 oracles, and
-    # account for every fine-grained query either directly or via a panel
+    # the driver contract records at most 50 queries() entries: the
+    # exported view must leave at least 12 free slots, keep 1:1 oracles,
+    # and account for every fine-grained query directly or via a panel
     from sparkextract.queries.panels import PANEL_SPECS, PANELED
     from sparkextract.queries.registry import SPARK_QUERIES, driver_queries
 
     sq, osql = driver_queries()
-    assert len(sq) <= 48
+    assert len(sq) <= 38
     assert set(osql) == set(sq)
     exported = set(sq)
     for name in SPARK_QUERIES:
@@ -287,38 +285,3 @@ def test_driver_view_fits_cap_and_covers_registry():
             assert set(mapping) <= colnames, (pname, fine)
 
 
-# ------------------------------------------------------- q75 edge parity
-def test_q75_zero_word_doc_matches_duckdb(spark, tmp_path):
-    """A whitespace-only document divides by zero words: Spark doubles
-    yield NaN while DuckDB yields NULL — q75 guards the division so both
-    engines emit NULL metrics and keep=False/'too_short'."""
-    import duckdb
-
-    from sparkextract.queries.registry import ORACLE_SQL, SPARK_QUERIES
-
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf)
-    rows = [
-        (0, "   \t  \n ", "en", "web", 8),
-        (1, "plenty " * 60 + "of distinct words here " * 10, "en", "web", 700),
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(os.path.join(sf, "documents.parquet"))
-
-    sdf = SPARK_QUERIES["q75_quality_rules"](spark, sf).orderBy("doc_id")
-    s_rows = [tuple(r) for r in sdf.collect()]
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{os.path.join(sf, 'documents.parquet')}/*.parquet')"
-    )
-    d_rows = con.execute(
-        ORACLE_SQL["q75_quality_rules"] + " ORDER BY doc_id"
-    ).fetchall()
-
-    assert s_rows == d_rows
-    zero = s_rows[0]
-    assert zero[3] is None and zero[4] is None  # diversity, mean_word_len
-    assert zero[5] == "too_short" and zero[6] is False
