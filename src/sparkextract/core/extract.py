@@ -146,7 +146,8 @@ def extract_document(spans: Iterable[Mapping] | None) -> list[Span]:
     """Oracle entry point: raw input span array -> ordered output spans.
 
     Input spans are processed in their source ``offset`` order; a missing
-    or null array yields an empty output. Duplicate offsets (malformed
+    or null array yields an empty output, and null elements are skipped
+    (the Spark paths drop them too). Duplicate offsets (malformed
     input) tie-break on (kind, text, media_ref) so the output is a pure
     function of the span *set* — never of the physical list order, which
     Spark does not guarantee after a mega-doc split/reassemble.
@@ -154,7 +155,7 @@ def extract_document(spans: Iterable[Mapping] | None) -> list[Span]:
     if spans is None:
         return []
     ordered_in = sorted(
-        (dict(s) for s in spans),
+        (dict(s) for s in spans if s is not None),
         key=lambda s: (
             s.get("offset") if s.get("offset") is not None else 0,
             s.get("kind") or "",

@@ -2,7 +2,7 @@
 
 Pipeline (north_rule):
     read documents → anti-join checkpoint manifest (J2 resume) →
-    repartition by hash(doc_id) → [small docs] whole-doc ``mapInPandas`` /
+    [small docs] whole-doc ``mapInPandas`` /
     [mega docs] explode → phase-1 ``mapInPandas`` → groupBy(doc_id)
     ``applyInPandas`` finalize → union → write bucketed output + manifest.
 
@@ -14,8 +14,9 @@ Splitting therefore commutes with extraction and the mega path is
 bit-identical to the whole-doc path (tested in test_spark_job.py).
 
 Scale notes:
-- the whole-doc path has ZERO shuffles after the balance repartition —
-  extraction is embarrassingly parallel;
+- the whole-doc path has ZERO shuffles — extraction is map-only and runs
+  directly on the scan splits (``spark.sql.files.maxPartitionBytes``
+  already balances them);
 - the mega path shuffles only mega-doc items (~0.1% of docs), keyed by
   doc_id, with AQE skew handling on;
 - all Python crossings are Arrow-batched (no per-row Python, input_hint);
@@ -45,16 +46,6 @@ _EXPLODED_COLS = ["doc_id", "kind", "text", "media_ref", "offset"]
 _ITEM_COLS = ["doc_id", "kind", "text", "media_ref", "src_offset", "sub_idx"]
 
 
-def _spans_to_list(cell) -> list[dict]:
-    """Arrow hands array<struct> to pandas as ndarray-of-dicts (or None)."""
-    if cell is None:
-        return []
-    try:
-        return [s for s in cell if s is not None]
-    except TypeError:
-        return []
-
-
 def _extract_whole_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     # imported inside the UDF so the zip shipped via addPyFile resolves on
     # executors even when the driver venv differs (cluster path)
@@ -62,8 +53,9 @@ def _extract_whole_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
 
     for pdf in batches:
         rows: list[tuple] = []
+        # Arrow hands array<struct> to pandas as ndarray-of-dicts (or None)
         for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            for s in extract_document(_spans_to_list(spans)):
+            for s in extract_document(spans):
                 rows.append((doc_id, s["kind"], s["text"], s["media_ref"], s["offset"]))
         yield pd.DataFrame(rows, columns=_EXPLODED_COLS)
 
@@ -111,21 +103,12 @@ def extract_exploded(
     docs: DataFrame,
     skew_threshold: int = config.MEGA_DOC_SPAN_THRESHOLD,
     parallelism: int | None = None,
-    balance_repartition: bool = False,
 ) -> DataFrame:
     """documents(doc_id, spans) -> exploded output spans.
 
     ``skew_threshold``: docs with more input spans than this take the
     explode/split/reassemble path; pass ``None``/huge to force the
     whole-doc path (used by the invariance tests).
-
-    ``balance_repartition``: extraction is map-only, so by default it runs
-    directly on the scan splits — repartitioning first would shuffle the
-    ENTIRE document payload once before any work (at 100 TB that doubles
-    cluster I/O for nothing; file splitting via
-    ``spark.sql.files.maxPartitionBytes`` already balances). Set True only
-    when the source layout is known-pathological (e.g. one giant file
-    of an unsplittable format).
     """
     from sparkextract.spark.session import ensure_workers_can_import
 
@@ -140,8 +123,6 @@ def extract_exploded(
         small = docs.filter(n_span <= skew_threshold)
         mega = docs.filter(n_span > skew_threshold)
 
-    if balance_repartition:
-        small = small.repartition(parallelism, "doc_id")
     small_out = small.mapInPandas(_extract_whole_docs, schema=EXPLODED_DDL)
     if mega is None:
         return small_out
@@ -177,12 +158,19 @@ def assemble_spans(exploded: DataFrame) -> DataFrame:
 
     Built-in exprs only: sort_array on struct(offset, ...) sorts by the
     leading offset field, then transform reorders the struct fields to the
-    canonical (kind, text, media_ref, offset) layout."""
+    canonical (kind, text, media_ref, offset) layout. A row with a NULL
+    ``kind`` (a doc_id carried by an outer join with no spans) contributes
+    no element: ``collect_list`` skips the NULL struct."""
     return (
         exploded.groupBy("doc_id")
         .agg(
             F.sort_array(
-                F.collect_list(F.struct("offset", "kind", "text", "media_ref"))
+                F.collect_list(
+                    F.when(
+                        F.col("kind").isNotNull(),
+                        F.struct("offset", "kind", "text", "media_ref"),
+                    )
+                )
             ).alias("_s")
         )
         .select(
@@ -209,32 +197,8 @@ def extract_documents(docs: DataFrame, **kwargs) -> DataFrame:
     pass, one shuffle. (An anti-join against the assembled result would
     reference the extraction subtree twice in the same plan, and Spark
     recomputes unshared subtrees — at 100 TB that doubles the job.)
-    ``collect_list`` skips NULL elements, so unmatched docs fold to an
-    empty span array."""
+    ``assemble_spans`` skips the NULL-kind rows, so unmatched docs fold
+    to an empty span array."""
     exploded = extract_exploded(docs, **kwargs)
     joined = docs.select("doc_id").join(exploded, "doc_id", "left")
-    return (
-        joined.groupBy("doc_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.when(
-                        F.col("kind").isNotNull(),
-                        F.struct("offset", "kind", "text", "media_ref"),
-                    )
-                )
-            ).alias("_s")
-        )
-        .select(
-            "doc_id",
-            F.transform(
-                "_s",
-                lambda x: F.struct(
-                    x["kind"].alias("kind"),
-                    x["text"].alias("text"),
-                    x["media_ref"].alias("media_ref"),
-                    x["offset"].alias("offset"),
-                ),
-            ).alias("spans"),
-        )
-    )
+    return assemble_spans(joined)

@@ -115,11 +115,17 @@ def test_resume_idempotent(spark, docs, tmp_path_factory):
 
 
 def test_empty_and_null_spans(spark):
-    df = spark.createDataFrame(
-        [("d-empty", []), ("d-null", None)], schema=DOC_SCHEMA
-    )
-    out = _collect_spans(extract_documents(df, skew_threshold=100))
-    assert out == {"d-empty": [], "d-null": []}
+    span = {"kind": "text", "text": "a paragraph kept after a null element " * 4,
+            "media_ref": None, "offset": 0}
+    rows = [("d-empty", []), ("d-null", None), ("d-null-elem", [None, span])]
+    df = spark.createDataFrame(rows, schema=DOC_SCHEMA)
+    oracle = {doc_id: extract_document(spans) for doc_id, spans in rows}
+    assert oracle["d-null-elem"] == extract_document([span])
+    assert oracle["d-null-elem"]
+    whole = _collect_spans(extract_documents(df, skew_threshold=100))
+    mega = _collect_spans(extract_documents(df, skew_threshold=0))
+    assert whole == mega == oracle
+    assert whole["d-empty"] == whole["d-null"] == []
 
 
 def test_assemble_roundtrip(spark, docs):
