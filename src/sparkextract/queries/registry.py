@@ -12,29 +12,17 @@ Two surfaces:
 
 from __future__ import annotations
 
-import sparkextract.queries.dedup2  # noqa: F401
+import sparkextract.queries.ann  # noqa: F401
+import sparkextract.queries.dedup  # noqa: F401
 import sparkextract.queries.extraction  # noqa: F401
+import sparkextract.queries.graph  # noqa: F401
+import sparkextract.queries.incremental  # noqa: F401
+import sparkextract.queries.media  # noqa: F401
+import sparkextract.queries.quality  # noqa: F401
 import sparkextract.queries.relational  # noqa: F401
-import sparkextract.queries.round3  # noqa: F401
-import sparkextract.queries.round4  # noqa: F401
-import sparkextract.queries.round5  # noqa: F401
-import sparkextract.queries.round5b  # noqa: F401
-import sparkextract.queries.round5c  # noqa: F401
-import sparkextract.queries.round5d  # noqa: F401
-import sparkextract.queries.round5g  # noqa: F401
-import sparkextract.queries.round5h  # noqa: F401
-import sparkextract.queries.round5o  # noqa: F401
-import sparkextract.queries.round5q  # noqa: F401
-import sparkextract.queries.round5v  # noqa: F401
-import sparkextract.queries.round5y  # noqa: F401
-import sparkextract.queries.round5aa  # noqa: F401
-import sparkextract.queries.round5z  # noqa: F401
+import sparkextract.queries.retrieval  # noqa: F401
+import sparkextract.queries.sketches  # noqa: F401
 import sparkextract.queries.text  # noqa: F401
-import sparkextract.queries.text2  # noqa: F401
-import sparkextract.queries.vector  # noqa: F401
-import sparkextract.queries.wave3  # noqa: F401
-import sparkextract.queries.wave4  # noqa: F401
-import sparkextract.queries.wave5  # noqa: F401
 from sparkextract.queries.base import ORACLE_SQL, SPARK_QUERIES
 
 

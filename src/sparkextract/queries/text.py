@@ -1,184 +1,14 @@
-"""Text-analysis + dedup operator surface (training-data pipeline ops):
-exact dedup, MinHash-LSH signatures, n-gram Jaccard, fingerprinting,
-language-ID heuristic, quality scoring, token counting — SURVEY.md §2.7-
-2.8 plus the large-scale pipeline extras.
-
-All hash math is md5-based so Spark and DuckDB produce identical values
-(both emit lowercase hex); min-over-hash comparisons are plain VARCHAR
-ordering, identical in both engines.
+"""Text-analysis queries: corpus token top-k, page-marker concat (W3/F3),
+cross-method positional comparison (J4), the answer-confidence
+heuristic (F8), PMI co-occurrence and one BPE merge step.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 from pyspark.sql.window import Window as W
 
 from sparkextract.queries.base import load, register
-
-
-# --------------------------------------------------------------------------
-# D4/D5 exact dedup by content hash. The corpus has no natural dups, so the
-# query builds one deterministically: base docs ∪ a shifted copy of every
-# 7th doc, then clusters by md5(text). Scale: one shuffle on a 32-char key.
-@register(
-    "q11_dedup_exact",
-    oracle="""
-    WITH corpus AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 7 = 0
-    )
-    SELECT md5(text) AS content_hash,
-           CAST(COUNT(*) AS BIGINT) AS cluster_size,
-           CAST(MIN(doc_id) AS BIGINT) AS keeper_doc_id
-    FROM corpus
-    GROUP BY md5(text)
-    HAVING COUNT(*) > 1
-    """,
-)
-def q11_dedup_exact(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    dup = docs.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    corpus = docs.unionByName(dup)
-    return (
-        corpus.groupBy(F.md5("text").alias("content_hash"))
-        .agg(
-            F.count("*").alias("cluster_size"),
-            F.min("doc_id").alias("keeper_doc_id"),
-        )
-        .filter(F.col("cluster_size") > 1)
-    )
-
-
-# --------------------------------------------------------------------------
-# J1 self-join shape: duplicate pairs via hash equi-join (the Spark-first
-# replacement of the reference's O(n^2) similarity loop,
-# /root/reference/src/table_extractor.py:144-152).
-@register(
-    "q13_dup_pairs_selfjoin",
-    oracle="""
-    WITH corpus AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 13 = 0
-    )
-    SELECT a.doc_id AS left_id, b.doc_id AS right_id
-    FROM corpus a JOIN corpus b
-      ON md5(a.text) = md5(b.text) AND a.doc_id < b.doc_id
-    """,
-)
-def q13_dup_pairs_selfjoin(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    dup = docs.filter(F.col("doc_id") % 13 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    corpus = docs.unionByName(dup).withColumn("h", F.md5("text"))
-    a = corpus.alias("a")
-    b = corpus.alias("b")
-    return a.join(
-        b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id"))
-    ).select(F.col("a.doc_id").alias("left_id"), F.col("b.doc_id").alias("right_id"))
-
-
-# --------------------------------------------------------------------------
-# MinHash signatures (LSH band minima): shingle = 8-char window over the
-# first 256 chars; band signature = min md5(band_salt || shingle). At scale
-# this is shingle-explode → per-band min — a single map-side-combinable agg;
-# here the array form keeps it shuffle-free per doc.
-@register(
-    "q19_minhash_signature",
-    oracle="""
-    SELECT doc_id,
-           list_min(list_transform(range(1, GREATEST(LENGTH(SUBSTRING(text,1,256)) - 7, 1) + 1),
-                    i -> md5('b0|' || SUBSTRING(SUBSTRING(text,1,256), i, 8)))) AS sig0,
-           list_min(list_transform(range(1, GREATEST(LENGTH(SUBSTRING(text,1,256)) - 7, 1) + 1),
-                    i -> md5('b1|' || SUBSTRING(SUBSTRING(text,1,256), i, 8)))) AS sig1,
-           list_min(list_transform(range(1, GREATEST(LENGTH(SUBSTRING(text,1,256)) - 7, 1) + 1),
-                    i -> md5('b2|' || SUBSTRING(SUBSTRING(text,1,256), i, 8)))) AS sig2,
-           list_min(list_transform(range(1, GREATEST(LENGTH(SUBSTRING(text,1,256)) - 7, 1) + 1),
-                    i -> md5('b3|' || SUBSTRING(SUBSTRING(text,1,256), i, 8)))) AS sig3
-    FROM documents
-    """,
-)
-def q19_minhash_signature(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    head = F.substring("text", 1, 256)
-    n_sh = F.greatest(F.length(head) - 7, F.lit(1))
-
-    def band_min(b: int):
-        # NB: a one-arg lambda — a default-arg closure (lambda i, b=b: ...)
-        # would make Spark treat it as the 2-arg (element, index) form
-        prefix = f"b{b}|"
-        return F.array_min(
-            F.transform(
-                F.sequence(F.lit(1), n_sh),
-                lambda i: F.md5(F.concat(F.lit(prefix), F.substring(head, i, F.lit(8)))),
-            )
-        )
-
-    return docs.select("doc_id", *[band_min(b).alias(f"sig{b}") for b in range(4)])
-
-
-# --------------------------------------------------------------------------
-# n-gram (token trigram) Jaccard between each doc and its successor within
-# a source — the near-dup scoring primitive.
-@register(
-    "q20_jaccard_neighbors",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, source, list_distinct(string_split(text, ' ')) AS t FROM documents
-    ), pairs AS (
-      SELECT doc_id AS left_id,
-             lead(doc_id) OVER w AS right_id,
-             t AS ta,
-             lead(t) OVER w AS tb
-      FROM toks
-      WINDOW w AS (PARTITION BY source ORDER BY doc_id ASC)
-    )
-    SELECT left_id, right_id,
-           ROUND(CAST(LENGTH(list_intersect(ta, tb)) AS DOUBLE) /
-                 LENGTH(list_distinct(list_concat(ta, tb))), 6) AS jaccard
-    FROM pairs WHERE right_id IS NOT NULL
-    """,
-)
-def q20_jaccard_neighbors(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", "source", F.array_distinct(F.split("text", " ")).alias("t")
-    )
-    w = W.partitionBy("source").orderBy(F.asc("doc_id"))
-    paired = docs.select(
-        F.col("doc_id").alias("left_id"),
-        F.lead("doc_id").over(w).alias("right_id"),
-        F.col("t").alias("ta"),
-        F.lead("t").over(w).alias("tb"),
-    ).filter(F.col("right_id").isNotNull())
-    inter = F.size(F.array_intersect("ta", "tb"))
-    union = F.size(F.array_distinct(F.concat("ta", "tb")))
-    return paired.select(
-        "left_id", "right_id", F.round(inter.cast("double") / union, 6).alias("jaccard")
-    )
-
-
-# --------------------------------------------------------------------------
-# P2/F13 normalization + fingerprint projection (document fingerprinting).
-@register(
-    "q21_fingerprint",
-    oracle="""
-    SELECT lang,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(COUNT(DISTINCT md5(lower(regexp_replace(text, '[^a-z ]', '', 'g')))) AS BIGINT) AS n_unique
-    FROM documents GROUP BY lang
-    """,
-)
-def q21_fingerprint(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.regexp_replace("text", "[^a-z ]", "")))
-    return docs.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct(fp).alias("n_unique"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -207,60 +37,456 @@ def q23_token_topk(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Quality scoring (length + stopword-ratio factors, A2 analog) with a
-# decimal-exact grouped average.
+# F3: `--- Page N ---` interpolation (reference src/text_extractor.py:97,
+# 218,451) — group-concat with ordinal markers: the first 3 docs of each
+# source render as one paged text blob.
 @register(
-    "q25_quality_score",
+    "q35_page_concat",
     oracle="""
-    SELECT source,
-           CAST(SUM(CAST(q AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_quality,
-           CAST(COUNT(*) FILTER (WHERE q >= 0.5) AS BIGINT) AS n_good
-    FROM (
-      SELECT source,
-             ROUND(0.4 * LEAST(CAST(n_chars AS DOUBLE) / 1000, 1.0)
-                 + 0.3 * LEAST(CAST(LENGTH(regexp_extract_all(text, '\\b(the|a|of|and)\\b')) AS DOUBLE) / 10, 1.0)
-                 + 0.3 * LEAST(CAST(LENGTH(regexp_extract_all(text, '\\S+')) AS DOUBLE) / 100, 1.0), 6) AS q
+    WITH pages AS (
+      SELECT source, text,
+             row_number() OVER (PARTITION BY source ORDER BY doc_id ASC) AS pn
       FROM documents
-    ) GROUP BY source
+    )
+    SELECT source,
+           string_agg('--- Page ' || CAST(pn AS VARCHAR) || ' ---' || chr(10) || text,
+                      chr(10) ORDER BY pn ASC) AS paged_text
+    FROM pages WHERE pn <= 3
+    GROUP BY source
     """,
 )
-def q25_quality_score(spark, sf_dir):
+def q35_page_concat(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
-    stop_hits = F.regexp_count("text", F.lit(r"\b(the|a|of|and)\b"))
-    ntok = F.regexp_count("text", F.lit(r"\S+"))
-    q = F.round(
-        0.4 * F.least(F.col("n_chars").cast("double") / 1000, F.lit(1.0))
-        + 0.3 * F.least(stop_hits.cast("double") / 10, F.lit(1.0))
-        + 0.3 * F.least(ntok.cast("double") / 100, F.lit(1.0)),
-        6,
+    w = W.partitionBy("source").orderBy(F.asc("doc_id"))
+    pages = docs.withColumn("pn", F.row_number().over(w)).filter(F.col("pn") <= 3)
+    page_text = F.concat(
+        F.lit("--- Page "), F.col("pn").cast("string"), F.lit(" ---\n"), F.col("text")
     )
     return (
-        docs.select("source", q.alias("q"))
+        pages.select("source", "pn", page_text.alias("pt"))
         .groupBy("source")
         .agg(
-            (F.sum(F.col("q").cast("decimal(18,6)")).cast("double") / F.count("*")).alias(
-                "avg_quality"
-            ),
-            F.sum(F.when(F.col("q") >= 0.5, 1).otherwise(0)).alias("n_good"),
+            F.concat_ws(
+                "\n", F.transform(F.array_sort(F.collect_list(F.struct("pn", "pt"))), lambda x: x["pt"])
+            ).alias("paged_text")
         )
     )
 
 
 # --------------------------------------------------------------------------
-# F12: JSON prop extraction + conditional agg.
-@register(
-    "q26_json_props",
-    oracle="""
-    SELECT event_type,
-           CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-           CAST(COUNT(*) FILTER (WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) > 50) AS BIGINT) AS n_high
-    FROM events GROUP BY event_type
-    """,
-)
-def q26_json_props(spark, sf_dir):
-    ev = load(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return ev.groupBy("event_type").agg(
-        F.sum(k).alias("sum_k"),
-        F.sum(F.when(k > 50, 1).otherwise(0)).alias("n_high"),
+# q70: similarity-scored cross-extraction comparison (soft J4). Two
+# "methods" produce text for the same doc: method A = the document text,
+# method B = the same text with its first (doc_id % 13) chars rewritten —
+# the deterministic stand-in for two extractors disagreeing on a prefix.
+# score = 1 - levenshtein/maxlen, pass = score >= 0.8 (reference
+# threshold). Both texts are capped at 120 chars: levenshtein is O(n*m)
+# per pair in BOTH engines, so a real pipeline compares bounded prefixes
+# (or hashes equal-length blocks) rather than whole documents — the cap
+# is the documented scale guard, not a convenience.
+_Q70_CAP = 120
+
+
+_Q70_ORACLE = f"""
+    WITH m AS (
+      SELECT doc_id,
+             substr(text, 1, {_Q70_CAP}) AS a,
+             substr(repeat('x', CAST(doc_id % 13 AS INT))
+                    || substr(text, CAST(doc_id % 13 AS INT) + 1),
+                    1, {_Q70_CAP}) AS b
+      FROM documents
     )
+    SELECT doc_id,
+           ROUND(1.0 - CAST(levenshtein(a, b) AS DOUBLE)
+                       / GREATEST(LENGTH(a), LENGTH(b), 1), 6) AS similarity,
+           (1.0 - CAST(levenshtein(a, b) AS DOUBLE)
+                  / GREATEST(LENGTH(a), LENGTH(b), 1)) >= 0.8 AS agree
+    FROM m
+"""
+
+
+@register("q70_text_similarity", oracle=_Q70_ORACLE)
+def q70_text_similarity(spark, sf_dir):
+    """Soft J4: per-doc edit-distance similarity between two method
+    variants, thresholded at the reference's 0.8. Map-only: every
+    expression is a JVM built-in over one scan, no shuffle at all."""
+    docs = load(spark, sf_dir, "documents")
+    a = F.substring("text", 1, _Q70_CAP)
+    b = F.substring(
+        F.concat(
+            F.expr("repeat('x', CAST(doc_id % 13 AS INT))"),
+            F.expr("substring(text, CAST(doc_id % 13 AS INT) + 1)"),
+        ),
+        1,
+        _Q70_CAP,
+    )
+    sim = 1.0 - F.levenshtein(a, b).cast("double") / F.greatest(
+        F.length(a), F.length(b), F.lit(1)
+    )
+    return docs.select(
+        "doc_id",
+        F.round(sim, 6).alias("similarity"),
+        (sim >= 0.8).alias("agree"),
+    )
+
+
+# --------------------------------------------------------------------------
+# q74: F8 — the reference's LLM-answer confidence heuristic
+# (/root/reference/src/rag/ollama_client.py:271-321). The LLM itself is
+# out of scope (no model serving in an extraction engine), but the
+# heuristic is pure string math over the answer text: presence (not
+# occurrence count) of each phrase in four indicator lists, +/- fixed
+# deltas from a 0.7 base, short/long length penalties, clamp to [0,1].
+# All deltas are multiples of 0.05, so the score is computed in INTEGER
+# centi-points (70 - 10*u - 5*h + 5*c + 10*ci - len_penalty, clamped to
+# [0,100]) and divided by 100 once at the end — bit-identical across
+# engines with no float-summation-order hazard. Answers are synthesized
+# deterministically from document text with phrase/length injections
+# keyed on doc_id so every branch of the formula is exercised.
+# Scale shape: map-only single scan; every predicate is a JVM built-in
+# `contains` — Catalyst keeps the whole projection in codegen.
+_Q74_PHRASES = {
+    # (category, delta_centi_per_present_phrase, phrases) — lists verbatim
+    # from the reference, order immaterial (presence counts are summed)
+    "uncertainty": (-10, ["not sure", "unclear", "might be", "possibly", "uncertain"]),
+    "hedging": (-5, ["perhaps", "maybe", "likely", "appears", "seems"]),
+    "certainty": (5, ["clearly", "definitely", "specifically", "exactly", "precisely"]),
+    "citation": (10, ["according to", "as stated", "the document shows", "mentioned in"]),
+}
+
+
+# doc_id-keyed injections: (modulus, appended phrase)
+_Q74_INJECT = [
+    (5, " not sure"),
+    (6, " possibly"),
+    (7, " clearly"),
+    (11, " according to"),
+    (13, " maybe"),
+    (17, " definitely precisely"),
+]
+
+
+def _q74_answer_sql() -> str:
+    base = (
+        "CASE WHEN doc_id % 4 = 0 THEN substr(text, 1, 30) "
+        "WHEN doc_id % 9 = 0 THEN substr(repeat(text || ' ', 30), 1, 1100) "
+        "ELSE substr(text, 1, 200) END"
+    )
+    parts = [base] + [
+        f"CASE WHEN doc_id % {m} = 0 THEN '{p}' ELSE '' END" for m, p in _Q74_INJECT
+    ]
+    return " || ".join(parts)
+
+
+def _q74_oracle() -> str:
+    cats = {}
+    for cat, (_delta, phrases) in _Q74_PHRASES.items():
+        cats[cat] = " + ".join(
+            f"CASE WHEN position('{p}' IN ans) > 0 THEN 1 ELSE 0 END" for p in phrases
+        )
+    return f"""
+WITH answers AS (
+  SELECT doc_id, {_q74_answer_sql()} AS ans FROM documents
+),
+counted AS (
+  SELECT doc_id,
+         LENGTH(ans) AS answer_len,
+         {cats['uncertainty']} AS n_uncertain,
+         {cats['hedging']} AS n_hedge,
+         {cats['certainty']} AS n_certain,
+         {cats['citation']} AS n_cite
+  FROM answers
+)
+SELECT doc_id, n_uncertain, n_hedge, n_certain, n_cite,
+       CAST(answer_len AS BIGINT) AS answer_len,
+       GREATEST(0, LEAST(100,
+         70 - 10*n_uncertain - 5*n_hedge + 5*n_certain + 10*n_cite
+           - CASE WHEN answer_len < 50 THEN 10
+                  WHEN answer_len > 1000 THEN 5 ELSE 0 END)) / 100.0
+         AS confidence
+FROM counted
+"""
+
+
+@register("q74_answer_confidence", oracle=_q74_oracle())
+def q74_answer_confidence(spark, sf_dir):
+    docs = load(spark, sf_dir, "documents")
+    base = (
+        F.when(F.col("doc_id") % 4 == 0, F.substring("text", 1, 30))
+        .when(
+            F.col("doc_id") % 9 == 0,
+            F.substring(F.repeat(F.concat(F.col("text"), F.lit(" ")), 30), 1, 1100),
+        )
+        .otherwise(F.substring("text", 1, 200))
+    )
+    ans = F.concat(
+        base,
+        *[
+            F.when(F.col("doc_id") % m == 0, F.lit(p)).otherwise(F.lit(""))
+            for m, p in _Q74_INJECT
+        ],
+    )
+    d = docs.select("doc_id", ans.alias("ans"))
+    counts = {}
+    for cat, (_delta, phrases) in _Q74_PHRASES.items():
+        c = None
+        for p in phrases:
+            t = F.when(F.col("ans").contains(p), 1).otherwise(0)
+            c = t if c is None else c + t
+        counts[cat] = c
+    centi = (
+        F.lit(70)
+        - 10 * counts["uncertainty"]
+        - 5 * counts["hedging"]
+        + 5 * counts["certainty"]
+        + 10 * counts["citation"]
+        - F.when(F.length("ans") < 50, 10)
+        .when(F.length("ans") > 1000, 5)
+        .otherwise(0)
+    )
+    return d.select(
+        "doc_id",
+        counts["uncertainty"].alias("n_uncertain"),
+        counts["hedging"].alias("n_hedge"),
+        counts["certainty"].alias("n_certain"),
+        counts["citation"].alias("n_cite"),
+        F.length("ans").cast("long").alias("answer_len"),
+        (F.greatest(F.lit(0), F.least(F.lit(100), centi)) / 100.0).alias("confidence"),
+    )
+
+
+# --------------------------------------------------------------------------
+# q88: PMI TOKEN CO-OCCURRENCE — pointwise mutual information over
+# presence-based document co-occurrence, the association-mining op a
+# corpus-analysis pipeline runs to find collocations:
+# pmi(a,b) = ln(df_ab * N / (df_a * df_b)), support-filtered. Pair
+# generation is DOC-LOCAL: the sorted distinct token set is
+# materialized as a column (multi-referenced, so CollapseProject keeps
+# it — the q67 lesson; inlining would re-evaluate the sort per outer
+# element), and per-doc pairs come from a nested transform/slice with
+# strict ordering, so each unordered pair is emitted once — no doc_id
+# self-join shuffle. All integer products stay < 2^53 (exact in
+# double); pmi is ROUND(...,6)-ed for the ln ulp. Scale shape: pair
+# cardinality is bounded by (distinct tokens per doc)^2 per row —
+# the standard co-occurrence explode — and every agg/join after it is
+# token- or pair-keyed and mergeable.
+_Q88_MINSUP = 5
+
+
+_Q88_ORACLE = f"""
+WITH dt AS (
+  SELECT DISTINCT doc_id, t AS tok FROM (
+    SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents
+  ) WHERE t != ''
+),
+dfa AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM dt GROUP BY tok),
+pairs AS (
+  SELECT x.tok AS tok_a, y.tok AS tok_b, CAST(COUNT(*) AS BIGINT) AS df_ab
+  FROM dt x JOIN dt y ON x.doc_id = y.doc_id AND x.tok < y.tok
+  GROUP BY x.tok, y.tok
+),
+n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents)
+SELECT p.tok_a, p.tok_b, p.df_ab,
+  ROUND(ln(CAST(p.df_ab AS DOUBLE) * n.n_docs / (a.df * b.df)), 6) AS pmi
+FROM pairs p
+JOIN dfa a ON a.tok = p.tok_a
+JOIN dfa b ON b.tok = p.tok_b
+CROSS JOIN n
+WHERE p.df_ab >= {_Q88_MINSUP}
+"""
+
+
+@register("q88_pmi_cooccurrence", oracle=_Q88_ORACLE)
+def q88_pmi_cooccurrence(spark, sf_dir):
+    from pyspark.sql.functions import broadcast
+
+    docs = load(spark, sf_dir, "documents")
+    sets = docs.select(
+        "doc_id",
+        F.array_sort(
+            F.array_distinct(
+                F.filter(F.split("text", " "), lambda t: t != F.lit(""))
+            )
+        ).alias("s"),
+    )
+    pair_arr = F.flatten(
+        F.transform(
+            F.col("s"),
+            lambda x, i: F.transform(
+                F.slice(F.col("s"), i + 2, F.size("s")),
+                lambda y: F.concat_ws(" ", x, y),
+            ),
+        )
+    )
+    dt = sets.select("doc_id", F.explode("s").alias("tok"))
+    dfa = dt.groupBy("tok").agg(F.count("*").alias("df"))
+    pairs = (
+        sets.select(F.explode(pair_arr).alias("pair"))
+        .groupBy("pair")
+        .agg(F.count("*").alias("df_ab"))
+        .filter(F.col("df_ab") >= _Q88_MINSUP)
+        .select(
+            F.substring_index("pair", " ", 1).alias("tok_a"),
+            F.substring_index("pair", " ", -1).alias("tok_b"),
+            "df_ab",
+        )
+    )
+    n = docs.agg(F.count("*").alias("n_docs"))
+    dfa_a = dfa.select(F.col("tok").alias("tok_a"), F.col("df").alias("df_a"))
+    dfa_b = dfa.select(F.col("tok").alias("tok_b"), F.col("df").alias("df_b"))
+    return (
+        pairs.join(broadcast(dfa_a), "tok_a")
+        .join(broadcast(dfa_b), "tok_b")
+        .crossJoin(broadcast(n))
+        .select(
+            "tok_a",
+            "tok_b",
+            "df_ab",
+            F.round(
+                F.log(
+                    F.col("df_ab").cast("double")
+                    * F.col("n_docs")
+                    / (F.col("df_a") * F.col("df_b"))
+                ),
+                6,
+            ).alias("pmi"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# q122: ONE BPE MERGE STEP — the tokenizer-training inner loop as
+# set-oriented dataflow: (1) count adjacent token pairs corpus-wide,
+# (2) pick the argmax merge (tie-break lexicographic; pairs with
+# w1 == w2 are excluded so occurrences cannot overlap and "apply the
+# merge everywhere" is well-defined without greedy left-to-right
+# state), (3) rewrite every sequence applying the merge, (4) recount —
+# emitting the before/after top candidate tables an actual BPE trainer
+# would consult on successive iterations.
+# Scale shape: pair counting is explode + mergeable groupBy; the argmax
+# is a global top-1 (TakeOrderedAndProject); the rewrite is map-side
+# array surgery per document (no shuffle); the recount is one more
+# mergeable groupBy. One training step = 2 count shuffles, independent
+# of vocabulary size.
+_Q122_TOPK = 10
+
+
+_Q122_ORACLE = f"""
+WITH toks AS (
+  SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS t
+  FROM documents
+),
+p0 AS (
+  SELECT t[i] AS w1, t[i + 1] AS w2, CAST(COUNT(*) AS BIGINT) AS cnt
+  FROM toks, UNNEST(range(1, len(t))) AS u(i)
+  GROUP BY 1, 2
+),
+best AS (
+  SELECT w1, w2 FROM p0 WHERE w1 <> w2
+  ORDER BY cnt DESC, w1 ASC, w2 ASC LIMIT 1
+),
+merged AS (
+  SELECT doc_id, list_filter(
+    list_transform(t, (x, i) ->
+      CASE
+        WHEN x = b.w1 AND i < len(t) AND t[i + 1] = b.w2 THEN b.w1 || '_' || b.w2
+        WHEN i > 1 AND t[i - 1] = b.w1 AND x = b.w2 THEN ''
+        ELSE x
+      END),
+    x -> x != '') AS t
+  FROM toks, best b
+),
+p1 AS (
+  SELECT t[i] AS w1, t[i + 1] AS w2, CAST(COUNT(*) AS BIGINT) AS cnt
+  FROM merged, UNNEST(range(1, len(t))) AS u(i)
+  GROUP BY 1, 2
+),
+top0 AS (
+  SELECT 0 AS stage, w1, w2, cnt,
+         ROW_NUMBER() OVER (ORDER BY cnt DESC, w1 ASC, w2 ASC) AS rnk
+  FROM p0 WHERE w1 <> w2
+),
+top1 AS (
+  SELECT 1 AS stage, w1, w2, cnt,
+         ROW_NUMBER() OVER (ORDER BY cnt DESC, w1 ASC, w2 ASC) AS rnk
+  FROM p1 WHERE w1 <> w2
+)
+SELECT stage, CAST(rnk AS BIGINT) AS rnk, w1, w2, cnt
+FROM (SELECT * FROM top0 WHERE rnk <= {_Q122_TOPK}
+      UNION ALL
+      SELECT * FROM top1 WHERE rnk <= {_Q122_TOPK})
+ORDER BY stage, rnk
+"""
+
+
+def _adjacent_pairs(toks):
+    bi = F.transform(
+        F.slice(F.col("t"), 1, F.greatest(F.size("t") - 1, F.lit(0))),
+        lambda x, i: F.struct(
+            x.alias("w1"), F.element_at(F.col("t"), i + 2).alias("w2")
+        ),
+    )
+    return (
+        toks.select(F.explode(bi).alias("p"))
+        .select("p.w1", "p.w2")
+        .groupBy("w1", "w2")
+        .agg(F.count("*").cast("long").alias("cnt"))
+    )
+
+
+def _topk_pairs(pairs, stage: int):
+    from pyspark.sql import Window
+
+    # distributed top-k FIRST (TakeOrderedAndProject over the pair
+    # vocabulary), THEN a rank window over the K survivors — a global
+    # ROW_NUMBER over all pairs would single-partition the vocabulary
+    top = (
+        pairs.filter(F.col("w1") != F.col("w2"))
+        .orderBy(F.desc("cnt"), F.asc("w1"), F.asc("w2"))
+        .limit(_Q122_TOPK)
+    )
+    w = Window.orderBy(F.desc("cnt"), F.asc("w1"), F.asc("w2"))
+    return top.withColumn("rnk", F.row_number().over(w).cast("long")).select(
+        F.lit(stage).alias("stage"), "rnk", "w1", "w2", "cnt"
+    )
+
+
+@register("q122_bpe_merge", oracle=_Q122_ORACLE)
+def q122_bpe_merge(spark, sf_dir):
+    docs = load(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id", F.filter(F.split("text", " "), lambda x: x != F.lit("")).alias("t")
+    )
+    p0 = _adjacent_pairs(toks)
+    best = (
+        p0.filter(F.col("w1") != F.col("w2"))
+        .orderBy(F.desc("cnt"), F.asc("w1"), F.asc("w2"))
+        .limit(1)
+        .select(F.col("w1").alias("bw1"), F.col("w2").alias("bw2"))
+    )
+    # the merge pair is a 1-row broadcast: the rewrite stays map-side
+    with_best = toks.crossJoin(F.broadcast(best))
+    # F.get is 0-indexed and returns NULL out of range (never an ANSI
+    # index error), and a NULL comparison makes the WHEN fall through —
+    # exactly the boundary semantics the oracle's 1-indexed t[i±1] has
+    rewritten = with_best.select(
+        "doc_id",
+        F.filter(
+            F.transform(
+                F.col("t"),
+                lambda x, i: F.when(
+                    (x == F.col("bw1"))
+                    & (F.get(F.col("t"), i + 1) == F.col("bw2")),
+                    F.concat_ws("_", F.col("bw1"), F.col("bw2")),
+                )
+                .when(
+                    (F.get(F.col("t"), i - 1) == F.col("bw1"))
+                    & (x == F.col("bw2")),
+                    F.lit(""),
+                )
+                .otherwise(x),
+            ),
+            lambda x: x != F.lit(""),
+        ).alias("t"),
+    )
+    p1 = _adjacent_pairs(rewritten)
+    return _topk_pairs(p0, 0).unionAll(_topk_pairs(p1, 1)).orderBy("stage", "rnk")

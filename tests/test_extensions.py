@@ -1,6 +1,8 @@
 """Tests for the extension modules: multimodal plumbing, streaming
 incremental ingest, confidence metrics."""
 
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -252,7 +254,7 @@ def test_simhash_bigrams_spaceless_doc(spark):
     # ADVICE r2: a doc with no space used to hit sequence(1, 0) == [1, 0]
     # and abort on element_at(w, 0); now it simply has no bigrams and is
     # absent from the signature set (matching DuckDB's empty range(1,1))
-    from sparkextract.queries.dedup2 import _simhash48_col
+    from sparkextract.queries.dedup import _simhash48_col
 
     docs = spark.createDataFrame(
         [(1, "spaceless"), (2, ""), (3, "two words here")],
@@ -285,3 +287,50 @@ def test_driver_view_fits_cap_and_covers_registry():
             assert set(mapping) <= colnames, (pname, fine)
 
 
+def _write_docs(spark, rows, path):
+    spark.createDataFrame(rows, "doc_id long, text string, n_chars long").coalesce(
+        1
+    ).write.mode("overwrite").parquet(os.path.join(path, "documents.parquet"))
+
+
+def test_checkpoint_memo_invalidates_on_rewrite(spark, tmp_path):
+    """Rewriting the parquet under the same dir in one session must MISS
+    the memo (input_token keys on file size/mtime), not serve stale
+    checkpointed data."""
+    from sparkextract.queries.base import checkpoint_memo, load
+
+    root = str(tmp_path / "memo")
+    _write_docs(spark, [(1, "alpha", 0)], root)
+    build = lambda: load(spark, root, "documents").select("doc_id", "text")
+    first = checkpoint_memo(spark, root, "t", build).collect()
+    assert [r["text"] for r in first] == ["alpha"]
+    shutil.rmtree(os.path.join(root, "documents.parquet"))
+    _write_docs(spark, [(1, "beta", 0)], root)
+    second = checkpoint_memo(spark, root, "t", build).collect()
+    assert [r["text"] for r in second] == ["beta"]
+
+
+def test_ocr_media_deterministic(spark):
+    """ocr_media: cleaned pseudo-OCR text derived from the payload hash —
+    equal payloads give equal text, artifacts collapsed, fixed length."""
+    import hashlib
+
+    from sparkextract.core.normalize import collapse_ws
+    from sparkextract.core.ocr import OCR_TEXT_LEN, pseudo_ocr_raw
+    from sparkextract.spark.multimodal import MEDIA_SCHEMA, ocr_media
+
+    rows = [
+        ("m1", "d1", "image", b"same-bytes", 4, 4),
+        ("m2", "d2", "audio", b"same-bytes", 4, 4),
+        ("m3", "d3", "video", b"other", 4, 4),
+        ("m4", "d4", "pdf", None, 4, 4),
+    ]
+    media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
+    got = {r["media_id"]: r for r in ocr_media(media).collect()}
+    assert got["m1"]["ocr_text"] == got["m2"]["ocr_text"]
+    assert got["m1"]["ocr_text"] != got["m3"]["ocr_text"]
+    for r in got.values():
+        assert r["n_ocr_chars"] == OCR_TEXT_LEN
+        assert "  " not in r["ocr_text"] and "\t" not in r["ocr_text"]
+    expect = collapse_ws(pseudo_ocr_raw(hashlib.md5(b"same-bytes").hexdigest()))
+    assert got["m1"]["ocr_text"] == expect
