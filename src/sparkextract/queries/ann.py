@@ -328,7 +328,7 @@ def q50_ann_recall(spark, sf_dir):
 # --------------------------------------------------------------------------
 # q111: PRODUCT QUANTIZATION + ADC TOP-K (PQ, Jegou et al. 2011, "Product
 # Quantization for Nearest Neighbor Search") — the compression rung the
-# ANN ladder (q27 brute -> q28/q53 LSH -> q46 IVF -> q102 int8) was
+# ANN ladder (q27 brute -> q28/q53 LSH -> q46 IVF) was
 # missing: split each 64-d embedding into M=4 contiguous 16-d subspaces,
 # quantize every subvector to its nearest of K=8 sub-centroids (the
 # deterministic codebook = subvectors of vec_id 1..8, the same seeding
@@ -336,8 +336,7 @@ def q50_ann_recall(spark, sf_dir):
 # answer a query via ASYMMETRIC DISTANCE COMPUTATION — a 4x8 lookup
 # table of query-subvector-to-centroid distances, approx distance =
 # sum of 4 table entries — and report the ADC top-20 with each hit
-# flagged against the exact-L2 top-20 (the recall surface, like q107
-# did for LSH banding).
+# flagged against the exact-L2 top-20 (the recall surface).
 #
 # Numeric discipline: every subspace distance is scaled to BIGINT
 # micro-units (ROUND(l2sq * 1e6)) the moment it is computed, so the
@@ -501,7 +500,7 @@ def q111_pq_adc_topk(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # q126: ONE PCA POWER-ITERATION STEP (dominant singular direction of the
-# uncentered embedding matrix) — the q52/q122 "one training step as
+# uncentered embedding matrix) — the q122 "one training step as
 # set-oriented dataflow" pattern applied to the spectral family: the
 # whitening / dimensionality-reduction pass an embedding pipeline runs
 # before indexing. Start vector v0 = (1/8, ..., 1/8) (1/8 is exact in
@@ -510,7 +509,7 @@ def q111_pq_adc_topk(spark, sf_dir):
 # exact decimals, rounds each component ONCE in the decimal domain
 # (half-away-from-zero on exact decimals — identical in both engines,
 # no float in the accumulation path), and normalizes by the lone double
-# sqrt (the q52 tail discipline). Emits per dimension: the raw
+# sqrt. Emits per dimension: the raw
 # covariance-action component w, the normalized component v1, and the
 # Rayleigh-style norm lambda_est (the power-method eigenvalue estimate).
 #
@@ -518,7 +517,7 @@ def q111_pq_adc_topk(spark, sf_dir):
 # exploded components (map-side combinable); the X^T pass shuffles only
 # (dim, partial-sum) — 64 groups regardless of corpus size; the norm is
 # a broadcast 1-row aggregate. One power step = 2 mergeable shuffles,
-# the same cost envelope as one q52 Lloyd's step.
+# the same cost envelope as one Lloyd's k-means step.
 _Q126_DIM = 64
 
 

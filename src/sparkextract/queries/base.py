@@ -65,8 +65,7 @@ def input_token(sf_dir: str) -> str:
 
 
 # (applicationId, input_token, sf_dir, tag)-keyed eager-localCheckpoint
-# memo — the shared form of dedup2's _Q68_SIGS_MEMO / round3's
-# _COMPONENTS_MEMO discipline: an intermediate frame referenced by
+# memo — the shared form of dedup's _Q68_SIGS_MEMO discipline: an intermediate frame referenced by
 # several subtrees is materialized ONCE per (session, input) instead of
 # recomputed per subtree (ReuseExchange does not fire across sibling
 # subtrees under AQE, and lazy checkpoints still recompute lineage on
@@ -84,7 +83,7 @@ _CKPT_MEMO_CAP = 256  # ~26 tags/sf_dir (round-5 end): covers many sf_dirs
 def checkpoint_memo(spark: SparkSession, sf_dir: str, tag: str, build):
     """Return ``build()`` materialized via eager ``localCheckpoint()``,
     memoized per (session, input-content, tag). The build-time Spark job
-    is the documented cost (PLANS.md notes it for q68/q71); the memo
+    is the documented cost (PLANS.md notes it for q68); the memo
     keeps it to once per session+input."""
     key = (spark.sparkContext.applicationId, input_token(sf_dir), sf_dir, tag)
     df = _CKPT_MEMO.get(key)

@@ -58,8 +58,8 @@ gradient mass regardless of copy count. Weights are exact integers
 (1_000_000 div c — BIGINT floor division, identical in both engines);
 the per-source ledger reports raw vs effective token mass and the
 duplicated-doc count, i.e. exactly how much gradient the corpus was
-over-counting before weighting. Exact clones are injected (the
-q144/q146 protocol): every 10th doc also appears verbatim under the
+over-counting before weighting. Exact clones are injected: every
+10th doc also appears verbatim under the
 synthetic 'mirror' source — the scraped-mirror shape soft-dedup is
 for — so clusters of size 2 span sources and the mirror's ledger row
 shows ~50% effective mass.
@@ -69,8 +69,8 @@ friendly; a boilerplate mega-cluster is one ROW in the size table, not
 a window partition), ONE groupBy(source) ledger.
 
 q194 — MULTI-PASS SORTED-NEIGHBORHOOD ER BLOCKING (Hernandez & Stolfo
-1995). The third blocking discipline next to q176/q184 (Fellegi-Sunter
-scoring) and q139 (shared-key blocking): sort the corpus by a sliding
+1995). The second blocking discipline next to q139 (shared-key
+blocking): sort the corpus by a sliding
 key, take candidate pairs only within a window of w consecutive
 records, and run the expensive similarity on those. The classical
 boundary-miss weakness of single-key SNM is answered the classical
@@ -413,8 +413,7 @@ def q34_lsh_near_dup_join(spark, sf_dir):
 # the corpus grows (choose R ~ log2(N / target_bucket_size); here 4x8 =
 # 1024 buckets for a ~572-vector corpus). Exact cosine runs only on
 # deduplicated candidate pairs. The corpus is random, so near-dup pairs
-# are injected (a perturbed copy of every 7th vector) exactly like q38
-# does for MinHash; band collisions between random vectors are possible
+# are injected (a perturbed copy of every 7th vector); band collisions between random vectors are possible
 # but the cosine >= 0.8 verify stage only keeps true near-dups.
 #
 # Plan note: the signature subtree appears on both sides of the
@@ -613,7 +612,7 @@ def q53_banded_lsh_near_dup(spark, sf_dir):
 # distance 5 shares at least one identical band, so banded equi-join
 # candidate generation is LOSSLESS for radius-5 hamming-LSH; the exact
 # popcount verify runs only on co-banded pairs. Near-dup pairs are
-# injected exactly like q38 (head-perturbed copies of every 11th doc).
+# injected as head-perturbed copies of every 11th doc.
 # Features are distinct word BIGRAMS, not unigrams — this corpus shares
 # a tiny vocabulary, so unigram token sets (and their simhashes) nearly
 # coincide across unrelated docs; bigrams discriminate.
@@ -740,11 +739,11 @@ def _simhash48_col(df):
     return votes.select("doc_id", sig.cast("long").alias("simhash"))
 
 
-# signature-table memo, (applicationId, sf_dir)-keyed like q71's
-# _COMPONENTS_MEMO: repeated q68/panel constructions in one session must
-# not run the build-time checkpoint job again nor accumulate checkpoint
-# blocks (data is immutable per (session, dir) — see round3.py's memo
-# note). FIFO-bounded; eviction unpersists the blocks.
+# signature-table memo, (applicationId, sf_dir)-keyed: repeated
+# q68/panel constructions in one session must not run the build-time
+# checkpoint job again nor accumulate checkpoint blocks (data is
+# immutable per (session, dir)). FIFO-bounded; eviction unpersists the
+# blocks.
 _Q68_SIGS_MEMO: dict[tuple[str, str], object] = {}
 
 
@@ -1157,7 +1156,7 @@ def q99_exact_substring_dedup(spark, sf_dir):
 #
 # Scale shape: assignment is a broadcast of k tiny centroids + a
 # map-side-combinable max_by groupBy (the de-skew form, NOT a window —
-# the same lesson as the round-5 q96/q99 fix); the pairwise stage is an
+# the same lesson as the q96/q99 hot-key fix); the pairwise stage is an
 # equi-join keyed by cluster id, so cost is sum(|cluster|^2), bounded by
 # the paper's knob: k grows with N (k ~ N / target_cluster_size), never
 # all-pairs. Here k = 8 (the q46 centroid table) for a ~630-vector

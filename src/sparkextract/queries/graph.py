@@ -13,7 +13,7 @@ def label_propagation(pair_df):
     """(left_id, right_id) dup pairs -> (id, lbl) connected-component
     labels via iterated min-label propagation. Each iteration is ONE
     shuffle of label-sized rows; per-iteration localCheckpoint keeps
-    lineage O(1). Shared by q71/q72 and the q94 end-to-end composition."""
+    lineage O(1). Used by the q94 end-to-end composition."""
     edges = pair_df.select(F.col("left_id").alias("a"), F.col("right_id").alias("b"))
     edges = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -54,7 +54,7 @@ def label_propagation(pair_df):
 # Graph: every document cites 3 md5-derived targets (self-citations
 # dropped), the deterministic stand-in for a hyperlink graph extracted
 # by the main-content pass (reference analog: the cross-reference /
-# citation assembly surface, q92). Ranks live in micro-units (1e6 = 1.0)
+# citation assembly surface). Ranks live in micro-units (1e6 = 1.0)
 # and every step is BIGINT floor arithmetic:
 #   r0(v)    = 1_000_000
 #   r_{t+1}(v) = 150_000 + (85 * SUM_{u->v}(r_t(u) div outdeg(u))) div 100

@@ -5,7 +5,7 @@ composed corpus-refresh pipeline with its stages (snapshot diff, token
 drift, incremental IVF maintenance), the applyInPandasWithState event
 dedup and a Merkle-style snapshot diff.
 
-q172 — MERKLE-STYLE HIERARCHICAL SNAPSHOT DIFF. q103/q170 diff
+q172 — MERKLE-STYLE HIERARCHICAL SNAPSHOT DIFF. snapshot_diff compares
 snapshots with a doc-grain join; a lake-wide refresh audit should not
 touch the 99% of partitions that did not change. Two-level scheme:
 leaf bucket = md5_bucket(doc_id, 64), bucket digest = (bit_xor of a
@@ -153,7 +153,8 @@ def q95_manifest_resume_state(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# q103: SNAPSHOT DIFF (CDC) — the incremental-ingest primitive of a
+# snapshot_diff (a q117 stage): SNAPSHOT DIFF (CDC) — the
+# incremental-ingest primitive of a
 # lakehouse corpus: given the previous snapshot and the current one,
 # classify every doc as added / changed / unchanged by content hash and
 # emit the change manifest the downstream pipeline consumes (only
@@ -223,7 +224,7 @@ def snapshot_diff(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # q106: INCREMENTAL EXTRACTION (CDC -> EXTRACT) — the composition the
-# q103 diff exists for: ONLY docs the snapshot diff marks
+# snapshot diff exists for: ONLY docs the snapshot diff marks
 # needs_extraction (added + changed) re-enter the real extraction
 # pipeline; unchanged docs never leave the lake. Mirrors q94's
 # composition proof for the incremental path, and the reference's
@@ -232,7 +233,7 @@ def snapshot_diff(spark, sf_dir):
 # passthrough property of the interleaved wrap (1 text span iff
 # n_chars >= 100, 1 media span iff doc_id % 3 == 0, never a table
 # span on this corpus).
-# Scale shape: the diff is map-only (q103); the extraction runs over
+# Scale shape: the diff is map-only; the extraction runs over
 # the needs_extraction SUBSET only; the status join is one keyed
 # equi-join on doc_id. Nothing touches the unchanged majority.
 _Q106_ORACLE = f"""
@@ -267,7 +268,7 @@ def q106_incremental_extraction(spark, sf_dir):
     )
     # left join from the todo list: a doc whose extraction yields ZERO
     # spans (short text, no media) still belongs in the change manifest.
-    # status is functionally dependent on doc_id (the q103 bucket rule),
+    # status is functionally dependent on doc_id (the snapshot bucket rule),
     # so it is re-derived map-side here instead of joining the diff a
     # second time — one fewer pass over both snapshot subtrees.
     status = F.when(
@@ -357,17 +358,17 @@ def q108_streaming_incremental(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# q114: SNAPSHOT TOKEN-DISTRIBUTION DRIFT — the corpus-refresh QA step
-# that runs right after the q103 CDC diff: how far did the refreshed
+# snapshot_token_drift (a q117 stage): SNAPSHOT TOKEN-DISTRIBUTION
+# DRIFT — the corpus-refresh QA step that runs right after the CDC diff: how far did the refreshed
 # corpus's token distribution move from the previous snapshot's?
 # Smoothed Jensen-Shannon divergence over token types (add-one over the
 # union vocabulary, so no zero-probability ln), reporting the total JSD
 # plus the top drift-contributing tokens. The previous snapshot is
-# q103's deterministic rule (md5 bucket 0 of doc_id missing, bucket 1
+# snapshot_diff's deterministic rule (md5 bucket 0 of doc_id missing, bucket 1
 # text prefixed 'stale ') so the two ops compose into one monitoring
 # pipeline.
 #
-# Numeric discipline (the q112 pattern): shares p/q are single
+# Numeric discipline: shares p/q are single
 # divisions of exact integer-valued doubles (IEEE-identical in both
 # engines); each token's JS contribution is ROUND(...,9)-frozen as
 # DECIMAL(18,9) so the corpus-total JSD is an EXACT decimal sum —
@@ -504,15 +505,16 @@ def snapshot_token_drift(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# q116: INCREMENTAL IVF INDEX MAINTENANCE — the vector-index side of the
-# q103 CDC story: after a corpus refresh, ONLY the added/changed vectors
+# incremental_ivf (a q117 stage): INCREMENTAL IVF INDEX MAINTENANCE —
+# the vector-index side of the CDC story: after a corpus refresh, ONLY the added/changed vectors
 # re-enter nearest-centroid assignment (broadcast centroids + the q110
 # map-side-combinable max_by argmax, never a window); the unchanged
 # majority keeps its existing index cell (NULL here = untouched entry).
 # At 100 TB the index is never rebuilt — assignment cost tracks the CDC
 # delta (~20% under this deterministic rule: md5 bucket 0 of vec_id =
 # added, bucket 1 = changed), and the status pass is map-only.
-# Composes with q103 (same snapshot rule) and q46 (same IVF cells).
+# Composes with snapshot_diff (same snapshot rule) and q46 (same IVF
+# cells).
 def _incremental_ivf_oracle() -> str:
     from sparkextract.queries.base import md5_bucket_sql
     from sparkextract.queries.ann import _DIM

@@ -56,8 +56,8 @@ than 2 tokens have no scored bigram and are excluded (WHERE mirrored
 in both engines).
 
 q189 — INTERPOLATED KNESER-NEY BIGRAM LM (Kneser & Ney 1995; Chen &
-Goodman 1999) — the standard n-gram smoothing, replacing q87/q133's
-add-one reference-slice models with the real thing: P(b|a) =
+Goodman 1999) — the standard n-gram smoothing, replacing q87's
+add-one model with the real thing: P(b|a) =
 (c(a,b) - D)/c(a) + (D * N1+(a.)/c(a)) * N1+(.b)/B, with discount
 D = 0.75, where N1+(a.) = distinct continuations of a, N1+(.b) =
 distinct left-contexts of b (the continuation count that makes KN
@@ -136,8 +136,8 @@ def q25_quality_score(spark, sf_dir):
 # --------------------------------------------------------------------------
 # q84: REPETITION-RATIO QUALITY RULES (Gopher-style) — per-document
 # duplicate-bigram fraction and most-common-word mass fraction, the two
-# repetition signals the Gopher/MassiveText filter family uses that
-# q75's length/diversity cascade does not cover. Bigram construction
+# repetition signals the Gopher/MassiveText filter family uses beyond
+# a length/diversity cascade. Bigram construction
 # guards size<2 explicitly (F.sequence(1,0) is DESCENDING in Spark —
 # the q68 advice bug class); both fractions are ROUND(...,6)-ed BEFORE
 # the threshold compare so the keep decision is identical in both
@@ -383,8 +383,8 @@ def q87_lm_quality_score(spark, sf_dir):
 # (checkpoint_memo — at real scale this is the corpus write to the
 # lake) and the quality gate, signature table, and final survivor join
 # all derive from that single frame; no stage collects to the driver
-# (the label-propagation loop's eager label-sized checkpoints are the
-# documented q71 discipline). Reference analog: the full
+# (the label-propagation loop's eager label-sized checkpoints are
+# documented in graph.label_propagation). Reference analog: the full
 # extract->chunk->hash->dedup chain of
 # /root/reference/src/pdf_extractor.py + src/rag/text_processor.py:534.
 # Scale shape: the only corpus-payload shuffles are the banded
@@ -511,7 +511,7 @@ def q94_corpus_clean_pipeline(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # q130: UNIGRAM SHANNON ENTROPY quality gate — the information-density
-# signal the Gopher/C4-style rule cascades (q75 length/diversity, q84
+# signal the Gopher/C4-style rule cascades (length/diversity, q84
 # repetition, q87 LM logprob) are missing: a document whose token
 # distribution has low entropy is keyword-stuffed or template spam even
 # when its distinct-token RATIO looks fine (1000 tokens drawn 50/50
@@ -530,7 +530,8 @@ def q94_corpus_clean_pipeline(spark, sf_dir):
 # groupBy(doc_id) {n=sum c, types=count, S=sum c*ln(c)} — no join, no
 # window, no second scan, nothing keyed on a skewable value.
 #
-# Numeric discipline (the q114 pattern): each c*ln(c) term is
+# Numeric discipline (the snapshot_token_drift pattern): each c*ln(c)
+# term is
 # ROUND(...,9)-frozen as DECIMAL(18,9) so S is an EXACT decimal sum
 # (partition-order-independent); n and ln(n) are exact-integer doubles;
 # the final H = ln(n) - S/n is one ln, one division, one subtraction of
@@ -597,7 +598,7 @@ def q130_token_entropy(spark, sf_dir):
 # was UTF-8 but got re-decoded as latin-1 carries mojibake ('á' U+00E1
 # -> bytes C3 A1 -> 'Ã¡'), and every downstream token/dedup/quality
 # metric silently degrades on it. The corpus here is clean ASCII, so —
-# exactly like q103 synthesizes its stale-snapshot docs — the query
+# exactly like snapshot_diff synthesizes its stale-snapshot docs — the query
 # deterministically simulates the damage on one md5 bucket of docs
 # (intended accented text double-encoded into mojibake), then runs the
 # real repair rule (detect the 'Ã' signature, reverse the latin-1
@@ -719,10 +720,8 @@ _Q135_STOP_SQL = ", ".join(f"'{s}'" for s in _Q135_STOP)
 
 
 # shared core: doc_id, lang, n_tokens, n_stop, logit_u, keep
-# (q137/q138 re-select from this same text)
 def _q135_core_sql(src: str = "documents") -> str:
-    """The classifier-core SQL over any (doc_id, lang, text) relation —
-    q162 scores an injected-clone corpus with the same formula."""
+    """The classifier-core SQL over any (doc_id, lang, text) relation."""
     return f"""
   SELECT doc_id, lang, n_tokens, n_stop,
          CAST({_Q135_W[0]}

@@ -21,7 +21,7 @@ Reference intent: RAG retrieval re-ranking surface,
 combined with the near-dup suppression the reference applies at
 chunk-store time (/root/reference/src/rag/text_processor.py:534).
 
-Numeric discipline (q111/q119/q127 lessons, see round5.py / round5b.py):
+Numeric discipline (the q111/q119/q127 lessons):
 every cosine is snapped to BIGINT micro-units — CAST(ROUND(cos * 1e6)
 AS BIGINT) — the moment it is computed, and lambda = 0.7 is carried as
 the exact integer split score_u = 7*rel_u - 3*maxsim_u (the MMR score
@@ -43,7 +43,7 @@ q156 — nDCG@k GRADED RETRIEVAL EVAL. q125/q127 rank documents; the
 standard graded-relevance metric for a ranking is normalized
 discounted cumulative gain: DCG = sum (2^rel - 1) / log2(rank + 1)
 over the top k, normalized by the ideal reordering. Relevance grades
-are deterministic (rel = 3 - md5_bucket(doc_id, 4), the q107 synthetic
+are deterministic (rel = 3 - md5_bucket(doc_id, 4), a synthetic
 ground-truth protocol); the ranking under eval is q125's BM25 top-5.
 IDCG here is the ideal reordering of the RETRIEVED set (the "local"
 nDCG variant — no corpus-wide relevance scan; documented). Numeric

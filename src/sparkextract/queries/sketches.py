@@ -19,10 +19,9 @@ order (count desc, token asc) everywhere a rank is taken.
 
 q196 — KMV (K-MINIMUM-VALUES) / THETA SKETCH with INTERSECTION
 (Bar-Yossef et al. 2002; Dasgupta et al. 2016 — the DataSketches theta
-family). The sketch HLL (q83/q171) cannot give you: set INTERSECTION
+family). What an HLL sketch cannot give you: set INTERSECTION
 estimates with a bounded-size mergeable summary. Universe = distinct
-document tokens; population split = the md5 half-split (q193's
-convention). Per half, the sketch is the k=256 smallest 48-bit md5
+document tokens; population split = the md5 half-split. Per half, the sketch is the k=256 smallest 48-bit md5
 hash values of the distinct tokens; est_distinct = (k-1) * 2^48 /
 kth_min (unbiased for uniform hashes). Intersection: theta = the
 SMALLER of the two kth-mins; est = |{h in S_A ∩ S_B : h < theta}| *
@@ -31,7 +30,7 @@ counts ride along so the output is its own error audit.
 Every estimate divides exact BIGINTs (hashes < 2^48 < 2^53, exact in
 doubles), ROUND(,6)-frozen.
 Reference intent: corpus vocabulary statistics at sketch size,
-generalizing the q83/q171 family to set algebra.
+generalizing distinct-count sketches to set algebra.
 
 Scale shape: the min-k is computed the way a 1000-executor top-k
 actually runs — TWO-LEVEL: per-(half, hash-bucket) rank window keeps

@@ -98,7 +98,7 @@ def test_confidence_exprs(spark):
     assert summary.filter(F.col("overall_conf") < 0).count() == 0
 
 
-# ------------------------------------------------------------- wave3 queries
+# ------------------------------------------------ media and ANN queries
 def test_wave3_registered_with_oracles():
     from sparkextract.queries.registry import ORACLE_SQL, SPARK_QUERIES
 
