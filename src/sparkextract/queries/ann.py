@@ -350,7 +350,7 @@ def q50_ann_recall(spark, sf_dir):
 # ADC probe = broadcast 32-row lookup join + map-side-combinable sum +
 # TakeOrderedAndProject. Nothing all-pairs, nothing windowed.
 # Reference intent: pgvector ANN retrieval,
-# /root/reference/src/rag/vector_database.py:156-189.
+# reference src/rag/vector_database.py:156-189.
 _Q111_M = 4
 
 

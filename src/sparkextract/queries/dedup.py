@@ -41,7 +41,7 @@ blocks); the output compares chunk-hash multisets across variants per
 method: CDC re-syncs after at most w tokens (shared_cdc ~ n_cdc),
 fixed blocks never re-align (shared_fix == 0 for every doc whose
 length isn't congruent to the insertion — in practice 0). Reference
-analog: the fixed-size chunker (/root/reference/src/rag/
+analog: the fixed-size chunker (reference src/rag/
 text_processor.py:340-420) — this is the dedup-stable alternative a
 100 TB store would use.
 Scale shape: variant/method expansion is a doc-local explode (map
@@ -146,7 +146,7 @@ def q11_dedup_exact(spark, sf_dir):
 # --------------------------------------------------------------------------
 # J1 self-join shape: duplicate pairs via hash equi-join (the Spark-first
 # replacement of the reference's O(n^2) similarity loop,
-# /root/reference/src/table_extractor.py:144-152).
+# reference src/table_extractor.py:144-152).
 @register(
     "q13_dup_pairs_selfjoin",
     oracle="""
@@ -423,7 +423,7 @@ def q34_lsh_near_dup_join(spark, sf_dir):
 # (more planes, learned projections), materialize the (vec_id, band,
 # sig) table once — bucketed by (band, sig) — and self-join that.
 # Reference intent: ANN index instead of exact scan,
-# /root/reference/src/rag/vector_database.py:184-189.
+# reference src/rag/vector_database.py:184-189.
 #
 # The hyperplane sign matrix is a CONSTANT (a function of (band, plane,
 # dim) only), so it is derived ONCE driver-side from md5 (hashlib md5 ==
@@ -940,7 +940,7 @@ def q67_winnowing_fingerprints(spark, sf_dir):
 # (order by doc_id, then block_idx), and each document reports its
 # kept fraction plus the md5 of the reassembled kept text. Reference
 # analog: chunk content-hash dedup
-# (/root/reference/src/rag/text_processor.py:534) pushed from chunk
+# (reference src/rag/text_processor.py:534) pushed from chunk
 # grain down to fixed-token-block grain.
 # Scale shape: block generation is doc-local (transform over the token
 # array, q88's no-shuffle lesson). First-occurrence is a MAP-SIDE-
@@ -1162,7 +1162,7 @@ def q99_exact_substring_dedup(spark, sf_dir):
 # all-pairs. Here k = 8 (the q46 centroid table) for a ~630-vector
 # corpus; twins are injected exactly like q53 so real near-dups exist.
 # Reference intent: near-identical retrieval suppression,
-# /root/reference/src/rag/vector_database.py:184-189.
+# reference src/rag/vector_database.py:184-189.
 _Q110_THRESHOLD = 0.95
 
 

@@ -339,7 +339,7 @@ def q54_chunk_overlap(spark, sf_dir):
 # media_ref verbatim per BASELINE.json input_hint, so true OCR decode is
 # out of scope — the reference's POST-processing pipeline shape is what
 # is modeled). Chain, mirroring
-# /root/reference/src/image_extractor.py:533-549 (_clean_ocr_text) and
+# reference src/image_extractor.py:533-549 (_clean_ocr_text) and
 # :635 (meaningful-text gate):
 #   1. collapse whitespace runs (P7) — explicit char class, \s is not
 #      Java/RE2-portable;
@@ -496,9 +496,9 @@ def q63_duplicate_offsets(spark, sf_dir):
 # 3-line form run with an empty value. The expected three output spans
 # (prose chunk, ONE table rendering, form rendering) are exact string
 # constructions in SQL. Parse/render spec: core/tables.py; reference
-# table engines /root/reference/src/table_extractor.py, form widgets
-# /root/reference/src/form_extractor.py:34-44, renderings
-# /root/reference/src/rag/text_processor.py:387-423,494-510.
+# table engines reference src/table_extractor.py, form widgets
+# reference src/form_extractor.py:34-44, renderings
+# reference src/rag/text_processor.py:387-423,494-510.
 _Q64_MID = (
     "this separator prose line keeps the two identical tables apart and is"
     " comfortably long"
@@ -581,7 +581,7 @@ def q64_pdf_table_form(spark, sf_dir):
 # spans are exact SQL strings; offsets shift by whether the prose chunk
 # survives the MIN_CHUNK_SIZE gate. Heuristics spec:
 # core/boilerplate.py (north_star DOM text-density); reference families
-# /root/reference/src/pdf_extractor.py:102-257.
+# reference src/pdf_extractor.py:102-257.
 _Q65_ORACLE = """
     SELECT CAST(doc_id AS VARCHAR) AS doc_id, 'text' AS kind, text,
            0 AS "offset"
@@ -647,7 +647,7 @@ def q65_html_table_form(spark, sf_dir):
 # the strings too). Split/char-count primitives were verified to agree
 # across engines (string_split '' char explode, regexp split with
 # trailing-empty retention, plain-separator counting). Formula spec:
-# /root/reference/src/text_extractor.py:153-177,388-410 (A2),
+# reference src/text_extractor.py:153-177,388-410 (A2),
 # table_extractor.py:359-387 (A1), form_extractor.py:224-245 (A3).
 _WS_CLS = r"[ \t\n\x0B\f\r]"
 

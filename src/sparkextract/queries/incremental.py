@@ -44,7 +44,7 @@ from sparkextract.queries.extraction import ocr_sql
 # manifest rows absent), a second run resumes via the J2 broadcast
 # anti-join and commits the rest, and the query returns the winning
 # manifest rollup per bucket. Reference analog: the SHA-256
-# skip-if-ingested resume probe (/root/reference/src/rag/
+# skip-if-ingested resume probe (reference src/rag/
 # rag_pipeline.py:97-105) generalized to per-bucket lineage.
 # The bucket function is the engine-portable md5 bucket (bucket_col
 # override) so the DuckDB oracle reproduces the assignment exactly;
@@ -162,7 +162,7 @@ def q95_manifest_resume_state(spark, sf_dir):
 # grain). The previous snapshot is simulated deterministically: docs in
 # md5 bucket 0 are missing from it (-> added), docs in bucket 1 carried
 # a different text (-> changed). Reference analog: the SHA-256
-# skip-if-ingested probe (/root/reference/src/rag/rag_pipeline.py:97-105)
+# skip-if-ingested probe (reference src/rag/rag_pipeline.py:97-105)
 # upgraded from skip/no-skip to a three-way diff.
 # Scale shape: ONE equi-join on doc_id between two corpus-sized sides —
 # co-partitioned keyed shuffle (or zero shuffle when both snapshots are
@@ -228,7 +228,7 @@ def snapshot_diff(spark, sf_dir):
 # needs_extraction (added + changed) re-enter the real extraction
 # pipeline; unchanged docs never leave the lake. Mirrors q94's
 # composition proof for the incremental path, and the reference's
-# skip-if-ingested resume (/root/reference/src/rag/rag_pipeline.py:
+# skip-if-ingested resume (reference src/rag/rag_pipeline.py:
 # 97-105) at content grain. Span counts are SQL-derivable from the q95
 # passthrough property of the interleaved wrap (1 text span iff
 # n_chars >= 100, 1 media span iff doc_id % 3 == 0, never a table
@@ -289,7 +289,7 @@ def q106_incremental_extraction(spark, sf_dir):
 # then the exactly-once committed output is read back through the sink's
 # _spark_metadata log and compared full-row against the same SQL-derived
 # expectation as q40 (the passthrough property of the interleaved wrap).
-# Reference analog: idempotent re-ingest (/root/reference/src/rag/
+# Reference analog: idempotent re-ingest (reference src/rag/
 # rag_pipeline.py:97-105) as a *continuous arrival* pipeline instead of
 # a rerun loop.
 # Scale shape: the drain is the batch whole-doc map (zero shuffles after

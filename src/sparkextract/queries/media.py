@@ -143,7 +143,7 @@ def q59_frame_sample(spark, sf_dir):
 # plumbing (map-only over scan splits, payload bytes never leave the
 # reading executor, only the short text moves on) is the real shape.
 # Reference analog: tesseract/easyocr OCR + whitespace cleanup,
-# /root/reference/src/image_extractor.py:337-549,533-549.
+# reference src/image_extractor.py:337-549,533-549.
 _Q109_ORACLE = f"""
     SELECT CAST(doc_id AS VARCHAR) AS media_id,
            (['image','audio','video','pdf'])[(doc_id % 4) + 1] AS media_type,

@@ -24,7 +24,7 @@ The bias centers the gate near the corpus median (measured at sf0.01)
 so both classes are populated at every SF. After the four snaps the
 logit is pure 64-bit integer arithmetic — bit-identical across engines.
 Reference intent: the quality/confidence scoring pass of
-/root/reference/src/table_evaluator.py (rule scores folded into one
+reference src/table_evaluator.py (rule scores folded into one
 accept decision), upgraded to the learned-linear-filter shape a 100 TB
 corpus actually uses.
 
@@ -386,7 +386,7 @@ def q87_lm_quality_score(spark, sf_dir):
 # (the label-propagation loop's eager label-sized checkpoints are
 # documented in graph.label_propagation). Reference analog: the full
 # extract->chunk->hash->dedup chain of
-# /root/reference/src/pdf_extractor.py + src/rag/text_processor.py:534.
+# reference src/pdf_extractor.py + src/rag/text_processor.py:534.
 # Scale shape: the only corpus-payload shuffles are the banded
 # signature self-join (key cardinality 6*2^8) and the bigram votes agg;
 # the survivor join broadcasts the label frame (clustered nodes only, a

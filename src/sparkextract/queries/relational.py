@@ -363,7 +363,7 @@ def q26_json_props(spark, sf_dir):
 )
 def q48_distinct_keys(spark, sf_dir):
     """D3: seen-set dedup by key (reference dedups retrieved chunks by
-    chunk_id, /root/reference/src/rag/rag_pipeline.py:514-521) —
+    chunk_id, reference src/rag/rag_pipeline.py:514-521) —
     ``dropDuplicates`` restricted to the key columns so the survivor row
     is deterministic. Scale: map-side partial dedup before the shuffle
     (Catalyst plans HashAggregate(partial) → exchange → HashAggregate)."""
@@ -389,8 +389,8 @@ def q48_distinct_keys(spark, sf_dir):
 def q51_confidence_rollup(spark, sf_dir):
     """A6: overall confidence rollup — mean of per-doc factor scores
     (reference cross-engine confidence mean,
-    /root/reference/src/utils/validation.py:170-199; factor formulas A2,
-    /root/reference/src/text_extractor.py:153-177 length factor, :400-403
+    reference src/utils/validation.py:170-199; factor formulas A2,
+    reference src/text_extractor.py:153-177 length factor, :400-403
     whitespace-ratio factor F9). Per-doc scores are quantized to 6
     decimals, then averaged as an exact DECIMAL(18,6) sum divided once as
     DOUBLE (the q01 avg_qty pattern) — a plain double AVG is summation-

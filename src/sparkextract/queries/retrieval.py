@@ -17,9 +17,9 @@ from a result page) and completes the retrieval panel next to plain
 rerank (q55) and rank fusion (q127).
 
 Reference intent: RAG retrieval re-ranking surface,
-/root/reference/src/rag/vector_database.py:156-189 (similarity search)
+reference src/rag/vector_database.py:156-189 (similarity search)
 combined with the near-dup suppression the reference applies at
-chunk-store time (/root/reference/src/rag/text_processor.py:534).
+chunk-store time (reference src/rag/text_processor.py:534).
 
 Numeric discipline (the q111/q119/q127 lessons):
 every cosine is snapped to BIGINT micro-units — CAST(ROUND(cos * 1e6)
@@ -177,7 +177,7 @@ def q55_rerank_topk(spark, sf_dir):
 # q58: the FULL RAG-query lifecycle (SURVEY.md §3.3 steps 3-6) as ONE
 # plan: kNN retrieve (top-10 by cosine) -> content dedup (D3, md5 key,
 # lowest-id survivor) -> heuristic rerank (similarity + overlap*0.01,
-# /root/reference/src/rag/rag_pipeline.py:536-580) -> cumulative
+# reference src/rag/rag_pipeline.py:536-580) -> cumulative
 # character budget cap (running sum over rerank order, keep while the
 # PRECEDING total stays under budget — the reference's context builder,
 # rag_pipeline.py:582-618; W5 shape shared with q08). Every stage is
@@ -507,7 +507,7 @@ def q121_rouge_eval(spark, sf_dir):
 # q125: OKAPI BM25 TOP-K RETRIEVAL (Robertson & Walker 1994) — the
 # length-normalized ranked-retrieval companion to q73's TF-IDF (the
 # reference's keyword-overlap retrieval surface,
-# /root/reference/src/rag/rag_pipeline.py:561-564, graduated to the
+# reference src/rag/rag_pipeline.py:561-564, graduated to the
 # standard IR scoring function). Query set is deterministic: every
 # doc_id % 50 == 0 document contributes its 5 lexicographically-
 # smallest distinct tokens as a bag-of-words query; each query is

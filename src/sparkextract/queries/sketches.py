@@ -54,7 +54,7 @@ exactly like q104 so the two filters are directly comparable on the
 same corpus (same eval slice, same k-grams, same injected verbatim
 copies via doc_id + 3000000).
 Reference analog: the SHA-256 ingest probe
-(/root/reference/src/rag/rag_pipeline.py:97-105) as a deletable
+(reference src/rag/rag_pipeline.py:97-105) as a deletable
 probabilistic prefilter.
 
 Scale shape: the filter is |eval keys| x 2 rows of (bucket, fp) —
@@ -85,7 +85,7 @@ from sparkextract.queries.base import (
 # sharing >= 1 length-K word n-gram with an evaluation document is
 # suspect; docs above a contaminated-fraction threshold are dropped.
 # Reference analog: per-chunk content hashing for duplicate detection
-# (/root/reference/src/rag/text_processor.py:534) applied at token-
+# (reference src/rag/text_processor.py:534) applied at token-
 # window grain instead of chunk grain.
 #
 # Corpus construction: the eval set is the md5-bucket(doc_id)%20==0
@@ -218,7 +218,7 @@ def q91_ngram_decontamination(spark, sf_dir):
 # The corpus carries the q91 injected verbatim eval copies so true
 # hits exist and the zero-false-negative claim is exercised.
 # Reference analog: the SHA-256 ingest probe
-# (/root/reference/src/rag/rag_pipeline.py:97-105) as a probabilistic
+# (reference src/rag/rag_pipeline.py:97-105) as a probabilistic
 # prefilter instead of an exact lookup.
 # Scale shape: filter build is a <=32-row mergeable agg over the tiny
 # eval side; both probe lookups are broadcast joins on the 16-row word

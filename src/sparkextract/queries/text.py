@@ -131,7 +131,7 @@ def q70_text_similarity(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # q74: F8 — the reference's LLM-answer confidence heuristic
-# (/root/reference/src/rag/ollama_client.py:271-321). The LLM itself is
+# (reference src/rag/ollama_client.py:271-321). The LLM itself is
 # out of scope (no model serving in an extraction engine), but the
 # heuristic is pure string math over the answer text: presence (not
 # occurrence count) of each phrase in four indicator lists, +/- fixed

@@ -10,9 +10,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import SF_DIR
 from sparkextract.spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="module")

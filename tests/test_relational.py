@@ -1,12 +1,10 @@
 """Semantic tests for the relational query family (queries/relational.py)."""
 
-import os
 
 import pytest
 
+from conftest import SF_DIR
 from sparkextract.spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="module")

@@ -7,9 +7,8 @@ import os
 import numpy as np
 import pytest
 
+from conftest import SF_DIR
 from sparkextract.spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="module")

@@ -6,8 +6,6 @@ import pytest
 
 from sparkextract.spark.session import get_spark
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
-
 
 @pytest.fixture(scope="module")
 def spark():
