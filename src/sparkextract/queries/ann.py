@@ -9,7 +9,7 @@ compare (error margin ~1e-13 << 5e-7 rounding quantum).
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from sparkextract.queries.base import ORACLE_SQL, SPARK_QUERIES, load, register
 
@@ -581,4 +581,418 @@ def q126_pca_power_step(spark, sf_dir):
             "lambda_est",
         )
         .orderBy("dim0")
+    )
+
+
+def _km_quantized(spark, sf_dir):
+    """Embeddings with components quantized to 3 decimals (vec_id, e)."""
+    return load(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.transform("embedding", lambda x: F.round(x.cast("double"), 3)).alias("e"),
+    )
+
+
+# --------------------------------------------------------------------------
+# q102: INT8 EMBEDDING QUANTIZATION — the memory-scale path for
+# similarity search (a 100 TB embedding store is 4x smaller at int8;
+# FAISS SQ8 / pgvector halfvec ship exactly this): per-vector min/max
+# scalar quantization to 8-bit codes, midpoint dequantization, and the
+# top-10 neighbors ranked by QUANTIZED cosine with the exact cosine
+# alongside — the ranking-degradation evidence a recall report needs.
+# Reference analog: the pgvector embedding store + cosine retrieval
+# (reference src/rag/vector_store.py) with the storage format
+# dropped from float32 to int8.
+# Determinism: codes are floor((x-min)/scale) over doubles — identical
+# IEEE ops in both engines (never round(), whose tie rule differs);
+# cosines fold in element order and are ROUND(...,6)-ed before the
+# ORDER BY with a vec_id tie-break.
+# Scale shape: quantization is map-only; the query vector broadcasts
+# (1 row); top-k is TakeOrderedAndProject — the q27 no-shuffle shape.
+_Q102_LEVELS = 255
+
+
+_Q102_DEQ = f"""
+  SELECT vec_id, label,
+         CASE WHEN list_max(embedding) = list_min(embedding)
+              THEN list_transform(embedding, x -> CAST(list_min(embedding) AS DOUBLE))
+              ELSE list_transform(embedding, x ->
+                CAST(list_min(embedding) AS DOUBLE)
+                + (LEAST({_Q102_LEVELS}, GREATEST(0, floor(
+                     (CAST(x AS DOUBLE) - CAST(list_min(embedding) AS DOUBLE))
+                     / ((CAST(list_max(embedding) AS DOUBLE)
+                         - CAST(list_min(embedding) AS DOUBLE)) / {_Q102_LEVELS}))))
+                   + 0.5)
+                  * ((CAST(list_max(embedding) AS DOUBLE)
+                      - CAST(list_min(embedding) AS DOUBLE)) / {_Q102_LEVELS}))
+         END AS deq,
+         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ex
+  FROM embeddings
+"""
+
+
+def _q102_cos_sql(a: str, b: str) -> str:
+
+    def dot(u, v):
+        return (
+            f"list_sum(list_transform(range(1, {_DIM + 1}),"
+            f" i -> {u}[i] * {v}[i]))"
+        )
+
+    return f"ROUND({dot(a, b)} / (sqrt({dot(a, a)}) * sqrt({dot(b, b)})), 6)"
+
+
+_Q102_ORACLE = f"""
+WITH deq AS (
+  {_Q102_DEQ}
+),
+q AS (SELECT deq AS qd, ex AS qe FROM deq WHERE vec_id = 0)
+SELECT d.vec_id, d.label,
+       {_q102_cos_sql("d.deq", "q.qd")} AS cos_quant,
+       {_q102_cos_sql("d.ex", "q.qe")} AS cos_exact
+FROM deq d, q
+WHERE d.vec_id != 0
+ORDER BY cos_quant DESC, d.vec_id ASC
+LIMIT 10
+"""
+
+
+def _q102_deq_col():
+    lo = F.array_min("embedding").cast("double")
+    hi = F.array_max("embedding").cast("double")
+    scale = (hi - lo) / _Q102_LEVELS
+    code = lambda x: F.least(  # noqa: E731
+        F.lit(_Q102_LEVELS),
+        F.greatest(F.lit(0), F.floor((x.cast("double") - lo) / scale)),
+    )
+    return F.when(hi == lo, F.transform("embedding", lambda x: lo)).otherwise(
+        F.transform("embedding", lambda x: lo + (code(x) + 0.5) * scale)
+    )
+
+
+@register("q102_int8_quantization", oracle=_Q102_ORACLE)
+def q102_int8_quantization(spark, sf_dir):
+
+    emb = load(spark, sf_dir, "embeddings")
+    deq = emb.select(
+        "vec_id",
+        "label",
+        _q102_deq_col().alias("deq"),
+        F.transform("embedding", lambda x: x.cast("double")).alias("ex"),
+    )
+    q = F.broadcast(
+        deq.filter(F.col("vec_id") == 0).select(
+            F.col("deq").alias("qd"), F.col("ex").alias("qe")
+        )
+    )
+
+    def cos(a, b):
+        return F.round(_dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b))), 6)
+
+    return (
+        deq.filter(F.col("vec_id") != 0)
+        .crossJoin(q)
+        .select(
+            "vec_id",
+            "label",
+            cos("deq", "qd").alias("cos_quant"),
+            cos("ex", "qe").alias("cos_exact"),
+        )
+        .orderBy(F.desc("cos_quant"), F.asc("vec_id"))
+        .limit(10)
+    )
+
+
+# --------------------------------------------------------------------------
+# q107: LSH PRECISION/RECALL EVAL — the quality harness every
+# approximate-dedup deployment needs: banded-LSH candidate pairs (q53)
+# are scored against EXACT all-pairs cosine ground truth on a bounded
+# evaluation subset (the standard sampled-ground-truth protocol: exact
+# all-pairs is O(S^2) and runs only on the sample, exactly like q50's
+# ANN recall query set). The subset is base vec_id < 250 of q53's
+# corpus INCLUDING its injected perturbed twins (+1,000,000 ids,
+# first coordinate +0.25 — dedup2.py:236-247; the natural corpus has
+# zero >=0.8 pairs, measured) so both precision and recall are
+# exercised against real positives.
+# Scale shape: the q53 candidate side keeps its banded shape; the
+# exact side is a broadcast self-join of the <=S+S/7-row sample.
+_Q107_SUB = 250
+
+
+_Q107_ORACLE = f"""
+WITH sub AS (
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+  FROM embeddings WHERE vec_id < {_Q107_SUB}
+  UNION ALL
+  SELECT vec_id + 1000000,
+         list_transform(range(1, 65),
+           i -> CASE WHEN i = 1 THEN CAST(embedding[1] AS DOUBLE) + 0.25
+                     ELSE CAST(embedding[i] AS DOUBLE) END)
+  FROM embeddings WHERE vec_id % 7 = 0 AND vec_id < {_Q107_SUB}
+),
+truth AS (
+  SELECT x.vec_id AS l, y.vec_id AS r
+  FROM sub x JOIN sub y ON x.vec_id < y.vec_id
+  WHERE ROUND(
+    list_sum(list_transform(range(1, 65), i -> x.e[i] * y.e[i]))
+    / (sqrt(list_sum(list_transform(range(1, 65), i -> x.e[i] * x.e[i])))
+     * sqrt(list_sum(list_transform(range(1, 65), i -> y.e[i] * y.e[i])))),
+    6) >= 0.8
+),
+cand AS (
+  SELECT left_id AS l, right_id AS r FROM ({{Q53}}) _q53
+  WHERE left_id % 1000000 < {_Q107_SUB} AND right_id % 1000000 < {_Q107_SUB}
+),
+hit AS (SELECT t.l, t.r FROM truth t JOIN cand c ON t.l = c.l AND t.r = c.r)
+SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth,
+       CAST((SELECT COUNT(*) FROM cand) AS BIGINT) AS n_candidates,
+       CAST((SELECT COUNT(*) FROM hit) AS BIGINT) AS n_hit,
+       ROUND((SELECT COUNT(*) FROM hit) * 1.0
+             / GREATEST((SELECT COUNT(*) FROM cand), 1), 6) AS precision,
+       ROUND((SELECT COUNT(*) FROM hit) * 1.0
+             / GREATEST((SELECT COUNT(*) FROM truth), 1), 6) AS recall
+"""
+
+
+def _q107_oracle() -> str:
+    from sparkextract.queries.dedup import _Q53_ORACLE
+
+    return _Q107_ORACLE.replace("{Q53}", _Q53_ORACLE)
+
+
+@register("q107_lsh_recall_eval", oracle=_q107_oracle())
+def q107_lsh_recall_eval(spark, sf_dir):
+    from sparkextract.queries.dedup import _banded_corpus, q53_banded_lsh_near_dup
+
+    sub = _banded_corpus(spark, sf_dir).filter(
+        F.col("vec_id") % 1000000 < _Q107_SUB
+    )
+    x = sub.select(F.col("vec_id").alias("l"), F.col("e").alias("ex"))
+    y = sub.select(F.col("vec_id").alias("r"), F.col("e").alias("ey"))
+    cos = F.round(
+        _dot(F.col("ex"), F.col("ey")) / (_norm(F.col("ex")) * _norm(F.col("ey"))),
+        6,
+    )
+    # the three count aggregates below each re-evaluate their subtree
+    # (hit references both), so the sample-sized truth and candidate
+    # frames are materialized once (checkpoint_memo)
+    from sparkextract.queries.base import checkpoint_memo
+
+    truth = checkpoint_memo(
+        spark,
+        sf_dir,
+        "q107_truth",
+        lambda: x.join(F.broadcast(y), F.col("l") < F.col("r"))
+        .filter(cos >= 0.8)
+        .select("l", "r"),
+    )
+    cand = checkpoint_memo(
+        spark,
+        sf_dir,
+        "q107_cand",
+        lambda: q53_banded_lsh_near_dup(spark, sf_dir)
+        .filter(
+            (F.col("left_id") % 1000000 < _Q107_SUB)
+            & (F.col("right_id") % 1000000 < _Q107_SUB)
+        )
+        .select(F.col("left_id").alias("l"), F.col("right_id").alias("r")),
+    )
+    hit = truth.join(cand, ["l", "r"])
+    counts = (
+        truth.agg(F.count("*").alias("n_truth"))
+        .crossJoin(cand.agg(F.count("*").alias("n_candidates")))
+        .crossJoin(hit.agg(F.count("*").alias("n_hit")))
+    )
+    return counts.select(
+        "n_truth",
+        "n_candidates",
+        "n_hit",
+        F.round(
+            F.col("n_hit").cast("double")
+            / F.greatest(F.col("n_candidates"), F.lit(1)),
+            6,
+        ).alias("precision"),
+        F.round(
+            F.col("n_hit").cast("double") / F.greatest(F.col("n_truth"), F.lit(1)),
+            6,
+        ).alias("recall"),
+    )
+
+
+# --------------------------------------------------------------------------
+# q120: CLUSTERING-AGREEMENT RAND INDEX — pair-counting agreement
+# between the stored assignment (label) and a re-derived geometric one
+# (3-bit sign bucket of the embedding's leading components). This is
+# the snapshot-drift monitor for an embedding/cluster index: RI near 1
+# means the new partition agrees with the stored one.
+#
+# Everything reduces to the contingency table n_ij = |label i ∩ bucket
+# j| — one mergeable groupBy; all pair counts are BIGINT binomials
+# (c*(c-1))/2 so the only double op is the final single division.
+# Scale shape: the contingency table has ≤ |labels|*|buckets| cells
+# regardless of corpus size; the whole metric is one map-side-combined
+# shuffle plus constant-size arithmetic.
+_Q120_ORACLE = """
+WITH cells AS (
+  SELECT label,
+         (CASE WHEN embedding[1] >= 0 THEN 4 ELSE 0 END
+        + CASE WHEN embedding[2] >= 0 THEN 2 ELSE 0 END
+        + CASE WHEN embedding[3] >= 0 THEN 1 ELSE 0 END) AS bucket,
+         CAST(COUNT(*) AS BIGINT) AS c
+  FROM embeddings GROUP BY 1, 2
+),
+a AS (SELECT SUM(c * (c - 1) // 2) AS sa
+      FROM (SELECT SUM(c) AS c FROM cells GROUP BY label)),
+b AS (SELECT SUM(c * (c - 1) // 2) AS sb
+      FROM (SELECT SUM(c) AS c FROM cells GROUP BY bucket)),
+ij AS (SELECT SUM(c * (c - 1) // 2) AS sij, SUM(c) AS n,
+              CAST(COUNT(*) AS BIGINT) AS n_cells FROM cells)
+SELECT CAST(ij.n AS BIGINT) AS n_points,
+       ij.n_cells,
+       CAST(ij.sij AS BIGINT) AS pairs_both,
+       CAST(a.sa AS BIGINT) AS pairs_a,
+       CAST(b.sb AS BIGINT) AS pairs_b,
+       ROUND(
+         CAST(ij.n * (ij.n - 1) // 2 + 2 * ij.sij - a.sa - b.sb AS DOUBLE)
+         / CAST(ij.n * (ij.n - 1) // 2 AS DOUBLE), 6) AS rand_index
+FROM ij, a, b
+"""
+
+
+@register("q120_cluster_drift", oracle=_Q120_ORACLE)
+def q120_cluster_drift(spark, sf_dir):
+    emb = load(spark, sf_dir, "embeddings")
+    bucket = (
+        F.when(F.col("embedding").getItem(0) >= 0, 4).otherwise(0)
+        + F.when(F.col("embedding").getItem(1) >= 0, 2).otherwise(0)
+        + F.when(F.col("embedding").getItem(2) >= 0, 1).otherwise(0)
+    )
+    cells = emb.groupBy("label", bucket.alias("bucket")).agg(
+        F.count("*").cast("long").alias("c")
+    )
+    pairs = lambda c: F.expr(f"{c} * ({c} - 1) div 2")  # noqa: E731
+    a = cells.groupBy("label").agg(F.sum("c").alias("c")).agg(
+        F.sum(pairs("c")).alias("sa")
+    )
+    b = cells.groupBy("bucket").agg(F.sum("c").alias("c")).agg(
+        F.sum(pairs("c")).alias("sb")
+    )
+    ij = cells.agg(
+        F.sum(pairs("c")).alias("sij"),
+        F.sum("c").alias("n"),
+        F.count("*").cast("long").alias("n_cells"),
+    )
+    total = F.expr("n * (n - 1) div 2")
+    return (
+        ij.crossJoin(a)
+        .crossJoin(b)
+        .select(
+            F.col("n").cast("long").alias("n_points"),
+            "n_cells",
+            F.col("sij").cast("long").alias("pairs_both"),
+            F.col("sa").cast("long").alias("pairs_a"),
+            F.col("sb").cast("long").alias("pairs_b"),
+            F.round(
+                (total + 2 * F.col("sij") - F.col("sa") - F.col("sb")).cast("double")
+                / total.cast("double"),
+                6,
+            ).alias("rand_index"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# q131: SIMPLIFIED SILHOUETTE (centroid-based; Rousseeuw 1987 silhouette
+# with the O(N*k) centroid approximation that actual large-scale
+# clustering evals use — true silhouette is O(N^2) pairwise and cannot
+# run at corpus scale). Completes the cluster-diagnostics family: q120
+# measures assignment DRIFT between snapshots, this measures assignment QUALITY within one
+# snapshot: per point, a = Euclidean distance to its own (nearest)
+# centroid, b = distance to the best OTHER centroid, s = (b-a)/max(a,b)
+# in [0,1] here (a <= b by construction of nearest-centroid assignment).
+# Same seed-centroid scheme as q120 (quantized vectors of vec_id 1..8,
+# assignment ordering on the raw double squared-L2 with cent_id
+# tie-break — the proven cross-engine recipe), then every distance is
+# snapped to BIGINT micro-units and s is computed by pure integer
+# division, so the score surface is bit-identical across engines.
+# Reference intent: embedding-space quality checks over the pgvector
+# store, reference src/rag/vector_database.py:156-189.
+#
+# Scale shape: the centroid table is k broadcast rows; distances are
+# computed map-side on the embedding scan; the per-point (a, b, cell)
+# reduction is ONE vec_id-keyed conditional aggregation (no self-join,
+# no second scan); per-cluster rollup is a k-group mergeable agg.
+_Q131_K = 8
+
+
+def _q131_oracle() -> str:
+    return f"""
+    WITH eq AS (
+      SELECT vec_id,
+             list_transform(embedding, x -> ROUND(CAST(x AS DOUBLE), 3)) AS e
+      FROM embeddings
+    ),
+    cents AS (SELECT vec_id AS cent_id, e AS c FROM eq
+              WHERE vec_id BETWEEN 1 AND {_Q131_K}),
+    dists AS (
+      SELECT d.vec_id, c.cent_id,
+             list_sum(list_transform(range(1, 65),
+               i -> (d.e[i] - c.c[i]) * (d.e[i] - c.c[i]))) AS d2,
+             ROW_NUMBER() OVER (
+               PARTITION BY d.vec_id ORDER BY
+               list_sum(list_transform(range(1, 65),
+                 i -> (d.e[i] - c.c[i]) * (d.e[i] - c.c[i]))) ASC,
+               c.cent_id ASC) AS rn
+      FROM eq d, cents c
+      WHERE d.vec_id > {_Q131_K}
+    ),
+    ab AS (
+      SELECT vec_id,
+             CAST(MAX(CASE WHEN rn = 1 THEN cent_id END) AS BIGINT) AS cell,
+             CAST(ROUND(SQRT(MAX(CASE WHEN rn = 1 THEN d2 END)) * 1000000)
+                  AS BIGINT) AS a_u,
+             CAST(ROUND(SQRT(MAX(CASE WHEN rn = 2 THEN d2 END)) * 1000000)
+                  AS BIGINT) AS b_u
+      FROM dists WHERE rn <= 2 GROUP BY vec_id
+    )
+    SELECT vec_id, cell, a_u, b_u,
+           CAST(CASE WHEN GREATEST(a_u, b_u) = 0 THEN 0
+                ELSE (b_u - a_u) * 1000000 // GREATEST(a_u, b_u)
+                END AS BIGINT) AS sil_u
+    FROM ab
+    """
+
+
+@register("q131_simplified_silhouette", oracle=_q131_oracle())
+def q131_simplified_silhouette(spark, sf_dir):
+
+    eq = _km_quantized(spark, sf_dir)
+    cents = eq.filter(
+        (F.col("vec_id") >= 1) & (F.col("vec_id") <= _Q131_K)
+    ).select(F.col("vec_id").alias("cent_id"), F.col("e").alias("c"))
+    d2 = F.aggregate(
+        F.zip_with(F.col("e"), F.col("c"), lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cent_id"))
+    dists = (
+        eq.filter(F.col("vec_id") > _Q131_K)
+        .crossJoin(F.broadcast(cents))
+        .select("vec_id", "cent_id", d2.alias("d2"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 2)
+    )
+    snap = lambda col: F.round(F.sqrt(col) * F.lit(1000000.0)).cast("long")
+    ab = dists.groupBy("vec_id").agg(
+        F.max(F.when(F.col("rn") == 1, F.col("cent_id")))
+        .cast("long")
+        .alias("cell"),
+        snap(F.max(F.when(F.col("rn") == 1, F.col("d2")))).alias("a_u"),
+        snap(F.max(F.when(F.col("rn") == 2, F.col("d2")))).alias("b_u"),
+    )
+    sil = F.when(F.greatest("a_u", "b_u") == 0, F.lit(0)).otherwise(
+        F.expr("(b_u - a_u) * 1000000 div greatest(a_u, b_u)")
+    )
+    return ab.select(
+        "vec_id", "cell", "a_u", "b_u", sil.cast("long").alias("sil_u")
     )

@@ -17,6 +17,19 @@ broadcast semi-join on the <= 64-row dirty list). The synthetic old
 snapshot keys its changes on the SAME leaf function (leaves 0-3
 modified, 4-5 added since) — the deterministic analog of "one ingest
 partition changed", which is the locality a Merkle scheme exploits.
+
+q183 — WATERMARK LATE-EVENT AUDIT. Choosing a Structured Streaming
+watermark delay D is a data decision: too small silently drops late
+events, too large bloats state. The audit replays each event stream
+(event_type) in arrival order (event_id) and applies Spark's
+watermark rule exactly — an event is DROPPED if its event time is
+older than (max event time seen so far) - D, LATE-ACCEPTED if older
+than the running max but within D — using an exclusive running-max
+window (ROWS UNBOUNDED PRECEDING TO 1 PRECEDING), all in exact BIGINT
+microseconds. Verdict per stream: on-time / late-accepted / dropped
+counts and the maximum observed lateness — the number you read before
+picking D. Scale shape: ONE stream-keyed window (arrival order is a
+per-stream property, so no global sort) + a mergeable rollup.
 """
 
 from __future__ import annotations
@@ -24,7 +37,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from sparkextract.queries.base import (
     checkpoint_memo,
@@ -881,4 +894,179 @@ def q172_merkle_snapshot_diff(spark, sf_dir):
         F.coalesce("n_added", F.lit(0)).cast("long").alias("n_added"),
         F.coalesce("n_changed", F.lit(0)).cast("long").alias("n_changed"),
         F.coalesce("n_removed", F.lit(0)).cast("long").alias("n_removed"),
+    )
+
+
+# --------------------------------------------------------------------------
+# q118: INCREMENTAL DEDUP — near-dup detection for a corpus refresh
+# WITHOUT re-hashing the corpus: only the CDC delta (snapshot_diff's added/
+# changed rule) computes fresh q19 MinHash band signatures; the
+# unchanged majority is represented by its persisted signature index
+# (memoized here, a stored table at scale — signatures are computed
+# once at ingest and never again). Candidates are (1) delta-vs-index
+# and (2) delta-vs-delta band collisions, reported per pair with how
+# many of the 4 bands matched.
+#
+# Scale shape: the delta side is ~20% (and in steady state ~arrival
+# rate); band matching is the UNPIVOTED form — (band, sig) equi-join —
+# never an OR-of-bands join (which both engines would execute as a
+# nested loop over the corpus); pair aggregation is a mergeable
+# groupBy. The index side is scanned once to build the memo and then
+# reused by both candidate joins.
+def _q118_sigs_sql() -> str:
+    import sparkextract.queries.text  # noqa: F401 — registers q19 first
+
+    from sparkextract.queries.base import ORACLE_SQL
+
+    return ORACLE_SQL["q19_minhash_signature"]
+
+
+def _q118_oracle() -> str:
+    from sparkextract.queries.base import md5_bucket_sql
+
+    return f"""
+    WITH sigs AS (
+      {_q118_sigs_sql()}
+    ),
+    st AS (
+      SELECT s.*,
+             CAST({md5_bucket_sql("doc_id", 10)} AS BIGINT) < 2 AS is_delta
+      FROM sigs s
+    ),
+    bands AS (
+      SELECT doc_id, is_delta, 0 AS b, sig0 AS sig FROM st
+      UNION ALL SELECT doc_id, is_delta, 1, sig1 FROM st
+      UNION ALL SELECT doc_id, is_delta, 2, sig2 FROM st
+      UNION ALL SELECT doc_id, is_delta, 3, sig3 FROM st
+    ),
+    delta_bands AS (SELECT doc_id, b, sig FROM bands WHERE is_delta),
+    index_bands AS (SELECT doc_id, b, sig FROM bands WHERE NOT is_delta),
+    cand AS (
+      SELECT d.doc_id AS new_doc_id, i.doc_id AS dup_of, 'index' AS kind, d.b
+      FROM delta_bands d JOIN index_bands i ON d.b = i.b AND d.sig = i.sig
+      UNION ALL
+      SELECT a.doc_id, bb.doc_id, 'delta', a.b
+      FROM delta_bands a JOIN delta_bands bb
+        ON a.b = bb.b AND a.sig = bb.sig AND a.doc_id < bb.doc_id
+    )
+    SELECT new_doc_id, dup_of, kind,
+           CAST(COUNT(DISTINCT b) AS BIGINT) AS n_bands
+    FROM cand
+    GROUP BY new_doc_id, dup_of, kind
+    """
+
+
+@register("q118_incremental_dedup", oracle=_q118_oracle())
+def q118_incremental_dedup(spark, sf_dir):
+    from sparkextract.queries.base import checkpoint_memo, md5_bucket
+    from sparkextract.queries.dedup import q19_minhash_signature
+
+    def build():
+        sigs = q19_minhash_signature(spark, sf_dir)
+        is_delta = md5_bucket(F.col("doc_id"), 10) < 2
+        return sigs.select(
+            "doc_id",
+            is_delta.alias("is_delta"),
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(b).alias("b"), F.col(f"sig{b}").alias("sig")
+                        )
+                        for b in range(4)
+                    ]
+                )
+            ).alias("bs"),
+        ).select("doc_id", "is_delta", F.col("bs.b").alias("b"), F.col("bs.sig").alias("sig"))
+
+    # the banded signature table is the persisted index at scale; both
+    # candidate joins read it, so materialize once
+    bands = checkpoint_memo(spark, sf_dir, "q118_bands", build)
+    delta = bands.filter("is_delta").select("doc_id", "b", "sig")
+    index = bands.filter(~F.col("is_delta")).select(
+        F.col("doc_id").alias("dup_of"), "b", "sig"
+    )
+    vs_index = delta.join(index, ["b", "sig"]).select(
+        F.col("doc_id").alias("new_doc_id"), "dup_of", F.lit("index").alias("kind"), "b"
+    )
+    right = delta.select(F.col("doc_id").alias("dup_of"), "b", "sig")
+    vs_delta = (
+        delta.join(right, ["b", "sig"])
+        .filter(F.col("doc_id") < F.col("dup_of"))
+        .select(
+            F.col("doc_id").alias("new_doc_id"),
+            "dup_of",
+            F.lit("delta").alias("kind"),
+            "b",
+        )
+    )
+    return (
+        vs_index.unionByName(vs_delta)
+        .groupBy("new_doc_id", "dup_of", "kind")
+        .agg(F.countDistinct("b").alias("n_bands"))
+    )
+
+
+# --------------------------------------------------------------------------
+_Q183_DELAY_US = 3_600_000_000  # watermark delay D = 1 h
+
+
+_Q183_ORACLE = f"""
+WITH ev AS (
+  SELECT event_type, event_id, epoch_us(ts) AS t_us FROM events
+),
+marked AS (
+  SELECT event_type, t_us,
+         MAX(t_us) OVER (PARTITION BY event_type ORDER BY event_id
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+           AS seen_max
+  FROM ev
+)
+SELECT event_type,
+  CAST(COUNT(*) AS BIGINT) AS n_events,
+  CAST(SUM(CASE WHEN seen_max IS NULL OR t_us >= seen_max
+           THEN 1 ELSE 0 END) AS BIGINT) AS n_on_time,
+  CAST(SUM(CASE WHEN t_us < seen_max
+                 AND t_us >= seen_max - {_Q183_DELAY_US}
+           THEN 1 ELSE 0 END) AS BIGINT) AS n_late_accepted,
+  CAST(SUM(CASE WHEN t_us < seen_max - {_Q183_DELAY_US}
+           THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
+  CAST(MAX(CASE WHEN seen_max IS NULL THEN 0
+            ELSE GREATEST(seen_max - t_us, 0) END) AS BIGINT)
+    AS max_lateness_us
+FROM marked GROUP BY event_type
+"""
+
+
+@register("q183_watermark_late_events", oracle=_Q183_ORACLE)
+def q183_watermark_late_events(spark, sf_dir):
+    ev = load(spark, sf_dir, "events").select(
+        "event_type",
+        "event_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("t_us"),
+    )
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy("event_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    marked = ev.select(
+        "event_type", "t_us", F.max("t_us").over(w).alias("seen_max")
+    )
+    on_time = F.col("seen_max").isNull() | (F.col("t_us") >= F.col("seen_max"))
+    dropped = F.col("t_us") < F.col("seen_max") - _Q183_DELAY_US
+    return marked.groupBy("event_type").agg(
+        F.count("*").cast("long").alias("n_events"),
+        F.sum(F.when(on_time, 1).otherwise(0)).cast("long").alias("n_on_time"),
+        F.sum(F.when(~on_time & ~dropped, 1).otherwise(0))
+        .cast("long")
+        .alias("n_late_accepted"),
+        F.sum(F.when(dropped, 1).otherwise(0)).cast("long").alias("n_dropped"),
+        F.max(
+            F.when(F.col("seen_max").isNull(), 0).otherwise(
+                F.greatest(F.col("seen_max") - F.col("t_us"), F.lit(0))
+            )
+        )
+        .cast("long")
+        .alias("max_lateness_us"),
     )

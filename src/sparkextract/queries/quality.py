@@ -78,6 +78,42 @@ table on (a, b) — vocabulary-keyed, no broadcast assumption — followed
 by a doc-grain mergeable agg. The unigram-side statistics join into
 the LM table on (a) and (b) before the scoring join, so the corpus-
 sized instance table is touched exactly once.
+
+q148 — FILTER DISPARITY AUDIT (Gini over per-source keep rates). A
+corpus-wide quality gate that silently drops one source or language
+harder than the rest is a curation bug (the Gopher/Dolma reports audit
+exactly this); the standard scalar is the GINI COEFFICIENT of the
+per-group keep rates, plus the max-min range. The keep gate is the
+q135 linear classifier (same frozen weights); per-source (n, k) is ONE
+map-side-combinable groupBy; everything after — pairwise |r_i - r_j|,
+the Gini ratio — runs on the <= #sources row grain (20 at every SF;
+the documented tiny-grain exception, cf. q137's 81-bin cumulative).
+Numeric discipline: rates are micro-unit BIGINTs; the pairwise
+absolute-difference sum is exact integer arithmetic (bounded by
+n_src^2 * 1e6 << 2^53); Gini = sumabs / (2 * n_src * sum_rates) is ONE
+IEEE division snapped to micro-units.
+
+q160 — TEMPLATE / BOILERPLATE PROFILING PER SOURCE. Crawl sources that
+stamp every page from a template share their opening tokens; the
+standard cheap detector profiles the 2-token PREFIX distribution per
+source: how many distinct prefixes, the largest prefix class, and the
+share of docs whose prefix is shared with another doc of the SAME
+source (template_share). High share + low distinct-prefix count flags
+a templated source before any expensive near-dup pass runs (this is
+the triage query that decides whether q96's block dedup is worth
+scheduling for a source). All integers; one final snapped division.
+Scale shape: two STACKED map-side-combinable groupBys — (source,
+prefix) then (source) — the canonical two-level reduction; no joins,
+no windows, nothing content-keyed survives to the second level.
+
+q201 — COMPRESSION-PROXY TEMPLATE AUDIT. Fraction of repeated 8-gram
+INSTANCES inside each source (1 - distinct/total) — the cheap proxy
+for zstd-dictionary compressibility and templated/boilerplate content
+used to pick which sources get dictionary compression and which feed
+the q160 template profiler. Exact integer micro-units.
+
+Scale shape: one explode -> two-level mergeable agg ((source, gram)
+then source). Map-side combine absorbs hot grams; nothing else.
 """
 
 from __future__ import annotations
@@ -1134,5 +1170,480 @@ def q189_kneser_ney_lm(spark, sf_dir):
                 / F.count("*").cast("double"),
                 6,
             ).alias("xent"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# q75: rule-based document-quality filter — the C4/Gopher-style cleaning
+# pass a web-scale training-data pipeline runs before anything else:
+# per-document word count bounds, mean-word-length band, and lexical-
+# diversity floor, each doc tagged keep/reject with the FIRST failing
+# rule as its reject_reason (rules are ordered, like the published
+# pipelines' cascades). Complements q25 (weighted quality score,
+# source-grain): this is the hard per-doc verdict.
+# Float discipline: diversity and mean_word_len are each ONE IEEE
+# division of exact integers (identical in both engines); threshold
+# compares run on the raw quotient, ROUND only for display.
+# Scale shape: map-only over one scan — no shuffle, fully codegen'd.
+_Q75_MIN_WORDS = 50
+
+
+_Q75_MAX_WORDS = 5000
+
+
+_Q75_WLEN_LO = 2.0
+
+
+_Q75_WLEN_HI = 12.0
+
+
+_Q75_MIN_DIVERSITY = 0.05
+
+
+# shared word-metric definitions: q75's rule filter and q94's composed
+# pipeline MUST tokenize identically in BOTH engines, so each metric has
+# exactly one SQL fragment and one Spark builder (drift between the two
+# queries would be invisible to the oracle gate — both engines would
+# drift together)
+_SQL_N_WORDS = "CAST(LENGTH(regexp_extract_all(text, '\\S+')) AS BIGINT)"
+
+
+_SQL_N_DISTINCT = (
+    "CAST(LENGTH(list_distinct(list_filter("
+    "regexp_split_to_array(text, '\\s+'), x -> x <> ''))) AS BIGINT)"
+)
+
+
+def _n_words_col():
+    return F.regexp_count("text", F.lit(r"\S+")).cast("long")
+
+
+def _n_distinct_col():
+    return F.size(
+        F.array_distinct(F.filter(F.split("text", r"\s+"), lambda x: x != ""))
+    ).cast("long")
+
+
+_Q75_ORACLE = f"""
+WITH m AS (
+  SELECT doc_id,
+         {_SQL_N_WORDS} AS n_words,
+         {_SQL_N_DISTINCT} AS n_distinct,
+         CAST(LENGTH(regexp_replace(text, '\\s+', '', 'g')) AS BIGINT) AS n_nonspace
+  FROM documents
+),
+v AS (
+  SELECT doc_id, n_words, n_distinct,
+         CAST(n_distinct AS DOUBLE) / n_words AS diversity,
+         CAST(n_nonspace AS DOUBLE) / n_words AS mean_wlen
+  FROM m
+)
+SELECT doc_id, n_words, n_distinct,
+       ROUND(diversity, 6) AS diversity,
+       ROUND(mean_wlen, 6) AS mean_word_len,
+       CASE WHEN n_words < {_Q75_MIN_WORDS} THEN 'too_short'
+            WHEN n_words > {_Q75_MAX_WORDS} THEN 'too_long'
+            WHEN mean_wlen < {_Q75_WLEN_LO} OR mean_wlen > {_Q75_WLEN_HI} THEN 'word_len'
+            WHEN diversity < {_Q75_MIN_DIVERSITY} THEN 'repetitive'
+            ELSE 'pass' END AS reject_reason,
+       (n_words >= {_Q75_MIN_WORDS} AND n_words <= {_Q75_MAX_WORDS}
+        AND mean_wlen >= {_Q75_WLEN_LO} AND mean_wlen <= {_Q75_WLEN_HI}
+        AND diversity >= {_Q75_MIN_DIVERSITY}) AS keep
+FROM v
+"""
+
+
+@register("q75_quality_rules", oracle=_Q75_ORACLE)
+def q75_quality_rules(spark, sf_dir):
+    docs = load(spark, sf_dir, "documents")
+    n_nonspace = F.length(F.regexp_replace("text", r"\s+", "")).cast("long")
+    m = docs.select(
+        "doc_id",
+        _n_words_col().alias("n_words"),
+        _n_distinct_col().alias("n_distinct"),
+        n_nonspace.alias("n_nonspace"),
+    )
+    # NULL (not NaN) for zero-word docs: Spark's double x/0 is IEEE NaN
+    # while DuckDB's is NULL — guard the divisions so a whitespace-only
+    # document (the exact junk this filter exists for) cannot split the
+    # engines; reject_reason still reads 'too_short' via the first rule
+    nz_words = F.when(F.col("n_words") > 0, F.col("n_words"))
+    diversity = F.col("n_distinct").cast("double") / nz_words
+    mean_wlen = F.col("n_nonspace").cast("double") / nz_words
+    reason = (
+        F.when(F.col("n_words") < _Q75_MIN_WORDS, "too_short")
+        .when(F.col("n_words") > _Q75_MAX_WORDS, "too_long")
+        .when((mean_wlen < _Q75_WLEN_LO) | (mean_wlen > _Q75_WLEN_HI), "word_len")
+        .when(diversity < _Q75_MIN_DIVERSITY, "repetitive")
+        .otherwise("pass")
+    )
+    keep = (
+        (F.col("n_words") >= _Q75_MIN_WORDS)
+        & (F.col("n_words") <= _Q75_MAX_WORDS)
+        & (mean_wlen >= _Q75_WLEN_LO)
+        & (mean_wlen <= _Q75_WLEN_HI)
+        & (diversity >= _Q75_MIN_DIVERSITY)
+    )
+    return m.select(
+        "doc_id",
+        "n_words",
+        "n_distinct",
+        F.round(diversity, 6).alias("diversity"),
+        F.round(mean_wlen, 6).alias("mean_word_len"),
+        reason.alias("reject_reason"),
+        keep.alias("keep"),
+    )
+
+
+# --------------------------------------------------------------------------
+# q97: PII REDACTION — the scrub pass every public-web training corpus
+# runs before tokenization: emails and phone-shaped strings are replaced
+# by typed placeholder tags and counted per document. The corpus carries
+# no natural PII, so deterministic PII is injected first (doc_id%7 adds
+# an email, doc_id%13 adds a phone — the q68 injection pattern); the
+# operator is the redaction itself. Patterns stay in the portable
+# regex subset (character classes, +, {m,n}, \b) that Java regex (Spark)
+# and RE2 (DuckDB) evaluate identically. Reference analog: the OCR
+# text-clean regex chain (reference src/utils/validation.py via
+# core/normalize.py:42) applied to privacy scrubbing.
+# Scale shape: map-only — one scan, zero shuffles at any corpus size.
+_Q97_EMAIL_RE = r"[a-z0-9._]+@[a-z0-9.-]+\.[a-z]{2,}"
+
+
+_Q97_PHONE_RE = r"\b555-[0-9]{4}\b"
+
+
+_Q97_CORPUS = """
+  SELECT doc_id,
+         text || CASE WHEN doc_id % 7 = 0
+                      THEN ' contact user' || CAST(doc_id AS VARCHAR)
+                           || '@example.com now'
+                      ELSE '' END
+              || CASE WHEN doc_id % 13 = 0
+                      THEN ' call 555-' || SUBSTRING(
+                             CAST(10000 + doc_id % 10000 AS VARCHAR), 2, 4)
+                      ELSE '' END AS text
+  FROM documents
+"""
+
+
+_Q97_ORACLE = f"""
+WITH corpus AS (
+  {_Q97_CORPUS}
+)
+SELECT doc_id,
+       CAST(len(regexp_extract_all(text, '{_Q97_EMAIL_RE}')) AS INT) AS n_emails,
+       CAST(len(regexp_extract_all(text, '{_Q97_PHONE_RE}')) AS INT) AS n_phones,
+       (len(regexp_extract_all(text, '{_Q97_EMAIL_RE}'))
+        + len(regexp_extract_all(text, '{_Q97_PHONE_RE}'))) > 0 AS has_pii,
+       md5(regexp_replace(regexp_replace(text, '{_Q97_EMAIL_RE}', '<EMAIL>', 'g'),
+                          '{_Q97_PHONE_RE}', '<PHONE>', 'g')) AS redacted_md5
+FROM corpus
+"""
+
+
+@register("q97_pii_redaction", oracle=_Q97_ORACLE)
+def q97_pii_redaction(spark, sf_dir):
+    docs = load(spark, sf_dir, "documents")
+    phone4 = F.substring(
+        (10000 + F.col("doc_id") % 10000).cast("string"), 2, 4
+    )
+    text = F.concat(
+        F.col("text"),
+        F.when(
+            F.col("doc_id") % 7 == 0,
+            F.concat(
+                F.lit(" contact user"),
+                F.col("doc_id").cast("string"),
+                F.lit("@example.com now"),
+            ),
+        ).otherwise(F.lit("")),
+        F.when(F.col("doc_id") % 13 == 0, F.concat(F.lit(" call 555-"), phone4))
+        .otherwise(F.lit("")),
+    )
+    n_emails = F.regexp_count(text, F.lit(_Q97_EMAIL_RE)).cast("int")
+    n_phones = F.regexp_count(text, F.lit(_Q97_PHONE_RE)).cast("int")
+    redacted = F.regexp_replace(
+        F.regexp_replace(text, _Q97_EMAIL_RE, "<EMAIL>"), _Q97_PHONE_RE, "<PHONE>"
+    )
+    return docs.select(
+        "doc_id",
+        n_emails.alias("n_emails"),
+        n_phones.alias("n_phones"),
+        ((n_emails + n_phones) > 0).alias("has_pii"),
+        F.md5(redacted).alias("redacted_md5"),
+    )
+
+
+# --------------------------------------------------------------------------
+# q129: K-ANONYMITY RELEASE GATE (Sweeney 2002) — the privacy screen a
+# corpus release runs AFTER content-level PII redaction (q97): a
+# document is re-identifiable not just by what its text says but by its
+# metadata footprint, so the release checks the quasi-identifier tuple
+# (lang, source, length-bucket) against a minimum group size K. A doc is
+# released at level 0 if >= K docs share its full QI tuple; otherwise
+# the standard generalization-ladder step drops the most identifying
+# attribute (source) and re-tests (lang, length-bucket) — level 1; docs
+# still in a group < K are SUPPRESSED (level 2). Reference intent: the
+# reference's metadata/summary surfaces expose (source, size) per
+# document (reference src/table_extractor.py:778-782 summary tables); this is the release-side control over exactly those
+# attributes.
+#
+# Numeric discipline: pure integer arithmetic end to end (counts and an
+# exact integer division length bucket) — nothing to round.
+# Scale shape: two map-side-combinable groupBy counts whose results are
+# DIMENSION-TABLE sized (|lang| x |source| x |bucket|), broadcast back
+# onto the doc scan — zero corpus-sized shuffles; never a window over
+# the QI key (the q96/q99 de-skew rule: a hot QI group lands on one
+# task under a window, but a broadcast-join count is skew-immune).
+_Q129_K = 5
+
+
+_Q129_ORACLE = f"""
+WITH d AS (
+  SELECT doc_id, lang, source, CAST(n_chars // 200 AS BIGINT) AS len_bucket
+  FROM documents
+),
+g0 AS (SELECT lang, source, len_bucket, COUNT(*) AS g0
+       FROM d GROUP BY lang, source, len_bucket),
+g1 AS (SELECT lang, len_bucket, COUNT(*) AS g1
+       FROM d GROUP BY lang, len_bucket)
+SELECT d.doc_id, d.lang, d.source, d.len_bucket,
+       CAST(g0.g0 AS BIGINT) AS g0, CAST(g1.g1 AS BIGINT) AS g1,
+       CAST(CASE WHEN g0.g0 >= {_Q129_K} THEN 0
+                 WHEN g1.g1 >= {_Q129_K} THEN 1
+                 ELSE 2 END AS INTEGER) AS anon_level,
+       (g0.g0 >= {_Q129_K} OR g1.g1 >= {_Q129_K}) AS released
+FROM d
+JOIN g0 USING (lang, source, len_bucket)
+JOIN g1 USING (lang, len_bucket)
+"""
+
+
+@register("q129_k_anonymity", oracle=_Q129_ORACLE)
+def q129_k_anonymity(spark, sf_dir):
+    d = load(spark, sf_dir, "documents").select(
+        "doc_id",
+        "lang",
+        "source",
+        F.expr("CAST(n_chars div 200 AS BIGINT)").alias("len_bucket"),
+    )
+    g0 = d.groupBy("lang", "source", "len_bucket").agg(
+        F.count("*").alias("g0")
+    )
+    g1 = d.groupBy("lang", "len_bucket").agg(F.count("*").alias("g1"))
+    anon = (
+        F.when(F.col("g0") >= _Q129_K, 0)
+        .when(F.col("g1") >= _Q129_K, 1)
+        .otherwise(2)
+        .cast("int")
+    )
+    return (
+        d.join(F.broadcast(g0), ["lang", "source", "len_bucket"])
+        .join(F.broadcast(g1), ["lang", "len_bucket"])
+        .select(
+            "doc_id",
+            "lang",
+            "source",
+            "len_bucket",
+            "g0",
+            "g1",
+            anon.alias("anon_level"),
+            (
+                (F.col("g0") >= _Q129_K) | (F.col("g1") >= _Q129_K)
+            ).alias("released"),
+        )
+    )
+
+
+_Q148_ORACLE = f"""
+WITH core AS (
+  SELECT d.source, (c.logit_u >= 0) AS keep
+  FROM ({_Q135_CORE_SQL}) c JOIN documents d USING (doc_id)
+), per_src AS (
+  SELECT source,
+         CAST(COUNT(*) AS BIGINT) AS n_docs,
+         CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
+         CAST(ROUND(SUM(CASE WHEN keep THEN 1 ELSE 0 END) * 1000000.0
+                    / COUNT(*)) AS BIGINT) AS keep_rate_u
+  FROM core GROUP BY source
+), stats AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_src,
+         CAST(SUM(keep_rate_u) AS BIGINT) AS sum_r,
+         CAST(MAX(keep_rate_u) - MIN(keep_rate_u) AS BIGINT) AS range_u
+  FROM per_src
+), sumabs AS (
+  SELECT CAST(SUM(ABS(a.keep_rate_u - b.keep_rate_u)) AS BIGINT) AS sumabs
+  FROM per_src a, per_src b
+), gini AS (
+  SELECT CAST(ROUND(sumabs * 1000000.0 / (2.0 * n_src * sum_r)) AS BIGINT)
+           AS gini_u,
+         range_u
+  FROM sumabs, stats
+)
+SELECT p.source, p.n_docs, p.n_keep, p.keep_rate_u, g.gini_u, g.range_u
+FROM per_src p, gini g
+"""
+
+
+@register("q148_filter_disparity", oracle=_Q148_ORACLE)
+def q148_filter_disparity(spark, sf_dir):
+    feats = _q135_features(spark, sf_dir).select(
+        "doc_id", (F.col("logit_u") >= 0).alias("keep")
+    )
+    src = load(spark, sf_dir, "documents").select("doc_id", "source")
+    per_src = (
+        feats.join(src, "doc_id")
+        .groupBy("source")
+        .agg(
+            F.count("*").cast("long").alias("n_docs"),
+            F.sum(F.col("keep").cast("long")).cast("long").alias("n_keep"),
+        )
+        .withColumn(
+            "keep_rate_u",
+            F.round(F.col("n_keep") * F.lit(1000000.0) / F.col("n_docs"))
+            .cast("long"),
+        )
+    )
+    # tiny grain from here (<= #sources rows): pairwise |diff| + the
+    # Gini ratio on a crossJoin of the aggregated frame with itself
+    a = per_src.select(F.col("keep_rate_u").alias("ra"))
+    b = per_src.select(F.col("keep_rate_u").alias("rb"))
+    sumabs = a.crossJoin(b).agg(
+        F.sum(F.abs(F.col("ra") - F.col("rb"))).cast("long").alias("sumabs")
+    )
+    stats = per_src.agg(
+        F.count("*").cast("long").alias("n_src"),
+        F.sum("keep_rate_u").cast("long").alias("sum_r"),
+        (F.max("keep_rate_u") - F.min("keep_rate_u"))
+        .cast("long")
+        .alias("range_u"),
+    )
+    gini = sumabs.crossJoin(stats).select(
+        F.round(
+            F.col("sumabs")
+            * F.lit(1000000.0)
+            / (F.lit(2.0) * F.col("n_src") * F.col("sum_r"))
+        )
+        .cast("long")
+        .alias("gini_u"),
+        "range_u",
+    )
+    return per_src.crossJoin(F.broadcast(gini))
+
+
+_Q160_PREFIX_N = 2
+
+
+_Q160_ORACLE = f"""
+WITH d AS (
+  SELECT source,
+         array_to_string(string_split(text, ' ')[1:{_Q160_PREFIX_N}], ' ')
+           AS prefix
+  FROM documents
+),
+per_prefix AS (
+  SELECT source, prefix, CAST(COUNT(*) AS BIGINT) AS c
+  FROM d GROUP BY source, prefix
+)
+SELECT source,
+       CAST(SUM(c) AS BIGINT) AS n_docs,
+       CAST(COUNT(*) AS BIGINT) AS n_prefixes,
+       CAST(MAX(c) AS BIGINT) AS max_prefix_docs,
+       CAST(ROUND(SUM(CASE WHEN c > 1 THEN c ELSE 0 END) * 1000000.0
+                  / SUM(c)) AS BIGINT) AS template_share_u
+FROM per_prefix GROUP BY source
+"""
+
+
+@register("q160_template_prefix_profile", oracle=_Q160_ORACLE)
+def q160_template_prefix_profile(spark, sf_dir):
+    d = load(spark, sf_dir, "documents").select(
+        "source",
+        F.array_join(
+            F.slice(F.split("text", " "), 1, _Q160_PREFIX_N), " "
+        ).alias("prefix"),
+    )
+    per_prefix = d.groupBy("source", "prefix").agg(
+        F.count("*").cast("long").alias("c")
+    )
+    return per_prefix.groupBy("source").agg(
+        F.sum("c").cast("long").alias("n_docs"),
+        F.count("*").cast("long").alias("n_prefixes"),
+        F.max("c").cast("long").alias("max_prefix_docs"),
+        F.round(
+            F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(0))
+            * F.lit(1000000.0)
+            / F.sum("c")
+        )
+        .cast("long")
+        .alias("template_share_u"),
+    )
+
+
+# ---------------------------------------------------------------------
+# q201
+_Q201_N = 8  # gram width
+
+
+_Q201_ORACLE = f"""
+WITH grams AS (
+  SELECT source, gram FROM (
+    SELECT source,
+           unnest(list_transform(range(1, len(a) - {_Q201_N} + 2),
+                  i -> array_to_string(a[i:i+{_Q201_N - 1}], ' '))) AS gram
+    FROM (SELECT source,
+                 list_filter(string_split(text, ' '), t -> t <> '') AS a
+          FROM documents)
+    WHERE len(a) >= {_Q201_N})
+),
+per_gram AS (
+  SELECT source, gram, CAST(COUNT(*) AS BIGINT) AS c
+  FROM grams GROUP BY source, gram
+)
+SELECT source,
+       CAST(SUM(c) AS BIGINT) AS n_instances,
+       CAST(COUNT(*) AS BIGINT) AS n_distinct,
+       CAST(SUM(c) - COUNT(*) AS BIGINT) AS n_repeated,
+       CAST((1000000 * (SUM(c) - COUNT(*))) // SUM(c) AS BIGINT)
+         AS repeat_frac_u,
+       (1000000 * (SUM(c) - COUNT(*))) // SUM(c) >= 300000 AS dict_worthy
+FROM per_gram
+GROUP BY source
+"""
+
+
+@register("q201_compression_proxy", oracle=_Q201_ORACLE)
+def q201_compression_proxy(spark, sf_dir):
+    a = F.filter(F.split("text", " "), lambda t: t != F.lit(""))
+    gram = F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size("a") - _Q201_N + 1, F.lit(0))),
+        lambda i: F.array_join(F.slice("a", i, _Q201_N), " "),
+    )
+    grams = (
+        load(spark, sf_dir, "documents")
+        .select("source", a.alias("a"))
+        .filter(F.size("a") >= _Q201_N)
+        .select("source", F.explode(gram).alias("gram"))
+    )
+    per_gram = grams.groupBy("source", "gram").agg(
+        F.count("*").cast("long").alias("c")
+    )
+    rep = F.expr("(1000000 * (n_instances - n_distinct)) div n_instances")
+    return (
+        per_gram.groupBy("source")
+        .agg(
+            F.sum("c").cast("long").alias("n_instances"),
+            F.count("*").cast("long").alias("n_distinct"),
+            (F.sum("c") - F.count("*")).cast("long").alias("n_repeated"),
+        )
+        .select(
+            "source",
+            "n_instances",
+            "n_distinct",
+            "n_repeated",
+            rep.cast("long").alias("repeat_frac_u"),
+            (rep >= 300000).alias("dict_worthy"),
         )
     )

@@ -18,10 +18,12 @@ import sparkextract.queries.extraction  # noqa: F401
 import sparkextract.queries.graph  # noqa: F401
 import sparkextract.queries.incremental  # noqa: F401
 import sparkextract.queries.media  # noqa: F401
+import sparkextract.queries.planning  # noqa: F401
 import sparkextract.queries.quality  # noqa: F401
 import sparkextract.queries.relational  # noqa: F401
 import sparkextract.queries.retrieval  # noqa: F401
 import sparkextract.queries.sketches  # noqa: F401
+import sparkextract.queries.stats  # noqa: F401
 import sparkextract.queries.text  # noqa: F401
 from sparkextract.queries.base import ORACLE_SQL, SPARK_QUERIES
 

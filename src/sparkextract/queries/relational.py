@@ -3,6 +3,52 @@ aggregates (S1/A5/A7), windows (W1/W4/W5), existence joins (J2/D5),
 priority and seen-set dedup (D1/D3), JSON props (F12), gap-based
 sessionization, the document confidence rollup (A6) and the
 deterministic global shuffle.
+
+q147 — SPAN INTERVAL MERGE (gaps-and-islands). Every span-emitting
+stage (PII regex hits q97, secret-scan matches q141, OCR span
+boundaries) produces OVERLAPPING intervals that must be coalesced
+before the replacement/redaction is applied — the classic
+gaps-and-islands problem. Spans here are the deterministic keyword
+hits ('table'/'row'/'key') widened to [pos, pos+2] token-unit
+intervals; merging is the textbook two-window form: an interval opens
+a new island iff its start exceeds the running MAX(end) of all prior
+intervals in the doc (strict overlap-or-touch merge: s <= prev_max_e
+merges, s = prev_max_e + 1 does not), island ids are the running sum
+of the new-island flag, and the per-doc report is (n_spans, n_islands,
+covered_tokens, max_island_len) — all exact integers.
+Scale shape: the only shuffle key is doc_id; both windows and both
+groupBys share that partitioning (a doc's spans are bounded by its
+token count, so no per-key skew beyond the documented mega-doc path
+q42 already handles). Reference intent: the span-offset bookkeeping of
+reference src/text_processor.py:38-87 (ordered span assembly)
+extended with the overlap-coalescing every redaction pipeline needs.
+
+q158 — DOMAIN-SUFFIX BLOCKLIST JOIN. Crawl governance blocks domains by
+SUFFIX ("*.site7.com", a whole TLD, one exact host): a host matches an
+entry iff it equals the entry or ends with '.' + entry — label-boundary
+semantics, never substring. The scalable form is NOT a LIKE-join (a
+non-equi join Spark would nested-loop): each host explodes into its
+<= depth label-suffixes ('h1.site7.com' -> {'h1.site7.com',
+'site7.com', 'com'}, bounded fan-out), and matching becomes a plain
+EQUI-join against the broadcast blocklist. Hosts are synthesized
+deterministically from doc_id (3-level, the q98/q149 URL protocol).
+Reference analog: the per-source skip-list config gate
+(reference src/config/settings.py) lifted to web-crawl grain.
+Scale shape: suffix explode is map-side (<= 3 rows per doc); the
+blocklist (5 rows) broadcasts; the rollup is one map-side-combinable
+groupBy(entry). Zero corpus-keyed shuffles beyond the final tiny agg.
+
+q180 — EXPONENTIAL-DECAY POPULARITY (time-decayed counters). The
+monitoring primitive behind "trending now": each event contributes
+2^(-age/half_life), so old mass fades without any windowed state. The
+engine-portable discipline: age is quantized to integer decay steps
+(1 h), the per-event weight 2^-e for e <= 18 is an EXACT decimal
+literal (2^-e = 5^e * 10^-e, so scale-18 decimals represent it
+exactly), and the per-type decayed mass is an exact order-free
+DECIMAL(38,18) sum — one mergeable groupBy, no window, no IEEE
+accumulation. Verdict: per event type the raw count rank vs the
+decayed-mass rank with a changed flag — recency re-ranking made
+executable.
 """
 
 from __future__ import annotations
@@ -10,7 +56,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 from pyspark.sql.window import Window as W
 
-from sparkextract.queries.base import dsum, load, register
+from sparkextract.queries.base import dsum, load, md5_bucket_sql, register
 
 
 def _dec(col):
@@ -546,4 +592,369 @@ def q105_deterministic_shuffle(spark, sf_dir):
         "doc_id",
         "shard",
         (F.col("offset") + F.col("rk") - 1).alias("global_pos"),
+    )
+
+
+# --------------------------------------------------------------------------
+# q98: DOMAIN-LEVEL FILTERING + ROLLUP — the web-pipeline step that
+# scores and gates whole domains (spam/SEO domains are dropped as a
+# unit, per-domain quotas cap crawl skew). Each doc carries a
+# deterministic synthetic URL; the DOMAIN IS PARSED FROM THE URL STRING
+# (split on '/'), never recomputed from doc_id — string parsing is the
+# operator. The blocklist is the md5-bucket(domain)%11==0 slice,
+# applied as a BROADCAST ANTI-JOIN (a real blocklist is a curated list,
+# not a predicate). Output: per surviving domain, doc count, total
+# chars, mean quality. Reference analog: content-type/min-confidence
+# retrieval filters (reference src/rag/vector_store.py filters)
+# lifted to domain grain.
+# Scale shape: one groupBy(domain) keyed shuffle; the blocklist is a
+# CURATED EXTERNAL LIST (built driver-side from the known domain
+# universe, exactly how a real blocklist arrives) so the corpus is
+# scanned once — deriving it from the corpus would either re-scan or
+# rely on ReuseExchange firing across sibling subtrees (it doesn't
+# under AQE). The anti-join broadcasts the list; at web scale
+# (~millions of domains) it still broadcasts, or at worst falls back
+# to a keyed join on the ALREADY-AGGREGATED domain grain, never the
+# doc grain.
+_Q98_DOMAINS = 97
+
+
+_Q98_BLOCK_BUCKETS = 11
+
+
+_Q98_URLS = f"""
+  SELECT doc_id, n_chars,
+         'https://site' || CAST(doc_id % {_Q98_DOMAINS} AS VARCHAR)
+           || '.example.com/p/' || CAST(doc_id AS VARCHAR) AS url
+  FROM documents
+"""
+
+
+_Q98_ORACLE = f"""
+WITH urls AS (
+  {_Q98_URLS}
+),
+parsed AS (
+  SELECT doc_id, n_chars, split_part(url, '/', 3) AS domain FROM urls
+),
+per_domain AS (
+  SELECT domain,
+         CAST(COUNT(*) AS BIGINT) AS n_docs,
+         CAST(SUM(n_chars) AS BIGINT) AS total_chars,
+         ROUND(SUM(n_chars) * 1.0 / COUNT(*), 6) AS mean_chars
+  FROM parsed GROUP BY domain
+)
+SELECT domain, n_docs, total_chars, mean_chars
+FROM per_domain
+WHERE {md5_bucket_sql("domain", _Q98_BLOCK_BUCKETS)} <> 0
+"""
+
+
+@register("q98_domain_rollup", oracle=_Q98_ORACLE)
+def q98_domain_rollup(spark, sf_dir):
+    docs = load(spark, sf_dir, "documents").select(
+        "doc_id",
+        "n_chars",
+        F.concat(
+            F.lit("https://site"),
+            (F.col("doc_id") % _Q98_DOMAINS).cast("string"),
+            F.lit(".example.com/p/"),
+            F.col("doc_id").cast("string"),
+        ).alias("url"),
+    )
+    parsed = docs.select(
+        "n_chars", F.element_at(F.split("url", "/"), 3).alias("domain")
+    )
+    per_domain = parsed.groupBy("domain").agg(
+        F.count("*").alias("n_docs"),
+        F.sum("n_chars").alias("total_chars"),
+        F.round(F.sum("n_chars").cast("double") / F.count("*"), 6).alias(
+            "mean_chars"
+        ),
+    )
+    import hashlib
+
+    blocked = [
+        (d,)
+        for i in range(_Q98_DOMAINS)
+        for d in [f"site{i}.example.com"]
+        if int(hashlib.md5(d.encode()).hexdigest()[:8], 16) % _Q98_BLOCK_BUCKETS == 0
+    ]
+    blocklist = spark.createDataFrame(blocked, "domain string")
+    return per_domain.join(F.broadcast(blocklist), "domain", "left_anti")
+
+
+_Q147_KW = ("table", "row", "key")
+
+
+_Q147_WIDTH = 2  # interval = [pos, pos + width] in token units
+
+
+_Q147_KW_SQL = ", ".join(f"'{k}'" for k in _Q147_KW)
+
+
+_Q147_ORACLE = f"""
+WITH toks AS (
+  SELECT doc_id,
+         unnest(string_split(text, ' ')) AS tok,
+         generate_subscripts(string_split(text, ' '), 1) AS pos1
+  FROM documents
+), spans AS (
+  SELECT doc_id, pos1 - 1 AS s, pos1 - 1 + {_Q147_WIDTH} AS e
+  FROM toks WHERE tok IN ({_Q147_KW_SQL})
+), flagged AS (
+  SELECT doc_id, s, e,
+         CASE WHEN s > COALESCE(MAX(e) OVER (
+                PARTITION BY doc_id ORDER BY s
+                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
+              THEN 1 ELSE 0 END AS new_island
+  FROM spans
+), islands AS (
+  SELECT doc_id, s, e,
+         SUM(new_island) OVER (
+           PARTITION BY doc_id ORDER BY s
+           ROWS UNBOUNDED PRECEDING) AS island
+  FROM flagged
+), merged AS (
+  SELECT doc_id, island, MIN(s) AS ms, MAX(e) AS me
+  FROM islands GROUP BY doc_id, island
+), per_doc AS (
+  SELECT doc_id,
+         CAST(COUNT(*) AS BIGINT) AS n_islands,
+         CAST(SUM(me - ms + 1) AS BIGINT) AS covered_tokens,
+         CAST(MAX(me - ms + 1) AS BIGINT) AS max_island_len
+  FROM merged GROUP BY doc_id
+), counts AS (
+  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans FROM spans
+  GROUP BY doc_id
+)
+SELECT p.doc_id, c.n_spans, p.n_islands, p.covered_tokens, p.max_island_len
+FROM per_doc p JOIN counts c USING (doc_id)
+"""
+
+
+@register("q147_span_interval_merge", oracle=_Q147_ORACLE)
+def q147_span_interval_merge(spark, sf_dir):
+    docs = load(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
+    )
+    kw = F.col("tok") == F.lit(_Q147_KW[0])
+    for k in _Q147_KW[1:]:
+        kw = kw | (F.col("tok") == F.lit(k))
+    spans = toks.filter(kw).select(
+        "doc_id",
+        F.col("pos").cast("long").alias("s"),
+        (F.col("pos") + _Q147_WIDTH).cast("long").alias("e"),
+    )
+    w = Window.partitionBy("doc_id").orderBy("s")
+    prev_max_e = F.max("e").over(w.rowsBetween(Window.unboundedPreceding, -1))
+    flagged = spans.withColumn(
+        "new_island",
+        F.when(F.col("s") > F.coalesce(prev_max_e, F.lit(-1)), 1).otherwise(0),
+    )
+    islands = flagged.withColumn(
+        "island",
+        F.sum("new_island").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+    merged = islands.groupBy("doc_id", "island").agg(
+        F.min("s").alias("ms"), F.max("e").alias("me")
+    )
+    per_doc = merged.groupBy("doc_id").agg(
+        F.count("*").cast("long").alias("n_islands"),
+        F.sum(F.col("me") - F.col("ms") + 1).cast("long").alias("covered_tokens"),
+        F.max(F.col("me") - F.col("ms") + 1).cast("long").alias("max_island_len"),
+    )
+    counts = spans.groupBy("doc_id").agg(
+        F.count("*").cast("long").alias("n_spans")
+    )
+    return per_doc.join(counts, "doc_id").select(
+        "doc_id", "n_spans", "n_islands", "covered_tokens", "max_island_len"
+    )
+
+
+_Q158_HOSTS_SQL = """
+  SELECT doc_id,
+         'h' || CAST(doc_id % 5 AS VARCHAR)
+           || '.site' || CAST(doc_id % 23 AS VARCHAR)
+           || '.' || (CASE doc_id % 3 WHEN 0 THEN 'com' WHEN 1 THEN 'org'
+                      ELSE 'net' END) AS host
+  FROM documents
+"""
+
+
+_Q158_BLOCKLIST = (
+    "org",            # a whole TLD
+    "site7.com",      # a registrable domain (all its hosts)
+    "site16.net",     # another, on the third TLD
+    "h2.site11.net",  # one exact host
+    "absent.example", # never matches — proves no-hit entries still report
+)
+
+
+_Q158_BL_SQL = " UNION ALL ".join(
+    f"SELECT '{e}' AS entry" for e in _Q158_BLOCKLIST
+)
+
+
+_Q158_ORACLE = f"""
+WITH hosts AS ({_Q158_HOSTS_SQL}),
+suffixes AS (
+  SELECT doc_id, host,
+         array_to_string(labels[i:], '.') AS suffix
+  FROM (
+    SELECT doc_id, host, string_split(host, '.') AS labels FROM hosts
+  ), UNNEST(generate_series(1, len(labels))) AS t(i)
+),
+bl AS ({_Q158_BL_SQL}),
+hits AS (
+  SELECT bl.entry, s.doc_id
+  FROM bl LEFT JOIN suffixes s ON s.suffix = bl.entry
+)
+SELECT entry,
+       CAST(COUNT(doc_id) AS BIGINT) AS n_blocked,
+       CAST(COALESCE(MIN(doc_id), -1) AS BIGINT) AS min_doc
+FROM hits GROUP BY entry
+"""
+
+
+@register("q158_suffix_blocklist", oracle=_Q158_ORACLE)
+def q158_suffix_blocklist(spark, sf_dir):
+    docs = load(spark, sf_dir, "documents").select("doc_id")
+    host = F.concat(
+        F.lit("h"),
+        (F.col("doc_id") % 5).cast("string"),
+        F.lit(".site"),
+        (F.col("doc_id") % 23).cast("string"),
+        F.lit("."),
+        F.when(F.col("doc_id") % 3 == 0, "com")
+        .when(F.col("doc_id") % 3 == 1, "org")
+        .otherwise("net"),
+    )
+    labeled = docs.select("doc_id", F.split(host, "\\.").alias("labels"))
+    # bounded map-side fan-out: one row per label-suffix (<= host depth)
+    suffixes = labeled.select(
+        "doc_id",
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(0), F.size("labels") - 1),
+                lambda i: F.array_join(
+                    F.slice(
+                        F.col("labels"), i + 1, F.size("labels") - i
+                    ),
+                    ".",
+                ),
+            )
+        ).alias("suffix"),
+    )
+    bl = spark.createDataFrame(
+        [(e,) for e in _Q158_BLOCKLIST], "entry string"
+    )
+    # corpus-side match is an INNER BroadcastHashJoin (Spark cannot
+    # broadcast the preserved side of an outer join); no-hit entries are
+    # restored by a 5-row x 5-row left join afterwards
+    hits = (
+        suffixes.join(
+            F.broadcast(bl), suffixes["suffix"] == bl["entry"], "inner"
+        )
+        .groupBy("entry")
+        .agg(
+            F.count("doc_id").cast("long").alias("nb"),
+            F.min("doc_id").cast("long").alias("md"),
+        )
+    )
+    return bl.join(hits, "entry", "left").select(
+        "entry",
+        F.coalesce(F.col("nb"), F.lit(0)).cast("long").alias("n_blocked"),
+        F.coalesce(F.col("md"), F.lit(-1)).cast("long").alias("min_doc"),
+    )
+
+
+# --------------------------------------------------------------------------
+_Q180_STEP_US = 3_600_000_000  # 1 h decay quantum
+
+
+_Q180_MAX_E = 18  # 2^-18 < 4e-6: older mass is exactly zero weight
+
+
+# exact decimal literals for 2^-e (2^-e = 5^e * 10^-e: scale e <= 18)
+_Q180_WEIGHTS = {
+    e: ("{0:.18f}".format(0.5**e) if e else "1.000000000000000000")
+    for e in range(_Q180_MAX_E + 1)
+}
+
+
+def _q180_weight_case(evar: str) -> str:
+    arms = " ".join(
+        f"WHEN {e} THEN CAST({w} AS DECIMAL(20,18))"
+        for e, w in _Q180_WEIGHTS.items()
+    )
+    return f"CASE {evar} {arms} ELSE CAST(0 AS DECIMAL(20,18)) END"
+
+
+_Q180_ORACLE = f"""
+WITH ev AS (
+  SELECT event_type, epoch_us(ts) AS t_us FROM events
+),
+t0 AS (SELECT MAX(t_us) AS tmax FROM ev),
+w AS (
+  SELECT event_type,
+    {_q180_weight_case(f"LEAST((t0.tmax - t_us) // {_Q180_STEP_US}, {_Q180_MAX_E})")}
+      AS wgt
+  FROM ev, t0
+),
+agg AS (
+  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
+         CAST(SUM(wgt) AS DECIMAL(38,18)) AS decayed
+  FROM w GROUP BY event_type
+)
+SELECT event_type, n_events,
+  CAST(ROUND(decayed, 6) AS DOUBLE) AS decayed_mass,
+  CAST(ROW_NUMBER() OVER (ORDER BY n_events DESC, event_type) AS BIGINT)
+    AS rank_raw,
+  CAST(ROW_NUMBER() OVER (ORDER BY decayed DESC, event_type) AS BIGINT)
+    AS rank_decayed,
+  (ROW_NUMBER() OVER (ORDER BY n_events DESC, event_type)
+   <> ROW_NUMBER() OVER (ORDER BY decayed DESC, event_type)) AS rank_changed
+FROM agg
+"""
+
+
+@register("q180_decayed_popularity", oracle=_Q180_ORACLE)
+def q180_decayed_popularity(spark, sf_dir):
+    ev = load(spark, sf_dir, "events").select(
+        "event_type", F.unix_micros(F.col("ts").cast("timestamp")).alias("t_us")
+    )
+    t0 = ev.agg(F.max("t_us").alias("tmax"))
+    e = F.least(
+        F.expr(f"(tmax - t_us) div {_Q180_STEP_US}"), F.lit(_Q180_MAX_E)
+    )
+    wgt = None
+    for k, lit in _Q180_WEIGHTS.items():
+        arm = F.lit(lit).cast("decimal(20,18)")
+        wgt = F.when(e == k, arm) if wgt is None else wgt.when(e == k, arm)
+    wgt = wgt.otherwise(F.lit("0").cast("decimal(20,18)"))
+    agg = (
+        ev.crossJoin(F.broadcast(t0))
+        .select("event_type", wgt.alias("wgt"))
+        .groupBy("event_type")
+        .agg(
+            F.count("*").cast("long").alias("n_events"),
+            F.sum("wgt").cast("decimal(38,18)").alias("decayed"),
+        )
+    )
+    wraw = Window.orderBy(F.desc("n_events"), F.asc("event_type"))
+    wdec = Window.orderBy(F.desc("decayed"), F.asc("event_type"))
+    return agg.select(
+        "event_type",
+        "n_events",
+        # ROUND in decimal before the double cast: a scale-18 sum's
+        # scaled integer passes 2^53, where DuckDB's decimal->double
+        # double-rounds (the documented scale-8 bug class)
+        F.round(F.col("decayed"), 6).cast("double").alias("decayed_mass"),
+        F.row_number().over(wraw).cast("long").alias("rank_raw"),
+        F.row_number().over(wdec).cast("long").alias("rank_decayed"),
+        (
+            F.row_number().over(wraw) != F.row_number().over(wdec)
+        ).alias("rank_changed"),
     )

@@ -1144,3 +1144,241 @@ def q156_ndcg_eval(spark, sf_dir):
         .cast("long")
         .alias("n_rel"),
     )
+
+
+def _q92_oracle() -> str:
+
+    return f"""
+WITH retrieved AS (
+  {_Q58_ORACLE}
+),
+ranked AS (
+  SELECT vec_id, rerank_score,
+         CAST(ROW_NUMBER() OVER (ORDER BY rerank_score DESC, vec_id ASC) AS INT)
+           AS cite_index
+  FROM retrieved
+)
+SELECT r.cite_index,
+       'doc_' || CAST(r.vec_id AS VARCHAR) || '.pdf' AS filename,
+       CAST(r.vec_id % 40 + 1 AS INT) AS page_number,
+       d.source AS content_type,
+       r.rerank_score AS similarity_score,
+       ROUND(LEAST(d.n_chars / 1000.0, 1.0), 6) AS confidence_score,
+       'Source ' || CAST(r.cite_index AS VARCHAR)
+         || ' (doc_' || CAST(r.vec_id AS VARCHAR) || '.pdf, Page '
+         || CAST(r.vec_id % 40 + 1 AS VARCHAR) || ', ' || d.source || ')'
+         AS citation
+FROM ranked r JOIN documents d ON d.doc_id = r.vec_id
+"""
+
+
+@register("q92_citation_assembly", oracle=_q92_oracle())
+def q92_citation_assembly(spark, sf_dir):
+
+    retrieved = q58_retrieval_pipeline(spark, sf_dir)
+    w = Window.orderBy(F.desc("rerank_score"), F.asc("vec_id"))
+    ranked = retrieved.select(
+        "vec_id", "rerank_score", F.row_number().over(w).cast("int").alias("cite_index")
+    )
+    docs = load(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
+    page = (F.col("vec_id") % 40 + 1).cast("int")
+    filename = F.concat(F.lit("doc_"), F.col("vec_id").cast("string"), F.lit(".pdf"))
+    return docs.join(
+        F.broadcast(ranked), docs["doc_id"] == ranked["vec_id"]
+    ).select(
+        "cite_index",
+        filename.alias("filename"),
+        page.alias("page_number"),
+        F.col("source").alias("content_type"),
+        F.col("rerank_score").alias("similarity_score"),
+        F.round(F.least(F.col("n_chars") / 1000.0, F.lit(1.0)), 6).alias(
+            "confidence_score"
+        ),
+        F.concat(
+            F.lit("Source "), F.col("cite_index").cast("string"),
+            F.lit(" ("), filename, F.lit(", Page "), page.cast("string"),
+            F.lit(", "), F.col("source"), F.lit(")"),
+        ).alias("citation"),
+    )
+
+
+# --------------------------------------------------------------------------
+# q93: QUERY EXPANSION — the deterministic analog of the reference's
+# LLM query expansion (generate_query_expansion,
+# reference src/rag/ollama_client.py:323-348): the LLM's "2-3
+# alternative phrasings" become the top-2 corpus-co-occurring tokens per
+# query term (presence-based document co-occurrence, df_ab desc with
+# token tie-break), each appended to the original query; the original
+# query rides along as variant 0 exactly like the reference's
+# [original] + expansions. The q74/F8 porting pattern: deterministic
+# heuristic in, LLM serving out.
+# Scale shape: the query-term table is tiny -> broadcast into the
+# token-presence table; the only shuffles are the (term, tok)
+# co-occurrence agg and the per-term top-k window — both key-partitioned.
+_Q93_QUERY = "table join window filter merge"
+
+
+_Q93_TOPK = 2
+
+
+_Q93_ORACLE = f"""
+WITH dt AS (
+  SELECT DISTINCT doc_id, t AS tok FROM (
+    SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents
+  ) WHERE t != ''
+),
+qt AS (SELECT unnest(string_split('{_Q93_QUERY}', ' ')) AS term),
+hits AS (
+  SELECT q.term, d.doc_id FROM qt q JOIN dt d ON d.tok = q.term
+),
+co AS (
+  SELECT h.term, d.tok, CAST(COUNT(*) AS BIGINT) AS df_ab
+  FROM hits h JOIN dt d ON d.doc_id = h.doc_id
+  WHERE d.tok <> h.term AND d.tok NOT IN (SELECT term FROM qt)
+  GROUP BY h.term, d.tok
+),
+ranked AS (
+  SELECT term, tok, df_ab,
+         ROW_NUMBER() OVER (PARTITION BY term ORDER BY df_ab DESC, tok ASC) AS rk
+  FROM co
+)
+SELECT CAST(0 AS INT) AS variant_rank, '' AS base_term, '' AS added_token,
+       CAST(0 AS BIGINT) AS df_ab, '{_Q93_QUERY}' AS expanded_query
+UNION ALL
+SELECT CAST(rk AS INT) AS variant_rank, term AS base_term, tok AS added_token,
+       df_ab, '{_Q93_QUERY} ' || tok AS expanded_query
+FROM ranked WHERE rk <= {_Q93_TOPK}
+"""
+
+
+@register("q93_query_expansion", oracle=_Q93_ORACLE)
+def q93_query_expansion(spark, sf_dir):
+    from sparkextract.queries.base import checkpoint_memo
+
+    # the token-presence table feeds BOTH the term-hit join and the
+    # co-occurrence join (sibling subtrees — AQE shares no exchange
+    # across them), so it is materialized once per session+input; at
+    # real scale this is the inverted-index build a retrieval system
+    # persists anyway
+    dt = checkpoint_memo(
+        spark,
+        sf_dir,
+        "q93_dt",
+        lambda: load(spark, sf_dir, "documents")
+        .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+        .filter(F.col("tok") != "")
+        .distinct(),
+    )
+    terms = _Q93_QUERY.split(" ")
+    qt = F.broadcast(
+        dt.sparkSession.createDataFrame([(t,) for t in terms], "term string")
+    )
+    hits = qt.join(dt.withColumnRenamed("tok", "term"), "term").select(
+        "term", "doc_id"
+    )
+    co = (
+        hits.join(dt, "doc_id")
+        .filter(F.col("tok") != F.col("term"))
+        .filter(~F.col("tok").isin(terms))
+        .groupBy("term", "tok")
+        .agg(F.count("*").alias("df_ab"))
+    )
+    w = Window.partitionBy("term").orderBy(F.desc("df_ab"), F.asc("tok"))
+    ranked = (
+        co.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= _Q93_TOPK)
+        .select(
+            F.col("rk").cast("int").alias("variant_rank"),
+            F.col("term").alias("base_term"),
+            F.col("tok").alias("added_token"),
+            "df_ab",
+            F.concat(F.lit(_Q93_QUERY + " "), F.col("tok")).alias("expanded_query"),
+        )
+    )
+    original = dt.sparkSession.createDataFrame(
+        [(0, "", "", 0, _Q93_QUERY)],
+        "variant_rank int, base_term string, added_token string, "
+        "df_ab long, expanded_query string",
+    )
+    return original.unionByName(ranked)
+
+
+# --------------------------------------------------------------------------
+# q123: HARD-NEGATIVE MINING (DPR-style) — for each query vector
+# (vec_id % 50 == 0), the top-5 most-similar vectors whose label
+# DIFFERS from the query's: the contrastive-training pairs an
+# embedding-model pipeline mines after dedup. Exact-cosine baseline;
+# the 100 TB path swaps the scored cross join for the IVF candidate
+# join (q46) or the LSH bucket join (q34) — same ranking tail.
+# Ordering uses the ROUNDED cosine (6 dp) + vec_id so ranks are
+# engine-stable; the query set is a broadcast (n/50 rows), scoring is
+# map-side over the embedding scan, and the per-query top-k is one
+# window over the query key.
+_Q123_K = 5
+
+
+_Q123_STRIDE = 50
+
+
+_Q123_DIM = 64
+
+
+_Q123_ORACLE = f"""
+WITH q AS (
+  SELECT vec_id AS query_id, label AS qlabel, embedding AS qv
+  FROM embeddings WHERE vec_id % {_Q123_STRIDE} = 0
+),
+scored AS (
+  SELECT q.query_id, e.vec_id AS neg_id, e.label AS neg_label,
+         ROUND(
+           list_sum(list_transform(range(1, {_Q123_DIM + 1}),
+             i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))
+           / ( sqrt(list_sum(list_transform(range(1, {_Q123_DIM + 1}),
+                 i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))))
+             * sqrt(list_sum(list_transform(range(1, {_Q123_DIM + 1}),
+                 i -> CAST(q.qv[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))) ),
+           6) AS cosine
+  FROM embeddings e JOIN q ON e.label <> q.qlabel
+)
+SELECT query_id, neg_id, neg_label, cosine, CAST(rnk AS BIGINT) AS rnk
+FROM (
+  SELECT *, ROW_NUMBER() OVER (
+    PARTITION BY query_id ORDER BY cosine DESC, neg_id ASC) AS rnk
+  FROM scored
+)
+WHERE rnk <= {_Q123_K}
+ORDER BY query_id, rnk
+"""
+
+
+@register("q123_hard_negatives", oracle=_Q123_ORACLE)
+def q123_hard_negatives(spark, sf_dir):
+    from pyspark.sql import Window
+
+    from sparkextract.queries.ann import _dot, _norm
+
+    emb = load(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") % _Q123_STRIDE == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("qlabel"),
+        F.col("embedding").alias("qv"),
+    )
+    scored = (
+        emb.join(F.broadcast(q), F.col("label") != F.col("qlabel"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neg_id"),
+            F.col("label").alias("neg_label"),
+            F.round(
+                _dot(F.col("embedding"), F.col("qv"))
+                / (_norm(F.col("embedding")) * _norm(F.col("qv"))),
+                6,
+            ).alias("cosine"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neg_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= _Q123_K)
+        .orderBy("query_id", "rnk")
+    )

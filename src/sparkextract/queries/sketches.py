@@ -62,6 +62,28 @@ mergeable distinct, broadcastable; the probe is a broadcast LEFT SEMI
 shape (left join + flag) on (bucket, fp); the exact audit join is the
 same broadcast-kh join as q91/q104. The corpus shuffles only for the
 final per-doc rollup.
+
+q174 — AMS F2 SKETCH / SELF-JOIN SIZE ESTIMATE (Alon, Matias &
+Szegedy 1996). F2 = sum over keys of count^2 IS the output size of a
+key-equi self-join — the number a dedup/join planner needs BEFORE
+paying for the join. Nine independent estimators: Z_j = sum over rows
+of s_j(key) with md5-derived +-1 signs, est = median of Z_j^2 — all
+exact BIGINT arithmetic, and each Z_j is a map-side-combinable SUM
+(the whole sketch is one pass, mergeable across partitions). The exact
+F2 from the key groupBy rides along as evidence; at 100 TB you run
+only the sketch. Planted clone classes (x2 and x3 multiplicity) make
+F2 genuinely exceed the row count.
+
+q175 — AGMS TWO-TABLE JOIN-SIZE ESTIMATE (Alon, Gibbons, Matias &
+Szegedy 1999). The companion of q174's self-join F2: the output size
+of orders ⋈ lineitem on orderkey is sum_k c_O(k) * c_L(k), and the
+AGMS cross-sketch estimates it as median_j(Z_O,j * Z_L,j) with the
+SAME md5-derived ±1 sign stream applied to both sides — each Z is one
+map-side-combinable SUM over its own table, so the estimate costs two
+independent single passes and a 9-number multiply, while the exact
+number (the evidence column) costs the real key groupBy+join. This is
+the sketch a distributed planner consults before choosing
+broadcast-vs-shuffle. All arithmetic exact BIGINT.
 """
 
 from __future__ import annotations
@@ -885,4 +907,193 @@ def q198_cuckoo_filter_probe(spark, sf_dir):
         F.sum(F.when(F.col("cuckoo_hit") & ~F.col("exact_hit"), 1).otherwise(0))
         .cast("long")
         .alias("n_false_pos"),
+    )
+
+
+# --------------------------------------------------------------------------
+_Q174_NEST = 9  # odd estimator count -> integer median
+
+
+_Q174_HEADLEN = 128
+
+
+_Q174_CORPUS = f"""
+  SELECT doc_id, md5(SUBSTRING(text, 1, {_Q174_HEADLEN})) AS kh FROM documents
+  UNION ALL
+  SELECT doc_id + 2000000, md5(SUBSTRING(text, 1, {_Q174_HEADLEN}))
+  FROM documents WHERE doc_id % 7 = 0
+  UNION ALL
+  SELECT doc_id + 4000000, md5(SUBSTRING(text, 1, {_Q174_HEADLEN}))
+  FROM documents WHERE doc_id % 21 = 0
+"""
+
+
+def _q174_oracle() -> str:
+    terms = []
+    for j in range(_Q174_NEST):
+        bucket = md5_bucket_sql("'j" + str(j) + "|' || kh", 2)
+        terms.append(
+            f"CAST(SUM(CASE WHEN {bucket} = 0"
+            f" THEN 1 ELSE -1 END) AS BIGINT) AS z{j}"
+        )
+    zs = ", ".join(terms)
+    sq = ", ".join(f"z{j} * z{j}" for j in range(_Q174_NEST))
+    return f"""
+WITH corpus AS (
+  {_Q174_CORPUS}
+),
+sketch AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, {zs} FROM corpus
+),
+exact AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
+         CAST(SUM(c * c) AS BIGINT) AS exact_f2
+  FROM (SELECT kh, COUNT(*) AS c FROM corpus GROUP BY kh)
+),
+est AS (
+  SELECT n_rows, list_sort([{sq}])[{_Q174_NEST // 2 + 1}] AS est_f2
+  FROM sketch
+)
+SELECT e.n_rows, x.n_keys, x.exact_f2, e.est_f2,
+       (1000000 * e.est_f2) // x.exact_f2 AS ratio_u
+FROM est e, exact x
+"""
+
+
+@register("q174_ams_f2_join_size", oracle=_q174_oracle())
+def q174_ams_f2_join_size(spark, sf_dir):
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    kh = F.md5(F.substring("text", 1, _Q174_HEADLEN)).alias("kh")
+    corpus = (
+        docs.select("doc_id", kh)
+        .unionByName(
+            docs.filter(F.col("doc_id") % 7 == 0).select(
+                (F.col("doc_id") + 2000000).alias("doc_id"), kh
+            )
+        )
+        .unionByName(
+            docs.filter(F.col("doc_id") % 21 == 0).select(
+                (F.col("doc_id") + 4000000).alias("doc_id"), kh
+            )
+        )
+    )
+    signs = [
+        F.sum(
+            F.when(
+                md5_bucket(F.concat(F.lit(f"j{j}|"), F.col("kh")), 2) == 0, 1
+            ).otherwise(-1)
+        )
+        .cast("long")
+        .alias(f"z{j}")
+        for j in range(_Q174_NEST)
+    ]
+    sketch = corpus.agg(F.count("*").cast("long").alias("n_rows"), *signs)
+    est = sketch.select(
+        "n_rows",
+        F.array_sort(
+            F.array(*[F.col(f"z{j}") * F.col(f"z{j}") for j in range(_Q174_NEST)])
+        )
+        .getItem(_Q174_NEST // 2)
+        .alias("est_f2"),
+    )
+    exact = (
+        corpus.groupBy("kh")
+        .agg(F.count("*").alias("c"))
+        .agg(
+            F.count("*").cast("long").alias("n_keys"),
+            F.sum(F.col("c") * F.col("c")).cast("long").alias("exact_f2"),
+        )
+    )
+    return est.crossJoin(F.broadcast(exact)).select(
+        "n_rows",
+        "n_keys",
+        "exact_f2",
+        "est_f2",
+        F.expr("(1000000 * est_f2) div exact_f2").alias("ratio_u"),
+    )
+
+
+# --------------------------------------------------------------------------
+_Q175_NEST = 9
+
+
+def _q175_oracle() -> str:
+    zo, zl = [], []
+    for j in range(_Q175_NEST):
+        bucket = md5_bucket_sql("'j" + str(j) + "|' || CAST(k AS VARCHAR)", 2)
+        sign = f"CASE WHEN {bucket} = 0 THEN 1 ELSE -1 END"
+        zo.append(f"CAST(SUM({sign}) AS BIGINT) AS z{j}")
+        zl.append(f"CAST(SUM({sign}) AS BIGINT) AS z{j}")
+    prods = ", ".join(f"o.z{j} * l.z{j}" for j in range(_Q175_NEST))
+    return f"""
+WITH so AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_orders, {", ".join(zo)}
+  FROM (SELECT o_orderkey AS k FROM orders)
+),
+sl AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_lineitem, {", ".join(zl)}
+  FROM (SELECT l_orderkey AS k FROM lineitem)
+),
+exact AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS exact_join_size
+  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+),
+est AS (
+  SELECT n_orders, n_lineitem,
+         list_sort([{prods}])[{_Q175_NEST // 2 + 1}] AS est_join_size
+  FROM so o, sl l
+)
+SELECT e.n_orders, e.n_lineitem, x.exact_join_size, e.est_join_size,
+       (1000000 * e.est_join_size) // x.exact_join_size AS ratio_u
+FROM est e, exact x
+"""
+
+
+@register("q175_agms_join_size", oracle=_q175_oracle())
+def q175_agms_join_size(spark, sf_dir):
+    def sketch(df, key, cnt_name):
+        signs = [
+            F.sum(
+                F.when(
+                    md5_bucket(
+                        F.concat(F.lit(f"j{j}|"), F.col(key).cast("string")), 2
+                    )
+                    == 0,
+                    1,
+                ).otherwise(-1)
+            )
+            .cast("long")
+            .alias(f"z{j}")
+            for j in range(_Q175_NEST)
+        ]
+        return df.agg(F.count("*").cast("long").alias(cnt_name), *signs)
+
+    orders = load(spark, sf_dir, "orders").select("o_orderkey")
+    lineitem = load(spark, sf_dir, "lineitem").select("l_orderkey")
+    so = sketch(orders, "o_orderkey", "n_orders")
+    sl = sketch(lineitem, "l_orderkey", "n_lineitem").select(
+        "n_lineitem", *[F.col(f"z{j}").alias(f"y{j}") for j in range(_Q175_NEST)]
+    )
+    exact = (
+        orders.join(
+            lineitem, orders["o_orderkey"] == lineitem["l_orderkey"]
+        ).agg(F.count("*").cast("long").alias("exact_join_size"))
+    )
+    est = so.crossJoin(F.broadcast(sl)).select(
+        "n_orders",
+        "n_lineitem",
+        F.array_sort(
+            F.array(
+                *[F.col(f"z{j}") * F.col(f"y{j}") for j in range(_Q175_NEST)]
+            )
+        )
+        .getItem(_Q175_NEST // 2)
+        .alias("est_join_size"),
+    )
+    return est.crossJoin(F.broadcast(exact)).select(
+        "n_orders",
+        "n_lineitem",
+        "exact_join_size",
+        "est_join_size",
+        F.expr("(1000000 * est_join_size) div exact_join_size").alias("ratio_u"),
     )

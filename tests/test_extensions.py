@@ -2,7 +2,6 @@
 incremental ingest, confidence metrics."""
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -287,50 +286,38 @@ def test_driver_view_fits_cap_and_covers_registry():
             assert set(mapping) <= colnames, (pname, fine)
 
 
-def _write_docs(spark, rows, path):
-    spark.createDataFrame(rows, "doc_id long, text string, n_chars long").coalesce(
-        1
-    ).write.mode("overwrite").parquet(os.path.join(path, "documents.parquet"))
+# ------------------------------------------------------- q75 edge parity
+def test_q75_zero_word_doc_matches_duckdb(spark, tmp_path):
+    """A whitespace-only document divides by zero words: Spark doubles
+    yield NaN while DuckDB yields NULL — q75 guards the division so both
+    engines emit NULL metrics and keep=False/'too_short'."""
+    import duckdb
 
+    from sparkextract.queries.registry import ORACLE_SQL, SPARK_QUERIES
 
-def test_checkpoint_memo_invalidates_on_rewrite(spark, tmp_path):
-    """Rewriting the parquet under the same dir in one session must MISS
-    the memo (input_token keys on file size/mtime), not serve stale
-    checkpointed data."""
-    from sparkextract.queries.base import checkpoint_memo, load
-
-    root = str(tmp_path / "memo")
-    _write_docs(spark, [(1, "alpha", 0)], root)
-    build = lambda: load(spark, root, "documents").select("doc_id", "text")
-    first = checkpoint_memo(spark, root, "t", build).collect()
-    assert [r["text"] for r in first] == ["alpha"]
-    shutil.rmtree(os.path.join(root, "documents.parquet"))
-    _write_docs(spark, [(1, "beta", 0)], root)
-    second = checkpoint_memo(spark, root, "t", build).collect()
-    assert [r["text"] for r in second] == ["beta"]
-
-
-def test_ocr_media_deterministic(spark):
-    """ocr_media: cleaned pseudo-OCR text derived from the payload hash —
-    equal payloads give equal text, artifacts collapsed, fixed length."""
-    import hashlib
-
-    from sparkextract.core.normalize import collapse_ws
-    from sparkextract.core.ocr import OCR_TEXT_LEN, pseudo_ocr_raw
-    from sparkextract.spark.multimodal import MEDIA_SCHEMA, ocr_media
-
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
     rows = [
-        ("m1", "d1", "image", b"same-bytes", 4, 4),
-        ("m2", "d2", "audio", b"same-bytes", 4, 4),
-        ("m3", "d3", "video", b"other", 4, 4),
-        ("m4", "d4", "pdf", None, 4, 4),
+        (0, "   \t  \n ", "en", "web", 8),
+        (1, "plenty " * 60 + "of distinct words here " * 10, "en", "web", 700),
     ]
-    media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-    got = {r["media_id"]: r for r in ocr_media(media).collect()}
-    assert got["m1"]["ocr_text"] == got["m2"]["ocr_text"]
-    assert got["m1"]["ocr_text"] != got["m3"]["ocr_text"]
-    for r in got.values():
-        assert r["n_ocr_chars"] == OCR_TEXT_LEN
-        assert "  " not in r["ocr_text"] and "\t" not in r["ocr_text"]
-    expect = collapse_ws(pseudo_ocr_raw(hashlib.md5(b"same-bytes").hexdigest()))
-    assert got["m1"]["ocr_text"] == expect
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).coalesce(1).write.parquet(os.path.join(sf, "documents.parquet"))
+
+    sdf = SPARK_QUERIES["q75_quality_rules"](spark, sf).orderBy("doc_id")
+    s_rows = [tuple(r) for r in sdf.collect()]
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{os.path.join(sf, 'documents.parquet')}/*.parquet')"
+    )
+    d_rows = con.execute(
+        ORACLE_SQL["q75_quality_rules"] + " ORDER BY doc_id"
+    ).fetchall()
+
+    assert s_rows == d_rows
+    zero = s_rows[0]
+    assert zero[3] is None and zero[4] is None  # diversity, mean_word_len
+    assert zero[5] == "too_short" and zero[6] is False

@@ -25,7 +25,7 @@ def spark():
 def test_kgram_hashes_short_doc_and_overlap(spark):
     """Docs shorter than k yield no k-grams; identical texts yield the
     identical distinct k-gram key set."""
-    from sparkextract.queries.round4 import _Q91_K, _kgram_hashes
+    from sparkextract.queries.sketches import _Q91_K, _kgram_hashes
 
     long_text = " ".join(f"w{i % 7}" for i in range(_Q91_K + 5))
     rows = [
@@ -90,7 +90,7 @@ def test_q93_expansion_shape(spark):
     """Variant 0 is the original query; every expansion appends exactly
     one non-query token and carries positive co-occurrence support."""
     from sparkextract.queries.registry import SPARK_QUERIES
-    from sparkextract.queries.round4 import _Q93_QUERY, _Q93_TOPK
+    from sparkextract.queries.retrieval import _Q93_QUERY, _Q93_TOPK
 
     rows = SPARK_QUERIES["q93_query_expansion"](spark, SF_DIR).collect()
     originals = [r for r in rows if r["variant_rank"] == 0]
@@ -110,7 +110,7 @@ def test_q94_stage_semantics(spark):
     """Injected near-dups lose to their originals; quality drops carry no
     survivor; every kept doc is its own survivor."""
     from sparkextract.queries.registry import SPARK_QUERIES
-    from sparkextract.queries.round4 import _Q94_MIN_TOKENS
+    from sparkextract.queries.quality import _Q94_MIN_TOKENS
 
     out = SPARK_QUERIES["q94_corpus_clean_pipeline"](spark, SF_DIR).cache()
     # quality gate: stage agrees with the token count, survivor NULL
@@ -146,7 +146,7 @@ def test_q95_crash_resume_split(spark):
     """All buckets end 'done'; buckets below the crash point committed in
     run 1, the rest in the resume run; doc counts cover the corpus."""
     from sparkextract.queries.registry import SPARK_QUERIES
-    from sparkextract.queries.round4 import _Q95_BUCKETS, _Q95_FAIL_AFTER
+    from sparkextract.queries.incremental import _Q95_BUCKETS, _Q95_FAIL_AFTER
 
     rows = SPARK_QUERIES["q95_manifest_resume_state"](spark, SF_DIR).collect()
     assert len(rows) == _Q95_BUCKETS
@@ -165,7 +165,7 @@ def test_q95_root_reaps_only_day_old_siblings(tmp_path, monkeypatch):
     import tempfile
     import types
 
-    from sparkextract.queries.round4 import _Q95_REAP_AGE_S, _q95_root
+    from sparkextract.queries.incremental import _Q95_REAP_AGE_S, _q95_root
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     fresh = tmp_path / "sparkextract_q95_fresh"
@@ -205,7 +205,7 @@ def test_q96_oracle_tiny(spark):
     original keeps all."""
     import duckdb
 
-    from sparkextract.queries.round4 import _Q96_ORACLE
+    from sparkextract.queries.dedup import _Q96_ORACLE
 
     t = " ".join(f"tok{i}" for i in range(20))
     rows = [(1, t), (2, t), (3, "short unique words only here")]
@@ -243,7 +243,7 @@ def test_q98_blocklist_applied(spark):
     import hashlib
 
     from sparkextract.queries.registry import SPARK_QUERIES
-    from sparkextract.queries.round4 import _Q98_BLOCK_BUCKETS, _Q98_DOMAINS
+    from sparkextract.queries.relational import _Q98_BLOCK_BUCKETS, _Q98_DOMAINS
 
     rows = SPARK_QUERIES["q98_domain_rollup"](spark, SF_DIR).collect()
     assert rows
@@ -266,16 +266,15 @@ def test_q98_blocklist_applied(spark):
 def test_q99_verbatim_pair_fully_duplicated(spark):
     """Two identical long docs are 100% duplicated windows; a unique-vocab
     doc has zero."""
-    from sparkextract.queries.round4 import _Q99_K, q99_exact_substring_dedup
-    import sparkextract.queries.round4 as r4
-    from sparkextract.queries.base import load as _load
+    from sparkextract.queries.dedup import _Q99_K
+    from sparkextract.queries.sketches import _kgram_hashes
 
     t = " ".join(f"w{i}" for i in range(_Q99_K + 10))
     u = " ".join(f"zq{i}" for i in range(_Q99_K + 5))
     df = spark.createDataFrame(
         [(1, t), (2, t), (3, u)], "doc_id long, text string"
     )
-    wk = r4._kgram_hashes(df, _Q99_K)
+    wk = _kgram_hashes(df, _Q99_K)
     cnt = wk.groupBy("kh").count()
     j = wk.join(cnt, "kh").groupBy("doc_id").agg(
         F.sum(F.when(F.col("count") >= 2, 1).otherwise(0)).alias("dup"),
@@ -291,7 +290,7 @@ def test_q100_packing_invariants(spark):
     """Per shard: start positions tile the stream exactly (sum of tokens ==
     max end), windows are consistent with CTX, ordering is size-desc."""
     from sparkextract.queries.registry import SPARK_QUERIES
-    from sparkextract.queries.round4 import _Q100_CTX
+    from sparkextract.queries.text import _Q100_CTX
 
     out = SPARK_QUERIES["q100_sequence_packing"](spark, SF_DIR).collect()
     assert out
@@ -338,7 +337,7 @@ def test_q102_quantization_fidelity(spark):
     """Quantized cosine tracks exact cosine within the int8 error budget,
     and a constant vector dequantizes to itself."""
     from sparkextract.queries.registry import SPARK_QUERIES
-    from sparkextract.queries.round4 import _q102_deq_col
+    from sparkextract.queries.ann import _q102_deq_col
 
     rows = SPARK_QUERIES["q102_int8_quantization"](spark, SF_DIR).collect()
     assert len(rows) == 10
@@ -355,12 +354,11 @@ def test_q102_quantization_fidelity(spark):
 def test_q103_statuses(spark):
     """Bucket 0 docs are added, bucket 1 changed, the rest unchanged;
     needs_extraction covers exactly added+changed."""
-    from sparkextract.queries.registry import SPARK_QUERIES
     from sparkextract.queries.base import md5_bucket
-    from sparkextract.queries.round4 import _Q103_BUCKETS
+    from sparkextract.queries.incremental import _SNAPSHOT_BUCKETS, snapshot_diff
 
-    out = SPARK_QUERIES["q103_snapshot_diff"](spark, SF_DIR)
-    b = md5_bucket(F.col("doc_id"), _Q103_BUCKETS)
+    out = snapshot_diff(spark, SF_DIR)
+    b = md5_bucket(F.col("doc_id"), _SNAPSHOT_BUCKETS)
     expect = (
         F.when(b == 0, F.lit("added"))
         .when(b == 1, F.lit("changed"))
@@ -419,12 +417,12 @@ def test_q106_only_changed_docs_extracted(spark):
     counts obey the passthrough property."""
     from sparkextract.queries.registry import SPARK_QUERIES
     from sparkextract.queries.base import md5_bucket
-    from sparkextract.queries.round4 import _Q103_BUCKETS
+    from sparkextract.queries.incremental import _SNAPSHOT_BUCKETS
 
     out = SPARK_QUERIES["q106_incremental_extraction"](spark, SF_DIR)
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     joined = out.join(docs.select("doc_id", "n_chars"), "doc_id").withColumn(
-        "b", md5_bucket(F.col("doc_id"), _Q103_BUCKETS)
+        "b", md5_bucket(F.col("doc_id"), _SNAPSHOT_BUCKETS)
     ).cache()
     assert joined.filter("b NOT IN (0, 1)").count() == 0
     assert joined.filter("(b = 0) != (status = 'added')").count() == 0

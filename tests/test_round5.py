@@ -32,7 +32,7 @@ def test_q96_hot_block_corpus(spark, tmp_path):
     map-side-combinable first-occurrence agg must keep exactly one copy
     (lowest doc_id, lowest block_idx) and every other doc reports it as
     a duplicate block."""
-    from sparkextract.queries.round4 import _Q96_BLOCK, q96_block_dedup
+    from sparkextract.queries.dedup import _Q96_BLOCK, q96_block_dedup
 
     hot = " ".join(["hot"] * _Q96_BLOCK)
     rows = []
@@ -57,7 +57,7 @@ def test_q99_hot_window_corpus(spark, tmp_path):
     melts a content-hash window at scale): each doc's shared windows are
     dup, its unique tail windows are not, and a doc that is pure
     boilerplate is flagged."""
-    from sparkextract.queries.round4 import _Q99_K, q99_exact_substring_dedup
+    from sparkextract.queries.dedup import _Q99_K, q99_exact_substring_dedup
 
     boiler = " ".join(f"b{i}" for i in range(_Q99_K))
     rows = [(0, boiler, 0)]  # pure boilerplate: dup_frac 1.0 -> flagged
@@ -98,7 +98,7 @@ def test_checkpoint_memo_invalidates_on_rewrite(spark, tmp_path):
 def test_components_memo_invalidates_on_rewrite(spark, tmp_path):
     """_dup_components must recompute after the embeddings table under the
     same sf_dir is rewritten in-session (round-3 ADVICE staleness item)."""
-    from sparkextract.queries.round3 import _dup_components
+    from sparkextract.queries.graph import _dup_components
 
     root = str(tmp_path / "comp")
 
@@ -128,7 +128,7 @@ def test_components_memo_invalidates_on_rewrite(spark, tmp_path):
 def test_label_propagation_long_chain(spark):
     """A 25-node path graph (diameter 24) must converge to one component
     within the iteration bound — the pathological-chain guard."""
-    from sparkextract.queries.round3 import label_propagation
+    from sparkextract.queries.graph import label_propagation
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(24)], "left_id long, right_id long"
@@ -142,7 +142,7 @@ def test_label_propagation_long_chain(spark):
 def test_label_propagation_bound_raises(spark):
     """A chain longer than the 30-iteration bound can cover must fail
     loudly, never silently return partial labels."""
-    from sparkextract.queries.round3 import label_propagation
+    from sparkextract.queries.graph import label_propagation
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(80)], "left_id long, right_id long"
@@ -203,8 +203,8 @@ def test_q110_semantic_dedup_ledger(spark):
     exactly one cell, the per-cell arithmetic holds, and the injected
     +0.25-on-dim-1 twins (same construction as q53) are caught as
     within-cluster semantic duplicates."""
-    from sparkextract.queries.dedup2 import _banded_corpus
-    from sparkextract.queries.round5 import q110_semantic_dedup
+    from sparkextract.queries.dedup import _banded_corpus
+    from sparkextract.queries.dedup import q110_semantic_dedup
 
     rows = q110_semantic_dedup(spark, SF_DIR).collect()
     corpus_n = _banded_corpus(spark, SF_DIR).count()
@@ -224,7 +224,7 @@ def test_q111_pq_adc_invariants(spark):
     minimum possible for its code word), every ADC distance is a sum of
     codebook-table entries (non-negative), and recall@20 is sane
     (> 0: at least the query itself is a hit)."""
-    from sparkextract.queries.round5 import _Q111_TOPK, q111_pq_adc_topk
+    from sparkextract.queries.ann import _Q111_TOPK, q111_pq_adc_topk
 
     rows = q111_pq_adc_topk(spark, SF_DIR).collect()
     assert len(rows) == _Q111_TOPK
@@ -241,29 +241,10 @@ def test_q111_pq_adc_invariants(spark):
     assert keys == sorted(keys)
 
 
-def test_q112_dsir_favors_target_lang(spark):
-    """DSIR selection invariants: the top-k docs by hashed-bigram
-    log-likelihood ratio against the lang='en' target must be MORE
-    'en'-heavy than the corpus at large (the whole point of importance
-    resampling), weights arrive sorted descending with doc_id
-    tie-break, and n_features matches each doc's bigram count."""
-    from sparkextract.queries.round5 import _Q112_TOPK, q112_dsir_resampling
-
-    rows = q112_dsir_resampling(spark, SF_DIR).collect()
-    assert len(rows) == _Q112_TOPK
-    keys = [(-r["dsir_weight"], r["doc_id"]) for r in rows]
-    assert keys == sorted(keys)
-    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    corpus_en = docs.filter(F.col("lang") == "en").count() / docs.count()
-    top_en = sum(1 for r in rows if r["lang"] == "en") / len(rows)
-    assert top_en > corpus_en
-    assert all(r["n_features"] >= 1 for r in rows)
-
-
 def test_q113_coverage_monotone(spark):
     """Vocabulary coverage is monotone in vocab size, bounded by (0, 1],
     and covered_tokens never exceeds the corpus token total."""
-    from sparkextract.queries.round5 import _Q113_SIZES, q113_vocab_coverage
+    from sparkextract.queries.text import _Q113_SIZES, q113_vocab_coverage
 
     rows = {r["vocab_size"]: r for r in q113_vocab_coverage(spark, SF_DIR).collect()}
     assert set(rows) == set(_Q113_SIZES)
@@ -280,9 +261,9 @@ def test_q114_jsd_invariants(spark):
     p ln(p/m) + q ln(q/m) >= 0 for m = (p+q)/2), the total bounds every
     contribution, and the injected 'stale' prefix token must surface as
     a top drift contributor (it exists only in the old snapshot)."""
-    from sparkextract.queries.round5 import q114_snapshot_token_drift
+    from sparkextract.queries.incremental import snapshot_token_drift
 
-    rows = q114_snapshot_token_drift(spark, SF_DIR).collect()
+    rows = snapshot_token_drift(spark, SF_DIR).collect()
     assert rows
     total = rows[0]["jsd_total"]
     assert total > 0
@@ -299,7 +280,7 @@ def test_q115_zipf_slope_sane(spark):
     """The power-law fit is negative (frequency falls with rank),
     n_points is bounded by the top-N cut, and the intercept recovers a
     positive ln-frequency scale."""
-    from sparkextract.queries.round5 import _Q115_TOPN, q115_zipf_slope
+    from sparkextract.queries.text import _Q115_TOPN, q115_zipf_slope
 
     row = q115_zipf_slope(spark, SF_DIR).collect()[0]
     assert 1 <= row["n_points"] <= _Q115_TOPN
@@ -312,9 +293,9 @@ def test_q116_incremental_ivf_delta_only(spark):
     vector gets exactly one cell from the 8 centroids, every unchanged
     vector keeps a NULL cell, and the delta share matches the md5
     bucket rule (buckets 0 and 1 of 10)."""
-    from sparkextract.queries.round5 import q116_incremental_ivf
+    from sparkextract.queries.incremental import incremental_ivf
 
-    rows = q116_incremental_ivf(spark, SF_DIR).collect()
+    rows = incremental_ivf(spark, SF_DIR).collect()
     n = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet")).count()
     assert len(rows) == n
     for r in rows:
@@ -330,14 +311,14 @@ def test_q116_incremental_ivf_delta_only(spark):
 def test_q117_composition_agrees_with_parts(spark):
     """The corpus-refresh flagship's stage aggregates must equal the
     standalone operators' own aggregates — the composition proof."""
-    from sparkextract.queries.round4 import (
-        q103_snapshot_diff,
+    from sparkextract.queries.incremental import (
         q106_incremental_extraction,
+        snapshot_diff,
     )
-    from sparkextract.queries.round5 import (
-        q114_snapshot_token_drift,
-        q116_incremental_ivf,
+    from sparkextract.queries.incremental import (
+        incremental_ivf,
         q117_corpus_refresh_pipeline,
+        snapshot_token_drift,
     )
 
     rows = {
@@ -346,7 +327,7 @@ def test_q117_composition_agrees_with_parts(spark):
     }
     diff = {
         r["status"]: r["n"]
-        for r in q103_snapshot_diff(spark, SF_DIR).groupBy("status").count()
+        for r in snapshot_diff(spark, SF_DIR).groupBy("status").count()
         .withColumnRenamed("count", "n").collect()
     }
     for status, n in diff.items():
@@ -355,9 +336,9 @@ def test_q117_composition_agrees_with_parts(spark):
         r["span_count"] for r in q106_incremental_extraction(spark, SF_DIR).collect()
     )
     assert rows[("extract", "spans_reextracted")]["n"] == spans
-    jsd = q114_snapshot_token_drift(spark, SF_DIR).collect()[0]["jsd_total"]
+    jsd = snapshot_token_drift(spark, SF_DIR).collect()[0]["jsd_total"]
     assert rows[("drift", "jsd_total")]["metric"] == jsd
-    reassigned = q116_incremental_ivf(spark, SF_DIR).filter("needs_index").count()
+    reassigned = incremental_ivf(spark, SF_DIR).filter("needs_index").count()
     assert rows[("index", "reassigned")]["n"] == reassigned
 
 
@@ -366,7 +347,7 @@ def test_q118_delta_only_dedup(spark):
     on the left, index pairs point at non-delta docs, delta pairs are
     ordered (left < right), and n_bands stays in [1, 4]."""
     from sparkextract.queries.base import md5_bucket
-    from sparkextract.queries.round5 import q118_incremental_dedup
+    from sparkextract.queries.incremental import q118_incremental_dedup
 
     rows = q118_incremental_dedup(spark, SF_DIR).collect()
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))

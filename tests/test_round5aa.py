@@ -36,7 +36,7 @@ def _kgrams(text: str, k: int):
 
 
 def test_q198_matches_python_cuckoo(spark):
-    from sparkextract.queries.round5aa import (
+    from sparkextract.queries.sketches import (
         _Q198_EVAL_BUCKETS,
         _Q198_FPBITS,
         _Q198_K,
@@ -100,7 +100,7 @@ def test_q198_matches_python_cuckoo(spark):
 
 
 def test_q199_matches_python_benford(spark):
-    from sparkextract.queries.round5aa import q199_benford_audit
+    from sparkextract.queries.stats import q199_benford_audit
 
     rows = {r["d"]: r for r in q199_benford_audit(spark, SF_DIR).collect()}
     assert set(rows) == set(range(1, 10))

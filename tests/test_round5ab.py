@@ -1,5 +1,4 @@
-"""q200 (partition advisor) and q201 (compression proxy): pure-Python
-re-derivations at sf0.001."""
+"""q201 (compression proxy): pure-Python re-derivation at sf0.001."""
 
 import os
 from collections import Counter
@@ -22,49 +21,8 @@ def _docs(cols):
     return pq.read_table(os.path.join(SF_DIR, "documents.parquet"), columns=cols).to_pylist()
 
 
-def test_q200_matches_python_advisor(spark):
-    from sparkextract.queries.round5ab import (
-        _Q200_MEGA,
-        _Q200_TARGET,
-        q200_partition_advisor,
-    )
-
-    rows = {r["source"]: r for r in q200_partition_advisor(spark, SF_DIR).collect()}
-    by_src: dict[str, list] = {}
-    for d in _docs(["source", "n_chars"]):
-        by_src.setdefault(d["source"], []).append(d["n_chars"])
-    assert set(rows) == set(by_src)
-    for src, sizes in by_src.items():
-        sizes.sort()
-        n = len(sizes)
-        total = sum(sizes)
-        # exact nearest-rank percentiles: min v with cum >= q*n
-        def pct(q_num, q_den):
-            cum = 0
-            counts = Counter(sizes)
-            for v in sorted(counts):
-                cum += counts[v]
-                if cum * q_den >= n * q_num:
-                    return v
-            return sizes[-1]
-
-        n_mega = sum(1 for s in sizes if s > _Q200_MEGA)
-        r = rows[src]
-        assert (r["n_docs"], r["total_bytes"], r["max_bytes"]) == (n, total, sizes[-1])
-        assert r["p50_bytes"] == pct(1, 2)
-        assert r["p99_bytes"] == pct(99, 100)
-        assert r["n_mega"] == n_mega
-        assert r["rec_partitions"] == (total + _Q200_TARGET - 1) // _Q200_TARGET
-        assert r["needs_salting"] == (n_mega > 0)
-        if n_mega > 0:
-            salt = (sizes[-1] + _Q200_MEGA - 1) // _Q200_MEGA
-            assert r["advisory"] == f"salt:{salt}"
-        else:
-            assert r["advisory"] == "hash"
-
-
 def test_q201_matches_python_proxy(spark):
-    from sparkextract.queries.round5ab import _Q201_N, q201_compression_proxy
+    from sparkextract.queries.quality import _Q201_N, q201_compression_proxy
 
     rows = {r["source"]: r for r in q201_compression_proxy(spark, SF_DIR).collect()}
     inst = Counter()

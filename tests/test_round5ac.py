@@ -25,7 +25,7 @@ def _docs(cols):
 
 
 def test_q202_matches_python_ucb(spark):
-    from sparkextract.queries.round5ac import _Q202_KEEP_MIN, q202_ucb_crawl_scheduler
+    from sparkextract.queries.planning import _Q202_KEEP_MIN, q202_ucb_crawl_scheduler
 
     rows = {r["source"]: r for r in q202_ucb_crawl_scheduler(spark, SF_DIR).collect()}
     n = Counter()
@@ -57,7 +57,7 @@ def test_q202_matches_python_ucb(spark):
 
 
 def test_q203_matches_python_mwu(spark):
-    from sparkextract.queries.round5ac import q203_mann_whitney_u
+    from sparkextract.queries.stats import q203_mann_whitney_u
 
     (r,) = q203_mann_whitney_u(spark, SF_DIR).collect()
     a, b = [], []

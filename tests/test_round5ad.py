@@ -1,5 +1,5 @@
-"""q204 (winsorized/trimmed means) and q205 (median/MAD outliers):
-pure-Python re-derivations at sf0.001."""
+"""q204 (winsorized/trimmed means): pure-Python re-derivation at
+sf0.001."""
 
 import os
 from collections import Counter
@@ -41,7 +41,7 @@ def _nearest_rank(sorted_vals, q_num, q_den):
 
 
 def test_q204_matches_python_winsor(spark):
-    from sparkextract.queries.round5ad import _Q204_HI, _Q204_LO, q204_winsorized_stats
+    from sparkextract.queries.stats import _Q204_HI, _Q204_LO, q204_winsorized_stats
 
     rows = {r["lang"]: r for r in q204_winsorized_stats(spark, SF_DIR).collect()}
     data = _by_lang()
@@ -62,29 +62,3 @@ def test_q204_matches_python_winsor(spark):
         assert r["n_clamped"] == len(xs) - len(kept)
         # robustness ordering sanity: fences shrink the spread
         assert min(xs) <= lo <= hi <= max(xs)
-
-
-def test_q205_matches_python_mad(spark):
-    from sparkextract.queries.round5ad import (
-        _Q205_FENCE_DEN,
-        _Q205_FENCE_NUM,
-        q205_mad_outliers,
-    )
-
-    rows = {r["lang"]: r for r in q205_mad_outliers(spark, SF_DIR).collect()}
-    data = _by_lang()
-    assert set(rows) == set(data)
-    for lang, xs in data.items():
-        xs.sort()
-        med = _nearest_rank(xs, 1, 2)
-        devs = sorted(abs(x - med) for x in xs)
-        mad = _nearest_rank(devs, 1, 2)
-        n_out = sum(
-            1 for x in xs if abs(x - med) * _Q205_FENCE_DEN > _Q205_FENCE_NUM * mad
-        )
-        r = rows[lang]
-        assert (r["med"], r["mad"], r["n_docs"]) == (med, mad, len(xs))
-        assert r["n_outliers"] == n_out
-        assert r["outlier_frac_u"] == (1000000 * n_out) // len(xs)
-        # the MAD fence must be far more selective than a naive 2-sigma
-        assert n_out < len(xs) // 4

@@ -20,7 +20,7 @@ def spark():
 
 
 def test_q206_matches_python_cusum(spark):
-    from sparkextract.queries.round5ae import (
+    from sparkextract.queries.stats import (
         _Q206_BUCKETS,
         _Q206_H_PCT,
         _Q206_K_PCT,

@@ -1,5 +1,4 @@
-"""q207 (Neyman allocation) and q208 (consistent-hash ring):
-pure-Python re-derivations at sf0.001."""
+"""q208 (consistent-hash ring): pure-Python re-derivation at sf0.001."""
 
 import hashlib
 import math
@@ -23,44 +22,8 @@ def _docs(cols):
     return pq.read_table(os.path.join(SF_DIR, "documents.parquet"), columns=cols).to_pylist()
 
 
-def test_q207_matches_python_neyman(spark):
-    from sparkextract.queries.round5af import _Q207_BUDGET, q207_neyman_allocation
-
-    rows = {r["lang"]: r for r in q207_neyman_allocation(spark, SF_DIR).collect()}
-    strata: dict[str, list] = {}
-    for d in _docs(["lang", "n_chars"]):
-        strata.setdefault(d["lang"], []).append(d["n_chars"])
-    assert set(rows) == set(strata)
-    sig = {}
-    for lang, xs in strata.items():
-        n = len(xs)
-        s1, s2 = sum(xs), sum(x * x for x in xs)
-        sig[lang] = round(math.sqrt(n * s2 - s1 * s1) / n * 1000000)
-        assert rows[lang]["n_h"] == n
-        assert rows[lang]["sigma_u"] == sig[lang]
-    w = {lang: len(strata[lang]) * sig[lang] for lang in strata}
-    W = sum(w.values())
-    n_tot = sum(len(v) for v in strata.values())
-    base = {lang: (_Q207_BUDGET * w[lang]) // W for lang in w}
-    rem = {lang: (_Q207_BUDGET * w[lang]) % W for lang in w}
-    extra = _Q207_BUDGET - sum(base.values())
-    order = sorted(w, key=lambda k: (-rem[k], k))
-    quotas = dict(base)
-    for lang in order[:extra]:
-        quotas[lang] += 1
-    assert sum(quotas.values()) == _Q207_BUDGET  # budget exactly exhausted
-    for lang in strata:
-        r = rows[lang]
-        assert r["base_quota"] == base[lang]
-        assert r["neyman_quota"] == quotas[lang]
-        assert r["extra_seat"] == (quotas[lang] > base[lang])
-        prop = (_Q207_BUDGET * len(strata[lang])) // n_tot
-        assert r["prop_quota"] == prop
-        assert r["delta_vs_proportional"] == quotas[lang] - prop
-
-
 def test_q208_matches_python_ring(spark):
-    from sparkextract.queries.round5af import (
+    from sparkextract.queries.planning import (
         _Q208_RING,
         _Q208_S1,
         _Q208_S2,

@@ -18,7 +18,7 @@ def spark():
 
 
 def test_q209_matches_python_sweep(spark):
-    from sparkextract.queries.round5ag import _Q209_THRESHOLDS, q209_df_pruning_advisor
+    from sparkextract.queries.text import _Q209_THRESHOLDS, q209_df_pruning_advisor
 
     rows = {r["min_df"]: r for r in q209_df_pruning_advisor(spark, SF_DIR).collect()}
     assert set(rows) == set(_Q209_THRESHOLDS)

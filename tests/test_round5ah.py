@@ -1,5 +1,4 @@
-"""q210 (fuzzy minhash decontamination) and q211 (dedup ROI curve):
-pure-Python re-derivations at sf0.001."""
+"""q211 (dedup ROI curve): pure-Python re-derivation at sf0.001."""
 
 import hashlib
 import os
@@ -25,101 +24,8 @@ def _docs():
     ).to_pylist()
 
 
-def _tri(w):
-    return [" ".join(w[i : i + 3]) for i in range(len(w) - 2)] if len(w) >= 3 else []
-
-
-def _kg(w, k):
-    return (
-        [" ".join(w[i : i + k]) for i in range(len(w) - k + 1)] if len(w) >= k else []
-    )
-
-
-def test_q210_matches_python_and_catches_paraphrase(spark):
-    from sparkextract.queries.round5ah import (
-        _Q210_BANDS,
-        _Q210_EVAL_BUCKETS,
-        _Q210_EXACT_K,
-        _Q210_MIN_JAC_U,
-        _Q210_PERTURB_EVERY,
-        q210_fuzzy_decontamination,
-    )
-
-    docs = _docs()
-    words = {}
-    ev = {}
-    corpus = {}
-    for d in docs:
-        w = [t for t in d["text"].split(" ") if t]
-        h = int(hashlib.md5(str(d["doc_id"]).encode()).hexdigest()[:8], 16)
-        if h % _Q210_EVAL_BUCKETS == 0:
-            ev[d["doc_id"]] = w
-        else:
-            corpus[d["doc_id"]] = w
-    for doc_id, w in ev.items():
-        corpus[doc_id + 5000000] = [
-            "zz" if (i + 1) % _Q210_PERTURB_EVERY == 0 else t
-            for i, t in enumerate(w)
-        ]
-
-    def sigs(w):
-        tri = _tri(w)
-        if not tri:
-            return None
-        return tuple(
-            min(hashlib.md5(f"f{b}|{s}".encode()).hexdigest() for s in tri)
-            for b in range(_Q210_BANDS)
-        )
-
-    esig = {i: sigs(w) for i, w in ev.items() if sigs(w)}
-    cand = set()
-    for ci, cw in corpus.items():
-        cs = sigs(cw)
-        if not cs:
-            continue
-        for ei, es in esig.items():
-            if any(cs[b] == es[b] for b in range(_Q210_BANDS)):
-                cand.add((ci, ei))
-    expected = {}
-    for ci, ei in cand:
-        ta, tb = set(_tri(corpus[ci])), set(_tri(ev[ei]))
-        jac = (1000000 * len(ta & tb)) // len(ta | tb)
-        if jac >= _Q210_MIN_JAC_U:
-            exact = bool(
-                set(_kg(corpus[ci], _Q210_EXACT_K)) & set(_kg(ev[ei], _Q210_EXACT_K))
-            )
-            expected[(ci, ei)] = (jac, exact)
-    rows = {
-        (r["corpus_id"], r["eval_id"]): r
-        for r in q210_fuzzy_decontamination(spark, SF_DIR).collect()
-    }
-    assert set(rows) == set(expected)
-    for key, (jac, exact) in expected.items():
-        assert rows[key]["jac_u"] == jac
-        assert rows[key]["exact_contaminated"] == exact
-    # the headline property: injected paraphrases are CAUGHT by the
-    # fuzzy tier (banded LSH + a 0.5 Jaccard verify are probabilistic —
-    # a 1-in-10 token edit leaves trigram Jaccard ~0.54, so a marginal
-    # doc can dip under either gate; demand >= 80% recall, not 100%)
-    # while remaining INVISIBLE to the exact 13-gram tier
-    caught_paraphrase = {
-        k for k in rows if k[0] >= 5000000 and k[0] - 5000000 == k[1]
-    }
-    long_evals = {i for i, w in ev.items() if len(w) >= 30}
-    want = {(i + 5000000, i) for i in long_evals}
-    assert len(want & caught_paraphrase) >= 0.8 * len(want)
-    assert caught_paraphrase
-    for k in caught_paraphrase:
-        assert not rows[k]["exact_contaminated"]
-        # sanity on the perturbation itself
-        w = ev[k[1]]
-        assert not (
-            set(_kg(corpus[k[0]], _Q210_EXACT_K)) & set(_kg(w, _Q210_EXACT_K))
-        )
-
-
 def test_q211_matches_python_roi(spark):
-    from sparkextract.queries.round5ah import _Q211_TOPK, q211_dedup_roi_curve
+    from sparkextract.queries.dedup import _Q211_TOPK, q211_dedup_roi_curve
 
     docs = _docs()
     corpus = [(d["doc_id"], d["text"]) for d in docs] + [

@@ -1,5 +1,5 @@
-"""q212 (posting encoding advisor) and q213 (zone-map pruning):
-pure-Python re-derivations at sf0.001."""
+"""q212 (posting encoding advisor): pure-Python re-derivation at
+sf0.001."""
 
 import hashlib
 import os
@@ -23,7 +23,7 @@ def _docs(cols):
 
 
 def test_q212_matches_python_sizes(spark):
-    from sparkextract.queries.round5ai import _Q212_TOPK, q212_posting_encoding_advisor
+    from sparkextract.queries.planning import _Q212_TOPK, q212_posting_encoding_advisor
 
     docs = _docs(["doc_id", "text"])
     postings: dict[str, list] = {}
@@ -67,66 +67,3 @@ def test_q212_matches_python_sizes(spark):
         # where the bitmap must win — EF pays >= 2 bits/element
         if len(lst) > u / 2:
             assert r["best_encoding"] == "bitmap"
-
-
-def test_q213_matches_python_and_zorder_wins(spark):
-    from sparkextract.queries.round5ai import (
-        _Q213_C_HI,
-        _Q213_C_LO,
-        _Q213_K_HI,
-        _Q213_K_LO,
-        _Q213_QBITS,
-        _Q213_ZONES,
-        q213_zone_map_pruning,
-    )
-
-    docs = _docs(["doc_id", "n_chars"])
-    dmin = min(d["doc_id"] for d in docs)
-    dspan = max(d["doc_id"] for d in docs) - dmin + 1
-    cmax = max(d["n_chars"] for d in docs) + 1
-    zones: dict[tuple, list] = {}
-    for d in docs:
-        c = d["n_chars"]
-        k = int(hashlib.md5(str(d["doc_id"]).encode()).hexdigest()[:8], 16) % 1024
-        zl = (_Q213_ZONES * (d["doc_id"] - dmin)) // dspan
-        qa = ((1 << _Q213_QBITS) * c) // cmax
-        qb = k // (1024 // (1 << _Q213_QBITS))
-        morton = 0
-        for i in range(_Q213_QBITS):
-            morton += ((qa >> i) & 1) << (2 * i + 1)
-            morton += ((qb >> i) & 1) << (2 * i)
-        zz = morton // ((1 << (2 * _Q213_QBITS)) // _Q213_ZONES)
-        zones.setdefault(("linear", zl), []).append((c, k))
-        zones.setdefault(("zorder", zz), []).append((c, k))
-    stats = {"linear": [0, 0, 0, 0], "zorder": [0, 0, 0, 0]}
-    for (layout, _), pts in zones.items():
-        cs = [p[0] for p in pts]
-        ks = [p[1] for p in pts]
-        pruned = (
-            max(cs) < _Q213_C_LO
-            or min(cs) > _Q213_C_HI
-            or max(ks) < _Q213_K_LO
-            or min(ks) > _Q213_K_HI
-        )
-        match = sum(
-            1
-            for c, k in pts
-            if _Q213_C_LO <= c <= _Q213_C_HI and _Q213_K_LO <= k <= _Q213_K_HI
-        )
-        s = stats[layout]
-        s[0] += 1
-        s[1] += 1 if pruned else 0
-        s[2] += 0 if pruned else len(pts)
-        s[3] += match
-    rows = {r["layout"]: r for r in q213_zone_map_pruning(spark, SF_DIR).collect()}
-    assert set(rows) == {"linear", "zorder"}
-    for layout, (nz, np_, scanned, matched) in stats.items():
-        r = rows[layout]
-        assert (r["n_zones"], r["n_pruned"]) == (nz, np_)
-        assert (r["rows_scanned"], r["rows_matched"]) == (scanned, matched)
-        if matched:
-            assert r["scan_amp_u"] == (1000000 * scanned) // matched
-    # both layouts see the SAME matches; z-order must scan strictly less
-    assert rows["linear"]["rows_matched"] == rows["zorder"]["rows_matched"]
-    assert rows["zorder"]["rows_scanned"] < rows["linear"]["rows_scanned"]
-    assert rows["zorder"]["n_pruned"] > rows["linear"]["n_pruned"]

@@ -1,5 +1,4 @@
-"""q214 (grid DBSCAN-lite) and q215 (design effect): pure-Python
-re-derivations at sf0.001."""
+"""q215 (design effect): pure-Python re-derivation at sf0.001."""
 
 import math
 import os
@@ -18,56 +17,8 @@ def spark():
     yield s
 
 
-def test_q214_matches_python_grid_dbscan(spark):
-    from sparkextract.queries.round5aj import (
-        _Q214_GRID,
-        _Q214_MINPTS,
-        q214_grid_dbscan,
-    )
-
-    emb = pq.read_table(
-        os.path.join(SF_DIR, "embeddings.parquet"), columns=["embedding"]
-    ).to_pylist()
-    pts = [(float(e["embedding"][0]), float(e["embedding"][1])) for e in emb]
-    x1 = [p[0] for p in pts]
-    x2 = [p[1] for p in pts]
-    b = (min(x1), max(x1), min(x2), max(x2))
-    cells: dict[tuple, int] = {}
-    for e1, e2 in pts:
-        cx = min(int(math.floor(_Q214_GRID * (e1 - b[0]) / (b[1] - b[0] + 1e-9))), _Q214_GRID - 1)
-        cy = min(int(math.floor(_Q214_GRID * (e2 - b[2]) / (b[3] - b[2] + 1e-9))), _Q214_GRID - 1)
-        cells[(cx, cy)] = cells.get((cx, cy), 0) + 1
-    dense = {c for c, n in cells.items() if n >= _Q214_MINPTS}
-    # connected components of dense cells (4-neighborhood), min-id label
-    label = {c: c[0] * _Q214_GRID + c[1] for c in dense}
-    changed = True
-    while changed:
-        changed = False
-        for cx, cy in dense:
-            for nx, ny in ((cx + 1, cy), (cx - 1, cy), (cx, cy + 1), (cx, cy - 1)):
-                if (nx, ny) in dense:
-                    m = min(label[(cx, cy)], label[(nx, ny)])
-                    if label[(cx, cy)] != m or label[(nx, ny)] != m:
-                        label[(cx, cy)] = label[(nx, ny)] = m
-                        changed = True
-    rows = {(r["cx"], r["cy"]): r for r in q214_grid_dbscan(spark, SF_DIR).collect()}
-    assert set(rows) == set(cells)
-    n_clusters = len(set(label.values())) if label else 0
-    for c, n in cells.items():
-        r = rows[c]
-        assert r["n_points"] == n
-        assert r["dense"] == (c in dense)
-        if c in dense:
-            assert r["cluster_id"] == label[c]
-        else:
-            assert r["cluster_id"] == -1
-    # density structure is non-trivial: some dense cells, some noise
-    assert dense and len(dense) < len(cells)
-    assert n_clusters >= 1
-
-
 def test_q215_matches_python_anova(spark):
-    from sparkextract.queries.round5aj import q215_design_effect
+    from sparkextract.queries.stats import q215_design_effect
 
     (r,) = q215_design_effect(spark, SF_DIR).collect()
     docs = pq.read_table(

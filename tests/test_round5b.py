@@ -23,7 +23,7 @@ def test_q119_pagerank_invariants(spark):
     """Every rank ≥ the damping floor (150000 micro-units), the top-20
     is sorted by (rank desc, doc_id asc), and total rank mass never
     exceeds the undamped total n*1e6 (floor division only loses mass)."""
-    from sparkextract.queries.round5b import q119_pagerank
+    from sparkextract.queries.graph import q119_pagerank
 
     rows = q119_pagerank(spark, SF_DIR).collect()
     assert len(rows) == 20
@@ -39,7 +39,7 @@ def test_q119_pagerank_invariants(spark):
 def test_q120_rand_index_bounds(spark):
     """RI ∈ [0,1]; same-pair count in the intersection is bounded by
     each marginal's same-pair count (cells refine both partitions)."""
-    from sparkextract.queries.round5b import q120_cluster_drift
+    from sparkextract.queries.ann import q120_cluster_drift
 
     row = q120_cluster_drift(spark, SF_DIR).collect()[0]
     assert 0.0 <= row.rand_index <= 1.0
@@ -51,7 +51,7 @@ def test_q120_rand_index_bounds(spark):
 def test_q121_rouge_bounds(spark):
     """P, R, F1 ∈ [0,1] and F1 (harmonic mean) sits between min(P, R)
     and max(P, R), within the 6-dp rounding quantum, for every pair."""
-    from sparkextract.queries.round5b import q121_rouge_eval
+    from sparkextract.queries.retrieval import q121_rouge_eval
 
     rows = q121_rouge_eval(spark, SF_DIR).collect()
     assert rows
@@ -77,7 +77,7 @@ def test_q122_bpe_merge_constructed(spark, tmp_path):
     """On a corpus where 'aa bb' is the clear winner: stage 0 ranks it
     first, and after the merge no (aa, bb) adjacency survives anywhere
     while the merged token participates in stage-1 pairs."""
-    from sparkextract.queries.round5b import q122_bpe_merge
+    from sparkextract.queries.text import q122_bpe_merge
 
     root = str(tmp_path)
     rows = [
@@ -105,7 +105,7 @@ def test_q122_bpe_merge_constructed(spark, tmp_path):
 def test_q123_hard_negatives_exclusion(spark):
     """No mined negative shares the query's label; ranks are 1..k dense
     per query and cosines are non-increasing within a query."""
-    from sparkextract.queries.round5b import _Q123_STRIDE, q123_hard_negatives
+    from sparkextract.queries.retrieval import _Q123_STRIDE, q123_hard_negatives
 
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
     qlabels = {
@@ -128,7 +128,7 @@ def test_q124_containment_constructed(spark, tmp_path):
     0's perspective), doc 2 == doc 0 (mutual_dup), doc 3 is unrelated —
     min-shingle candidate generation must surface exactly the related
     pairs and classify the direction correctly."""
-    from sparkextract.queries.round5b import q124_containment_dedup
+    from sparkextract.queries.dedup import q124_containment_dedup
 
     base = " ".join(f"w{i}" for i in range(30))
     ext = base + " " + " ".join(f"x{i}" for i in range(60))
@@ -160,7 +160,7 @@ def test_q125_bm25_constructed(spark, tmp_path):
     identical tf for a query term, the shorter doc outranks the longer
     one (BM25 length normalization); docs sharing no query term never
     appear."""
-    from sparkextract.queries.round5b import q125_bm25_topk
+    from sparkextract.queries.retrieval import q125_bm25_topk
 
     pad_s = " ".join(f"pad{chr(97 + i)}" for i in range(5))
     pad_l = " ".join(f"quux{chr(97 + i)}{chr(97 + j)}" for i in range(8) for j in range(5))
@@ -189,7 +189,7 @@ def test_q126_pca_power_step_numpy(spark):
     unit-norm within rounding, and lambda_est = ||w||."""
     import numpy as np
 
-    from sparkextract.queries.round5b import q126_pca_power_step
+    from sparkextract.queries.ann import q126_pca_power_step
 
     out = sorted(q126_pca_power_step(spark, SF_DIR).collect(), key=lambda r: r.dim0)
     assert [r.dim0 for r in out] == list(range(64))
@@ -212,7 +212,7 @@ def test_q127_rrf_fusion_integer_identity(spark):
     """Every fused score equals the exact integer identity
     10^9//(60+r_bm25) + 10^9//(60+r_tfidf); output is sorted by fused
     desc within query; a doc ranked 1 by BOTH rankers is fused rank 1."""
-    from sparkextract.queries.round5b import q127_rrf_fusion
+    from sparkextract.queries.retrieval import q127_rrf_fusion
 
     rows = q127_rrf_fusion(spark, SF_DIR).collect()
     assert rows

@@ -24,11 +24,7 @@ def _numpy_mmr(sf_dir):
     """Independent MMR over the parquet embeddings (pure numpy)."""
     import pyarrow.parquet as pq
 
-    from sparkextract.queries.round5c import (
-        _Q128_K,
-        _Q128_NCAND,
-        _Q128_STRIDE,
-    )
+    from sparkextract.queries.retrieval import _Q128_K, _Q128_NCAND, _Q128_STRIDE
 
     t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
     vec_ids = t.column("vec_id").to_pylist()
@@ -69,7 +65,7 @@ def _numpy_mmr(sf_dir):
 
 
 def test_q128_matches_numpy_reference(spark):
-    from sparkextract.queries.round5c import q128_mmr_rerank
+    from sparkextract.queries.retrieval import q128_mmr_rerank
 
     got = [
         (r["query_id"], r["step"], r["vec_id"], r["rel_u"], r["score_u"])
@@ -79,7 +75,7 @@ def test_q128_matches_numpy_reference(spark):
 
 
 def test_q128_greedy_invariants(spark):
-    from sparkextract.queries.round5c import _Q128_K, q128_mmr_rerank
+    from sparkextract.queries.retrieval import _Q128_K, q128_mmr_rerank
 
     rows = q128_mmr_rerank(spark, SF_DIR).collect()
     by_q = {}
@@ -104,7 +100,7 @@ def test_q129_k_anonymity_recount(spark):
     """Independent pandas recount of both generalization levels."""
     import pyarrow.parquet as pq
 
-    from sparkextract.queries.round5c import _Q129_K, q129_k_anonymity
+    from sparkextract.queries.quality import _Q129_K, q129_k_anonymity
 
     t = pq.read_table(os.path.join(SF_DIR, "documents.parquet")).to_pandas()
     t["len_bucket"] = t["n_chars"] // 200
@@ -126,10 +122,7 @@ def test_q131_matches_numpy_reference(spark):
     """Independent numpy silhouette over the same quantized inputs."""
     import pyarrow.parquet as pq
 
-    from sparkextract.queries.round5c import (
-        _Q131_K,
-        q131_simplified_silhouette,
-    )
+    from sparkextract.queries.ann import _Q131_K, q131_simplified_silhouette
 
     t = pq.read_table(os.path.join(SF_DIR, "embeddings.parquet"))
     embs = {
@@ -170,10 +163,7 @@ def test_q130_entropy_matches_python(spark):
 
     import pyarrow.parquet as pq
 
-    from sparkextract.queries.round5c import (
-        _Q130_LOW_ENTROPY,
-        q130_token_entropy,
-    )
+    from sparkextract.queries.quality import _Q130_LOW_ENTROPY, q130_token_entropy
 
     t = pq.read_table(os.path.join(SF_DIR, "documents.parquet"))
     expected = {}
@@ -204,7 +194,7 @@ def test_q130_entropy_matches_python(spark):
 def test_q132_mapping_is_real_mojibake():
     """The simulated byte mapping IS the actual utf-8-read-as-latin-1
     round trip, and the repair rule is its exact inverse."""
-    from sparkextract.queries.round5c import _Q132_MAP
+    from sparkextract.queries.quality import _Q132_MAP
 
     for plain, intended, mojibake in _Q132_MAP:
         assert intended.encode("utf-8").decode("latin-1") == mojibake
@@ -219,7 +209,7 @@ def test_q132_repair_roundtrip(spark):
 
     import pyarrow.parquet as pq
 
-    from sparkextract.queries.round5c import (
+    from sparkextract.queries.quality import (
         _Q132_BAD_BUCKET,
         _Q132_BUCKETS,
         q132_encoding_repair,
@@ -251,107 +241,3 @@ def test_q132_repair_roundtrip(spark):
                 == hashlib.md5(intended.encode("utf-8")).hexdigest()
             )
     assert flagged > 0
-
-
-def test_q133_ccnet_buckets_properties(spark):
-    """Independent Python recount: scores from an add-one unigram LM on
-    the src0 slice; tercile sizes and the all-ties-same-bucket rule."""
-    import math
-    from collections import Counter, defaultdict
-
-    import pyarrow.parquet as pq
-
-    from sparkextract.queries.round5c import (
-        _Q133_REF_SOURCE,
-        q133_ccnet_buckets,
-    )
-
-    t = pq.read_table(os.path.join(SF_DIR, "documents.parquet")).to_pandas()
-    ref_counts: Counter = Counter()
-    vocab = set()
-    for _, r in t.iterrows():
-        toks = [w for w in r["text"].split(" ") if w]
-        vocab.update(toks)
-        if r["source"] == _Q133_REF_SOURCE:
-            ref_counts.update(toks)
-    n_ref, v = sum(ref_counts.values()), len(vocab)
-    assert n_ref > 0, "src0 reference slice must be non-empty"
-
-    exp_score = {}
-    for _, r in t.iterrows():
-        toks = [w for w in r["text"].split(" ") if w]
-        if not toks:
-            continue
-        s = sum(math.log((ref_counts.get(w, 0) + 1) / (n_ref + v)) for w in toks)
-        exp_score[r["doc_id"]] = round(s / len(toks), 6)
-
-    rows = q133_ccnet_buckets(spark, SF_DIR).collect()
-    assert len(rows) == len(exp_score)
-    by_lang = defaultdict(list)
-    bucket_of_score = {}
-    for r in rows:
-        assert abs(r["avg_logp"] - exp_score[r["doc_id"]]) < 2e-6
-        by_lang[r["lang"]].append(r)
-        key = (r["lang"], r["avg_logp"])
-        # ties share one bucket
-        assert bucket_of_score.setdefault(key, r["ppl_bucket"]) == r["ppl_bucket"]
-    for lang, rs in by_lang.items():
-        n = len(rs)
-        counts = Counter(r["ppl_bucket"] for r in rs)
-        k1, k2 = (n + 2) // 3, (2 * n + 2) // 3
-        # without ties straddling a boundary, sizes are exactly k1/k2-k1/rest;
-        # with ties they can only shift whole tie-groups
-        assert counts["head"] >= 1 and counts["tail"] >= 1 or n < 3
-        # head docs all score >= every middle doc, middle >= tail
-        lo = {"head": 2, "middle": 1, "tail": 0}
-        srt = sorted(rs, key=lambda r: (-r["avg_logp"], lo[r["ppl_bucket"]]))
-        ranks = [lo[r["ppl_bucket"]] for r in srt]
-        assert ranks == sorted(ranks, reverse=True), f"{lang}: buckets not monotone in score"
-
-
-def test_q134_fim_reconstruction(spark):
-    """Independent Python FIM over the raw parquet: identical md5-coin
-    decisions, identical cuts, and the serialized form reconstructs the
-    original text exactly."""
-    import hashlib
-
-    import pyarrow.parquet as pq
-
-    from sparkextract.queries.round5c import _Q134_SENT, q134_fim_transform
-
-    def h(doc_id, salt):
-        return int(
-            hashlib.md5(f"{doc_id}{salt}".encode()).hexdigest()[:8], 16
-        )
-
-    t = pq.read_table(os.path.join(SF_DIR, "documents.parquet"))
-    docs = dict(zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist()))
-    rows = q134_fim_transform(spark, SF_DIR).collect()
-    assert len(rows) == len(docs)
-    n_fim = 0
-    for r in rows:
-        text = docs[r["doc_id"]]
-        n = len(text)
-        is_fim = h(r["doc_id"], ":fim") % 2 == 0 and n >= 2
-        if not is_fim:
-            assert r["mode"] == "plain"
-            assert (r["len_prefix"], r["len_middle"], r["len_suffix"]) == (n, 0, 0)
-            exp = text
-        else:
-            n_fim += 1
-            lo, hi = sorted((h(r["doc_id"], ":c1") % n, h(r["doc_id"], ":c2") % n))
-            p, m, s = text[:lo], text[lo:hi], text[hi:]
-            assert p + m + s == text  # reconstruction
-            assert (r["len_prefix"], r["len_middle"], r["len_suffix"]) == (
-                len(p), len(m), len(s),
-            )
-            if h(r["doc_id"], ":spm") % 2 == 1:
-                assert r["mode"] == "spm"
-                exp = (_Q134_SENT["suf"] + s + _Q134_SENT["pre"] + p
-                       + _Q134_SENT["mid"] + m)
-            else:
-                assert r["mode"] == "psm"
-                exp = (_Q134_SENT["pre"] + p + _Q134_SENT["suf"] + s
-                       + _Q134_SENT["mid"] + m)
-        assert r["fim_md5"] == hashlib.md5(exp.encode()).hexdigest()
-    assert n_fim > 0

@@ -35,7 +35,7 @@ def _docs(sf_dir):
 
 
 def _py_logit(text):
-    from sparkextract.queries.round5d import _Q135_BIAS, _Q135_STOP, _Q135_W
+    from sparkextract.queries.quality import _Q135_BIAS, _Q135_STOP, _Q135_W
 
     toks = [x for x in text.split(" ") if x != ""]
     n = len(toks)
@@ -58,7 +58,7 @@ def _md5_bucket(s, n):
 
 
 def test_q135_matches_pure_python(spark):
-    from sparkextract.queries.round5d import q135_quality_classifier
+    from sparkextract.queries.quality import q135_quality_classifier
 
     rows = {
         r["doc_id"]: r
@@ -75,7 +75,7 @@ def test_q135_matches_pure_python(spark):
 
 
 def test_q136_matches_pure_python(spark):
-    from sparkextract.queries.round5d import (
+    from sparkextract.queries.quality import (
         _Q136_GAMMA_DEN,
         _Q136_Z_FLAG_U,
         q136_watermark_detect,
@@ -101,11 +101,7 @@ def test_q136_matches_pure_python(spark):
 def test_q137_auc_matches_pairwise_definition(spark):
     """Binned AUC equals the O(P*N) pairwise Mann-Whitney statistic
     computed directly over the binned scores."""
-    from sparkextract.queries.round5d import (
-        _Q137_BIN_CLAMP,
-        _Q137_BIN_U,
-        q137_roc_auc,
-    )
+    from sparkextract.queries.stats import _Q137_BIN_CLAMP, _Q137_BIN_U, q137_roc_auc
 
     row = q137_roc_auc(spark, SF_DIR).collect()[0]
     pos, neg = [], []
@@ -127,10 +123,7 @@ def test_q137_auc_matches_pairwise_definition(spark):
 
 
 def test_q138_confusion_consistency(spark):
-    from sparkextract.queries.round5d import (
-        _Q138_THRESHOLDS_U,
-        q138_pr_thresholds,
-    )
+    from sparkextract.queries.stats import _Q138_THRESHOLDS_U, q138_pr_thresholds
 
     rows = sorted(
         q138_pr_thresholds(spark, SF_DIR).collect(),
@@ -151,7 +144,7 @@ def test_q138_confusion_consistency(spark):
 def test_q139_matches_pure_python(spark):
     """Blocked candidate mining equals the brute-force O(N^2) reference
     restricted to pairs sharing a rare 5-gram (pure Python)."""
-    from sparkextract.queries.round5d import (
+    from sparkextract.queries.dedup import (
         _Q139_DF_HI,
         _Q139_DF_LO,
         _Q139_K,
@@ -199,45 +192,10 @@ def test_q139_matches_pure_python(spark):
     assert len(rows) > 0  # the blocking keys produce candidates at test SF
 
 
-def test_q140_jackknife_invariants(spark):
-    from sparkextract.queries.round5d import _Q140_FOLDS, q140_jackknife_ci
-
-    row = q140_jackknife_ci(spark, SF_DIR).collect()[0]
-    assert row["n_folds"] == _Q140_FOLDS
-    assert 0 < row["n_keep"] < row["n_docs"]
-    assert row["ci_lo_u"] <= row["keep_rate_u"] <= row["ci_hi_u"]
-    assert row["se_u"] > 0
-    # the CI is symmetric around the rate up to rounding
-    mid2 = row["ci_lo_u"] + row["ci_hi_u"]
-    assert abs(mid2 - 2 * row["keep_rate_u"]) <= 2
-    # pure-python replicate check of the SE
-    import pyarrow.parquet as pq
-
-    docs = _docs(SF_DIR)
-    folds = {}
-    for d, text, _l in docs:
-        logit = _py_logit(text)
-        if logit is None:
-            continue
-        fold = _md5_bucket(str(d), _Q140_FOLDS)
-        n, k = folds.get(fold, (0, 0))
-        folds[fold] = (n + 1, k + (1 if logit >= 0 else 0))
-    N = sum(n for n, _ in folds.values())
-    K = sum(k for _, k in folds.values())
-    reps = [
-        round((K - k) / (N - n), 12) for n, k in folds.values()
-    ]
-    pbar = sum(reps) / len(reps)
-    ss = sum(round((p - pbar) ** 2, 12) for p in reps)
-    se = math.sqrt((len(reps) - 1) / len(reps) * ss)
-    assert row["n_docs"] == N and row["n_keep"] == K
-    assert abs(row["se_u"] - round(se * 1e6)) <= 1
-
-
 def test_q141_matches_pure_python(spark):
     import re
 
-    from sparkextract.queries.round5d import (
+    from sparkextract.queries.quality import (
         _Q141_SECRET_RE,
         _Q141_SLOPPY_RE,
         q141_secret_scan_eval,
@@ -272,7 +230,7 @@ def test_q141_matches_pure_python(spark):
 def test_q142_matches_pure_python(spark):
     """Two-level per-language rank + stride keys equal the brute-force
     schedule computed in pure Python."""
-    from sparkextract.queries.round5d import (
+    from sparkextract.queries.planning import (
         _Q142_SCALE,
         _Q142_TOPN,
         q142_stride_schedule,
@@ -320,104 +278,10 @@ def test_q142_matches_pure_python(spark):
     assert len({lang for _s, _d, lang, _k, _key in rows}) > 1
 
 
-def test_q143_matches_pure_python(spark):
-    """Degree-oriented triangle counting equals the brute-force
-    enumeration over the same md5 citation graph."""
-    from itertools import combinations
-
-    from sparkextract.queries.round5d import (
-        _Q143_FANOUT,
-        q143_triangle_count,
-    )
-
-    doc_ids = [d for d, _t, _l in _docs(SF_DIR)]
-    n = len(doc_ids)
-    adj = {}
-    for d in doc_ids:
-        for j in range(_Q143_FANOUT):
-            dst = (
-                int(hashlib.md5(f"{d}#{j}".encode()).hexdigest()[:8], 16) % n
-            )
-            if dst != d:
-                adj.setdefault(d, set()).add(dst)
-                adj.setdefault(dst, set()).add(d)
-    nodes = sorted(adj)
-    tri_per_node = {v: 0 for v in nodes}
-    total = 0
-    for v in nodes:
-        for a, b in combinations(sorted(adj[v]), 2):
-            if v < a and b in adj.get(a, set()):
-                total += 1
-                for x in (v, a, b):
-                    tri_per_node[x] += 1
-    n_edges = sum(len(s) for s in adj.values()) // 2
-    wedges = sum(len(s) * (len(s) - 1) // 2 for s in adj.values())
-    gcc_u = round(3 * total * 1e6 / wedges)
-    expected = sorted(
-        ((v, c) for v, c in tri_per_node.items() if c > 0),
-        key=lambda t: (-t[1], t[0]),
-    )[:10]
-    rows = q143_triangle_count(spark, SF_DIR).collect()
-    assert [(r["node"], r["n_triangles"]) for r in rows] == expected
-    for r in rows:
-        assert r["n_nodes"] == len(nodes)
-        assert r["n_edges"] == n_edges
-        assert r["total_triangles"] == total
-        assert r["gcc_u"] == gcc_u
-
-
-def test_q144_matches_pure_python(spark):
-    from sparkextract.queries.round5d import (
-        _Q144_PREFIX_K,
-        q144_dedup_venn_audit,
-    )
-
-    corpus = []
-    for d, text, _l in _docs(SF_DIR):
-        corpus.append((d, text))
-        if d % 13 == 0:
-            corpus.append((d + 1000000, text))
-        if d % 7 == 0:
-            corpus.append((d + 2000000, text + " extra"))
-    feat = {}
-    for d, text in corpus:
-        toks = [x for x in text.split(" ") if x != ""]
-        ek = hashlib.md5(text.encode()).hexdigest()
-        if len(toks) >= 2:
-            mk = min(
-                hashlib.md5(f"{a}|{b}".encode()).hexdigest()
-                for a, b in zip(toks, toks[1:])
-            )
-        else:
-            mk = ek
-        pk = hashlib.md5(" ".join(toks[:_Q144_PREFIX_K]).encode()).hexdigest()
-        feat[d] = (ek, mk, pk)
-
-    def flagged(i):
-        cnt = {}
-        for v in feat.values():
-            cnt[v[i]] = cnt.get(v[i], 0) + 1
-        return {d for d, v in feat.items() if cnt[v[i]] > 1}
-
-    fe, fm, fp = flagged(0), flagged(1), flagged(2)
-    row = q144_dedup_venn_audit(spark, SF_DIR).collect()[0]
-    assert row["n_exact"] == len(fe)
-    assert row["n_minhash"] == len(fm)
-    assert row["n_prefix"] == len(fp)
-    assert row["n_em"] == len(fe & fm)
-    assert row["n_ep"] == len(fe & fp)
-    assert row["n_mp"] == len(fm & fp)
-    assert row["n_emp"] == len(fe & fm & fp)
-    # injected structure: exact clones exist and are (near-)contained
-    # in the looser methods; the near-clones push prefix above exact
-    assert row["n_exact"] > 0
-    assert row["n_prefix"] > row["n_exact"]
-
-
 def test_q145_matches_pure_python(spark):
     """Committed streaming-dedup sink equals first-writer-wins over the
     base-then-clones arrival order (pure Python)."""
-    from sparkextract.queries.round5d import q145_streaming_stateful_dedup
+    from sparkextract.queries.incremental import q145_streaming_stateful_dedup
 
     expected = {}
     for d, text, _l in _docs(SF_DIR):
@@ -438,10 +302,7 @@ def test_q139_df_cap_excludes_hot_shingle(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sparkextract.queries.round5d import (
-        _Q139_DF_HI,
-        q139_bitext_candidates,
-    )
+    from sparkextract.queries.dedup import _Q139_DF_HI, q139_bitext_candidates
 
     n = 120
     hot = "one two three four five"  # shared 5-gram in half the docs

@@ -58,7 +58,7 @@ def _levenshtein(a: str, b: str) -> int:
 
 
 def test_q146_matches_pure_python(spark):
-    from sparkextract.queries.round5e import (
+    from sparkextract.queries.dedup import (
         _Q146_BLOCK_LEN,
         _Q146_BLOCK_OFF,
         _Q146_DF_MAX,
@@ -130,7 +130,7 @@ def _merge_islands(positions, width):
 
 
 def test_q147_matches_pure_python(spark):
-    from sparkextract.queries.round5e import (
+    from sparkextract.queries.relational import (
         _Q147_KW,
         _Q147_WIDTH,
         q147_span_interval_merge,
@@ -156,8 +156,8 @@ def test_q147_overlap_only_merge():
 
 
 def test_q148_matches_pure_python(spark):
-    from sparkextract.queries.round5d import _Q135_STOP, _Q135_W, _Q135_BIAS
-    from sparkextract.queries.round5e import q148_filter_disparity
+    from sparkextract.queries.quality import _Q135_STOP, _Q135_W, _Q135_BIAS
+    from sparkextract.queries.quality import q148_filter_disparity
 
     per_src = {}
     for doc_id, text, src in _docs(SF_DIR):
@@ -204,7 +204,7 @@ def _canonicalize(url: str) -> str:
 
 
 def test_q149_matches_pure_python(spark):
-    from sparkextract.queries.round5e import (
+    from sparkextract.queries.dedup import (
         _Q149_GROUP,
         _Q149_HOSTS,
         q149_url_canonicalize,

@@ -41,7 +41,7 @@ def _round_half_up(x: float) -> int:
 
 
 def _logit_u(text):
-    from sparkextract.queries.round5d import _Q135_BIAS, _Q135_STOP, _Q135_W
+    from sparkextract.queries.quality import _Q135_BIAS, _Q135_STOP, _Q135_W
 
     toks = [x for x in text.split(" ") if x != ""]
     n = len(toks)
@@ -69,10 +69,7 @@ def _entropy(text):
 
 
 def test_q150_matches_pure_python(spark):
-    from sparkextract.queries.round5f import (
-        _Q150_BUDGET,
-        q150_quota_apportionment,
-    )
+    from sparkextract.queries.planning import _Q150_BUDGET, q150_quota_apportionment
 
     strata = {}
     for _id, _text, lang, src in _docs(SF_DIR):
@@ -100,8 +97,8 @@ def test_q150_matches_pure_python(spark):
 
 
 def test_q151_matches_pure_python(spark):
-    from sparkextract.queries.round5c import _Q130_LOW_ENTROPY
-    from sparkextract.queries.round5f import q151_detector_kappa
+    from sparkextract.queries.quality import _Q130_LOW_ENTROPY
+    from sparkextract.queries.stats import q151_detector_kappa
 
     n = a1 = b1 = n11 = 0
     for _id, text, _lang, _src in _docs(SF_DIR):
@@ -140,7 +137,7 @@ def _edges(doc_ids, fanout):
 
 
 def test_q152_matches_pure_python(spark):
-    from sparkextract.queries.round5f import _Q152_FANOUT, q152_neighbor_quality
+    from sparkextract.queries.graph import _Q152_FANOUT, q152_neighbor_quality
 
     docs = _docs(SF_DIR)
     logits = {d: _logit_u(t) for d, t, _l, _s in docs}
@@ -163,10 +160,7 @@ def test_q152_matches_pure_python(spark):
 
 
 def test_q153_matches_pure_python(spark):
-    from sparkextract.queries.round5f import (
-        _Q153_SAMPLE_BUCKETS,
-        q153_rank_agreement,
-    )
+    from sparkextract.queries.stats import _Q153_SAMPLE_BUCKETS, q153_rank_agreement
 
     sample = []
     for d, t, _l, _s in _docs(SF_DIR):

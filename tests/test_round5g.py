@@ -61,7 +61,7 @@ def _fix_chunks(tokens, b=8):
 
 
 def test_q154_matches_pure_python(spark):
-    from sparkextract.queries.round5g import q154_cdc_chunking
+    from sparkextract.queries.dedup import q154_cdc_chunking
 
     rows = {
         r["doc_id"]: r
@@ -87,7 +87,7 @@ def test_q154_matches_pure_python(spark):
 
 
 def test_q154_shift_invariance_separates_methods(spark):
-    from sparkextract.queries.round5g import q154_cdc_chunking
+    from sparkextract.queries.dedup import q154_cdc_chunking
 
     agg = (
         q154_cdc_chunking(spark, SF_DIR)
@@ -102,7 +102,7 @@ def test_q154_shift_invariance_separates_methods(spark):
 
 
 def test_q155_matches_pure_python_dominance(spark):
-    from sparkextract.queries.round5g import q155_pareto_frontier
+    from sparkextract.queries.stats import q155_pareto_frontier
 
     got = {
         (r["lang"], r["x"]): (r["y_max"], r["n_docs"], r["frontier"])
@@ -128,7 +128,7 @@ def test_q155_matches_pure_python_dominance(spark):
 
 
 def test_q156_ndcg_bounds_and_identity(spark):
-    from sparkextract.queries.round5g import q156_ndcg_eval
+    from sparkextract.queries.retrieval import q156_ndcg_eval
 
     rows = q156_ndcg_eval(spark, SF_DIR).collect()
     assert rows
@@ -144,7 +144,7 @@ def test_q156_ndcg_bounds_and_identity(spark):
 
 
 def test_q157_ece_identity_and_monotone_confidence(spark):
-    from sparkextract.queries.round5g import q157_calibration_ece
+    from sparkextract.queries.stats import q157_calibration_ece
 
     rows = sorted(
         q157_calibration_ece(spark, SF_DIR).collect(), key=lambda r: r["b"]

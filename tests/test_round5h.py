@@ -39,10 +39,7 @@ def _host(doc_id):
 
 
 def test_q158_matches_pure_python_suffix_semantics(spark):
-    from sparkextract.queries.round5h import (
-        _Q158_BLOCKLIST,
-        q158_suffix_blocklist,
-    )
+    from sparkextract.queries.relational import _Q158_BLOCKLIST, q158_suffix_blocklist
 
     got = {
         r["entry"]: (r["n_blocked"], r["min_doc"])
@@ -65,7 +62,7 @@ def test_q158_matches_pure_python_suffix_semantics(spark):
 
 
 def test_q159_weight_identity_and_mass_conservation(spark):
-    from sparkextract.queries.round5h import q159_soft_dedup_weights
+    from sparkextract.queries.dedup import q159_soft_dedup_weights
 
     rows = q159_soft_dedup_weights(spark, SF_DIR).collect()
     docs = list(_docs(SF_DIR))
@@ -103,7 +100,7 @@ def test_q159_weight_identity_and_mass_conservation(spark):
 
 
 def test_q160_matches_pure_python_profile(spark):
-    from sparkextract.queries.round5h import q160_template_prefix_profile
+    from sparkextract.queries.quality import q160_template_prefix_profile
 
     rows = {
         r["source"]: r

@@ -19,7 +19,7 @@ def spark():
 
 
 def test_q161_cluster_keyed_split_never_leaks(spark):
-    from sparkextract.queries.round5i import q161_split_leakage_audit
+    from sparkextract.queries.planning import q161_split_leakage_audit
 
     rows = {
         r["policy"]: r
@@ -39,7 +39,7 @@ def test_q161_cluster_keyed_split_never_leaks(spark):
 
 def test_q162_survivor_rule_argmax_with_tiebreak(spark):
     from sparkextract.queries.registry import SPARK_QUERIES
-    from sparkextract.queries.round5i import q162_quality_survivor
+    from sparkextract.queries.dedup import q162_quality_survivor
 
     out = {r["sig0"]: r for r in q162_quality_survivor(spark, SF_DIR).collect()}
     assert out
@@ -60,8 +60,8 @@ def test_q162_survivor_rule_argmax_with_tiebreak(spark):
 
 
 def test_q162_quality_keeper_has_best_logit(spark):
-    from sparkextract.queries.round5d import _q135_features_of
-    from sparkextract.queries.round5i import q162_quality_survivor
+    from sparkextract.queries.quality import _q135_features_of
+    from sparkextract.queries.dedup import q162_quality_survivor
     from sparkextract.queries.base import load
     from pyspark.sql import functions as F
 

@@ -20,7 +20,7 @@ def spark():
 def test_q163_matches_pure_python(spark):
     import pyarrow.parquet as pq
 
-    from sparkextract.queries.round5j import (
+    from sparkextract.queries.planning import (
         _Q163_LIMIT,
         _Q163_WINDOW_US,
         q163_rate_limit_audit,

@@ -31,7 +31,7 @@ def _hrw(doc_id, n):
 def test_q164_matches_pure_python_and_theory(spark):
     import pyarrow.parquet as pq
 
-    from sparkextract.queries.round5k import (
+    from sparkextract.queries.planning import (
         _Q164_S1,
         _Q164_S2,
         q164_rendezvous_rebalance,

@@ -18,7 +18,7 @@ def spark():
 
 
 def _labels(spark, pairs, max_rounds=40):
-    from sparkextract.queries.round5l import two_phase_cc
+    from sparkextract.queries.graph import two_phase_cc
 
     df = spark.createDataFrame(pairs, "left_id long, right_id long")
     return {
@@ -49,47 +49,11 @@ def test_disjoint_components_and_singleton_edges(spark):
 def test_matches_label_propagation_on_real_pairs(spark):
     """Both algorithms reach the identical min-label fixed point on the
     actual simhash near-dup pair set."""
-    from sparkextract.queries.dedup2 import q68_simhash_near_dup
-    from sparkextract.queries.round3 import label_propagation
-    from sparkextract.queries.round5l import two_phase_cc
+    from sparkextract.queries.dedup import q68_simhash_near_dup
+    from sparkextract.queries.graph import label_propagation
+    from sparkextract.queries.graph import two_phase_cc
 
     pairs = q68_simhash_near_dup(spark, SF_DIR).localCheckpoint()
     a = {r["id"]: r["lbl"] for r in two_phase_cc(pairs).collect()}
     b = {r["id"]: r["lbl"] for r in label_propagation(pairs).collect()}
     assert a == b and len(a) > 0
-
-
-def test_q166_jl_projection_and_concentration(spark):
-    """The Spark projection matches a numpy reference on a real vector,
-    and the audited distortion concentrates around 1 (JL: E[ratio] = 1,
-    std ~ sqrt(2/k))."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from sparkextract.queries.round5l import _jl_signs, q166_jl_distortion
-
-    tbl = pq.read_table(
-        os.path.join(SF_DIR, "embeddings.parquet"), columns=["vec_id", "embedding"]
-    )
-    vec = np.array(tbl.column("embedding").to_pylist()[0], dtype=np.float64)
-    S = np.array(_jl_signs())
-    expected = S @ vec
-
-    from pyspark.sql import functions as F
-
-    from sparkextract.queries.round5l import _jl_project
-
-    got = (
-        spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-        .filter(F.col("vec_id") == tbl.column("vec_id").to_pylist()[0])
-        .select(_jl_project(F.col("embedding")).alias("p"))
-        .collect()[0]["p"]
-    )
-    assert np.allclose(got, expected, atol=1e-9)
-
-    rows = q166_jl_distortion(spark, SF_DIR).collect()
-    n = sum(r["n_pairs"] for r in rows)
-    mean = sum(r["mean_ratio"] * r["n_pairs"] for r in rows) / n
-    assert n > 0
-    assert 0.85 <= mean <= 1.15
-    assert all(r["min_ratio"] > 0 for r in rows)

@@ -1,5 +1,5 @@
-"""q171-q174 (HLL overlap, Merkle diff, prefix-filter audit, AMS F2):
-pure-Python re-derivations of the verdicts at sf0.001."""
+"""q172 (Merkle diff) and q174 (AMS F2): pure-Python re-derivations of
+the verdicts at sf0.001."""
 
 import hashlib
 import math
@@ -28,54 +28,8 @@ def _md5_bucket(s: str, n: int) -> int:
     return int(_md5(s)[:8], 16) % n
 
 
-def _hll_est(regs: dict) -> float:
-    m = 64
-    zeros = m - len(regs)
-    z = sum(2.0 ** -r for r in regs.values()) + float(zeros)
-    raw = 0.709 * m * m / z
-    if raw <= 2.5 * m and zeros > 0:
-        return round(m * math.log(m / zeros), 6)
-    return round(raw, 6)
-
-
-def test_q171_matches_python_hll_and_exact_overlap(spark):
-    from sparkextract.queries.round5o import q171_hll_set_overlap
-
-    rows = {
-        (r["t1"], r["t2"]): r
-        for r in q171_hll_set_overlap(spark, SF_DIR).collect()
-    }
-    ev = pq.read_table(
-        os.path.join(SF_DIR, "events.parquet"), columns=["event_type", "user_id"]
-    ).to_pylist()
-    regs = defaultdict(dict)
-    users = defaultdict(set)
-    for r in ev:
-        t = r["event_type"]
-        users[t].add(r["user_id"])
-        hv = _md5_bucket(str(r["user_id"]), 1 << 32)
-        reg, w = hv % 64, hv // 64
-        rho = 27 - w.bit_length() if w > 0 else 27
-        regs[t][reg] = max(regs[t].get(reg, 0), rho)
-    types = sorted(regs)
-    expected_pairs = {(a, b) for i, a in enumerate(types) for b in types[i + 1:]}
-    assert set(rows) == expected_pairs
-    for (t1, t2), r in rows.items():
-        assert r["exact_intersection"] == len(users[t1] & users[t2])
-        assert r["est_t1"] == pytest.approx(_hll_est(regs[t1]), abs=1e-5)
-        assert r["est_t2"] == pytest.approx(_hll_est(regs[t2]), abs=1e-5)
-        u = {
-            reg: max(regs[t1].get(reg, 0), regs[t2].get(reg, 0))
-            for reg in set(regs[t1]) | set(regs[t2])
-        }
-        assert r["est_union"] == pytest.approx(_hll_est(u), abs=1e-5)
-        assert r["est_intersection"] == pytest.approx(
-            round(r["est_t1"] + r["est_t2"] - r["est_union"], 6), abs=1e-5
-        )
-
-
 def test_q172_clean_leaves_skip_doc_work_and_counts_match(spark):
-    from sparkextract.queries.round5o import (
+    from sparkextract.queries.incremental import (
         _Q172_ADDED_LEAVES,
         _Q172_CHANGED_LEAVES,
         _Q172_LEAVES,
@@ -106,56 +60,8 @@ def test_q172_clean_leaves_skip_doc_work_and_counts_match(spark):
             assert r["old_count"] == per_leaf[leaf]
 
 
-def test_q173_completeness_theorem_and_truth_matches_python(spark):
-    from sparkextract.queries.round5o import (
-        _Q173_CLONE_MOD,
-        _Q173_HEAD,
-        _Q173_SAMPLE_BUCKETS,
-        _Q173_THRESHOLDS,
-        q173_prefix_filter_audit,
-    )
-
-    rows = {r["t_u"]: r for r in q173_prefix_filter_audit(spark, SF_DIR).collect()}
-    assert len(rows) == len(_Q173_THRESHOLDS)
-    tbl = pq.read_table(
-        os.path.join(SF_DIR, "documents.parquet"), columns=["doc_id", "text"]
-    ).to_pylist()
-    tbl = [
-        r for r in tbl if _md5_bucket(str(r["doc_id"]), _Q173_SAMPLE_BUCKETS) == 0
-    ]
-    corpus = [(r["doc_id"], r["text"][:_Q173_HEAD]) for r in tbl]
-    corpus += [
-        (r["doc_id"] + 2000000, ("qq " + r["text"])[:_Q173_HEAD])
-        for r in tbl
-        if r["doc_id"] % _Q173_CLONE_MOD == 0
-    ]
-    ssets = {
-        d: {h[i : i + 8] for i in range(max(len(h) - 7, 1))} for d, h in corpus
-    }
-    ids = sorted(ssets)
-    true_counts = {num_den: 0 for num_den in _Q173_THRESHOLDS}
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            inter = len(ssets[a] & ssets[b])
-            union = len(ssets[a]) + len(ssets[b]) - inter
-            for num, den in _Q173_THRESHOLDS:
-                if den * inter >= num * union:
-                    true_counts[(num, den)] += 1
-    n = len(ids)
-    for num, den in _Q173_THRESHOLDS:
-        r = rows[1000000 * num // den]
-        assert r["n_docs"] == n and r["n_all_pairs"] == n * (n - 1) // 2
-        assert r["n_true_allpairs"] == true_counts[(num, den)]
-        # the prefix-filter theorem: every true pair is a candidate
-        assert r["complete"]
-        assert r["n_cand_true"] == r["n_true_allpairs"]
-        assert r["n_candidates"] <= r["n_all_pairs"]
-    # a tighter threshold can only shrink the candidate set
-    assert rows[800000]["n_candidates"] <= rows[500000]["n_candidates"]
-
-
 def test_q174_sketch_and_exact_match_python(spark):
-    from sparkextract.queries.round5o import (
+    from sparkextract.queries.sketches import (
         _Q174_HEADLEN,
         _Q174_NEST,
         q174_ams_f2_join_size,

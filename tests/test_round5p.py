@@ -26,7 +26,7 @@ def _md5_bucket(s: str, n: int) -> int:
 
 
 def test_q175_sketch_and_exact_match_python(spark):
-    from sparkextract.queries.round5p import _Q175_NEST, q175_agms_join_size
+    from sparkextract.queries.sketches import _Q175_NEST, q175_agms_join_size
 
     row = q175_agms_join_size(spark, SF_DIR).collect()[0]
     ok = [
@@ -57,92 +57,8 @@ def test_q175_sketch_and_exact_match_python(spark):
     assert row["ratio_u"] == (1000000 * est) // exact
 
 
-def test_q176_confusion_structure_and_blocking_recall(spark):
-    from sparkextract.queries.round5p import (
-        _Q176_THRESHOLDS,
-        q176_fellegi_sunter_linkage,
-    )
-
-    rows = {r["threshold"]: r for r in q176_fellegi_sunter_linkage(spark, SF_DIR).collect()}
-    assert sorted(rows) == sorted(_Q176_THRESHOLDS)
-    cust = pq.read_table(
-        os.path.join(SF_DIR, "customer.parquet"),
-        columns=["c_custkey", "c_name", "c_nationkey", "c_mktsegment"],
-    ).to_pylist()
-    # the dirt preserves every blocking field, so each dirty record
-    # co-blocks with its true source: n_match == |customer|
-    n_cust = len(cust)
-    blocks = Counter(
-        (r["c_nationkey"], r["c_mktsegment"], r["c_name"][:1]) for r in cust
-    )
-    n_pairs = sum(c * c for c in blocks.values())  # dirty x clean per block
-    for t, r in rows.items():
-        assert r["n_match"] == n_cust
-        assert r["n_non"] == n_pairs - n_cust
-        assert r["tp"] + r["fn"] == r["n_match"]
-        assert r["fp"] + r["tn"] == r["n_non"]
-    ts = sorted(rows)
-    for a, b in zip(ts, ts[1:]):
-        # raising the decision threshold can only shrink the accept set
-        assert rows[b]["tp"] <= rows[a]["tp"]
-        assert rows[b]["fp"] <= rows[a]["fp"]
-    # the weights must separate matches from the block noise somewhere
-    assert any(
-        r["tp"] == r["n_match"] and r["fp"] < r["n_non"] // 2
-        for r in rows.values()
-    )
-
-
-def test_q177_matches_numpy_margin_rederivation(spark):
-    from sparkextract.queries.round5p import (
-        _Q177_K,
-        _Q177_QUERY_MOD,
-        _Q177_SAMPLE_BUCKETS,
-        q177_margin_alignment,
-    )
-
-    rows = {r["query_id"]: r for r in q177_margin_alignment(spark, SF_DIR).collect()}
-    tbl = pq.read_table(
-        os.path.join(SF_DIR, "embeddings.parquet"), columns=["vec_id", "embedding"]
-    ).to_pylist()
-    tbl = [
-        r for r in tbl if _md5_bucket(str(r["vec_id"]), _Q177_SAMPLE_BUCKETS) == 0
-    ]
-    ids = [r["vec_id"] for r in tbl]
-    mat = np.array([r["embedding"] for r in tbl], dtype=np.float64)
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    cos = mat @ mat.T
-    n = len(ids)
-    cos_u = {}
-    for i in range(n):
-        for j in range(n):
-            if i != j:
-                cos_u[(ids[i], ids[j])] = round(1e6 * cos[i, j])
-    avgk = {}
-    for i, x in enumerate(ids):
-        top = sorted(
-            ((cos_u[(x, y)], y) for y in ids if y != x),
-            key=lambda t: (-t[0], t[1]),
-        )[:_Q177_K]
-        avgk[x] = sum(c for c, _ in top) // _Q177_K
-    queries = [x for x in ids if x % _Q177_QUERY_MOD == 0]
-    assert set(rows) == set(queries)
-    for q in queries:
-        cand = [
-            (y, cos_u[(q, y)], 2 * cos_u[(q, y)] - avgk[q] - avgk[y])
-            for y in ids
-            if y != q
-        ]
-        raw = min(cand, key=lambda t: (-t[1], t[0]))
-        mar = min(cand, key=lambda t: (-t[2], t[0]))
-        r = rows[q]
-        assert (r["raw_top"], r["raw_cos_u"]) == (raw[0], raw[1])
-        assert (r["margin_top"], r["margin_u"]) == (mar[0], mar[2])
-        assert r["changed"] == (raw[0] != mar[0])
-
-
 def test_q178_padding_waste_matches_python_and_sorting_wins(spark):
-    from sparkextract.queries.round5p import (
+    from sparkextract.queries.text import (
         _Q178_B,
         _Q178_NBUCKETS,
         q178_padding_waste_audit,

@@ -32,7 +32,7 @@ def _mg_compress(counts, k):
 
 
 def test_q179_matches_python_mg_and_bound_holds(spark):
-    from sparkextract.queries.round5q import (
+    from sparkextract.queries.sketches import (
         _Q179_K,
         _Q179_P,
         q179_misra_gries_heavy_hitters,
@@ -74,7 +74,7 @@ def test_q179_matches_python_mg_and_bound_holds(spark):
 
 
 def test_q180_decay_weights_exact_and_ranks(spark):
-    from sparkextract.queries.round5q import (
+    from sparkextract.queries.relational import (
         _Q180_MAX_E,
         _Q180_STEP_US,
         q180_decayed_popularity,

@@ -1,5 +1,5 @@
-"""q183 (watermark late-event audit) and q184 (entity resolution):
-pure-Python re-derivations at sf0.001."""
+"""q183 (watermark late-event audit): pure-Python re-derivation at
+sf0.001."""
 
 import os
 from collections import defaultdict
@@ -19,7 +19,7 @@ def spark():
 
 
 def test_q183_matches_python_watermark_replay(spark):
-    from sparkextract.queries.round5s import (
+    from sparkextract.queries.incremental import (
         _Q183_DELAY_US,
         q183_watermark_late_events,
     )
@@ -60,53 +60,3 @@ def test_q183_matches_python_watermark_replay(spark):
         )
         assert r["max_lateness_us"] == max_late
         assert r["n_on_time"] + r["n_late_accepted"] + r["n_dropped"] == len(events)
-
-
-def test_q184_entities_cover_all_records_and_match_spark_scores(spark):
-    from sparkextract.queries.round5p import fs_scored_pairs
-    from sparkextract.queries.round5s import (
-        _Q184_THRESHOLD,
-        q184_entity_resolution,
-    )
-
-    rows = q184_entity_resolution(spark, SF_DIR).collect()
-    n_cust = len(
-        pq.read_table(
-            os.path.join(SF_DIR, "customer.parquet"), columns=["c_custkey"]
-        )
-    )
-    # every record (clean + dirty) lands in exactly one entity
-    assert sum(r["n_records"] for r in rows) == 2 * n_cust
-    assert sum(r["n_clean"] for r in rows) == n_cust
-    assert sum(r["n_dirty"] for r in rows) == n_cust
-    # re-derive components in python from the SAME scored pairs
-    links = [
-        (r["c_custkey"], r["d_key"])
-        for r in fs_scored_pairs(spark, SF_DIR).collect()
-        if r["score"] >= _Q184_THRESHOLD
-    ]
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in links:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    comp = defaultdict(set)
-    for x in parent:
-        comp[find(x)].add(x)
-    # min-id labeling: every multi-record entity matches the python CC
-    got = {r["entity_id"]: r for r in rows if r["n_records"] > 1}
-    expected = {min(m): m for m in comp.values() if len(m) > 1}
-    assert set(got) == set(expected)
-    for eid, members in expected.items():
-        assert got[eid]["n_records"] == len(members)
-    # purity: with the threshold accepting all true pairs, most entities
-    # pair one clean with one dirty record
-    assert any(r["is_pure"] for r in rows)

@@ -19,7 +19,7 @@ def spark():
 
 
 def test_q186_matches_python_chao1(spark):
-    from sparkextract.queries.round5u import q186_vocab_richness
+    from sparkextract.queries.text import q186_vocab_richness
 
     rows = {r["lang"]: r for r in q186_vocab_richness(spark, SF_DIR).collect()}
     docs = pq.read_table(
@@ -48,7 +48,7 @@ def test_q187_modularity_identity(spark):
     """Per-cell contributions obey the Newman identity: counts are
     consistent (sum e_within <= m, sum deg = 2m) and each contribution
     recomputes from its own integer columns."""
-    from sparkextract.queries.round5u import q187_graph_modularity
+    from sparkextract.queries.graph import q187_graph_modularity
 
     rows = q187_graph_modularity(spark, SF_DIR).collect()
     assert len(rows) > 0
@@ -67,7 +67,7 @@ def test_q187_modularity_identity(spark):
 
 def test_q187_partition_is_exhaustive(spark):
     """Every non-centroid vector lands in exactly one cell."""
-    from sparkextract.queries.round5u import _Q187_K, _q187_assign
+    from sparkextract.queries.graph import _Q187_K, _q187_assign
 
     vec_ids = pq.read_table(
         os.path.join(SF_DIR, "embeddings.parquet"), columns=["vec_id"]

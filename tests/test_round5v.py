@@ -31,7 +31,7 @@ def _bucket(doc_id: int, n: int) -> int:
 
 
 def test_q188_matches_python_heaps(spark):
-    from sparkextract.queries.round5v import _Q188_BUCKETS, q188_heaps_law
+    from sparkextract.queries.text import _Q188_BUCKETS, q188_heaps_law
 
     rows = {r["bucket"]: r for r in q188_heaps_law(spark, SF_DIR).collect()}
     per_bucket = Counter()
@@ -68,7 +68,7 @@ def test_q188_matches_python_heaps(spark):
 
 
 def test_q189_matches_python_kneser_ney(spark):
-    from sparkextract.queries.round5v import _Q189_D, q189_kneser_ney_lm
+    from sparkextract.queries.quality import _Q189_D, q189_kneser_ney_lm
 
     rows = {r["doc_id"]: r for r in q189_kneser_ney_lm(spark, SF_DIR).collect()}
     doc_bigrams: dict[int, list] = {}
@@ -110,7 +110,7 @@ def test_q189_kn_probabilities_normalize(spark):
     for d in _docs():
         w = [t for t in d["text"].split(" ") if t]
         big.update(zip(w, w[1:]))
-    from sparkextract.queries.round5v import _Q189_D
+    from sparkextract.queries.quality import _Q189_D
 
     c_a = Counter()
     n1f = Counter()

@@ -25,11 +25,7 @@ def _u_micro(key: str) -> int:
 
 
 def test_q190_matches_python_laplace(spark):
-    from sparkextract.queries.round5w import (
-        _Q190_EPS,
-        _Q190_SALT,
-        q190_dp_noisy_release,
-    )
+    from sparkextract.queries.stats import _Q190_EPS, _Q190_SALT, q190_dp_noisy_release
 
     rows = {r["source"]: r for r in q190_dp_noisy_release(spark, SF_DIR).collect()}
     docs = pq.read_table(
@@ -64,7 +60,7 @@ def test_q190_matches_python_laplace(spark):
 
 
 def test_q191_matches_python_bootstrap(spark):
-    from sparkextract.queries.round5w import (
+    from sparkextract.queries.stats import (
         _Q191_REPS,
         _Q191_SALT,
         _Q191_THRESH,
@@ -105,7 +101,7 @@ def test_q191_matches_python_bootstrap(spark):
 
 
 def test_q191_poisson_table_is_a_cdf():
-    from sparkextract.queries.round5w import _Q191_THRESH
+    from sparkextract.queries.stats import _Q191_THRESH
 
     assert all(b > a for a, b in zip(_Q191_THRESH, _Q191_THRESH[1:]))
     assert _Q191_THRESH[-1] == 1000000  # CDF saturates -> w always defined

@@ -20,7 +20,7 @@ def spark():
 
 
 def test_q192_matches_python_loo(spark):
-    from sparkextract.queries.round5x import q192_loo_influence
+    from sparkextract.queries.stats import q192_loo_influence
 
     rows = {r["source"]: r for r in q192_loo_influence(spark, SF_DIR).collect()}
     docs = pq.read_table(
@@ -51,7 +51,7 @@ def test_q192_matches_python_loo(spark):
 
 
 def test_q193_matches_python_chi2(spark):
-    from sparkextract.queries.round5x import q193_chi_square_drift
+    from sparkextract.queries.stats import q193_chi_square_drift
 
     rows = {r["lang"]: r for r in q193_chi_square_drift(spark, SF_DIR).collect()}
     docs = pq.read_table(

@@ -41,10 +41,7 @@ def _snm_pairs(docs, key_fn, blk_fn):
 
 
 def test_q194_matches_python_snm(spark):
-    from sparkextract.queries.round5y import (
-        _Q194_MIN_JAC_U,
-        q194_sorted_neighborhood,
-    )
+    from sparkextract.queries.dedup import _Q194_MIN_JAC_U, q194_sorted_neighborhood
 
     rows = {
         (r["left_id"], r["right_id"]): r
@@ -69,7 +66,7 @@ def test_q194_matches_python_snm(spark):
 
 
 def test_q195_matches_python_packing(spark):
-    from sparkextract.queries.round5y import (
+    from sparkextract.queries.planning import (
         _Q195_FILES,
         _Q195_TARGET,
         q195_compaction_planner,

@@ -28,7 +28,7 @@ def _half(doc_id):
 
 
 def test_q196_matches_python_kmv(spark):
-    from sparkextract.queries.round5z import _Q196_K, _Q196_MAXH, q196_kmv_theta_sketch
+    from sparkextract.queries.sketches import _Q196_K, _Q196_MAXH, q196_kmv_theta_sketch
 
     rows = {r["part"]: r for r in q196_kmv_theta_sketch(spark, SF_DIR).collect()}
     assert set(rows) == {"half0", "half1", "intersection"}
@@ -65,7 +65,7 @@ def test_q196_matches_python_kmv(spark):
 
 
 def test_q197_matches_python_ks(spark):
-    from sparkextract.queries.round5z import _Q197_TOPN, q197_ks_two_sample
+    from sparkextract.queries.stats import _Q197_TOPN, q197_ks_two_sample
 
     rows = q197_ks_two_sample(spark, SF_DIR).collect()
     assert len(rows) == _Q197_TOPN

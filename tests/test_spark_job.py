@@ -3,7 +3,6 @@ pure-pandas oracle, mega-doc path equivalence, partitioning invariance,
 and checkpoint/resume idempotency."""
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -230,24 +229,3 @@ def test_rerun_over_committed_root_is_noop(spark, docs, tmp_path):
     assert (again["docs"], again["spans"], again["tables"]) == (0, 0, 0)
     assert read_manifest(spark, root).count() == n_rows
     assert sorted(map(tuple, read_extracted(spark, root).collect())) == before
-
-
-def test_fail_after_buckets_is_bucket_id_rule(spark, tmp_path):
-    """fail_after_buckets commits exactly the buckets with id < N —
-    deterministic on the bucket ID, independent of which buckets happen
-    to be populated (round-4 ADVICE: the oracle derives run_seq from
-    this rule)."""
-    from sparkextract.schema import DOC_SCHEMA
-    from sparkextract.spark.manifest import read_manifest, run_extraction_job
-
-    docs = spark.createDataFrame(
-        [(f"d{i}", [{"kind": "text", "text": "x" * 120, "media_ref": None, "offset": 0}])
-         for i in range(64)],
-        schema=DOC_SCHEMA,
-    )
-    root = str(tmp_path / "failrule")
-    run_extraction_job(spark, docs, root, run_id="r1", num_buckets=8,
-                       fail_after_buckets=3)
-    m = read_manifest(spark, root).filter(F.col("status") == "done")
-    got = sorted(r["doc_id_bucket"] for r in m.collect())
-    assert all(b < 3 for b in got)

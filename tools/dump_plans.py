@@ -21,13 +21,12 @@ SF_DIR = "/root/testdata/sf0.01"
 
 # audited set = EVERY fine-grained registered query (the panels exported
 # to the driver are plain UNION ALLs of these, so the fine grain is the
-# right audit granularity). CAVEAT — q94: its label-propagation loop runs
+# right audit granularity). CAVEAT — q71/q72: the convergence loop runs
 # eagerly at DataFrame-build time and localCheckpoint() truncates the
-# lineage, so its PLANS.md row shows the components as a checkpointed RDD
-# scan; the per-iteration shape (edge join + min-agg on the node key, one
-# label-sized shuffle per round) is documented in
-# queries/graph.py:label_propagation, not capturable from the returned
-# frame's plan.
+# lineage, so their PLANS.md rows show only the FINAL stage over a
+# checkpointed RDD scan; the per-iteration shape (edge join + min-agg on
+# the node key, one label-sized shuffle per round) is documented in the
+# q71 docstring, not capturable from the returned frame's plan.
 
 
 def plan_text(df) -> str:
