@@ -312,6 +312,8 @@ def main():
         "unit": "sec",
         "queries": timings,
         "sf": os.path.basename(SF_DIR).replace("sf", ""),
+        "nproc": os.cpu_count(),
+        "cpus": CPUS,
     }
     if not skip_scaling:
         result["extraction"] = run_scaling()

@@ -703,122 +703,6 @@ def q102_int8_quantization(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# q107: LSH PRECISION/RECALL EVAL — the quality harness every
-# approximate-dedup deployment needs: banded-LSH candidate pairs (q53)
-# are scored against EXACT all-pairs cosine ground truth on a bounded
-# evaluation subset (the standard sampled-ground-truth protocol: exact
-# all-pairs is O(S^2) and runs only on the sample, exactly like q50's
-# ANN recall query set). The subset is base vec_id < 250 of q53's
-# corpus INCLUDING its injected perturbed twins (+1,000,000 ids,
-# first coordinate +0.25 — dedup2.py:236-247; the natural corpus has
-# zero >=0.8 pairs, measured) so both precision and recall are
-# exercised against real positives.
-# Scale shape: the q53 candidate side keeps its banded shape; the
-# exact side is a broadcast self-join of the <=S+S/7-row sample.
-_Q107_SUB = 250
-
-
-_Q107_ORACLE = f"""
-WITH sub AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings WHERE vec_id < {_Q107_SUB}
-  UNION ALL
-  SELECT vec_id + 1000000,
-         list_transform(range(1, 65),
-           i -> CASE WHEN i = 1 THEN CAST(embedding[1] AS DOUBLE) + 0.25
-                     ELSE CAST(embedding[i] AS DOUBLE) END)
-  FROM embeddings WHERE vec_id % 7 = 0 AND vec_id < {_Q107_SUB}
-),
-truth AS (
-  SELECT x.vec_id AS l, y.vec_id AS r
-  FROM sub x JOIN sub y ON x.vec_id < y.vec_id
-  WHERE ROUND(
-    list_sum(list_transform(range(1, 65), i -> x.e[i] * y.e[i]))
-    / (sqrt(list_sum(list_transform(range(1, 65), i -> x.e[i] * x.e[i])))
-     * sqrt(list_sum(list_transform(range(1, 65), i -> y.e[i] * y.e[i])))),
-    6) >= 0.8
-),
-cand AS (
-  SELECT left_id AS l, right_id AS r FROM ({{Q53}}) _q53
-  WHERE left_id % 1000000 < {_Q107_SUB} AND right_id % 1000000 < {_Q107_SUB}
-),
-hit AS (SELECT t.l, t.r FROM truth t JOIN cand c ON t.l = c.l AND t.r = c.r)
-SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth,
-       CAST((SELECT COUNT(*) FROM cand) AS BIGINT) AS n_candidates,
-       CAST((SELECT COUNT(*) FROM hit) AS BIGINT) AS n_hit,
-       ROUND((SELECT COUNT(*) FROM hit) * 1.0
-             / GREATEST((SELECT COUNT(*) FROM cand), 1), 6) AS precision,
-       ROUND((SELECT COUNT(*) FROM hit) * 1.0
-             / GREATEST((SELECT COUNT(*) FROM truth), 1), 6) AS recall
-"""
-
-
-def _q107_oracle() -> str:
-    from sparkextract.queries.dedup import _Q53_ORACLE
-
-    return _Q107_ORACLE.replace("{Q53}", _Q53_ORACLE)
-
-
-@register("q107_lsh_recall_eval", oracle=_q107_oracle())
-def q107_lsh_recall_eval(spark, sf_dir):
-    from sparkextract.queries.dedup import _banded_corpus, q53_banded_lsh_near_dup
-
-    sub = _banded_corpus(spark, sf_dir).filter(
-        F.col("vec_id") % 1000000 < _Q107_SUB
-    )
-    x = sub.select(F.col("vec_id").alias("l"), F.col("e").alias("ex"))
-    y = sub.select(F.col("vec_id").alias("r"), F.col("e").alias("ey"))
-    cos = F.round(
-        _dot(F.col("ex"), F.col("ey")) / (_norm(F.col("ex")) * _norm(F.col("ey"))),
-        6,
-    )
-    # the three count aggregates below each re-evaluate their subtree
-    # (hit references both), so the sample-sized truth and candidate
-    # frames are materialized once (checkpoint_memo)
-    from sparkextract.queries.base import checkpoint_memo
-
-    truth = checkpoint_memo(
-        spark,
-        sf_dir,
-        "q107_truth",
-        lambda: x.join(F.broadcast(y), F.col("l") < F.col("r"))
-        .filter(cos >= 0.8)
-        .select("l", "r"),
-    )
-    cand = checkpoint_memo(
-        spark,
-        sf_dir,
-        "q107_cand",
-        lambda: q53_banded_lsh_near_dup(spark, sf_dir)
-        .filter(
-            (F.col("left_id") % 1000000 < _Q107_SUB)
-            & (F.col("right_id") % 1000000 < _Q107_SUB)
-        )
-        .select(F.col("left_id").alias("l"), F.col("right_id").alias("r")),
-    )
-    hit = truth.join(cand, ["l", "r"])
-    counts = (
-        truth.agg(F.count("*").alias("n_truth"))
-        .crossJoin(cand.agg(F.count("*").alias("n_candidates")))
-        .crossJoin(hit.agg(F.count("*").alias("n_hit")))
-    )
-    return counts.select(
-        "n_truth",
-        "n_candidates",
-        "n_hit",
-        F.round(
-            F.col("n_hit").cast("double")
-            / F.greatest(F.col("n_candidates"), F.lit(1)),
-            6,
-        ).alias("precision"),
-        F.round(
-            F.col("n_hit").cast("double") / F.greatest(F.col("n_truth"), F.lit(1)),
-            6,
-        ).alias("recall"),
-    )
-
-
-# --------------------------------------------------------------------------
 # q120: CLUSTERING-AGREEMENT RAND INDEX — pair-counting agreement
 # between the stored assignment (label) and a re-derived geometric one
 # (3-bit sign bucket of the embedding's leading components). This is

@@ -1,8 +1,10 @@
 """Deduplication queries at every grain (D4/D6/J1): exact content-hash
 groups and pairs, MinHash/SimHash signatures and near-dup joins,
-embedding LSH pairs, winnowing, block and exact-substring dedup,
-semantic dedup, cross-lingual candidate mining, content-defined
-chunking, soft-dedup weights and sorted-neighborhood blocking.
+embedding LSH pairs and their recall evaluation, the composed
+extract -> quality -> dedup cleaning pipeline, winnowing, block and
+exact-substring dedup, semantic dedup, cross-lingual candidate mining,
+content-defined chunking, soft-dedup weights and sorted-neighborhood
+blocking.
 
 Double-precision folds over the embedding arrays are evaluated in
 element order by both engines; results are rounded to 6 decimals before
@@ -180,6 +182,7 @@ from sparkextract.queries.base import (
     md5_bucket_sql,
     register,
 )
+from sparkextract.queries.quality import _Q94_MIN_TOKENS, _q135_core_sql, _q135_features_of
 from sparkextract.queries.sketches import _kgram_hashes
 
 
@@ -680,6 +683,112 @@ def q53_banded_lsh_near_dup(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
+# q107: LSH PRECISION/RECALL EVAL — the quality harness every
+# approximate-dedup deployment needs: banded-LSH candidate pairs (q53)
+# are scored against EXACT all-pairs cosine ground truth on a bounded
+# evaluation subset (the standard sampled-ground-truth protocol: exact
+# all-pairs is O(S^2) and runs only on the sample, exactly like q50's
+# ANN recall query set). The subset is base vec_id < 250 of q53's
+# corpus INCLUDING its injected perturbed twins (+1,000,000 ids,
+# first coordinate +0.25, see _banded_corpus; the natural corpus has
+# zero >=0.8 pairs, measured) so both precision and recall are
+# exercised against real positives.
+# Scale shape: the q53 candidate side keeps its banded shape; the
+# exact side is a broadcast self-join of the <=S+S/7-row sample.
+_Q107_SUB = 250
+
+
+_Q107_ORACLE = f"""
+WITH sub AS (
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+  FROM embeddings WHERE vec_id < {_Q107_SUB}
+  UNION ALL
+  SELECT vec_id + 1000000,
+         list_transform(range(1, 65),
+           i -> CASE WHEN i = 1 THEN CAST(embedding[1] AS DOUBLE) + 0.25
+                     ELSE CAST(embedding[i] AS DOUBLE) END)
+  FROM embeddings WHERE vec_id % 7 = 0 AND vec_id < {_Q107_SUB}
+),
+truth AS (
+  SELECT x.vec_id AS l, y.vec_id AS r
+  FROM sub x JOIN sub y ON x.vec_id < y.vec_id
+  WHERE ROUND(
+    list_sum(list_transform(range(1, 65), i -> x.e[i] * y.e[i]))
+    / (sqrt(list_sum(list_transform(range(1, 65), i -> x.e[i] * x.e[i])))
+     * sqrt(list_sum(list_transform(range(1, 65), i -> y.e[i] * y.e[i])))),
+    6) >= 0.8
+),
+cand AS (
+  SELECT left_id AS l, right_id AS r FROM ({{Q53}}) _q53
+  WHERE left_id % 1000000 < {_Q107_SUB} AND right_id % 1000000 < {_Q107_SUB}
+),
+hit AS (SELECT t.l, t.r FROM truth t JOIN cand c ON t.l = c.l AND t.r = c.r)
+SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth,
+       CAST((SELECT COUNT(*) FROM cand) AS BIGINT) AS n_candidates,
+       CAST((SELECT COUNT(*) FROM hit) AS BIGINT) AS n_hit,
+       ROUND((SELECT COUNT(*) FROM hit) * 1.0
+             / GREATEST((SELECT COUNT(*) FROM cand), 1), 6) AS precision,
+       ROUND((SELECT COUNT(*) FROM hit) * 1.0
+             / GREATEST((SELECT COUNT(*) FROM truth), 1), 6) AS recall
+"""
+
+
+@register("q107_lsh_recall_eval", oracle=_Q107_ORACLE.replace("{Q53}", _Q53_ORACLE))
+def q107_lsh_recall_eval(spark, sf_dir):
+    sub = _banded_corpus(spark, sf_dir).filter(
+        F.col("vec_id") % 1000000 < _Q107_SUB
+    )
+    x = sub.select(F.col("vec_id").alias("l"), F.col("e").alias("ex"))
+    y = sub.select(F.col("vec_id").alias("r"), F.col("e").alias("ey"))
+    cos = F.round(
+        _dot(F.col("ex"), F.col("ey")) / (_norm(F.col("ex")) * _norm(F.col("ey"))),
+        6,
+    )
+    # the three count aggregates below each re-evaluate their subtree
+    # (hit references both), so the sample-sized truth and candidate
+    # frames are materialized once (checkpoint_memo)
+    truth = checkpoint_memo(
+        spark,
+        sf_dir,
+        "q107_truth",
+        lambda: x.join(F.broadcast(y), F.col("l") < F.col("r"))
+        .filter(cos >= 0.8)
+        .select("l", "r"),
+    )
+    cand = checkpoint_memo(
+        spark,
+        sf_dir,
+        "q107_cand",
+        lambda: q53_banded_lsh_near_dup(spark, sf_dir)
+        .filter(
+            (F.col("left_id") % 1000000 < _Q107_SUB)
+            & (F.col("right_id") % 1000000 < _Q107_SUB)
+        )
+        .select(F.col("left_id").alias("l"), F.col("right_id").alias("r")),
+    )
+    hit = truth.join(cand, ["l", "r"])
+    counts = (
+        truth.agg(F.count("*").alias("n_truth"))
+        .crossJoin(cand.agg(F.count("*").alias("n_candidates")))
+        .crossJoin(hit.agg(F.count("*").alias("n_hit")))
+    )
+    return counts.select(
+        "n_truth",
+        "n_candidates",
+        "n_hit",
+        F.round(
+            F.col("n_hit").cast("double")
+            / F.greatest(F.col("n_candidates"), F.lit(1)),
+            6,
+        ).alias("precision"),
+        F.round(
+            F.col("n_hit").cast("double") / F.greatest(F.col("n_truth"), F.lit(1)),
+            6,
+        ).alias("recall"),
+    )
+
+
+# --------------------------------------------------------------------------
 # q68: SimHash near-dup JOIN — completes the SimHash family from
 # signatures (q32) to dedup pairing, at the width a real pipeline uses:
 # a 48-bit signature (16 bits as in q32 collides massively at corpus
@@ -902,6 +1011,135 @@ def simhash_banded_pairs(sigs):
             F.col("l").alias("left_id"), F.col("r").alias("right_id"), hamming.alias("hamming")
         )
         .filter(F.col("hamming") <= _SH_RADIUS)
+    )
+
+
+# --------------------------------------------------------------------------
+# q94: END-TO-END CORPUS CLEAN — the flagship composition: REAL
+# extraction (mapInPandas over the interleaved input_hint shape, with
+# q68's near-dup injection) -> token-count quality gate -> 48-bit
+# simhash signatures -> banded near-dup pairs -> connected components ->
+# survivor application, one driver-checked row per extracted document.
+# This proves the extraction engine and the dedup family compose without
+# a materialization seam: extraction output is checkpointed ONCE
+# (checkpoint_memo — at real scale this is the corpus write to the
+# lake) and the quality gate, signature table, and final survivor join
+# all derive from that single frame; no stage collects to the driver
+# (the label-propagation loop's eager label-sized checkpoints are
+# documented in graph.label_propagation). Reference analog: the full
+# extract->chunk->hash->dedup chain of
+# reference src/pdf_extractor.py + src/rag/text_processor.py:534.
+# Scale shape: the only corpus-payload shuffles are the banded
+# signature self-join (key cardinality 6*2^8) and the bigram votes agg;
+# the survivor join broadcasts the label frame (clustered nodes only, a
+# tiny fraction of the corpus).
+_Q94_EXTRACTED = """
+  SELECT doc_id, text,
+         len(list_filter(string_split(text, ' '), t -> t <> '')) AS n_tokens
+  FROM (
+    SELECT doc_id, text FROM documents WHERE n_chars >= 100
+    UNION ALL
+    SELECT doc_id + 2000000 AS doc_id,
+           'xxxxxxxxxx' || SUBSTRING(text, 11) AS text
+    FROM documents WHERE doc_id % 11 = 0 AND n_chars >= 100
+  )
+"""
+
+
+def _q94_oracle() -> str:
+    good = f"SELECT doc_id, text FROM extracted WHERE n_tokens >= {_Q94_MIN_TOKENS}"
+    return f"""
+WITH RECURSIVE extracted AS (
+  {_Q94_EXTRACTED}
+),
+{simhash_pairs_sql(good)},
+edges AS (
+  SELECT left_id AS a, right_id AS b FROM dup_pairs
+  UNION ALL
+  SELECT right_id, left_id FROM dup_pairs
+),
+nodes AS (SELECT DISTINCT a AS id FROM edges),
+reach AS (
+  SELECT id, id AS lbl FROM nodes
+  UNION
+  SELECT e.b AS id, r.lbl FROM reach r JOIN edges e ON e.a = r.id
+),
+comp AS (SELECT id, MIN(lbl) AS component FROM reach GROUP BY id)
+SELECT x.doc_id,
+       CAST(x.n_tokens AS BIGINT) AS n_tokens,
+       CASE WHEN x.n_tokens < {_Q94_MIN_TOKENS} THEN 'dropped_quality'
+            WHEN c.component IS NOT NULL AND c.component <> x.doc_id
+              THEN 'dropped_dup'
+            ELSE 'kept' END AS stage,
+       CASE WHEN x.n_tokens < {_Q94_MIN_TOKENS} THEN NULL
+            ELSE COALESCE(c.component, x.doc_id) END AS survivor_id
+FROM extracted x LEFT JOIN comp c ON c.id = x.doc_id
+"""
+
+
+def _q94_base(spark, sf_dir):
+    """Extraction output (doc_id, text, n_tokens), materialized once per
+    (session, input) — the corpus-write seam a real pipeline has."""
+    from sparkextract.queries.extraction import wrap_docs
+    from sparkextract.spark.job import extract_exploded
+
+    def build():
+        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+        injected = docs.filter(F.col("doc_id") % 11 == 0).select(
+            (F.col("doc_id") + 2000000).alias("doc_id"),
+            F.concat(
+                F.lit("xxxxxxxxxx"), F.expr("substring(text, 11)")
+            ).alias("text"),
+        )
+        spans = extract_exploded(wrap_docs(docs.unionByName(injected)))
+        toks = F.filter(F.split("text", " "), lambda t: t != F.lit(""))
+        return spans.filter(F.col("kind") == "text").select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            "text",
+            F.size(toks).cast("long").alias("n_tokens"),
+        )
+
+    return checkpoint_memo(spark, sf_dir, "q94_base", build)
+
+
+@register("q94_corpus_clean_pipeline", oracle=_q94_oracle())
+def q94_corpus_clean_pipeline(spark, sf_dir):
+    from sparkextract.queries.graph import label_propagation
+
+    base = _q94_base(spark, sf_dir)
+    is_quality = F.col("n_tokens") >= _Q94_MIN_TOKENS
+    good = base.filter(is_quality).select("doc_id", "text")
+    # signature table materialized before the banded self-join (q68
+    # lesson); derives from the checkpointed base, not a re-extraction
+    sigs = checkpoint_memo(
+        spark, sf_dir, "q94_sigs", lambda: _simhash48_col(good)
+    )
+    labels = checkpoint_memo(
+        spark,
+        sf_dir,
+        "q94_labels",
+        lambda: label_propagation(simhash_banded_pairs(sigs)),
+    ).select(F.col("id").alias("l_id"), F.col("lbl").alias("component"))
+    out = base.join(
+        F.broadcast(labels), base["doc_id"] == labels["l_id"], "left"
+    )
+    stage = (
+        F.when(~is_quality, F.lit("dropped_quality"))
+        .when(
+            F.col("component").isNotNull()
+            & (F.col("component") != F.col("doc_id")),
+            F.lit("dropped_dup"),
+        )
+        .otherwise(F.lit("kept"))
+    )
+    survivor = F.when(~is_quality, F.lit(None).cast("long")).otherwise(
+        F.coalesce("component", "doc_id")
+    )
+    return out.select(
+        "doc_id",
+        "n_tokens",
+        stage.alias("stage"),
+        survivor.alias("survivor_id"),
     )
 
 
@@ -2200,8 +2438,6 @@ _Q162_NEG = -(10**12)  # logit for members the classifier skips (no tokens)
 
 
 def _q162_oracle() -> str:
-    from sparkextract.queries.quality import _q135_core_sql
-
     return f"""
 WITH corpus AS (
   SELECT doc_id, lang, text FROM documents
@@ -2245,8 +2481,6 @@ FROM cl JOIN q ON q.sig0 = cl.sig0
 
 @register("q162_quality_survivor", oracle=_q162_oracle())
 def q162_quality_survivor(spark, sf_dir):
-    from sparkextract.queries.quality import _q135_features_of
-
     def _build_m():
         docs = load(spark, sf_dir, "documents").select(
             "doc_id", "lang", "text"

@@ -54,8 +54,8 @@ from sparkextract.queries.extraction import ocr_sql
 # q95: MANIFEST STATE AFTER CRASH + RESUME — the S9/A9 checkpoint tier
 # made driver-visible: a manifest-committed extraction run is killed
 # after committing 4 of 8 buckets (fail_after_buckets — data written,
-# manifest rows absent), a second run resumes via the J2 broadcast
-# anti-join and commits the rest, and the query returns the winning
+# manifest rows absent), a second run resumes via the J2 manifest
+# probe and commits the rest, and the query returns the winning
 # manifest rollup per bucket. Reference analog: the SHA-256
 # skip-if-ingested resume probe (reference src/rag/
 # rag_pipeline.py:97-105) generalized to per-bucket lineage.
@@ -64,17 +64,17 @@ from sparkextract.queries.extraction import ocr_sql
 # span counts are SQL-derivable because the interleaved corpus has the
 # q40 passthrough property (1 text span iff n_chars>=100, 1 image_ocr
 # span iff doc_id%3==0, never a table span).
-# Scale shape: the manifest is <= num_buckets rows per run — every
-# join against it broadcasts; the only corpus-sized work is the
-# extraction write itself, once per bucket across ALL runs combined
-# (that is the point of the resume).
+# Scale shape: the manifest is <= num_buckets rows per run and is read
+# on the driver; the only corpus-sized work is the extraction write
+# itself, once per bucket across ALL runs combined (that is the point
+# of the resume).
 _Q95_BUCKETS = 8
 
 
 _Q95_FAIL_AFTER = 4
 
 
-_Q95_REAP_AGE_S = 24 * 3600  # sibling roots older than this are reaped
+_ROOT_REAP_AGE_S = 24 * 3600  # sibling roots older than this are reaped
 
 
 _Q95_ORACLE = f"""
@@ -103,7 +103,9 @@ GROUP BY doc_id_bucket
 _Q95_DONE: set[tuple[str, str]] = set()
 
 
-def _q95_root(spark, sf_dir: str) -> str:
+def _session_root(spark, sf_dir: str, tag: str) -> str:
+    """``<tmp>/sparkextract_<tag>_<key>``: one scratch root per (session,
+    input) for the queries that write (q95, q108, q145)."""
     import glob
     import hashlib
     import shutil
@@ -112,13 +114,12 @@ def _q95_root(spark, sf_dir: str) -> str:
     key = hashlib.md5(
         (spark.sparkContext.applicationId + "|" + sf_dir).encode()
     ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"sparkextract_q95_{key}")
+    root = os.path.join(tempfile.gettempdir(), f"sparkextract_{tag}_{key}")
     # reap sibling roots left by earlier sessions (each session otherwise
-    # leaks one extraction-output tree in /tmp forever — round-4 ADVICE),
-    # but only day-old ones: a fresh sibling may belong to a session that
-    # is still running. Touching our own root keeps it fresh while in use.
-    cutoff = time.time() - _Q95_REAP_AGE_S
-    for stale in glob.glob(os.path.join(tempfile.gettempdir(), "sparkextract_q95_*")):
+    # leaks one output tree in the temp dir forever), but only day-old ones: a fresh sibling may belong to a session that is still
+    # running. Touching our own root keeps it fresh while in use.
+    cutoff = time.time() - _ROOT_REAP_AGE_S
+    for stale in glob.glob(os.path.join(tempfile.gettempdir(), f"sparkextract_{tag}_*")):
         try:
             old = stale != root and os.path.getmtime(stale) < cutoff
         except OSError:  # reaped concurrently by another session
@@ -137,7 +138,7 @@ def q95_manifest_resume_state(spark, sf_dir):
     from sparkextract.queries.extraction import interleaved_docs
     from sparkextract.spark.manifest import read_manifest, run_extraction_job
 
-    root = _q95_root(spark, sf_dir)
+    root = _session_root(spark, sf_dir, "q95")
     memo_key = (spark.sparkContext.applicationId, sf_dir)
     if memo_key not in _Q95_DONE:
         shutil.rmtree(root, ignore_errors=True)
@@ -326,22 +327,6 @@ _Q108_ORACLE = f"""
 _Q108_DONE: set[tuple[str, str]] = set()
 
 
-def _stream_root(spark, sf_dir: str, tag: str) -> str:
-    import glob
-    import hashlib
-    import shutil
-    import tempfile
-
-    key = hashlib.md5(
-        (spark.sparkContext.applicationId + "|" + sf_dir).encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"sparkextract_{tag}_{key}")
-    for stale in glob.glob(os.path.join(tempfile.gettempdir(), f"sparkextract_{tag}_*")):
-        if stale != root:
-            shutil.rmtree(stale, ignore_errors=True)
-    return root
-
-
 @register("q108_streaming_incremental", oracle=_Q108_ORACLE)
 def q108_streaming_incremental(spark, sf_dir):
     import shutil
@@ -349,7 +334,7 @@ def q108_streaming_incremental(spark, sf_dir):
     from sparkextract.queries.extraction import interleaved_docs
     from sparkextract.streaming.incremental import incremental_extract
 
-    root = _stream_root(spark, sf_dir, "q108")
+    root = _session_root(spark, sf_dir, "q108")
     inp = os.path.join(root, "in")
     outp = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")
@@ -709,7 +694,7 @@ def q145_streaming_stateful_dedup(spark, sf_dir):
     from sparkextract.spark.session import ensure_workers_can_import
     from sparkextract.streaming.stateful import streaming_dedup
 
-    root = _stream_root(spark, sf_dir, "q145")
+    root = _session_root(spark, sf_dir, "q145")
     inp = os.path.join(root, "in")
     outp = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")

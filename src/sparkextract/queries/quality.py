@@ -1,7 +1,6 @@
 """Document-quality queries: the weighted quality score (F9), rule and LM
 gates, token entropy, the linear quality classifier, the Kneser-Ney
-bigram LM, encoding repair, watermark detection, secret scanning, and
-the composed extract -> quality -> dedup cleaning pipeline.
+bigram LM, encoding repair, watermark detection and secret scanning.
 
 q135 — LINEAR QUALITY-CLASSIFIER INFERENCE (the fastText / logistic
 "quality classifier" stage every production LLM corpus pipeline runs:
@@ -408,141 +407,9 @@ def q87_lm_quality_score(spark, sf_dir):
     )
 
 
-# --------------------------------------------------------------------------
-# q94: END-TO-END CORPUS CLEAN — the flagship composition: REAL
-# extraction (mapInPandas over the interleaved input_hint shape, with
-# q68's near-dup injection) -> token-count quality gate -> 48-bit
-# simhash signatures -> banded near-dup pairs -> connected components ->
-# survivor application, one driver-checked row per extracted document.
-# This proves the extraction engine and the dedup family compose without
-# a materialization seam: extraction output is checkpointed ONCE
-# (checkpoint_memo — at real scale this is the corpus write to the
-# lake) and the quality gate, signature table, and final survivor join
-# all derive from that single frame; no stage collects to the driver
-# (the label-propagation loop's eager label-sized checkpoints are
-# documented in graph.label_propagation). Reference analog: the full
-# extract->chunk->hash->dedup chain of
-# reference src/pdf_extractor.py + src/rag/text_processor.py:534.
-# Scale shape: the only corpus-payload shuffles are the banded
-# signature self-join (key cardinality 6*2^8) and the bigram votes agg;
-# the survivor join broadcasts the label frame (clustered nodes only, a
-# tiny fraction of the corpus).
+# q94's token-count quality gate; the composed cleaning pipeline itself
+# lives in dedup.py, next to the simhash pairs it joins
 _Q94_MIN_TOKENS = 20
-
-
-_Q94_EXTRACTED = """
-  SELECT doc_id, text,
-         len(list_filter(string_split(text, ' '), t -> t <> '')) AS n_tokens
-  FROM (
-    SELECT doc_id, text FROM documents WHERE n_chars >= 100
-    UNION ALL
-    SELECT doc_id + 2000000 AS doc_id,
-           'xxxxxxxxxx' || SUBSTRING(text, 11) AS text
-    FROM documents WHERE doc_id % 11 = 0 AND n_chars >= 100
-  )
-"""
-
-
-def _q94_oracle() -> str:
-    from sparkextract.queries.dedup import simhash_pairs_sql
-
-    good = f"SELECT doc_id, text FROM extracted WHERE n_tokens >= {_Q94_MIN_TOKENS}"
-    return f"""
-WITH RECURSIVE extracted AS (
-  {_Q94_EXTRACTED}
-),
-{simhash_pairs_sql(good)},
-edges AS (
-  SELECT left_id AS a, right_id AS b FROM dup_pairs
-  UNION ALL
-  SELECT right_id, left_id FROM dup_pairs
-),
-nodes AS (SELECT DISTINCT a AS id FROM edges),
-reach AS (
-  SELECT id, id AS lbl FROM nodes
-  UNION
-  SELECT e.b AS id, r.lbl FROM reach r JOIN edges e ON e.a = r.id
-),
-comp AS (SELECT id, MIN(lbl) AS component FROM reach GROUP BY id)
-SELECT x.doc_id,
-       CAST(x.n_tokens AS BIGINT) AS n_tokens,
-       CASE WHEN x.n_tokens < {_Q94_MIN_TOKENS} THEN 'dropped_quality'
-            WHEN c.component IS NOT NULL AND c.component <> x.doc_id
-              THEN 'dropped_dup'
-            ELSE 'kept' END AS stage,
-       CASE WHEN x.n_tokens < {_Q94_MIN_TOKENS} THEN NULL
-            ELSE COALESCE(c.component, x.doc_id) END AS survivor_id
-FROM extracted x LEFT JOIN comp c ON c.id = x.doc_id
-"""
-
-
-def _q94_base(spark, sf_dir):
-    """Extraction output (doc_id, text, n_tokens), materialized once per
-    (session, input) — the corpus-write seam a real pipeline has."""
-    from sparkextract.queries.base import checkpoint_memo
-    from sparkextract.queries.extraction import wrap_docs
-    from sparkextract.spark.job import extract_exploded
-
-    def build():
-        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        injected = docs.filter(F.col("doc_id") % 11 == 0).select(
-            (F.col("doc_id") + 2000000).alias("doc_id"),
-            F.concat(
-                F.lit("xxxxxxxxxx"), F.expr("substring(text, 11)")
-            ).alias("text"),
-        )
-        spans = extract_exploded(wrap_docs(docs.unionByName(injected)))
-        toks = F.filter(F.split("text", " "), lambda t: t != F.lit(""))
-        return spans.filter(F.col("kind") == "text").select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            "text",
-            F.size(toks).cast("long").alias("n_tokens"),
-        )
-
-    return checkpoint_memo(spark, sf_dir, "q94_base", build)
-
-
-@register("q94_corpus_clean_pipeline", oracle=_q94_oracle())
-def q94_corpus_clean_pipeline(spark, sf_dir):
-    from sparkextract.queries.base import checkpoint_memo
-    from sparkextract.queries.dedup import _simhash48_col, simhash_banded_pairs
-    from sparkextract.queries.graph import label_propagation
-
-    base = _q94_base(spark, sf_dir)
-    is_quality = F.col("n_tokens") >= _Q94_MIN_TOKENS
-    good = base.filter(is_quality).select("doc_id", "text")
-    # signature table materialized before the banded self-join (q68
-    # lesson); derives from the checkpointed base, not a re-extraction
-    sigs = checkpoint_memo(
-        spark, sf_dir, "q94_sigs", lambda: _simhash48_col(good)
-    )
-    labels = checkpoint_memo(
-        spark,
-        sf_dir,
-        "q94_labels",
-        lambda: label_propagation(simhash_banded_pairs(sigs)),
-    ).select(F.col("id").alias("l_id"), F.col("lbl").alias("component"))
-    out = base.join(
-        F.broadcast(labels), base["doc_id"] == labels["l_id"], "left"
-    )
-    stage = (
-        F.when(~is_quality, F.lit("dropped_quality"))
-        .when(
-            F.col("component").isNotNull()
-            & (F.col("component") != F.col("doc_id")),
-            F.lit("dropped_dup"),
-        )
-        .otherwise(F.lit("kept"))
-    )
-    survivor = F.when(~is_quality, F.lit(None).cast("long")).otherwise(
-        F.coalesce("component", "doc_id")
-    )
-    return out.select(
-        "doc_id",
-        "n_tokens",
-        stage.alias("stage"),
-        survivor.alias("survivor_id"),
-    )
 
 
 # --------------------------------------------------------------------------

@@ -4,19 +4,22 @@ Emulates Iceberg snapshot-commit semantics on plain parquet (no Iceberg
 jars in the sandbox — SURVEY.md §7.4.3): output data lands under
 ``data/epoch=<run_id>/bucket=<k>/`` and becomes *visible* only when a
 manifest row ``(job_run_id, doc_id_bucket, status='done', metrics...)``
-is appended. Readers semi-join data against the manifest, keeping one
-epoch per bucket, so a run that dies after writing data but before
-committing its manifest rows leaves invisible files, and the rerun
-reprocesses those buckets exactly once (FIXTURES.md F3 resume test).
+is appended. Readers open only the winning ``epoch=<run>/bucket=<k>``
+directory of each committed bucket, so a run that dies after writing
+data but before committing its manifest rows leaves invisible files, and
+the rerun reprocesses those buckets exactly once (FIXTURES.md F3 resume
+test).
 
-A run is one extract+write job plus one small aggregate: the write's
-observation carries the per-bucket span/table counts, and the manifest
-rows are built on the driver, never by re-running the input plan.
+A run's only Spark work is the extract+write action: the write's
+observation carries the per-bucket doc/span/table counts. The manifest holds at most
+``num_buckets`` rows per run, so it is a driver-side table: read with
+``pyarrow.dataset`` and appended with ``pyarrow.parquet``, never through
+a Spark job.
 
 The resume probe is the reference's SHA-256 skip-if-ingested check
-(/root/reference/src/rag/rag_pipeline.py:97-105) generalized from
-per-document to per-bucket: a left-anti join against completed buckets
-(J2, SURVEY.md §2.3).
+(reference src/rag/rag_pipeline.py:97-105) generalized from per-document
+to per-bucket: one manifest lookup on the driver, then a filter on the
+bucket id (J2, SURVEY.md §2.3).
 
 On a real cluster the same API is backed by an Iceberg manifest table
 (``df.writeTo(...).append()`` is atomic per snapshot); the bucket math
@@ -30,12 +33,18 @@ import time
 import uuid
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from sparkextract import config
-from sparkextract.schema import MANIFEST_SCHEMA
-from sparkextract.spark.job import extract_exploded
+from sparkextract.schema import EXPLODED_DDL, EXPLODED_SCHEMA, MANIFEST_SCHEMA
+from sparkextract.spark.job import _EXPLODED_COLS, extract_exploded
+
+_MANIFEST_ARROW = to_arrow_schema(MANIFEST_SCHEMA)
 
 
 def bucket_expr(num_buckets: int = config.MANIFEST_NUM_BUCKETS):
@@ -50,22 +59,41 @@ def _data_dir(root: str) -> str:
     return os.path.join(root, "data")
 
 
+def _visible_parts(mdir: str) -> bool:
+    # Spark and pyarrow both skip ``.``/``_``-prefixed files (temp parts,
+    # checksums, _SUCCESS)
+    return os.path.isdir(mdir) and any(
+        f.endswith(".parquet") and not f.startswith((".", "_")) for f in os.listdir(mdir)
+    )
+
+
 def read_manifest(spark: SparkSession, root: str) -> DataFrame:
     mdir = _manifest_dir(root)
-    if not os.path.isdir(mdir) or not any(
-        f.endswith(".parquet") for f in os.listdir(mdir)
-    ):
+    if not _visible_parts(mdir):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
     return spark.read.schema(MANIFEST_SCHEMA).parquet(mdir)
 
 
-def done_buckets(spark: SparkSession, root: str) -> DataFrame:
-    """One row per completed bucket; earliest commit wins (idempotency
-    under concurrent/duplicated runs)."""
-    m = read_manifest(spark, root).filter(F.col("status") == "done")
-    return m.groupBy("doc_id_bucket").agg(
-        F.min_by("job_run_id", "committed_at").alias("job_run_id")
-    )
+def committed_epochs(root: str) -> dict[int, str]:
+    """``{bucket: job_run_id}`` of every committed bucket; the earliest
+    commit wins (idempotency under concurrent/duplicated runs).
+
+    Read on the driver, with the manifest's own schema: parts written by
+    Spark store ``committed_at`` as INT96, which pyarrow alone reads as a
+    naive ``timestamp[ns]``, and without a schema the dataset would take
+    whichever type its first file has."""
+    mdir = _manifest_dir(root)
+    if not _visible_parts(mdir):
+        return {}
+    m = ds.dataset(mdir, format="parquet", schema=_MANIFEST_ARROW)
+    done = m.to_table(
+        columns=["doc_id_bucket", "job_run_id", "committed_at"],
+        filter=ds.field("status") == "done",
+    ).sort_by("committed_at")
+    won: dict[int, str] = {}
+    for k, run in zip(done["doc_id_bucket"].to_pylist(), done["job_run_id"].to_pylist()):
+        won.setdefault(k, run)
+    return won
 
 
 def filter_todo(
@@ -76,18 +104,30 @@ def filter_todo(
     bucket_col=None,
 ) -> DataFrame:
     """J2: drop documents whose bucket is already committed. The done-
-    bucket set is tiny (<= num_buckets rows) → broadcast anti-join, no
-    shuffle of the big side.
+    bucket set (<= num_buckets ids) is looked up on the driver, so the
+    probe is a filter on the bucket id: no join, no broadcast job.
 
     ``bucket_col`` overrides the default xxhash64 bucket expression
     (q95 passes the engine-portable md5 bucket so the DuckDB oracle can
     reproduce the assignment; a real deployment keeps xxhash64)."""
-    done = done_buckets(spark, root).select("doc_id_bucket")
     bucket = bucket_expr(num_buckets) if bucket_col is None else bucket_col.cast("int")
-    return (
-        docs.withColumn("doc_id_bucket", bucket)
-        .join(F.broadcast(done), "doc_id_bucket", "left_anti")
+    todo = docs.withColumn("doc_id_bucket", bucket)
+    done = sorted(committed_epochs(root))
+    return todo.filter(~F.col("doc_id_bucket").isin(done)) if done else todo
+
+
+def _append_manifest(root: str, run_id: str, rows: list[tuple]) -> None:
+    """Append ``rows`` as one parquet part, written under a ``.``-prefixed
+    temp name and renamed into place, so no reader sees a partial part."""
+    mdir = _manifest_dir(root)
+    os.makedirs(mdir, exist_ok=True)
+    table = pa.Table.from_pylist(
+        [dict(zip(_MANIFEST_ARROW.names, r)) for r in rows], schema=_MANIFEST_ARROW
     )
+    name = f"part-{run_id}-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(mdir, "." + name)
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(mdir, name))
 
 
 def run_extraction_job(
@@ -100,7 +140,7 @@ def run_extraction_job(
     fail_after_buckets: int | None = None,
     bucket_col=None,
 ) -> dict:
-    """One resumable run: anti-join manifest → extract → write → commit.
+    """One resumable run: manifest probe → extract → write → commit.
 
     ``fail_after_buckets`` simulates a mid-job crash for the resume test:
     only buckets with ``doc_id_bucket < fail_after_buckets`` get manifest
@@ -116,18 +156,25 @@ def run_extraction_job(
 
     todo = filter_todo(docs, spark, root, num_buckets, bucket_col=bucket_col)
     exploded = extract_exploded(todo.drop("doc_id_bucket"), skew_threshold=skew_threshold)
+    # one marker row (NULL kind) per todo doc, so that docs with no spans
+    # still count; parquet column pruning reads only doc_id for them
+    markers = todo.select(
+        "doc_id", *(F.lit(None).cast(f.dataType).alias(f.name) for f in EXPLODED_SCHEMA[1:])
+    )
     out_bucket = bucket_expr(num_buckets) if bucket_col is None else bucket_col.cast("int")
-    exploded = exploded.withColumn("bucket", out_bucket)
+    rows = exploded.unionByName(markers).withColumn("bucket", out_bucket)
 
-    # Per-bucket span/table counts ride along with the WRITE via
+    # Per-bucket doc/span/table counts ride along with the WRITE via
     # df.observe(): no re-read of the output and no second pass of the
-    # extraction subtree. Grouped aggs aren't expressible in observe(),
-    # so each count is a ``histogram_numeric`` over the bucket id, whose
-    # cost does not grow with num_buckets. It is exact here: Spark merges
-    # histogram bins only while it holds more than ``nb`` distinct values,
-    # and a bucket id takes at most num_buckets (``bucket_counts`` checks
-    # this against plain counts before anything commits; the double cast
+    # input. Grouped aggs aren't expressible in observe(), so each count
+    # is a ``histogram_numeric`` over the bucket id, whose cost does not
+    # grow with num_buckets. It is exact here: Spark merges histogram
+    # bins only while it holds more than ``nb`` distinct values, and a
+    # bucket id takes at most num_buckets (``bucket_counts`` checks this
+    # against plain counts before anything commits; the double cast
     # keeps a merged bin's fractional centre visible to that check).
+    # Docs are counted as marker rows, spans and tables as the others;
+    # the markers are dropped right above the observation.
     # The CollectMetrics node sits ABOVE the bucket repartition, i.e. in
     # the result/write stage: observed-metric updates from the final
     # stage are deduplicated per successful task, whereas a map-stage
@@ -135,41 +182,42 @@ def run_extraction_job(
     # cluster (fetch-failure re-execution re-runs map tasks).
     obs = Observation(f"bucket_metrics_{run_id}")
     bucket = F.col("bucket").cast("double")
+    is_span = F.col("kind").isNotNull()
     is_table = F.col("kind") == config.KIND_TABLE
     nb = F.lit(max(num_buckets, 2))  # histogram_numeric needs nb >= 2
     aggs = [
-        F.histogram_numeric(bucket, nb).alias("span_hist"),
-        F.count("*").alias("spans"),
+        F.histogram_numeric(F.when(~is_span, bucket), nb).alias("doc_hist"),
+        F.count_if(~is_span).alias("docs"),
+        F.histogram_numeric(F.when(is_span, bucket), nb).alias("span_hist"),
+        F.count_if(is_span).alias("spans"),
         F.histogram_numeric(F.when(is_table, bucket), nb).alias("table_hist"),
         F.count_if(is_table).alias("tables"),
     ]
-    observed = exploded.repartition("bucket").observe(obs, *aggs)
+    observed = rows.repartition("bucket").observe(obs, *aggs).filter(is_span)
     observed.write.partitionBy("bucket").mode("overwrite").parquet(
         os.path.join(_data_dir(root), f"epoch={run_id}")
     )
     metrics = obs.get
-    spans = bucket_counts(metrics.get("span_hist"), metrics.get("spans", 0), num_buckets)
-    tables = bucket_counts(metrics.get("table_hist"), metrics.get("tables", 0), num_buckets)
+    doc_counts, spans, tables = (
+        bucket_counts(metrics.get(f"{c}_hist"), metrics.get(f"{c}s", 0), num_buckets)
+        for c in ("doc", "span", "table")
+    )
 
-    # Per-bucket lineage + metrics rows, built on the driver: the todo
-    # side's per-bucket doc counts (<= num_buckets rows) are the one extra
-    # job, so buckets whose docs produced no spans still commit.
-    doc_counts = todo.groupBy("doc_id_bucket").agg(F.countDistinct("doc_id")).collect()
+    # Per-bucket lineage + metrics rows, built and appended on the driver
     wall_ms = int((time.time() - t0) * 1000)
     committed_at = datetime.now(timezone.utc)
-    rows = [
+    commit = [
         (run_id, k, "done", n, spans.get(k, 0), tables.get(k, 0), wall_ms, committed_at)
-        for k, n in sorted(doc_counts)
+        for k, n in sorted(doc_counts.items())
         if fail_after_buckets is None or k < fail_after_buckets
     ]
-    if rows:  # a rerun with nothing left to do commits nothing
-        commit = spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1)
-        commit.write.mode("append").parquet(_manifest_dir(root))
+    if commit:  # a rerun with nothing left to do commits nothing
+        _append_manifest(root, run_id, commit)
     return {
         "run_id": run_id,
-        "docs": sum(r[3] for r in rows),
-        "spans": sum(r[4] for r in rows),
-        "tables": sum(r[5] for r in rows),
+        "docs": sum(r[3] for r in commit),
+        "spans": sum(r[4] for r in commit),
+        "tables": sum(r[5] for r in commit),
         "wall_s": time.time() - t0,
     }
 
@@ -189,15 +237,14 @@ def bucket_counts(bins, total: int, num_buckets: int) -> dict[int, int]:
 
 
 def read_extracted(spark: SparkSession, root: str) -> DataFrame:
-    """Committed output only: semi-join data files against the manifest's
-    winning (bucket, epoch) pairs."""
+    """Committed output only: the winning epoch's directory of every
+    committed bucket. Uncommitted files are never listed or opened."""
     ddir = _data_dir(root)
-    data = spark.read.option("basePath", ddir).parquet(ddir)
-    data = data.withColumn("epoch", F.regexp_extract(F.input_file_name(), r"epoch=([^/]+)/", 1))
-    wins = done_buckets(spark, root).select(
-        F.col("doc_id_bucket").alias("bucket"), F.col("job_run_id").alias("epoch")
-    )
-    return (
-        data.join(F.broadcast(wins), ["bucket", "epoch"], "left_semi")
-        .select("doc_id", "kind", "text", "media_ref", "offset")
-    )
+    paths = [
+        p
+        for k, run in sorted(committed_epochs(root).items())
+        if os.path.isdir(p := os.path.join(ddir, f"epoch={run}", f"bucket={k}"))
+    ]
+    if not paths:  # nothing committed, or only buckets without spans
+        return spark.createDataFrame([], EXPLODED_DDL)
+    return spark.read.option("basePath", ddir).parquet(*paths).select(*_EXPLODED_COLS)

@@ -3,7 +3,7 @@
 The reference has NO streaming operators (SURVEY.md §2.9) — its only
 streaming-adjacent concept is idempotent re-ingest (skip already-hashed
 docs, /root/reference/src/rag/rag_pipeline.py:97-105). The batch engine
-covers that with the manifest anti-join; this module adds the idiomatic
+covers that with the manifest probe; this module adds the idiomatic
 Spark alternative for *continuously arriving* document files: a file
 source + the SAME whole-doc ``mapInPandas`` core + an exactly-once
 parquet sink, with progress tracked in the streaming checkpoint (file-

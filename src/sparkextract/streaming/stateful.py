@@ -15,7 +15,7 @@ training-data pipeline needs on top of that:
   first arrival of each key is emitted, every later arrival in any
   micro-batch is suppressed, and the per-key state survives restarts via
   the checkpoint. This is the arrival-time analog of the batch
-  ``dropDuplicates``/manifest anti-join (reference skip-if-ingested,
+  ``dropDuplicates``/manifest resume probe (reference skip-if-ingested,
   /root/reference/src/rag/rag_pipeline.py:97-105).
 
 Scale notes: the window agg keeps state only inside the watermark

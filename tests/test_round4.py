@@ -161,24 +161,31 @@ def test_q95_crash_resume_split(spark):
 
 def test_q95_root_reaps_only_day_old_siblings(tmp_path, monkeypatch):
     """A sibling root of another, possibly still running, session survives
-    ``_q95_root``; only one untouched for more than a day is reaped."""
+    ``_session_root``; only one untouched for more than a day is reaped.
+    The streaming queries' roots (q108, q145) follow the same rule."""
     import tempfile
     import types
 
-    from sparkextract.queries.incremental import _Q95_REAP_AGE_S, _q95_root
+    from sparkextract.queries.incremental import _ROOT_REAP_AGE_S, _session_root
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    fresh = tmp_path / "sparkextract_q95_fresh"
-    stale = tmp_path / "sparkextract_q95_stale"
-    for d in (fresh, stale):
-        (d / "manifest").mkdir(parents=True)
-    old = time.time() - _Q95_REAP_AGE_S - 60
-    os.utime(stale, (old, old))
     fake = types.SimpleNamespace(sparkContext=types.SimpleNamespace(applicationId="app-1"))
-    root = _q95_root(fake, "/data/sf")
-    assert root.startswith(str(tmp_path)) and root not in (str(fresh), str(stale))
-    assert (fresh / "manifest").is_dir()
-    assert not stale.exists()
+    for tag in ("q95", "q145"):
+        fresh = tmp_path / f"sparkextract_{tag}_fresh"
+        stale = tmp_path / f"sparkextract_{tag}_stale"
+        for d in (fresh, stale):
+            (d / "manifest").mkdir(parents=True)
+        old = time.time() - _ROOT_REAP_AGE_S - 60
+        os.utime(stale, (old, old))
+        root = _session_root(fake, "/data/sf", tag)
+        assert root.startswith(str(tmp_path)) and root not in (str(fresh), str(stale))
+        assert (fresh / "manifest").is_dir()
+        assert not stale.exists()
+        # the root in use is touched, so a later session does not reap it
+        os.makedirs(root)
+        os.utime(root, (old, old))
+        assert _session_root(fake, "/data/sf", tag) == root
+        assert os.path.getmtime(root) > old + 60
 
 
 def test_q96_block_dedup_first_writer_wins(spark):

@@ -4,6 +4,8 @@ and checkpoint/resume idempotency."""
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,10 +13,12 @@ from sparkextract.core.extract import extract_document
 from sparkextract.corpus import generate_corpus
 from sparkextract.spark.datagen import corpus_df
 from sparkextract.spark.job import assemble_spans, extract_documents, extract_exploded
-from sparkextract.schema import DOC_SCHEMA
+from sparkextract.schema import DOC_SCHEMA, MANIFEST_SCHEMA
 from sparkextract.spark.manifest import (
+    _append_manifest,
     bucket_counts,
     bucket_expr,
+    filter_todo,
     read_extracted,
     read_manifest,
     run_extraction_job,
@@ -229,3 +233,89 @@ def test_rerun_over_committed_root_is_noop(spark, docs, tmp_path):
     assert (again["docs"], again["spans"], again["tables"]) == (0, 0, 0)
     assert read_manifest(spark, root).count() == n_rows
     assert sorted(map(tuple, read_extracted(spark, root).collect())) == before
+
+
+def _jobs(spark, group, action) -> int:
+    """Number of Spark jobs ``action()`` launches."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_launches_only_its_write_jobs(spark, docs, tmp_path):
+    """The resume probe, the per-bucket counts and the manifest commit
+    launch no Spark job: a run launches no more jobs than the bare
+    extract+write action over the docs it has to do, on a fresh root and
+    on a crashed-then-resumed one."""
+    nb = 8
+    docs.write.parquet(str(tmp_path / "in"))
+    src = spark.read.parquet(str(tmp_path / "in"))
+
+    def bare(todo, out):
+        (
+            extract_exploded(todo).withColumn("bucket", bucket_expr(nb))
+            .repartition("bucket").write.partitionBy("bucket").mode("overwrite")
+            .parquet(str(tmp_path / out))
+        )
+
+    root = str(tmp_path / "fresh")
+    fresh = _jobs(spark, "fresh_run", lambda: run_extraction_job(
+        spark, src, root, run_id="fresh", num_buckets=nb))
+    assert 0 < fresh <= _jobs(spark, "fresh_bare", lambda: bare(src, "bare_fresh"))
+
+    root = str(tmp_path / "resumed")
+    run_extraction_job(spark, src, root, run_id="crashed", num_buckets=nb, fail_after_buckets=3)
+    resumed = _jobs(spark, "resumed_run", lambda: run_extraction_job(
+        spark, src, root, run_id="resumed", num_buckets=nb))
+    todo = src.filter(bucket_expr(nb) >= 3)
+    assert 0 < resumed <= _jobs(spark, "resumed_bare", lambda: bare(todo, "bare_resumed"))
+
+
+def test_mixed_layout_manifest(spark, docs, tmp_path):
+    """A manifest that mixes a Spark-written part (INT96 timestamps,
+    _SUCCESS, .crc files) with pyarrow-written parts: a bucket's earliest
+    commit wins in both the resume probe and the read, and a file of an
+    uncommitted bucket of the crashed epoch is never opened."""
+    nb = 8
+    root = str(tmp_path / "root")
+    mdir = os.path.join(root, "manifest")
+    run_extraction_job(spark, docs, root, run_id="crashed", num_buckets=nb, fail_after_buckets=3)
+    # the crashed run's commit, rewritten the way Spark wrote manifests
+    rows = [tuple(r) for r in read_manifest(spark, root).collect()]
+    assert sorted(r[1] for r in rows) == [0, 1, 2]
+    for f in os.listdir(mdir):
+        os.remove(os.path.join(mdir, f))
+    spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1).write.mode("append").parquet(mdir)
+    names = os.listdir(mdir)
+    assert "_SUCCESS" in names and any(f.endswith(".crc") for f in names)
+    (spark_part,) = [f for f in names if f.endswith(".parquet") and not f.startswith(".")]
+    int96 = pq.read_schema(os.path.join(mdir, spark_part)).field("committed_at").type
+    assert int96 == pa.timestamp("ns")
+    # a later duplicate commit of bucket 1, in the pyarrow layout
+    later = rows[0][-1].replace(year=rows[0][-1].year + 1)
+    _append_manifest(root, "later", [("later", 1, "done", 0, 0, 0, 0, later)])
+    # garbage in an uncommitted bucket of the crashed epoch
+    bad = os.path.join(root, "data", "epoch=crashed", "bucket=5")
+    victim = next(f for f in sorted(os.listdir(bad)) if f.endswith(".parquet"))
+    with open(os.path.join(bad, victim), "wb") as f:
+        f.write(b"not a parquet file")
+
+    todo = filter_todo(docs, spark, root, nb)
+    assert {r[0] for r in todo.select("doc_id_bucket").distinct().collect()} == set(range(3, 8))
+
+    in_bucket = dict(docs.select("doc_id", bucket_expr(nb)).collect())
+    golden = sorted(
+        (d, s["kind"], s["text"], s["media_ref"], s["offset"])
+        for d, spans in _oracle().items()
+        for s in spans
+    )
+    got = sorted(map(tuple, read_extracted(spark, root).collect()))
+    assert got == [r for r in golden if in_bucket[r[0]] < 3]
+
+    run_extraction_job(spark, docs, root, run_id="resumed", num_buckets=nb)
+    assert sorted(map(tuple, read_extracted(spark, root).collect())) == golden
+    assert read_manifest(spark, root).count() == 3 + 1 + 5
