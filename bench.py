@@ -191,7 +191,7 @@ def _scaling_child(cores: int) -> dict:
     time.sleep(2)
 
     t0 = time.time()
-    spans = extract_exploded(docs, parallelism=cores * 2).count()
+    spans = extract_exploded(docs).count()
     elapsed = time.time() - t0
     spark.stop()
     return {

@@ -4,7 +4,7 @@
     spark-submit --py-files sparkextract.zip scripts/run_extract.py \
         --input  <parquet-or-iceberg documents table path> \
         --output <job root: data/ + manifest/ written beneath> \
-        [--run-id RUN] [--num-buckets 64] [--skew-threshold 512] \
+        [--run-id RUN] [--num-buckets 64] \
         [--generate-docs N]   # demo: synthesize the input corpus first
 
 On a cluster, spark-submit provides the master and the session;
@@ -32,7 +32,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--num-buckets", type=int, default=64)
-    ap.add_argument("--skew-threshold", type=int, default=512)
     ap.add_argument("--generate-docs", type=int, default=0)
     args = ap.parse_args()
 
@@ -58,7 +57,6 @@ def main() -> None:
         args.output,
         run_id=args.run_id,
         num_buckets=args.num_buckets,
-        skew_threshold=args.skew_threshold,
     )
     print(json.dumps(metrics))
 

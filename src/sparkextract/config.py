@@ -70,10 +70,10 @@ FORM_MAX_LINE = 100        # key:value lines longer than this are prose
 FORM_KEY_RE = r"^\s*([A-Za-z_][A-Za-z0-9_ ]{0,40}?)\s*:\s*(\S.*?)?\s*$"
 FORM_EMPTY_VALUE = "[Empty]"   # reference: src/rag/text_processor.py:494-510 (F5)
 
-# ---- skew handling (north_rule: salting for skewed mega-documents) ----
-MEGA_DOC_SPAN_THRESHOLD = 512   # docs with more input spans go down the
-                                # explode/split/reassemble path
-SKEW_RANGE_SIZE = 128           # spans per split range for mega docs
+# ---- corpus shape ----
+MEGA_DOC_SPAN_THRESHOLD = 512   # a doc with more input spans is a mega doc
+                                # (corpus.py draws 600-1400); extraction runs
+                                # every doc size on one path
 
 # ---- manifest / checkpoint ----
 MANIFEST_NUM_BUCKETS = 64       # pmod(xxhash64(doc_id), N) output buckets

@@ -171,8 +171,12 @@ class _Walker(HTMLParser):
 
 # Quote-aware tag token: quoted attribute values may contain ">" (matching
 # HTMLParser's locatestarttagend behavior); an unquoted ">" ends the tag.
+# The three alternatives share no first character, so matching is linear:
+# a quote outside a closed quoted value fails the match and the caller
+# falls back to HTMLParser (if the unquoted branch also took quotes, a run
+# of stray quotes would backtrack exponentially).
 _TAG_RE = re.compile(
-    r"<(/?)([a-zA-Z][a-zA-Z0-9]*)((?:\"[^\"<]*\"|'[^'<]*'|[^<>])*)>"
+    r"<(/?)([a-zA-Z][a-zA-Z0-9]*)((?:\"[^\"<]*\"|'[^'<]*'|[^<>\"'])*)>"
 )
 _FORM_FIELD_TAGS = ("input", "select", "textarea")
 _NO_ATTRS: list = []

@@ -4,10 +4,10 @@
 run directly it produces golden fixtures; wrapped in Spark `mapInPandas`
 it is the distributed engine. Identical code → span-sequence equality by
 construction; the tests then verify the *plumbing* (Arrow round-trips,
-partitioning invariance, skew split/reassemble).
+partitioning invariance, doc runs that cross Arrow batches).
 
-It is split into two phases so mega-documents can be split across tasks
-(SURVEY.md §7.4.2):
+It is split into two phases so the engine can stream a document's spans
+instead of holding the whole document (SURVEY.md §7.4.2):
 
 - phase 1 ``extract_input_span`` — context-free per input span: input span
   -> list of intermediate items ``(kind, text, media_ref, src_offset,
@@ -17,7 +17,7 @@ It is split into two phases so mega-documents can be split across tasks
   /root/reference/src/rag/text_processor.py:38-87).
 
 Because phase 1 never looks outside its span and phase 2 is a pure
-function of the multiset of phase-1 items, *any* partitioning of a
+function of the multiset of phase-1 items, *any* order or batching of a
 document's spans yields identical output.
 """
 
@@ -113,8 +113,8 @@ def finalize(items: Iterable[Item]) -> list[Span]:
         # (rank, src, sub) is unique for well-formed docs; the trailing
         # (text, media_ref) tie-break makes the result a pure function of
         # the item MULTISET even for malformed duplicate-offset inputs —
-        # required because the mega-doc path feeds items in shuffle-arrival
-        # order (job.py _finalize_group)
+        # required because the Spark path feeds items in the exploded
+        # array's order, not sorted by offset (job.py _extract_runs)
         key=lambda it: (
             config.KIND_RANK[it[0]],
             it[3],
@@ -147,10 +147,10 @@ def extract_document(spans: Iterable[Mapping] | None) -> list[Span]:
 
     Input spans are processed in their source ``offset`` order; a missing
     or null array yields an empty output, and null elements are skipped
-    (the Spark paths drop them too). Duplicate offsets (malformed
+    (the Spark path drops them too). Duplicate offsets (malformed
     input) tie-break on (kind, text, media_ref) so the output is a pure
     function of the span *set* — never of the physical list order, which
-    Spark does not guarantee after a mega-doc split/reassemble.
+    the Spark path does not sort.
     """
     if spans is None:
         return []

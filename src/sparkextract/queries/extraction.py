@@ -1,5 +1,5 @@
 """Queries that run the extraction core (``spark/job.py``) end to end:
-span passthrough and kind stats, the mega-doc split, doc-grain
+span passthrough and kind stats, mega documents, doc-grain
 assembly, overlap chunking (W2), the OCR clean chain (P7), malformed
 input (unknown kinds, duplicate offsets), table/form capture (F4/F5),
 per-span confidence (A1-A3) and form-field keyword grouping (F6).
@@ -134,14 +134,14 @@ def q41_extract_kind_stats(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# q42: the MEGA-document skew path, full-row oracle-verified. Even doc_ids
-# fold into 4 mega documents of hundreds of spans each (above the forced
-# skew_threshold → explode / salted phase-1 / applyInPandas finalize);
-# odd doc_ids stay singleton docs (whole-doc mapInPandas path) — BOTH
-# paths run in one plan and their union is compared row-for-row against
-# the SQL-derived expectation. Every doc_id%5==0 doc also contributes a
-# media span, so image_ocr passthrough and the texts-before-images kind
-# ordering (core/extract.py finalize) are verified through the split too.
+# q42: MEGA documents next to singletons, full-row oracle-verified. Even
+# doc_ids fold into 4 mega documents of hundreds of spans each, whose
+# exploded runs may cross Arrow batches (the run-carrying UDF in spark/job.py);
+# odd doc_ids stay singleton docs — both shapes run in one plan and the
+# output is compared row-for-row against the SQL-derived expectation.
+# Every doc_id%5==0 doc also contributes a media span, so image_ocr
+# passthrough and the texts-before-images kind ordering (core/extract.py
+# finalize) are verified on the mega docs too.
 _Q42_ORACLE = f"""
     WITH contrib AS (
       SELECT doc_id,
@@ -221,7 +221,7 @@ def mega_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q42_extract_mega_skew(spark, sf_dir):
     from sparkextract.spark.job import extract_exploded
 
-    return extract_exploded(mega_docs(spark, sf_dir), skew_threshold=32)
+    return extract_exploded(mega_docs(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -812,10 +812,7 @@ def q69_field_groups(spark, sf_dir):
     itself crosses into Python (Arrow-batched, as everywhere)."""
     from sparkextract.spark.job import extract_exploded
 
-    # _q69_docs wraps every doc as exactly ONE input span, so the mega-doc
-    # split can never trigger; skew_threshold=None skips the small/mega
-    # source split and its second parquet scan (PLANS.md showed 2 scans)
-    out = extract_exploded(_q69_docs(spark, sf_dir), skew_threshold=None)
+    out = extract_exploded(_q69_docs(spark, sf_dir))
     fields = out.filter(F.col("kind") == "form").select(
         F.explode(F.split("text", "\n")).alias("line")
     )

@@ -306,7 +306,7 @@ def q106_incremental_extraction(spark, sf_dir):
 # Reference analog: idempotent re-ingest (reference src/rag/
 # rag_pipeline.py:97-105) as a *continuous arrival* pipeline instead of
 # a rerun loop.
-# Scale shape: the drain is the batch whole-doc map (zero shuffles after
+# Scale shape: the drain is the batch extraction map (zero shuffles after
 # the scan); each incremental run touches only newly-arrived files, so
 # steady-state cost tracks the arrival rate, never the corpus size.
 _Q108_ORACLE = f"""

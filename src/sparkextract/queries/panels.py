@@ -651,7 +651,7 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
         ],
     ),
     # the extraction core through mapInPandas: span passthrough, kind
-    # stats, mega-doc salt/split/reassemble, doc-grain assembly, and the
+    # stats, mega documents, doc-grain assembly, and the
     # structured-streaming incremental drain (full-row checked against
     # the same passthrough expectation).
     "panel_extract_core": (

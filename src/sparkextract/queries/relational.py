@@ -18,8 +18,8 @@ of the new-island flag, and the per-doc report is (n_spans, n_islands,
 covered_tokens, max_island_len) — all exact integers.
 Scale shape: the only shuffle key is doc_id; both windows and both
 groupBys share that partitioning (a doc's spans are bounded by its
-token count, so no per-key skew beyond the documented mega-doc path
-q42 already handles). Reference intent: the span-offset bookkeeping of
+token count, so no per-key skew beyond the mega documents q42 already
+covers). Reference intent: the span-offset bookkeeping of
 reference src/text_processor.py:38-87 (ordered span assembly)
 extended with the overlap-coalescing every redaction pipeline needs.
 

@@ -34,12 +34,6 @@ EXPLODED_SCHEMA = T.StructType(
 )
 EXPLODED_DDL = "doc_id string, kind string, text string, media_ref string, offset int"
 
-# phase-1 intermediate items (mega-doc split path)
-ITEM_DDL = (
-    "doc_id string, kind string, text string, media_ref string, "
-    "src_offset int, sub_idx int"
-)
-
 # checkpoint manifest (FIXTURES.md F3)
 MANIFEST_SCHEMA = T.StructType(
     [

@@ -1,34 +1,29 @@
 """The distributed extraction job (SURVEY.md §7.1 spark/job.py).
 
 Pipeline (north_rule):
-    read documents → anti-join checkpoint manifest (J2 resume) →
-    [small docs] whole-doc ``mapInPandas`` /
-    [mega docs] explode → phase-1 ``mapInPandas`` → groupBy(doc_id)
-    ``applyInPandas`` finalize → union → write bucketed output + manifest.
+    read documents → bucket filter on the checkpoint manifest (J2 resume)
+    → explode(spans) → one ``mapInPandas`` (phase 1 per span, ``finalize``
+    per doc) → write bucketed output + manifest.
 
-Why two paths (SURVEY.md §7.4.2): offsets are doc-local, so a document
-split across tasks cannot number its spans locally. Phase 1
-(``extract_input_span``) is context-free per input span; phase 2
-(``finalize``) is a pure function of the multiset of phase-1 items.
-Splitting therefore commutes with extraction and the mega path is
-bit-identical to the whole-doc path (tested in test_spark_job.py).
+One path for every document size (SURVEY.md §7.4.2). Offsets are
+doc-local, so all of a document's phase-1 items must meet in one place
+to be numbered. ``explode`` is a narrow generator and a document row
+lives in one scan split, so the row's exploded spans arrive as one
+contiguous run inside that scan task. ``_extract_runs`` runs phase 1
+(``extract_input_span``) per span and, when ``doc_id`` changes, phase 2
+(``finalize``) over the closed doc's items. Phase 2 is a pure function
+of the multiset of phase-1 items, so the output equals
+``extract_document`` by construction (tested in test_spark_job.py).
 
 Scale notes:
-- the whole-doc path has ZERO shuffles — extraction is map-only and runs
-  directly on the scan splits (``spark.sql.files.maxPartitionBytes``
-  already balances them);
-- the mega path shuffles only mega-doc items (~0.1% of docs), keyed by
-  doc_id, with AQE skew handling on;
-- all Python crossings are Arrow-batched (no per-row Python, input_hint);
-- the small/mega split references the source twice, so the scan runs
-  twice (size(spans) is not pushable into parquet). This is deliberate:
-  persisting the input costs a full materialization and shuffling
-  everything through the mega path costs a full payload shuffle — both
-  worse than one extra columnar scan that discards 99.9% of rows early.
-  At ingest time the right fix is layout, not plan: store n_spans as a
-  top-level column (filter pushdown prunes row groups) or partition the
-  table by an is_mega flag (partition pruning skips the second scan's
-  data entirely).
+- extraction is map-only: one scan, one Python UDF stage on the scan
+  splits (``spark.sql.files.maxPartitionBytes`` balances them), no
+  shuffle; the write's bucket exchange is a run's only shuffle;
+- a run of spans may cross Arrow batches: the open doc's items carry
+  over to the next batch, so a mega doc never becomes one pandas frame;
+- the price is that a mega doc's phase 1 runs in its one scan task
+  rather than being spread over several;
+- all Python crossings are Arrow-batched (no per-row Python, input_hint).
 """
 
 from __future__ import annotations
@@ -39,98 +34,71 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparkextract import config
-from sparkextract.schema import EXPLODED_DDL, ITEM_DDL
+from sparkextract.schema import EXPLODED_DDL
 
 _EXPLODED_COLS = ["doc_id", "kind", "text", "media_ref", "offset"]
-_ITEM_COLS = ["doc_id", "kind", "text", "media_ref", "src_offset", "sub_idx"]
 
 
-def _extract_whole_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _extract_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Exploded input spans, one contiguous run per doc -> output spans.
+
+    A doc's run may cross batches; its items carry over and the last doc
+    is finalized after the final batch. A ``doc_id`` that reappears after
+    its run closed raises: the plan broke contiguity, and finalizing the
+    doc twice would emit it twice with clashing offsets."""
     # imported inside the UDF so the zip shipped via addPyFile resolves on
     # executors even when the driver venv differs (cluster path)
-    from sparkextract.core.extract import extract_document
+    from sparkextract.core.extract import extract_input_span, finalize
+
+    closed: set = set()
+    doc_id, items = None, None  # the open run
+
+    def close() -> list[tuple]:
+        closed.add(doc_id)
+        return [
+            (doc_id, s["kind"], s["text"], s["media_ref"], s["offset"]) for s in finalize(items)
+        ]
 
     for pdf in batches:
         rows: list[tuple] = []
-        # Arrow hands array<struct> to pandas as ndarray-of-dicts (or None)
-        for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            for s in extract_document(spans):
-                rows.append((doc_id, s["kind"], s["text"], s["media_ref"], s["offset"]))
+        for d, kind, text, media_ref, off in zip(
+            pdf["doc_id"], pdf["kind"], pdf["text"], pdf["media_ref"], pdf["offset"]
+        ):
+            if items is None or d != doc_id:
+                if items is not None:
+                    rows.extend(close())
+                if d in closed:
+                    raise ValueError(f"doc_id {d!r} reappears after its run closed")
+                doc_id, items = d, []
+            # Arrow hands NULL strings as None and an int column with
+            # NULLs as float NaN
+            items.extend(
+                extract_input_span(
+                    kind if isinstance(kind, str) else None,
+                    text if isinstance(text, str) else None,
+                    media_ref if isinstance(media_ref, str) else None,
+                    int(off) if off is not None and not pd.isna(off) else 0,
+                )
+            )
+        if rows:
+            yield pd.DataFrame(rows, columns=_EXPLODED_COLS)
+    if items is not None and (rows := close()):
         yield pd.DataFrame(rows, columns=_EXPLODED_COLS)
 
 
-def _phase1_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from sparkextract.core.extract import extract_input_span
-
-    for pdf in batches:
-        rows: list[tuple] = []
-        for doc_id, kind, text, media_ref, off in zip(
-            pdf["doc_id"], pdf["kind"], pdf["text"], pdf["media_ref"], pdf["offset"]
-        ):
-            src = int(off) if off is not None and not pd.isna(off) else 0
-            for k, t, m, so, si in extract_input_span(
-                kind if isinstance(kind, str) else None,
-                text if isinstance(text, str) else None,
-                media_ref if isinstance(media_ref, str) else None,
-                src,
-            ):
-                rows.append((doc_id, k, t, m, so, si))
-        yield pd.DataFrame(rows, columns=_ITEM_COLS)
-
-
-def _finalize_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    from sparkextract.core.extract import finalize
-
-    if pdf.empty:
-        return pd.DataFrame(columns=_EXPLODED_COLS)
-    doc_id = pdf["doc_id"].iloc[0]
-    items = list(
-        zip(pdf["kind"], pdf["text"], pdf["media_ref"], pdf["src_offset"], pdf["sub_idx"])
-    )
-    items = [
-        (k, t if isinstance(t, str) else None, m if isinstance(m, str) else None, int(so), int(si))
-        for k, t, m, so, si in items
-    ]
-    rows = [
-        (doc_id, s["kind"], s["text"], s["media_ref"], s["offset"])
-        for s in finalize(items)
-    ]
-    return pd.DataFrame(rows, columns=_EXPLODED_COLS)
-
-
-def extract_exploded(
-    docs: DataFrame,
-    skew_threshold: int = config.MEGA_DOC_SPAN_THRESHOLD,
-    parallelism: int | None = None,
-) -> DataFrame:
+def extract_exploded(docs: DataFrame, skew_threshold=None) -> DataFrame:
     """documents(doc_id, spans) -> exploded output spans.
 
-    ``skew_threshold``: docs with more input spans than this take the
-    explode/split/reassemble path; pass ``None``/huge to force the
-    whole-doc path (used by the invariance tests).
-    """
+    ``skew_threshold`` is ignored. It is accepted only because the
+    benchmark harness (``perfbench/layers.py``) still passes
+    ``skew_threshold=None`` to time the removed whole-doc path; drop it
+    together with that call."""
     from sparkextract.spark.session import ensure_workers_can_import
 
-    spark = docs.sparkSession
-    ensure_workers_can_import(spark)
-    parallelism = parallelism or spark.sparkContext.defaultParallelism
-    n_span = F.coalesce(F.size("spans"), F.lit(0))
-
-    if skew_threshold is None:
-        small, mega = docs, None
-    else:
-        small = docs.filter(n_span <= skew_threshold)
-        mega = docs.filter(n_span > skew_threshold)
-
-    small_out = small.mapInPandas(_extract_whole_docs, schema=EXPLODED_DDL)
-    if mega is None:
-        return small_out
-
-    # mega-doc path: salt = spread a single doc's spans round-robin over
-    # SKEW_RANGE_SIZE-sized ranges, phase-1 anywhere, regroup for finalize
-    exploded_in = (
-        mega.select("doc_id", F.explode("spans").alias("s"))
+    ensure_workers_can_import(docs.sparkSession)
+    return (
+        docs.select("doc_id", F.explode("spans").alias("s"))
+        .filter(F.col("s").isNotNull())
         .select(
             "doc_id",
             F.col("s.kind").alias("kind"),
@@ -138,19 +106,8 @@ def extract_exploded(
             F.col("s.media_ref").alias("media_ref"),
             F.col("s.offset").alias("offset"),
         )
-        .withColumn(
-            "salt",
-            F.pmod(
-                F.floor(F.col("offset") / config.SKEW_RANGE_SIZE).cast("bigint"),
-                F.lit(max(parallelism, 1)),
-            ),
-        )
-        .repartition(parallelism, "doc_id", "salt")
-        .drop("salt")
+        .mapInPandas(_extract_runs, schema=EXPLODED_DDL)
     )
-    items = exploded_in.mapInPandas(_phase1_batch, schema=ITEM_DDL)
-    mega_out = items.groupBy("doc_id").applyInPandas(_finalize_group, schema=EXPLODED_DDL)
-    return small_out.unionByName(mega_out)
 
 
 def assemble_spans(exploded: DataFrame) -> DataFrame:
@@ -188,7 +145,7 @@ def assemble_spans(exploded: DataFrame) -> DataFrame:
     )
 
 
-def extract_documents(docs: DataFrame, **kwargs) -> DataFrame:
+def extract_documents(docs: DataFrame) -> DataFrame:
     """documents -> (doc_id, spans) extracted output, including docs whose
     extraction is empty (empty array, matching the oracle).
 
@@ -199,6 +156,6 @@ def extract_documents(docs: DataFrame, **kwargs) -> DataFrame:
     recomputes unshared subtrees — at 100 TB that doubles the job.)
     ``assemble_spans`` skips the NULL-kind rows, so unmatched docs fold
     to an empty span array."""
-    exploded = extract_exploded(docs, **kwargs)
+    exploded = extract_exploded(docs)
     joined = docs.select("doc_id").join(exploded, "doc_id", "left")
     return assemble_spans(joined)

@@ -136,7 +136,6 @@ def run_extraction_job(
     root: str,
     run_id: str | None = None,
     num_buckets: int = config.MANIFEST_NUM_BUCKETS,
-    skew_threshold: int = config.MEGA_DOC_SPAN_THRESHOLD,
     fail_after_buckets: int | None = None,
     bucket_col=None,
 ) -> dict:
@@ -155,7 +154,7 @@ def run_extraction_job(
     t0 = time.time()
 
     todo = filter_todo(docs, spark, root, num_buckets, bucket_col=bucket_col)
-    exploded = extract_exploded(todo.drop("doc_id_bucket"), skew_threshold=skew_threshold)
+    exploded = extract_exploded(todo.drop("doc_id_bucket"))
     # one marker row (NULL kind) per todo doc, so that docs with no spans
     # still count; parquet column pruning reads only doc_id for them
     markers = todo.select(

@@ -198,7 +198,8 @@ def test_extract_document_input_order_independent():
 
 def test_phase_split_equals_whole_doc():
     """Splitting a doc's spans arbitrarily and finalizing the union must
-    equal the single-pass result (the mega-doc path's correctness)."""
+    equal the single-pass result (what lets spark/job.py finalize a doc
+from per-span items)."""
     for i in (0, 1, 2, 5, 13):
         d = generate_document(i)
         whole = extract_document(d["spans"])

@@ -145,6 +145,7 @@ _html_frag = st.one_of(
             "<SCRIPT>Z</SCRIPT>", "<style/>", "<p  class = \"x\" >",
             "<br >", "</ p>", "<p/>", "é中文 ",
             "<select name=s><option>1</option></select>",
+            "<a \"x>", "<p ' b>",
         ]
     ),
     st.text(max_size=12),
@@ -156,6 +157,21 @@ _html_frag = st.one_of(
 def test_fast_html_tokenizer_matches_htmlparser(html):
     from sparkextract.core.boilerplate import extract_html
 
+    assert extract_html(html) == _parser_only(html)
+
+
+def test_stray_quote_run_is_linear():
+    """A run of stray quotes in a tag once made the fast tokenizer's tag
+    regex backtrack exponentially (about 6 s at 34 quotes); it must now
+    fail the tag match at once and fall back to HTMLParser."""
+    import time
+
+    from sparkextract.core.extract import extract_input_span
+
+    html = "<p>hi</p><a " + '"' * 34
+    t0 = time.perf_counter()
+    extract_input_span("html", html, None, 0)
+    assert time.perf_counter() - t0 < 0.5
     assert extract_html(html) == _parser_only(html)
 
 

@@ -1,9 +1,10 @@
 """End-to-end Spark tests (SURVEY.md §5.2): span-sequence equality vs the
-pure-pandas oracle, mega-doc path equivalence, partitioning invariance,
-and checkpoint/resume idempotency."""
+pure-pandas oracle, doc runs across Arrow batches, partitioning
+invariance, plan shape, and checkpoint/resume idempotency."""
 
 import os
 
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -12,7 +13,13 @@ from pyspark.sql import functions as F
 from sparkextract.core.extract import extract_document
 from sparkextract.corpus import generate_corpus
 from sparkextract.spark.datagen import corpus_df
-from sparkextract.spark.job import assemble_spans, extract_documents, extract_exploded
+from sparkextract.spark.job import (
+    _EXPLODED_COLS,
+    _extract_runs,
+    assemble_spans,
+    extract_documents,
+    extract_exploded,
+)
 from sparkextract.schema import DOC_SCHEMA, MANIFEST_SCHEMA
 from sparkextract.spark.manifest import (
     _append_manifest,
@@ -65,24 +72,89 @@ def test_extraction_matches_oracle(spark, docs):
     """THE correctness gate: span-sequence equality (kind, text, media_ref,
     order) per doc vs the oracle (BASELINE.json input_hint)."""
     golden = _oracle()
-    got = _collect_spans(extract_documents(docs, skew_threshold=100))
+    got = _collect_spans(extract_documents(docs))
     assert got.keys() == golden.keys()
     mismatches = [k for k in golden if got[k] != golden[k]]
     assert mismatches == [], f"first mismatch: {mismatches[0] if mismatches else None}"
 
 
 def test_mega_path_equals_whole_doc_path(spark, docs):
-    """Forcing every doc down the explode/split/reassemble path must give
-    byte-identical output to the whole-doc path."""
-    whole = _collect_spans(extract_documents(docs, skew_threshold=10**9))
-    split = _collect_spans(extract_documents(docs, skew_threshold=0))
-    assert whole == split
+    """Arrow batches of 3 rows, so every multi-span doc's run crosses
+    batches, give the same output as the default batch size, and both
+    equal the oracle."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = _collect_spans(extract_documents(docs))
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        split = _collect_spans(extract_documents(docs))
+    finally:
+        spark.conf.set(key, old)
+    assert default == split == _oracle()
+
+
+def _batches(docs, sizes):
+    """Exploded input rows of ``docs`` as pandas batches of ``sizes`` rows
+    (the rest in one last batch), the way Arrow hands them to the UDF."""
+    rows = [
+        (d["doc_id"], s["kind"], s["text"], s["media_ref"], s["offset"])
+        for d in docs
+        for s in d["spans"]
+    ]
+    out, pos = [], 0
+    for n in [*sizes, len(rows)]:
+        out.append(pd.DataFrame(rows[pos : pos + n], columns=_EXPLODED_COLS))
+        pos += n
+    return out
+
+
+def test_extract_runs_carries_a_doc_across_batches():
+    """A doc whose run straddles three batches (with an empty batch in
+    between) is finalized once, equal to ``extract_document``."""
+    docs = list(generate_corpus(6))
+    n0 = len(docs[0]["spans"])
+    n1 = len(docs[1]["spans"])
+    assert n1 >= 3
+    batches = _batches(docs, [n0 + 1, 0, 1, n1 - 2])
+    assert batches[1].empty
+    out = pd.concat(list(_extract_runs(iter(batches))), ignore_index=True)
+    got = {}
+    for r in out.itertuples(index=False):
+        got.setdefault(r.doc_id, []).append(
+            {"kind": r.kind, "text": r.text, "media_ref": r.media_ref, "offset": r.offset}
+        )
+    want = {d["doc_id"]: extract_document(d["spans"]) for d in docs}
+    assert want[docs[1]["doc_id"]]
+    assert got == {k: v for k, v in want.items() if v}
+    assert list(out.columns) == _EXPLODED_COLS
+
+
+def test_extract_runs_rejects_a_reopened_doc():
+    a, b = generate_corpus(2)
+    with pytest.raises(ValueError, match="reappears"):
+        list(_extract_runs(iter(_batches([a, b, a], []))))
+
+
+def test_extract_runs_empty_batch_yields_nothing():
+    empty = pd.DataFrame(columns=_EXPLODED_COLS)
+    assert list(_extract_runs(iter([empty]))) == []
+    assert list(_extract_runs(iter([]))) == []
+
+
+def test_extract_plan_is_one_scan_one_udf_no_exchange(spark, docs, tmp_path):
+    """Over a parquet source extraction is map-only: one scan, one Python
+    UDF node and no shuffle."""
+    docs.write.parquet(str(tmp_path / "in"))
+    out = extract_exploded(spark.read.parquet(str(tmp_path / "in")))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    counts = tuple(plan.count(node) for node in ("FileScan", "Exchange", "MapInPandas"))
+    assert counts == (1, 0, 1), plan
 
 
 def test_partitioning_invariance(spark, docs):
     """Same output at different parallelism/partitioning (SURVEY §7.4.1)."""
-    a = extract_exploded(docs.repartition(1), skew_threshold=100)
-    b = extract_exploded(docs.repartition(16), skew_threshold=100)
+    a = extract_exploded(docs.repartition(1))
+    b = extract_exploded(docs.repartition(16))
     ra = sorted(map(tuple, a.collect()))
     rb = sorted(map(tuple, b.collect()))
     assert ra == rb
@@ -126,14 +198,13 @@ def test_empty_and_null_spans(spark):
     oracle = {doc_id: extract_document(spans) for doc_id, spans in rows}
     assert oracle["d-null-elem"] == extract_document([span])
     assert oracle["d-null-elem"]
-    whole = _collect_spans(extract_documents(df, skew_threshold=100))
-    mega = _collect_spans(extract_documents(df, skew_threshold=0))
-    assert whole == mega == oracle
-    assert whole["d-empty"] == whole["d-null"] == []
+    got = _collect_spans(extract_documents(df))
+    assert got == oracle
+    assert got["d-empty"] == got["d-null"] == []
 
 
 def test_assemble_roundtrip(spark, docs):
-    exploded = extract_exploded(docs, skew_threshold=100)
+    exploded = extract_exploded(docs)
     assembled = assemble_spans(exploded)
     back = assembled.select("doc_id", F.explode("spans").alias("s")).select(
         "doc_id", "s.kind", "s.text", "s.media_ref", "s.offset"

@@ -117,12 +117,13 @@ def test_streaming_dedup_state_survives_restart(spark, tmp_path):
     assert all(r["first_len"] == len("alpha text") or r["doc_id"] in ("2", "4") for r in rows)
 
 
-def test_incremental_sidecar_routes_mega_docs(spark, tmp_path):
-    """Mega-docs beyond skew_threshold must be routed VERBATIM to the
-    sidecar for batch pickup (they need the batch job's groupBy
-    reassembly), while small docs are extracted in the stream."""
+def test_incremental_extracts_mega_docs_in_stream(spark, tmp_path):
+    """The stream runs the batch job's one extraction path, so a 9-span
+    doc whose run crosses 3-row Arrow batches is extracted in the stream
+    and equals ``extract_document``, next to a 1-span doc."""
     from pyspark.sql import Row
 
+    from sparkextract.core.extract import extract_document
     from sparkextract.schema import DOC_SCHEMA
     from sparkextract.streaming.incremental import incremental_extract
 
@@ -130,32 +131,30 @@ def test_incremental_sidecar_routes_mega_docs(spark, tmp_path):
         return Row(kind="text", text=f"span {i} " + "content words here " * 10,
                    media_ref=None, offset=i)
 
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id="small-1", spans=[span(0)]),
-            Row(doc_id="mega-1", spans=[span(i) for i in range(9)]),
-        ],
-        DOC_SCHEMA,
-    )
+    rows = [
+        Row(doc_id="small-1", spans=[span(0)]),
+        Row(doc_id="mega-1", spans=[span(i) for i in range(9)]),
+    ]
     src = str(tmp_path / "in")
-    docs.write.parquet(src)
-    q = incremental_extract(
-        spark,
-        src,
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-        sidecar_path=str(tmp_path / "sidecar"),
-        skew_threshold=4,
-    )
-    q.awaitTermination(300)
-    for sq in spark.streams.active:
-        sq.awaitTermination(300)
+    spark.createDataFrame(rows, DOC_SCHEMA).write.parquet(src)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        q = incremental_extract(spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+        q.awaitTermination(300)
+    finally:
+        spark.conf.set(key, old)
 
-    out_ids = {r["doc_id"] for r in spark.read.parquet(str(tmp_path / "out")).collect()}
-    assert out_ids == {"small-1"}
-    side = spark.read.parquet(str(tmp_path / "sidecar")).collect()
-    assert [r["doc_id"] for r in side] == ["mega-1"]
-    assert len(side[0]["spans"]) == 9  # raw spans untouched
+    got = {}
+    for r in spark.read.parquet(str(tmp_path / "out")).orderBy("doc_id", "offset").collect():
+        got.setdefault(r["doc_id"], []).append(
+            {"kind": r["kind"], "text": r["text"], "media_ref": r["media_ref"],
+             "offset": r["offset"]}
+        )
+    assert got == {r["doc_id"]: extract_document([s.asDict() for s in r["spans"]]) for r in rows}
+    assert len(got["mega-1"]) > 1
+
 
 def test_streaming_dedup_keeper_is_numeric_min(spark, tmp_path):
     # ADVICE r2: lexicographic sort picked '10' over '9'; the
