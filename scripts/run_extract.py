@@ -27,16 +27,19 @@ sys.path.insert(
 
 
 def main() -> None:
+    from sparkextract import config
+
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--num-buckets", type=int, default=64)
+    ap.add_argument("--num-buckets", type=int, default=config.MANIFEST_NUM_BUCKETS)
     ap.add_argument("--generate-docs", type=int, default=0)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
 
+    from sparkextract.spark.io import read_documents
     from sparkextract.spark.manifest import run_extraction_job
     from sparkextract.spark.session import ensure_workers_can_import, get_spark
 
@@ -50,7 +53,7 @@ def main() -> None:
         if not os.path.exists(os.path.join(args.input, "_SUCCESS")):
             write_corpus(spark, args.input, args.generate_docs, seed=42)
 
-    docs = spark.read.parquet(args.input)
+    docs = read_documents(spark, args.input)
     metrics = run_extraction_job(
         spark,
         docs,

@@ -600,7 +600,7 @@ def _km_quantized(spark, sf_dir):
 # top-10 neighbors ranked by QUANTIZED cosine with the exact cosine
 # alongside — the ranking-degradation evidence a recall report needs.
 # Reference analog: the pgvector embedding store + cosine retrieval
-# (reference src/rag/vector_store.py) with the storage format
+# (reference src/rag/vector_database.py:315-336) with the storage format
 # dropped from float32 to int8.
 # Determinism: codes are floor((x-min)/scale) over doubles — identical
 # IEEE ops in both engines (never round(), whose tie rule differs);

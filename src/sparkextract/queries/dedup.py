@@ -112,7 +112,7 @@ tests/test_round5e.py). Near-dup pairs are injected (every 9th doc
 re-appears with its first 3 chars rewritten), so edit_dist <= 3 pairs
 must exist at every SF.
 Reference intent: the duplicate-table similarity check of
-reference src/table_evaluator.py (cell-level table similarity)
+reference src/table_extractor.py:200-218 (cell-level table similarity)
 re-expressed with the string-metric verifier the record-linkage
 literature uses.
 Scale shape: the keyed table is built once per (session, input) via
@@ -134,8 +134,9 @@ rollup reports per canonical URL the variant count, distinct raw-form
 count and the minimum doc_id (the frontier's survivor pick).
 Scale shape: the canonical chain is map-only string work inside
 whole-stage codegen; the only shuffle is the final groupBy(canonical).
-Reference intent: reference src/database_manager.py's
-content-hash dedup key, applied at the URL grain a crawler needs.
+Reference intent: the SHA-256 document dedup key of
+reference src/rag/rag_pipeline.py:94-105, applied at the URL grain a
+crawler needs.
 
 q162 — QUALITY-AWARE SURVIVOR SELECTION. q72 keeps the MIN-id doc per
 dup cluster; production dedup keeps the HIGHEST-QUALITY copy (the

@@ -14,73 +14,14 @@ zero — no float in the decision.
 Scale shape: edge generation is map-side (3 rows per doc, no shuffle);
 the propagation is ONE groupBy(dst) with map-side partial sums — the
 canonical message-passing dataflow (same shape as one q119 iteration).
-
-q165 — TWO-PHASE (LARGE-STAR / SMALL-STAR) CONNECTED COMPONENTS
-(Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC 2014) over the q68 simhash near-dup pair set. q71's min-label
-propagation needs O(graph diameter) rounds — fine for near-dup
-blobs (tiny diameters), pathological for chain-shaped duplicate
-graphs (doc A ~ B ~ C ~ ... across a crawl). Two-phase converges in
-O(log^2 n) rounds REGARDLESS of diameter, which is the algorithm
-you actually run on a 10^12-doc web graph. Both algorithms reach
-the identical min-label fixed point, so the recursive-CTE oracle
-verifies this implementation exactly, and a pytest proves the
-round-count advantage on a synthetic 200-node chain.
-
-Per round, each star operation is: one symmetrize (union), one
-map-side-combinable ``groupBy(node).agg(min)`` (label-sized rows),
-one join of edges against that min table, one distinct. Lineage is
-cut per round with ``localCheckpoint`` (the q71 discipline), the
-round count is bounded with a loud failure, and the edge set only
-ever carries (node, smaller-label) pairs — monotone shrinking
-toward the star fixed point. Reference parity: the reference
-deduplicates via pairwise similarity only
-(``reference src/table_comparator.py``); transitive closure
-is the scale extension its users need on a real corpus.
-
-q187 — GRAPH MODULARITY CLUSTER-QUALITY AUDIT (Newman & Girvan 2004).
-Validates a partition AGAINST a similarity graph it was not derived
-from: the q131 seed-centroid k-means cells (the partition) are
-scored against the q53-style banded-LSH cosine graph over the same
-quantized embeddings (the structure). Per cell c: modularity
-contribution e_c/m - (d_c/(2m))^2 where e_c = edges inside c, d_c =
-degree sum of c's nodes, m = total edges; sum over cells = Newman Q in
-[-1/2, 1). Unlike q71's components (where every edge is intra-cluster
-by construction and Q degenerates), the centroid partition is
-independent of the edge set, so Q genuinely measures whether nearest-
-centroid cells capture the LSH similarity structure. e_c, d_c, m are
-exact BIGINTs; the contribution is two IEEE divisions + one multiply +
-one subtract on exact integers, ROUND(,6)-frozen (the repo's
-float-compare discipline).
-Reference intent: embedding-space diagnostics over the pgvector store,
-reference src/rag/vector_database.py:156-189, upgraded from
-per-point distances to partition-level structure validation.
-
-Scale shape: candidate pairs come from the q53 banded-LSH equi-join
-(bucket-keyed shuffle-hash, never all-pairs); the assignment is an
-8-row broadcast cross join + vec_id-keyed argmin window; pairs and
-assignment are localCheckpoint-memoized because three sibling subtrees
-(degrees, intra-cell edges, edge total) consume each — AQE exchange
-reuse does not fire across sibling subtrees (q68 lesson, base.py).
-Per-cell rollups are k-group mergeable aggs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from sparkextract.queries.ann import _DIM, _dot, _norm
-from sparkextract.queries.base import checkpoint_memo, load, register
-from sparkextract.queries.dedup import (
-    _BANDS,
-    _Q53_ORACLE,
-    _Q68_CORPUS,
-    _band_sig_col,
-    _band_sig_sql,
-    q53_banded_lsh_near_dup,
-    q68_simhash_near_dup,
-    simhash_pairs_sql,
-)
+from sparkextract.queries.base import load, register
+from sparkextract.queries.dedup import _Q53_ORACLE, q53_banded_lsh_near_dup
 from sparkextract.queries.quality import _Q135_CORE_SQL, _q135_features
 
 
@@ -88,7 +29,8 @@ def label_propagation(pair_df):
     """(left_id, right_id) dup pairs -> (id, lbl) connected-component
     labels via iterated min-label propagation. Each iteration is ONE
     shuffle of label-sized rows; per-iteration localCheckpoint keeps
-    lineage O(1). Used by the q94 end-to-end composition."""
+    lineage O(1). Rounds grow with the graph's diameter; past 30 rounds
+    it raises. Used by q71, q72 and the q94 end-to-end composition."""
     edges = pair_df.select(F.col("left_id").alias("a"), F.col("right_id").alias("b"))
     edges = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -432,314 +374,5 @@ def q152_neighbor_quality(spark, sf_dir):
             .cast("long")
             .alias("mean_src_logit_u"),
             (F.col("sum_src_logit_u") < 0).alias("low_quality_neighborhood"),
-        )
-    )
-
-
-_Q165_MAX_ROUNDS = 40
-
-
-def two_phase_cc(pair_df, max_rounds: int = _Q165_MAX_ROUNDS):
-    """(left_id, right_id) dup pairs -> (id, lbl) component labels via
-    alternating large-star / small-star rounds. Converges in O(log^2 n)
-    rounds independent of graph diameter; every intermediate edge is
-    (node, strictly-smaller label). Raises loudly if the bound is hit
-    (the bound covers n ~ 2^40 at the proven round complexity)."""
-    # self-pairs carry no connectivity and would otherwise vanish from
-    # the shrinking edge set mid-loop; production pair sources are
-    # strict (left < right), so dropping them up front is a no-op there
-    edges = (
-        pair_df.select(
-            F.greatest("left_id", "right_id").alias("a"),
-            F.least("left_id", "right_id").alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    for _ in range(max_rounds):
-        # large-star: every node u links its LARGER neighbors to
-        # min(N(u) + {u}); processing both orientations covers each edge
-        # from both endpoints.
-        und = edges.unionByName(
-            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        mins = und.groupBy("a").agg(F.min("b").alias("mn")).select(
-            "a", F.least("a", "mn").alias("m")
-        )
-        ls = (
-            und.join(mins, "a")
-            .where(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .distinct()
-        )
-        # small-star: edges are now (larger, smaller); every node links
-        # its smaller neighbors AND itself to min(N(u) + {u}) = min(N(u)).
-        lo_min = ls.groupBy("a").agg(F.min("b").alias("m"))
-        nxt = (
-            ls.join(lo_min, "a")
-            .select(F.col("b").alias("v"), "m")
-            .where(F.col("v") != F.col("m"))
-            .unionByName(lo_min.select(F.col("a").alias("v"), "m"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .distinct()
-            .localCheckpoint()
-        )
-        converged = (
-            nxt.count() == edges.count() and nxt.exceptAll(edges).count() == 0
-        )
-        edges = nxt
-        if converged:
-            break
-    else:
-        raise RuntimeError(
-            f"two-phase CC did not converge in {max_rounds} rounds"
-        )
-    # fixed point is a forest of stars (member -> component min): labels
-    # are the edges themselves plus each center labeling itself.
-    return (
-        edges.select(F.col("a").alias("id"), F.col("b").alias("lbl"))
-        .unionByName(edges.select(F.col("b").alias("id"), F.col("b").alias("lbl")))
-        .groupBy("id")
-        .agg(F.min("lbl").alias("lbl"))
-    )
-
-
-_Q165_ORACLE = f"""
-WITH RECURSIVE {simhash_pairs_sql(_Q68_CORPUS)},
-edges AS (
-  SELECT left_id AS a, right_id AS b FROM dup_pairs
-  UNION ALL
-  SELECT right_id, left_id FROM dup_pairs
-),
-cc_nodes AS (SELECT DISTINCT a AS id FROM edges),
-reach AS (
-  SELECT id, id AS lbl FROM cc_nodes
-  UNION
-  SELECT e.b AS id, r.lbl FROM reach r JOIN edges e ON e.a = r.id
-)
-SELECT doc_id, component,
-       CAST(COUNT(*) OVER (PARTITION BY component) AS BIGINT) AS cluster_size
-FROM (
-  SELECT id AS doc_id, MIN(lbl) AS component FROM reach GROUP BY id
-)
-"""
-
-
-@register("q165_two_phase_cc", oracle=_Q165_ORACLE)
-def q165_two_phase_cc(spark, sf_dir):
-    labels = checkpoint_memo(
-        spark,
-        sf_dir,
-        "q165_two_phase_cc",
-        lambda: two_phase_cc(q68_simhash_near_dup(spark, sf_dir)),
-    )
-    w = F.count("*").over(Window.partitionBy("lbl"))
-    return labels.select(
-        F.col("id").alias("doc_id"),
-        F.col("lbl").alias("component"),
-        w.alias("cluster_size"),
-    )
-
-
-# ---------------------------------------------------------------------
-# q187
-_Q187_K = 8  # seed centroids: quantized vectors of vec_id 1..K (q131)
-
-
-_Q187_MIN_COS = 0.2  # edge keep threshold over LSH candidate pairs
-
-
-_Q187_COS = (
-    f"list_sum(list_transform(range(1, {_DIM + 1}), i -> cx.e[i] * cy.e[i]))"
-    f" / ( sqrt(list_sum(list_transform(range(1, {_DIM + 1}), i -> cx.e[i] * cx.e[i])))"
-    f"   * sqrt(list_sum(list_transform(range(1, {_DIM + 1}), i -> cy.e[i] * cy.e[i]))) )"
-)
-
-
-_Q187_ORACLE = f"""
-WITH eq AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> ROUND(CAST(x AS DOUBLE), 3)) AS e
-  FROM embeddings
-),
-cents AS (SELECT vec_id AS cent_id, e AS c FROM eq
-          WHERE vec_id BETWEEN 1 AND {_Q187_K}),
-assign AS (
-  SELECT vec_id, cent_id AS cell FROM (
-    SELECT d.vec_id, c.cent_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY d.vec_id ORDER BY
-             list_sum(list_transform(range(1, {_DIM + 1}),
-               i -> (d.e[i] - c.c[i]) * (d.e[i] - c.c[i]))) ASC,
-             c.cent_id ASC) AS rn
-    FROM eq d, cents c
-    WHERE d.vec_id > {_Q187_K}
-  ) WHERE rn = 1
-),
-sigs AS (
-  SELECT vec_id, e,
-         [{", ".join(f"CAST({_band_sig_sql(b)} AS INTEGER)" for b in range(_BANDS))}] AS s
-  FROM eq WHERE vec_id > {_Q187_K}
-),
-buckets AS (
-  SELECT vec_id, band, s[band + 1] AS sig
-  FROM sigs, (SELECT UNNEST(range({_BANDS})) AS band)
-),
-cand AS (
-  SELECT DISTINCT x.vec_id AS l, y.vec_id AS r
-  FROM buckets x JOIN buckets y
-    ON x.band = y.band AND x.sig = y.sig AND x.vec_id < y.vec_id
-),
-pairs AS (
-  SELECT p.l, p.r
-  FROM cand p
-  JOIN (SELECT vec_id, e FROM eq) cx ON p.l = cx.vec_id
-  JOIN (SELECT vec_id, e FROM eq) cy ON p.r = cy.vec_id
-  WHERE ROUND({_Q187_COS}, 6) >= {_Q187_MIN_COS}
-),
-m AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM pairs),
-deg AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-    SELECT l AS node FROM pairs UNION ALL SELECT r FROM pairs
-  ) GROUP BY node
-),
-cell_nodes AS (
-  SELECT a.cell,
-         CAST(COUNT(*) AS BIGINT) AS n_nodes,
-         CAST(SUM(COALESCE(d.deg, 0)) AS BIGINT) AS deg_sum
-  FROM assign a LEFT JOIN deg d ON d.node = a.vec_id
-  GROUP BY a.cell
-),
-cell_edges AS (
-  SELECT al.cell, CAST(COUNT(*) AS BIGINT) AS e_within
-  FROM pairs p
-  JOIN assign al ON al.vec_id = p.l
-  JOIN assign ar ON ar.vec_id = p.r
-  WHERE al.cell = ar.cell
-  GROUP BY al.cell
-)
-SELECT CAST(cn.cell AS BIGINT) AS cell, cn.n_nodes, cn.deg_sum,
-       CAST(COALESCE(ce.e_within, 0) AS BIGINT) AS e_within,
-       m.m AS m_edges,
-       ROUND(CASE WHEN m.m = 0 THEN 0.0
-             ELSE CAST(COALESCE(ce.e_within, 0) AS DOUBLE) / CAST(m.m AS DOUBLE)
-                  - (CAST(cn.deg_sum AS DOUBLE) / CAST(2 * m.m AS DOUBLE))
-                    * (CAST(cn.deg_sum AS DOUBLE) / CAST(2 * m.m AS DOUBLE))
-             END, 6) AS q_contrib
-FROM cell_nodes cn
-LEFT JOIN cell_edges ce ON ce.cell = cn.cell
-CROSS JOIN m
-"""
-
-
-def _q187_quantized(spark, sf_dir):
-    return load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: F.round(x.cast("double"), 3)).alias("e"),
-    )
-
-
-def _q187_assign(spark, sf_dir):
-    """(vec_id, cell): nearest of the K seed centroids, q131 recipe."""
-    eq = _q187_quantized(spark, sf_dir)
-    cents = eq.filter(
-        (F.col("vec_id") >= 1) & (F.col("vec_id") <= _Q187_K)
-    ).select(F.col("vec_id").alias("cent_id"), F.col("e").alias("c"))
-    d2 = F.aggregate(
-        F.zip_with(F.col("e"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cent_id"))
-    return (
-        eq.filter(F.col("vec_id") > _Q187_K)
-        .crossJoin(F.broadcast(cents))
-        .select("vec_id", "cent_id", d2.alias("d2"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cent_id").alias("cell"))
-    )
-
-
-def _q187_pairs(spark, sf_dir):
-    """Banded-LSH candidate pairs verified at cosine >= threshold."""
-    eq = _q187_quantized(spark, sf_dir).filter(F.col("vec_id") > _Q187_K)
-    buckets = eq.withColumn(
-        "bs", F.array(*[_band_sig_col(b) for b in range(_BANDS)])
-    ).select("vec_id", F.posexplode("bs").alias("band", "sig"))
-    x = buckets.hint("shuffle_hash").alias("x")
-    y = buckets.hint("shuffle_hash").alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.sig") == F.col("y.sig"))
-            & (F.col("x.vec_id") < F.col("y.vec_id")),
-        )
-        .select(F.col("x.vec_id").alias("l"), F.col("y.vec_id").alias("r"))
-        .distinct()
-    )
-    cx = eq.select(F.col("vec_id").alias("l"), F.col("e").alias("ex"))
-    cy = eq.select(F.col("vec_id").alias("r"), F.col("e").alias("ey"))
-    cosine = F.round(
-        _dot(F.col("ex"), F.col("ey")) / (_norm(F.col("ex")) * _norm(F.col("ey"))), 6
-    )
-    return (
-        cand.join(cx, "l")
-        .join(cy, "r")
-        .filter(cosine >= _Q187_MIN_COS)
-        .select("l", "r")
-    )
-
-
-@register("q187_graph_modularity", oracle=_Q187_ORACLE)
-def q187_graph_modularity(spark, sf_dir):
-    assign = checkpoint_memo(
-        spark, sf_dir, "q187_assign", lambda: _q187_assign(spark, sf_dir)
-    )
-    pairs = checkpoint_memo(
-        spark, sf_dir, "q187_pairs", lambda: _q187_pairs(spark, sf_dir)
-    )
-    m = pairs.agg(F.count("*").cast("long").alias("m_edges"))
-    deg = (
-        pairs.select(F.col("l").alias("node"))
-        .unionAll(pairs.select(F.col("r").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("deg"))
-    )
-    cell_nodes = (
-        assign.join(deg, assign["vec_id"] == deg["node"], "left")
-        .groupBy("cell")
-        .agg(
-            F.count("*").cast("long").alias("n_nodes"),
-            F.sum(F.coalesce("deg", F.lit(0))).cast("long").alias("deg_sum"),
-        )
-    )
-    al = assign.select(F.col("vec_id").alias("l"), F.col("cell").alias("cl"))
-    ar = assign.select(F.col("vec_id").alias("r"), F.col("cell").alias("cr"))
-    cell_edges = (
-        pairs.join(al, "l")
-        .join(ar, "r")
-        .filter(F.col("cl") == F.col("cr"))
-        .groupBy(F.col("cl").alias("cell"))
-        .agg(F.count("*").cast("long").alias("e_within"))
-    )
-    md = F.col("m_edges").cast("double")
-    ew = F.coalesce("e_within", F.lit(0)).cast("long")
-    ds = F.col("deg_sum").cast("double")
-    contrib = F.when(F.col("m_edges") == 0, F.lit(0.0)).otherwise(
-        ew.cast("double") / md - (ds / (2 * md)) * (ds / (2 * md))
-    )
-    return (
-        cell_nodes.join(cell_edges, "cell", "left")
-        .crossJoin(F.broadcast(m))
-        .select(
-            F.col("cell").cast("long").alias("cell"),
-            "n_nodes",
-            "deg_sum",
-            ew.alias("e_within"),
-            "m_edges",
-            F.round(contrib, 6).alias("q_contrib"),
         )
     )

@@ -883,116 +883,6 @@ def q172_merkle_snapshot_diff(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# q118: INCREMENTAL DEDUP — near-dup detection for a corpus refresh
-# WITHOUT re-hashing the corpus: only the CDC delta (snapshot_diff's added/
-# changed rule) computes fresh q19 MinHash band signatures; the
-# unchanged majority is represented by its persisted signature index
-# (memoized here, a stored table at scale — signatures are computed
-# once at ingest and never again). Candidates are (1) delta-vs-index
-# and (2) delta-vs-delta band collisions, reported per pair with how
-# many of the 4 bands matched.
-#
-# Scale shape: the delta side is ~20% (and in steady state ~arrival
-# rate); band matching is the UNPIVOTED form — (band, sig) equi-join —
-# never an OR-of-bands join (which both engines would execute as a
-# nested loop over the corpus); pair aggregation is a mergeable
-# groupBy. The index side is scanned once to build the memo and then
-# reused by both candidate joins.
-def _q118_sigs_sql() -> str:
-    import sparkextract.queries.text  # noqa: F401 — registers q19 first
-
-    from sparkextract.queries.base import ORACLE_SQL
-
-    return ORACLE_SQL["q19_minhash_signature"]
-
-
-def _q118_oracle() -> str:
-    from sparkextract.queries.base import md5_bucket_sql
-
-    return f"""
-    WITH sigs AS (
-      {_q118_sigs_sql()}
-    ),
-    st AS (
-      SELECT s.*,
-             CAST({md5_bucket_sql("doc_id", 10)} AS BIGINT) < 2 AS is_delta
-      FROM sigs s
-    ),
-    bands AS (
-      SELECT doc_id, is_delta, 0 AS b, sig0 AS sig FROM st
-      UNION ALL SELECT doc_id, is_delta, 1, sig1 FROM st
-      UNION ALL SELECT doc_id, is_delta, 2, sig2 FROM st
-      UNION ALL SELECT doc_id, is_delta, 3, sig3 FROM st
-    ),
-    delta_bands AS (SELECT doc_id, b, sig FROM bands WHERE is_delta),
-    index_bands AS (SELECT doc_id, b, sig FROM bands WHERE NOT is_delta),
-    cand AS (
-      SELECT d.doc_id AS new_doc_id, i.doc_id AS dup_of, 'index' AS kind, d.b
-      FROM delta_bands d JOIN index_bands i ON d.b = i.b AND d.sig = i.sig
-      UNION ALL
-      SELECT a.doc_id, bb.doc_id, 'delta', a.b
-      FROM delta_bands a JOIN delta_bands bb
-        ON a.b = bb.b AND a.sig = bb.sig AND a.doc_id < bb.doc_id
-    )
-    SELECT new_doc_id, dup_of, kind,
-           CAST(COUNT(DISTINCT b) AS BIGINT) AS n_bands
-    FROM cand
-    GROUP BY new_doc_id, dup_of, kind
-    """
-
-
-@register("q118_incremental_dedup", oracle=_q118_oracle())
-def q118_incremental_dedup(spark, sf_dir):
-    from sparkextract.queries.base import checkpoint_memo, md5_bucket
-    from sparkextract.queries.dedup import q19_minhash_signature
-
-    def build():
-        sigs = q19_minhash_signature(spark, sf_dir)
-        is_delta = md5_bucket(F.col("doc_id"), 10) < 2
-        return sigs.select(
-            "doc_id",
-            is_delta.alias("is_delta"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("b"), F.col(f"sig{b}").alias("sig")
-                        )
-                        for b in range(4)
-                    ]
-                )
-            ).alias("bs"),
-        ).select("doc_id", "is_delta", F.col("bs.b").alias("b"), F.col("bs.sig").alias("sig"))
-
-    # the banded signature table is the persisted index at scale; both
-    # candidate joins read it, so materialize once
-    bands = checkpoint_memo(spark, sf_dir, "q118_bands", build)
-    delta = bands.filter("is_delta").select("doc_id", "b", "sig")
-    index = bands.filter(~F.col("is_delta")).select(
-        F.col("doc_id").alias("dup_of"), "b", "sig"
-    )
-    vs_index = delta.join(index, ["b", "sig"]).select(
-        F.col("doc_id").alias("new_doc_id"), "dup_of", F.lit("index").alias("kind"), "b"
-    )
-    right = delta.select(F.col("doc_id").alias("dup_of"), "b", "sig")
-    vs_delta = (
-        delta.join(right, ["b", "sig"])
-        .filter(F.col("doc_id") < F.col("dup_of"))
-        .select(
-            F.col("doc_id").alias("new_doc_id"),
-            "dup_of",
-            F.lit("delta").alias("kind"),
-            "b",
-        )
-    )
-    return (
-        vs_index.unionByName(vs_delta)
-        .groupBy("new_doc_id", "dup_of", "kind")
-        .agg(F.countDistinct("b").alias("n_bands"))
-    )
-
-
-# --------------------------------------------------------------------------
 _Q183_DELAY_US = 3_600_000_000  # watermark delay D = 1 h
 
 

@@ -85,7 +85,7 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
         ],
     ),
     # D4/D6 clusters: pair output -> connected components (label
-    # propagation and two-phase) -> survivors (min-id and quality-aware),
+    # propagation) -> survivors (min-id and quality-aware),
     # the keyed cluster variants (exact content-hash, minhash band,
     # canonical URL), soft-dedup weights, neighbour quality and the dedup
     # ROI curve.
@@ -128,9 +128,6 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
               "cum_removable": "cum_removable",
               "total_chars": "total_chars",
               "cum_saved_frac_u": "cum_saved_frac_u"}),
-            ("two_phase_cc", "q165_two_phase_cc",
-             {"vec_id": "doc_id", "component": "component",
-              "cluster_size": "cluster_size"}),
             ("survivors", "q72_dup_survivors",
              {"vec_id": "vec_id", "survivor_id": "survivor_id",
               "is_survivor": "is_survivor"}),
@@ -217,23 +214,17 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
         ],
     ),
     # D4/F13 signature tables (64-bit simhash; 4-band minhash) and the
-    # AMS / AGMS join-size sketches.
+    # AGMS join-size sketch.
     "panel_signatures": (
         [("doc_id", "long"), ("simhash", "long"), ("sig0", "string"),
          ("sig1", "string"), ("sig2", "string"), ("sig3", "string"),
-         ("n_rows", "long"), ("n_keys", "long"), ("exact_f2", "long"),
-         ("est_f2", "long"), ("ratio_u", "long"), ("n_orders", "long"),
-         ("n_lineitem", "long"), ("exact_join_size", "long"),
-         ("est_join_size", "long")],
+         ("ratio_u", "long"), ("n_orders", "long"), ("n_lineitem", "long"),
+         ("exact_join_size", "long"), ("est_join_size", "long")],
         [
             ("agms_join_size", "q175_agms_join_size",
              {"n_orders": "n_orders", "n_lineitem": "n_lineitem",
               "exact_join_size": "exact_join_size",
               "est_join_size": "est_join_size", "ratio_u": "ratio_u"}),
-            ("ams_f2", "q174_ams_f2_join_size",
-             {"n_rows": "n_rows", "n_keys": "n_keys",
-              "exact_f2": "exact_f2", "est_f2": "est_f2",
-              "ratio_u": "ratio_u"}),
             ("simhash64", "q32_simhash", {"doc_id": "doc_id", "simhash": "simhash"}),
             ("minhash", "q19_minhash_signature",
              {"doc_id": "doc_id", "sig0": "sig0", "sig1": "sig1",
@@ -263,21 +254,15 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
         ],
     ),
     # cluster audits over the seed-centroid cells: simplified silhouette,
-    # graph modularity, semantic dedup per cell and the Rand-index drift
-    # between two clusterings.
+    # semantic dedup per cell and the Rand-index drift between two
+    # clusterings.
     "panel_kmeans": (
-        [("cell", "long"), ("vec_id", "long"), ("a_u", "long"),
-         ("b_u", "long"), ("sil_u", "long"), ("n_nodes", "long"),
-         ("deg_sum", "long"), ("e_within", "long"), ("m_edges", "long"),
-         ("q_contrib", "double"), ("n_members", "long"), ("n_dups", "long"),
+        [("cell", "long"), ("vec_id", "long"), ("a_u", "long"), ("b_u", "long"),
+         ("sil_u", "long"), ("n_members", "long"), ("n_dups", "long"),
          ("n_survivors", "long"), ("n_points", "long"), ("n_cells", "long"),
          ("pairs_both", "long"), ("pairs_a", "long"), ("pairs_b", "long"),
          ("rand_index", "double")],
         [
-            ("modularity", "q187_graph_modularity",
-             {"cell": "cell", "n_nodes": "n_nodes", "deg_sum": "deg_sum",
-              "e_within": "e_within", "m_edges": "m_edges",
-              "q_contrib": "q_contrib"}),
             ("silhouette", "q131_simplified_silhouette",
              {"vec_id": "vec_id", "cell": "cell", "a_u": "a_u",
               "b_u": "b_u", "sil_u": "sil_u"}),
@@ -292,24 +277,21 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
     ),
     # token and vocabulary statistics: fingerprint uniqueness per
     # language, Misra-Gries heavy hitters, KMV distinct counts, vocabulary
-    # richness and growth, chi-square language drift, template profiles
-    # the min-df pruning sweep, top-k vocabulary coverage and the Zipf
-    # slope.
+    # richness and growth, template profiles, the min-df pruning sweep,
+    # top-k vocabulary coverage and the Zipf slope.
     "panel_token_lang_stats": (
         [("lang", "string"), ("n_docs", "long"), ("n_unique", "long"),
          ("total_tokens", "long"), ("token", "string"), ("source", "string"),
          ("n_prefixes", "long"), ("max_prefix_docs", "long"),
          ("template_share_u", "long"), ("est", "long"), ("exact", "long"),
          ("err", "long"), ("bound", "long"), ("within_bound", "boolean"),
-         ("v_obs", "long"), ("f1", "long"), ("f2", "long"),
-         ("chao1_u", "long"), ("p0_u", "long"), ("coverage_u", "long"),
-         ("bucket", "long"), ("n_cum", "long"), ("v_cum", "long"),
-         ("beta", "double"), ("o0", "long"), ("o1", "long"), ("e0", "double"),
-         ("e1", "double"), ("chi2_lang", "double"), ("chi2_total", "double"),
-         ("dof", "long"), ("part", "string"), ("n_exact", "long"),
-         ("k_eff", "long"), ("kth_min", "long"), ("est_kmv", "double"),
-         ("min_df", "long"), ("v_kept", "long"), ("v_total", "long"),
-         ("mass_kept", "long"), ("m_total", "long"), ("v_kept_frac_u", "long"),
+         ("v_obs", "long"), ("f1", "long"), ("f2", "long"), ("chao1_u", "long"),
+         ("p0_u", "long"), ("coverage_u", "long"), ("bucket", "long"),
+         ("n_cum", "long"), ("v_cum", "long"), ("beta", "double"),
+         ("part", "string"), ("n_exact", "long"), ("k_eff", "long"),
+         ("kth_min", "long"), ("est_kmv", "double"), ("min_df", "long"),
+         ("v_kept", "long"), ("v_total", "long"), ("mass_kept", "long"),
+         ("m_total", "long"), ("v_kept_frac_u", "long"),
          ("mass_kept_frac_u", "long"), ("vocab_size", "long"),
          ("covered_tokens", "long"), ("coverage", "double"),
          ("n_points", "long"), ("zipf_slope", "double"),
@@ -323,10 +305,6 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
             ("kmv_theta", "q196_kmv_theta_sketch",
              {"part": "part", "n_exact": "n_exact", "k_eff": "k_eff",
               "kth_min": "kth_min", "est_kmv": "est"}),
-            ("chi_square_drift", "q193_chi_square_drift",
-             {"lang": "lang", "o0": "o0", "o1": "o1", "e0": "e0",
-              "e1": "e1", "chi2_lang": "chi2_lang",
-              "chi2_total": "chi2_total", "dof": "dof"}),
             ("heaps_law", "q188_heaps_law",
              {"bucket": "bucket", "n_cum": "n_cum", "v_cum": "v_cum",
               "beta": "beta"}),
@@ -354,48 +332,21 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
         ],
     ),
     # document-profile statistics: confidence rollup, bootstrap interval,
-    # KS / Mann-Whitney / CUSUM / Benford tests, winsorized means and the
-    # cluster-sampling design effect.
+    # KS and CUSUM drift tests.
     "panel_doc_profile": (
         [("lang", "string"), ("n_docs", "long"), ("avg_conf", "double"),
          ("min_conf", "double"), ("r", "long"), ("n_eff", "long"),
          ("boot_mean", "double"), ("ci_lo", "double"), ("ci_hi", "double"),
-         ("v", "long"), ("cum_a", "long"), ("cum_b", "long"),
-         ("gap_u", "long"), ("n_a", "long"), ("n_b", "long"),
-         ("ks_u", "long"), ("ks_scaled", "double"), ("d", "long"),
-         ("o", "long"), ("e_benford", "double"), ("chi2_d", "double"),
-         ("dev_u", "long"), ("chi2_total", "double"), ("mad_u", "long"),
-         ("verdict", "string"), ("rs2_a", "long"), ("u2_a", "long"),
-         ("u2_b", "long"), ("tie_sum", "long"), ("z", "double"),
-         ("p_lo", "long"), ("p_hi", "long"), ("mean_plain", "double"),
-         ("mean_winsor", "double"), ("mean_trim", "double"),
-         ("n_clamped", "long"), ("bucket", "long"), ("cusum_n", "long"),
+         ("v", "long"), ("cum_a", "long"), ("cum_b", "long"), ("gap_u", "long"),
+         ("n_a", "long"), ("n_b", "long"), ("ks_u", "long"),
+         ("ks_scaled", "double"), ("bucket", "long"), ("cusum_n", "long"),
          ("mean_u", "long"), ("mu0_u", "long"), ("s_up", "long"),
-         ("s_dn", "long"), ("h_u", "long"), ("alarm", "boolean"),
-         ("n_sources", "long"), ("m_bar", "double"), ("sst", "double"),
-         ("ssb", "double"), ("rho", "double"), ("deff", "double")],
+         ("s_dn", "long"), ("h_u", "long"), ("alarm", "boolean")],
         [
-            ("design_effect", "q215_design_effect",
-             {"n_sources": "n_sources", "n_docs": "n_docs",
-              "m_bar": "m_bar", "sst": "sst", "ssb": "ssb",
-              "rho": "rho", "deff": "deff"}),
             ("cusum_drift", "q206_cusum_drift",
              {"bucket": "bucket", "cusum_n": "n", "mean_u": "mean_u",
               "mu0_u": "mu0_u", "s_up": "s_up", "s_dn": "s_dn",
               "h_u": "h_u", "alarm": "alarm"}),
-            ("winsorized", "q204_winsorized_stats",
-             {"lang": "lang", "n_docs": "n_docs", "p_lo": "p_lo",
-              "p_hi": "p_hi", "mean_plain": "mean_plain",
-              "mean_winsor": "mean_winsor", "mean_trim": "mean_trim",
-              "n_clamped": "n_clamped"}),
-            ("mann_whitney", "q203_mann_whitney_u",
-             {"n_a": "n_a", "n_b": "n_b", "rs2_a": "rs2_a",
-              "u2_a": "u2_a", "u2_b": "u2_b", "tie_sum": "tie_sum",
-              "z": "z"}),
-            ("benford", "q199_benford_audit",
-             {"d": "d", "o": "o", "e_benford": "e", "chi2_d": "chi2_d",
-              "dev_u": "dev_u", "chi2_total": "chi2_total",
-              "mad_u": "mad_u", "verdict": "verdict"}),
             ("ks_two_sample", "q197_ks_two_sample",
              {"v": "v", "cum_a": "cum_a", "cum_b": "cum_b",
               "gap_u": "gap_u", "n_a": "n_a", "n_b": "n_b",
@@ -498,11 +449,10 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
         ],
     ),
     # event windows: rank-top-k per user; running cumulative sum;
-    # watermark late events; sliding-window rate limits.
+    # watermark late events.
     "panel_event_windows": (
         [("user_id", "long"), ("event_id", "long"), ("value", "double"),
          ("rn", "long"), ("running_value", "double"), ("n_events", "long"),
-         ("max_rate_60s", "long"), ("violates", "boolean"),
          ("event_type", "string"), ("n_on_time", "long"),
          ("n_late_accepted", "long"), ("n_dropped", "long"),
          ("max_lateness_us", "long")],
@@ -513,9 +463,6 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
               "n_late_accepted": "n_late_accepted",
               "n_dropped": "n_dropped",
               "max_lateness_us": "max_lateness_us"}),
-            ("rate_limit", "q163_rate_limit_audit",
-             {"user_id": "user_id", "n_events": "n_events",
-              "max_rate_60s": "max_rate_60s", "violates": "violates"}),
             ("topk_per_user", "q06_topk_events_per_user",
              {"user_id": "user_id", "event_id": "event_id",
               "value": "value", "rn": "rn"}),
@@ -535,19 +482,11 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
              {"doc_id": "doc_id", "source": "source", "cum_chars": "cum_chars"}),
         ],
     ),
-    # token index: corpus top-k tokens; PMI co-occurrence pairs;
-    # posting-list encoding sizes.
+    # token index: corpus top-k tokens; PMI co-occurrence pairs.
     "panel_token_index": (
         [("token", "string"), ("freq", "long"), ("tok_b", "string"),
-         ("pmi", "double"), ("universe", "long"), ("ef_bits", "long"),
-         ("bitmap_bits", "long"), ("varint_bits", "long"),
-         ("best_encoding", "string")],
+         ("pmi", "double")],
         [
-            ("posting_encoding", "q212_posting_encoding_advisor",
-             {"token": "token", "freq": "df", "universe": "universe",
-              "ef_bits": "ef_bits", "bitmap_bits": "bitmap_bits",
-              "varint_bits": "varint_bits",
-              "best_encoding": "best_encoding"}),
             ("pmi_pairs", "q88_pmi_cooccurrence",
              {"token": "tok_a", "tok_b": "tok_b", "freq": "df_ab",
               "pmi": "pmi"}),
@@ -804,22 +743,15 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
               "precision_u": "precision_u", "recall_u": "recall_u"}),
         ],
     ),
-    # corpus-layout family: sequence packing, leakage-safe split and its
-    # audit, deterministic global shuffle, domain rollup, shard placement,
-    # crawl scheduling and the other planning advisors.
+    # corpus-layout family: sequence packing, deterministic global
+    # shuffle, domain rollup, padding waste, the differential-privacy
+    # release, leave-one-source-out influence and the compression proxy.
     "panel_corpus_layout": (
         [("doc_id", "long"), ("shard", "int"), ("n_tokens", "long"),
-         ("start_pos", "long"), ("first_window", "int"),
-         ("last_window", "int"), ("n_windows", "int"), ("vec_id", "long"),
-         ("cluster_id", "long"), ("in_cluster", "boolean"),
-         ("split", "string"), ("global_pos", "long"), ("domain", "string"),
-         ("n_docs", "long"), ("total_chars", "long"),
-         ("mean_chars", "double"), ("lang", "string"), ("slot", "long"),
-         ("k", "long"), ("sched_key", "long"), ("source", "string"),
-         ("base_quota", "long"), ("extra_seat", "boolean"),
-         ("final_quota", "long"), ("policy", "string"), ("n_pairs", "long"),
-         ("n_cross", "long"), ("cross_frac_u", "long"), ("n_moved", "long"),
-         ("moved_frac_u", "long"), ("n_batches", "long"),
+         ("start_pos", "long"), ("first_window", "int"), ("last_window", "int"),
+         ("n_windows", "int"), ("global_pos", "long"), ("domain", "string"),
+         ("n_docs", "long"), ("total_chars", "long"), ("mean_chars", "double"),
+         ("source", "string"), ("policy", "string"), ("n_batches", "long"),
          ("total_tokens", "long"), ("padded_tokens", "long"),
          ("waste_u", "long"), ("true_n", "long"), ("noise", "double"),
          ("noisy", "double"), ("rank_true", "long"), ("rank_noisy", "long"),
@@ -828,20 +760,8 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
          ("influence", "double"), ("influence_rank", "long"),
          ("n_instances", "long"), ("n_distinct_grams", "long"),
          ("n_repeated", "long"), ("repeat_frac_u", "long"),
-         ("dict_worthy", "boolean"), ("n_kept", "long"), ("mean_u", "long"),
-         ("bonus", "double"), ("ucb", "double"), ("priority", "long"),
-         ("ring_moved", "long"), ("mod_moved", "long"),
-         ("ring_moved_frac_u", "long"), ("mod_moved_frac_u", "long")],
+         ("dict_worthy", "boolean")],
         [
-            ("hash_ring", "q208_consistent_hash_ring",
-             {"shard": "shard", "n_docs": "n_docs",
-              "ring_moved": "ring_moved", "mod_moved": "mod_moved",
-              "ring_moved_frac_u": "ring_moved_frac_u",
-              "mod_moved_frac_u": "mod_moved_frac_u"}),
-            ("ucb_scheduler", "q202_ucb_crawl_scheduler",
-             {"source": "source", "n_docs": "n_docs", "n_kept": "n_kept",
-              "mean_u": "mean_u", "bonus": "bonus", "ucb": "ucb",
-              "priority": "priority"}),
             ("compression_proxy", "q201_compression_proxy",
              {"source": "source", "n_instances": "n_instances",
               "n_distinct_grams": "n_distinct", "n_repeated": "n_repeated",
@@ -861,26 +781,10 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
              {"policy": "policy", "n_batches": "n_batches",
               "total_tokens": "total_tokens",
               "padded_tokens": "padded_tokens", "waste_u": "waste_u"}),
-            ("rebalance", "q164_rendezvous_rebalance",
-             {"policy": "policy", "n_docs": "n_docs",
-              "n_moved": "n_moved", "moved_frac_u": "moved_frac_u"}),
-            ("leakage_audit", "q161_split_leakage_audit",
-             {"policy": "policy", "n_pairs": "n_pairs",
-              "n_cross": "n_cross", "cross_frac_u": "cross_frac_u"}),
-            ("quota_apportionment", "q150_quota_apportionment",
-             {"lang": "lang", "source": "source", "n_docs": "n_docs",
-              "base_quota": "base_quota", "extra_seat": "extra",
-              "final_quota": "final_quota"}),
-            ("stride_schedule", "q142_stride_schedule",
-             {"slot": "slot", "doc_id": "doc_id", "lang": "lang",
-              "k": "k", "sched_key": "sched_key"}),
             ("packing", "q100_sequence_packing",
              {"doc_id": "doc_id", "shard": "shard", "n_tokens": "n_tokens",
               "start_pos": "start_pos", "first_window": "first_window",
               "last_window": "last_window", "n_windows": "n_windows"}),
-            ("leakage_split", "q101_leakage_safe_split",
-             {"vec_id": "vec_id", "cluster_id": "cluster_id",
-              "in_cluster": "in_cluster", "split": "split"}),
             ("det_shuffle", "q105_deterministic_shuffle",
              {"doc_id": "doc_id", "shard": "shard",
               "global_pos": "global_pos"}),
@@ -890,23 +794,14 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
         ],
     ),
     # CDC / resume family: manifest crash+resume state, Merkle snapshot
-    # diff, the incremental diff->extract composition, delta-only dedup
-    # and the compaction planner.
+    # diff and the incremental diff->extract composition.
     "panel_cdc_resume": (
         [("doc_id_bucket", "int"), ("doc_count", "long"),
          ("span_count", "long"), ("table_count", "long"), ("status", "string"),
          ("run_seq", "int"), ("doc_id", "long"), ("old_count", "long"),
          ("new_count", "long"), ("clean", "boolean"), ("n_added", "long"),
-         ("n_changed", "long"), ("n_removed", "long"), ("file_id", "long"),
-         ("size_bytes", "long"), ("is_small", "boolean"), ("bin", "long"),
-         ("disposition", "string"), ("bin_fill", "long"), ("dup_of", "long"),
-         ("kind", "string"), ("n_bands", "long")],
+         ("n_changed", "long"), ("n_removed", "long")],
         [
-            ("compaction_plan", "q195_compaction_planner",
-             {"file_id": "file_id", "size_bytes": "size_bytes",
-              "doc_count": "n_docs", "is_small": "is_small",
-              "bin": "bin", "disposition": "disposition",
-              "bin_fill": "bin_fill"}),
             ("merkle_diff", "q172_merkle_snapshot_diff",
              {"doc_id_bucket": "leaf", "old_count": "old_count",
               "new_count": "new_count", "clean": "clean",
@@ -919,31 +814,6 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
             ("incremental", "q106_incremental_extraction",
              {"doc_id": "doc_id", "status": "status",
               "span_count": "span_count"}),
-            ("incremental_dedup", "q118_incremental_dedup",
-             {"doc_id": "new_doc_id", "dup_of": "dup_of", "kind": "kind",
-              "n_bands": "n_bands"}),
-        ],
-    ),
-    # deterministic RAG analogs: citation assembly + query expansion
-    # (the reference's last two LLM-adjacent behaviors).
-    "panel_rag_analogs": (
-        [("cite_index", "int"), ("filename", "string"),
-         ("page_number", "int"), ("content_type", "string"),
-         ("similarity_score", "double"), ("confidence_score", "double"),
-         ("citation", "string"), ("variant_rank", "int"),
-         ("base_term", "string"), ("added_token", "string"),
-         ("df_ab", "long"), ("expanded_query", "string")],
-        [
-            ("citations", "q92_citation_assembly",
-             {"cite_index": "cite_index", "filename": "filename",
-              "page_number": "page_number", "content_type": "content_type",
-              "similarity_score": "similarity_score",
-              "confidence_score": "confidence_score",
-              "citation": "citation"}),
-            ("expansion", "q93_query_expansion",
-             {"variant_rank": "variant_rank", "base_term": "base_term",
-              "added_token": "added_token", "df_ab": "df_ab",
-              "expanded_query": "expanded_query"}),
         ],
     ),
     # ANN / retrieval family: brute-force cosine top-k, IVF probe,

@@ -22,8 +22,8 @@ moment a double appears — the q128/q111 discipline):
 The bias centers the gate near the corpus median (measured at sf0.01)
 so both classes are populated at every SF. After the four snaps the
 logit is pure 64-bit integer arithmetic — bit-identical across engines.
-Reference intent: the quality/confidence scoring pass of
-reference src/table_evaluator.py (rule scores folded into one
+Reference intent: the per-table confidence score of
+reference src/table_extractor.py:359-387 (factor scores folded into one
 accept decision), upgraded to the learned-linear-filter shape a 100 TB
 corpus actually uses.
 

@@ -20,7 +20,7 @@ Scale shape: the only shuffle key is doc_id; both windows and both
 groupBys share that partitioning (a doc's spans are bounded by its
 token count, so no per-key skew beyond the mega documents q42 already
 covers). Reference intent: the span-offset bookkeeping of
-reference src/text_processor.py:38-87 (ordered span assembly)
+reference src/rag/text_processor.py:38-87 (ordered span assembly)
 extended with the overlap-coalescing every redaction pipeline needs.
 
 q158 — DOMAIN-SUFFIX BLOCKLIST JOIN. Crawl governance blocks domains by
@@ -605,7 +605,7 @@ def q105_deterministic_shuffle(spark, sf_dir):
 # applied as a BROADCAST ANTI-JOIN (a real blocklist is a curated list,
 # not a predicate). Output: per surviving domain, doc count, total
 # chars, mean quality. Reference analog: content-type/min-confidence
-# retrieval filters (reference src/rag/vector_store.py filters)
+# retrieval filters (reference src/rag/vector_database.py:304-313)
 # lifted to domain grain.
 # Scale shape: one groupBy(domain) keyed shuffle; the blocklist is a
 # CURATED EXTERNAL LIST (built driver-side from the known domain

@@ -63,19 +63,8 @@ shape (left join + flag) on (bucket, fp); the exact audit join is the
 same broadcast-kh join as q91/q104. The corpus shuffles only for the
 final per-doc rollup.
 
-q174 — AMS F2 SKETCH / SELF-JOIN SIZE ESTIMATE (Alon, Matias &
-Szegedy 1996). F2 = sum over keys of count^2 IS the output size of a
-key-equi self-join — the number a dedup/join planner needs BEFORE
-paying for the join. Nine independent estimators: Z_j = sum over rows
-of s_j(key) with md5-derived +-1 signs, est = median of Z_j^2 — all
-exact BIGINT arithmetic, and each Z_j is a map-side-combinable SUM
-(the whole sketch is one pass, mergeable across partitions). The exact
-F2 from the key groupBy rides along as evidence; at 100 TB you run
-only the sketch. Planted clone classes (x2 and x3 multiplicity) make
-F2 genuinely exceed the row count.
-
 q175 — AGMS TWO-TABLE JOIN-SIZE ESTIMATE (Alon, Gibbons, Matias &
-Szegedy 1999). The companion of q174's self-join F2: the output size
+Szegedy 1999). The output size
 of orders ⋈ lineitem on orderkey is sum_k c_O(k) * c_L(k), and the
 AGMS cross-sketch estimates it as median_j(Z_O,j * Z_L,j) with the
 SAME md5-derived ±1 sign stream applied to both sides — each Z is one
@@ -907,109 +896,6 @@ def q198_cuckoo_filter_probe(spark, sf_dir):
         F.sum(F.when(F.col("cuckoo_hit") & ~F.col("exact_hit"), 1).otherwise(0))
         .cast("long")
         .alias("n_false_pos"),
-    )
-
-
-# --------------------------------------------------------------------------
-_Q174_NEST = 9  # odd estimator count -> integer median
-
-
-_Q174_HEADLEN = 128
-
-
-_Q174_CORPUS = f"""
-  SELECT doc_id, md5(SUBSTRING(text, 1, {_Q174_HEADLEN})) AS kh FROM documents
-  UNION ALL
-  SELECT doc_id + 2000000, md5(SUBSTRING(text, 1, {_Q174_HEADLEN}))
-  FROM documents WHERE doc_id % 7 = 0
-  UNION ALL
-  SELECT doc_id + 4000000, md5(SUBSTRING(text, 1, {_Q174_HEADLEN}))
-  FROM documents WHERE doc_id % 21 = 0
-"""
-
-
-def _q174_oracle() -> str:
-    terms = []
-    for j in range(_Q174_NEST):
-        bucket = md5_bucket_sql("'j" + str(j) + "|' || kh", 2)
-        terms.append(
-            f"CAST(SUM(CASE WHEN {bucket} = 0"
-            f" THEN 1 ELSE -1 END) AS BIGINT) AS z{j}"
-        )
-    zs = ", ".join(terms)
-    sq = ", ".join(f"z{j} * z{j}" for j in range(_Q174_NEST))
-    return f"""
-WITH corpus AS (
-  {_Q174_CORPUS}
-),
-sketch AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, {zs} FROM corpus
-),
-exact AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
-         CAST(SUM(c * c) AS BIGINT) AS exact_f2
-  FROM (SELECT kh, COUNT(*) AS c FROM corpus GROUP BY kh)
-),
-est AS (
-  SELECT n_rows, list_sort([{sq}])[{_Q174_NEST // 2 + 1}] AS est_f2
-  FROM sketch
-)
-SELECT e.n_rows, x.n_keys, x.exact_f2, e.est_f2,
-       (1000000 * e.est_f2) // x.exact_f2 AS ratio_u
-FROM est e, exact x
-"""
-
-
-@register("q174_ams_f2_join_size", oracle=_q174_oracle())
-def q174_ams_f2_join_size(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    kh = F.md5(F.substring("text", 1, _Q174_HEADLEN)).alias("kh")
-    corpus = (
-        docs.select("doc_id", kh)
-        .unionByName(
-            docs.filter(F.col("doc_id") % 7 == 0).select(
-                (F.col("doc_id") + 2000000).alias("doc_id"), kh
-            )
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % 21 == 0).select(
-                (F.col("doc_id") + 4000000).alias("doc_id"), kh
-            )
-        )
-    )
-    signs = [
-        F.sum(
-            F.when(
-                md5_bucket(F.concat(F.lit(f"j{j}|"), F.col("kh")), 2) == 0, 1
-            ).otherwise(-1)
-        )
-        .cast("long")
-        .alias(f"z{j}")
-        for j in range(_Q174_NEST)
-    ]
-    sketch = corpus.agg(F.count("*").cast("long").alias("n_rows"), *signs)
-    est = sketch.select(
-        "n_rows",
-        F.array_sort(
-            F.array(*[F.col(f"z{j}") * F.col(f"z{j}") for j in range(_Q174_NEST)])
-        )
-        .getItem(_Q174_NEST // 2)
-        .alias("est_f2"),
-    )
-    exact = (
-        corpus.groupBy("kh")
-        .agg(F.count("*").alias("c"))
-        .agg(
-            F.count("*").cast("long").alias("n_keys"),
-            F.sum(F.col("c") * F.col("c")).cast("long").alias("exact_f2"),
-        )
-    )
-    return est.crossJoin(F.broadcast(exact)).select(
-        "n_rows",
-        "n_keys",
-        "exact_f2",
-        "est_f2",
-        F.expr("(1000000 * est_f2) div exact_f2").alias("ratio_u"),
     )
 
 

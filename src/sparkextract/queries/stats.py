@@ -1,10 +1,8 @@
 """Statistical audits over the corpus tables: ranking metrics (ROC-AUC,
 precision/recall sweep, calibration error), agreement and rank
 correlation, Pareto selection, resampling intervals (Poisson bootstrap,
-leave-one-source-out), two-sample and drift tests (chi-square, KS,
-Mann-Whitney U, CUSUM), robust summaries (winsorized means), Benford's
-law, the differential-privacy noisy release and the cluster-sampling
-design effect.
+leave-one-source-out), drift tests (KS, CUSUM) and the
+differential-privacy noisy release.
 
 q137 — BINNED ROC-AUC (Mann-Whitney form). Evaluates the q135
 classifier against a deterministic reference label (lang = 'en').
@@ -69,7 +67,7 @@ frontier iff its max-y exceeds every max-y at strictly larger x.
 Integer-only — zero IEEE operations.
 Scale shape: one partial-agg shuffle at the (lang, x) grain (x is
 bounded by the per-doc distinct-token count, a few hundred values);
-the window runs on that provably tiny table (the q137/q150 documented
+the window runs on that provably tiny table (the q137 documented
 tiny-grain exception).
 
 q157 — CALIBRATION / EXPECTED CALIBRATION ERROR. q137 measures
@@ -141,25 +139,9 @@ Scale shape: one mergeable groupBy(source) + a 1-row broadcast; the
 ranking window runs over |sources| rows. No corpus-sized join, window,
 or second scan.
 
-q193 — CHI-SQUARE HOMOGENEITY DRIFT TEST (Pearson 1900) between two
-md5 halves of the corpus: is the language distribution of shard A
-statistically the same as shard B? The drift gate a continuously-
-ingesting pipeline runs per snapshot (q117's token-drift stage
-measures the MAGNITUDE; this attaches the classical TEST statistic). Observed cell
-counts o(lang, half) and margin products e = row_total * col_total / N
-are exact BIGINT-derived; each cell contribution (o - e)^2 / e is a
-fixed IEEE sequence on exact integers, ROUND(,6)-frozen per lang, with
-the global statistic and degrees of freedom (|langs| - 1) repeated on
-every row (ROUND(,6) after an exact DECIMAL(18,6) sum of the frozen
-per-lang terms, so the total is partition-order-independent).
-
-Scale shape: groupBy(lang, half) mergeable counts -> lang-grain
-pivot agg -> 1-row broadcast of margins; everything after the first
-shuffle operates on |langs| rows.
-
 q197 — TWO-SAMPLE KOLMOGOROV-SMIRNOV TEST (Smirnov 1939): the
-CONTINUOUS-distribution drift gate next to q193's categorical
-chi-square. Are the n_chars distributions of the two md5 halves the
+CONTINUOUS-distribution drift gate over document lengths. Are the
+n_chars distributions of the two md5 halves the
 same? D = max_v |F_A(v) - F_B(v)| over the empirical CDFs. Computed on
 the VALUE grain (distinct n_chars values, far smaller than the
 corpus): per-value counts per half -> prefix sums -> the gap in exact
@@ -173,47 +155,8 @@ Scale shape: one mergeable groupBy(value); the prefix-sum window runs
 over the value grain (bounded by the number of distinct lengths, not
 corpus size; range-bucket the window key if values are unbounded).
 
-q199 — BENFORD'S-LAW FIRST-DIGIT AUDIT (Newcomb 1881; Benford 1938) —
-the forensic screen auditors run over reported counts: in scale-
-spanning natural data the leading digit d appears with probability
-log10(1 + 1/d). Applied to the document n_chars column: per digit,
-observed count vs Benford expectation, the chi-square contribution,
-and the mean-absolute-deviation (MAD in proportion micro-units) that
-practitioners threshold (Nigrini: MAD > 0.015 = nonconformity). A
-synthetic corpus with a narrow length distribution FAILS Benford — and
-that is the point of the audit as a data-forensics primitive: it
-flags distributions that are templated/truncated rather than natural.
-The verdict column ships the Nigrini banding so the result is a
-decision, not just a table.
-
-Scale shape: one map-side first-digit projection + a 9-group mergeable
-count; everything after operates on 9 rows.
-
-q203 — MANN-WHITNEY U TEST, tie-corrected (Mann & Whitney 1947) — the
-RANK-based two-sample location test completing the drift-test family
-(q193 chi-square: categorical; q197 KS: max-CDF-gap; this: rank
-shift). Computed exactly on the VALUE grain with midranks, all in
-integers by carrying 2x quantities: 2*rank_sum_a = sum_v c_a(v) *
-(2*cum_before(v) + c_t(v) + 1); 2U = 2*rank_sum - n_a(n_a+1); the
-normal-approximation z uses the tie-corrected variance sigma^2 =
-n_a*n_b/12 * ((n+1) - sum(t^3 - t)/(n(n-1))) — every sum is an exact
-BIGINT before the single sqrt/divide, ROUND(,6)-frozen.
-
-Scale shape: one mergeable groupBy(value) + a prefix-sum window over
-the value grain (bounded by distinct lengths) + a 1-row reduction.
-
-q204 — WINSORIZED + TRIMMED MEANS (Tukey; Dixon 1960). Per language:
-the exact p5/p95 nearest-rank fences from the VALUE-grain CDF (the
-q197 technique — never a corpus sort), then in one more mergeable
-pass over the value grain: the 5% WINSORIZED mean (values beyond a
-fence are CLAMPED to it) and the 5% TRIMMED mean (values beyond a
-fence are DROPPED). All sums are exact BIGINTs; each mean is one IEEE
-division, ROUND(,6)-frozen. The (plain, winsorized, trimmed) triple on
-one row is the standard robustness diagnostic: if they disagree, the
-tails own your average.
-
 q206 — CUSUM DRIFT DETECTOR (Page 1954). The sequential-analysis
-member of the drift family: q193/q197/q203 test snapshot A vs
+member of the drift family: q197 tests snapshot A vs
 snapshot B; CUSUM watches a STREAM of ingestion batches and flags the
 batch at which the mean shifted. Batches are the 10 deterministic md5
 ingestion buckets (q188's convention) in bucket order; the monitored
@@ -235,19 +178,6 @@ statistic, not a defect — the oracle verifies the same decision.
 Scale shape: one mergeable groupBy(bucket) over the corpus; every
 window runs over the 10-row bucket grain. At a real 10^6-batch
 history the prefix windows key on coarse time ranges — same shape.
-
-q215 — CLUSTER-SAMPLING DESIGN EFFECT (Kish 1965): DEFF = 1 +
-(m_bar - 1) * rho, with rho the intraclass correlation of n_chars
-within sources, from the exact one-way ANOVA decomposition (all
-sums-of-squares are exact BIGINT-derived decimals; rho and DEFF are
-ROUND(,6)-frozen doubles). The number answers the sampling question
-q191 leaves open: how much worse is sampling whole SOURCES
-(crawl hosts) than sampling documents uniformly? DEFF ~ 1 means
-sources are internally diverse; DEFF >> 1 means host-level sampling
-wastes budget — the quantitative form of "don't sample by domain".
-
-Scale shape: one mergeable groupBy(source) carrying (n, sum, sum2);
-the ANOVA reduction is a 1-row aggregation over |sources| rows.
 """
 
 from __future__ import annotations
@@ -973,104 +903,6 @@ def q192_loo_influence(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------
-# q193
-_Q193_ORACLE = f"""
-WITH d AS (
-  SELECT lang, CAST({md5_bucket_sql("doc_id", 2)} AS BIGINT) AS half
-  FROM documents
-),
-cells AS (
-  SELECT lang,
-         CAST(SUM(CASE WHEN half = 0 THEN 1 ELSE 0 END) AS BIGINT) AS o0,
-         CAST(SUM(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS BIGINT) AS o1
-  FROM d GROUP BY lang
-),
-g AS (
-  SELECT CAST(SUM(o0) AS BIGINT) AS c0,
-         CAST(SUM(o1) AS BIGINT) AS c1,
-         CAST(SUM(o0) + SUM(o1) AS BIGINT) AS n,
-         CAST(COUNT(*) AS BIGINT) AS n_langs
-  FROM cells
-),
-per_lang AS (
-  SELECT c.lang, c.o0, c.o1,
-         ROUND(CAST((c.o0 + c.o1) * g.c0 AS DOUBLE) / CAST(g.n AS DOUBLE), 6) AS e0,
-         ROUND(CAST((c.o0 + c.o1) * g.c1 AS DOUBLE) / CAST(g.n AS DOUBLE), 6) AS e1,
-         ROUND(
-           (CAST(c.o0 AS DOUBLE)
-              - CAST((c.o0 + c.o1) * g.c0 AS DOUBLE) / CAST(g.n AS DOUBLE))
-           * (CAST(c.o0 AS DOUBLE)
-              - CAST((c.o0 + c.o1) * g.c0 AS DOUBLE) / CAST(g.n AS DOUBLE))
-           / (CAST((c.o0 + c.o1) * g.c0 AS DOUBLE) / CAST(g.n AS DOUBLE))
-           + (CAST(c.o1 AS DOUBLE)
-              - CAST((c.o0 + c.o1) * g.c1 AS DOUBLE) / CAST(g.n AS DOUBLE))
-           * (CAST(c.o1 AS DOUBLE)
-              - CAST((c.o0 + c.o1) * g.c1 AS DOUBLE) / CAST(g.n AS DOUBLE))
-           / (CAST((c.o0 + c.o1) * g.c1 AS DOUBLE) / CAST(g.n AS DOUBLE)), 6)
-           AS chi2_lang,
-         g.n_langs
-  FROM cells c CROSS JOIN g
-),
-tot AS (
-  SELECT ROUND(CAST(SUM(CAST(chi2_lang AS DECIMAL(18,6))) AS DOUBLE), 6)
-           AS chi2_total
-  FROM per_lang
-)
-SELECT p.lang, p.o0, p.o1, p.e0, p.e1, p.chi2_lang,
-       t.chi2_total, CAST(p.n_langs - 1 AS BIGINT) AS dof
-FROM per_lang p CROSS JOIN tot t
-"""
-
-
-@register("q193_chi_square_drift", oracle=_Q193_ORACLE)
-def q193_chi_square_drift(spark, sf_dir):
-    d = load(spark, sf_dir, "documents").select(
-        "lang", md5_bucket(F.col("doc_id"), 2).alias("half")
-    )
-    cells = d.groupBy("lang").agg(
-        F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).cast("long").alias("o0"),
-        F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).cast("long").alias("o1"),
-    )
-    g = cells.agg(
-        F.sum("o0").cast("long").alias("c0"),
-        F.sum("o1").cast("long").alias("c1"),
-        (F.sum("o0") + F.sum("o1")).cast("long").alias("n"),
-        F.count("*").cast("long").alias("n_langs"),
-    )
-    j = cells.crossJoin(F.broadcast(g))
-    rt = (F.col("o0") + F.col("o1")).cast("long")
-    e0 = (rt * F.col("c0")).cast("double") / F.col("n").cast("double")
-    e1 = (rt * F.col("c1")).cast("double") / F.col("n").cast("double")
-    chi2 = (F.col("o0").cast("double") - e0) * (F.col("o0").cast("double") - e0) / e0 + (
-        F.col("o1").cast("double") - e1
-    ) * (F.col("o1").cast("double") - e1) / e1
-    per_lang = j.select(
-        "lang",
-        "o0",
-        "o1",
-        F.round(e0, 6).alias("e0"),
-        F.round(e1, 6).alias("e1"),
-        F.round(chi2, 6).alias("chi2_lang"),
-        "n_langs",
-    )
-    tot = per_lang.agg(
-        F.round(
-            F.sum(F.col("chi2_lang").cast("decimal(18,6)")).cast("double"), 6
-        ).alias("chi2_total")
-    )
-    return per_lang.crossJoin(F.broadcast(tot)).select(
-        "lang",
-        "o0",
-        "o1",
-        "e0",
-        "e1",
-        "chi2_lang",
-        "chi2_total",
-        (F.col("n_langs") - 1).cast("long").alias("dof"),
-    )
-
-
-# ---------------------------------------------------------------------
 # q197
 _Q197_TOPN = 20
 
@@ -1154,301 +986,6 @@ def q197_ks_two_sample(spark, sf_dir):
         .select("v", "cum_a", "cum_b", "gap_u", "n_a", "n_b", "ks_u", scaled.alias("ks_scaled"))
         .orderBy(F.desc("gap_u"), F.asc("v"))
         .limit(_Q197_TOPN)
-    )
-
-
-# ---------------------------------------------------------------------
-# q199
-_Q199_ORACLE = """
-WITH digits AS (
-  SELECT CAST(SUBSTRING(CAST(n_chars AS VARCHAR), 1, 1) AS BIGINT) AS d
-  FROM documents WHERE n_chars > 0
-),
-obs AS (
-  SELECT d, CAST(COUNT(*) AS BIGINT) AS o FROM digits GROUP BY d
-),
-grid AS (SELECT unnest(range(1, 10)) AS d),
-n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM digits),
-cells AS (
-  SELECT g.d,
-         COALESCE(o.o, 0) AS o,
-         ROUND(CAST(n.n AS DOUBLE) * ln(1.0 + 1.0 / g.d) / ln(10.0), 6) AS e,
-         n.n
-  FROM grid g LEFT JOIN obs o ON o.d = g.d CROSS JOIN n
-),
-scored AS (
-  SELECT d, o, e, n,
-         ROUND((CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e) / e, 6)
-           AS chi2_d,
-         CAST(ABS(o * 1000000 - CAST(ROUND(e * 1000000) AS BIGINT))
-              // n AS BIGINT) AS dev_u
-  FROM cells
-),
-tot AS (
-  SELECT ROUND(CAST(SUM(CAST(chi2_d AS DECIMAL(18,6))) AS DOUBLE), 6)
-           AS chi2_total,
-         CAST(SUM(dev_u) // 9 AS BIGINT) AS mad_u
-  FROM scored
-)
-SELECT s.d, s.o, s.e, s.chi2_d, s.dev_u, t.chi2_total, t.mad_u,
-       CASE WHEN t.mad_u < 6000 THEN 'close'
-            WHEN t.mad_u < 15000 THEN 'acceptable'
-            ELSE 'nonconforming' END AS verdict
-FROM scored s CROSS JOIN tot t
-"""
-
-
-@register("q199_benford_audit", oracle=_Q199_ORACLE)
-def q199_benford_audit(spark, sf_dir):
-    digits = (
-        load(spark, sf_dir, "documents")
-        .filter(F.col("n_chars") > 0)
-        .select(F.substring(F.col("n_chars").cast("string"), 1, 1).cast("long").alias("d"))
-    )
-    obs = digits.groupBy("d").agg(F.count("*").cast("long").alias("o"))
-    n = digits.agg(F.count("*").cast("long").alias("n"))
-    # grid is the LEFT side of a left join — Spark cannot build-left
-    # there, so no broadcast hint (the 9-row frame is trivial anyway)
-    grid = obs.sparkSession.range(1, 10).select(F.col("id").cast("long").alias("d"))
-    cells = (
-        grid.join(obs, "d", "left")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "d",
-            F.coalesce("o", F.lit(0)).cast("long").alias("o"),
-            F.round(
-                F.col("n").cast("double")
-                * F.log(1.0 + 1.0 / F.col("d").cast("double"))
-                / F.log(F.lit(10.0)),
-                6,
-            ).alias("e"),
-            "n",
-        )
-    )
-    chi2_d = F.round(
-        (F.col("o").cast("double") - F.col("e"))
-        * (F.col("o").cast("double") - F.col("e"))
-        / F.col("e"),
-        6,
-    )
-    dev_u = F.expr(
-        "abs(o * 1000000 - cast(round(e * 1000000) as bigint)) div n"
-    ).cast("long")
-    scored = cells.select("d", "o", "e", chi2_d.alias("chi2_d"), dev_u.alias("dev_u"), "n")
-    tot = scored.agg(
-        F.round(
-            F.sum(F.col("chi2_d").cast("decimal(18,6)")).cast("double"), 6
-        ).alias("chi2_total"),
-        F.expr("sum(dev_u) div 9").cast("long").alias("mad_u"),
-    )
-    verdict = (
-        F.when(F.col("mad_u") < 6000, F.lit("close"))
-        .when(F.col("mad_u") < 15000, F.lit("acceptable"))
-        .otherwise(F.lit("nonconforming"))
-    )
-    return (
-        scored.drop("n")
-        .crossJoin(F.broadcast(tot))
-        .select("d", "o", "e", "chi2_d", "dev_u", "chi2_total", "mad_u", verdict.alias("verdict"))
-    )
-
-
-# ---------------------------------------------------------------------
-# q203
-_Q203_ORACLE = f"""
-WITH d AS (
-  SELECT CAST({md5_bucket_sql("doc_id", 2)} AS BIGINT) AS half, n_chars
-  FROM documents
-),
-vals AS (
-  SELECT n_chars AS v,
-         CAST(SUM(CASE WHEN half = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_a,
-         CAST(SUM(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c_b
-  FROM d GROUP BY n_chars
-),
-ranked AS (
-  SELECT v, c_a, c_b, c_a + c_b AS c_t,
-         CAST(COALESCE(SUM(c_a + c_b) OVER (ORDER BY v
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              AS BIGINT) AS cum_before
-  FROM vals
-),
-s AS (
-  SELECT CAST(SUM(c_a) AS BIGINT) AS n_a,
-         CAST(SUM(c_b) AS BIGINT) AS n_b,
-         CAST(SUM(c_a * (2 * cum_before + c_t + 1)) AS BIGINT) AS rs2_a,
-         CAST(SUM(c_t * c_t * c_t - c_t) AS BIGINT) AS tie_sum
-  FROM ranked
-)
-SELECT n_a, n_b, rs2_a,
-       CAST(rs2_a - n_a * (n_a + 1) AS BIGINT) AS u2_a,
-       CAST(2 * n_a * n_b - (rs2_a - n_a * (n_a + 1)) AS BIGINT) AS u2_b,
-       tie_sum,
-       ROUND((CAST(rs2_a - n_a * (n_a + 1) AS DOUBLE) / 2.0
-              - CAST(n_a * n_b AS DOUBLE) / 2.0)
-             / SQRT(CAST(n_a * n_b AS DOUBLE) / 12.0
-                    * (CAST(n_a + n_b + 1 AS DOUBLE)
-                       - CAST(tie_sum AS DOUBLE)
-                         / CAST((n_a + n_b) * (n_a + n_b - 1) AS DOUBLE))),
-             6) AS z
-FROM s
-"""
-
-
-@register("q203_mann_whitney_u", oracle=_Q203_ORACLE)
-def q203_mann_whitney_u(spark, sf_dir):
-    from sparkextract.queries.base import md5_bucket
-
-    d = load(spark, sf_dir, "documents").select(
-        md5_bucket(F.col("doc_id"), 2).alias("half"), "n_chars"
-    )
-    vals = d.groupBy(F.col("n_chars").alias("v")).agg(
-        F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).cast("long").alias("c_a"),
-        F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).cast("long").alias("c_b"),
-    )
-    wc = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = vals.select(
-        "v",
-        "c_a",
-        "c_b",
-        (F.col("c_a") + F.col("c_b")).alias("c_t"),
-        F.coalesce(F.sum(F.col("c_a") + F.col("c_b")).over(wc), F.lit(0))
-        .cast("long")
-        .alias("cum_before"),
-    )
-    s = ranked.agg(
-        F.sum("c_a").cast("long").alias("n_a"),
-        F.sum("c_b").cast("long").alias("n_b"),
-        F.sum(F.col("c_a") * (2 * F.col("cum_before") + F.col("c_t") + 1))
-        .cast("long")
-        .alias("rs2_a"),
-        F.sum(F.col("c_t") * F.col("c_t") * F.col("c_t") - F.col("c_t"))
-        .cast("long")
-        .alias("tie_sum"),
-    )
-    u2_a = F.col("rs2_a") - F.col("n_a") * (F.col("n_a") + 1)
-    n = F.col("n_a") + F.col("n_b")
-    z = F.round(
-        (u2_a.cast("double") / 2.0 - (F.col("n_a") * F.col("n_b")).cast("double") / 2.0)
-        / F.sqrt(
-            (F.col("n_a") * F.col("n_b")).cast("double")
-            / 12.0
-            * (
-                (n + 1).cast("double")
-                - F.col("tie_sum").cast("double") / (n * (n - 1)).cast("double")
-            )
-        ),
-        6,
-    )
-    return s.select(
-        "n_a",
-        "n_b",
-        "rs2_a",
-        u2_a.cast("long").alias("u2_a"),
-        (2 * F.col("n_a") * F.col("n_b") - u2_a).cast("long").alias("u2_b"),
-        "tie_sum",
-        z.alias("z"),
-    )
-
-
-# ---------------------------------------------------------------------
-# q204
-_Q204_LO = 5  # lower fence percentile
-
-
-_Q204_HI = 95  # upper fence percentile
-
-
-_Q204_ORACLE = f"""
-WITH vals AS (
-  SELECT lang, CAST(n_chars AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS c
-  FROM documents GROUP BY lang, n_chars
-),
-cdf AS (
-  SELECT lang, v, c,
-         CAST(SUM(c) OVER (PARTITION BY lang ORDER BY v) AS BIGINT) AS cum,
-         CAST(SUM(c) OVER (PARTITION BY lang) AS BIGINT) AS n
-  FROM vals
-),
-fences AS (
-  SELECT lang,
-         CAST(MIN(CASE WHEN cum * 100 >= n * {_Q204_LO} THEN v END) AS BIGINT)
-           AS p_lo,
-         CAST(MIN(CASE WHEN cum * 100 >= n * {_Q204_HI} THEN v END) AS BIGINT)
-           AS p_hi
-  FROM cdf GROUP BY lang
-)
-SELECT v.lang,
-       CAST(SUM(v.c) AS BIGINT) AS n_docs,
-       f.p_lo, f.p_hi,
-       ROUND(CAST(SUM(v.v * v.c) AS DOUBLE) / CAST(SUM(v.c) AS DOUBLE), 6)
-         AS mean_plain,
-       ROUND(CAST(SUM(CASE WHEN v.v < f.p_lo THEN f.p_lo * v.c
-                           WHEN v.v > f.p_hi THEN f.p_hi * v.c
-                           ELSE v.v * v.c END) AS DOUBLE)
-             / CAST(SUM(v.c) AS DOUBLE), 6) AS mean_winsor,
-       ROUND(CAST(SUM(CASE WHEN v.v >= f.p_lo AND v.v <= f.p_hi
-                           THEN v.v * v.c ELSE 0 END) AS DOUBLE)
-             / CAST(SUM(CASE WHEN v.v >= f.p_lo AND v.v <= f.p_hi
-                             THEN v.c ELSE 0 END) AS DOUBLE), 6) AS mean_trim,
-       CAST(SUM(CASE WHEN v.v < f.p_lo OR v.v > f.p_hi THEN v.c ELSE 0 END)
-            AS BIGINT) AS n_clamped
-FROM vals v JOIN fences f ON f.lang = v.lang
-GROUP BY v.lang, f.p_lo, f.p_hi
-"""
-
-
-@register("q204_winsorized_stats", oracle=_Q204_ORACLE)
-def q204_winsorized_stats(spark, sf_dir):
-    vals = (
-        load(spark, sf_dir, "documents")
-        .groupBy("lang", F.col("n_chars").cast("long").alias("v"))
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-    wcum = (
-        Window.partitionBy("lang").orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy("lang")
-    cdf = vals.select(
-        "lang",
-        "v",
-        "c",
-        F.sum("c").over(wcum).cast("long").alias("cum"),
-        F.sum("c").over(wall).cast("long").alias("n"),
-    )
-    fences = cdf.groupBy("lang").agg(
-        F.min(F.when(F.col("cum") * 100 >= F.col("n") * _Q204_LO, F.col("v")))
-        .cast("long")
-        .alias("p_lo"),
-        F.min(F.when(F.col("cum") * 100 >= F.col("n") * _Q204_HI, F.col("v")))
-        .cast("long")
-        .alias("p_hi"),
-    )
-    j = vals.join(fences, "lang")
-    w_term = (
-        F.when(F.col("v") < F.col("p_lo"), F.col("p_lo") * F.col("c"))
-        .when(F.col("v") > F.col("p_hi"), F.col("p_hi") * F.col("c"))
-        .otherwise(F.col("v") * F.col("c"))
-    )
-    inside = (F.col("v") >= F.col("p_lo")) & (F.col("v") <= F.col("p_hi"))
-    return j.groupBy("lang", "p_lo", "p_hi").agg(
-        F.sum("c").cast("long").alias("n_docs"),
-        F.round(
-            F.sum(F.col("v") * F.col("c")).cast("double") / F.sum("c").cast("double"),
-            6,
-        ).alias("mean_plain"),
-        F.round(
-            F.sum(w_term).cast("double") / F.sum("c").cast("double"), 6
-        ).alias("mean_winsor"),
-        F.round(
-            F.sum(F.when(inside, F.col("v") * F.col("c")).otherwise(0)).cast("double")
-            / F.sum(F.when(inside, F.col("c")).otherwise(0)).cast("double"),
-            6,
-        ).alias("mean_trim"),
-        F.sum(F.when(~inside, F.col("c")).otherwise(0)).cast("long").alias("n_clamped"),
-    ).select(
-        "lang", "n_docs", "p_lo", "p_hi", "mean_plain", "mean_winsor",
-        "mean_trim", "n_clamped",
     )
 
 
@@ -1541,100 +1078,4 @@ def q206_cusum_drift(spark, sf_dir):
         s_dn.cast("long").alias("s_dn"),
         "h_u",
         ((s_up > F.col("h_u")) | (s_dn > F.col("h_u"))).alias("alarm"),
-    )
-
-
-# ---------------------------------------------------------------------
-# q215
-_Q215_ORACLE = """
-WITH per_src AS (
-  SELECT source,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(n_chars) AS BIGINT) AS s1,
-         CAST(SUM(n_chars * n_chars) AS BIGINT) AS s2
-  FROM documents GROUP BY source
-),
-g AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS k,
-         CAST(SUM(n) AS BIGINT) AS n_tot,
-         CAST(SUM(s1) AS BIGINT) AS s1_tot,
-         CAST(SUM(s2) AS BIGINT) AS s2_tot,
-         CAST(SUM(CAST(ROUND(CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-                             / CAST(n AS DOUBLE), 6) AS DECIMAL(18,6)))
-              AS DOUBLE) AS sum_sq_over_n
-  FROM per_src
-),
-anova AS (
-  SELECT k, n_tot,
-         CAST(s2_tot AS DOUBLE)
-           - CAST(s1_tot AS DOUBLE) * CAST(s1_tot AS DOUBLE)
-             / CAST(n_tot AS DOUBLE) AS sst,
-         sum_sq_over_n
-           - CAST(s1_tot AS DOUBLE) * CAST(s1_tot AS DOUBLE)
-             / CAST(n_tot AS DOUBLE) AS ssb,
-         CAST(n_tot AS DOUBLE) / CAST(k AS DOUBLE) AS m_bar
-  FROM g
-),
-scored AS (
-  -- the standard one-way ANOVA ICC(1) estimator with the equal-size
-  -- approximation m0 ~ m_bar: rho = (MSB - MSW)/(MSB + (m_bar - 1)*MSW)
-  SELECT k, n_tot, m_bar,
-         ROUND(sst, 6) AS sst, ROUND(ssb, 6) AS ssb,
-         ROUND(((ssb / CAST(k - 1 AS DOUBLE))
-                - ((sst - ssb) / CAST(n_tot - k AS DOUBLE)))
-               / ((ssb / CAST(k - 1 AS DOUBLE))
-                  + (m_bar - 1.0)
-                    * ((sst - ssb) / CAST(n_tot - k AS DOUBLE))), 6) AS rho
-  FROM anova
-)
-SELECT k AS n_sources, n_tot AS n_docs, ROUND(m_bar, 6) AS m_bar,
-       sst, ssb, rho,
-       ROUND(1.0 + (m_bar - 1.0) * rho, 6) AS deff
-FROM scored
-"""
-
-
-@register("q215_design_effect", oracle=_Q215_ORACLE)
-def q215_design_effect(spark, sf_dir):
-    per_src = (
-        load(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("n_chars").cast("long").alias("s1"),
-            F.sum(F.col("n_chars") * F.col("n_chars")).cast("long").alias("s2"),
-        )
-    )
-    g = per_src.agg(
-        F.count("*").cast("long").alias("k"),
-        F.sum("n").cast("long").alias("n_tot"),
-        F.sum("s1").cast("long").alias("s1_tot"),
-        F.sum("s2").cast("long").alias("s2_tot"),
-        # each s1^2/n term is frozen to DECIMAL(18,6) before the sum (the
-        # q193 chi2_total pattern): a double sum depends on row order
-        F.sum(
-            F.round(
-                F.col("s1").cast("double") * F.col("s1").cast("double")
-                / F.col("n").cast("double"),
-                6,
-            ).cast("decimal(18,6)")
-        ).cast("double").alias("sum_sq_over_n"),
-    )
-    kd = F.col("k").cast("double")
-    nd = F.col("n_tot").cast("double")
-    grand = F.col("s1_tot").cast("double") * F.col("s1_tot").cast("double") / nd
-    sst = F.col("s2_tot").cast("double") - grand
-    ssb = F.col("sum_sq_over_n") - grand
-    msw = (sst - ssb) / (nd - kd)
-    msb = ssb / (kd - 1)
-    m_bar = nd / kd
-    rho = F.round((msb - msw) / (msb + (m_bar - 1.0) * msw), 6)
-    return g.select(
-        F.col("k").alias("n_sources"),
-        F.col("n_tot").alias("n_docs"),
-        F.round(m_bar, 6).alias("m_bar"),
-        F.round(sst, 6).alias("sst"),
-        F.round(ssb, 6).alias("ssb"),
-        rho.alias("rho"),
-        F.round(1.0 + (m_bar - 1.0) * rho, 6).alias("deff"),
     )

@@ -340,28 +340,3 @@ def test_q117_composition_agrees_with_parts(spark):
     assert rows[("drift", "jsd_total")]["metric"] == jsd
     reassigned = incremental_ivf(spark, SF_DIR).filter("needs_index").count()
     assert rows[("index", "reassigned")]["n"] == reassigned
-
-
-def test_q118_delta_only_dedup(spark):
-    """Incremental dedup invariants: every reported pair has a delta doc
-    on the left, index pairs point at non-delta docs, delta pairs are
-    ordered (left < right), and n_bands stays in [1, 4]."""
-    from sparkextract.queries.base import md5_bucket
-    from sparkextract.queries.incremental import q118_incremental_dedup
-
-    rows = q118_incremental_dedup(spark, SF_DIR).collect()
-    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    delta_ids = {
-        r["doc_id"]
-        for r in docs.select("doc_id")
-        .filter(md5_bucket(F.col("doc_id"), 10) < 2)
-        .collect()
-    }
-    for r in rows:
-        assert r["new_doc_id"] in delta_ids
-        assert 1 <= r["n_bands"] <= 4
-        if r["kind"] == "index":
-            assert r["dup_of"] not in delta_ids
-        else:
-            assert r["kind"] == "delta"
-            assert r["dup_of"] in delta_ids and r["new_doc_id"] < r["dup_of"]

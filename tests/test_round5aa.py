@@ -1,8 +1,6 @@
-"""q198 (cuckoo filter) and q199 (Benford audit): pure-Python
-re-derivations at sf0.001."""
+"""q198 (cuckoo filter): pure-Python re-derivation at sf0.001."""
 
 import hashlib
-import math
 import os
 
 import pyarrow.parquet as pq
@@ -97,34 +95,3 @@ def test_q198_matches_python_cuckoo(spark):
         khs = _kgrams(d["text"], _Q198_K)
         if khs:
             assert rows[d["doc_id"] + 3000000]["n_exact"] == len(khs)
-
-
-def test_q199_matches_python_benford(spark):
-    from sparkextract.queries.stats import q199_benford_audit
-
-    rows = {r["d"]: r for r in q199_benford_audit(spark, SF_DIR).collect()}
-    assert set(rows) == set(range(1, 10))
-    obs = {d: 0 for d in range(1, 10)}
-    n = 0
-    for d in _docs(["n_chars"]):
-        if d["n_chars"] > 0:
-            obs[int(str(d["n_chars"])[0])] += 1
-            n += 1
-    chi2_total = 0.0
-    mad_sum = 0
-    for d in range(1, 10):
-        # the query freezes e to 6 decimals BEFORE deriving chi2/dev
-        e = round(n * math.log(1 + 1 / d) / math.log(10), 6)
-        chi2 = round((obs[d] - e) ** 2 / e, 6)
-        dev_u = abs(obs[d] * 1000000 - round(e * 1000000)) // n
-        chi2_total += chi2
-        mad_sum += dev_u
-        r = rows[d]
-        assert r["o"] == obs[d]
-        assert abs(r["e"] - round(e, 6)) < 1e-9
-        assert abs(r["chi2_d"] - chi2) < 1e-9
-        assert r["dev_u"] == dev_u
-    for r in rows.values():
-        assert abs(r["chi2_total"] - round(chi2_total, 6)) < 1e-6
-        assert r["mad_u"] == mad_sum // 9
-        assert r["verdict"] in ("close", "acceptable", "nonconforming")

@@ -227,57 +227,6 @@ def test_q141_matches_pure_python(spark):
     assert rows["sloppy"]["recall_u"] == 1_000_000
 
 
-def test_q142_matches_pure_python(spark):
-    """Two-level per-language rank + stride keys equal the brute-force
-    schedule computed in pure Python."""
-    from sparkextract.queries.planning import (
-        _Q142_SCALE,
-        _Q142_TOPN,
-        q142_stride_schedule,
-    )
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(os.path.join(SF_DIR, "documents.parquet"))
-    recs = list(
-        zip(
-            t.column("doc_id").to_pylist(),
-            t.column("lang").to_pylist(),
-            t.column("n_chars").to_pylist(),
-        )
-    )
-    wc = {}
-    for _d, lang, n in recs:
-        wc[lang] = wc.get(lang, 0) + n
-    stride = {
-        lang: max(round(_Q142_SCALE / w), 1) for lang, w in wc.items()
-    }
-
-    def hk(d):
-        return int(hashlib.md5(str(d).encode()).hexdigest()[:8], 16)
-
-    keyed = []
-    for lang in wc:
-        members = sorted(
-            (d for d, l, _n in recs if l == lang), key=lambda d: (hk(d), d)
-        )
-        for k, d in enumerate(members):
-            keyed.append(((2 * k + 1) * stride[lang], lang, k, d))
-    keyed.sort()
-    expected = [
-        (slot + 1, d, lang, k, key)
-        for slot, (key, lang, k, d) in enumerate(keyed[:_Q142_TOPN])
-    ]
-    rows = [
-        (r["slot"], r["doc_id"], r["lang"], r["k"], r["sched_key"])
-        for r in q142_stride_schedule(spark, SF_DIR)
-        .orderBy("slot")
-        .collect()
-    ]
-    assert rows == expected
-    # the interleave mixes languages within the head of the schedule
-    assert len({lang for _s, _d, lang, _k, _key in rows}) > 1
-
-
 def test_q145_matches_pure_python(spark):
     """Committed streaming-dedup sink equals first-writer-wins over the
     base-then-clones arrival order (pure Python)."""

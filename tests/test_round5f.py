@@ -1,9 +1,8 @@
-"""q150-q153 (quota apportionment, Cohen's kappa, neighborhood quality
-propagation, Kendall tau-a): structural invariants plus independent
-pure-Python re-implementations over the raw parquet — guarding the
-semantics (Hamilton apportionment identity, kappa integer identity,
-1-hop message passing, tau pair counting) next to the Spark plan and
-the DuckDB oracle."""
+"""q151-q153 (Cohen's kappa, neighborhood quality propagation, Kendall
+tau-a): structural invariants plus independent pure-Python
+re-implementations over the raw parquet — guarding the semantics
+(kappa integer identity, 1-hop message passing, tau pair counting)
+next to the Spark plan and the DuckDB oracle."""
 
 import hashlib
 import math
@@ -66,34 +65,6 @@ def _entropy(text):
         counts[t] = counts.get(t, 0) + 1
     s = sum(round(c * math.log(c), 9) for c in counts.values())
     return round(math.log(n) - s / n, 6)
-
-
-def test_q150_matches_pure_python(spark):
-    from sparkextract.queries.planning import _Q150_BUDGET, q150_quota_apportionment
-
-    strata = {}
-    for _id, _text, lang, src in _docs(SF_DIR):
-        strata[(lang, src)] = strata.get((lang, src), 0) + 1
-    total = sum(strata.values())
-    based = {
-        k: (n, (_Q150_BUDGET * n) // total, (_Q150_BUDGET * n) % total)
-        for k, n in strata.items()
-    }
-    leftover = _Q150_BUDGET - sum(b for _n, b, _r in based.values())
-    order = sorted(based, key=lambda k: (-based[k][2], k[0], k[1]))
-    extra = set(order[:leftover])
-    expected = {
-        k: (n, b, k in extra, b + (1 if k in extra else 0))
-        for k, (n, b, _r) in based.items()
-    }
-
-    got = {
-        (r.lang, r.source): (r.n_docs, r.base_quota, r.extra, r.final_quota)
-        for r in q150_quota_apportionment(spark, SF_DIR).collect()
-    }
-    assert got == expected
-    # the apportionment identity: integer quotas sum EXACTLY to the budget
-    assert sum(q for _n, _b, _e, q in got.values()) == _Q150_BUDGET
 
 
 def test_q151_matches_pure_python(spark):

@@ -1,7 +1,6 @@
-"""q161-q162 (split leakage audit, quality-aware survivor selection):
-structural invariants plus pure-Python cross-checks — guarding the
-zero-leakage guarantee of the cluster-keyed split, the naive policy's
-measured leakage, and the argmax-with-tiebreak survivor rule."""
+"""q162 (quality-aware survivor selection): structural invariants plus
+pure-Python cross-checks — guarding the argmax-with-tiebreak survivor
+rule."""
 
 import os
 
@@ -16,25 +15,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 def spark():
     s = get_spark("sparkextract-r5i-tests", master="local[4]", shuffle_partitions=8)
     yield s
-
-
-def test_q161_cluster_keyed_split_never_leaks(spark):
-    from sparkextract.queries.planning import q161_split_leakage_audit
-
-    rows = {
-        r["policy"]: r
-        for r in q161_split_leakage_audit(spark, SF_DIR).collect()
-    }
-    assert set(rows) == {"cluster_keyed", "naive_id"}
-    ck, nv = rows["cluster_keyed"], rows["naive_id"]
-    # both policies audit the same verified pair set
-    assert ck["n_pairs"] == nv["n_pairs"] > 0
-    # the leakage-safe split leaks NOTHING — executable proof of q101's
-    # contract (both endpoints of a pair share a component)
-    assert ck["n_cross"] == 0 and ck["cross_frac_u"] == 0
-    # the naive id-keyed split demonstrably leaks twin pairs
-    assert nv["n_cross"] > 0
-    assert 0 < nv["cross_frac_u"] <= 1_000_000
 
 
 def test_q162_survivor_rule_argmax_with_tiebreak(spark):

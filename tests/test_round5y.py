@@ -1,7 +1,6 @@
-"""q194 (sorted-neighborhood blocking) and q195 (compaction planner):
-pure-Python re-derivations at sf0.001."""
+"""q194 (sorted-neighborhood blocking): pure-Python re-derivation at
+sf0.001."""
 
-import hashlib
 import os
 
 import pyarrow.parquet as pq
@@ -63,44 +62,3 @@ def test_q194_matches_python_snm(spark):
     for key, (inter, union, jac_u) in expected.items():
         r = rows[key]
         assert (r["n_common"], r["n_union"], r["jac_u"]) == (inter, union, jac_u)
-
-
-def test_q195_matches_python_packing(spark):
-    from sparkextract.queries.planning import (
-        _Q195_FILES,
-        _Q195_TARGET,
-        q195_compaction_planner,
-    )
-
-    rows = {r["file_id"]: r for r in q195_compaction_planner(spark, SF_DIR).collect()}
-    sizes: dict[int, int] = {}
-    ndocs: dict[int, int] = {}
-    for d in _docs():
-        f = int(hashlib.md5(str(d["doc_id"]).encode()).hexdigest()[:8], 16) % _Q195_FILES
-        sizes[f] = sizes.get(f, 0) + d["n_chars"]
-        ndocs[f] = ndocs.get(f, 0) + 1
-    assert set(rows) == set(sizes)
-    cum = 0
-    bins: dict[int, int] = {}
-    for f in sorted(sizes):
-        small = sizes[f] < _Q195_TARGET
-        r = rows[f]
-        assert (r["size_bytes"], r["n_docs"], r["is_small"]) == (
-            sizes[f],
-            ndocs[f],
-            small,
-        )
-        if small:
-            b = cum // _Q195_TARGET
-            cum += sizes[f]
-            bins[b] = bins.get(b, 0) + sizes[f]
-            assert r["bin"] == b
-            assert r["disposition"] == "compact"
-        else:
-            assert r["bin"] == -1
-            assert r["disposition"] == "keep"
-    for f, r in rows.items():
-        if r["is_small"]:
-            assert r["bin_fill"] == bins[r["bin"]]
-            # next-fit invariant: a bin never exceeds target + one file
-            assert r["bin_fill"] < 2 * _Q195_TARGET
