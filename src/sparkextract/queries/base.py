@@ -75,7 +75,7 @@ def input_token(sf_dir: str) -> str:
 # entry's localCheckpoint blocks are NOT reclaimable via unpersist();
 # reclamation relies on ContextCleaner GC of the dropped reference, so
 # a returned frame must be fully consumed before ~CAP later memo
-# inserts — at CAP=64 that is never hit by the query surface).
+# inserts — at CAP=256 that is never hit by the query surface).
 _CKPT_MEMO: dict[tuple[str, str, str, str], DataFrame] = {}
 _CKPT_MEMO_CAP = 256  # ~26 tags/sf_dir (round-5 end): covers many sf_dirs
 

@@ -35,33 +35,35 @@ def label_propagation(pair_df):
     edges = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).persist()
-    labels = (
-        edges.select(F.col("a").alias("id")).distinct()
-        .select("id", F.col("id").alias("lbl"))
-        .localCheckpoint()
-    )
-    # bounded fixed-point loop: near-dup components have tiny diameters,
-    # but the convergence test (not the bound) is what terminates — the
-    # cap only guards against a pathological chain corpus
-    for _ in range(30):
-        neighbor_min = (
-            edges.join(labels, edges["a"] == labels["id"])
-            .groupBy(F.col("b").alias("id"))
-            .agg(F.min("lbl").alias("nl"))
+    try:
+        labels = (
+            edges.select(F.col("a").alias("id")).distinct()
+            .select("id", F.col("id").alias("lbl"))
+            .localCheckpoint()
         )
-        joined = labels.join(neighbor_min, "id", "left").select(
-            "id",
-            F.col("lbl").alias("old"),
-            F.least("lbl", F.coalesce("nl", "lbl")).alias("lbl"),
-        )
-        joined = joined.localCheckpoint()
-        if joined.filter(F.col("lbl") < F.col("old")).count() == 0:
-            break
-        labels = joined.drop("old")
-    else:
-        raise RuntimeError("label propagation did not converge in 30 rounds")
+        # bounded fixed-point loop: near-dup components have tiny diameters,
+        # but the convergence test (not the bound) is what terminates — the
+        # cap only guards against a pathological chain corpus
+        for _ in range(30):
+            neighbor_min = (
+                edges.join(labels, edges["a"] == labels["id"])
+                .groupBy(F.col("b").alias("id"))
+                .agg(F.min("lbl").alias("nl"))
+            )
+            joined = labels.join(neighbor_min, "id", "left").select(
+                "id",
+                F.col("lbl").alias("old"),
+                F.least("lbl", F.coalesce("nl", "lbl")).alias("lbl"),
+            )
+            joined = joined.localCheckpoint()
+            if joined.filter(F.col("lbl") < F.col("old")).count() == 0:
+                break
+            labels = joined.drop("old")
+        else:
+            raise RuntimeError("label propagation did not converge in 30 rounds")
+    finally:
+        edges.unpersist()
     labels = joined.drop("old")
-    edges.unpersist()
     return labels
 
 

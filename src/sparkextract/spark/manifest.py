@@ -1,14 +1,15 @@
 """Checkpoint manifest: per-bucket lineage + metrics, idempotent resume.
 
 Emulates Iceberg snapshot-commit semantics on plain parquet (no Iceberg
-jars in the sandbox — SURVEY.md §7.4.3): output data lands under
-``data/epoch=<run_id>/bucket=<k>/`` and becomes *visible* only when a
+jars in the sandbox — SURVEY.md §7.4.3): a run writes its output as a
+few files under ``data/epoch=<run_id>/``, each holding whole buckets
+(``bucket`` is a data column), and a bucket becomes *visible* only when a
 manifest row ``(job_run_id, doc_id_bucket, status='done', metrics...)``
-is appended. Readers open only the winning ``epoch=<run>/bucket=<k>``
-directory of each committed bucket, so a run that dies after writing
-data but before committing its manifest rows leaves invisible files, and
-the rerun reprocesses those buckets exactly once (FIXTURES.md F3 resume
-test).
+is appended. Readers open only the epochs that won a bucket, and keep
+only the rows of the buckets each epoch won, so a run that dies after
+writing data but before committing its manifest rows leaves invisible
+rows, and the rerun reprocesses those buckets exactly once (FIXTURES.md
+F3 resume test).
 
 A run's only Spark work is the extract+write action: the write's
 observation carries the per-bucket doc/span/table counts. The manifest holds at most
@@ -28,6 +29,7 @@ On a real cluster the same API is backed by an Iceberg manifest table
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 import uuid
@@ -45,6 +47,7 @@ from sparkextract.schema import EXPLODED_DDL, EXPLODED_SCHEMA, MANIFEST_SCHEMA
 from sparkextract.spark.job import _EXPLODED_COLS, extract_exploded
 
 _MANIFEST_ARROW = to_arrow_schema(MANIFEST_SCHEMA)
+_EPOCH_DDL = EXPLODED_DDL + ", bucket int"  # the schema of an epoch's files
 
 
 def bucket_expr(num_buckets: int = config.MANIFEST_NUM_BUCKETS):
@@ -192,10 +195,14 @@ def run_extraction_job(
         F.histogram_numeric(F.when(is_table, bucket), nb).alias("table_hist"),
         F.count_if(is_table).alias("tables"),
     ]
+    # The hash exchange puts all of a bucket's rows in one reduce task, and
+    # each task writes one file: so each bucket lands in exactly one file
+    # of the epoch, and each task's histogram holds whole buckets, which
+    # keeps the merged bins exact integers. Without the exchange, bins of
+    # one bucket id from different tasks merge into fractional centres
+    # and ``bucket_counts`` raises.
     observed = rows.repartition("bucket").observe(obs, *aggs).filter(is_span)
-    observed.write.partitionBy("bucket").mode("overwrite").parquet(
-        os.path.join(_data_dir(root), f"epoch={run_id}")
-    )
+    observed.write.mode("overwrite").parquet(os.path.join(_data_dir(root), f"epoch={run_id}"))
     metrics = obs.get
     doc_counts, spans, tables = (
         bucket_counts(metrics.get(f"{c}_hist"), metrics.get(f"{c}s", 0), num_buckets)
@@ -236,14 +243,20 @@ def bucket_counts(bins, total: int, num_buckets: int) -> dict[int, int]:
 
 
 def read_extracted(spark: SparkSession, root: str) -> DataFrame:
-    """Committed output only: the winning epoch's directory of every
-    committed bucket. Uncommitted files are never listed or opened."""
+    """Committed output only. Each epoch's files hold many buckets, some
+    of which that run may not have committed: only the epochs that won a
+    bucket are listed and opened, and of each only the rows of the
+    buckets it won are kept."""
+    won: dict[str, list[int]] = {}
+    for k, run in sorted(committed_epochs(root).items()):
+        won.setdefault(run, []).append(k)
     ddir = _data_dir(root)
-    paths = [
-        p
-        for k, run in sorted(committed_epochs(root).items())
-        if os.path.isdir(p := os.path.join(ddir, f"epoch={run}", f"bucket={k}"))
+    parts = [
+        spark.read.schema(_EPOCH_DDL).parquet(path)
+        .filter(F.col("bucket").isin(buckets)).select(*_EXPLODED_COLS)
+        for run, buckets in won.items()
+        if _visible_parts(path := os.path.join(ddir, f"epoch={run}"))
     ]
-    if not paths:  # nothing committed, or only buckets without spans
+    if not parts:  # nothing committed, or no winning epoch holds a file
         return spark.createDataFrame([], EXPLODED_DDL)
-    return spark.read.option("basePath", ddir).parquet(*paths).select(*_EXPLODED_COLS)
+    return functools.reduce(DataFrame.union, parts)

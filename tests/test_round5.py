@@ -141,14 +141,18 @@ def test_label_propagation_long_chain(spark):
 
 def test_label_propagation_bound_raises(spark):
     """A chain longer than the 30-iteration bound can cover must fail
-    loudly, never silently return partial labels."""
+    loudly, never silently return partial labels, and must not leave its
+    persisted edges behind in the session's cache."""
     from sparkextract.queries.graph import label_propagation
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(80)], "left_id long, right_id long"
     )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
     with pytest.raises(RuntimeError, match="did not converge"):
         label_propagation(pairs)
+    assert cache.numCachedEntries() <= before
 
 
 def test_ocr_media_deterministic(spark):

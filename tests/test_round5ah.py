@@ -2,7 +2,6 @@
 
 import hashlib
 import os
-from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest

@@ -2,11 +2,9 @@
 waste): pure-Python re-derivations of the verdicts at sf0.001."""
 
 import hashlib
-import math
 import os
 from collections import Counter
 
-import numpy as np
 import pyarrow.parquet as pq
 import pytest
 

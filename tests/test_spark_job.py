@@ -50,6 +50,15 @@ def _oracle(n_docs=N_DOCS):
     return {d["doc_id"]: extract_document(d["spans"]) for d in generate_corpus(n_docs)}
 
 
+def _oracle_rows():
+    """The oracle's spans as sorted ``read_extracted`` rows."""
+    return sorted(
+        (d, s["kind"], s["text"], s["media_ref"], s["offset"])
+        for d, spans in _oracle().items()
+        for s in spans
+    )
+
+
 def _collect_spans(df):
     out = {}
     for row in df.collect():
@@ -329,8 +338,7 @@ def test_run_launches_only_its_write_jobs(spark, docs, tmp_path):
     def bare(todo, out):
         (
             extract_exploded(todo).withColumn("bucket", bucket_expr(nb))
-            .repartition("bucket").write.partitionBy("bucket").mode("overwrite")
-            .parquet(str(tmp_path / out))
+            .repartition("bucket").write.mode("overwrite").parquet(str(tmp_path / out))
         )
 
     root = str(tmp_path / "fresh")
@@ -350,11 +358,13 @@ def test_mixed_layout_manifest(spark, docs, tmp_path):
     """A manifest that mixes a Spark-written part (INT96 timestamps,
     _SUCCESS, .crc files) with pyarrow-written parts: a bucket's earliest
     commit wins in both the resume probe and the read, and a file of an
-    uncommitted bucket of the crashed epoch is never opened."""
+    epoch that won no bucket is never opened."""
     nb = 8
     root = str(tmp_path / "root")
     mdir = os.path.join(root, "manifest")
     run_extraction_job(spark, docs, root, run_id="crashed", num_buckets=nb, fail_after_buckets=3)
+    # a run that crashed before committing anything: its epoch wins no bucket
+    run_extraction_job(spark, docs, root, run_id="lost", num_buckets=nb, fail_after_buckets=0)
     # the crashed run's commit, rewritten the way Spark wrote manifests
     rows = [tuple(r) for r in read_manifest(spark, root).collect()]
     assert sorted(r[1] for r in rows) == [0, 1, 2]
@@ -369,8 +379,8 @@ def test_mixed_layout_manifest(spark, docs, tmp_path):
     # a later duplicate commit of bucket 1, in the pyarrow layout
     later = rows[0][-1].replace(year=rows[0][-1].year + 1)
     _append_manifest(root, "later", [("later", 1, "done", 0, 0, 0, 0, later)])
-    # garbage in an uncommitted bucket of the crashed epoch
-    bad = os.path.join(root, "data", "epoch=crashed", "bucket=5")
+    # garbage in the epoch that won no bucket
+    bad = os.path.join(root, "data", "epoch=lost")
     victim = next(f for f in sorted(os.listdir(bad)) if f.endswith(".parquet"))
     with open(os.path.join(bad, victim), "wb") as f:
         f.write(b"not a parquet file")
@@ -379,14 +389,37 @@ def test_mixed_layout_manifest(spark, docs, tmp_path):
     assert {r[0] for r in todo.select("doc_id_bucket").distinct().collect()} == set(range(3, 8))
 
     in_bucket = dict(docs.select("doc_id", bucket_expr(nb)).collect())
-    golden = sorted(
-        (d, s["kind"], s["text"], s["media_ref"], s["offset"])
-        for d, spans in _oracle().items()
-        for s in spans
-    )
+    golden = _oracle_rows()
     got = sorted(map(tuple, read_extracted(spark, root).collect()))
     assert got == [r for r in golden if in_bucket[r[0]] < 3]
 
     run_extraction_job(spark, docs, root, run_id="resumed", num_buckets=nb)
     assert sorted(map(tuple, read_extracted(spark, root).collect())) == golden
     assert read_manifest(spark, root).count() == 3 + 1 + 5
+
+
+def test_each_bucket_in_one_file_of_its_epoch(spark, docs, tmp_path):
+    """An epoch is a few files that each hold whole buckets: every bucket's
+    rows lie in exactly one file of its epoch, an epoch has no more files
+    than shuffle partitions, and the read keeps none of the crashed
+    epoch's rows in buckets it did not commit."""
+    nb = 64
+    root = str(tmp_path / "root")
+    run_extraction_job(spark, docs, root, run_id="crashed", num_buckets=nb, fail_after_buckets=3)
+    run_extraction_job(spark, docs, root, run_id="resumed", num_buckets=nb)
+    max_files = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for run in ("crashed", "resumed"):
+        epoch = os.path.join(root, "data", f"epoch={run}")
+        files = [f for f in os.listdir(epoch) if f.endswith(".parquet") and f[0] not in "._"]
+        assert 0 < len(files) <= max_files, (run, files)
+        owner: dict[int, str] = {}
+        for f in files:
+            for k in set(pq.read_table(os.path.join(epoch, f), columns=["bucket"])["bucket"].to_pylist()):
+                assert owner.setdefault(k, f) == f, (run, k)
+
+    in_bucket = dict(docs.select("doc_id", bucket_expr(nb)).collect())
+    golden = _oracle_rows()
+    got = read_extracted(spark, root).withColumn("file", F.input_file_name()).collect()
+    assert sorted(tuple(r)[:-1] for r in got) == golden
+    from_crashed = [r["doc_id"] for r in got if "/epoch=crashed/" in r["file"]]
+    assert from_crashed and all(in_bucket[d] < 3 for d in from_crashed)
