@@ -14,7 +14,9 @@ instead of holding the whole document (SURVEY.md §7.4.2):
   sub_idx)``;
 - phase 2 ``finalize`` — per document: table/form dedup (D6/D1), kind-rank
   ordering texts→tables→forms→images, dense 0-based ``offset`` (W1,
-  /root/reference/src/rag/text_processor.py:38-87).
+  /root/reference/src/rag/text_processor.py:38-87) -> ``(kind, text,
+  media_ref, offset)`` tuples, which ``extract_document`` turns into dicts
+  and the engine into column lists.
 
 Because phase 1 never looks outside its span and phase 2 is a pure
 function of the multiset of phase-1 items, *any* order or batching of a
@@ -34,7 +36,9 @@ from sparkextract.core.tables import parse_pdf_layout, render_form, render_table
 
 # intermediate item: (kind, text, media_ref, src_offset, sub_idx)
 Item = tuple[str, str | None, str | None, int, int]
-# output span: dict(kind, text, media_ref, offset)
+# finalized span: (kind, text, media_ref, offset)
+OutSpan = tuple[str, str | None, str | None, int]
+# output span of the oracle: dict(kind, text, media_ref, offset)
 Span = dict
 
 
@@ -45,14 +49,6 @@ def extract_input_span(
     src_offset: int,
 ) -> list[Item]:
     """Phase 1: one input span -> intermediate items. Context-free."""
-    items: list[Item] = []
-    sub = 0
-
-    def emit(out_kind: str, out_text: str | None, out_ref: str | None) -> None:
-        nonlocal sub
-        items.append((out_kind, out_text, out_ref, src_offset, sub))
-        sub += 1
-
     if kind == config.IN_MEDIA:
         # media decode: media_ref preserved verbatim (FIXTURES.md F2;
         # reference src/image_extractor.py:56-70) and deterministic
@@ -60,12 +56,19 @@ def extract_input_span(
         # the P7 clean chain — rides in `text`, so image_ocr spans enter
         # the ordered sequence with content like the reference's OCR
         # chunks (src/image_extractor.py:337-549, text_processor.py:38-87)
-        emit(config.KIND_IMAGE, pseudo_ocr_text(media_ref), media_ref)
-        return items
+        return [(config.KIND_IMAGE, pseudo_ocr_text(media_ref), media_ref, src_offset, 0)]
 
     norm = normalize_text(text)
     if not norm:
-        return items
+        return []
+
+    items: list[Item] = []
+    sub = 0
+
+    def emit(out_kind: str, out_text: str | None, out_ref: str | None) -> None:
+        nonlocal sub
+        items.append((out_kind, out_text, out_ref, src_offset, sub))
+        sub += 1
 
     if kind == config.IN_HTML:
         content = extract_html(norm)
@@ -98,8 +101,9 @@ def extract_input_span(
     return items
 
 
-def finalize(items: Iterable[Item]) -> list[Span]:
-    """Phase 2: order, dedup, and number a document's intermediate items.
+def finalize(items: Iterable[Item]) -> list[OutSpan]:
+    """Phase 2: order, dedup, and number a document's intermediate items
+    into ``(kind, text, media_ref, offset)`` tuples.
 
     Ordering: (kind_rank, src_offset, sub_idx) — texts first, then tables,
     forms, images, each in source order (W1). Table and form spans are
@@ -124,21 +128,14 @@ def finalize(items: Iterable[Item]) -> list[Span]:
         ),
     )
     seen: set[str] = set()
-    spans: list[Span] = []
+    spans: list[OutSpan] = []
     for kind, text, media_ref, _src, _sub in ordered:
         if kind in (config.KIND_TABLE, config.KIND_FORM) and text is not None:
             fp = md5_hex(text)
             if fp in seen:
                 continue
             seen.add(fp)
-        spans.append(
-            {
-                "kind": kind,
-                "text": text,
-                "media_ref": media_ref,
-                "offset": len(spans),
-            }
-        )
+        spans.append((kind, text, media_ref, len(spans)))
     return spans
 
 
@@ -174,4 +171,7 @@ def extract_document(spans: Iterable[Mapping] | None) -> list[Span]:
                 int(off) if off is not None else 0,
             )
         )
-    return finalize(items)
+    return [
+        {"kind": kind, "text": text, "media_ref": media_ref, "offset": offset}
+        for kind, text, media_ref, offset in finalize(items)
+    ]

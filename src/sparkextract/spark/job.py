@@ -2,18 +2,27 @@
 
 Pipeline (north_rule):
     read documents → bucket filter on the checkpoint manifest (J2 resume)
-    → explode(spans) → one ``mapInPandas`` (phase 1 per span, ``finalize``
-    per doc) → write bucketed output + manifest.
+    → explode_outer(spans) → one ``mapInPandas`` (phase 1 per span,
+    ``finalize`` per doc) → write bucketed output + manifest.
 
 One path for every document size (SURVEY.md §7.4.2). Offsets are
 doc-local, so all of a document's phase-1 items must meet in one place
-to be numbered. ``explode`` is a narrow generator and a document row
-lives in one scan split, so the row's exploded spans arrive as one
-contiguous run inside that scan task. ``_extract_runs`` runs phase 1
-(``extract_input_span``) per span and, when ``doc_id`` changes, phase 2
-(``finalize``) over the closed doc's items. Phase 2 is a pure function
-of the multiset of phase-1 items, so the output equals
-``extract_document`` by construction (tested in test_spark_job.py).
+to be numbered. ``explode_outer`` is a narrow generator and a document
+row lives in one scan split, so the row's exploded spans arrive as one
+contiguous run inside that scan task. A doc whose span array is NULL,
+empty or holds only NULL elements arrives as all-NULL rows, which phase 1
+maps to no items, just as the oracle skips NULL elements.
+``_extract_runs`` runs phase 1 (``extract_input_span``) per span and,
+when ``doc_id`` changes, phase 2 (``finalize``) over the closed doc's
+items. Phase 2 is a pure function of the multiset of phase-1 items, so
+the output equals ``extract_document`` by construction (tested in
+test_spark_job.py).
+
+Every closed doc also yields one marker row ``(doc_id, NULL, NULL, NULL,
+NULL)``, so that ``extract_marked`` carries each input doc, spans or
+not, out of its one scan: the resumable run counts docs from the markers
+(spark/manifest.py), ``extract_documents`` folds a doc with no spans to
+an empty array, and ``extract_exploded`` drops the markers.
 
 Scale notes:
 - extraction is map-only: one scan, one Python UDF stage on the scan
@@ -23,7 +32,8 @@ Scale notes:
   over to the next batch, so a mega doc never becomes one pandas frame;
 - the price is that a mega doc's phase 1 runs in its one scan task
   rather than being spread over several;
-- all Python crossings are Arrow-batched (no per-row Python, input_hint).
+- all Python crossings are Arrow-batched (no per-row Python, input_hint):
+  each batch is read column-wise and the output is built as column lists.
 """
 
 from __future__ import annotations
@@ -37,10 +47,12 @@ from pyspark.sql import functions as F
 from sparkextract.schema import EXPLODED_DDL
 
 _EXPLODED_COLS = ["doc_id", "kind", "text", "media_ref", "offset"]
+_MARKER = (None, None, None, None)  # (kind, text, media_ref, offset) of a marker row
 
 
 def _extract_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Exploded input spans, one contiguous run per doc -> output spans.
+    """Exploded input spans, one contiguous run per doc -> each doc's
+    output spans, then its marker row.
 
     A doc's run may cross batches; its items carry over and the last doc
     is finalized after the final batch. A ``doc_id`` that reappears after
@@ -53,52 +65,53 @@ def _extract_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     closed: set = set()
     doc_id, items = None, None  # the open run
 
-    def close() -> list[tuple]:
+    def close(cols: tuple[list, ...]) -> None:
         closed.add(doc_id)
-        return [
-            (doc_id, s["kind"], s["text"], s["media_ref"], s["offset"]) for s in finalize(items)
-        ]
+        spans = finalize(items)
+        spans.append(_MARKER)
+        cols[0].extend([doc_id] * len(spans))
+        for col, values in zip(cols[1:], zip(*spans)):
+            col.extend(values)
+
+    def frame(cols: tuple[list, ...]) -> pd.DataFrame:
+        return pd.DataFrame(dict(zip(_EXPLODED_COLS, cols)))
 
     for pdf in batches:
-        rows: list[tuple] = []
+        cols: tuple[list, ...] = ([], [], [], [], [])
+        # Arrow hands NULL strings as None and an int column with NULLs
+        # as float NaN
+        offsets = pdf["offset"].fillna(0).astype("int64").tolist()
         for d, kind, text, media_ref, off in zip(
-            pdf["doc_id"], pdf["kind"], pdf["text"], pdf["media_ref"], pdf["offset"]
+            pdf["doc_id"].tolist(),
+            pdf["kind"].tolist(),
+            pdf["text"].tolist(),
+            pdf["media_ref"].tolist(),
+            offsets,
         ):
             if items is None or d != doc_id:
                 if items is not None:
-                    rows.extend(close())
+                    close(cols)
                 if d in closed:
                     raise ValueError(f"doc_id {d!r} reappears after its run closed")
                 doc_id, items = d, []
-            # Arrow hands NULL strings as None and an int column with
-            # NULLs as float NaN
-            items.extend(
-                extract_input_span(
-                    kind if isinstance(kind, str) else None,
-                    text if isinstance(text, str) else None,
-                    media_ref if isinstance(media_ref, str) else None,
-                    int(off) if off is not None and not pd.isna(off) else 0,
-                )
-            )
-        if rows:
-            yield pd.DataFrame(rows, columns=_EXPLODED_COLS)
-    if items is not None and (rows := close()):
-        yield pd.DataFrame(rows, columns=_EXPLODED_COLS)
+            items.extend(extract_input_span(kind, text, media_ref, off))
+        if cols[0]:
+            yield frame(cols)
+    if items is not None:
+        cols = ([], [], [], [], [])
+        close(cols)
+        yield frame(cols)
 
 
-def extract_exploded(docs: DataFrame, skew_threshold=None) -> DataFrame:
-    """documents(doc_id, spans) -> exploded output spans.
-
-    ``skew_threshold`` is ignored. It is accepted only because the
-    benchmark harness (``perfbench/layers.py``) still passes
-    ``skew_threshold=None`` to time the removed whole-doc path; drop it
-    together with that call."""
+def extract_marked(docs: DataFrame) -> DataFrame:
+    """documents(doc_id, spans) -> exploded output spans plus one marker
+    row (NULL ``kind``, ``text``, ``media_ref`` and ``offset``) per input
+    doc, docs without spans included. One scan and one Python UDF."""
     from sparkextract.spark.session import ensure_workers_can_import
 
     ensure_workers_can_import(docs.sparkSession)
     return (
-        docs.select("doc_id", F.explode("spans").alias("s"))
-        .filter(F.col("s").isNotNull())
+        docs.select("doc_id", F.explode_outer("spans").alias("s"))
         .select(
             "doc_id",
             F.col("s.kind").alias("kind"),
@@ -110,14 +123,25 @@ def extract_exploded(docs: DataFrame, skew_threshold=None) -> DataFrame:
     )
 
 
+def extract_exploded(docs: DataFrame, skew_threshold=None) -> DataFrame:
+    """documents(doc_id, spans) -> exploded output spans: ``extract_marked``
+    without its marker rows.
+
+    ``skew_threshold`` is ignored. It is accepted only because the
+    benchmark harness (``perfbench/layers.py``) still passes
+    ``skew_threshold=None`` to time the removed whole-doc path; drop it
+    together with that call."""
+    return extract_marked(docs).filter(F.col("kind").isNotNull())
+
+
 def assemble_spans(exploded: DataFrame) -> DataFrame:
     """Exploded rows -> (doc_id, spans array<struct>) sorted by offset.
 
     Built-in exprs only: sort_array on struct(offset, ...) sorts by the
     leading offset field, then transform reorders the struct fields to the
     canonical (kind, text, media_ref, offset) layout. A row with a NULL
-    ``kind`` (a doc_id carried by an outer join with no spans) contributes
-    no element: ``collect_list`` skips the NULL struct."""
+    ``kind`` (a doc's marker row) contributes no element: ``collect_list``
+    skips the NULL struct."""
     return (
         exploded.groupBy("doc_id")
         .agg(
@@ -147,15 +171,6 @@ def assemble_spans(exploded: DataFrame) -> DataFrame:
 
 def extract_documents(docs: DataFrame) -> DataFrame:
     """documents -> (doc_id, spans) extracted output, including docs whose
-    extraction is empty (empty array, matching the oracle).
-
-    Zero-span docs are re-attached via a LEFT join from the doc_id list
-    into the exploded output *before* the group-assemble — one extraction
-    pass, one shuffle. (An anti-join against the assembled result would
-    reference the extraction subtree twice in the same plan, and Spark
-    recomputes unshared subtrees — at 100 TB that doubles the job.)
-    ``assemble_spans`` skips the NULL-kind rows, so unmatched docs fold
-    to an empty span array."""
-    exploded = extract_exploded(docs)
-    joined = docs.select("doc_id").join(exploded, "doc_id", "left")
-    return assemble_spans(joined)
+    extraction is empty (empty array, matching the oracle): every doc has
+    a marker row, which ``assemble_spans`` folds to no element."""
+    return assemble_spans(extract_marked(docs))

@@ -11,11 +11,15 @@ writing data but before committing its manifest rows leaves invisible
 rows, and the rerun reprocesses those buckets exactly once (FIXTURES.md
 F3 resume test).
 
-A run's only Spark work is the extract+write action: the write's
-observation carries the per-bucket doc/span/table counts. The manifest holds at most
-``num_buckets`` rows per run, so it is a driver-side table: read with
-``pyarrow.dataset`` and appended with ``pyarrow.parquet``, never through
-a Spark job.
+A run's only Spark work is the extract+write action, and it scans its
+input once: the extraction UDF emits each doc's output spans and one
+marker row (NULL ``kind``) per doc (``extract_marked``, spark/job.py), so
+a doc with no spans is still counted, and the markers are dropped just
+before the write. The write's observation carries the per-bucket
+doc/span/table counts; a run that finds nothing left to do removes its
+empty epoch directory. The manifest holds at most ``num_buckets`` rows
+per run, so it is a driver-side table: read with ``pyarrow.dataset`` and
+appended with ``pyarrow.parquet``, never through a Spark job.
 
 The resume probe is the reference's SHA-256 skip-if-ingested check
 (reference src/rag/rag_pipeline.py:97-105) generalized from per-document
@@ -31,6 +35,7 @@ from __future__ import annotations
 
 import functools
 import os
+import shutil
 import time
 import uuid
 from datetime import datetime, timezone
@@ -43,8 +48,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from sparkextract import config
-from sparkextract.schema import EXPLODED_DDL, EXPLODED_SCHEMA, MANIFEST_SCHEMA
-from sparkextract.spark.job import _EXPLODED_COLS, extract_exploded
+from sparkextract.schema import EXPLODED_DDL, MANIFEST_SCHEMA
+from sparkextract.spark.job import _EXPLODED_COLS, extract_marked
 
 _MANIFEST_ARROW = to_arrow_schema(MANIFEST_SCHEMA)
 _EPOCH_DDL = EXPLODED_DDL + ", bucket int"  # the schema of an epoch's files
@@ -157,14 +162,10 @@ def run_extraction_job(
     t0 = time.time()
 
     todo = filter_todo(docs, spark, root, num_buckets, bucket_col=bucket_col)
-    exploded = extract_exploded(todo.drop("doc_id_bucket"))
-    # one marker row (NULL kind) per todo doc, so that docs with no spans
-    # still count; parquet column pruning reads only doc_id for them
-    markers = todo.select(
-        "doc_id", *(F.lit(None).cast(f.dataType).alias(f.name) for f in EXPLODED_SCHEMA[1:])
-    )
     out_bucket = bucket_expr(num_buckets) if bucket_col is None else bucket_col.cast("int")
-    rows = exploded.unionByName(markers).withColumn("bucket", out_bucket)
+    # output spans plus one marker row (NULL kind) per todo doc, so that
+    # docs with no spans still count
+    rows = extract_marked(todo.drop("doc_id_bucket")).withColumn("bucket", out_bucket)
 
     # Per-bucket doc/span/table counts ride along with the WRITE via
     # df.observe(): no re-read of the output and no second pass of the
@@ -201,9 +202,12 @@ def run_extraction_job(
     # keeps the merged bins exact integers. Without the exchange, bins of
     # one bucket id from different tasks merge into fractional centres
     # and ``bucket_counts`` raises.
+    epoch = os.path.join(_data_dir(root), f"epoch={run_id}")
     observed = rows.repartition("bucket").observe(obs, *aggs).filter(is_span)
-    observed.write.mode("overwrite").parquet(os.path.join(_data_dir(root), f"epoch={run_id}"))
+    observed.write.mode("overwrite").parquet(epoch)
     metrics = obs.get
+    if not metrics.get("docs"):  # nothing was left to do: leave no epoch
+        shutil.rmtree(epoch)
     doc_counts, spans, tables = (
         bucket_counts(metrics.get(f"{c}_hist"), metrics.get(f"{c}s", 0), num_buckets)
         for c in ("doc", "span", "table")

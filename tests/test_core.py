@@ -153,10 +153,13 @@ def test_finalize_order_and_offsets():
         ("text", "t-early", None, 0, 0),
         ("form", "f: 1", None, 1, 0),
     ]
-    spans = finalize(items)
-    assert [s["kind"] for s in spans] == ["text", "text", "table", "form", "image_ocr"]
-    assert [s["text"] for s in spans][:2] == ["t-early", "t-late"]
-    assert [s["offset"] for s in spans] == [0, 1, 2, 3, 4]
+    assert finalize(items) == [
+        ("text", "t-early", None, 0),
+        ("text", "t-late", None, 1),
+        ("table", "T", None, 2),
+        ("form", "f: 1", None, 3),
+        ("image_ocr", None, "img://d/2", 4),
+    ]
 
 
 def test_finalize_dedups_tables_and_forms():
@@ -206,7 +209,9 @@ from per-span items)."""
         items = []
         for s in d["spans"]:
             items.extend(extract_input_span(s["kind"], s["text"], s["media_ref"], s["offset"]))
-        assert finalize(items) == whole
+        assert finalize(items) == [
+            (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in whole
+        ]
 
 
 # ---------------------------------------------------------------- golden

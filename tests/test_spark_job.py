@@ -19,6 +19,7 @@ from sparkextract.spark.job import (
     assemble_spans,
     extract_documents,
     extract_exploded,
+    extract_marked,
 )
 from sparkextract.schema import DOC_SCHEMA, MANIFEST_SCHEMA
 from sparkextract.spark.manifest import (
@@ -104,11 +105,13 @@ def test_mega_path_equals_whole_doc_path(spark, docs):
 
 def _batches(docs, sizes):
     """Exploded input rows of ``docs`` as pandas batches of ``sizes`` rows
-    (the rest in one last batch), the way Arrow hands them to the UDF."""
+    (the rest in one last batch), the way ``explode_outer`` and Arrow hand
+    them to the UDF: a NULL element, and a NULL or empty array, is one
+    all-NULL row."""
     rows = [
-        (d["doc_id"], s["kind"], s["text"], s["media_ref"], s["offset"])
+        (d["doc_id"], *((s["kind"], s["text"], s["media_ref"], s["offset"]) if s else (None,) * 4))
         for d in docs
-        for s in d["spans"]
+        for s in d["spans"] or [None]
     ]
     out, pos = [], 0
     for n in [*sizes, len(rows)]:
@@ -119,7 +122,8 @@ def _batches(docs, sizes):
 
 def test_extract_runs_carries_a_doc_across_batches():
     """A doc whose run straddles three batches (with an empty batch in
-    between) is finalized once, equal to ``extract_document``."""
+    between) is finalized once, equal to ``extract_document``, and every
+    doc gets exactly one marker row (NULL kind)."""
     docs = list(generate_corpus(6))
     n0 = len(docs[0]["spans"])
     n1 = len(docs[1]["spans"])
@@ -127,14 +131,19 @@ def test_extract_runs_carries_a_doc_across_batches():
     batches = _batches(docs, [n0 + 1, 0, 1, n1 - 2])
     assert batches[1].empty
     out = pd.concat(list(_extract_runs(iter(batches))), ignore_index=True)
-    got = {}
+    got, markers = {}, []
     for r in out.itertuples(index=False):
+        if r.kind is None:
+            assert (r.text, r.media_ref) == (None, None) and pd.isna(r.offset)
+            markers.append(r.doc_id)
+            continue
         got.setdefault(r.doc_id, []).append(
             {"kind": r.kind, "text": r.text, "media_ref": r.media_ref, "offset": r.offset}
         )
     want = {d["doc_id"]: extract_document(d["spans"]) for d in docs}
     assert want[docs[1]["doc_id"]]
     assert got == {k: v for k, v in want.items() if v}
+    assert sorted(markers) == sorted(want)
     assert list(out.columns) == _EXPLODED_COLS
 
 
@@ -152,12 +161,14 @@ def test_extract_runs_empty_batch_yields_nothing():
 
 def test_extract_plan_is_one_scan_one_udf_no_exchange(spark, docs, tmp_path):
     """Over a parquet source extraction is map-only: one scan, one Python
-    UDF node and no shuffle."""
+    UDF node and no shuffle, both for the spans and for the marked rows a
+    run writes."""
     docs.write.parquet(str(tmp_path / "in"))
-    out = extract_exploded(spark.read.parquet(str(tmp_path / "in")))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    counts = tuple(plan.count(node) for node in ("FileScan", "Exchange", "MapInPandas"))
-    assert counts == (1, 0, 1), plan
+    src = spark.read.parquet(str(tmp_path / "in"))
+    for out in (extract_exploded(src), extract_marked(src)):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        counts = tuple(plan.count(node) for node in ("FileScan", "Exchange", "MapInPandas"))
+        assert counts == (1, 0, 1), plan
 
 
 def test_partitioning_invariance(spark, docs):
@@ -210,6 +221,20 @@ def test_empty_and_null_spans(spark):
     got = _collect_spans(extract_documents(df))
     assert got == oracle
     assert got["d-empty"] == got["d-null"] == []
+
+
+def test_docs_without_spans_are_counted_but_read_no_rows(spark, tmp_path):
+    """Docs whose span array is NULL, empty or all-NULL reach the UDF as
+    all-NULL rows: the run counts them in the manifest and writes no span
+    for them."""
+    rows = [("d-null", None), ("d-empty", []), ("d-null-elem", [None])]
+    df = spark.createDataFrame(rows, schema=DOC_SCHEMA)
+    root = str(tmp_path / "root")
+    ret = run_extraction_job(spark, df, root, run_id="one", num_buckets=8)
+    manifest = read_manifest(spark, root).collect()
+    assert sum(r["doc_count"] for r in manifest) == ret["docs"] == 3
+    assert sum(r["span_count"] for r in manifest) == ret["spans"] == 0
+    assert read_extracted(spark, root).count() == 0
 
 
 def test_assemble_roundtrip(spark, docs):
@@ -303,16 +328,20 @@ def test_manifest_counts_equal_output(spark, docs, tmp_path, nb, partitions):
 
 def test_rerun_over_committed_root_is_noop(spark, docs, tmp_path):
     """A rerun with nothing left to do commits no manifest row, returns
-    zeros (its observation is an empty histogram) and changes no output."""
+    zeros (its observation is an empty histogram), changes no output and
+    leaves no epoch directory behind."""
     root = str(tmp_path / "root")
     run_extraction_job(spark, docs, root, run_id="first", num_buckets=8)
     before = sorted(map(tuple, read_extracted(spark, root).collect()))
     n_rows = read_manifest(spark, root).count()
+    data = os.path.join(root, "data")
+    listing = sorted(os.listdir(data))
 
     again = run_extraction_job(spark, docs, root, run_id="again", num_buckets=8)
     assert (again["docs"], again["spans"], again["tables"]) == (0, 0, 0)
     assert read_manifest(spark, root).count() == n_rows
     assert sorted(map(tuple, read_extracted(spark, root).collect())) == before
+    assert sorted(os.listdir(data)) == listing  # no empty epoch=again/
 
 
 def _jobs(spark, group, action) -> int:
@@ -423,3 +452,21 @@ def test_each_bucket_in_one_file_of_its_epoch(spark, docs, tmp_path):
     assert sorted(tuple(r)[:-1] for r in got) == golden
     from_crashed = [r["doc_id"] for r in got if "/epoch=crashed/" in r["file"]]
     assert from_crashed and all(in_bucket[d] < 3 for d in from_crashed)
+
+
+def test_udf_profiler_switch(spark, docs, monkeypatch, capsys):
+    """``SPARKEXTRACT_UDF_PROFILER=perf`` turns on PySpark's UDF profiler:
+    the profile of an extraction names the run loop and the HTML fast
+    path."""
+    key = "spark.sql.pyspark.udf.profiler"
+    monkeypatch.setenv("SPARKEXTRACT_UDF_PROFILER", "perf")
+    s = get_spark("sparkextract-tests", master="local[4]", shuffle_partitions=8)
+    try:
+        assert s.conf.get(key) == "perf"
+        extract_exploded(docs).count()
+        s.profile.show(type="perf")
+        out = capsys.readouterr().out
+    finally:
+        s.conf.unset(key)
+        s.profile.clear()
+    assert "_extract_runs" in out and "_fast_feed" in out
