@@ -110,10 +110,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )
-    # SPARKEXTRACT_UDF_PROFILER=perf (or memory) profiles the Python UDFs
-    # on the executors; spark.profile.show() prints what the jobs recorded
-    if profiler := os.environ.get("SPARKEXTRACT_UDF_PROFILER"):
-        builder = builder.config("spark.sql.pyspark.udf.profiler", profiler)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, str(v))

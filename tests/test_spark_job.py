@@ -453,20 +453,3 @@ def test_each_bucket_in_one_file_of_its_epoch(spark, docs, tmp_path):
     from_crashed = [r["doc_id"] for r in got if "/epoch=crashed/" in r["file"]]
     assert from_crashed and all(in_bucket[d] < 3 for d in from_crashed)
 
-
-def test_udf_profiler_switch(spark, docs, monkeypatch, capsys):
-    """``SPARKEXTRACT_UDF_PROFILER=perf`` turns on PySpark's UDF profiler:
-    the profile of an extraction names the run loop and the HTML fast
-    path."""
-    key = "spark.sql.pyspark.udf.profiler"
-    monkeypatch.setenv("SPARKEXTRACT_UDF_PROFILER", "perf")
-    s = get_spark("sparkextract-tests", master="local[4]", shuffle_partitions=8)
-    try:
-        assert s.conf.get(key) == "perf"
-        extract_exploded(docs).count()
-        s.profile.show(type="perf")
-        out = capsys.readouterr().out
-    finally:
-        s.conf.unset(key)
-        s.profile.clear()
-    assert "_extract_runs" in out and "_fast_feed" in out
