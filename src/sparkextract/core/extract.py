@@ -9,9 +9,12 @@ partitioning invariance, doc runs that cross Arrow batches).
 It is split into two phases so the engine can stream a document's spans
 instead of holding the whole document (SURVEY.md §7.4.2):
 
-- phase 1 ``extract_input_span`` — context-free per input span: input span
-  -> list of intermediate items ``(kind, text, media_ref, src_offset,
-  sub_idx)``;
+- phase 1 ``extract_run`` — context-free per input span, over a run of
+  spans given column-wise: input spans -> list of intermediate items
+  ``(kind, text, media_ref, src_offset, sub_idx)``. A run's media spans
+  are decoded in one batched call (``pseudo_ocr_texts``); every other
+  span goes through its own kind's path. ``extract_input_span`` is
+  ``extract_run`` over one span;
 - phase 2 ``finalize`` — per document: table/form dedup (D6/D1), kind-rank
   ordering texts→tables→forms→images, dense 0-based ``offset`` (W1,
   /root/reference/src/rag/text_processor.py:38-87) -> ``(kind, text,
@@ -20,17 +23,21 @@ instead of holding the whole document (SURVEY.md §7.4.2):
 
 Because phase 1 never looks outside its span and phase 2 is a pure
 function of the multiset of phase-1 items, *any* order or batching of a
-document's spans yields identical output.
+document's spans, and any split of them into runs, yields identical
+output.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Mapping
+from itertools import repeat
+from typing import Iterable, Mapping, Sequence
 
 from sparkextract import config
 from sparkextract.core.boilerplate import extract_html
 from sparkextract.core.normalize import md5_hex, normalize_text
-from sparkextract.core.ocr import pseudo_ocr_text
+# pseudo_ocr_text stays a module-level name so that perfbench's per-layer
+# replay, which wraps this module's names, keeps finding it
+from sparkextract.core.ocr import pseudo_ocr_text, pseudo_ocr_texts  # noqa: F401
 from sparkextract.core.segment import chunk_text
 from sparkextract.core.tables import parse_pdf_layout, render_form, render_table
 
@@ -42,22 +49,48 @@ OutSpan = tuple[str, str | None, str | None, int]
 Span = dict
 
 
-def extract_input_span(
-    kind: str | None,
-    text: str | None,
-    media_ref: str | None,
-    src_offset: int,
+def extract_run(
+    kinds: Sequence[str | None],
+    texts: Sequence[str | None],
+    media_refs: Sequence[str | None],
+    src_offsets: Sequence[int],
 ) -> list[Item]:
-    """Phase 1: one input span -> intermediate items. Context-free."""
-    if kind == config.IN_MEDIA:
+    """Phase 1 over a run of input spans, given column-wise -> their
+    intermediate items, as a multiset (media items come last). Each span
+    stays context-free; only the media decode is batched over the run."""
+    items: list[Item] = []
+    ocr_refs: list[str | None] = []  # the run's media spans
+    ocr_offsets: list[int] = []
+    for kind, text, media_ref, src_offset in zip(kinds, texts, media_refs, src_offsets):
+        if kind == config.IN_MEDIA:
+            ocr_refs.append(media_ref)
+            ocr_offsets.append(src_offset)
+        else:
+            items += _extract_content_span(kind, text, src_offset)
+    if ocr_refs:
         # media decode: media_ref preserved verbatim (FIXTURES.md F2;
         # reference src/image_extractor.py:56-70) and deterministic
         # pseudo-OCR text — derived from the payload hash, routed through
         # the P7 clean chain — rides in `text`, so image_ocr spans enter
         # the ordered sequence with content like the reference's OCR
         # chunks (src/image_extractor.py:337-549, text_processor.py:38-87)
-        return [(config.KIND_IMAGE, pseudo_ocr_text(media_ref), media_ref, src_offset, 0)]
+        ocr = pseudo_ocr_texts([md5_hex(ref or "") for ref in ocr_refs])
+        items += zip(repeat(config.KIND_IMAGE), ocr, ocr_refs, ocr_offsets, repeat(0))
+    return items
 
+
+def extract_input_span(
+    kind: str | None,
+    text: str | None,
+    media_ref: str | None,
+    src_offset: int,
+) -> list[Item]:
+    """Phase 1 over one input span: ``extract_run`` of a one-span run."""
+    return extract_run((kind,), (text,), (media_ref,), (src_offset,))
+
+
+def _extract_content_span(kind: str | None, text: str | None, src_offset: int) -> list[Item]:
+    """Phase 1 of one non-media input span."""
     norm = normalize_text(text)
     if not norm:
         return []
@@ -160,17 +193,12 @@ def extract_document(spans: Iterable[Mapping] | None) -> list[Span]:
             s.get("media_ref") or "",
         ),
     )
-    items: list[Item] = []
-    for s in ordered_in:
-        off = s.get("offset")
-        items.extend(
-            extract_input_span(
-                s.get("kind"),
-                s.get("text"),
-                s.get("media_ref"),
-                int(off) if off is not None else 0,
-            )
-        )
+    items = extract_run(
+        [s.get("kind") for s in ordered_in],
+        [s.get("text") for s in ordered_in],
+        [s.get("media_ref") for s in ordered_in],
+        [int(s["offset"]) if s.get("offset") is not None else 0 for s in ordered_in],
+    )
     return [
         {"kind": kind, "text": text, "media_ref": media_ref, "offset": offset}
         for kind, text, media_ref, offset in finalize(items)

@@ -2,7 +2,7 @@
 
 Pipeline (north_rule):
     read documents → bucket filter on the checkpoint manifest (J2 resume)
-    → explode_outer(spans) → one ``mapInPandas`` (phase 1 per span,
+    → explode_outer(spans) → one ``mapInPandas`` (phase 1 per doc run,
     ``finalize`` per doc) → write bucketed output + manifest.
 
 One path for every document size (SURVEY.md §7.4.2). Offsets are
@@ -12,11 +12,13 @@ row lives in one scan split, so the row's exploded spans arrive as one
 contiguous run inside that scan task. A doc whose span array is NULL,
 empty or holds only NULL elements arrives as all-NULL rows, which phase 1
 maps to no items, just as the oracle skips NULL elements.
-``_extract_runs`` runs phase 1 (``extract_input_span``) per span and,
-when ``doc_id`` changes, phase 2 (``finalize``) over the closed doc's
-items. Phase 2 is a pure function of the multiset of phase-1 items, so
-the output equals ``extract_document`` by construction (tested in
-test_spark_job.py).
+``_extract_runs`` finds where ``doc_id`` changes in each Arrow batch,
+runs phase 1 (``extract_run``) once per run of one doc's spans in the
+batch, and, when ``doc_id`` changes, phase 2 (``finalize``) over the
+closed doc's items. Phase 1 is context-free per span and phase 2 a pure
+function of the multiset of phase-1 items, so the output equals
+``extract_document`` by construction, wherever the batches cut a run
+(tested in test_spark_job.py).
 
 Every closed doc also yields one marker row ``(doc_id, NULL, NULL, NULL,
 NULL)``, so that ``extract_marked`` carries each input doc, spans or
@@ -54,13 +56,14 @@ def _extract_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Exploded input spans, one contiguous run per doc -> each doc's
     output spans, then its marker row.
 
-    A doc's run may cross batches; its items carry over and the last doc
-    is finalized after the final batch. A ``doc_id`` that reappears after
+    Phase 1 runs once over each batch's slice of a run. A doc's run may
+    cross batches; its items carry over and the last doc is finalized
+    after the final batch. A ``doc_id`` that reappears after
     its run closed raises: the plan broke contiguity, and finalizing the
     doc twice would emit it twice with clashing offsets."""
     # imported inside the UDF so the zip shipped via addPyFile resolves on
     # executors even when the driver venv differs (cluster path)
-    from sparkextract.core.extract import extract_input_span, finalize
+    from sparkextract.core.extract import extract_run, finalize
 
     closed: set = set()
     doc_id, items = None, None  # the open run
@@ -78,23 +81,26 @@ def _extract_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
     for pdf in batches:
         cols: tuple[list, ...] = ([], [], [], [], [])
+        ids = pdf["doc_id"].tolist()
+        kinds = pdf["kind"].tolist()
+        texts = pdf["text"].tolist()
+        refs = pdf["media_ref"].tolist()
         # Arrow hands NULL strings as None and an int column with NULLs
         # as float NaN
         offsets = pdf["offset"].fillna(0).astype("int64").tolist()
-        for d, kind, text, media_ref, off in zip(
-            pdf["doc_id"].tolist(),
-            pdf["kind"].tolist(),
-            pdf["text"].tolist(),
-            pdf["media_ref"].tolist(),
-            offsets,
-        ):
+        # the batch's doc runs: [starts[k], starts[k + 1]); none in a 0-row batch
+        starts = [i for i in range(len(ids)) if i == 0 or ids[i] != ids[i - 1]]
+        for start, end in zip(starts, [*starts[1:], len(ids)]):
+            d = ids[start]
             if items is None or d != doc_id:
                 if items is not None:
                     close(cols)
                 if d in closed:
                     raise ValueError(f"doc_id {d!r} reappears after its run closed")
                 doc_id, items = d, []
-            items.extend(extract_input_span(kind, text, media_ref, off))
+            items += extract_run(
+                kinds[start:end], texts[start:end], refs[start:end], offsets[start:end]
+            )
         if cols[0]:
             yield frame(cols)
     if items is not None:

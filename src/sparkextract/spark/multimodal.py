@@ -109,21 +109,26 @@ OCR_DDL = (
 
 def _ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     # deterministic pseudo-OCR from the payload hash, routed through the
-    # same P7 clean chain the extraction core uses (core/ocr.py; swap the
-    # raw synthesis for tesseract on a real cluster) — zipimport-safe
-    from sparkextract.core.normalize import collapse_ws
-    from sparkextract.core.ocr import pseudo_ocr_raw
+    # same P7 clean chain the extraction core uses, once per batch
+    # (core/ocr.py; swap the raw synthesis for tesseract on a real
+    # cluster) — zipimport-safe
+    from sparkextract.core.ocr import pseudo_ocr_texts
 
     for pdf in batches:
-        rows = []
-        for mid, did, mtype, payload in zip(
-            pdf["media_id"], pdf["doc_id"], pdf["media_type"], pdf["payload"]
-        ):
-            raw = bytes(payload) if payload is not None else b""
-            text = collapse_ws(pseudo_ocr_raw(hashlib.md5(raw).hexdigest()))
-            rows.append((mid, did, mtype, text, len(text)))
+        texts = pseudo_ocr_texts(
+            [
+                hashlib.md5(bytes(payload) if payload is not None else b"").hexdigest()
+                for payload in pdf["payload"]
+            ]
+        )
         yield pd.DataFrame(
-            rows, columns=["media_id", "doc_id", "media_type", "ocr_text", "n_ocr_chars"]
+            {
+                "media_id": pdf["media_id"],
+                "doc_id": pdf["doc_id"],
+                "media_type": pdf["media_type"],
+                "ocr_text": texts,
+                "n_ocr_chars": [len(t) for t in texts],
+            }
         )
 
 

@@ -7,6 +7,15 @@ a zip via ``addPyFile`` — the same mechanism ``spark-submit --py-files``
 uses on a real cluster, so local tests exercise the cluster packaging
 path.
 
+Batch geometry. The extraction UDF reads exploded spans, one row per
+span, so ``spark.sql.execution.arrow.maxRecordsPerBatch`` counts spans.
+Sessions keep Spark's default of 10,000 per batch, as plain sessions
+built without ``get_spark`` and spark-submit sessions do: about 9 MB of
+string payload on the mixed corpus (~0.9 KB a span), and a doc's run
+that crosses a batch carries its items over (``spark/job.py``). A cap of 2,048 dated from one
+row per document; over spans it cut an operation into many small
+batches, each paying a fixed cost on both sides of the Arrow boundary.
+
 Worker import path. PySpark starts its Python workers with
 ``$SPARK_HOME/python/lib/pyspark.zip`` and the spark-core jar on
 ``sys.path`` and calls ``importlib.invalidate_caches()`` at the start of
@@ -137,9 +146,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # one Arrow batch ~ a few thousand docs of span payload; bounded so
-        # a batch of mega-doc spans stays ~10-50 MB (SURVEY.md §4.2)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("SPARKEXTRACT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")

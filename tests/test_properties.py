@@ -12,20 +12,25 @@ over arbitrary inputs rather than fixed fixtures:
 - normalization is idempotent (so re-normalizing already-clean data —
   e.g. on a resume path — can never change bytes);
 - the HTML / pdf-layout parsers never raise on arbitrary junk (a single
-  malformed document must not kill a 10^12-doc job).
+  malformed document must not kill a 10^12-doc job);
+- phase 1 over a run of spans (media decoded in one batch) gives the
+  multiset of items phase 1 gives span by span.
 """
 
 from __future__ import annotations
 
 import random
+from collections import Counter
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from sparkextract import config
 from sparkextract.core.boilerplate import extract_html
-from sparkextract.core.extract import extract_document
-from sparkextract.core.normalize import collapse_ws, normalize_cell, normalize_text
+from sparkextract.core.extract import extract_document, extract_input_span, extract_run
+from sparkextract.core.normalize import collapse_ws, md5_hex, normalize_cell, normalize_text
+from sparkextract.core.ocr import pseudo_ocr_raw, pseudo_ocr_texts
 from sparkextract.core.segment import chunk_text
 from sparkextract.core.tables import parse_pdf_layout
 
@@ -116,6 +121,62 @@ def test_duplicate_tables_deduped_first_wins():
     out = extract_document(doc)
     tables = [s for s in out if s["kind"] == config.KIND_TABLE]
     assert len(tables) == 1  # D6: exact near-dup suppressed, first wins
+
+
+# ------------------------------------------------ batched phase 1 / OCR
+_digest_st = st.text(alphabet="0123456789abcdef", min_size=32, max_size=32)
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(_digest_st, max_size=40))
+def test_pseudo_ocr_texts_equals_per_digest_clean_chain(digests):
+    assert pseudo_ocr_texts(digests) == [collapse_ws(pseudo_ocr_raw(d)) for d in digests]
+
+
+def test_pseudo_ocr_texts_empty():
+    assert pseudo_ocr_texts([]) == []
+
+
+@settings(max_examples=150, deadline=None)
+@given(_digest_st)
+def test_pseudo_ocr_raw_holds_no_newline(digest):
+    # what lets pseudo_ocr_texts join a batch's raw outputs on "\n"
+    assert "\n" not in pseudo_ocr_raw(digest)
+
+
+_run_ref_st = st.one_of(
+    st.none(),
+    st.sampled_from(["", "img://a\nb", "img://\t\t/x", "bild://é/漢字", " \n "]),
+    st.text(max_size=20),
+)
+_run_text_st = st.one_of(st.none(), st.text(max_size=200))
+_run_span_st = {
+    mix: st.tuples(kind_st, _run_text_st, _run_ref_st, st.integers(0, 5))
+    for mix, kind_st in {
+        "all_media": st.just("media"),
+        "no_media": st.sampled_from([None, "text", "html", "pdf_layout", "other"]),
+        "mixed": st.sampled_from([None, "text", "html", "pdf_layout", "media", "media"]),
+    }.items()
+}
+
+
+@pytest.mark.parametrize("mix", sorted(_run_span_st))
+def test_extract_run_equals_per_span_phase1(mix):
+    """Phase 1 over a run, with its media spans decoded in one batch, gives
+    the multiset of items phase 1 gives span by span."""
+
+    @settings(max_examples=60, deadline=None)
+    @given(st.lists(_run_span_st[mix], max_size=12))
+    def check(run):
+        kinds, texts, refs, offsets = ([s[i] for s in run] for i in range(4))
+        per_span = [item for s in run for item in extract_input_span(*s)]
+        got = extract_run(kinds, texts, refs, offsets)
+        assert Counter(got) == Counter(per_span)
+        for kind, text, ref, _off, _sub in got:
+            if kind == config.KIND_IMAGE:
+                assert text == collapse_ws(pseudo_ocr_raw(md5_hex(ref or "")))
+
+    check()
 
 
 # ------------------------------------------------------- fast HTML tokenizer

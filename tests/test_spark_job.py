@@ -154,6 +154,49 @@ def test_extract_runs_rejects_a_reopened_doc():
         list(_extract_runs(iter(_batches([a, b, a], []))))
 
 
+def _dup_pair():
+    """Two corpus docs that share one ``doc_id``, and the output their
+    merged span arrays give."""
+    a, b = generate_corpus(2)
+    b = {**b, "doc_id": a["doc_id"]}
+    return a, b, extract_document(a["spans"] + b["spans"])
+
+
+def _doc_spans(out):
+    """(spans of each doc, marker count of each doc) from UDF output frames."""
+    spans, markers = {}, {}
+    for r in pd.concat(out, ignore_index=True).itertuples(index=False):
+        if r.kind is None:
+            markers[r.doc_id] = markers.get(r.doc_id, 0) + 1
+        else:
+            spans.setdefault(r.doc_id, []).append(
+                {"kind": r.kind, "text": r.text, "media_ref": r.media_ref, "offset": r.offset}
+            )
+    return spans, markers
+
+
+@pytest.mark.parametrize("split", [False, True], ids=["one_batch", "across_batches"])
+def test_extract_runs_merges_adjacent_duplicate_doc_ids(split):
+    """Adjacent rows with the same ``doc_id`` form one run, in one batch
+    or across a batch boundary: one doc with dense offsets over the union
+    of their spans, and one marker row."""
+    a, b, want = _dup_pair()
+    sizes = [len(a["spans"])] if split else []
+    spans, markers = _doc_spans(list(_extract_runs(iter(_batches([a, b], sizes)))))
+    assert spans == {a["doc_id"]: want}
+    assert [s["offset"] for s in want] == list(range(len(want)))
+    assert markers == {a["doc_id"]: 1}
+
+
+@pytest.mark.parametrize("split", [False, True], ids=["one_batch", "across_batches"])
+def test_extract_runs_rejects_a_duplicate_doc_id_after_another_doc(split):
+    a, b, _ = _dup_pair()
+    (c,) = generate_corpus(1, start=2)
+    sizes = [len(a["spans"]) + len(c["spans"])] if split else []
+    with pytest.raises(ValueError, match="reappears"):
+        list(_extract_runs(iter(_batches([a, c, b], sizes))))
+
+
 def test_extract_runs_empty_batch_yields_nothing():
     empty = pd.DataFrame(columns=_EXPLODED_COLS)
     assert list(_extract_runs(iter([empty]))) == []
