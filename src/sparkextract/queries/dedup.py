@@ -138,7 +138,7 @@ Reference intent: the SHA-256 document dedup key of
 reference src/rag/rag_pipeline.py:94-105, applied at the URL grain a
 crawler needs.
 
-q162 — QUALITY-AWARE SURVIVOR SELECTION. q72 keeps the MIN-id doc per
+q162 — QUALITY-AWARE SURVIVOR SELECTION. q38 keeps the MIN-id doc per
 dup cluster; production dedup keeps the HIGHEST-QUALITY copy (the
 mirror may be truncated, the original canonical). Over q38's minhash
 clusters (injected-clone corpus), each member is scored with the q135

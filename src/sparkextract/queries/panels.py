@@ -84,22 +84,18 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
               "c_right": "c_right", "relation": "relation"}),
         ],
     ),
-    # D4/D6 clusters: pair output -> connected components (label
-    # propagation) -> survivors (min-id and quality-aware),
-    # the keyed cluster variants (exact content-hash, minhash band,
-    # canonical URL), soft-dedup weights, neighbour quality and the dedup
-    # ROI curve.
+    # D4/D6 clusters: quality-aware survivors, the keyed cluster variants
+    # (exact content-hash, minhash band, canonical URL), soft-dedup
+    # weights and the dedup ROI curve.
     "panel_dup_clusters": (
-        [("vec_id", "long"), ("component", "long"), ("cluster_size", "long"),
-         ("survivor_id", "long"), ("is_survivor", "boolean"),
-         ("group_key", "string"), ("n_raw_forms", "long"), ("n_in", "long"),
-         ("sum_src_logit_u", "long"), ("mean_src_logit_u", "long"),
-         ("low_quality_neighborhood", "boolean"), ("source", "string"),
-         ("n_docs", "long"), ("n_dup_docs", "long"), ("raw_tokens", "long"),
-         ("eff_tokens_u", "long"), ("keeper_quality", "long"),
-         ("best_logit_u", "long"), ("differs", "boolean"), ("rank", "long"),
-         ("removable_chars", "long"), ("cum_removable", "long"),
-         ("total_chars", "long"), ("cum_saved_frac_u", "long")],
+        [("cluster_size", "long"), ("survivor_id", "long"),
+         ("group_key", "string"), ("n_raw_forms", "long"),
+         ("source", "string"), ("n_docs", "long"), ("n_dup_docs", "long"),
+         ("raw_tokens", "long"), ("eff_tokens_u", "long"),
+         ("keeper_quality", "long"), ("best_logit_u", "long"),
+         ("differs", "boolean"), ("rank", "long"), ("removable_chars", "long"),
+         ("cum_removable", "long"), ("total_chars", "long"),
+         ("cum_saved_frac_u", "long")],
         [
             ("quality_survivor", "q162_quality_survivor",
              {"group_key": "sig0", "cluster_size": "cluster_size",
@@ -110,17 +106,9 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
              {"source": "source", "n_docs": "n_docs",
               "n_dup_docs": "n_dup_docs", "raw_tokens": "raw_tokens",
               "eff_tokens_u": "eff_tokens_u"}),
-            ("neighbor_quality", "q152_neighbor_quality",
-             {"vec_id": "node", "n_in": "n_in",
-              "sum_src_logit_u": "sum_src_logit_u",
-              "mean_src_logit_u": "mean_src_logit_u",
-              "low_quality_neighborhood": "low_quality_neighborhood"}),
             ("url_canonical", "q149_url_canonicalize",
              {"group_key": "canonical_url", "cluster_size": "n_docs",
               "survivor_id": "first_doc", "n_raw_forms": "n_raw_forms"}),
-            ("components", "q71_dup_components",
-             {"vec_id": "vec_id", "component": "component",
-              "cluster_size": "cluster_size"}),
             ("dedup_roi", "q211_dedup_roi_curve",
              {"rank": "rank", "group_key": "ckey",
               "cluster_size": "cluster_size",
@@ -128,9 +116,6 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
               "cum_removable": "cum_removable",
               "total_chars": "total_chars",
               "cum_saved_frac_u": "cum_saved_frac_u"}),
-            ("survivors", "q72_dup_survivors",
-             {"vec_id": "vec_id", "survivor_id": "survivor_id",
-              "is_survivor": "is_survivor"}),
             ("exact_hash_clusters", "q11_dedup_exact",
              {"group_key": "content_hash", "cluster_size": "cluster_size",
               "survivor_id": "keeper_doc_id"}),
@@ -141,42 +126,21 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
     ),
     # quality family: weighted score (source-grain), per-doc rule and LM
     # gates, token entropy, the linear quality classifier, the Kneser-Ney
-    # bigram cross-entropy, and the classifier's evaluation (ROC-AUC, PR
-    # sweep, calibration, kappa, filter disparity, Pareto frontier).
+    # bigram cross-entropy and the filter-disparity audit.
     "panel_quality": (
         [("source", "string"), ("avg_quality", "double"), ("n_good", "long"),
          ("doc_id", "long"), ("n_words", "long"), ("n_distinct", "long"),
          ("diversity", "double"), ("mean_word_len", "double"),
-         ("reject_reason", "string"), ("keep", "boolean"), ("lang", "string"),
-         ("n_docs", "long"), ("n_bigrams", "long"),
-         ("n_distinct_bigrams", "long"), ("dup_frac", "double"),
-         ("top_word_frac", "double"), ("avg_logp", "double"),
-         ("entropy", "double"), ("n_stop", "long"), ("logit_u", "long"),
-         ("n_pos", "long"), ("n_neg", "long"), ("n_bins", "long"),
-         ("auc_u", "long"), ("threshold_u", "long"), ("tp", "long"),
-         ("fp", "long"), ("fn", "long"), ("precision_u", "long"),
-         ("recall_u", "long"), ("f1_u", "long"), ("keep_rate_u", "long"),
-         ("gini_u", "long"), ("range_u", "long"), ("n00", "long"),
-         ("n01", "long"), ("n10", "long"), ("n11", "long"), ("po_u", "long"),
-         ("pe_u", "long"), ("kappa_u", "long"), ("y_max", "long"),
-         ("frontier", "boolean"), ("bin_b", "int"), ("conf_u", "long"),
-         ("acc_u", "long"), ("gap_u", "long"), ("ece_u", "long"),
-         ("xent", "double")],
+         ("reject_reason", "string"), ("keep", "boolean"), ("n_docs", "long"),
+         ("n_bigrams", "long"), ("n_distinct_bigrams", "long"),
+         ("dup_frac", "double"), ("top_word_frac", "double"),
+         ("avg_logp", "double"), ("entropy", "double"), ("n_stop", "long"),
+         ("logit_u", "long"), ("keep_rate_u", "long"), ("gini_u", "long"),
+         ("range_u", "long"), ("xent", "double")],
         [
             ("kneser_ney", "q189_kneser_ney_lm",
              {"doc_id": "doc_id", "n_bigrams": "n_bigrams",
               "xent": "xent"}),
-            ("pareto_frontier", "q155_pareto_frontier",
-             {"lang": "lang", "n_distinct": "x", "y_max": "y_max",
-              "n_docs": "n_docs", "frontier": "frontier"}),
-            ("calibration_ece", "q157_calibration_ece",
-             {"bin_b": "b", "n_docs": "n_b", "n_pos": "pos_b",
-              "conf_u": "conf_u", "acc_u": "acc_u", "gap_u": "gap_u",
-              "ece_u": "ece_u"}),
-            ("detector_kappa", "q151_detector_kappa",
-             {"n_docs": "n", "n00": "n00", "n01": "n01", "n10": "n10",
-              "n11": "n11", "po_u": "po_u", "pe_u": "pe_u",
-              "kappa_u": "kappa_u"}),
             ("filter_disparity", "q148_filter_disparity",
              {"source": "source", "n_docs": "n_docs", "n_good": "n_keep",
               "keep_rate_u": "keep_rate_u", "gini_u": "gini_u",
@@ -204,13 +168,6 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
             ("classifier", "q135_quality_classifier",
              {"doc_id": "doc_id", "n_words": "n_tokens",
               "n_stop": "n_stop", "logit_u": "logit_u", "keep": "keep"}),
-            ("roc_auc", "q137_roc_auc",
-             {"n_pos": "n_pos", "n_neg": "n_neg", "n_bins": "n_bins",
-              "auc_u": "auc_u"}),
-            ("pr_thresholds", "q138_pr_thresholds",
-             {"threshold_u": "threshold_u", "tp": "tp", "fp": "fp",
-              "fn": "fn", "precision_u": "precision_u",
-              "recall_u": "recall_u", "f1_u": "f1_u"}),
         ],
     ),
     # D4/F13 signature tables (64-bit simhash; 4-band minhash) and the
@@ -275,43 +232,20 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
               "pairs_b": "pairs_b", "rand_index": "rand_index"}),
         ],
     ),
-    # token and vocabulary statistics: fingerprint uniqueness per
-    # language, Misra-Gries heavy hitters, KMV distinct counts, vocabulary
-    # richness and growth, template profiles, the min-df pruning sweep,
-    # top-k vocabulary coverage and the Zipf slope.
+    # token statistics: fingerprint uniqueness per language, Misra-Gries
+    # heavy hitters, KMV distinct counts and template profiles.
     "panel_token_lang_stats": (
         [("lang", "string"), ("n_docs", "long"), ("n_unique", "long"),
-         ("total_tokens", "long"), ("token", "string"), ("source", "string"),
-         ("n_prefixes", "long"), ("max_prefix_docs", "long"),
-         ("template_share_u", "long"), ("est", "long"), ("exact", "long"),
-         ("err", "long"), ("bound", "long"), ("within_bound", "boolean"),
-         ("v_obs", "long"), ("f1", "long"), ("f2", "long"), ("chao1_u", "long"),
-         ("p0_u", "long"), ("coverage_u", "long"), ("bucket", "long"),
-         ("n_cum", "long"), ("v_cum", "long"), ("beta", "double"),
-         ("part", "string"), ("n_exact", "long"), ("k_eff", "long"),
-         ("kth_min", "long"), ("est_kmv", "double"), ("min_df", "long"),
-         ("v_kept", "long"), ("v_total", "long"), ("mass_kept", "long"),
-         ("m_total", "long"), ("v_kept_frac_u", "long"),
-         ("mass_kept_frac_u", "long"), ("vocab_size", "long"),
-         ("covered_tokens", "long"), ("coverage", "double"),
-         ("n_points", "long"), ("zipf_slope", "double"),
-         ("intercept", "double")],
+         ("token", "string"), ("source", "string"), ("n_prefixes", "long"),
+         ("max_prefix_docs", "long"), ("template_share_u", "long"),
+         ("est", "long"), ("exact", "long"), ("err", "long"),
+         ("bound", "long"), ("within_bound", "boolean"), ("part", "string"),
+         ("n_exact", "long"), ("k_eff", "long"), ("kth_min", "long"),
+         ("est_kmv", "double")],
         [
-            ("df_pruning", "q209_df_pruning_advisor",
-             {"min_df": "min_df", "v_kept": "v_kept",
-              "v_total": "v_total", "mass_kept": "mass_kept",
-              "m_total": "m_total", "v_kept_frac_u": "v_kept_frac_u",
-              "mass_kept_frac_u": "mass_kept_frac_u"}),
             ("kmv_theta", "q196_kmv_theta_sketch",
              {"part": "part", "n_exact": "n_exact", "k_eff": "k_eff",
               "kth_min": "kth_min", "est_kmv": "est"}),
-            ("heaps_law", "q188_heaps_law",
-             {"bucket": "bucket", "n_cum": "n_cum", "v_cum": "v_cum",
-              "beta": "beta"}),
-            ("vocab_richness", "q186_vocab_richness",
-             {"lang": "lang", "v_obs": "v_obs", "total_tokens": "n_tokens",
-              "f1": "f1", "f2": "f2", "chao1_u": "chao1_u",
-              "p0_u": "p0_u", "coverage_u": "coverage_u"}),
             ("mg_heavy_hitters", "q179_misra_gries_heavy_hitters",
              {"token": "token", "est": "est", "exact": "exact",
               "err": "err", "bound": "bound",
@@ -323,57 +257,26 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
               "template_share_u": "template_share_u"}),
             ("fingerprint", "q21_fingerprint",
              {"lang": "lang", "n_docs": "n_docs", "n_unique": "n_unique"}),
-            ("vocab_coverage", "q113_vocab_coverage",
-             {"vocab_size": "vocab_size", "covered_tokens": "covered_tokens",
-              "coverage": "coverage"}),
-            ("zipf_slope", "q115_zipf_slope",
-             {"n_points": "n_points", "zipf_slope": "zipf_slope",
-              "intercept": "intercept"}),
         ],
     ),
-    # document-profile statistics: confidence rollup, bootstrap interval,
-    # KS and CUSUM drift tests.
+    # document-profile statistics: the per-language confidence rollup.
     "panel_doc_profile": (
         [("lang", "string"), ("n_docs", "long"), ("avg_conf", "double"),
-         ("min_conf", "double"), ("r", "long"), ("n_eff", "long"),
-         ("boot_mean", "double"), ("ci_lo", "double"), ("ci_hi", "double"),
-         ("v", "long"), ("cum_a", "long"), ("cum_b", "long"), ("gap_u", "long"),
-         ("n_a", "long"), ("n_b", "long"), ("ks_u", "long"),
-         ("ks_scaled", "double"), ("bucket", "long"), ("cusum_n", "long"),
-         ("mean_u", "long"), ("mu0_u", "long"), ("s_up", "long"),
-         ("s_dn", "long"), ("h_u", "long"), ("alarm", "boolean")],
+         ("min_conf", "double")],
         [
-            ("cusum_drift", "q206_cusum_drift",
-             {"bucket": "bucket", "cusum_n": "n", "mean_u": "mean_u",
-              "mu0_u": "mu0_u", "s_up": "s_up", "s_dn": "s_dn",
-              "h_u": "h_u", "alarm": "alarm"}),
-            ("ks_two_sample", "q197_ks_two_sample",
-             {"v": "v", "cum_a": "cum_a", "cum_b": "cum_b",
-              "gap_u": "gap_u", "n_a": "n_a", "n_b": "n_b",
-              "ks_u": "ks_u", "ks_scaled": "ks_scaled"}),
-            ("poisson_bootstrap", "q191_poisson_bootstrap",
-             {"r": "r", "n_eff": "n_eff", "boot_mean": "boot_mean",
-              "ci_lo": "ci_lo", "ci_hi": "ci_hi"}),
             ("confidence", "q51_confidence_rollup",
              {"lang": "lang", "n_docs": "n_docs",
               "avg_conf": "avg_conf", "min_conf": "min_conf"}),
         ],
     ),
-    # event aggregates: event_type stats, JSON-props extraction,
-    # gap-based sessionization, time-decayed popularity.
+    # event aggregates: event_type stats, JSON-props extraction and
+    # gap-based sessionization.
     "panel_event_stats": (
         [("event_type", "string"), ("n_events", "long"),
          ("sum_value", "double"), ("first_us", "long"), ("last_us", "long"),
          ("sum_k", "long"), ("n_high", "long"), ("user_id", "long"),
-         ("session_seq", "long"), ("duration_us", "long"),
-         ("decayed_mass", "double"), ("rank_raw", "long"),
-         ("rank_decayed", "long"), ("rank_changed", "boolean")],
+         ("session_seq", "long"), ("duration_us", "long")],
         [
-            ("decayed_popularity", "q180_decayed_popularity",
-             {"event_type": "event_type", "n_events": "n_events",
-              "decayed_mass": "decayed_mass", "rank_raw": "rank_raw",
-              "rank_decayed": "rank_decayed",
-              "rank_changed": "rank_changed"}),
             ("type_stats", "q05_event_type_stats",
              {"event_type": "event_type", "n_events": "n_events",
               "sum_value": "sum_value", "first_us": "first_us", "last_us": "last_us"}),
@@ -411,25 +314,19 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
         ],
     ),
     # retrieval compositions: rerank top-k; full kNN->dedup->rerank->budget;
-    # fusion, MMR, nDCG, rank agreement and mined hard negatives.
+    # fusion, MMR, nDCG and mined hard negatives.
     "panel_retrieval": (
         [("vec_id", "long"), ("cosine", "double"), ("overlap", "int"),
          ("rerank_score", "double"), ("cum_chars", "long"),
          ("query_id", "long"), ("rnk", "long"), ("doc_id", "long"),
          ("r_bm25", "long"), ("r_tfidf", "long"), ("fused_units", "long"),
          ("step", "long"), ("rel_u", "long"), ("score_u", "long"),
-         ("n_sample", "long"), ("n_pairs", "long"), ("concordant", "long"),
-         ("discordant", "long"), ("ties", "long"), ("tau_u", "long"),
          ("dcg", "double"), ("idcg", "double"), ("ndcg_u", "long"),
          ("n_rel", "long"), ("neg_id", "long"), ("neg_label", "int")],
         [
             ("ndcg_eval", "q156_ndcg_eval",
              {"query_id": "query_id", "dcg": "dcg", "idcg": "idcg",
               "ndcg_u": "ndcg_u", "n_rel": "n_rel"}),
-            ("rank_agreement", "q153_rank_agreement",
-             {"n_sample": "n_sample", "n_pairs": "n_pairs",
-              "concordant": "concordant", "discordant": "discordant",
-              "ties": "ties", "tau_u": "tau_u"}),
             ("rerank_topk", "q55_rerank_topk",
              {"vec_id": "vec_id", "cosine": "cosine",
               "overlap": "overlap", "rerank_score": "rerank_score"}),
@@ -682,8 +579,8 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
     ),
     # corpus-clean family: the end-to-end extract->quality->dedup
     # composition plus the block / exact-substring / CDC-chunk dedup, PII,
-    # k-anonymity, span-merge, suffix-blocklist, watermark,
-    # encoding-repair and secret-scan passes.
+    # k-anonymity, span-merge, watermark, encoding-repair and secret-scan
+    # passes.
     "panel_corpus_clean": (
         [("doc_id", "long"), ("n_tokens", "long"), ("stage", "string"),
          ("survivor_id", "long"), ("n_blocks", "long"), ("n_kept", "long"),
@@ -699,13 +596,9 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
          ("tp", "long"), ("fp", "long"), ("fn", "long"),
          ("precision_u", "long"), ("recall_u", "long"), ("n_spans", "long"),
          ("n_islands", "long"), ("covered_tokens", "long"),
-         ("max_island_len", "long"), ("n_cdc", "long"),
-         ("shared_cdc", "long"), ("n_fix", "long"), ("shared_fix", "long"),
-         ("bl_entry", "string"), ("n_blocked", "long"), ("min_doc", "long")],
+         ("max_island_len", "long"), ("n_cdc", "long"), ("shared_cdc", "long"),
+         ("n_fix", "long"), ("shared_fix", "long")],
         [
-            ("suffix_blocklist", "q158_suffix_blocklist",
-             {"bl_entry": "entry", "n_blocked": "n_blocked",
-              "min_doc": "min_doc"}),
             ("cdc_chunking", "q154_cdc_chunking",
              {"doc_id": "doc_id", "n_cdc": "n_cdc",
               "shared_cdc": "shared_cdc", "n_fix": "n_fix",
@@ -743,21 +636,12 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
               "precision_u": "precision_u", "recall_u": "recall_u"}),
         ],
     ),
-    # corpus-layout family: sequence packing, deterministic global
-    # shuffle, domain rollup, padding waste, the differential-privacy
-    # release, leave-one-source-out influence and the compression proxy.
+    # corpus-layout family: deterministic global shuffle, domain rollup
+    # and the compression proxy.
     "panel_corpus_layout": (
-        [("doc_id", "long"), ("shard", "int"), ("n_tokens", "long"),
-         ("start_pos", "long"), ("first_window", "int"), ("last_window", "int"),
-         ("n_windows", "int"), ("global_pos", "long"), ("domain", "string"),
-         ("n_docs", "long"), ("total_chars", "long"), ("mean_chars", "double"),
-         ("source", "string"), ("policy", "string"), ("n_batches", "long"),
-         ("total_tokens", "long"), ("padded_tokens", "long"),
-         ("waste_u", "long"), ("true_n", "long"), ("noise", "double"),
-         ("noisy", "double"), ("rank_true", "long"), ("rank_noisy", "long"),
-         ("rank_shift", "long"), ("l1_err", "double"), ("sum_chars", "long"),
-         ("full_mean", "double"), ("loo_mean", "double"),
-         ("influence", "double"), ("influence_rank", "long"),
+        [("doc_id", "long"), ("shard", "int"), ("global_pos", "long"),
+         ("domain", "string"), ("n_docs", "long"), ("total_chars", "long"),
+         ("mean_chars", "double"), ("source", "string"),
          ("n_instances", "long"), ("n_distinct_grams", "long"),
          ("n_repeated", "long"), ("repeat_frac_u", "long"),
          ("dict_worthy", "boolean")],
@@ -767,24 +651,6 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
               "n_distinct_grams": "n_distinct", "n_repeated": "n_repeated",
               "repeat_frac_u": "repeat_frac_u",
               "dict_worthy": "dict_worthy"}),
-            ("loo_influence", "q192_loo_influence",
-             {"source": "source", "n_docs": "n_docs",
-              "sum_chars": "sum_chars", "full_mean": "full_mean",
-              "loo_mean": "loo_mean", "influence": "influence",
-              "influence_rank": "influence_rank"}),
-            ("dp_release", "q190_dp_noisy_release",
-             {"source": "source", "true_n": "true_n", "noise": "noise",
-              "noisy": "noisy", "rank_true": "rank_true",
-              "rank_noisy": "rank_noisy", "rank_shift": "rank_shift",
-              "l1_err": "l1_err"}),
-            ("padding_waste", "q178_padding_waste_audit",
-             {"policy": "policy", "n_batches": "n_batches",
-              "total_tokens": "total_tokens",
-              "padded_tokens": "padded_tokens", "waste_u": "waste_u"}),
-            ("packing", "q100_sequence_packing",
-             {"doc_id": "doc_id", "shard": "shard", "n_tokens": "n_tokens",
-              "start_pos": "start_pos", "first_window": "first_window",
-              "last_window": "last_window", "n_windows": "n_windows"}),
             ("det_shuffle", "q105_deterministic_shuffle",
              {"doc_id": "doc_id", "shard": "shard",
               "global_pos": "global_pos"}),

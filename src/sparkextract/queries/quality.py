@@ -86,7 +86,7 @@ per-group keep rates, plus the max-min range. The keep gate is the
 q135 linear classifier (same frozen weights); per-source (n, k) is ONE
 map-side-combinable groupBy; everything after — pairwise |r_i - r_j|,
 the Gini ratio — runs on the <= #sources row grain (20 at every SF;
-the documented tiny-grain exception, cf. q137's 81-bin cumulative).
+the documented tiny-grain exception).
 Numeric discipline: rates are micro-unit BIGINTs; the pairwise
 absolute-difference sum is exact integer arithmetic (bounded by
 n_src^2 * 1e6 << 2^53); Gini = sumabs / (2 * n_src * sum_rates) is ONE
@@ -801,7 +801,7 @@ def q136_watermark_detect(spark, sf_dir):
     )
 
 
-def _q138_ratio_sql(num: str, den: str) -> str:
+def _ratio_u_sql(num: str, den: str) -> str:
     return (
         f"CASE WHEN {den} = 0 THEN CAST(-1 AS BIGINT) "
         f"ELSE CAST(ROUND(CAST({num} AS DOUBLE) * 1000000.0 "
@@ -853,8 +853,8 @@ cm AS (
   FROM u GROUP BY detector
 )
 SELECT detector, tp, fp, fn,
-       {_q138_ratio_sql('tp', 'tp + fp')} AS precision_u,
-       {_q138_ratio_sql('tp', 'tp + fn')} AS recall_u
+       {_ratio_u_sql('tp', 'tp + fp')} AS precision_u,
+       {_ratio_u_sql('tp', 'tp + fn')} AS recall_u
 FROM cm
 """
 

@@ -22,7 +22,6 @@ import sparkextract.queries.quality  # noqa: F401
 import sparkextract.queries.relational  # noqa: F401
 import sparkextract.queries.retrieval  # noqa: F401
 import sparkextract.queries.sketches  # noqa: F401
-import sparkextract.queries.stats  # noqa: F401
 import sparkextract.queries.text  # noqa: F401
 from sparkextract.queries.base import ORACLE_SQL, SPARK_QUERIES
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sparkextract.schema import DOC_SCHEMA
 
@@ -34,16 +34,8 @@ def corpus_df(spark: SparkSession, n_docs: int, seed: int = 42, partitions: int 
 
     ensure_workers_can_import(spark)
     partitions = partitions or spark.sparkContext.defaultParallelism * 2
-    base = spark.range(0, n_docs, numPartitions=partitions).withColumn(
-        "seed", F_lit_seed(seed)
-    )
+    base = spark.range(0, n_docs, numPartitions=partitions).withColumn("seed", F.lit(seed))
     return base.mapInPandas(_gen_batch, schema=DOC_SCHEMA)
-
-
-def F_lit_seed(seed: int):
-    from pyspark.sql import functions as F
-
-    return F.lit(seed)
 
 
 def write_corpus(

@@ -1,4 +1,4 @@
-"""Sources/sinks (SURVEY.md §2.1 S1-S9) + filter helpers (P3/P5).
+"""Sources/sinks (SURVEY.md §2.1 S1-S9) + filter helpers (P3/P6).
 
 Primary storage is bucketed parquet with manifest-commit semantics
 (manifest.py — the Iceberg stand-in, SURVEY §7.4.3). The reference's
@@ -75,13 +75,6 @@ def filter_min_media_size(media: DataFrame, min_w: int = 50, min_h: int = 50) ->
     /root/reference/src/image_extractor.py:128-130; thresholds
     /root/reference/src/config/settings.py:62-63)."""
     return media.filter((F.col("width") >= min_w) & (F.col("height") >= min_h))
-
-
-def filter_min_confidence(spans_with_conf: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """P5: confidence-threshold filter (reference
-    /root/reference/src/rag/text_processor.py:578-581; threshold
-    /root/reference/src/config/rag_settings.py:67)."""
-    return spans_with_conf.filter(F.col("confidence") >= threshold)
 
 
 def validate_spans(exploded: DataFrame) -> DataFrame:

@@ -111,7 +111,6 @@ def _workers_import_src(master: str | None) -> bool:
 def get_spark(
     app_name: str = "sparkextract",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Session tuned for the extraction workload.
@@ -128,7 +127,6 @@ def get_spark(
         inner = master[6:-1]
         if inner != "*":
             ncores = int(inner)
-    shuffle_partitions = shuffle_partitions or max(ncores * 2, 8)
 
     # a JVM launched from here passes PYTHONPATH on to its Python workers,
     # which is how they find worker_daemon
@@ -140,7 +138,7 @@ def get_spark(
     if _workers_import_src(master):
         builder = builder.config("spark.python.daemon.module", "sparkextract.spark.worker_daemon")
     builder = (
-        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder.config("spark.sql.shuffle.partitions", str(max(ncores * 2, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

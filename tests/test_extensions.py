@@ -11,7 +11,7 @@ from sparkextract.spark.session import get_spark
 
 @pytest.fixture(scope="module")
 def spark():
-    s = get_spark("sparkextract-ext-tests", master="local[4]", shuffle_partitions=8)
+    s = get_spark("sparkextract-ext-tests", master="local[4]")
     yield s
 
 
@@ -274,7 +274,7 @@ def test_driver_view_fits_cap_and_covers_registry():
     sq, osql = driver_queries()
     assert len(sq) <= 38
     # the catalogue only shrinks: each cut stage lowers this bound
-    assert len(SPARK_QUERIES) <= 139
+    assert len(SPARK_QUERIES) <= 116
     assert set(osql) == set(sq)
     exported = set(sq)
     for name in SPARK_QUERIES:

@@ -13,7 +13,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="module")
 def spark():
-    s = get_spark("sparkextract-r5ab-tests", master="local[4]", shuffle_partitions=8)
+    s = get_spark("sparkextract-r5ab-tests", master="local[4]")
     yield s
 
 

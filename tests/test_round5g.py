@@ -1,8 +1,8 @@
-"""q154-q157 (CDC chunking, Pareto frontier, nDCG, calibration/ECE):
-pure-Python re-implementations over the raw parquet plus structural
-invariants — guarding the semantics (rolling-window boundary rule and
-shift re-synchronization, 2-D dominance, DCG rearrangement bound, ECE
-identity) next to the Spark plan and the DuckDB oracle."""
+"""q154 and q156 (CDC chunking, nDCG): pure-Python re-implementations
+over the raw parquet plus structural invariants — guarding the
+semantics (rolling-window boundary rule and shift re-synchronization,
+DCG rearrangement bound) next to the Spark plan and the DuckDB
+oracle."""
 
 import hashlib
 import math
@@ -18,7 +18,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="module")
 def spark():
-    s = get_spark("sparkextract-r5g-tests", master="local[4]", shuffle_partitions=8)
+    s = get_spark("sparkextract-r5g-tests", master="local[4]")
     yield s
 
 
@@ -101,32 +101,6 @@ def test_q154_shift_invariance_separates_methods(spark):
     assert s_fix / n_fix < 0.05
 
 
-def test_q155_matches_pure_python_dominance(spark):
-    from sparkextract.queries.stats import q155_pareto_frontier
-
-    got = {
-        (r["lang"], r["x"]): (r["y_max"], r["n_docs"], r["frontier"])
-        for r in q155_pareto_frontier(spark, SF_DIR).collect()
-    }
-    groups = {}
-    for _, text, lang, n_chars in _docs(SF_DIR):
-        x = len(set(text.split(" ")))
-        key = (lang, x)
-        y, n = groups.get(key, (-1, 0))
-        groups[key] = (max(y, n_chars), n + 1)
-    assert set(got) == set(groups)
-    for (lang, x), (y_max, n_docs) in groups.items():
-        # frontier iff no group in the same lang has larger x and >= y
-        dominated = any(
-            x2 > x and y2 >= y_max
-            for (l2, x2), (y2, _) in groups.items()
-            if l2 == lang
-        )
-        gy, gn, gf = got[(lang, x)]
-        assert gy == y_max and gn == n_docs
-        assert gf == (not dominated), (lang, x)
-
-
 def test_q156_ndcg_bounds_and_identity(spark):
     from sparkextract.queries.retrieval import q156_ndcg_eval
 
@@ -141,25 +115,3 @@ def test_q156_ndcg_bounds_and_identity(spark):
             assert r["ndcg_u"] == expect
             # rearrangement bound: the ideal reorder dominates
             assert r["dcg"] <= r["idcg"] + 1e-9
-
-
-def test_q157_ece_identity_and_monotone_confidence(spark):
-    from sparkextract.queries.stats import q157_calibration_ece
-
-    rows = sorted(
-        q157_calibration_ece(spark, SF_DIR).collect(), key=lambda r: r["b"]
-    )
-    assert rows
-    confs = [r["conf_u"] for r in rows]
-    assert confs == sorted(confs)  # sigmoid of bin center is monotone
-    total = sum(r["n_b"] for r in rows)
-    num = sum(r["gap_u"] * r["n_b"] for r in rows)
-    expect = math.floor(num / total + 0.5)
-    for r in rows:
-        assert r["gap_u"] == abs(r["acc_u"] - r["conf_u"])
-        assert 0 <= r["pos_b"] <= r["n_b"]
-        assert r["ece_u"] == expect
-    n_docs = sum(
-        1 for _, t, _, _ in _docs(SF_DIR) if [x for x in t.split(" ") if x]
-    )
-    assert total == n_docs

@@ -1,6 +1,7 @@
 """End-to-end Spark tests (SURVEY.md §5.2): span-sequence equality vs the
 pure-pandas oracle, doc runs across Arrow batches, partitioning
-invariance, plan shape, and checkpoint/resume idempotency."""
+invariance, plan shape, checkpoint/resume idempotency, and the debug
+sinks and span filters of ``spark/io.py``."""
 
 import os
 
@@ -22,7 +23,14 @@ from sparkextract.spark.job import (
     extract_exploded,
     extract_marked,
 )
-from sparkextract.schema import DOC_SCHEMA, MANIFEST_SCHEMA
+from sparkextract.schema import DOC_SCHEMA, EXPLODED_DDL, MANIFEST_SCHEMA
+from sparkextract.spark.io import (
+    filter_min_media_size,
+    validate_spans,
+    write_report,
+    write_spans_csv,
+    write_spans_json,
+)
 from sparkextract.spark.manifest import (
     _append_manifest,
     bucket_counts,
@@ -39,7 +47,7 @@ N_DOCS = 180  # covers edge docs (i%101==3) and at least one mega doc (i%997==13
 
 @pytest.fixture(scope="module")
 def spark():
-    s = get_spark("sparkextract-tests", master="local[4]", shuffle_partitions=8)
+    s = get_spark("sparkextract-tests", master="local[4]")
     yield s
 
 
@@ -279,6 +287,45 @@ def test_docs_without_spans_are_counted_but_read_no_rows(spark, tmp_path):
     assert sum(r["doc_count"] for r in manifest) == ret["docs"] == 3
     assert sum(r["span_count"] for r in manifest) == ret["spans"] == 0
     assert read_extracted(spark, root).count() == 0
+
+
+def test_debug_sinks_and_span_filters(spark, tmp_path):
+    """S5/S6/S8 sinks and the P3/P6 filters over a seven-row exploded frame."""
+    rows = [
+        ("d1", "text", "a\nb", None, 0),
+        ("d1", "table", "| x |", None, 1),
+        ("d1", "image_ocr", "ocr", "m1", 2),
+        ("d2", "bogus", "x", None, 0),  # unknown kind
+        ("d2", "text", None, None, 1),  # text span without text
+        ("d2", "image_ocr", "ocr", None, 2),  # image without a media ref
+        ("d2", "text", "y", None, -1),  # negative offset
+    ]
+    exploded = spark.createDataFrame(rows, EXPLODED_DDL)
+
+    write_spans_csv(exploded, str(tmp_path / "csv"))
+    csv_lines = [
+        line
+        for f in sorted((tmp_path / "csv").glob("*.csv"))
+        for line in f.read_text().splitlines()
+        if not line.startswith("doc_id,")
+    ]
+    assert len(csv_lines) == 7  # the newline is escaped: one span, one row
+    assert "d1,text,a\\nb,,0" in csv_lines
+
+    write_spans_json(exploded, str(tmp_path / "json"))
+    assert spark.read.json(str(tmp_path / "json")).count() == 7
+
+    write_report(exploded, str(tmp_path / "report"))
+    report = {r["doc_id"]: r.asDict() for r in spark.read.json(str(tmp_path / "report")).collect()}
+    assert report["d1"] == {"doc_id": "d1", "image_ocr": 1, "table": 1, "text": 1, "form": 0}
+
+    assert sorted(map(tuple, validate_spans(exploded).collect())) == sorted(rows[:3])
+
+    media = spark.createDataFrame(
+        [("ok", 50, 50), ("narrow", 49, 100), ("short", 100, 49)],
+        "media_id string, width int, height int",
+    )
+    assert [r["media_id"] for r in filter_min_media_size(media).collect()] == ["ok"]
 
 
 def test_assemble_roundtrip(spark, docs):

@@ -56,6 +56,6 @@ def test_spark_submit_extract_job(tmp_path):
     from sparkextract.spark.manifest import read_extracted
     from sparkextract.spark.session import get_spark
 
-    spark = get_spark("submit-check", master="local[4]", shuffle_partitions=8)
+    spark = get_spark("submit-check", master="local[4]")
     got = read_extracted(spark, out)
     assert got.count() == metrics["spans"]

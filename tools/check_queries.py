@@ -59,7 +59,7 @@ def main():
     else:
         SPARK_QUERIES, ORACLE_SQL = driver_queries()
 
-    spark = get_spark("check-queries", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("check-queries", master="local[8]")
 
     con = duckdb.connect()
     for t in ("region nation customer supplier part orders lineitem events "

@@ -21,12 +21,13 @@ SF_DIR = "/root/testdata/sf0.01"
 
 # audited set = EVERY fine-grained registered query (the panels exported
 # to the driver are plain UNION ALLs of these, so the fine grain is the
-# right audit granularity). CAVEAT — q71/q72: the convergence loop runs
-# eagerly at DataFrame-build time and localCheckpoint() truncates the
-# lineage, so their PLANS.md rows show only the FINAL stage over a
-# checkpointed RDD scan; the per-iteration shape (edge join + min-agg on
-# the node key, one label-sized shuffle per round) is documented in the
-# q71 docstring, not capturable from the returned frame's plan.
+# right audit granularity). CAVEAT — q94: label_propagation's convergence
+# loop runs eagerly at DataFrame-build time and localCheckpoint()
+# truncates the lineage, so its PLANS.md row shows only the FINAL stage
+# over checkpointed scans; the per-iteration shape (edge join + min-agg
+# on the node key, one label-sized shuffle per round) is documented in
+# the label_propagation docstring, not capturable from the returned
+# frame's plan.
 
 
 def plan_text(df) -> str:
@@ -64,7 +65,6 @@ def main():
     spark = get_spark(
         "dump-plans",
         master="local[4]",
-        shuffle_partitions=8,
         extra_conf={"spark.sql.adaptive.enabled": "false"},
     )
     lines = [
