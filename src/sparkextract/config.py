@@ -41,8 +41,6 @@ KIND_RANK = {KIND_TEXT: 0, KIND_TABLE: 1, KIND_FORM: 2, KIND_IMAGE: 3}
 IN_HTML = "html"
 IN_PDF = "pdf_layout"
 IN_MEDIA = "media"
-IN_TEXT = "text"
-VALID_INPUT_KINDS = (IN_HTML, IN_PDF, IN_MEDIA, IN_TEXT)
 
 # ---- cell normalization (reference: src/table_extractor.py:495-503) ----
 NULLISH_CELL_VALUES = ("", "None", "nan", "NaN", "null", "NULL")

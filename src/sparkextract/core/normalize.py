@@ -13,7 +13,6 @@ Reference parity:
 from __future__ import annotations
 
 import hashlib
-import json
 import re
 import unicodedata
 
@@ -81,12 +80,3 @@ def clean_table(cells: list[list[object]]) -> list[list[str | None]]:
 def md5_hex(text: str) -> str:
     """D4 content hash (/root/reference/src/rag/text_processor.py:534)."""
     return hashlib.md5(text.encode("utf-8")).hexdigest()
-
-
-def table_fingerprint(cells: list[list[str | None]]) -> str:
-    """Exact-dup key for J1/D6: hash of the normalized cell grid.
-
-    Replaces the reference's O(n^2) cell-similarity nested loop
-    (/root/reference/src/table_extractor.py:200-218) with an exact hash —
-    the Spark-first design dedups by key, not by pairwise comparison."""
-    return md5_hex(json.dumps(cells, ensure_ascii=False, separators=(",", ":")))

@@ -1,10 +1,9 @@
 """Deduplication queries at every grain (D4/D6/J1): exact content-hash
 groups and pairs, MinHash/SimHash signatures and near-dup joins,
-embedding LSH pairs and their recall evaluation, the composed
-extract -> quality -> dedup cleaning pipeline, winnowing, block and
-exact-substring dedup, semantic dedup, cross-lingual candidate mining,
-content-defined chunking, soft-dedup weights and sorted-neighborhood
-blocking.
+embedding LSH pairs, the composed extract -> quality -> dedup cleaning
+pipeline, winnowing, block and exact-substring dedup, semantic dedup,
+cross-lingual candidate mining, content-defined chunking, soft-dedup
+weights and sorted-neighborhood blocking.
 
 Double-precision folds over the embedding arrays are evaluated in
 element order by both engines; results are rounded to 6 decimals before
@@ -91,83 +90,6 @@ block is the key's leading bytes — the global sort becomes
 forward pairs map-side. The verify joins fetch two token sets by
 doc_id (corpus-keyed equi-joins) for CANDIDATE rows only. No
 all-pairs product anywhere.
-
-q146 — EDIT-DISTANCE NEAR-DUP VERIFICATION (blocked). Every near-dup
-method in this repo so far scores candidates with a set metric
-(Jaccard q20/q139, cosine q34/q53, Hamming q68, containment q124);
-the classic record-linkage verifier is TRUE EDIT DISTANCE
-(Levenshtein), the metric behind fuzzy URL/title matching and the
-"verify" stage of suffix-array dedup follow-ups. All-pairs Levenshtein
-is doubly impossible at corpus scale (O(N^2) pairs x O(L^2) per pair),
-so the standard shape is: (1) BLOCK on an exact mid-string slice
-(chars 17..40 — deterministically unchanged by the injected head
-edits, and a 24-char exact key so collisions are near-dups or hash
-luck, never boilerplate); (2) df-cap the blocks (2..16 docs — the same
-hot-key exclusion as q139's rare-shingle cap); (3) verify each
-co-blocked pair with Levenshtein over a 256-char PREFIX CAP (edit
-distance is O(L_a * L_b) per pair — production verifiers always cap
-the comparison window; Spark's `levenshtein` and DuckDB's are both the
-unit-cost Wagner-Fischer distance and agree exactly, parity-tested in
-tests/test_round5e.py). Near-dup pairs are injected (every 9th doc
-re-appears with its first 3 chars rewritten), so edit_dist <= 3 pairs
-must exist at every SF.
-Reference intent: the duplicate-table similarity check of
-reference src/table_extractor.py:200-218 (cell-level table similarity)
-re-expressed with the string-metric verifier the record-linkage
-literature uses.
-Scale shape: the keyed table is built once per (session, input) via
-checkpoint_memo (self-join reads it twice); the block join is a keyed
-equi-join whose per-key fan-out the df cap bounds at C(16,2); the
-Levenshtein runs only on co-blocked pairs. sim_u = round((1 -
-d/max_len) * 1e6) follows the established micro-unit snap recipe.
-
-q149 — URL CANONICALIZATION DEDUP (crawl-frontier normalization). The
-first dedup any web pipeline runs is not on content but on the URL:
-scheme/host case-folding, www-prefix and default-port stripping,
-tracking-query and fragment removal, trailing-slash normalization —
-so the frontier never fetches the same resource six ways. Six
-deterministic messy variants per canonical target are synthesized
-(plain / upper-cased scheme+www+host / utm query / trailing slash /
-fragment / explicit :443), the canonical chain is applied with
-dialect-portable regexes (the q97 regex-subset discipline), and the
-rollup reports per canonical URL the variant count, distinct raw-form
-count and the minimum doc_id (the frontier's survivor pick).
-Scale shape: the canonical chain is map-only string work inside
-whole-stage codegen; the only shuffle is the final groupBy(canonical).
-Reference intent: the SHA-256 document dedup key of
-reference src/rag/rag_pipeline.py:94-105, applied at the URL grain a
-crawler needs.
-
-q162 — QUALITY-AWARE SURVIVOR SELECTION. q38 keeps the MIN-id doc per
-dup cluster; production dedup keeps the HIGHEST-QUALITY copy (the
-mirror may be truncated, the original canonical). Over q38's minhash
-clusters (injected-clone corpus), each member is scored with the q135
-classifier — the SAME formula, applied to the clone corpus via the
-parametrized core — and the survivor is argmax(logit_u) with min-id
-tie-break. Output contrasts the min-id keeper (q38's) with the
-quality keeper and flags clusters where they differ (the injected
-clone mutates the first 10 chars, shifting the logit, so some clusters
-genuinely flip). The argmax is computed WITHOUT a cluster-keyed
-window: groupBy(max logit) + equi-join back + groupBy(min id) — two
-map-side-combinable aggregates, so a viral boilerplate cluster is two
-ROWS of partial-agg state, never one task's window partition (the
-q96/q99 de-skew rule applied to survivor selection).
-Scale shape: signature + score are map-only over the corpus scan
-(memoized once); two stacked keyed aggs + one keyed equi-join; output
-is cluster-grain.
-
-q211 — DEDUP ROI CURVE. The decision-support rollup a dedup run ends
-with: rank exact-duplicate clusters by REMOVABLE mass ((size-1) *
-doc chars) and report the cumulative fraction of the corpus that
-removing the top-k clusters reclaims. The q13 injected-duplicate
-corpus (verbatim copies of every 13th doc at doc_id + 1,000,000)
-guarantees non-trivial clusters. Exact integers end to end; the
-cumulative window runs over the top-20 cluster grain after a
-TakeOrderedAndProject-shaped rank.
-
-Scale shape: groupBy(content hash) mergeable size/mass rollup, rank
-by removable mass (top-k, distributed partial sort), prefix sum over
-20 rows.
 """
 
 from __future__ import annotations
@@ -183,7 +105,7 @@ from sparkextract.queries.base import (
     md5_bucket_sql,
     register,
 )
-from sparkextract.queries.quality import _Q94_MIN_TOKENS, _q135_core_sql, _q135_features_of
+from sparkextract.queries.quality import _Q94_MIN_TOKENS
 from sparkextract.queries.sketches import _kgram_hashes
 
 
@@ -680,112 +602,6 @@ def q53_banded_lsh_near_dup(spark, sf_dir):
             cosine.alias("cosine"),
         )
         .filter(F.col("cosine") >= 0.8)
-    )
-
-
-# --------------------------------------------------------------------------
-# q107: LSH PRECISION/RECALL EVAL — the quality harness every
-# approximate-dedup deployment needs: banded-LSH candidate pairs (q53)
-# are scored against EXACT all-pairs cosine ground truth on a bounded
-# evaluation subset (the standard sampled-ground-truth protocol: exact
-# all-pairs is O(S^2) and runs only on the sample, exactly like q50's
-# ANN recall query set). The subset is base vec_id < 250 of q53's
-# corpus INCLUDING its injected perturbed twins (+1,000,000 ids,
-# first coordinate +0.25, see _banded_corpus; the natural corpus has
-# zero >=0.8 pairs, measured) so both precision and recall are
-# exercised against real positives.
-# Scale shape: the q53 candidate side keeps its banded shape; the
-# exact side is a broadcast self-join of the <=S+S/7-row sample.
-_Q107_SUB = 250
-
-
-_Q107_ORACLE = f"""
-WITH sub AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings WHERE vec_id < {_Q107_SUB}
-  UNION ALL
-  SELECT vec_id + 1000000,
-         list_transform(range(1, 65),
-           i -> CASE WHEN i = 1 THEN CAST(embedding[1] AS DOUBLE) + 0.25
-                     ELSE CAST(embedding[i] AS DOUBLE) END)
-  FROM embeddings WHERE vec_id % 7 = 0 AND vec_id < {_Q107_SUB}
-),
-truth AS (
-  SELECT x.vec_id AS l, y.vec_id AS r
-  FROM sub x JOIN sub y ON x.vec_id < y.vec_id
-  WHERE ROUND(
-    list_sum(list_transform(range(1, 65), i -> x.e[i] * y.e[i]))
-    / (sqrt(list_sum(list_transform(range(1, 65), i -> x.e[i] * x.e[i])))
-     * sqrt(list_sum(list_transform(range(1, 65), i -> y.e[i] * y.e[i])))),
-    6) >= 0.8
-),
-cand AS (
-  SELECT left_id AS l, right_id AS r FROM ({{Q53}}) _q53
-  WHERE left_id % 1000000 < {_Q107_SUB} AND right_id % 1000000 < {_Q107_SUB}
-),
-hit AS (SELECT t.l, t.r FROM truth t JOIN cand c ON t.l = c.l AND t.r = c.r)
-SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth,
-       CAST((SELECT COUNT(*) FROM cand) AS BIGINT) AS n_candidates,
-       CAST((SELECT COUNT(*) FROM hit) AS BIGINT) AS n_hit,
-       ROUND((SELECT COUNT(*) FROM hit) * 1.0
-             / GREATEST((SELECT COUNT(*) FROM cand), 1), 6) AS precision,
-       ROUND((SELECT COUNT(*) FROM hit) * 1.0
-             / GREATEST((SELECT COUNT(*) FROM truth), 1), 6) AS recall
-"""
-
-
-@register("q107_lsh_recall_eval", oracle=_Q107_ORACLE.replace("{Q53}", _Q53_ORACLE))
-def q107_lsh_recall_eval(spark, sf_dir):
-    sub = _banded_corpus(spark, sf_dir).filter(
-        F.col("vec_id") % 1000000 < _Q107_SUB
-    )
-    x = sub.select(F.col("vec_id").alias("l"), F.col("e").alias("ex"))
-    y = sub.select(F.col("vec_id").alias("r"), F.col("e").alias("ey"))
-    cos = F.round(
-        _dot(F.col("ex"), F.col("ey")) / (_norm(F.col("ex")) * _norm(F.col("ey"))),
-        6,
-    )
-    # the three count aggregates below each re-evaluate their subtree
-    # (hit references both), so the sample-sized truth and candidate
-    # frames are materialized once (checkpoint_memo)
-    truth = checkpoint_memo(
-        spark,
-        sf_dir,
-        "q107_truth",
-        lambda: x.join(F.broadcast(y), F.col("l") < F.col("r"))
-        .filter(cos >= 0.8)
-        .select("l", "r"),
-    )
-    cand = checkpoint_memo(
-        spark,
-        sf_dir,
-        "q107_cand",
-        lambda: q53_banded_lsh_near_dup(spark, sf_dir)
-        .filter(
-            (F.col("left_id") % 1000000 < _Q107_SUB)
-            & (F.col("right_id") % 1000000 < _Q107_SUB)
-        )
-        .select(F.col("left_id").alias("l"), F.col("right_id").alias("r")),
-    )
-    hit = truth.join(cand, ["l", "r"])
-    counts = (
-        truth.agg(F.count("*").alias("n_truth"))
-        .crossJoin(cand.agg(F.count("*").alias("n_candidates")))
-        .crossJoin(hit.agg(F.count("*").alias("n_hit")))
-    )
-    return counts.select(
-        "n_truth",
-        "n_candidates",
-        "n_hit",
-        F.round(
-            F.col("n_hit").cast("double")
-            / F.greatest(F.col("n_candidates"), F.lit(1)),
-            6,
-        ).alias("precision"),
-        F.round(
-            F.col("n_hit").cast("double") / F.greatest(F.col("n_truth"), F.lit(1)),
-            6,
-        ).alias("recall"),
     )
 
 
@@ -2074,561 +1890,3 @@ def q194_sorted_neighborhood(spark, sf_dir):
     return scored.select(
         "left_id", "right_id", "n_common", "n_union", jac.cast("long").alias("jac_u")
     ).filter(F.col("jac_u") >= _Q194_MIN_JAC_U)
-
-
-# --------------------------------------------------------------------------
-# MinHash band -> bucket equi-join clustering (the step after q19's
-# signatures): docs sharing a band signature form candidate dup clusters.
-# The corpus is dup-free, so near-dup pairs are injected (a copy of every
-# 11th doc with its first 10 chars changed — MinHash over the 256-char
-# head still collides on most shingles; band-0 min is unchanged whenever
-# the minimum shingle lies beyond the edit).
-@register(
-    "q38_minhash_clusters",
-    oracle="""
-    WITH corpus AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 2000000 AS doc_id, 'xxxxxxxxxx' || SUBSTRING(text, 11) AS text
-      FROM documents WHERE doc_id % 11 = 0
-    ), sigs AS (
-      SELECT doc_id,
-             list_min(list_transform(range(1, GREATEST(LENGTH(SUBSTRING(text,1,256)) - 7, 1) + 1),
-                      i -> md5('b0|' || SUBSTRING(SUBSTRING(text,1,256), i, 8)))) AS sig0
-      FROM corpus
-    )
-    SELECT sig0, CAST(COUNT(*) AS BIGINT) AS cluster_size,
-           CAST(MIN(doc_id) AS BIGINT) AS keeper_doc_id
-    FROM sigs GROUP BY sig0 HAVING COUNT(*) > 1
-    """,
-)
-def q38_minhash_clusters(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    near = docs.filter(F.col("doc_id") % 11 == 0).select(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.concat(F.lit("xxxxxxxxxx"), F.expr("substring(text, 11)")).alias("text"),
-    )
-    corpus = docs.unionByName(near)
-    head = F.substring("text", 1, 256)
-    n_sh = F.greatest(F.length(head) - 7, F.lit(1))
-    sig0 = F.array_min(
-        F.transform(
-            F.sequence(F.lit(1), n_sh),
-            lambda i: F.md5(F.concat(F.lit("b0|"), F.substring(head, i, F.lit(8)))),
-        )
-    )
-    return (
-        corpus.select("doc_id", sig0.alias("sig0"))
-        .groupBy("sig0")
-        .agg(F.count("*").alias("cluster_size"), F.min("doc_id").alias("keeper_doc_id"))
-        .filter(F.col("cluster_size") > 1)
-    )
-
-
-# --------------------------------------------------------------------------
-# q124: CONTAINMENT DEDUP (Broder 1997) — the ASYMMETRIC companion to
-# the Jaccard family (q20/q34/q53): containment C(A,B) = |A∩B| / |A|
-# catches a document embedded inside a larger one (boilerplate wrap,
-# quote-and-extend, page concatenation), which symmetric Jaccard
-# dilutes below threshold. Shingle sets are word-trigram md5 keys;
-# candidate pairs come from a min-shingle equi-join (each doc carries
-# ONE candidate key, so candidate generation is a keyed self-join —
-# never corpus all-pairs; a hot min-shingle would get the q96 salt
-# treatment at scale); exact bidirectional containment is then computed
-# on the candidates' shingle arrays and classified:
-#   mutual_dup (both ≥ 0.9) / left_in_right / right_in_left (one side
-#   ≥ 0.9) / overlap otherwise — emitted for max(c) ≥ 0.5.
-# Ratios are single divisions of exact set cardinalities, ROUND(...,6).
-_Q124_HI = 0.9
-
-
-_Q124_LO = 0.5
-
-
-_Q124_ORACLE = f"""
-WITH sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, len(t) - 2 + 1),
-           i -> md5(t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]))) AS s
-  FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS t
-        FROM documents)
-  WHERE len(t) >= 3
-),
-keyed AS (SELECT doc_id, s, list_min(s) AS k FROM sh),
-cand AS (
-  SELECT a.doc_id AS left_id, b.doc_id AS right_id,
-         LENGTH(list_intersect(a.s, b.s)) AS inter,
-         LENGTH(a.s) AS na, LENGTH(b.s) AS nb
-  FROM keyed a JOIN keyed b ON a.k = b.k AND a.doc_id < b.doc_id
-)
-SELECT left_id, right_id,
-       ROUND(CAST(inter AS DOUBLE) / na, 6) AS c_left,
-       ROUND(CAST(inter AS DOUBLE) / nb, 6) AS c_right,
-       CASE
-         WHEN inter >= {_Q124_HI} * na AND inter >= {_Q124_HI} * nb THEN 'mutual_dup'
-         WHEN inter >= {_Q124_HI} * na THEN 'left_in_right'
-         WHEN inter >= {_Q124_HI} * nb THEN 'right_in_left'
-         ELSE 'overlap'
-       END AS relation
-FROM cand
-WHERE inter >= {_Q124_LO} * na OR inter >= {_Q124_LO} * nb
-ORDER BY left_id, right_id
-"""
-
-
-@register("q124_containment_dedup", oracle=_Q124_ORACLE)
-def q124_containment_dedup(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.filter(F.split("text", " "), lambda x: x != F.lit("")).alias("t")
-    ).filter(F.size("t") >= 3)
-    tri = F.transform(
-        F.sequence(F.lit(1), F.size("t") - 2),
-        lambda i: F.md5(
-            F.concat_ws(
-                " ",
-                F.element_at(F.col("t"), i),
-                F.element_at(F.col("t"), i + 1),
-                F.element_at(F.col("t"), i + 2),
-            )
-        ),
-    )
-    keyed = toks.select(
-        "doc_id", F.array_distinct(tri).alias("s")
-    ).withColumn("k", F.array_min("s"))
-    a = keyed.select(
-        F.col("doc_id").alias("left_id"), F.col("s").alias("sa"), "k"
-    )
-    b = keyed.select(
-        F.col("doc_id").alias("right_id"), F.col("s").alias("sb"), "k"
-    )
-    cand = a.join(b, "k").filter(F.col("left_id") < F.col("right_id")).select(
-        "left_id",
-        "right_id",
-        F.size(F.array_intersect("sa", "sb")).alias("inter"),
-        F.size("sa").alias("na"),
-        F.size("sb").alias("nb"),
-    )
-    hi, lo = F.lit(_Q124_HI), F.lit(_Q124_LO)
-    rel = (
-        F.when(
-            (F.col("inter") >= hi * F.col("na")) & (F.col("inter") >= hi * F.col("nb")),
-            "mutual_dup",
-        )
-        .when(F.col("inter") >= hi * F.col("na"), "left_in_right")
-        .when(F.col("inter") >= hi * F.col("nb"), "right_in_left")
-        .otherwise("overlap")
-    )
-    return (
-        cand.filter(
-            (F.col("inter") >= lo * F.col("na")) | (F.col("inter") >= lo * F.col("nb"))
-        )
-        .select(
-            "left_id",
-            "right_id",
-            F.round(F.col("inter").cast("double") / F.col("na"), 6).alias("c_left"),
-            F.round(F.col("inter").cast("double") / F.col("nb"), 6).alias("c_right"),
-            rel.alias("relation"),
-        )
-        .orderBy("left_id", "right_id")
-    )
-
-
-_Q146_EVERY = 9          # every 9th doc gets an injected near-dup copy
-
-
-_Q146_ID_OFFSET = 3000000
-
-
-_Q146_BLOCK_OFF = 17     # block key: exact slice chars 17..40 (1-based)
-
-
-_Q146_BLOCK_LEN = 24
-
-
-_Q146_DF_MIN, _Q146_DF_MAX = 2, 16   # block df cap (hot-key exclusion)
-
-
-_Q146_PREFIX = 256       # Levenshtein prefix cap
-
-
-_Q146_MAX_DIST = 24      # verification threshold
-
-
-_Q146_ORACLE = f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + {_Q146_ID_OFFSET} AS doc_id,
-         'zqx' || SUBSTRING(text, 4) AS text
-  FROM documents WHERE doc_id % {_Q146_EVERY} = 0
-), keyed AS (
-  SELECT doc_id,
-         SUBSTRING(text, {_Q146_BLOCK_OFF}, {_Q146_BLOCK_LEN}) AS bkey,
-         SUBSTRING(text, 1, {_Q146_PREFIX}) AS p
-  FROM corpus
-  WHERE LENGTH(text) >= {_Q146_BLOCK_OFF + _Q146_BLOCK_LEN - 1}
-), ok AS (
-  SELECT bkey FROM keyed GROUP BY bkey
-  HAVING COUNT(*) BETWEEN {_Q146_DF_MIN} AND {_Q146_DF_MAX}
-), pairs AS (
-  SELECT a.doc_id AS left_id, b.doc_id AS right_id,
-         levenshtein(a.p, b.p) AS d,
-         GREATEST(LENGTH(a.p), LENGTH(b.p)) AS maxlen
-  FROM keyed a
-  JOIN ok ON ok.bkey = a.bkey
-  JOIN keyed b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
-)
-SELECT CAST(left_id AS BIGINT) AS left_id,
-       CAST(right_id AS BIGINT) AS right_id,
-       CAST(d AS BIGINT) AS edit_dist,
-       CAST(ROUND((1.0 - CAST(d AS DOUBLE) / maxlen) * 1000000.0)
-            AS BIGINT) AS sim_u
-FROM pairs WHERE d <= {_Q146_MAX_DIST}
-"""
-
-
-@register("q146_edit_distance_near_dup", oracle=_Q146_ORACLE)
-def q146_edit_distance_near_dup(spark, sf_dir):
-    def _build_keyed():
-        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        near = docs.filter(F.col("doc_id") % _Q146_EVERY == 0).select(
-            (F.col("doc_id") + _Q146_ID_OFFSET).alias("doc_id"),
-            F.concat(F.lit("zqx"), F.expr("substring(text, 4)")).alias("text"),
-        )
-        corpus = docs.unionByName(near).filter(
-            F.length("text") >= _Q146_BLOCK_OFF + _Q146_BLOCK_LEN - 1
-        )
-        return corpus.select(
-            "doc_id",
-            F.substring("text", _Q146_BLOCK_OFF, _Q146_BLOCK_LEN).alias("bkey"),
-            F.substring("text", 1, _Q146_PREFIX).alias("p"),
-        )
-
-    keyed = checkpoint_memo(spark, sf_dir, "q146_keyed", _build_keyed)
-    ok = (
-        keyed.groupBy("bkey")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df").between(_Q146_DF_MIN, _Q146_DF_MAX))
-        .select("bkey")
-    )
-    a = keyed.join(ok, "bkey").select(
-        "bkey", F.col("doc_id").alias("left_id"), F.col("p").alias("pa")
-    )
-    b = keyed.select(
-        "bkey", F.col("doc_id").alias("right_id"), F.col("p").alias("pb")
-    )
-    d = F.levenshtein("pa", "pb")
-    maxlen = F.greatest(F.length("pa"), F.length("pb"))
-    return (
-        a.join(b, "bkey")
-        .filter(F.col("left_id") < F.col("right_id"))
-        .filter(d <= _Q146_MAX_DIST)
-        .select(
-            "left_id",
-            "right_id",
-            d.cast("long").alias("edit_dist"),
-            F.round(
-                (F.lit(1.0) - d.cast("double") / maxlen) * F.lit(1000000.0)
-            )
-            .cast("long")
-            .alias("sim_u"),
-        )
-    )
-
-
-_Q149_GROUP = 6      # docs per canonical target (one per mess variant)
-
-
-_Q149_HOSTS = 23
-
-
-_Q149_ORACLE = f"""
-WITH raw AS (
-  SELECT doc_id,
-         'site' || CAST((doc_id // {_Q149_GROUP}) % {_Q149_HOSTS} AS VARCHAR)
-           || '.example.com' AS host,
-         '/p/' || CAST(doc_id // {_Q149_GROUP} AS VARCHAR) AS path,
-         doc_id % {_Q149_GROUP} AS variant
-  FROM documents
-), urls AS (
-  SELECT doc_id,
-         CASE variant
-           WHEN 0 THEN 'https://' || host || path
-           WHEN 1 THEN 'HTTPS://WWW.' || UPPER(host) || path
-           WHEN 2 THEN 'https://' || host || path
-                       || '?utm_source=feed&utm_medium=rss'
-           WHEN 3 THEN 'https://' || host || path || '/'
-           WHEN 4 THEN 'https://' || host || path || '#section-2'
-           ELSE 'https://' || host || ':443' || path
-         END AS url
-  FROM raw
-), canon AS (
-  SELECT doc_id, url,
-         regexp_replace(
-           regexp_replace(
-             regexp_replace(
-               LOWER(regexp_replace(regexp_replace(url, '#.*$', ''),
-                                    '\\?.*$', '')),
-               '://www\\.', '://'),
-             ':443/', '/'),
-           '/$', '') AS canonical_url
-  FROM urls
-)
-SELECT canonical_url,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(COUNT(DISTINCT url) AS BIGINT) AS n_raw_forms,
-       CAST(MIN(doc_id) AS BIGINT) AS first_doc
-FROM canon GROUP BY canonical_url
-"""
-
-
-@register("q149_url_canonicalize", oracle=_Q149_ORACLE)
-def q149_url_canonicalize(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    g = F.expr(f"doc_id div {_Q149_GROUP}")
-    host = F.concat(
-        F.lit("site"),
-        (g % _Q149_HOSTS).cast("string"),
-        F.lit(".example.com"),
-    )
-    path = F.concat(F.lit("/p/"), g.cast("string"))
-    variant = F.col("doc_id") % _Q149_GROUP
-    base = F.concat(F.lit("https://"), host, path)
-    url = (
-        F.when(variant == 1, F.concat(F.lit("HTTPS://WWW."), F.upper(host), path))
-        .when(variant == 2, F.concat(base, F.lit("?utm_source=feed&utm_medium=rss")))
-        .when(variant == 3, F.concat(base, F.lit("/")))
-        .when(variant == 4, F.concat(base, F.lit("#section-2")))
-        .when(variant == 5, F.concat(F.lit("https://"), host, F.lit(":443"), path))
-        .otherwise(base)
-    )
-    # canonical chain, dialect-portable regex subset (q97 discipline):
-    # fragment -> query -> case-fold -> www. -> default port -> trailing /
-    canonical = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(
-                F.lower(
-                    F.regexp_replace(
-                        F.regexp_replace(url, r"#.*$", ""), r"\?.*$", ""
-                    )
-                ),
-                r"://www\.",
-                "://",
-            ),
-            r":443/",
-            "/",
-        ),
-        r"/$",
-        "",
-    )
-    return (
-        docs.select(
-            "doc_id", url.alias("url"), canonical.alias("canonical_url")
-        )
-        .groupBy("canonical_url")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.countDistinct("url").cast("long").alias("n_raw_forms"),
-            F.min("doc_id").cast("long").alias("first_doc"),
-        )
-    )
-
-
-_Q162_NEG = -(10**12)  # logit for members the classifier skips (no tokens)
-
-
-def _q162_oracle() -> str:
-    return f"""
-WITH corpus AS (
-  SELECT doc_id, lang, text FROM documents
-  UNION ALL
-  SELECT doc_id + 2000000 AS doc_id, lang,
-         'xxxxxxxxxx' || SUBSTRING(text, 11) AS text
-  FROM documents WHERE doc_id % 11 = 0
-),
-feats AS (
-  SELECT doc_id, logit_u FROM ({_q135_core_sql("corpus")})
-),
-sigs AS (
-  SELECT doc_id,
-         list_min(list_transform(
-           range(1, GREATEST(LENGTH(SUBSTRING(text,1,256)) - 7, 1) + 1),
-           i -> md5('b0|' || SUBSTRING(SUBSTRING(text,1,256), i, 8)))) AS sig0
-  FROM corpus
-),
-m AS (
-  SELECT s.sig0, s.doc_id,
-         COALESCE(f.logit_u, {_Q162_NEG}) AS logit_u
-  FROM sigs s LEFT JOIN feats f ON f.doc_id = s.doc_id
-),
-cl AS (
-  SELECT sig0, CAST(COUNT(*) AS BIGINT) AS cluster_size,
-         CAST(MIN(doc_id) AS BIGINT) AS keeper_min_id,
-         CAST(MAX(logit_u) AS BIGINT) AS best_logit_u
-  FROM m GROUP BY sig0 HAVING COUNT(*) > 1
-),
-q AS (
-  SELECT m.sig0, CAST(MIN(m.doc_id) AS BIGINT) AS keeper_quality
-  FROM m JOIN cl ON m.sig0 = cl.sig0 AND m.logit_u = cl.best_logit_u
-  GROUP BY m.sig0
-)
-SELECT cl.sig0, cl.cluster_size, cl.keeper_min_id, cl.best_logit_u,
-       q.keeper_quality,
-       (q.keeper_quality <> cl.keeper_min_id) AS differs
-FROM cl JOIN q ON q.sig0 = cl.sig0
-"""
-
-
-@register("q162_quality_survivor", oracle=_q162_oracle())
-def q162_quality_survivor(spark, sf_dir):
-    def _build_m():
-        docs = load(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "text"
-        )
-        clone = docs.filter(F.col("doc_id") % 11 == 0).select(
-            (F.col("doc_id") + 2000000).alias("doc_id"),
-            "lang",
-            F.concat(
-                F.lit("xxxxxxxxxx"), F.expr("substring(text, 11)")
-            ).alias("text"),
-        )
-        corpus = docs.unionByName(clone)
-        head = F.substring("text", 1, 256)
-        n_sh = F.greatest(F.length(head) - 7, F.lit(1))
-        sig0 = F.array_min(
-            F.transform(
-                F.sequence(F.lit(1), n_sh),
-                lambda i: F.md5(
-                    F.concat(F.lit("b0|"), F.substring(head, i, F.lit(8)))
-                ),
-            )
-        )
-        sigs = corpus.select("doc_id", sig0.alias("sig0"))
-        feats = _q135_features_of(corpus).select("doc_id", "logit_u")
-        return sigs.join(feats, "doc_id", "left").select(
-            "sig0",
-            "doc_id",
-            F.coalesce("logit_u", F.lit(_Q162_NEG)).cast("long").alias(
-                "logit_u"
-            ),
-        )
-
-    # the scored member table feeds BOTH the cluster agg and the argmax
-    # join-back: materialize once (q87/q125/q159 memo discipline)
-    m = checkpoint_memo(spark, sf_dir, "q162_m", _build_m)
-    cl = (
-        m.groupBy("sig0")
-        .agg(
-            F.count("*").cast("long").alias("cluster_size"),
-            F.min("doc_id").cast("long").alias("keeper_min_id"),
-            F.max("logit_u").cast("long").alias("best_logit_u"),
-        )
-        .filter(F.col("cluster_size") > 1)
-    )
-    q = (
-        m.join(
-            cl.select("sig0", "best_logit_u"),
-            ["sig0"],
-        )
-        .filter(F.col("logit_u") == F.col("best_logit_u"))
-        .groupBy("sig0")
-        .agg(F.min("doc_id").cast("long").alias("keeper_quality"))
-    )
-    return cl.join(q, "sig0").select(
-        "sig0",
-        "cluster_size",
-        "keeper_min_id",
-        "best_logit_u",
-        "keeper_quality",
-        (F.col("keeper_quality") != F.col("keeper_min_id")).alias("differs"),
-    )
-
-
-# ---------------------------------------------------------------------
-# q211
-_Q211_TOPK = 20
-
-
-_Q211_ORACLE = f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 13 = 0
-),
-clusters AS (
-  SELECT md5(text) AS ckey,
-         CAST(COUNT(*) AS BIGINT) AS cluster_size,
-         CAST(LENGTH(MIN(text)) AS BIGINT) AS doc_chars,
-         CAST((COUNT(*) - 1) * LENGTH(MIN(text)) AS BIGINT) AS removable_chars
-  FROM corpus GROUP BY md5(text)
-),
-tot AS (SELECT CAST(SUM(cluster_size * doc_chars) AS BIGINT) AS total_chars
-        FROM clusters),
-ranked AS (
-  SELECT ckey, cluster_size, doc_chars, removable_chars,
-         ROW_NUMBER() OVER (ORDER BY removable_chars DESC, ckey ASC) AS rk
-  FROM clusters
-)
-SELECT CAST(r.rk AS BIGINT) AS rank, r.ckey, r.cluster_size,
-       r.removable_chars,
-       CAST(SUM(r.removable_chars) OVER (ORDER BY r.rk) AS BIGINT)
-         AS cum_removable,
-       t.total_chars,
-       CAST((1000000 * SUM(r.removable_chars) OVER (ORDER BY r.rk))
-            // t.total_chars AS BIGINT) AS cum_saved_frac_u
-FROM ranked r CROSS JOIN tot t
-WHERE r.rk <= {_Q211_TOPK}
-ORDER BY r.rk
-"""
-
-
-@register("q211_dedup_roi_curve", oracle=_Q211_ORACLE)
-def q211_dedup_roi_curve(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = docs.unionByName(
-        docs.filter(F.col("doc_id") % 13 == 0).select(
-            (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-        )
-    )
-    clusters = corpus.groupBy(F.md5("text").alias("ckey")).agg(
-        F.count("*").cast("long").alias("cluster_size"),
-        F.length(F.min("text")).cast("long").alias("doc_chars"),
-        ((F.count("*") - 1) * F.length(F.min("text")))
-        .cast("long")
-        .alias("removable_chars"),
-    )
-    tot = clusters.agg(
-        F.sum(F.col("cluster_size") * F.col("doc_chars"))
-        .cast("long")
-        .alias("total_chars")
-    )
-    # top-k FIRST via orderBy().limit() — TakeOrderedAndProject, the
-    # distributed partial sort — then the rank window runs over 20 rows
-    # (a global row_number over the full cluster grain would funnel the
-    # whole cluster table through one task)
-    top = clusters.orderBy(F.desc("removable_chars"), F.asc("ckey")).limit(_Q211_TOPK)
-    ranked = top.withColumn(
-        "rank",
-        F.row_number().over(Window.orderBy(F.desc("removable_chars"), F.asc("ckey"))),
-    )
-    wcum = Window.orderBy("rank").rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        ranked.crossJoin(F.broadcast(tot))
-        .select(
-            F.col("rank").cast("long").alias("rank"),
-            "ckey",
-            "cluster_size",
-            "removable_chars",
-            F.sum("removable_chars").over(wcum).cast("long").alias("cum_removable"),
-            "total_chars",
-            F.expr(
-                "(1000000 * sum(removable_chars) over"
-                " (order by rank rows between unbounded preceding and current row))"
-                " div total_chars"
-            )
-            .cast("long")
-            .alias("cum_saved_frac_u"),
-        )
-        .orderBy("rank")
-    )

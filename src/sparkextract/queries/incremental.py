@@ -17,19 +17,6 @@ broadcast semi-join on the <= 64-row dirty list). The synthetic old
 snapshot keys its changes on the SAME leaf function (leaves 0-3
 modified, 4-5 added since) — the deterministic analog of "one ingest
 partition changed", which is the locality a Merkle scheme exploits.
-
-q183 — WATERMARK LATE-EVENT AUDIT. Choosing a Structured Streaming
-watermark delay D is a data decision: too small silently drops late
-events, too large bloats state. The audit replays each event stream
-(event_type) in arrival order (event_id) and applies Spark's
-watermark rule exactly — an event is DROPPED if its event time is
-older than (max event time seen so far) - D, LATE-ACCEPTED if older
-than the running max but within D — using an exclusive running-max
-window (ROWS UNBOUNDED PRECEDING TO 1 PRECEDING), all in exact BIGINT
-microseconds. Verdict per stream: on-time / late-accepted / dropped
-counts and the maximum observed lateness — the number you read before
-picking D. Scale shape: ONE stream-keyed window (arrival order is a
-per-stream property, so no global sort) + a mergeable rollup.
 """
 
 from __future__ import annotations
@@ -37,7 +24,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
 from sparkextract.queries.base import (
     checkpoint_memo,
@@ -879,69 +866,4 @@ def q172_merkle_snapshot_diff(spark, sf_dir):
         F.coalesce("n_added", F.lit(0)).cast("long").alias("n_added"),
         F.coalesce("n_changed", F.lit(0)).cast("long").alias("n_changed"),
         F.coalesce("n_removed", F.lit(0)).cast("long").alias("n_removed"),
-    )
-
-
-# --------------------------------------------------------------------------
-_Q183_DELAY_US = 3_600_000_000  # watermark delay D = 1 h
-
-
-_Q183_ORACLE = f"""
-WITH ev AS (
-  SELECT event_type, event_id, epoch_us(ts) AS t_us FROM events
-),
-marked AS (
-  SELECT event_type, t_us,
-         MAX(t_us) OVER (PARTITION BY event_type ORDER BY event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS seen_max
-  FROM ev
-)
-SELECT event_type,
-  CAST(COUNT(*) AS BIGINT) AS n_events,
-  CAST(SUM(CASE WHEN seen_max IS NULL OR t_us >= seen_max
-           THEN 1 ELSE 0 END) AS BIGINT) AS n_on_time,
-  CAST(SUM(CASE WHEN t_us < seen_max
-                 AND t_us >= seen_max - {_Q183_DELAY_US}
-           THEN 1 ELSE 0 END) AS BIGINT) AS n_late_accepted,
-  CAST(SUM(CASE WHEN t_us < seen_max - {_Q183_DELAY_US}
-           THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-  CAST(MAX(CASE WHEN seen_max IS NULL THEN 0
-            ELSE GREATEST(seen_max - t_us, 0) END) AS BIGINT)
-    AS max_lateness_us
-FROM marked GROUP BY event_type
-"""
-
-
-@register("q183_watermark_late_events", oracle=_Q183_ORACLE)
-def q183_watermark_late_events(spark, sf_dir):
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("t_us"),
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    marked = ev.select(
-        "event_type", "t_us", F.max("t_us").over(w).alias("seen_max")
-    )
-    on_time = F.col("seen_max").isNull() | (F.col("t_us") >= F.col("seen_max"))
-    dropped = F.col("t_us") < F.col("seen_max") - _Q183_DELAY_US
-    return marked.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n_events"),
-        F.sum(F.when(on_time, 1).otherwise(0)).cast("long").alias("n_on_time"),
-        F.sum(F.when(~on_time & ~dropped, 1).otherwise(0))
-        .cast("long")
-        .alias("n_late_accepted"),
-        F.sum(F.when(dropped, 1).otherwise(0)).cast("long").alias("n_dropped"),
-        F.max(
-            F.when(F.col("seen_max").isNull(), 0).otherwise(
-                F.greatest(F.col("seen_max") - F.col("t_us"), F.lit(0))
-            )
-        )
-        .cast("long")
-        .alias("max_lateness_us"),
     )

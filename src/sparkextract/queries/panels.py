@@ -50,22 +50,18 @@ _SENTINEL = {
 # name: (columns [(name, type)], parts [(probe tag, fine query name,
 # {panel col: source col})]). Unmapped panel columns are NULL.
 PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]] = {
-    # J1/D6 family: every near-dup pair join, one row set per method,
-    # plus the containment relation. score = jaccard / cosine / hamming
-    # per the probe (exact pairs carry no score).
+    # J1/D6 family: every near-dup pair join, one row set per method.
+    # score = jaccard / cosine / hamming per the probe (exact pairs carry
+    # no score).
     "panel_dup_pairs": (
         [("left_id", "long"), ("right_id", "long"), ("score", "double"),
          ("n_shared_keys", "long"), ("jaccard_u", "long"),
-         ("edit_dist", "long"), ("sim_u", "long"), ("n_union", "long"),
-         ("c_left", "double"), ("c_right", "double"), ("relation", "string")],
+         ("n_union", "long")],
         [
             ("sorted_neighborhood", "q194_sorted_neighborhood",
              {"left_id": "left_id", "right_id": "right_id",
               "n_shared_keys": "n_common", "n_union": "n_union",
               "jaccard_u": "jac_u"}),
-            ("edit_distance", "q146_edit_distance_near_dup",
-             {"left_id": "left_id", "right_id": "right_id",
-              "edit_dist": "edit_dist", "sim_u": "sim_u"}),
             ("bitext_blocked", "q139_bitext_candidates",
              {"left_id": "left_id", "right_id": "right_id",
               "n_shared_keys": "n_shared_keys", "jaccard_u": "jaccard_u"}),
@@ -79,80 +75,42 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
              {"left_id": "left_id", "right_id": "right_id", "score": "cosine"}),
             ("simhash_hamming", "q68_simhash_near_dup",
              {"left_id": "left_id", "right_id": "right_id", "score": "hamming"}),
-            ("containment", "q124_containment_dedup",
-             {"left_id": "left_id", "right_id": "right_id", "c_left": "c_left",
-              "c_right": "c_right", "relation": "relation"}),
         ],
     ),
-    # D4/D6 clusters: quality-aware survivors, the keyed cluster variants
-    # (exact content-hash, minhash band, canonical URL), soft-dedup
-    # weights and the dedup ROI curve.
+    # D4/D6 clusters: exact content-hash clusters and soft-dedup weights.
     "panel_dup_clusters": (
         [("cluster_size", "long"), ("survivor_id", "long"),
-         ("group_key", "string"), ("n_raw_forms", "long"),
-         ("source", "string"), ("n_docs", "long"), ("n_dup_docs", "long"),
-         ("raw_tokens", "long"), ("eff_tokens_u", "long"),
-         ("keeper_quality", "long"), ("best_logit_u", "long"),
-         ("differs", "boolean"), ("rank", "long"), ("removable_chars", "long"),
-         ("cum_removable", "long"), ("total_chars", "long"),
-         ("cum_saved_frac_u", "long")],
+         ("group_key", "string"), ("source", "string"), ("n_docs", "long"),
+         ("n_dup_docs", "long"), ("raw_tokens", "long"),
+         ("eff_tokens_u", "long")],
         [
-            ("quality_survivor", "q162_quality_survivor",
-             {"group_key": "sig0", "cluster_size": "cluster_size",
-              "survivor_id": "keeper_min_id",
-              "keeper_quality": "keeper_quality",
-              "best_logit_u": "best_logit_u", "differs": "differs"}),
             ("soft_dedup", "q159_soft_dedup_weights",
              {"source": "source", "n_docs": "n_docs",
               "n_dup_docs": "n_dup_docs", "raw_tokens": "raw_tokens",
               "eff_tokens_u": "eff_tokens_u"}),
-            ("url_canonical", "q149_url_canonicalize",
-             {"group_key": "canonical_url", "cluster_size": "n_docs",
-              "survivor_id": "first_doc", "n_raw_forms": "n_raw_forms"}),
-            ("dedup_roi", "q211_dedup_roi_curve",
-             {"rank": "rank", "group_key": "ckey",
-              "cluster_size": "cluster_size",
-              "removable_chars": "removable_chars",
-              "cum_removable": "cum_removable",
-              "total_chars": "total_chars",
-              "cum_saved_frac_u": "cum_saved_frac_u"}),
             ("exact_hash_clusters", "q11_dedup_exact",
              {"group_key": "content_hash", "cluster_size": "cluster_size",
               "survivor_id": "keeper_doc_id"}),
-            ("minhash_clusters", "q38_minhash_clusters",
-             {"group_key": "sig0", "cluster_size": "cluster_size",
-              "survivor_id": "keeper_doc_id"}),
         ],
     ),
-    # quality family: weighted score (source-grain), per-doc rule and LM
-    # gates, token entropy, the linear quality classifier, the Kneser-Ney
-    # bigram cross-entropy and the filter-disparity audit.
+    # quality family: weighted score (source-grain), per-doc repetition
+    # and LM gates, token entropy, the linear quality classifier and the
+    # Kneser-Ney bigram cross-entropy.
     "panel_quality": (
         [("source", "string"), ("avg_quality", "double"), ("n_good", "long"),
          ("doc_id", "long"), ("n_words", "long"), ("n_distinct", "long"),
-         ("diversity", "double"), ("mean_word_len", "double"),
-         ("reject_reason", "string"), ("keep", "boolean"), ("n_docs", "long"),
+         ("reject_reason", "string"), ("keep", "boolean"),
          ("n_bigrams", "long"), ("n_distinct_bigrams", "long"),
          ("dup_frac", "double"), ("top_word_frac", "double"),
          ("avg_logp", "double"), ("entropy", "double"), ("n_stop", "long"),
-         ("logit_u", "long"), ("keep_rate_u", "long"), ("gini_u", "long"),
-         ("range_u", "long"), ("xent", "double")],
+         ("logit_u", "long"), ("xent", "double")],
         [
             ("kneser_ney", "q189_kneser_ney_lm",
              {"doc_id": "doc_id", "n_bigrams": "n_bigrams",
               "xent": "xent"}),
-            ("filter_disparity", "q148_filter_disparity",
-             {"source": "source", "n_docs": "n_docs", "n_good": "n_keep",
-              "keep_rate_u": "keep_rate_u", "gini_u": "gini_u",
-              "range_u": "range_u"}),
             ("weighted_score", "q25_quality_score",
              {"source": "source", "avg_quality": "avg_quality",
               "n_good": "n_good"}),
-            ("rule_cascade", "q75_quality_rules",
-             {"doc_id": "doc_id", "n_words": "n_words",
-              "n_distinct": "n_distinct", "diversity": "diversity",
-              "mean_word_len": "mean_word_len",
-              "reject_reason": "reject_reason", "keep": "keep"}),
             ("repetition_rules", "q84_repetition_rules",
              {"doc_id": "doc_id", "n_bigrams": "n_bigrams",
               "n_distinct_bigrams": "n_distinct_bigrams",
@@ -170,18 +128,11 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
               "n_stop": "n_stop", "logit_u": "logit_u", "keep": "keep"}),
         ],
     ),
-    # D4/F13 signature tables (64-bit simhash; 4-band minhash) and the
-    # AGMS join-size sketch.
+    # D4/F13 signature tables (64-bit simhash; 4-band minhash).
     "panel_signatures": (
         [("doc_id", "long"), ("simhash", "long"), ("sig0", "string"),
-         ("sig1", "string"), ("sig2", "string"), ("sig3", "string"),
-         ("ratio_u", "long"), ("n_orders", "long"), ("n_lineitem", "long"),
-         ("exact_join_size", "long"), ("est_join_size", "long")],
+         ("sig1", "string"), ("sig2", "string"), ("sig3", "string")],
         [
-            ("agms_join_size", "q175_agms_join_size",
-             {"n_orders": "n_orders", "n_lineitem": "n_lineitem",
-              "exact_join_size": "exact_join_size",
-              "est_join_size": "est_join_size", "ratio_u": "ratio_u"}),
             ("simhash64", "q32_simhash", {"doc_id": "doc_id", "simhash": "simhash"}),
             ("minhash", "q19_minhash_signature",
              {"doc_id": "doc_id", "sig0": "sig0", "sig1": "sig1",
@@ -210,35 +161,21 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
              {"doc_id": "doc_id", "kind": "kind", "text": "text", "offset": "offset"}),
         ],
     ),
-    # cluster audits over the seed-centroid cells: simplified silhouette,
-    # semantic dedup per cell and the Rand-index drift between two
-    # clusterings.
+    # semantic dedup per seed-centroid cell.
     "panel_kmeans": (
-        [("cell", "long"), ("vec_id", "long"), ("a_u", "long"), ("b_u", "long"),
-         ("sil_u", "long"), ("n_members", "long"), ("n_dups", "long"),
-         ("n_survivors", "long"), ("n_points", "long"), ("n_cells", "long"),
-         ("pairs_both", "long"), ("pairs_a", "long"), ("pairs_b", "long"),
-         ("rand_index", "double")],
+        [("cell", "long"), ("n_members", "long"), ("n_dups", "long"),
+         ("n_survivors", "long")],
         [
-            ("silhouette", "q131_simplified_silhouette",
-             {"vec_id": "vec_id", "cell": "cell", "a_u": "a_u",
-              "b_u": "b_u", "sil_u": "sil_u"}),
             ("semantic_dedup", "q110_semantic_dedup",
              {"cell": "cell", "n_members": "n_members", "n_dups": "n_dups",
               "n_survivors": "n_survivors"}),
-            ("cluster_drift", "q120_cluster_drift",
-             {"n_points": "n_points", "n_cells": "n_cells",
-              "pairs_both": "pairs_both", "pairs_a": "pairs_a",
-              "pairs_b": "pairs_b", "rand_index": "rand_index"}),
         ],
     ),
     # token statistics: fingerprint uniqueness per language, Misra-Gries
-    # heavy hitters, KMV distinct counts and template profiles.
+    # heavy hitters and KMV distinct counts.
     "panel_token_lang_stats": (
         [("lang", "string"), ("n_docs", "long"), ("n_unique", "long"),
-         ("token", "string"), ("source", "string"), ("n_prefixes", "long"),
-         ("max_prefix_docs", "long"), ("template_share_u", "long"),
-         ("est", "long"), ("exact", "long"), ("err", "long"),
+         ("token", "string"), ("est", "long"), ("exact", "long"), ("err", "long"),
          ("bound", "long"), ("within_bound", "boolean"), ("part", "string"),
          ("n_exact", "long"), ("k_eff", "long"), ("kth_min", "long"),
          ("est_kmv", "double")],
@@ -250,11 +187,6 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
              {"token": "token", "est": "est", "exact": "exact",
               "err": "err", "bound": "bound",
               "within_bound": "within_bound"}),
-            ("template_profile", "q160_template_prefix_profile",
-             {"source": "source", "n_docs": "n_docs",
-              "n_prefixes": "n_prefixes",
-              "max_prefix_docs": "max_prefix_docs",
-              "template_share_u": "template_share_u"}),
             ("fingerprint", "q21_fingerprint",
              {"lang": "lang", "n_docs": "n_docs", "n_unique": "n_unique"}),
         ],
@@ -314,7 +246,7 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
         ],
     ),
     # retrieval compositions: rerank top-k; full kNN->dedup->rerank->budget;
-    # fusion, MMR, nDCG and mined hard negatives.
+    # fusion, MMR and nDCG.
     "panel_retrieval": (
         [("vec_id", "long"), ("cosine", "double"), ("overlap", "int"),
          ("rerank_score", "double"), ("cum_chars", "long"),
@@ -322,7 +254,7 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
          ("r_bm25", "long"), ("r_tfidf", "long"), ("fused_units", "long"),
          ("step", "long"), ("rel_u", "long"), ("score_u", "long"),
          ("dcg", "double"), ("idcg", "double"), ("ndcg_u", "long"),
-         ("n_rel", "long"), ("neg_id", "long"), ("neg_label", "int")],
+         ("n_rel", "long")],
         [
             ("ndcg_eval", "q156_ndcg_eval",
              {"query_id": "query_id", "dcg": "dcg", "idcg": "idcg",
@@ -340,26 +272,13 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
             ("mmr_rerank", "q128_mmr_rerank",
              {"query_id": "query_id", "step": "step", "vec_id": "vec_id",
               "rel_u": "rel_u", "score_u": "score_u"}),
-            ("hard_negatives", "q123_hard_negatives",
-             {"query_id": "query_id", "neg_id": "neg_id",
-              "neg_label": "neg_label", "cosine": "cosine", "rnk": "rnk"}),
         ],
     ),
-    # event windows: rank-top-k per user; running cumulative sum;
-    # watermark late events.
+    # event windows: rank-top-k per user; running cumulative sum.
     "panel_event_windows": (
         [("user_id", "long"), ("event_id", "long"), ("value", "double"),
-         ("rn", "long"), ("running_value", "double"), ("n_events", "long"),
-         ("event_type", "string"), ("n_on_time", "long"),
-         ("n_late_accepted", "long"), ("n_dropped", "long"),
-         ("max_lateness_us", "long")],
+         ("rn", "long"), ("running_value", "double")],
         [
-            ("watermark_audit", "q183_watermark_late_events",
-             {"event_type": "event_type", "n_events": "n_events",
-              "n_on_time": "n_on_time",
-              "n_late_accepted": "n_late_accepted",
-              "n_dropped": "n_dropped",
-              "max_lateness_us": "max_lateness_us"}),
             ("topk_per_user", "q06_topk_events_per_user",
              {"user_id": "user_id", "event_id": "event_id",
               "value": "value", "rn": "rn"}),
@@ -400,13 +319,11 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
              {"c_custkey": "c_custkey", "c_mktsegment": "c_mktsegment"}),
         ],
     ),
-    # embedding diagnostics: LSH bucket histogram; per-label quality;
-    # int8 quantization fidelity.
+    # embedding diagnostics: LSH bucket histogram; per-label quality.
     "panel_embedding_stats": (
         [("bucket", "int"), ("label", "int"), ("n_vectors", "long"),
          ("min_vec_id", "long"), ("avg_l2", "double"),
-         ("n_zero_components", "long"), ("vec_id", "long"),
-         ("cos_quant", "double"), ("cos_exact", "double")],
+         ("n_zero_components", "long")],
         [
             ("lsh_hist", "q28_lsh_buckets",
              {"bucket": "bucket", "n_vectors": "n_vectors",
@@ -414,9 +331,6 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
             ("label_quality", "q31_embedding_quality",
              {"label": "label", "n_vectors": "n_vectors", "avg_l2": "avg_l2",
               "n_zero_components": "n_zero_components"}),
-            ("int8_quant", "q102_int8_quantization",
-             {"vec_id": "vec_id", "label": "label",
-              "cos_quant": "cos_quant", "cos_exact": "cos_exact"}),
         ],
     ),
     # keyed event dedup: priority keeper rows; distinct-key seen-set;
@@ -549,15 +463,12 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
              {"doc_id": "doc_id", "overlap_score": "overlap_score"}),
         ],
     ),
-    # contamination family: 13-gram eval-set decontamination, its Bloom-
-    # and cuckoo-filter probe variants, and the sampled LSH
-    # precision/recall eval.
+    # contamination family: 13-gram eval-set decontamination and its
+    # Bloom- and cuckoo-filter probe variants.
     "panel_decontamination": (
         [("doc_id", "long"), ("n_kgrams", "long"), ("n_contam", "long"),
          ("contam_frac", "double"), ("keep", "boolean"), ("n_bloom", "long"),
-         ("n_exact", "long"), ("n_false_pos", "long"), ("n_truth", "long"),
-         ("n_candidates", "long"), ("n_hit", "long"), ("precision", "double"),
-         ("recall", "double"), ("n_cuckoo", "long")],
+         ("n_exact", "long"), ("n_false_pos", "long"), ("n_cuckoo", "long")],
         [
             ("cuckoo_probe", "q198_cuckoo_filter_probe",
              {"doc_id": "doc_id", "n_kgrams": "n_kgrams",
@@ -571,59 +482,37 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
              {"doc_id": "doc_id", "n_kgrams": "n_kgrams",
               "n_bloom": "n_bloom", "n_exact": "n_exact",
               "n_false_pos": "n_false_pos"}),
-            ("lsh_eval", "q107_lsh_recall_eval",
-             {"n_truth": "n_truth", "n_candidates": "n_candidates",
-              "n_hit": "n_hit", "precision": "precision",
-              "recall": "recall"}),
         ],
     ),
     # corpus-clean family: the end-to-end extract->quality->dedup
-    # composition plus the block / exact-substring / CDC-chunk dedup, PII,
-    # k-anonymity, span-merge, watermark, encoding-repair and secret-scan
-    # passes.
+    # composition plus the block / exact-substring / CDC-chunk dedup,
+    # watermark, encoding-repair and secret-scan passes.
     "panel_corpus_clean": (
         [("doc_id", "long"), ("n_tokens", "long"), ("stage", "string"),
          ("survivor_id", "long"), ("n_blocks", "long"), ("n_kept", "long"),
          ("kept_frac", "double"), ("kept_text_md5", "string"),
-         ("n_emails", "int"), ("n_phones", "int"), ("has_pii", "boolean"),
-         ("redacted_md5", "string"), ("n_windows", "long"), ("n_dup", "long"),
-         ("dup_frac", "double"), ("flagged", "boolean"), ("lang", "string"),
-         ("source", "string"), ("len_bucket", "long"), ("g0", "long"),
-         ("g1", "long"), ("anon_level", "int"), ("released", "boolean"),
-         ("was_mojibake", "boolean"), ("n_bad_seqs", "long"),
-         ("repaired_md5", "string"), ("roundtrip_ok", "boolean"),
-         ("n_green", "long"), ("z_u", "long"), ("detector", "string"),
-         ("tp", "long"), ("fp", "long"), ("fn", "long"),
-         ("precision_u", "long"), ("recall_u", "long"), ("n_spans", "long"),
-         ("n_islands", "long"), ("covered_tokens", "long"),
-         ("max_island_len", "long"), ("n_cdc", "long"), ("shared_cdc", "long"),
-         ("n_fix", "long"), ("shared_fix", "long")],
+         ("n_windows", "long"), ("n_dup", "long"), ("dup_frac", "double"),
+         ("flagged", "boolean"), ("was_mojibake", "boolean"),
+         ("n_bad_seqs", "long"), ("repaired_md5", "string"),
+         ("roundtrip_ok", "boolean"), ("n_green", "long"), ("z_u", "long"),
+         ("detector", "string"), ("tp", "long"), ("fp", "long"),
+         ("fn", "long"), ("precision_u", "long"), ("recall_u", "long"),
+         ("n_cdc", "long"), ("shared_cdc", "long"), ("n_fix", "long"),
+         ("shared_fix", "long")],
         [
             ("cdc_chunking", "q154_cdc_chunking",
              {"doc_id": "doc_id", "n_cdc": "n_cdc",
               "shared_cdc": "shared_cdc", "n_fix": "n_fix",
               "shared_fix": "shared_fix"}),
-            ("span_merge", "q147_span_interval_merge",
-             {"doc_id": "doc_id", "n_spans": "n_spans",
-              "n_islands": "n_islands", "covered_tokens": "covered_tokens",
-              "max_island_len": "max_island_len"}),
             ("pipeline", "q94_corpus_clean_pipeline",
              {"doc_id": "doc_id", "n_tokens": "n_tokens",
               "stage": "stage", "survivor_id": "survivor_id"}),
             ("block_dedup", "q96_block_dedup",
              {"doc_id": "doc_id", "n_blocks": "n_blocks", "n_kept": "n_kept",
               "kept_frac": "kept_frac", "kept_text_md5": "kept_text_md5"}),
-            ("pii_redaction", "q97_pii_redaction",
-             {"doc_id": "doc_id", "n_emails": "n_emails",
-              "n_phones": "n_phones", "has_pii": "has_pii",
-              "redacted_md5": "redacted_md5"}),
             ("exact_substring", "q99_exact_substring_dedup",
              {"doc_id": "doc_id", "n_windows": "n_windows", "n_dup": "n_dup",
               "dup_frac": "dup_frac", "flagged": "flagged"}),
-            ("k_anonymity", "q129_k_anonymity",
-             {"doc_id": "doc_id", "lang": "lang", "source": "source",
-              "len_bucket": "len_bucket", "g0": "g0", "g1": "g1",
-              "anon_level": "anon_level", "released": "released"}),
             ("watermark", "q136_watermark_detect",
              {"doc_id": "doc_id", "n_windows": "n_bigrams",
               "n_green": "n_green", "z_u": "z_u", "flagged": "flagged"}),
@@ -636,27 +525,13 @@ PANEL_SPECS: dict[str, tuple[list[tuple[str, str]], list[tuple[str, str, dict]]]
               "precision_u": "precision_u", "recall_u": "recall_u"}),
         ],
     ),
-    # corpus-layout family: deterministic global shuffle, domain rollup
-    # and the compression proxy.
+    # corpus-layout family: deterministic global shuffle.
     "panel_corpus_layout": (
-        [("doc_id", "long"), ("shard", "int"), ("global_pos", "long"),
-         ("domain", "string"), ("n_docs", "long"), ("total_chars", "long"),
-         ("mean_chars", "double"), ("source", "string"),
-         ("n_instances", "long"), ("n_distinct_grams", "long"),
-         ("n_repeated", "long"), ("repeat_frac_u", "long"),
-         ("dict_worthy", "boolean")],
+        [("doc_id", "long"), ("shard", "int"), ("global_pos", "long")],
         [
-            ("compression_proxy", "q201_compression_proxy",
-             {"source": "source", "n_instances": "n_instances",
-              "n_distinct_grams": "n_distinct", "n_repeated": "n_repeated",
-              "repeat_frac_u": "repeat_frac_u",
-              "dict_worthy": "dict_worthy"}),
             ("det_shuffle", "q105_deterministic_shuffle",
              {"doc_id": "doc_id", "shard": "shard",
               "global_pos": "global_pos"}),
-            ("domain_rollup", "q98_domain_rollup",
-             {"domain": "domain", "n_docs": "n_docs",
-              "total_chars": "total_chars", "mean_chars": "mean_chars"}),
         ],
     ),
     # CDC / resume family: manifest crash+resume state, Merkle snapshot

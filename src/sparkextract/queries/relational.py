@@ -3,25 +3,6 @@ aggregates (S1/A5/A7), windows (W1/W4/W5), existence joins (J2/D5),
 priority and seen-set dedup (D1/D3), JSON props (F12), gap-based
 sessionization, the document confidence rollup (A6) and the
 deterministic global shuffle.
-
-q147 — SPAN INTERVAL MERGE (gaps-and-islands). Every span-emitting
-stage (PII regex hits q97, secret-scan matches q141, OCR span
-boundaries) produces OVERLAPPING intervals that must be coalesced
-before the replacement/redaction is applied — the classic
-gaps-and-islands problem. Spans here are the deterministic keyword
-hits ('table'/'row'/'key') widened to [pos, pos+2] token-unit
-intervals; merging is the textbook two-window form: an interval opens
-a new island iff its start exceeds the running MAX(end) of all prior
-intervals in the doc (strict overlap-or-touch merge: s <= prev_max_e
-merges, s = prev_max_e + 1 does not), island ids are the running sum
-of the new-island flag, and the per-doc report is (n_spans, n_islands,
-covered_tokens, max_island_len) — all exact integers.
-Scale shape: the only shuffle key is doc_id; both windows and both
-groupBys share that partitioning (a doc's spans are bounded by its
-token count, so no per-key skew beyond the mega documents q42 already
-covers). Reference intent: the span-offset bookkeeping of
-reference src/rag/text_processor.py:38-87 (ordered span assembly)
-extended with the overlap-coalescing every redaction pipeline needs.
 """
 
 from __future__ import annotations
@@ -29,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 from pyspark.sql.window import Window as W
 
-from sparkextract.queries.base import dsum, load, md5_bucket_sql, register
+from sparkextract.queries.base import dsum, load, register
 
 
 def _dec(col):
@@ -566,182 +547,3 @@ def q105_deterministic_shuffle(spark, sf_dir):
         "shard",
         (F.col("offset") + F.col("rk") - 1).alias("global_pos"),
     )
-
-
-# --------------------------------------------------------------------------
-# q98: DOMAIN-LEVEL FILTERING + ROLLUP — the web-pipeline step that
-# scores and gates whole domains (spam/SEO domains are dropped as a
-# unit, per-domain quotas cap crawl skew). Each doc carries a
-# deterministic synthetic URL; the DOMAIN IS PARSED FROM THE URL STRING
-# (split on '/'), never recomputed from doc_id — string parsing is the
-# operator. The blocklist is the md5-bucket(domain)%11==0 slice,
-# applied as a BROADCAST ANTI-JOIN (a real blocklist is a curated list,
-# not a predicate). Output: per surviving domain, doc count, total
-# chars, mean quality. Reference analog: content-type/min-confidence
-# retrieval filters (reference src/rag/vector_database.py:304-313)
-# lifted to domain grain.
-# Scale shape: one groupBy(domain) keyed shuffle; the blocklist is a
-# CURATED EXTERNAL LIST (built driver-side from the known domain
-# universe, exactly how a real blocklist arrives) so the corpus is
-# scanned once — deriving it from the corpus would either re-scan or
-# rely on ReuseExchange firing across sibling subtrees (it doesn't
-# under AQE). The anti-join broadcasts the list; at web scale
-# (~millions of domains) it still broadcasts, or at worst falls back
-# to a keyed join on the ALREADY-AGGREGATED domain grain, never the
-# doc grain.
-_Q98_DOMAINS = 97
-
-
-_Q98_BLOCK_BUCKETS = 11
-
-
-_Q98_URLS = f"""
-  SELECT doc_id, n_chars,
-         'https://site' || CAST(doc_id % {_Q98_DOMAINS} AS VARCHAR)
-           || '.example.com/p/' || CAST(doc_id AS VARCHAR) AS url
-  FROM documents
-"""
-
-
-_Q98_ORACLE = f"""
-WITH urls AS (
-  {_Q98_URLS}
-),
-parsed AS (
-  SELECT doc_id, n_chars, split_part(url, '/', 3) AS domain FROM urls
-),
-per_domain AS (
-  SELECT domain,
-         CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-         ROUND(SUM(n_chars) * 1.0 / COUNT(*), 6) AS mean_chars
-  FROM parsed GROUP BY domain
-)
-SELECT domain, n_docs, total_chars, mean_chars
-FROM per_domain
-WHERE {md5_bucket_sql("domain", _Q98_BLOCK_BUCKETS)} <> 0
-"""
-
-
-@register("q98_domain_rollup", oracle=_Q98_ORACLE)
-def q98_domain_rollup(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        "n_chars",
-        F.concat(
-            F.lit("https://site"),
-            (F.col("doc_id") % _Q98_DOMAINS).cast("string"),
-            F.lit(".example.com/p/"),
-            F.col("doc_id").cast("string"),
-        ).alias("url"),
-    )
-    parsed = docs.select(
-        "n_chars", F.element_at(F.split("url", "/"), 3).alias("domain")
-    )
-    per_domain = parsed.groupBy("domain").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.round(F.sum("n_chars").cast("double") / F.count("*"), 6).alias(
-            "mean_chars"
-        ),
-    )
-    import hashlib
-
-    blocked = [
-        (d,)
-        for i in range(_Q98_DOMAINS)
-        for d in [f"site{i}.example.com"]
-        if int(hashlib.md5(d.encode()).hexdigest()[:8], 16) % _Q98_BLOCK_BUCKETS == 0
-    ]
-    blocklist = spark.createDataFrame(blocked, "domain string")
-    return per_domain.join(F.broadcast(blocklist), "domain", "left_anti")
-
-
-_Q147_KW = ("table", "row", "key")
-
-
-_Q147_WIDTH = 2  # interval = [pos, pos + width] in token units
-
-
-_Q147_KW_SQL = ", ".join(f"'{k}'" for k in _Q147_KW)
-
-
-_Q147_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id,
-         unnest(string_split(text, ' ')) AS tok,
-         generate_subscripts(string_split(text, ' '), 1) AS pos1
-  FROM documents
-), spans AS (
-  SELECT doc_id, pos1 - 1 AS s, pos1 - 1 + {_Q147_WIDTH} AS e
-  FROM toks WHERE tok IN ({_Q147_KW_SQL})
-), flagged AS (
-  SELECT doc_id, s, e,
-         CASE WHEN s > COALESCE(MAX(e) OVER (
-                PARTITION BY doc_id ORDER BY s
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-              THEN 1 ELSE 0 END AS new_island
-  FROM spans
-), islands AS (
-  SELECT doc_id, s, e,
-         SUM(new_island) OVER (
-           PARTITION BY doc_id ORDER BY s
-           ROWS UNBOUNDED PRECEDING) AS island
-  FROM flagged
-), merged AS (
-  SELECT doc_id, island, MIN(s) AS ms, MAX(e) AS me
-  FROM islands GROUP BY doc_id, island
-), per_doc AS (
-  SELECT doc_id,
-         CAST(COUNT(*) AS BIGINT) AS n_islands,
-         CAST(SUM(me - ms + 1) AS BIGINT) AS covered_tokens,
-         CAST(MAX(me - ms + 1) AS BIGINT) AS max_island_len
-  FROM merged GROUP BY doc_id
-), counts AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans FROM spans
-  GROUP BY doc_id
-)
-SELECT p.doc_id, c.n_spans, p.n_islands, p.covered_tokens, p.max_island_len
-FROM per_doc p JOIN counts c USING (doc_id)
-"""
-
-
-@register("q147_span_interval_merge", oracle=_Q147_ORACLE)
-def q147_span_interval_merge(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    )
-    kw = F.col("tok") == F.lit(_Q147_KW[0])
-    for k in _Q147_KW[1:]:
-        kw = kw | (F.col("tok") == F.lit(k))
-    spans = toks.filter(kw).select(
-        "doc_id",
-        F.col("pos").cast("long").alias("s"),
-        (F.col("pos") + _Q147_WIDTH).cast("long").alias("e"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("s")
-    prev_max_e = F.max("e").over(w.rowsBetween(Window.unboundedPreceding, -1))
-    flagged = spans.withColumn(
-        "new_island",
-        F.when(F.col("s") > F.coalesce(prev_max_e, F.lit(-1)), 1).otherwise(0),
-    )
-    islands = flagged.withColumn(
-        "island",
-        F.sum("new_island").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    merged = islands.groupBy("doc_id", "island").agg(
-        F.min("s").alias("ms"), F.max("e").alias("me")
-    )
-    per_doc = merged.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_islands"),
-        F.sum(F.col("me") - F.col("ms") + 1).cast("long").alias("covered_tokens"),
-        F.max(F.col("me") - F.col("ms") + 1).cast("long").alias("max_island_len"),
-    )
-    counts = spans.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_spans")
-    )
-    return per_doc.join(counts, "doc_id").select(
-        "doc_id", "n_spans", "n_islands", "covered_tokens", "max_island_len"
-    )
-

@@ -1144,84 +1144,3 @@ def q156_ndcg_eval(spark, sf_dir):
         .cast("long")
         .alias("n_rel"),
     )
-
-
-# --------------------------------------------------------------------------
-# q123: HARD-NEGATIVE MINING (DPR-style) — for each query vector
-# (vec_id % 50 == 0), the top-5 most-similar vectors whose label
-# DIFFERS from the query's: the contrastive-training pairs an
-# embedding-model pipeline mines after dedup. Exact-cosine baseline;
-# the 100 TB path swaps the scored cross join for the IVF candidate
-# join (q46) or the LSH bucket join (q34) — same ranking tail.
-# Ordering uses the ROUNDED cosine (6 dp) + vec_id so ranks are
-# engine-stable; the query set is a broadcast (n/50 rows), scoring is
-# map-side over the embedding scan, and the per-query top-k is one
-# window over the query key.
-_Q123_K = 5
-
-
-_Q123_STRIDE = 50
-
-
-_Q123_DIM = 64
-
-
-_Q123_ORACLE = f"""
-WITH q AS (
-  SELECT vec_id AS query_id, label AS qlabel, embedding AS qv
-  FROM embeddings WHERE vec_id % {_Q123_STRIDE} = 0
-),
-scored AS (
-  SELECT q.query_id, e.vec_id AS neg_id, e.label AS neg_label,
-         ROUND(
-           list_sum(list_transform(range(1, {_Q123_DIM + 1}),
-             i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))
-           / ( sqrt(list_sum(list_transform(range(1, {_Q123_DIM + 1}),
-                 i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))))
-             * sqrt(list_sum(list_transform(range(1, {_Q123_DIM + 1}),
-                 i -> CAST(q.qv[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))) ),
-           6) AS cosine
-  FROM embeddings e JOIN q ON e.label <> q.qlabel
-)
-SELECT query_id, neg_id, neg_label, cosine, CAST(rnk AS BIGINT) AS rnk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, neg_id ASC) AS rnk
-  FROM scored
-)
-WHERE rnk <= {_Q123_K}
-ORDER BY query_id, rnk
-"""
-
-
-@register("q123_hard_negatives", oracle=_Q123_ORACLE)
-def q123_hard_negatives(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from sparkextract.queries.ann import _dot, _norm
-
-    emb = load(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") % _Q123_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("qv"),
-    )
-    scored = (
-        emb.join(F.broadcast(q), F.col("label") != F.col("qlabel"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neg_id"),
-            F.col("label").alias("neg_label"),
-            F.round(
-                _dot(F.col("embedding"), F.col("qv"))
-                / (_norm(F.col("embedding")) * _norm(F.col("qv"))),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neg_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= _Q123_K)
-        .orderBy("query_id", "rnk")
-    )

@@ -62,17 +62,6 @@ mergeable distinct, broadcastable; the probe is a broadcast LEFT SEMI
 shape (left join + flag) on (bucket, fp); the exact audit join is the
 same broadcast-kh join as q91/q104. The corpus shuffles only for the
 final per-doc rollup.
-
-q175 — AGMS TWO-TABLE JOIN-SIZE ESTIMATE (Alon, Gibbons, Matias &
-Szegedy 1999). The output size
-of orders ⋈ lineitem on orderkey is sum_k c_O(k) * c_L(k), and the
-AGMS cross-sketch estimates it as median_j(Z_O,j * Z_L,j) with the
-SAME md5-derived ±1 sign stream applied to both sides — each Z is one
-map-side-combinable SUM over its own table, so the estimate costs two
-independent single passes and a 9-number multiply, while the exact
-number (the evidence column) costs the real key groupBy+join. This is
-the sketch a distributed planner consults before choosing
-broadcast-vs-shuffle. All arithmetic exact BIGINT.
 """
 
 from __future__ import annotations
@@ -896,90 +885,4 @@ def q198_cuckoo_filter_probe(spark, sf_dir):
         F.sum(F.when(F.col("cuckoo_hit") & ~F.col("exact_hit"), 1).otherwise(0))
         .cast("long")
         .alias("n_false_pos"),
-    )
-
-
-# --------------------------------------------------------------------------
-_Q175_NEST = 9
-
-
-def _q175_oracle() -> str:
-    zo, zl = [], []
-    for j in range(_Q175_NEST):
-        bucket = md5_bucket_sql("'j" + str(j) + "|' || CAST(k AS VARCHAR)", 2)
-        sign = f"CASE WHEN {bucket} = 0 THEN 1 ELSE -1 END"
-        zo.append(f"CAST(SUM({sign}) AS BIGINT) AS z{j}")
-        zl.append(f"CAST(SUM({sign}) AS BIGINT) AS z{j}")
-    prods = ", ".join(f"o.z{j} * l.z{j}" for j in range(_Q175_NEST))
-    return f"""
-WITH so AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_orders, {", ".join(zo)}
-  FROM (SELECT o_orderkey AS k FROM orders)
-),
-sl AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_lineitem, {", ".join(zl)}
-  FROM (SELECT l_orderkey AS k FROM lineitem)
-),
-exact AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS exact_join_size
-  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-),
-est AS (
-  SELECT n_orders, n_lineitem,
-         list_sort([{prods}])[{_Q175_NEST // 2 + 1}] AS est_join_size
-  FROM so o, sl l
-)
-SELECT e.n_orders, e.n_lineitem, x.exact_join_size, e.est_join_size,
-       (1000000 * e.est_join_size) // x.exact_join_size AS ratio_u
-FROM est e, exact x
-"""
-
-
-@register("q175_agms_join_size", oracle=_q175_oracle())
-def q175_agms_join_size(spark, sf_dir):
-    def sketch(df, key, cnt_name):
-        signs = [
-            F.sum(
-                F.when(
-                    md5_bucket(
-                        F.concat(F.lit(f"j{j}|"), F.col(key).cast("string")), 2
-                    )
-                    == 0,
-                    1,
-                ).otherwise(-1)
-            )
-            .cast("long")
-            .alias(f"z{j}")
-            for j in range(_Q175_NEST)
-        ]
-        return df.agg(F.count("*").cast("long").alias(cnt_name), *signs)
-
-    orders = load(spark, sf_dir, "orders").select("o_orderkey")
-    lineitem = load(spark, sf_dir, "lineitem").select("l_orderkey")
-    so = sketch(orders, "o_orderkey", "n_orders")
-    sl = sketch(lineitem, "l_orderkey", "n_lineitem").select(
-        "n_lineitem", *[F.col(f"z{j}").alias(f"y{j}") for j in range(_Q175_NEST)]
-    )
-    exact = (
-        orders.join(
-            lineitem, orders["o_orderkey"] == lineitem["l_orderkey"]
-        ).agg(F.count("*").cast("long").alias("exact_join_size"))
-    )
-    est = so.crossJoin(F.broadcast(sl)).select(
-        "n_orders",
-        "n_lineitem",
-        F.array_sort(
-            F.array(
-                *[F.col(f"z{j}") * F.col(f"y{j}") for j in range(_Q175_NEST)]
-            )
-        )
-        .getItem(_Q175_NEST // 2)
-        .alias("est_join_size"),
-    )
-    return est.crossJoin(F.broadcast(exact)).select(
-        "n_orders",
-        "n_lineitem",
-        "exact_join_size",
-        "est_join_size",
-        F.expr("(1000000 * est_join_size) div exact_join_size").alias("ratio_u"),
     )

@@ -23,15 +23,6 @@ DOC_SCHEMA = T.StructType(
 )
 
 # output span rows in exploded (relational) form
-EXPLODED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("offset", T.IntegerType(), False),
-    ]
-)
 EXPLODED_DDL = "doc_id string, kind string, text string, media_ref string, offset int"
 
 # checkpoint manifest (FIXTURES.md F3)

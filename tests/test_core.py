@@ -8,7 +8,7 @@ import pytest
 from sparkextract import config
 from sparkextract.core.boilerplate import extract_html
 from sparkextract.core.extract import extract_document, extract_input_span, finalize
-from sparkextract.core.normalize import clean_table, md5_hex, normalize_cell, normalize_text
+from sparkextract.core.normalize import clean_table, normalize_cell, normalize_text
 from sparkextract.core.segment import chunk_text, overlap_tail, split_paragraphs, split_sentences
 from sparkextract.core.tables import parse_pdf_layout, render_form, render_table
 from sparkextract.corpus import generate_corpus, generate_document

@@ -1,8 +1,6 @@
 """Tests for the extension modules: multimodal plumbing, streaming
 incremental ingest, confidence metrics."""
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -274,7 +272,7 @@ def test_driver_view_fits_cap_and_covers_registry():
     sq, osql = driver_queries()
     assert len(sq) <= 38
     # the catalogue only shrinks: each cut stage lowers this bound
-    assert len(SPARK_QUERIES) <= 116
+    assert len(SPARK_QUERIES) <= 95
     assert set(osql) == set(sq)
     exported = set(sq)
     for name in SPARK_QUERIES:
@@ -287,39 +285,3 @@ def test_driver_view_fits_cap_and_covers_registry():
             assert fine in SPARK_QUERIES, fine
             assert set(mapping) <= colnames, (pname, fine)
 
-
-# ------------------------------------------------------- q75 edge parity
-def test_q75_zero_word_doc_matches_duckdb(spark, tmp_path):
-    """A whitespace-only document divides by zero words: Spark doubles
-    yield NaN while DuckDB yields NULL — q75 guards the division so both
-    engines emit NULL metrics and keep=False/'too_short'."""
-    import duckdb
-
-    from sparkextract.queries.registry import ORACLE_SQL, SPARK_QUERIES
-
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf)
-    rows = [
-        (0, "   \t  \n ", "en", "web", 8),
-        (1, "plenty " * 60 + "of distinct words here " * 10, "en", "web", 700),
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(os.path.join(sf, "documents.parquet"))
-
-    sdf = SPARK_QUERIES["q75_quality_rules"](spark, sf).orderBy("doc_id")
-    s_rows = [tuple(r) for r in sdf.collect()]
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{os.path.join(sf, 'documents.parquet')}/*.parquet')"
-    )
-    d_rows = con.execute(
-        ORACLE_SQL["q75_quality_rules"] + " ORDER BY doc_id"
-    ).fetchall()
-
-    assert s_rows == d_rows
-    zero = s_rows[0]
-    assert zero[3] is None and zero[4] is None  # diversity, mean_word_len
-    assert zero[5] == "too_short" and zero[6] is False

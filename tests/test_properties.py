@@ -19,7 +19,6 @@ over arbitrary inputs rather than fixed fixtures:
 
 from __future__ import annotations
 
-import random
 from collections import Counter
 
 import pytest

@@ -1,8 +1,9 @@
 """Every query module imports on its own in a fresh interpreter, so no
 import cycle hides behind the order in which another module loads them;
-and every reference-file citation in the package names a file the
-survey cites."""
+every reference-file citation in the package names a file the survey
+cites; and no query module keeps a top-level name that nothing reaches."""
 
+import ast
 import os
 import pkgutil
 import re
@@ -53,3 +54,140 @@ def test_reference_citations_name_surveyed_files():
                 if m.group(1) not in cited:
                     unknown.append(f"{os.path.relpath(path, SRC)}: {m.group(1)}")
     assert not unknown, unknown
+
+
+# --- reachability of query code ------------------------------------------
+#
+# Every top-level function, class or assigned name in queries/*.py must be
+# reachable from a root: a registered query, anything in panels.py,
+# base.py or registry.py, a module statement that is not a definition
+# (``ORACLE_SQL["..."] = _ORACLE``), or a name used outside queries/. A
+# name inside a string literal counts as a reference, because oracles are
+# assembled from f-strings and ``.replace`` templates; docstrings do not.
+
+QUERIES_DIR = os.path.join(SRC, "sparkextract", "queries")
+_ROOT_MODULES = {"panels", "base", "registry"}
+_IDENT = re.compile(r"[A-Za-z_]\w*")
+# code outside queries/ whose names keep query code alive
+_OUTSIDE = ("src/sparkextract", "tests", "tools", "scripts", "perfbench",
+            "bench.py", "__spark_entry__.py")
+
+
+def _docstrings(tree):
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.FunctionDef, ast.ClassDef)):
+            first = node.body[0] if node.body else None
+            if isinstance(first, ast.Expr) and isinstance(first.value, ast.Constant) \
+                    and isinstance(first.value.value, str):
+                out.add(id(first.value))
+    return out
+
+
+def _references(node, docstrings):
+    """(bare names, names found by attribute, import or string) in a subtree."""
+    names, loose = set(), set()
+    for sub in ast.walk(node):
+        if isinstance(sub, ast.Name):
+            names.add(sub.id)
+        elif isinstance(sub, ast.Attribute):
+            loose.add(sub.attr)
+        elif isinstance(sub, ast.alias):
+            loose.add(sub.name.rsplit(".", 1)[-1])
+        elif isinstance(sub, ast.Constant) and isinstance(sub.value, str) \
+                and id(sub) not in docstrings:
+            loose.update(_IDENT.findall(sub.value))
+    return names, loose
+
+
+def _defined_names(stmt):
+    """Names a top-level statement defines, or None if it is not a definition."""
+    if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    if isinstance(stmt, ast.AnnAssign):
+        targets = [stmt.target]
+    elif isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    else:
+        return None
+    if all(isinstance(t, ast.Name) for t in targets):
+        return [t.id for t in targets]
+    return None
+
+
+def _is_registered(stmt):
+    return isinstance(stmt, ast.FunctionDef) and any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+        for d in stmt.decorator_list
+    )
+
+
+def _outside_names():
+    used = set()
+    for rel in _OUTSIDE:
+        path = os.path.join(REPO, rel)
+        paths = [path] if path.endswith(".py") else [
+            os.path.join(r, f) for r, _d, fs in os.walk(path) for f in fs if f.endswith(".py")
+        ]
+        for p in paths:
+            if not p.startswith(QUERIES_DIR + os.sep):
+                with open(p) as f:
+                    tree = ast.parse(f.read())
+                used.update(*_references(tree, _docstrings(tree)))
+    return used
+
+
+def test_query_code_is_reachable():
+    defs = {}  # (module, name) -> references of its definition
+    imported = {}  # (module, local name) -> (module, name) it was imported from
+    roots = set()
+    root_refs = []  # (module, references) of non-definition statements
+    for mod in MODULES:
+        with open(os.path.join(QUERIES_DIR, mod + ".py")) as f:
+            tree = ast.parse(f.read())
+        docstrings = _docstrings(tree)
+        for stmt in tree.body:
+            if isinstance(stmt, ast.ImportFrom) and (stmt.module or "").startswith("sparkextract.queries."):
+                for a in stmt.names:
+                    imported[(mod, a.asname or a.name)] = (stmt.module.rsplit(".", 1)[-1], a.name)
+            if isinstance(stmt, (ast.Import, ast.ImportFrom)) or (
+                    isinstance(stmt, ast.Expr) and id(stmt.value) in docstrings):
+                continue
+            refs = _references(stmt, docstrings)
+            names = _defined_names(stmt)
+            if names is None:
+                root_refs.append((mod, refs))
+            for name in names or ():
+                defs[(mod, name)] = refs
+                if mod in _ROOT_MODULES or _is_registered(stmt):
+                    roots.add((mod, name))
+
+    by_name = {}
+    for key in defs:
+        by_name.setdefault(key[1], set()).add(key)
+
+    def resolve(mod, refs):
+        names, loose = refs
+        out = set()
+        for n in names | loose:
+            if (mod, n) in defs:
+                out.add((mod, n))
+            elif (mod, n) in imported:
+                out.add(imported[(mod, n)])
+            elif n in loose:
+                out |= by_name.get(n, set())
+        return out
+
+    for name in _outside_names():
+        roots |= by_name.get(name, set())
+    for mod, refs in root_refs:
+        roots |= resolve(mod, refs)
+
+    seen, todo = set(), list(roots)
+    while todo:
+        key = todo.pop()
+        if key not in seen and key in defs:
+            seen.add(key)
+            todo.extend(resolve(key[0], defs[key]))
+    dead = sorted(f"{m}.{n}" for m, n in set(defs) - seen)
+    assert not dead, f"query code that no root reaches: {dead}"

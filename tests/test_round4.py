@@ -189,46 +189,6 @@ def test_q96_oracle_tiny(spark):
     assert got[3][1] == got[3][0]
 
 
-def test_q97_redaction_counts(spark):
-    """Injected docs carry exactly the injected PII; uninjected docs have
-    none; redacted text never contains an email/phone shape."""
-    from sparkextract.queries.registry import SPARK_QUERIES
-
-    out = SPARK_QUERIES["q97_pii_redaction"](spark, SF_DIR).cache()
-    assert out.filter("doc_id % 7 = 0 AND n_emails != 1").count() == 0
-    assert out.filter("doc_id % 7 != 0 AND n_emails != 0").count() == 0
-    assert out.filter("doc_id % 13 = 0 AND n_phones != 1").count() == 0
-    assert out.filter("doc_id % 13 != 0 AND n_phones != 0").count() == 0
-    assert out.filter("has_pii != (n_emails + n_phones > 0)").count() == 0
-    out.unpersist()
-
-
-def test_q98_blocklist_applied(spark):
-    """Blocked domains (md5 bucket 0) are absent; surviving stats are
-    internally consistent."""
-    import hashlib
-
-    from sparkextract.queries.registry import SPARK_QUERIES
-    from sparkextract.queries.relational import _Q98_BLOCK_BUCKETS, _Q98_DOMAINS
-
-    rows = SPARK_QUERIES["q98_domain_rollup"](spark, SF_DIR).collect()
-    assert rows
-    blocked = {
-        f"site{i}.example.com"
-        for i in range(_Q98_DOMAINS)
-        if int(hashlib.md5(f"site{i}.example.com".encode()).hexdigest()[:8], 16)
-        % _Q98_BLOCK_BUCKETS
-        == 0
-    }
-    assert blocked  # the rule must actually block something
-    got = {r["domain"] for r in rows}
-    assert not (got & blocked)
-    assert len(got) + len(blocked) == _Q98_DOMAINS
-    for r in rows:
-        assert r["total_chars"] >= r["n_docs"] >= 1
-        assert abs(r["mean_chars"] - r["total_chars"] / r["n_docs"]) < 1e-4
-
-
 def test_q99_verbatim_pair_fully_duplicated(spark):
     """Two identical long docs are 100% duplicated windows; a unique-vocab
     doc has zero."""
@@ -250,24 +210,6 @@ def test_q99_verbatim_pair_fully_duplicated(spark):
     assert got[1][0] == got[1][1] > 0
     assert got[2][0] == got[2][1]
     assert got[3][0] == 0
-
-
-def test_q102_quantization_fidelity(spark):
-    """Quantized cosine tracks exact cosine within the int8 error budget,
-    and a constant vector dequantizes to itself."""
-    from sparkextract.queries.registry import SPARK_QUERIES
-    from sparkextract.queries.ann import _q102_deq_col
-
-    rows = SPARK_QUERIES["q102_int8_quantization"](spark, SF_DIR).collect()
-    assert len(rows) == 10
-    for r in rows:
-        assert abs(r["cos_quant"] - r["cos_exact"]) < 0.05
-    # constant vector: scale==0 path returns the constant itself
-    df = spark.createDataFrame(
-        [(1, [2.5] * 4)], "vec_id long, embedding array<float>"
-    )
-    got = df.select(_q102_deq_col().alias("d")).collect()[0]["d"]
-    assert got == [2.5] * 4
 
 
 def test_q103_statuses(spark):
@@ -350,17 +292,3 @@ def test_q106_only_changed_docs_extracted(spark):
     ).otherwise(0)
     assert joined.filter(F.col("span_count") != expect).count() == 0
     joined.unpersist()
-
-
-def test_q107_recall_bounds(spark):
-    """Candidates are a subset of truth (q53 post-verifies with the exact
-    cosine filter, so precision is 1.0 by construction); recall is high
-    on the injected twins and within [0, 1]."""
-    from sparkextract.queries.registry import SPARK_QUERIES
-
-    r = SPARK_QUERIES["q107_lsh_recall_eval"](spark, SF_DIR).collect()[0]
-    assert r["n_truth"] > 0
-    assert r["n_hit"] <= min(r["n_truth"], r["n_candidates"])
-    assert r["precision"] == 1.0
-    assert 0.0 <= r["recall"] <= 1.0
-    assert r["recall"] > 0.5

@@ -96,65 +96,6 @@ def test_q128_greedy_invariants(spark):
             assert abs(r["score_u"] - 7 * r["rel_u"]) <= 3_000_000
 
 
-def test_q129_k_anonymity_recount(spark):
-    """Independent pandas recount of both generalization levels."""
-    import pyarrow.parquet as pq
-
-    from sparkextract.queries.quality import _Q129_K, q129_k_anonymity
-
-    t = pq.read_table(os.path.join(SF_DIR, "documents.parquet")).to_pandas()
-    t["len_bucket"] = t["n_chars"] // 200
-    g0 = t.groupby(["lang", "source", "len_bucket"]).size().to_dict()
-    g1 = t.groupby(["lang", "len_bucket"]).size().to_dict()
-
-    rows = q129_k_anonymity(spark, SF_DIR).collect()
-    assert len(rows) == len(t)
-    for r in rows:
-        exp_g0 = g0[(r["lang"], r["source"], r["len_bucket"])]
-        exp_g1 = g1[(r["lang"], r["len_bucket"])]
-        assert r["g0"] == exp_g0 and r["g1"] == exp_g1
-        exp_level = 0 if exp_g0 >= _Q129_K else (1 if exp_g1 >= _Q129_K else 2)
-        assert r["anon_level"] == exp_level
-        assert r["released"] == (exp_level < 2)
-
-
-def test_q131_matches_numpy_reference(spark):
-    """Independent numpy silhouette over the same quantized inputs."""
-    import pyarrow.parquet as pq
-
-    from sparkextract.queries.ann import _Q131_K, q131_simplified_silhouette
-
-    t = pq.read_table(os.path.join(SF_DIR, "embeddings.parquet"))
-    embs = {
-        int(v): np.round(np.asarray(e, dtype=np.float64), 3)
-        for v, e in zip(
-            t.column("vec_id").to_pylist(), t.column("embedding").to_pylist()
-        )
-    }
-    cents = {c: embs[c] for c in range(1, _Q131_K + 1)}
-    expected = {}
-    for v, e in embs.items():
-        if v <= _Q131_K:
-            continue
-        d2 = sorted(
-            (float(np.sum((e - c) ** 2)), cid) for cid, c in cents.items()
-        )
-        (a2, cell), (b2, _) = d2[0], d2[1]
-        a_u = int(np.round(np.sqrt(a2) * 1_000_000))
-        b_u = int(np.round(np.sqrt(b2) * 1_000_000))
-        sil = 0 if max(a_u, b_u) == 0 else (b_u - a_u) * 1_000_000 // max(a_u, b_u)
-        expected[v] = (cell, a_u, b_u, sil)
-
-    rows = q131_simplified_silhouette(spark, SF_DIR).collect()
-    assert len(rows) == len(expected)
-    for r in rows:
-        assert (
-            r["cell"], r["a_u"], r["b_u"], r["sil_u"]
-        ) == expected[r["vec_id"]]
-        assert r["a_u"] <= r["b_u"]  # nearest-centroid assignment
-        assert 0 <= r["sil_u"] <= 1_000_000
-
-
 def test_q130_entropy_matches_python(spark):
     """Independent per-doc Shannon entropy (direct -sum p ln p form,
     NOT the ln(n) - S/n identity the query uses) over the raw parquet."""

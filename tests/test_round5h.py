@@ -1,7 +1,6 @@
-"""q159-q160 (soft-dedup weights, template profiling): pure-Python
-re-implementations over the raw parquet plus structural invariants —
-guarding the inverse-multiplicity weight identity and the two-level
-prefix reduction."""
+"""q159 soft-dedup weights: a pure-Python re-implementation over the
+raw parquet plus structural invariants, guarding the
+inverse-multiplicity weight identity."""
 
 import os
 from collections import Counter
@@ -68,29 +67,3 @@ def test_q159_weight_identity_and_mass_conservation(spark):
     m = got["mirror"]
     assert m[1] == m[0] and m[0] > 0
     assert m[3] == m[2] * 500_000  # 1e6 div 2 on every mirror token
-
-
-def test_q160_matches_pure_python_profile(spark):
-    from sparkextract.queries.quality import q160_template_prefix_profile
-
-    rows = {
-        r["source"]: r
-        for r in q160_template_prefix_profile(spark, SF_DIR).collect()
-    }
-    per = {}
-    for _, text, source in _docs(SF_DIR):
-        prefix = " ".join(text.split(" ")[:2])
-        per.setdefault(source, Counter())[prefix] += 1
-    assert set(rows) == set(per)
-    for source, cnt in per.items():
-        r = rows[source]
-        n = sum(cnt.values())
-        shared = sum(c for c in cnt.values() if c > 1)
-        assert r["n_docs"] == n
-        assert r["n_prefixes"] == len(cnt)
-        assert r["max_prefix_docs"] == max(cnt.values())
-        import math
-
-        assert r["template_share_u"] == math.floor(
-            shared * 1e6 / n + 0.5
-        )
