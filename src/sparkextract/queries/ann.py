@@ -31,6 +31,16 @@ def _norm(a):
     )
 
 
+def _cos_pair_sql(a: str, b: str) -> str:
+    """DuckDB cosine between two DOUBLE[] vectors, element order fixed."""
+    rng = f"range(1, {_DIM + 1})"
+    return (
+        f"list_sum(list_transform({rng}, i -> {a}[i] * {b}[i]))"
+        f" / ( sqrt(list_sum(list_transform({rng}, i -> {a}[i] * {a}[i])))"
+        f"   * sqrt(list_sum(list_transform({rng}, i -> {b}[i] * {b}[i]))) )"
+    )
+
+
 # --------------------------------------------------------------------------
 # T1/J3: brute-force cosine top-k against the vec_id=0 query vector.
 # Scale path: broadcast the query vector (a 1-row dim-64 array), score every

@@ -97,7 +97,14 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 from pyspark.sql.window import Window as W
 
-from sparkextract.queries.ann import _DIM, _dot, _norm, _plane_sign_sql, _plane_signs_py
+from sparkextract.queries.ann import (
+    _DIM,
+    _cos_pair_sql,
+    _dot,
+    _norm,
+    _plane_sign_sql,
+    _plane_signs_py,
+)
 from sparkextract.queries.base import (
     checkpoint_memo,
     load,
@@ -463,13 +470,6 @@ def _band_sig_sql(band: int) -> str:
     return " + ".join(terms)
 
 
-_COS_E = (
-    f"list_sum(list_transform(range(1, {_DIM + 1}), i -> cx.e[i] * cy.e[i]))"
-    f" / ( sqrt(list_sum(list_transform(range(1, {_DIM + 1}), i -> cx.e[i] * cx.e[i])))"
-    f"   * sqrt(list_sum(list_transform(range(1, {_DIM + 1}), i -> cy.e[i] * cy.e[i]))) )"
-)
-
-
 _Q53_ORACLE = f"""
 WITH corpus AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -496,11 +496,11 @@ pairs AS (
     ON x.band = y.band AND x.sig = y.sig AND x.vec_id < y.vec_id
 )
 SELECT p.l AS left_id, p.r AS right_id,
-       ROUND({_COS_E}, 6) AS cosine
+       ROUND({_cos_pair_sql('cx.e', 'cy.e')}, 6) AS cosine
 FROM pairs p
 JOIN corpus cx ON p.l = cx.vec_id
 JOIN corpus cy ON p.r = cy.vec_id
-WHERE ROUND({_COS_E}, 6) >= 0.8
+WHERE ROUND({_cos_pair_sql('cx.e', 'cy.e')}, 6) >= 0.8
 """
 
 
@@ -1297,17 +1297,7 @@ def q99_exact_substring_dedup(spark, sf_dir):
 _Q110_THRESHOLD = 0.95
 
 
-def _cos_pair_sql(a: str, b: str, dim: int) -> str:
-    return (
-        f"list_sum(list_transform(range(1, {dim + 1}), i -> {a}[i] * {b}[i]))"
-        f" / ( sqrt(list_sum(list_transform(range(1, {dim + 1}), i -> {a}[i] * {a}[i])))"
-        f"   * sqrt(list_sum(list_transform(range(1, {dim + 1}), i -> {b}[i] * {b}[i]))) )"
-    )
-
-
 def _q110_oracle() -> str:
-    from sparkextract.queries.ann import _DIM
-
     return f"""
     WITH corpus AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -1329,14 +1319,14 @@ def _q110_oracle() -> str:
       FROM corpus c, cents ct
       QUALIFY ROW_NUMBER() OVER (
         PARTITION BY c.vec_id
-        ORDER BY ROUND({_cos_pair_sql('c.e', 'ct.cv', _DIM)}, 6) DESC,
+        ORDER BY ROUND({_cos_pair_sql('c.e', 'ct.cv')}, 6) DESC,
                  ct.cent_id ASC) = 1
     ),
     dups AS (
       SELECT DISTINCT b.vec_id
       FROM assign a JOIN assign b
         ON a.cell = b.cell AND a.vec_id < b.vec_id
-      WHERE ROUND({_cos_pair_sql('a.e', 'b.e', _DIM)}, 6) >= {_Q110_THRESHOLD}
+      WHERE ROUND({_cos_pair_sql('a.e', 'b.e')}, 6) >= {_Q110_THRESHOLD}
     )
     SELECT a.cell, COUNT(*) AS n_members, COUNT(d.vec_id) AS n_dups,
            COUNT(*) - COUNT(d.vec_id) AS n_survivors

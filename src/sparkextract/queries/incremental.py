@@ -26,6 +26,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from sparkextract.queries.ann import _cos_pair_sql
 from sparkextract.queries.base import (
     checkpoint_memo,
     load,
@@ -33,7 +34,6 @@ from sparkextract.queries.base import (
     md5_bucket_sql,
     register,
 )
-from sparkextract.queries.dedup import _cos_pair_sql
 from sparkextract.queries.extraction import ocr_sql
 
 
@@ -502,7 +502,6 @@ def snapshot_token_drift(spark, sf_dir):
 # cells).
 def _incremental_ivf_oracle() -> str:
     from sparkextract.queries.base import md5_bucket_sql
-    from sparkextract.queries.ann import _DIM
 
     return f"""
     WITH e AS (
@@ -527,7 +526,7 @@ def _incremental_ivf_oracle() -> str:
       WHERE s.status <> 'unchanged'
       QUALIFY ROW_NUMBER() OVER (
         PARTITION BY s.vec_id
-        ORDER BY ROUND({_cos_pair_sql('s.ev', 'ct.cv', _DIM)}, 6) DESC,
+        ORDER BY ROUND({_cos_pair_sql('s.ev', 'ct.cv')}, 6) DESC,
                  ct.cent_id ASC) = 1
     )
     SELECT s.vec_id, s.status,

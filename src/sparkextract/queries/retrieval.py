@@ -61,7 +61,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 from pyspark.sql.window import Window as W
 
-from sparkextract.queries.ann import _DIM, _dot, _norm
+from sparkextract.queries.ann import _cos_pair_sql, _dot, _norm
 from sparkextract.queries.base import (
     checkpoint_memo,
     load,
@@ -857,14 +857,7 @@ def _cos_u(a, b):
 
 
 def _cos_u_sql(a: str, b: str) -> str:
-    rng = f"range(1, {_DIM + 1})"
-    return (
-        f"CAST(ROUND("
-        f"list_sum(list_transform({rng}, i -> {a}[i] * {b}[i]))"
-        f" / ( sqrt(list_sum(list_transform({rng}, i -> {a}[i] * {a}[i])))"
-        f"   * sqrt(list_sum(list_transform({rng}, i -> {b}[i] * {b}[i]))) )"
-        f" * 1000000) AS BIGINT)"
-    )
+    return f"CAST(ROUND({_cos_pair_sql(a, b)} * 1000000) AS BIGINT)"
 
 
 def _q128_oracle() -> str:

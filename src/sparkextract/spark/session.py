@@ -124,7 +124,8 @@ def get_spark(
         master = f"local[{cpus}]" if cpus else "local[*]"
     ncores = os.cpu_count() or 8
     if master and master.startswith("local["):
-        inner = master[6:-1]
+        # local[N] or local[N,maxFailures]
+        inner = master[6:-1].split(",")[0]
         if inner != "*":
             ncores = int(inner)
 
@@ -139,9 +140,6 @@ def get_spark(
         builder = builder.config("spark.python.daemon.module", "sparkextract.spark.worker_daemon")
     builder = (
         builder.config("spark.sql.shuffle.partitions", str(max(ncores * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")

@@ -1,12 +1,16 @@
 """Every query module imports on its own in a fresh interpreter, so no
 import cycle hides behind the order in which another module loads them;
 every reference-file citation in the package names a file the survey
-cites; and no query module keeps a top-level name that nothing reaches."""
+cites; no query module keeps a top-level name that nothing reaches; the
+registry and its driver view stay within their caps; the checkpoint
+memo misses after an input rewrite; and the tests share one Spark
+fixture and one ``SF_DIR``."""
 
 import ast
 import os
 import pkgutil
 import re
+import shutil
 import subprocess
 import sys
 
@@ -14,6 +18,7 @@ import pytest
 
 import sparkextract
 import sparkextract.queries
+from conftest import write_docs
 
 SRC = os.path.dirname(os.path.dirname(os.path.abspath(sparkextract.__file__)))
 REPO = os.path.dirname(SRC)
@@ -191,3 +196,77 @@ def test_query_code_is_reachable():
             todo.extend(resolve(key[0], defs[key]))
     dead = sorted(f"{m}.{n}" for m, n in set(defs) - seen)
     assert not dead, f"query code that no root reaches: {dead}"
+
+
+def test_one_spark_fixture_and_one_sf_dir():
+    """Only conftest.py defines the ``spark`` fixture or assigns ``SF_DIR``,
+    so every test file shares one session and one test corpus."""
+    tests_dir = os.path.join(REPO, "tests")
+    extra = []
+    for name in sorted(os.listdir(tests_dir)):
+        if not name.endswith(".py") or name == "conftest.py":
+            continue
+        with open(os.path.join(tests_dir, name)) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "spark" and any(
+                    "fixture" in ast.unparse(d) for d in node.decorator_list):
+                extra.append(f"{name}: spark fixture")
+            targets = node.targets if isinstance(node, ast.Assign) else (
+                [node.target] if isinstance(node, (ast.AnnAssign, ast.AugAssign)) else [])
+            if any(isinstance(t, ast.Name) and t.id == "SF_DIR" for t in targets):
+                extra.append(f"{name}: SF_DIR")
+    assert not extra, extra
+
+
+def test_checkpoint_memo_invalidates_on_rewrite(spark, tmp_path):
+    """Rewriting the parquet under the same dir in one session must MISS
+    the memo (input_token keys on file size/mtime), not serve stale
+    checkpointed data."""
+    from sparkextract.queries.base import checkpoint_memo, load
+
+    root = str(tmp_path / "memo")
+    write_docs(spark, [(1, "alpha", 0)], root)
+    build = lambda: load(spark, root, "documents").select("doc_id", "text")
+    first = checkpoint_memo(spark, root, "t", build).collect()
+    assert [r["text"] for r in first] == ["alpha"]
+    shutil.rmtree(os.path.join(root, "documents.parquet"))
+    write_docs(spark, [(1, "beta", 0)], root)
+    second = checkpoint_memo(spark, root, "t", build).collect()
+    assert [r["text"] for r in second] == ["beta"]
+
+
+def test_driver_view_fits_cap_and_covers_registry():
+    # the driver contract records at most 50 queries() entries: the
+    # exported view must leave at least 12 free slots, keep 1:1 oracles,
+    # and account for every fine-grained query directly or via a panel
+    from sparkextract.queries.panels import PANEL_SPECS, PANELED
+    from sparkextract.queries.registry import SPARK_QUERIES, driver_queries
+
+    sq, osql = driver_queries()
+    assert len(sq) <= 38
+    # the catalogue only shrinks: each cut stage lowers this bound
+    assert len(SPARK_QUERIES) <= 95
+    assert set(osql) == set(sq)
+    exported = set(sq)
+    for name in SPARK_QUERIES:
+        assert name in exported or name in PANELED, name
+    for pname, (cols, parts) in PANEL_SPECS.items():
+        tags = [t for t, _, _ in parts]
+        assert len(set(tags)) == len(tags), pname
+        colnames = {c for c, _ in cols}
+        for _tag, fine, mapping in parts:
+            assert fine in SPARK_QUERIES, fine
+            assert set(mapping) <= colnames, (pname, fine)
+
+
+def test_wave3_registered_with_oracles():
+    from sparkextract.queries.registry import ORACLE_SQL, SPARK_QUERIES
+
+    for name in (
+        "q44_media_featurize",
+        "q45_media_dedup",
+        "q46_ivf_topk",
+        "q47_retrieval_filters",
+    ):
+        assert name in SPARK_QUERIES and name in ORACLE_SQL

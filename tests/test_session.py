@@ -1,10 +1,12 @@
 """get_spark's worker import path: the daemon's sys.path rewrite, the guard
-that decides when workers can use it (no Spark), and spark-submit's
---master surviving get_spark (slow)."""
+that decides when workers can use it (no Spark), the core count it reads
+from a local master (no Spark), and spark-submit's --master surviving
+get_spark (slow)."""
 
 import os
 import shutil
 import subprocess
+import types
 import zipfile
 
 import pytest
@@ -98,6 +100,42 @@ def test_guard_off_on_a_live_gateway(fresh_launch):
 def test_guard_off_when_pythonpath_lacks_src(fresh_launch):
     fresh_launch.setenv("PYTHONPATH", "/elsewhere")
     assert not session._workers_import_src("local[4]")
+
+
+class _Built(Exception):
+    pass
+
+
+class _Builder:
+    """Records what get_spark configures and stops before a JVM starts."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def appName(self, name):
+        return self
+
+    def master(self, master):
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        raise _Built
+
+
+# cores None: the machine's, for local[*,F]
+@pytest.mark.parametrize("master, cores", [("local[6]", 6), ("local[6,2]", 6), ("local[*,3]", None)])
+def test_get_spark_takes_cores_from_local_master(monkeypatch, master, cores):
+    cores = cores or os.cpu_count()
+    builder = _Builder()
+    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=builder))
+    monkeypatch.setenv("PYTHONPATH", SRC)
+    with pytest.raises(_Built):
+        session.get_spark(master=master)
+    assert builder.conf["spark.sql.shuffle.partitions"] == str(max(cores * 2, 8))
 
 
 @pytest.mark.slow
