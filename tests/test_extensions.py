@@ -1,16 +1,7 @@
 """Tests for the extension modules: multimodal plumbing, streaming
 incremental ingest, confidence metrics."""
 
-import pytest
 from pyspark.sql import functions as F
-
-from sparkextract.spark.session import get_spark
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = get_spark("sparkextract-ext-tests", master="local[4]")
-    yield s
 
 
 # ------------------------------------------------------------- multimodal

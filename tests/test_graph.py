@@ -1,41 +1,9 @@
-"""Tests for the graph query family (``queries/graph.py``): label
-propagation on long chains and PageRank invariants."""
+"""Tests for the graph query family (``queries/graph.py``): PageRank
+invariants."""
 
 import os
 
-import pytest
-
 from conftest import SF_DIR
-
-
-def test_label_propagation_long_chain(spark):
-    """A 25-node path graph (diameter 24) must converge to one component
-    within the iteration bound — the pathological-chain guard."""
-    from sparkextract.queries.graph import label_propagation
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(24)], "left_id long, right_id long"
-    )
-    labels = label_propagation(pairs)
-    got = {r["lbl"] for r in labels.collect()}
-    assert got == {0}
-    assert labels.count() == 25
-
-
-def test_label_propagation_bound_raises(spark):
-    """A chain longer than the 30-iteration bound can cover must fail
-    loudly, never silently return partial labels, and must not leave its
-    persisted edges behind in the session's cache."""
-    from sparkextract.queries.graph import label_propagation
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(80)], "left_id long, right_id long"
-    )
-    cache = spark._jsparkSession.sharedState().cacheManager()
-    before = cache.numCachedEntries()
-    with pytest.raises(RuntimeError, match="did not converge"):
-        label_propagation(pairs)
-    assert cache.numCachedEntries() <= before
 
 
 def test_q119_pagerank_invariants(spark):

@@ -4,98 +4,9 @@ parquet, next to the Spark plan and the DuckDB oracle."""
 
 import hashlib
 import math
-import os
 from collections import Counter
 
 from conftest import SF_DIR, py_md5_bucket, read_docs
-
-
-def test_q130_entropy_matches_python(spark):
-    """Independent per-doc Shannon entropy (direct -sum p ln p form,
-    NOT the ln(n) - S/n identity the query uses) over the raw parquet."""
-    import math
-    from collections import Counter
-
-    import pyarrow.parquet as pq
-
-    from sparkextract.queries.quality import _Q130_LOW_ENTROPY, q130_token_entropy
-
-    t = pq.read_table(os.path.join(SF_DIR, "documents.parquet"))
-    expected = {}
-    for doc_id, text in zip(
-        t.column("doc_id").to_pylist(), t.column("text").to_pylist()
-    ):
-        toks = [w for w in text.split(" ") if w != ""]
-        if not toks:
-            continue
-        counts = Counter(toks)
-        n = len(toks)
-        h = -sum((c / n) * math.log(c / n) for c in counts.values())
-        expected[doc_id] = (n, len(counts), h)
-
-    rows = q130_token_entropy(spark, SF_DIR).collect()
-    assert len(rows) == len(expected)
-    for r in rows:
-        n, types, h = expected[r["doc_id"]]
-        assert r["n_tokens"] == n and r["n_types"] == types
-        # query freezes per-term decimals at 1e-9 and the result at 1e-6;
-        # the direct-form float sum differs by at most the frozen grain
-        assert abs(r["entropy"] - h) < 1e-5
-        assert r["keep"] == (r["entropy"] >= _Q130_LOW_ENTROPY)
-        # entropy is bounded by ln(n_types) (uniform) and >= 0
-        assert -1e-9 <= r["entropy"] <= math.log(max(types, 2)) + 1e-6
-
-
-def test_q132_mapping_is_real_mojibake():
-    """The simulated byte mapping IS the actual utf-8-read-as-latin-1
-    round trip, and the repair rule is its exact inverse."""
-    from sparkextract.queries.quality import _Q132_MAP
-
-    for plain, intended, mojibake in _Q132_MAP:
-        assert intended.encode("utf-8").decode("latin-1") == mojibake
-        assert mojibake.encode("latin-1").decode("utf-8") == intended
-        assert plain not in mojibake
-
-
-def test_q132_repair_roundtrip(spark):
-    """Every doc round-trips; exactly the md5-bucket docs are flagged,
-    with n_bad_seqs equal to their (a+e) occurrence count."""
-    import hashlib
-
-    import pyarrow.parquet as pq
-
-    from sparkextract.queries.quality import (
-        _Q132_BAD_BUCKET,
-        _Q132_BUCKETS,
-        q132_encoding_repair,
-    )
-
-    t = pq.read_table(os.path.join(SF_DIR, "documents.parquet"))
-    docs = dict(
-        zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist())
-    )
-    rows = q132_encoding_repair(spark, SF_DIR).collect()
-    assert len(rows) == len(docs)
-    flagged = 0
-    for r in rows:
-        text = docs[r["doc_id"]]
-        bucket = (
-            int(hashlib.md5(str(r["doc_id"]).encode()).hexdigest()[:8], 16)
-            % _Q132_BUCKETS
-        )
-        is_bad = bucket == _Q132_BAD_BUCKET
-        assert r["roundtrip_ok"] is True
-        assert r["was_mojibake"] == is_bad
-        exp_bad = (text.count("a") + text.count("e")) if is_bad else 0
-        assert r["n_bad_seqs"] == exp_bad
-        if is_bad:
-            flagged += 1
-            intended = text.replace("a", "á").replace("e", "é")
-            assert (
-                r["repaired_md5"]
-                == hashlib.md5(intended.encode("utf-8")).hexdigest()
-            )
-    assert flagged > 0
 
 
 def _py_logit(text):

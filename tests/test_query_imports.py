@@ -1,16 +1,13 @@
 """Every query module imports on its own in a fresh interpreter, so no
 import cycle hides behind the order in which another module loads them;
 every reference-file citation in the package names a file the survey
-cites; no query module keeps a top-level name that nothing reaches; the
-registry and its driver view stay within their caps; the checkpoint
-memo misses after an input rewrite; and the tests share one Spark
-fixture and one ``SF_DIR``."""
+cites; no query module keeps a top-level name that nothing reaches; and
+the tests share one Spark fixture and one ``SF_DIR``."""
 
 import ast
 import os
 import pkgutil
 import re
-import shutil
 import subprocess
 import sys
 
@@ -18,7 +15,6 @@ import pytest
 
 import sparkextract
 import sparkextract.queries
-from conftest import write_docs
 
 SRC = os.path.dirname(os.path.dirname(os.path.abspath(sparkextract.__file__)))
 REPO = os.path.dirname(SRC)
@@ -217,56 +213,3 @@ def test_one_spark_fixture_and_one_sf_dir():
             if any(isinstance(t, ast.Name) and t.id == "SF_DIR" for t in targets):
                 extra.append(f"{name}: SF_DIR")
     assert not extra, extra
-
-
-def test_checkpoint_memo_invalidates_on_rewrite(spark, tmp_path):
-    """Rewriting the parquet under the same dir in one session must MISS
-    the memo (input_token keys on file size/mtime), not serve stale
-    checkpointed data."""
-    from sparkextract.queries.base import checkpoint_memo, load
-
-    root = str(tmp_path / "memo")
-    write_docs(spark, [(1, "alpha", 0)], root)
-    build = lambda: load(spark, root, "documents").select("doc_id", "text")
-    first = checkpoint_memo(spark, root, "t", build).collect()
-    assert [r["text"] for r in first] == ["alpha"]
-    shutil.rmtree(os.path.join(root, "documents.parquet"))
-    write_docs(spark, [(1, "beta", 0)], root)
-    second = checkpoint_memo(spark, root, "t", build).collect()
-    assert [r["text"] for r in second] == ["beta"]
-
-
-def test_driver_view_fits_cap_and_covers_registry():
-    # the driver contract records at most 50 queries() entries: the
-    # exported view must leave at least 12 free slots, keep 1:1 oracles,
-    # and account for every fine-grained query directly or via a panel
-    from sparkextract.queries.panels import PANEL_SPECS, PANELED
-    from sparkextract.queries.registry import SPARK_QUERIES, driver_queries
-
-    sq, osql = driver_queries()
-    assert len(sq) <= 38
-    # the catalogue only shrinks: each cut stage lowers this bound
-    assert len(SPARK_QUERIES) <= 95
-    assert set(osql) == set(sq)
-    exported = set(sq)
-    for name in SPARK_QUERIES:
-        assert name in exported or name in PANELED, name
-    for pname, (cols, parts) in PANEL_SPECS.items():
-        tags = [t for t, _, _ in parts]
-        assert len(set(tags)) == len(tags), pname
-        colnames = {c for c, _ in cols}
-        for _tag, fine, mapping in parts:
-            assert fine in SPARK_QUERIES, fine
-            assert set(mapping) <= colnames, (pname, fine)
-
-
-def test_wave3_registered_with_oracles():
-    from sparkextract.queries.registry import ORACLE_SQL, SPARK_QUERIES
-
-    for name in (
-        "q44_media_featurize",
-        "q45_media_dedup",
-        "q46_ivf_topk",
-        "q47_retrieval_filters",
-    ):
-        assert name in SPARK_QUERIES and name in ORACLE_SQL

@@ -7,18 +7,9 @@ corpus and on tiny synthetic frames."""
 import os
 import time
 
-import pytest
 from pyspark.sql import functions as F
 
-from sparkextract.spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = get_spark("sparkextract-r4-tests", master="local[4]")
-    yield s
+from conftest import SF_DIR
 
 
 def test_kgram_hashes_short_doc_and_overlap(spark):

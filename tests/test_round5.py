@@ -10,21 +10,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from sparkextract.spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = get_spark("sparkextract-r5-tests", master="local[4]")
-    yield s
-
-
-def _write_docs(spark, rows, path):
-    spark.createDataFrame(rows, "doc_id long, text string, n_chars long").coalesce(
-        1
-    ).write.mode("overwrite").parquet(os.path.join(path, "documents.parquet"))
+from conftest import SF_DIR, write_docs
 
 
 def test_q96_hot_block_corpus(spark, tmp_path):
@@ -41,7 +27,7 @@ def test_q96_hot_block_corpus(spark, tmp_path):
         # every doc: [hot block][unique block] -> hot is 50% of all blocks
         rows.append((d, f"{hot} {uniq}", 0))
     root = str(tmp_path / "hot96")
-    _write_docs(spark, rows, root)
+    write_docs(spark, rows, root)
     out = {r["doc_id"]: r for r in q96_block_dedup(spark, root).collect()}
     assert len(out) == 40
     # doc 0 keeps both blocks; every other doc keeps only its unique block
@@ -65,7 +51,7 @@ def test_q99_hot_window_corpus(spark, tmp_path):
         tail = " ".join(f"d{d}t{i}" for i in range(_Q99_K))
         rows.append((d, f"{boiler} {tail}", 0))
     root = str(tmp_path / "hot99")
-    _write_docs(spark, rows, root)
+    write_docs(spark, rows, root)
     out = {r["doc_id"]: r for r in q99_exact_substring_dedup(spark, root).collect()}
     assert out[0]["n_windows"] == 1 and out[0]["dup_frac"] == 1.0
     assert out[0]["flagged"]
@@ -85,12 +71,12 @@ def test_checkpoint_memo_invalidates_on_rewrite(spark, tmp_path):
     from sparkextract.queries.base import checkpoint_memo, load
 
     root = str(tmp_path / "memo")
-    _write_docs(spark, [(1, "alpha", 0)], root)
+    write_docs(spark, [(1, "alpha", 0)], root)
     build = lambda: load(spark, root, "documents").select("doc_id", "text")
     first = checkpoint_memo(spark, root, "t", build).collect()
     assert [r["text"] for r in first] == ["alpha"]
     shutil.rmtree(os.path.join(root, "documents.parquet"))
-    _write_docs(spark, [(1, "beta", 0)], root)
+    write_docs(spark, [(1, "beta", 0)], root)
     second = checkpoint_memo(spark, root, "t", build).collect()
     assert [r["text"] for r in second] == ["beta"]
 

@@ -7,17 +7,8 @@ semantics themselves)."""
 import os
 
 import numpy as np
-import pytest
 
-from sparkextract.spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = get_spark("sparkextract-r5c-tests", master="local[4]")
-    yield s
+from conftest import SF_DIR
 
 
 def _numpy_mmr(sf_dir):

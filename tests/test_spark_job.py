@@ -1,8 +1,7 @@
 """End-to-end Spark tests (SURVEY.md §5.2): span-sequence equality vs the
 pure-pandas oracle, doc runs across Arrow batches, partitioning
-invariance, plan shape, checkpoint/resume idempotency and the
-fail_after_buckets crash rule, the debug sinks and span filters of
-``spark/io.py`` and its JSONL/ORC sources, and the Excel summary sink."""
+invariance, plan shape, checkpoint/resume idempotency, and the debug
+sinks and span filters of ``spark/io.py``."""
 
 import os
 
@@ -539,7 +538,6 @@ def test_each_bucket_in_one_file_of_its_epoch(spark, docs, tmp_path):
     assert from_crashed and all(in_bucket[d] < 3 for d in from_crashed)
 
 
-
 @pytest.mark.skipif(
     not os.path.isfile(os.path.join(_find_spark_home(), "python", "pyspark", "__init__.py")),
     reason="no unzipped pyspark under $SPARK_HOME/python",
@@ -570,115 +568,3 @@ def test_workers_import_pyspark_unzipped(spark):
         assert os.path.isfile(r["pyspark"]), r["pyspark"]
         assert not [a for a in r["archives"] if a.endswith((".jar", "pyspark.zip"))], r["archives"]
         assert r["extract"].endswith(os.path.join("sparkextract.zip", "sparkextract", "core", "extract.py"))
-
-
-def test_fail_after_buckets_is_bucket_id_rule(spark, tmp_path):
-    """fail_after_buckets commits exactly the buckets with id < N —
-    deterministic on the bucket ID, independent of which buckets happen
-    to be populated (round-4 ADVICE: the oracle derives run_seq from
-    this rule)."""
-    from sparkextract.schema import DOC_SCHEMA
-    from sparkextract.spark.manifest import read_manifest, run_extraction_job
-
-    docs = spark.createDataFrame(
-        [(f"d{i}", [{"kind": "text", "text": "x" * 120, "media_ref": None, "offset": 0}])
-         for i in range(64)],
-        schema=DOC_SCHEMA,
-    )
-    root = str(tmp_path / "failrule")
-    run_extraction_job(spark, docs, root, run_id="r1", num_buckets=8,
-                       fail_after_buckets=3)
-    m = read_manifest(spark, root).filter(F.col("status") == "done")
-    got = sorted(r["doc_id_bucket"] for r in m.collect())
-    assert all(b < 3 for b in got)
-
-
-def test_excel_summary_sink_roundtrip(spark, tmp_path):
-    """S4: the stdlib xlsx writer produces a valid workbook whose sheets
-    and cell values round-trip through stdlib zip+XML parsing (no Excel
-    library exists in this environment, which is exactly why the writer
-    is stdlib-only)."""
-    import xml.etree.ElementTree as ET
-    import zipfile
-
-    from sparkextract.spark.excel import save_tables_to_excel
-
-    t1 = spark.createDataFrame(
-        [("text", 42, 0.5), ("table", 7, 1.25)], "kind string, n int, score double"
-    )
-    t2 = spark.createDataFrame([("a/b" * 20, None)], "name string, v string")
-    path = str(tmp_path / "summary.xlsx")
-    save_tables_to_excel([t1, t2], path, sheet_names=["kind stats", "weird/name" * 9])
-
-    ns = {"m": "http://schemas.openxmlformats.org/spreadsheetml/2006/main"}
-    with zipfile.ZipFile(path) as z:
-        wb = ET.fromstring(z.read("xl/workbook.xml"))
-        names = [s.attrib["name"] for s in wb.findall(".//m:sheet", ns)]
-        assert names[0] == "kind stats"
-        assert len(names[1]) == 31 and "/" not in names[1]  # Excel limits
-
-        sheet1 = ET.fromstring(z.read("xl/worksheets/sheet1.xml"))
-        rows = sheet1.findall(".//m:row", ns)
-        assert len(rows) == 3  # header + 2 data rows
-
-        def cellvals(row):
-            out = []
-            for c in row.findall("m:c", ns):
-                t = c.find(".//m:t", ns)
-                v = c.find("m:v", ns)
-                out.append(t.text if t is not None else (v.text if v is not None else None))
-            return out
-
-        assert cellvals(rows[0]) == ["kind", "n", "score"]
-        assert cellvals(rows[1]) == ["text", "42", "0.5"]
-        assert cellvals(rows[2]) == ["table", "7", "1.25"]
-
-    # the guard: data-scale frames are rejected
-    import pytest as _pytest
-
-    big = spark.range(0, 50).select("id")
-    with _pytest.raises(ValueError):
-        save_tables_to_excel([big], str(tmp_path / "big.xlsx"), max_rows=10)
-
-    # review-found hardening: quotes in sheet names must stay well-formed,
-    # NaN cells must not emit numeric <v>nan</v>, empty list is rejected,
-    # duplicate (post-truncation) names are disambiguated
-    nasty = str(tmp_path / "nasty.xlsx")
-    nan_df = spark.createDataFrame([(float("nan"), 1.5)], "a double, b double")
-    save_tables_to_excel(
-        [nan_df, nan_df], nasty, sheet_names=['Q1 "draft" stats', 'Q1 "draft" stats']
-    )
-    with zipfile.ZipFile(nasty) as z:
-        wb = ET.fromstring(z.read("xl/workbook.xml"))  # parses -> well-formed
-        names = [sh.attrib["name"] for sh in wb.findall(".//m:sheet", ns)]
-        assert names[0] == 'Q1 "draft" stats' and names[0] != names[1]
-        s1 = z.read("xl/worksheets/sheet1.xml").decode()
-        assert "<v>nan</v>" not in s1 and "<v>1.5</v>" in s1
-        ET.fromstring(s1)
-    with _pytest.raises(ValueError):
-        save_tables_to_excel([], str(tmp_path / "none.xlsx"))
-
-
-def test_alternate_document_sources_roundtrip(spark, tmp_path):
-    """S1 alternates: the same pinned-schema document table reads back
-    identically from JSONL and ORC, and extraction over them matches the
-    parquet path byte-for-byte."""
-    from sparkextract.spark.io import read_documents, read_documents_jsonl, read_documents_orc
-    from sparkextract.spark.job import extract_exploded
-    from sparkextract.spark.datagen import corpus_df
-
-    docs = corpus_df(spark, 40, seed=7)
-    pq, jl, oc = (str(tmp_path / n) for n in ("pq", "jl", "oc"))
-    docs.write.parquet(pq)
-    docs.write.json(jl)
-    docs.write.orc(oc)
-
-    def spans(df):
-        return sorted(
-            tuple(r) for r in extract_exploded(df).collect()
-        )
-
-    base = spans(read_documents(spark, pq))
-    assert len(base) > 50
-    assert spans(read_documents_jsonl(spark, jl)) == base
-    assert spans(read_documents_orc(spark, oc)) == base

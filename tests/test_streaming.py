@@ -1,8 +1,7 @@
 """Structured Streaming operators: watermarked windowed aggregation and
-applyInPandasWithState first-writer-wins dedup (streaming/stateful.py),
-and file-granular incremental extraction (streaming/incremental.py).
+applyInPandasWithState first-writer-wins dedup (streaming/stateful.py).
 
-The tests drain bounded file streams with Trigger.AvailableNow so the
+Both tests drain bounded file streams with Trigger.AvailableNow so the
 assertions are deterministic: the windowed agg is compared against the
 identical batch plan (append mode must emit exactly the windows the
 final watermark finalized), and the stateful dedup is driven through a
@@ -168,35 +167,3 @@ def test_streaming_dedup_keeper_is_numeric_min(spark, tmp_path):
     q.awaitTermination(300)
     rows = spark.read.parquet(out).collect()
     assert [r["doc_id"] for r in rows] == ["9"]
-
-
-def test_incremental_extract_resume(spark, tmp_path):
-    """File-granular exactly-once: run AvailableNow twice, second batch of
-    files is processed exactly once, first is never re-extracted."""
-    from sparkextract.spark.datagen import corpus_df
-    from sparkextract.streaming.incremental import incremental_extract
-
-    inp = str(tmp_path / "in")
-    outp = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    corpus_df(spark, 30, seed=42, partitions=2).write.mode("append").parquet(inp)
-    q = incremental_extract(spark, inp, outp, ckpt)
-    q.awaitTermination(120)
-    n1 = spark.read.parquet(outp).count()
-    assert n1 > 0
-
-    # new files arrive
-    corpus_df(spark, 30, seed=43, partitions=2).write.mode("append").parquet(inp)
-    q = incremental_extract(spark, inp, outp, ckpt)
-    q.awaitTermination(120)
-    out = spark.read.parquet(outp)
-    n2 = out.count()
-    assert n2 > n1
-    # no doc extracted twice: (doc_id, offset) unique
-    assert out.groupBy("doc_id", "offset").count().filter(F.col("count") > 1).count() == 0
-
-    # third run with nothing new: output unchanged
-    q = incremental_extract(spark, inp, outp, ckpt)
-    q.awaitTermination(120)
-    assert spark.read.parquet(outp).count() == n2
