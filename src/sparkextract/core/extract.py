@@ -151,12 +151,16 @@ def finalize(items: Iterable[Item]) -> list[OutSpan]:
         # (text, media_ref) tie-break makes the result a pure function of
         # the item MULTISET even for malformed duplicate-offset inputs —
         # required because the Spark path feeds items in the exploded
-        # array's order, not sorted by offset (job.py _extract_runs)
+        # array's order, not sorted by offset (job.py _extract_runs).
+        # NULL sorts before '' so that two items differing only there
+        # never tie.
         key=lambda it: (
             config.KIND_RANK[it[0]],
             it[3],
             it[4],
+            it[1] is not None,
             it[1] or "",
+            it[2] is not None,
             it[2] or "",
         ),
     )
@@ -175,29 +179,21 @@ def finalize(items: Iterable[Item]) -> list[OutSpan]:
 def extract_document(spans: Iterable[Mapping] | None) -> list[Span]:
     """Oracle entry point: raw input span array -> ordered output spans.
 
-    Input spans are processed in their source ``offset`` order; a missing
-    or null array yields an empty output, and null elements are skipped
-    (the Spark path drops them too). Duplicate offsets (malformed
-    input) tie-break on (kind, text, media_ref) so the output is a pure
-    function of the span *set* — never of the physical list order, which
-    the Spark path does not sort.
+    A missing or null array yields an empty output, and null elements are
+    skipped (the Spark path drops them too); a null ``offset`` counts as
+    0. The spans go through ``extract_run`` in array order, as on the
+    Spark path; the output does not depend on that order, because
+    ``finalize`` is a pure function of the item multiset (duplicate
+    offsets, which only malformed input has, included).
     """
     if spans is None:
         return []
-    ordered_in = sorted(
-        (dict(s) for s in spans if s is not None),
-        key=lambda s: (
-            s.get("offset") if s.get("offset") is not None else 0,
-            s.get("kind") or "",
-            s.get("text") or "",
-            s.get("media_ref") or "",
-        ),
-    )
+    spans = [s for s in spans if s is not None]
     items = extract_run(
-        [s.get("kind") for s in ordered_in],
-        [s.get("text") for s in ordered_in],
-        [s.get("media_ref") for s in ordered_in],
-        [int(s["offset"]) if s.get("offset") is not None else 0 for s in ordered_in],
+        [s.get("kind") for s in spans],
+        [s.get("text") for s in spans],
+        [s.get("media_ref") for s in spans],
+        [int(s["offset"]) if s.get("offset") is not None else 0 for s in spans],
     )
     return [
         {"kind": kind, "text": text, "media_ref": media_ref, "offset": offset}

@@ -11,18 +11,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sparkextract.queries.base import ORACLE_SQL, SPARK_QUERIES, load, register
+from sparkextract.queries.base import load, register
 
 
 _DIM = 64
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _norm(a):
@@ -31,63 +23,81 @@ def _norm(a):
     )
 
 
-def _cos_pair_sql(a: str, b: str) -> str:
-    """DuckDB cosine between two DOUBLE[] vectors, element order fixed."""
-    rng = f"range(1, {_DIM + 1})"
-    return (
-        f"list_sum(list_transform({rng}, i -> {a}[i] * {b}[i]))"
-        f" / ( sqrt(list_sum(list_transform({rng}, i -> {a}[i] * {a}[i])))"
-        f"   * sqrt(list_sum(list_transform({rng}, i -> {b}[i] * {b}[i]))) )"
+def _cos(a, b):
+    """Cosine of two numeric arrays, each fold in element order."""
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
     )
+    return dot / (_norm(a) * _norm(b))
+
+
+def _norm_sql(v: str) -> str:
+    """DuckDB twin of :func:`_norm`."""
+    return (
+        f"sqrt(list_sum(list_transform(range(1, {_DIM + 1}),"
+        f" i -> CAST({v}[i] AS DOUBLE) * CAST({v}[i] AS DOUBLE))))"
+    )
+
+
+def _cos_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`_cos` over FLOAT[] or DOUBLE[] vectors (the
+    element cast changes nothing on DOUBLE), element order fixed."""
+    dot = (
+        f"list_sum(list_transform(range(1, {_DIM + 1}),"
+        f" i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
+    )
+    return f"({dot} / ({_norm_sql(a)} * {_norm_sql(b)}))"
 
 
 # --------------------------------------------------------------------------
 # T1/J3: brute-force cosine top-k against the vec_id=0 query vector.
 # Scale path: broadcast the query vector (a 1-row dim-64 array), score every
 # row map-side, TakeOrderedAndProject for the global top-k — no shuffle of
-# the embedding table.
-@register(
-    "q27_cosine_topk",
-    oracle=f"""
-    WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id, label,
-           ROUND(
-             list_sum(list_transform(range(1, {_DIM + 1}), i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))
-             / ( sqrt(list_sum(list_transform(range(1, {_DIM + 1}), i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))))
-               * sqrt(list_sum(list_transform(range(1, {_DIM + 1}), i -> CAST(q.qv[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))) ),
-             6) AS cosine
-    FROM embeddings e, q
-    WHERE vec_id != 0
-    ORDER BY cosine DESC, vec_id ASC
-    LIMIT 10
-    """,
-)
-def q27_cosine_topk(spark, sf_dir):
+# the embedding table. q55 and q58 rerank these same ten candidates.
+def _cos_top10(spark, sf_dir, *cols):
+    """(vec_id, *cols, cosine) of the ten vectors nearest vec_id 0."""
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    scored = (
+    return (
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            "label",
-            F.round(
-                _dot(F.col("embedding"), F.col("qv"))
-                / (_norm(F.col("embedding")) * _norm(F.col("qv"))),
-                6,
-            ).alias("cosine"),
+            *cols,
+            F.round(_cos(F.col("embedding"), F.col("qv")), 6).alias("cosine"),
         )
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
+        .limit(10)
     )
-    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(10)
+
+
+def _cos_top10_sql(*cols) -> str:
+    """DuckDB twin of :func:`_cos_top10`."""
+    return f"""
+    SELECT {", ".join(f"e.{c}" for c in ("vec_id", *cols))},
+           ROUND({_cos_sql("e.embedding", "q.qv")}, 6) AS cosine
+    FROM embeddings e,
+         (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0) q
+    WHERE e.vec_id != 0
+    ORDER BY cosine DESC, e.vec_id ASC
+    LIMIT 10
+    """
+
+
+@register("q27_cosine_topk", oracle=_cos_top10_sql("label"))
+def q27_cosine_topk(spark, sf_dir):
+    return _cos_top10(spark, sf_dir, "label")
 
 
 # --------------------------------------------------------------------------
 # LSH-bucketed ANN candidate generation: sign of the projection onto 4
 # deterministic pseudo-random hyperplanes → 4-bit bucket; report bucket
 # occupancy. The scale path for similarity search: equi-join on bucket
-# instead of a cross join. Hyperplane components are ±1 derived from md5
-# parity (NOT each engine's hash() builtin, which differs between Spark
-# and DuckDB), so both engines compute identical signs.
+# instead of a cross join (q34). Hyperplane components are ±1 derived
+# from md5 parity (NOT each engine's hash() builtin, which differs between
+# Spark and DuckDB), so both engines compute identical signs.
 def _plane_sign_sql(i_expr: str, plane: int) -> str:
     # parity of first hex digit of md5("<plane>:<i>") — engine-independent
     return (
@@ -96,63 +106,64 @@ def _plane_sign_sql(i_expr: str, plane: int) -> str:
     )
 
 
-_Q28_ORACLE = f"""
-SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_vectors,
-       CAST(MIN(vec_id) AS BIGINT) AS min_vec_id
-FROM (
-  SELECT vec_id, CAST(
-    {" + ".join(
+def _bucket_sql(emb: str) -> str:
+    """DuckDB twin of :func:`_bucket_col` over the vector column ``emb``."""
+    return " + ".join(
         f"(CASE WHEN list_sum(list_transform(range(1, {_DIM + 1}), "
-        f"i -> CAST(embedding[i] AS DOUBLE) * {_plane_sign_sql('i', p)})) >= 0 THEN {1 << (3 - p)} ELSE 0 END)"
+        f"i -> CAST({emb}[i] AS DOUBLE) * {_plane_sign_sql('i', p)})) >= 0 THEN {1 << (3 - p)} ELSE 0 END)"
         for p in range(4)
-    )}
-    AS INTEGER) AS bucket
-  FROM embeddings
-) GROUP BY bucket
-"""
+    )
 
 
-def _plane_signs_py(plane: int) -> list[float]:
-    # driver-side evaluation of the same md5-parity rule the oracle
-    # computes inline: hashlib md5 == engine md5, byte for byte, so the
-    # signs are a CONSTANT matrix — embedding it as one nested-array
-    # literal replaces 4x64 per-ROW md5 calls with zero (the hyperplane
-    # is a function of (plane, i) only; recomputing it per row is pure
-    # waste at any scale, and at 100 TB it is 256 hashes per vector)
+def _plane_signs(seed: str) -> list[float]:
+    """The ±1 components of hyperplane ``seed``: component i is +1 when
+    the first hex digit of md5("<seed>:<i>") is even. hashlib md5 ==
+    engine md5, byte for byte, so the Spark side embeds the signs as a
+    literal instead of hashing 64 times per plane per row (q28/q34 name
+    their planes "0".."3", q53 "b<band>p<plane>")."""
     import hashlib
 
     return [
-        1.0 if hashlib.md5(f"{plane}:{i}".encode()).hexdigest()[0] in "02468ace" else -1.0
+        1.0 if hashlib.md5(f"{seed}:{i}".encode()).hexdigest()[0] in "02468ace" else -1.0
         for i in range(1, _DIM + 1)
     ]
 
 
-def q28_lsh_buckets(spark, sf_dir):
-    emb = load(spark, sf_dir, "embeddings")
-
-    def plane_proj(p: int):
-        signs = F.lit(_plane_signs_py(p))
-        return F.aggregate(
-            F.zip_with(F.col("embedding"), signs, lambda x, s: x.cast("double") * s),
+def _bucket_col():
+    """4-bit LSH bucket of ``embedding``: bit 3-p is set when the
+    projection onto plane p is >= 0."""
+    bucket = F.lit(0)
+    for p in range(4):
+        proj = F.aggregate(
+            F.zip_with(
+                F.col("embedding"),
+                F.lit(_plane_signs(str(p))),
+                lambda x, s: x.cast("double") * s,
+            ),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
-
-    bucket = F.lit(0)
-    for p in range(4):
-        proj = plane_proj(p)
         bucket = bucket + F.when(proj >= 0, F.lit(1 << (3 - p))).otherwise(F.lit(0))
+    return bucket.cast("int")
+
+
+@register(
+    "q28_lsh_buckets",
+    oracle=f"""
+    SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_vectors,
+           CAST(MIN(vec_id) AS BIGINT) AS min_vec_id
+    FROM (SELECT vec_id, CAST({_bucket_sql("embedding")} AS INTEGER) AS bucket
+          FROM embeddings)
+    GROUP BY bucket
+    """,
+)
+def q28_lsh_buckets(spark, sf_dir):
     return (
-        emb.select("vec_id", bucket.cast("int").alias("bucket"))
+        load(spark, sf_dir, "embeddings")
+        .select("vec_id", _bucket_col().alias("bucket"))
         .groupBy("bucket")
         .agg(F.count("*").alias("n_vectors"), F.min("vec_id").alias("min_vec_id"))
     )
-
-
-SPARK_QUERIES["q28_lsh_buckets"] = q28_lsh_buckets
-
-
-ORACLE_SQL["q28_lsh_buckets"] = _Q28_ORACLE
 
 
 # --------------------------------------------------------------------------
@@ -162,8 +173,7 @@ ORACLE_SQL["q28_lsh_buckets"] = _Q28_ORACLE
     oracle=f"""
     SELECT label,
            CAST(COUNT(*) AS BIGINT) AS n_vectors,
-           CAST(SUM(CAST(ROUND(sqrt(list_sum(list_transform(range(1, {_DIM + 1}),
-                i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))), 6) AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_l2,
+           CAST(SUM(CAST(ROUND({_norm_sql("embedding")}, 6) AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_l2,
            CAST(SUM(LENGTH(list_filter(embedding, x -> x = 0))) AS BIGINT) AS n_zero_components
     FROM embeddings GROUP BY label
     """,
@@ -177,14 +187,6 @@ def q31_embedding_quality(spark, sf_dir):
         (F.sum(l2).cast("double") / F.count("*")).alias("avg_l2"),
         F.sum(zeros).alias("n_zero_components"),
     )
-
-
-def _cos_sql(vec: str, other: str) -> str:
-    """DuckDB cosine between two FLOAT[] columns, element order fixed."""
-    d = f"list_sum(list_transform(range(1, {_DIM + 1}), i -> CAST({vec}[i] AS DOUBLE) * CAST({other}[i] AS DOUBLE)))"
-    n1 = f"sqrt(list_sum(list_transform(range(1, {_DIM + 1}), i -> CAST({vec}[i] AS DOUBLE) * CAST({vec}[i] AS DOUBLE))))"
-    n2 = f"sqrt(list_sum(list_transform(range(1, {_DIM + 1}), i -> CAST({other}[i] AS DOUBLE) * CAST({other}[i] AS DOUBLE))))"
-    return f"({d} / ({n1} * {n2}))"
 
 
 # --------------------------------------------------------------------------
@@ -234,7 +236,7 @@ def q46_ivf_topk(spark, sf_dir):
     assign = (
         emb.filter(F.col("vec_id") > 8)
         .crossJoin(F.broadcast(cents))
-        .withColumn("ccos", _dot(F.col("embedding"), F.col("cv")) / (_norm(F.col("embedding")) * _norm(F.col("cv"))))
+        .withColumn("ccos", _cos(F.col("embedding"), F.col("cv")))
         .withColumn(
             "rn",
             F.row_number().over(
@@ -246,7 +248,7 @@ def q46_ivf_topk(spark, sf_dir):
     )
     qcells = (
         cents.crossJoin(F.broadcast(q))
-        .select("cent_id", (_dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv")))).alias("qcos"))
+        .select("cent_id", _cos(F.col("qv"), F.col("cv")).alias("qcos"))
         .orderBy(F.desc("qcos"), F.asc("cent_id"))
         .limit(2)
         .select("cent_id")
@@ -257,10 +259,7 @@ def q46_ivf_topk(spark, sf_dir):
         .select(
             "vec_id",
             "cell",
-            F.round(
-                _dot(F.col("embedding"), F.col("qv")) / (_norm(F.col("embedding")) * _norm(F.col("qv"))),
-                6,
-            ).alias("cosine"),
+            F.round(_cos(F.col("embedding"), F.col("qv")), 6).alias("cosine"),
         )
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(10)
@@ -319,10 +318,7 @@ def q50_ann_recall(spark, sf_dir):
     brute = (
         emb.filter(F.col("vec_id") > 8)
         .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            (_dot(F.col("embedding"), F.col("qv")) / (_norm(F.col("embedding")) * _norm(F.col("qv")))).alias("c"),
-        )
+        .select("vec_id", _cos(F.col("embedding"), F.col("qv")).alias("c"))
         .orderBy(F.desc("c"), F.asc("vec_id"))
         .limit(10)
         .select("vec_id")

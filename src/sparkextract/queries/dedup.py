@@ -99,11 +99,11 @@ from pyspark.sql.window import Window as W
 
 from sparkextract.queries.ann import (
     _DIM,
-    _cos_pair_sql,
-    _dot,
-    _norm,
-    _plane_sign_sql,
-    _plane_signs_py,
+    _bucket_col,
+    _bucket_sql,
+    _cos,
+    _cos_sql,
+    _plane_signs,
 )
 from sparkextract.queries.base import (
     checkpoint_memo,
@@ -113,7 +113,7 @@ from sparkextract.queries.base import (
     register,
 )
 from sparkextract.queries.quality import _Q94_MIN_TOKENS
-from sparkextract.queries.sketches import _kgram_hashes
+from sparkextract.queries.sketches import _kgram_hashes, _kgram_keys_sql
 
 
 # --------------------------------------------------------------------------
@@ -338,50 +338,16 @@ def q32_simhash(spark, sf_dir):
 # verify — the scale pattern for similarity dedup: candidates come from a
 # bucket hash join (shuffle on a tiny int key), never a cross join; the
 # exact cosine runs only on co-bucketed pairs.
-def _bucket_sql(emb: str) -> str:
-    return " + ".join(
-        f"(CASE WHEN list_sum(list_transform(range(1, {_DIM + 1}), "
-        f"i -> CAST({emb}[i] AS DOUBLE) * {_plane_sign_sql('i', p)})) >= 0 THEN {1 << (3 - p)} ELSE 0 END)"
-        for p in range(4)
-    )
-
-
 _Q34_ORACLE = f"""
 WITH b AS (
   SELECT vec_id, embedding, CAST({_bucket_sql('embedding')} AS INTEGER) AS bucket
   FROM embeddings WHERE vec_id < 300
 )
 SELECT x.vec_id AS left_id, y.vec_id AS right_id,
-       ROUND(
-         list_sum(list_transform(range(1, {_DIM + 1}), i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))
-         / ( sqrt(list_sum(list_transform(range(1, {_DIM + 1}), i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE))))
-           * sqrt(list_sum(list_transform(range(1, {_DIM + 1}), i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))) ),
-         6) AS cosine
+       ROUND({_cos_sql("x.embedding", "y.embedding")}, 6) AS cosine
 FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-WHERE ROUND(
-         list_sum(list_transform(range(1, {_DIM + 1}), i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))
-         / ( sqrt(list_sum(list_transform(range(1, {_DIM + 1}), i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE))))
-           * sqrt(list_sum(list_transform(range(1, {_DIM + 1}), i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))) ),
-         6) >= 0.3
+WHERE ROUND({_cos_sql("x.embedding", "y.embedding")}, 6) >= 0.3
 """
-
-
-def _bucket_col():
-    # signs hoisted to driver-side literals (hashlib md5 == engine md5):
-    # the hyperplane depends on (plane, i) only — see q28's note
-
-    def plane_proj(p: int):
-        signs = F.lit(_plane_signs_py(p))
-        return F.aggregate(
-            F.zip_with(F.col("embedding"), signs, lambda x, s: x.cast("double") * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    bucket = F.lit(0)
-    for p in range(4):
-        bucket = bucket + F.when(plane_proj(p) >= 0, F.lit(1 << (3 - p))).otherwise(F.lit(0))
-    return bucket.cast("int")
 
 
 @register("q34_lsh_near_dup_join", oracle=_Q34_ORACLE)
@@ -401,11 +367,7 @@ def q34_lsh_near_dup_join(spark, sf_dir):
         y,
         (F.col("x.bucket") == F.col("y.bucket")) & (F.col("x.vec_id") < F.col("y.vec_id")),
     )
-    cosine = F.round(
-        _dot(F.col("x.embedding"), F.col("y.embedding"))
-        / (_norm(F.col("x.embedding")) * _norm(F.col("y.embedding"))),
-        6,
-    )
+    cosine = F.round(_cos(F.col("x.embedding"), F.col("y.embedding")), 6)
     return pairs.select(
         F.col("x.vec_id").alias("left_id"),
         F.col("y.vec_id").alias("right_id"),
@@ -445,17 +407,6 @@ _BANDS = 4
 _PLANES = 8  # per band -> 2^8 signatures per band
 
 
-def _plane_signs(band: int, plane: int) -> list[float]:
-    import hashlib
-
-    return [
-        1.0
-        if hashlib.md5(f"b{band}p{plane}:{i}".encode()).hexdigest()[0] in "02468ace"
-        else -1.0
-        for i in range(1, _DIM + 1)
-    ]
-
-
 def _band_sig_sql(band: int) -> str:
     # flat unrolled dot product per plane: list-literal indexing inside
     # list_transform re-materializes the 64-element list per element
@@ -464,7 +415,7 @@ def _band_sig_sql(band: int) -> str:
     terms = []
     for p in range(_PLANES):
         proj = " + ".join(
-            f"e[{i + 1}]*{s}" for i, s in enumerate(_plane_signs(band, p))
+            f"e[{i + 1}]*{s}" for i, s in enumerate(_plane_signs(f"b{band}p{p}"))
         )
         terms.append(f"(CASE WHEN ({proj}) >= 0 THEN {1 << p} ELSE 0 END)")
     return " + ".join(terms)
@@ -496,11 +447,11 @@ pairs AS (
     ON x.band = y.band AND x.sig = y.sig AND x.vec_id < y.vec_id
 )
 SELECT p.l AS left_id, p.r AS right_id,
-       ROUND({_cos_pair_sql('cx.e', 'cy.e')}, 6) AS cosine
+       ROUND({_cos_sql("cx.e", "cy.e")}, 6) AS cosine
 FROM pairs p
 JOIN corpus cx ON p.l = cx.vec_id
 JOIN corpus cy ON p.r = cy.vec_id
-WHERE ROUND({_cos_pair_sql('cx.e', 'cy.e')}, 6) >= 0.8
+WHERE ROUND({_cos_sql("cx.e", "cy.e")}, 6) >= 0.8
 """
 
 
@@ -541,7 +492,7 @@ def _band_sig_col(band: int):
     # number at any SF). Fold order over planes is p ascending with
     # integer adds; per-plane projection order is i ascending — both
     # bit-identical to the unrolled form and the SQL oracle.
-    signs_matrix = F.lit([_plane_signs(band, p) for p in range(_PLANES)])
+    signs_matrix = F.lit([_plane_signs(f"b{band}p{p}") for p in range(_PLANES)])
     weights = F.lit([1 << p for p in range(_PLANES)])
     return F.aggregate(
         F.sequence(F.lit(1), F.lit(_PLANES)),
@@ -589,10 +540,8 @@ def q53_banded_lsh_near_dup(spark, sf_dir):
     )
     cx = corpus.select(F.col("vec_id").alias("l"), F.col("e").alias("ex"))
     cy = corpus.select(F.col("vec_id").alias("r"), F.col("e").alias("ey"))
-    # corpus arrays are already double, so _dot/_norm's cast is a no-op
-    cosine = F.round(
-        _dot(F.col("ex"), F.col("ey")) / (_norm(F.col("ex")) * _norm(F.col("ey"))), 6
-    )
+    # corpus arrays are already double, so _cos's cast is a no-op
+    cosine = F.round(_cos(F.col("ex"), F.col("ey")), 6)
     return (
         pairs.join(cx, "l")
         .join(cy, "r")
@@ -1215,16 +1164,7 @@ _Q99_FLAG_FRAC = 0.5
 
 
 _Q99_ORACLE = f"""
-WITH wk AS (
-  SELECT DISTINCT doc_id, md5(kgram) AS kh FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(a) - {_Q99_K} + 2),
-                  i -> array_to_string(a[i:i+{_Q99_K - 1}], ' '))) AS kgram
-    FROM (SELECT doc_id,
-                 list_filter(string_split(text, ' '), t -> t <> '') AS a
-          FROM documents)
-    WHERE len(a) >= {_Q99_K})
-),
+WITH wk AS ({_kgram_keys_sql("documents", _Q99_K)}),
 counted AS (
   SELECT doc_id, COUNT(*) OVER (PARTITION BY kh) AS n_docs FROM wk
 )
@@ -1242,8 +1182,6 @@ GROUP BY doc_id
 
 @register("q99_exact_substring_dedup", oracle=_Q99_ORACLE)
 def q99_exact_substring_dedup(spark, sf_dir):
-    from sparkextract.queries.base import checkpoint_memo
-
     # the window table feeds two aggregates; materialize it once instead
     # of re-tokenizing the corpus per subtree (at real scale this is the
     # window-table write every ExactSubstr pipeline performs anyway)
@@ -1319,14 +1257,14 @@ def _q110_oracle() -> str:
       FROM corpus c, cents ct
       QUALIFY ROW_NUMBER() OVER (
         PARTITION BY c.vec_id
-        ORDER BY ROUND({_cos_pair_sql('c.e', 'ct.cv')}, 6) DESC,
+        ORDER BY ROUND({_cos_sql("c.e", "ct.cv")}, 6) DESC,
                  ct.cent_id ASC) = 1
     ),
     dups AS (
       SELECT DISTINCT b.vec_id
       FROM assign a JOIN assign b
         ON a.cell = b.cell AND a.vec_id < b.vec_id
-      WHERE ROUND({_cos_pair_sql('a.e', 'b.e')}, 6) >= {_Q110_THRESHOLD}
+      WHERE ROUND({_cos_sql("a.e", "b.e")}, 6) >= {_Q110_THRESHOLD}
     )
     SELECT a.cell, COUNT(*) AS n_members, COUNT(d.vec_id) AS n_dups,
            COUNT(*) - COUNT(d.vec_id) AS n_survivors
@@ -1338,9 +1276,6 @@ def _q110_oracle() -> str:
 
 @register("q110_semantic_dedup", oracle=_q110_oracle())
 def q110_semantic_dedup(spark, sf_dir):
-    from sparkextract.queries.base import checkpoint_memo
-    from sparkextract.queries.ann import _dot, _norm
-
     def build_assign():
         corpus = _banded_corpus(spark, sf_dir)
         cents = (
@@ -1351,9 +1286,7 @@ def q110_semantic_dedup(spark, sf_dir):
                 F.transform("embedding", lambda x: x.cast("double")).alias("cv"),
             )
         )
-        ccos = F.round(
-            _dot(F.col("e"), F.col("cv")) / (_norm(F.col("e")) * _norm(F.col("cv"))), 6
-        )
+        ccos = F.round(_cos(F.col("e"), F.col("cv")), 6)
         # argmax via map-side-combinable max_by (ROUND-6 score, cent_id
         # asc tie-break = max of (ccos, -cent_id)), not a window over
         # vec_id
@@ -1381,9 +1314,7 @@ def q110_semantic_dedup(spark, sf_dir):
     b = assign.select(
         F.col("vec_id").alias("r"), F.col("cell").alias("cr"), F.col("e").alias("eb")
     )
-    pcos = F.round(
-        _dot(F.col("ea"), F.col("eb")) / (_norm(F.col("ea")) * _norm(F.col("eb"))), 6
-    )
+    pcos = F.round(_cos(F.col("ea"), F.col("eb")), 6)
     dups = (
         a.join(b, (F.col("cl") == F.col("cr")) & (F.col("l") < F.col("r")))
         .withColumn("cos", pcos)
@@ -1730,8 +1661,6 @@ FROM weighted GROUP BY source
 
 @register("q159_soft_dedup_weights", oracle=_Q159_ORACLE)
 def q159_soft_dedup_weights(spark, sf_dir):
-    from sparkextract.queries.base import checkpoint_memo
-
     def _build_d():
         docs = load(spark, sf_dir, "documents").select(
             "doc_id", "source", "text"

@@ -446,7 +446,7 @@ def q62_unknown_kind_fallback(spark, sf_dir):
 # q63: malformed DUPLICATE-offset inputs stay deterministic through the
 # gate. Two spans share offset 0; the core's multiset tie-break orders
 # them by (kind_rank, src_offset, sub_idx, text) (core/extract.py
-# finalize + extract_document input sort), so output offsets follow the
+# finalize), so output offsets follow the
 # lexicographic order of the two payloads — SQL-derivable with a window
 # over (doc, text). Previously only the partitioning-invariance pytest
 # exercised this.

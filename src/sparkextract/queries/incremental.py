@@ -26,7 +26,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from sparkextract.queries.ann import _cos_pair_sql
+from sparkextract.queries.ann import _cos, _cos_sql
 from sparkextract.queries.base import (
     checkpoint_memo,
     load,
@@ -501,8 +501,6 @@ def snapshot_token_drift(spark, sf_dir):
 # Composes with snapshot_diff (same snapshot rule) and q46 (same IVF
 # cells).
 def _incremental_ivf_oracle() -> str:
-    from sparkextract.queries.base import md5_bucket_sql
-
     return f"""
     WITH e AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
@@ -526,7 +524,7 @@ def _incremental_ivf_oracle() -> str:
       WHERE s.status <> 'unchanged'
       QUALIFY ROW_NUMBER() OVER (
         PARTITION BY s.vec_id
-        ORDER BY ROUND({_cos_pair_sql('s.ev', 'ct.cv')}, 6) DESC,
+        ORDER BY ROUND({_cos_sql("s.ev", "ct.cv")}, 6) DESC,
                  ct.cent_id ASC) = 1
     )
     SELECT s.vec_id, s.status,
@@ -537,9 +535,6 @@ def _incremental_ivf_oracle() -> str:
 
 
 def incremental_ivf(spark, sf_dir):
-    from sparkextract.queries.base import md5_bucket
-    from sparkextract.queries.ann import _dot, _norm
-
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("ev"),
@@ -556,10 +551,7 @@ def incremental_ivf(spark, sf_dir):
     cents = emb.filter(F.col("vec_id").between(1, 8)).select(
         F.col("vec_id").alias("cent_id"), F.col("ev").alias("cv")
     )
-    ccos = F.round(
-        _dot(F.col("ev"), F.col("cv")) / (_norm(F.col("ev")) * _norm(F.col("cv"))),
-        6,
-    )
+    ccos = F.round(_cos(F.col("ev"), F.col("cv")), 6)
     assign = (
         st.filter(F.col("status") != "unchanged")
         .crossJoin(F.broadcast(cents))

@@ -61,7 +61,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 from pyspark.sql.window import Window as W
 
-from sparkextract.queries.ann import _cos_pair_sql, _dot, _norm
+from sparkextract.queries.ann import _cos, _cos_sql, _cos_top10, _cos_top10_sql
 from sparkextract.queries.base import (
     checkpoint_memo,
     load,
@@ -104,20 +104,7 @@ def q36_keyword_overlap(spark, sf_dir):
 
 
 _Q55_ORACLE = f"""
-    WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-    cand AS (
-      SELECT e.vec_id,
-             ROUND(list_sum(list_transform(range(1, 65),
-                     i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))
-               / ( sqrt(list_sum(list_transform(range(1, 65),
-                     i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))))
-                 * sqrt(list_sum(list_transform(range(1, 65),
-                     i -> CAST(q.qv[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))) ), 6) AS cosine
-      FROM embeddings e, q
-      WHERE e.vec_id > 0
-      ORDER BY cosine DESC, e.vec_id ASC
-      LIMIT 10
-    ),
+    WITH cand AS ({_cos_top10_sql()}),
     scored AS (
       SELECT c.vec_id, c.cosine,
              CAST(LENGTH(list_intersect(string_split('{_QUERY_WORDS}', ' '),
@@ -134,24 +121,7 @@ _Q55_ORACLE = f"""
 
 @register("q55_rerank_topk", oracle=_Q55_ORACLE)
 def q55_rerank_topk(spark, sf_dir):
-    from sparkextract.queries.ann import _dot, _norm
-
-    emb = load(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    cand = (
-        emb.filter(F.col("vec_id") > 0)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(
-                _dot(F.col("embedding"), F.col("qv"))
-                / (_norm(F.col("embedding")) * _norm(F.col("qv"))),
-                6,
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(10)
-    )
+    cand = _cos_top10(spark, sf_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     overlap = F.size(
         F.array_intersect(
@@ -188,20 +158,7 @@ _Q58_BUDGET = 1500
 
 
 _Q58_ORACLE = f"""
-    WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-    cand AS (
-      SELECT e.vec_id,
-             ROUND(list_sum(list_transform(range(1, 65),
-                     i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))
-               / ( sqrt(list_sum(list_transform(range(1, 65),
-                     i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))))
-                 * sqrt(list_sum(list_transform(range(1, 65),
-                     i -> CAST(q.qv[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))) ), 6) AS cosine
-      FROM embeddings e, q
-      WHERE e.vec_id > 0
-      ORDER BY cosine DESC, e.vec_id ASC
-      LIMIT 10
-    ),
+    WITH cand AS ({_cos_top10_sql()}),
     hydrated AS (
       SELECT c.vec_id, c.cosine, d.text, d.n_chars, md5(d.text) AS chash
       FROM cand c JOIN documents d ON d.doc_id = c.vec_id
@@ -234,26 +191,7 @@ _Q58_ORACLE = f"""
 
 @register("q58_retrieval_pipeline", oracle=_Q58_ORACLE)
 def q58_retrieval_pipeline(spark, sf_dir):
-    from pyspark.sql.window import Window as W
-
-    from sparkextract.queries.ann import _dot, _norm
-
-    emb = load(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    cand = (
-        emb.filter(F.col("vec_id") > 0)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(
-                _dot(F.col("embedding"), F.col("qv"))
-                / (_norm(F.col("embedding")) * _norm(F.col("qv"))),
-                6,
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(10)
-    )
+    cand = _cos_top10(spark, sf_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
     hydrated = docs.join(F.broadcast(cand), docs["doc_id"] == cand["vec_id"]).select(
         "vec_id", "cosine", "text", "n_chars", F.md5("text").alias("chash")
@@ -851,13 +789,11 @@ _Q128_K = 5  # results per query
 
 def _cos_u(a, b):
     """Cosine similarity snapped to exact BIGINT micro-units."""
-    return F.round(_dot(a, b) / (_norm(a) * _norm(b)) * F.lit(1000000.0)).cast(
-        "long"
-    )
+    return F.round(_cos(a, b) * F.lit(1000000.0)).cast("long")
 
 
 def _cos_u_sql(a: str, b: str) -> str:
-    return f"CAST(ROUND({_cos_pair_sql(a, b)} * 1000000) AS BIGINT)"
+    return f"CAST(ROUND({_cos_sql(a, b)} * 1000000) AS BIGINT)"
 
 
 def _q128_oracle() -> str:

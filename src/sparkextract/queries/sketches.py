@@ -108,52 +108,34 @@ _Q91_K = 13
 _Q91_MAX_FRAC = 0.2
 
 
-_Q91_EVAL_BUCKETS = 20
+_EVAL_BUCKETS = 20  # the eval slice of q91, q104 and q198
 
 
-_Q91_CORPUS = f"""
+def _eval_split(spark, sf_dir):
+    """(eval_docs, corpus), both (doc_id, text): the eval set is md5
+    bucket 0 of doc_id; the corpus is every other doc plus a verbatim
+    copy of each eval doc at doc_id + 3000000."""
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    is_eval = md5_bucket(F.col("doc_id"), _EVAL_BUCKETS) == 0
+    eval_docs = docs.filter(is_eval)
+    corpus = docs.filter(~is_eval).unionByName(
+        eval_docs.select((F.col("doc_id") + 3000000).alias("doc_id"), "text")
+    )
+    return eval_docs, corpus
+
+
+# DuckDB twin of _eval_split: the eval_docs and corpus CTEs
+_EVAL_SPLIT_SQL = f"""
+eval_docs AS (
   SELECT doc_id, text FROM documents
-  WHERE {md5_bucket_sql("doc_id", _Q91_EVAL_BUCKETS)} <> 0
-  UNION ALL
-  SELECT doc_id + 3000000 AS doc_id, text FROM documents
-  WHERE {md5_bucket_sql("doc_id", _Q91_EVAL_BUCKETS)} = 0
-"""
-
-
-_Q91_ORACLE = f"""
-WITH eval_docs AS (
-  SELECT doc_id, text FROM documents
-  WHERE {md5_bucket_sql("doc_id", _Q91_EVAL_BUCKETS)} = 0
+  WHERE {md5_bucket_sql("doc_id", _EVAL_BUCKETS)} = 0
 ),
 corpus AS (
-  {_Q91_CORPUS}
-),
-ekg AS (
-  SELECT DISTINCT md5(kgram) AS kh FROM (
-    SELECT unnest(list_transform(range(1, len(a) - {_Q91_K} + 2),
-                  i -> array_to_string(a[i:i+{_Q91_K - 1}], ' '))) AS kgram
-    FROM (SELECT list_filter(string_split(text, ' '), t -> t <> '') AS a
-          FROM eval_docs)
-    WHERE len(a) >= {_Q91_K})
-),
-ckg AS (
-  SELECT DISTINCT doc_id, md5(kgram) AS kh FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(a) - {_Q91_K} + 2),
-                  i -> array_to_string(a[i:i+{_Q91_K - 1}], ' '))) AS kgram
-    FROM (SELECT doc_id,
-                 list_filter(string_split(text, ' '), t -> t <> '') AS a
-          FROM corpus)
-    WHERE len(a) >= {_Q91_K})
-)
-SELECT c.doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_kgrams,
-       CAST(COUNT(e.kh) AS BIGINT) AS n_contam,
-       ROUND(COUNT(e.kh) * 1.0 / COUNT(*), 6) AS contam_frac,
-       (ROUND(COUNT(e.kh) * 1.0 / COUNT(*), 6) <= {_Q91_MAX_FRAC}) AS keep
-FROM ckg c LEFT JOIN ekg e ON e.kh = c.kh
-GROUP BY c.doc_id
-"""
+  SELECT doc_id, text FROM documents
+  WHERE {md5_bucket_sql("doc_id", _EVAL_BUCKETS)} <> 0
+  UNION ALL
+  SELECT doc_id + 3000000 AS doc_id, text FROM eval_docs
+)"""
 
 
 def _kgram_hashes(df, k: int):
@@ -174,14 +156,37 @@ def _kgram_hashes(df, k: int):
     )
 
 
+def _kgram_keys_sql(src: str, k: int) -> str:
+    """DuckDB twin of :func:`_kgram_hashes` over the (doc_id, text)
+    relation ``src``."""
+    return f"""
+  SELECT DISTINCT doc_id, md5(kgram) AS kh FROM (
+    SELECT doc_id,
+           unnest(list_transform(range(1, len(a) - {k} + 2),
+                  i -> array_to_string(a[i:i+{k - 1}], ' '))) AS kgram
+    FROM (SELECT doc_id,
+                 list_filter(string_split(text, ' '), t -> t <> '') AS a
+          FROM {src})
+    WHERE len(a) >= {k})"""
+
+
+_Q91_ORACLE = f"""
+WITH {_EVAL_SPLIT_SQL},
+ekg AS (SELECT DISTINCT kh FROM ({_kgram_keys_sql("eval_docs", _Q91_K)})),
+ckg AS ({_kgram_keys_sql("corpus", _Q91_K)})
+SELECT c.doc_id,
+       CAST(COUNT(*) AS BIGINT) AS n_kgrams,
+       CAST(COUNT(e.kh) AS BIGINT) AS n_contam,
+       ROUND(COUNT(e.kh) * 1.0 / COUNT(*), 6) AS contam_frac,
+       (ROUND(COUNT(e.kh) * 1.0 / COUNT(*), 6) <= {_Q91_MAX_FRAC}) AS keep
+FROM ckg c LEFT JOIN ekg e ON e.kh = c.kh
+GROUP BY c.doc_id
+"""
+
+
 @register("q91_ngram_decontamination", oracle=_Q91_ORACLE)
 def q91_ngram_decontamination(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    is_eval = md5_bucket(F.col("doc_id"), _Q91_EVAL_BUCKETS) == 0
-    eval_docs = docs.filter(is_eval)
-    corpus = docs.filter(~is_eval).unionByName(
-        eval_docs.select((F.col("doc_id") + 3000000).alias("doc_id"), "text")
-    )
+    eval_docs, corpus = _eval_split(spark, sf_dir)
     # the eval side is a benchmark suite: tiny at any scale -> broadcast
     ekg = F.broadcast(_kgram_hashes(eval_docs, _Q91_K).select("kh").distinct())
     ckg = _kgram_hashes(corpus, _Q91_K)
@@ -230,9 +235,6 @@ _Q104_K = 13
 _Q104_BITS = 131072
 
 
-_Q104_EVAL_BUCKETS = 20  # same eval slice as q91
-
-
 def _q104_pos_sql(kh: str, j: int) -> str:
     return (
         f"CAST(('0x' || SUBSTRING(md5({kh} || ':{j}'), 1, 8)) AS UBIGINT)"
@@ -241,15 +243,8 @@ def _q104_pos_sql(kh: str, j: int) -> str:
 
 
 _Q104_ORACLE = f"""
-WITH ekh AS (
-  SELECT DISTINCT md5(kgram) AS kh FROM (
-    SELECT unnest(list_transform(range(1, len(a) - {_Q104_K} + 2),
-                  i -> array_to_string(a[i:i+{_Q104_K - 1}], ' '))) AS kgram
-    FROM (SELECT list_filter(string_split(text, ' '), t -> t <> '') AS a
-          FROM documents
-          WHERE {md5_bucket_sql("doc_id", _Q104_EVAL_BUCKETS)} = 0)
-    WHERE len(a) >= {_Q104_K})
-),
+WITH {_EVAL_SPLIT_SQL},
+ekh AS (SELECT DISTINCT kh FROM ({_kgram_keys_sql("eval_docs", _Q104_K)})),
 positions AS (
   SELECT {_q104_pos_sql("kh", 0)} AS pos FROM ekh
   UNION ALL
@@ -260,23 +255,7 @@ words AS (
          bit_or(CAST(1 AS UBIGINT) << CAST(pos % 64 AS INT)) AS bits
   FROM positions GROUP BY 1
 ),
-corpus AS (
-  SELECT doc_id, text FROM documents
-  WHERE {md5_bucket_sql("doc_id", _Q104_EVAL_BUCKETS)} <> 0
-  UNION ALL
-  SELECT doc_id + 3000000 AS doc_id, text FROM documents
-  WHERE {md5_bucket_sql("doc_id", _Q104_EVAL_BUCKETS)} = 0
-),
-ckh AS (
-  SELECT DISTINCT doc_id, md5(kgram) AS kh FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(a) - {_Q104_K} + 2),
-                  i -> array_to_string(a[i:i+{_Q104_K - 1}], ' '))) AS kgram
-    FROM (SELECT doc_id,
-                 list_filter(string_split(text, ' '), t -> t <> '') AS a
-          FROM corpus)
-    WHERE len(a) >= {_Q104_K})
-),
+ckh AS ({_kgram_keys_sql("corpus", _Q104_K)}),
 probed AS (
   SELECT c.doc_id,
          (w0.bits IS NOT NULL
@@ -314,9 +293,8 @@ def _q104_pos(kh, j: int):
 
 @register("q104_bloom_filter_probe", oracle=_Q104_ORACLE)
 def q104_bloom_filter_probe(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    is_eval = md5_bucket(F.col("doc_id"), _Q104_EVAL_BUCKETS) == 0
-    ekh = _kgram_hashes(docs.filter(is_eval), _Q104_K).select("kh").distinct()
+    eval_docs, corpus = _eval_split(spark, sf_dir)
+    ekh = _kgram_hashes(eval_docs, _Q104_K).select("kh").distinct()
     # both hash positions from ONE pass over the eval keys (an unionAll
     # of two projections re-scans the eval subtree)
     positions = ekh.select(
@@ -333,11 +311,6 @@ def q104_bloom_filter_probe(spark, sf_dir):
         F.bit_or(
             F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))")
         ).alias("bits")
-    )
-    corpus = docs.filter(~is_eval).unionByName(
-        docs.filter(is_eval).select(
-            (F.col("doc_id") + 3000000).alias("doc_id"), "text"
-        )
     )
     ckh = (
         _kgram_hashes(corpus, _Q104_K)
@@ -685,9 +658,6 @@ def q196_kmv_theta_sketch(spark, sf_dir):
 _Q198_K = 13  # k-gram width, = q104
 
 
-_Q198_EVAL_BUCKETS = 20  # same eval slice as q91/q104
-
-
 _Q198_M = 4096  # buckets (power of two so XOR stays in range)
 
 
@@ -720,24 +690,9 @@ def _q198_i2_sql(kh: str) -> str:
     )
 
 
-_Q198_KGRAMS = f"""
-  SELECT doc_id, md5(kgram) AS kh FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(a) - {_Q198_K} + 2),
-                  i -> array_to_string(a[i:i+{_Q198_K - 1}], ' '))) AS kgram
-    FROM (SELECT doc_id,
-                 list_filter(string_split(text, ' '), t -> t <> '') AS a
-          FROM __SRC__)
-    WHERE len(a) >= {_Q198_K})
-"""
-
-
 _Q198_ORACLE = f"""
-WITH ekh AS (
-  SELECT DISTINCT kh FROM (
-    {_Q198_KGRAMS.replace("__SRC__", f"(SELECT doc_id, text FROM documents WHERE {md5_bucket_sql('doc_id', _Q198_EVAL_BUCKETS)} = 0)")}
-  )
-),
+WITH {_EVAL_SPLIT_SQL},
+ekh AS (SELECT DISTINCT kh FROM ({_kgram_keys_sql("eval_docs", _Q198_K)})),
 filt AS (
   SELECT DISTINCT b, fp FROM (
     SELECT CAST({_q198_i1_sql("kh")} AS BIGINT) AS b,
@@ -747,16 +702,7 @@ filt AS (
            CAST({_q198_fp_sql("kh")} AS BIGINT) AS fp FROM ekh
   )
 ),
-corpus AS (
-  SELECT doc_id, text FROM documents
-  WHERE {md5_bucket_sql("doc_id", _Q198_EVAL_BUCKETS)} <> 0
-  UNION ALL
-  SELECT doc_id + 3000000 AS doc_id, text FROM documents
-  WHERE {md5_bucket_sql("doc_id", _Q198_EVAL_BUCKETS)} = 0
-),
-ckh AS (
-  SELECT DISTINCT doc_id, kh FROM ({_Q198_KGRAMS.replace("__SRC__", "corpus")})
-),
+ckh AS ({_kgram_keys_sql("corpus", _Q198_K)}),
 probed AS (
   SELECT c.doc_id,
          (f1.fp IS NOT NULL OR f2.fp IS NOT NULL) AS cuckoo_hit,
@@ -812,26 +758,10 @@ def _q198_i2(kh):
     return _q198_i1(kh).bitwiseXOR(hfp)
 
 
-def _q198_kgrams(df):
-    a = F.filter(F.split("text", " "), lambda t: t != F.lit(""))
-    kgram = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size("a") - _Q198_K + 1, F.lit(0))),
-        lambda i: F.array_join(F.slice("a", i, _Q198_K), " "),
-    )
-    return (
-        df.select("doc_id", a.alias("a"))
-        .filter(F.size("a") >= _Q198_K)
-        .select("doc_id", F.explode(kgram).alias("kgram"))
-        .select("doc_id", F.md5("kgram").alias("kh"))
-        .distinct()
-    )
-
-
 @register("q198_cuckoo_filter_probe", oracle=_Q198_ORACLE)
 def q198_cuckoo_filter_probe(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    is_eval = md5_bucket(F.col("doc_id"), _Q198_EVAL_BUCKETS) == 0
-    ekh = _q198_kgrams(docs.filter(is_eval)).select("kh").distinct()
+    eval_docs, corpus = _eval_split(spark, sf_dir)
+    ekh = _kgram_hashes(eval_docs, _Q198_K).select("kh").distinct()
     filt = (
         ekh.select(_q198_i1(F.col("kh")).alias("b"), _q198_fp(F.col("kh")).alias("fp"))
         .unionAll(
@@ -841,12 +771,7 @@ def q198_cuckoo_filter_probe(spark, sf_dir):
         )
         .distinct()
     )
-    corpus = docs.filter(~is_eval).unionByName(
-        docs.filter(is_eval).select(
-            (F.col("doc_id") + 3000000).alias("doc_id"), "text"
-        )
-    )
-    ckh = _q198_kgrams(corpus)
+    ckh = _kgram_hashes(corpus, _Q198_K)
     keyed = ckh.select(
         "doc_id",
         "kh",

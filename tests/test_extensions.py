@@ -3,6 +3,8 @@ incremental ingest, confidence metrics."""
 
 from pyspark.sql import functions as F
 
+from conftest import SF_DIR
+
 
 # ------------------------------------------------------------- multimodal
 def test_multimodal_featurize_and_dedup(spark):
@@ -102,7 +104,7 @@ def test_wave3_registered_with_oracles():
 def test_ivf_topk_probes_two_cells(spark):
     from sparkextract.queries.registry import SPARK_QUERIES
 
-    rows = SPARK_QUERIES["q46_ivf_topk"](spark, "/root/testdata/sf0.001").collect()
+    rows = SPARK_QUERIES["q46_ivf_topk"](spark, SF_DIR).collect()
     assert len(rows) == 10
     # every hit comes from one of the <=2 probed coarse cells
     assert len({r["cell"] for r in rows}) <= 2
@@ -115,7 +117,7 @@ def test_wave4_ann_recall_bounds(spark):
     from sparkextract.queries.registry import ORACLE_SQL, SPARK_QUERIES
 
     assert "q50_ann_recall" in ORACLE_SQL
-    row = SPARK_QUERIES["q50_ann_recall"](spark, "/root/testdata/sf0.001").collect()[0]
+    row = SPARK_QUERIES["q50_ann_recall"](spark, SF_DIR).collect()[0]
     assert 0 <= row["n_overlap"] <= 10
     assert row["recall_at_10"] == row["n_overlap"] / 10.0
 

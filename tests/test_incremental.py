@@ -2,10 +2,7 @@
 streaming dedup and the Merkle diff against pure-Python twins."""
 
 import hashlib
-import os
 from collections import Counter
-
-import pyarrow.parquet as pq
 
 from conftest import SF_DIR, py_md5_bucket, read_docs
 
@@ -37,9 +34,7 @@ def test_q172_clean_leaves_skip_doc_work_and_counts_match(spark):
     )
 
     rows = {r["leaf"]: r for r in q172_merkle_snapshot_diff(spark, SF_DIR).collect()}
-    docs = pq.read_table(
-        os.path.join(SF_DIR, "documents.parquet"), columns=["doc_id"]
-    ).to_pylist()
+    docs = read_docs("doc_id")
     per_leaf = Counter(
         py_md5_bucket(str(r["doc_id"]), _Q172_LEAVES) for r in docs
     )

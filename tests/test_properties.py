@@ -22,12 +22,12 @@ from __future__ import annotations
 from collections import Counter
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from sparkextract import config
 from sparkextract.core.boilerplate import extract_html
-from sparkextract.core.extract import extract_document, extract_input_span, extract_run
+from sparkextract.core.extract import extract_document, extract_input_span, extract_run, finalize
 from sparkextract.core.normalize import collapse_ws, md5_hex, normalize_cell, normalize_text
 from sparkextract.core.ocr import pseudo_ocr_raw, pseudo_ocr_texts
 from sparkextract.core.segment import chunk_text
@@ -64,6 +64,36 @@ def test_extract_document_input_order_invariant(spans, rnd):
     shuffled = list(spans)
     rnd.shuffle(shuffled)
     assert extract_document(shuffled) == base
+
+
+# texts and media refs drawn from NULL, '' and short strings at two offsets,
+# so two spans of a doc often differ only in NULL against ''
+_null_or_empty_st = st.one_of(st.none(), st.just(""), st.text(max_size=3))
+_tie_span_st = st.builds(
+    lambda kind, text, ref, off: {"kind": kind, "text": text, "media_ref": ref, "offset": off},
+    st.sampled_from(_KINDS),
+    _null_or_empty_st,
+    _null_or_empty_st,
+    st.integers(min_value=0, max_value=1),
+)
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(_tie_span_st, max_size=6))
+@example([
+    {"kind": "media", "text": "x", "media_ref": None, "offset": 0},
+    {"kind": "media", "text": "", "media_ref": "", "offset": 0},
+])
+def test_finalize_of_either_array_order_equals_extract_document(spans):
+    """The engine runs phase 1 over a doc's spans in array order and phase
+    2 over the items (spark/job.py ``_extract_runs``); for the array and
+    its reverse, that equals ``extract_document``."""
+    expected = [
+        (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in extract_document(spans)
+    ]
+    for order in (spans, spans[::-1]):
+        cols = ([s[c] for s in order] for c in ("kind", "text", "media_ref", "offset"))
+        assert finalize(extract_run(*cols)) == expected
 
 
 @settings(max_examples=80, deadline=None)

@@ -1,8 +1,9 @@
 """Every query module imports on its own in a fresh interpreter, so no
 import cycle hides behind the order in which another module loads them;
 every reference-file citation in the package names a file the survey
-cites; no query module keeps a top-level name that nothing reaches; and
-the tests share one Spark fixture and one ``SF_DIR``."""
+cites; no query module keeps a top-level name that nothing reaches; each
+shared query kernel is spelled in one place; and the tests share one
+Spark fixture and one ``SF_DIR``."""
 
 import ast
 import os
@@ -192,6 +193,35 @@ def test_query_code_is_reachable():
             todo.extend(resolve(key[0], defs[key]))
     dead = sorted(f"{m}.{n}" for m, n in set(defs) - seen)
     assert not dead, f"query code that no root reaches: {dead}"
+
+
+# --- one home per shared kernel ------------------------------------------
+#
+# The cosine and word k-gram kernels have one Spark and one DuckDB
+# implementation each, and the queries that need them call those. A
+# second spelling of a kernel body anywhere in queries/*.py is a copy
+# that a fix to the home would miss, so each pattern below (compared with
+# all whitespace removed) must occur exactly once, in its home.
+_KERNEL_HOMES = {
+    "sqrt(list_sum(list_transform(": ("ann", "_norm_sql"),  # DuckDB cosine
+    "/ (_norm(": ("ann", "_cos"),  # Spark cosine
+    "array_to_string(a[i:i+": ("sketches", "_kgram_keys_sql"),  # DuckDB k-grams
+}
+
+
+def test_each_shared_kernel_is_spelled_once():
+    spelled = {pattern: [] for pattern in _KERNEL_HOMES}
+    for mod in MODULES:
+        with open(os.path.join(QUERIES_DIR, mod + ".py")) as f:
+            text = f.read()
+        lines = text.splitlines()
+        for stmt in ast.parse(text).body:
+            first = min([stmt.lineno] + [d.lineno for d in getattr(stmt, "decorator_list", [])])
+            body = re.sub(r"\s+", "", "\n".join(lines[first - 1:stmt.end_lineno]))
+            name = (_defined_names(stmt) or ["<statement>"])[0]
+            for pattern, where in spelled.items():
+                where += [(mod, name)] * body.count(re.sub(r"\s+", "", pattern))
+    assert spelled == {pattern: [home] for pattern, home in _KERNEL_HOMES.items()}
 
 
 def test_one_spark_fixture_and_one_sf_dir():

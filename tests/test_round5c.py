@@ -8,7 +8,7 @@ import os
 
 import numpy as np
 
-from conftest import SF_DIR
+from conftest import SF_DIR, py_md5_bucket, read_docs
 
 
 def _numpy_mmr(sf_dir):
@@ -93,15 +93,10 @@ def test_q130_entropy_matches_python(spark):
     import math
     from collections import Counter
 
-    import pyarrow.parquet as pq
-
     from sparkextract.queries.quality import _Q130_LOW_ENTROPY, q130_token_entropy
 
-    t = pq.read_table(os.path.join(SF_DIR, "documents.parquet"))
     expected = {}
-    for doc_id, text in zip(
-        t.column("doc_id").to_pylist(), t.column("text").to_pylist()
-    ):
+    for doc_id, text in read_docs("doc_id", "text"):
         toks = [w for w in text.split(" ") if w != ""]
         if not toks:
             continue
@@ -139,27 +134,19 @@ def test_q132_repair_roundtrip(spark):
     with n_bad_seqs equal to their (a+e) occurrence count."""
     import hashlib
 
-    import pyarrow.parquet as pq
-
     from sparkextract.queries.quality import (
         _Q132_BAD_BUCKET,
         _Q132_BUCKETS,
         q132_encoding_repair,
     )
 
-    t = pq.read_table(os.path.join(SF_DIR, "documents.parquet"))
-    docs = dict(
-        zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist())
-    )
+    docs = dict(read_docs("doc_id", "text"))
     rows = q132_encoding_repair(spark, SF_DIR).collect()
     assert len(rows) == len(docs)
     flagged = 0
     for r in rows:
         text = docs[r["doc_id"]]
-        bucket = (
-            int(hashlib.md5(str(r["doc_id"]).encode()).hexdigest()[:8], 16)
-            % _Q132_BUCKETS
-        )
+        bucket = py_md5_bucket(str(r["doc_id"]), _Q132_BUCKETS)
         is_bad = bucket == _Q132_BAD_BUCKET
         assert r["roundtrip_ok"] is True
         assert r["was_mojibake"] == is_bad

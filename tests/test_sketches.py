@@ -3,10 +3,7 @@ pure-Python re-derivations of the cuckoo, Misra-Gries and KMV
 sketches."""
 
 import hashlib
-import os
 from collections import Counter, defaultdict
-
-import pyarrow.parquet as pq
 
 from conftest import SF_DIR, py_md5_bucket, read_docs
 
@@ -21,7 +18,7 @@ def _kgrams(text: str, k: int):
 
 def test_q198_matches_python_cuckoo(spark):
     from sparkextract.queries.sketches import (
-        _Q198_EVAL_BUCKETS,
+        _EVAL_BUCKETS,
         _Q198_FPBITS,
         _Q198_K,
         _Q198_M,
@@ -38,8 +35,8 @@ def test_q198_matches_python_cuckoo(spark):
         return i1(kh) ^ py_md5_bucket(str(fp(kh)) + ":h", _Q198_M)
 
     docs = read_docs("doc_id", "text")
-    eval_docs = [d for d in docs if py_md5_bucket(str(d["doc_id"]), _Q198_EVAL_BUCKETS) == 0]
-    rest = [d for d in docs if py_md5_bucket(str(d["doc_id"]), _Q198_EVAL_BUCKETS) != 0]
+    eval_docs = [d for d in docs if py_md5_bucket(str(d["doc_id"]), _EVAL_BUCKETS) == 0]
+    rest = [d for d in docs if py_md5_bucket(str(d["doc_id"]), _EVAL_BUCKETS) != 0]
     ekh = set()
     for d in eval_docs:
         ekh |= _kgrams(d["text"], _Q198_K)
@@ -102,9 +99,7 @@ def test_q179_matches_python_mg_and_bound_holds(spark):
         r["token"]: r
         for r in q179_misra_gries_heavy_hitters(spark, SF_DIR).collect()
     }
-    docs = pq.read_table(
-        os.path.join(SF_DIR, "documents.parquet"), columns=["doc_id", "text"]
-    ).to_pylist()
+    docs = read_docs("doc_id", "text")
     part = defaultdict(Counter)
     exact = Counter()
     for r in docs:
