@@ -90,48 +90,27 @@ def extract_input_span(
 
 
 def _extract_content_span(kind: str | None, text: str | None, src_offset: int) -> list[Item]:
-    """Phase 1 of one non-media input span."""
+    """Phase 1 of one non-media input span: its prose chunks, then its
+    rendered tables, then its form, numbered by ``sub_idx`` in that order."""
     norm = normalize_text(text)
     if not norm:
         return []
-
-    items: list[Item] = []
-    sub = 0
-
-    def emit(out_kind: str, out_text: str | None, out_ref: str | None) -> None:
-        nonlocal sub
-        items.append((out_kind, out_text, out_ref, src_offset, sub))
-        sub += 1
-
     if kind == config.IN_HTML:
         content = extract_html(norm)
-        for chunk in chunk_text("\n\n".join(content.text_blocks)):
-            emit(config.KIND_TEXT, chunk, None)
-        for grid in content.tables:
-            rendered = render_table(grid)
-            if rendered is not None:
-                emit(config.KIND_TABLE, rendered, None)
-        form = render_form(content.form_fields)
-        if form is not None:
-            emit(config.KIND_FORM, form, None)
+        prose, tables, fields = "\n\n".join(content.text_blocks), content.tables, content.form_fields
     elif kind == config.IN_PDF:
         content = parse_pdf_layout(norm)
-        for chunk in chunk_text(content.paragraphs_text):
-            emit(config.KIND_TEXT, chunk, None)
-        for grid in content.tables:
-            rendered = render_table(grid)
-            if rendered is not None:
-                emit(config.KIND_TABLE, rendered, None)
-        form = render_form(content.form_fields)
-        if form is not None:
-            emit(config.KIND_FORM, form, None)
+        prose, tables, fields = content.paragraphs_text, content.tables, content.form_fields
     else:
         # plain text (also the fallback for unknown input kinds: treat the
         # payload as prose rather than dropping data)
-        for chunk in chunk_text(norm):
-            emit(config.KIND_TEXT, chunk, None)
-
-    return items
+        prose, tables, fields = norm, [], []
+    out = [(config.KIND_TEXT, chunk) for chunk in chunk_text(prose)]
+    out += [(config.KIND_TABLE, t) for t in map(render_table, tables) if t is not None]
+    form = render_form(fields)
+    if form is not None:
+        out.append((config.KIND_FORM, form))
+    return [(k, t, None, src_offset, sub) for sub, (k, t) in enumerate(out)]
 
 
 def finalize(items: Iterable[Item]) -> list[OutSpan]:

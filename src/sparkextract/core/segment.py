@@ -47,15 +47,25 @@ def _split_long_paragraph(para: str) -> list[str]:
     """A paragraph longer than MAX_CHUNK_SIZE is packed sentence-by-sentence
     into pieces of at most CHUNK_SIZE chars (hard-wrapped if one sentence
     alone exceeds CHUNK_SIZE)."""
+    size = config.CHUNK_SIZE
     pieces: list[str] = []
     cur = ""
     for sent in split_sentences(para):
-        while len(sent) > config.CHUNK_SIZE:
+        if len(sent) > size:
             if cur:
                 pieces.append(cur)
                 cur = ""
-            pieces.append(sent[: config.CHUNK_SIZE])
-            sent = sent[config.CHUNK_SIZE:].strip()
+            # wrap by index and slice the rest once: re-slicing the rest at
+            # every wrap copies it each time, quadratic in the sentence.
+            # The sentence is stripped, so skipping the whitespace after a
+            # cut is what .strip() of the rest would remove.
+            i, n = 0, len(sent)
+            while n - i > size:
+                pieces.append(sent[i : i + size])
+                i += size
+                while i < n and sent[i].isspace():
+                    i += 1
+            sent = sent[i:]
         if not sent:
             continue
         if cur and len(cur) + 2 + len(sent) > config.CHUNK_SIZE:

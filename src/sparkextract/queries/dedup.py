@@ -114,6 +114,7 @@ from sparkextract.queries.base import (
 )
 from sparkextract.queries.quality import _Q94_MIN_TOKENS
 from sparkextract.queries.sketches import _kgram_hashes, _kgram_keys_sql
+from sparkextract.queries.text import _bigrams, _bigrams_sql, _words, _words_sql
 
 
 # --------------------------------------------------------------------------
@@ -281,56 +282,62 @@ def q21_fingerprint(spark, sf_dir):
     )
 
 
-_BITS = 16
-
-
-def _simhash_oracle() -> str:
-    # per-bit: sum over distinct tokens of (bit?1:-1), bit b of the 16-bit
-    # value = first 4 hex chars of md5(token)
-    bit_terms = " + ".join(
-        f"(CASE WHEN (v >> {b}) & 1 = 1 THEN (1 << {b}) ELSE 0 END)" for b in range(_BITS)
-    )
-    return f"""
-    WITH toks AS (
-      SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok
-      FROM documents
-    ), bits AS (
-      SELECT doc_id,
-             CAST(('0x' || SUBSTRING(md5(tok), 1, 4))::VARCHAR AS UBIGINT) AS hv
-      FROM toks WHERE tok != ''
-    ), votes AS (
-      SELECT doc_id, {", ".join(
-        f"SUM(CASE WHEN (hv >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}" for b in range(_BITS)
-      )}
-      FROM bits GROUP BY doc_id
-    )
-    SELECT doc_id,
-           CAST({" + ".join(f"(CASE WHEN s{b} > 0 THEN (1 << {b}) ELSE 0 END)" for b in range(_BITS))} AS BIGINT) AS simhash
-    FROM votes
-    """
-
-
-@register("q32_simhash", oracle=_simhash_oracle())
-def q32_simhash(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("tok")
-    ).filter(F.col("tok") != "")
-    hv = F.conv(F.substring(F.md5("tok"), 1, 4), 16, 10).cast("long")
-    bits = toks.select("doc_id", hv.alias("hv"))
-    votes = bits.groupBy("doc_id").agg(
+def _simhash(toks, bits: int, hex_width: int):
+    """(doc_id, tok) -> (doc_id, simhash): the SimHash sign-vote fold.
+    A token's hash is the first ``hex_width`` hex digits of its md5; each
+    token votes +1 on bit b when the hash has it set and -1 when not, and
+    bit b of the ``bits``-bit signature is set when its votes sum above 0."""
+    hv = F.conv(F.substring(F.md5("tok"), 1, hex_width), 16, 10).cast("long")
+    votes = toks.select("doc_id", hv.alias("hv")).groupBy("doc_id").agg(
         *[
             F.sum(
                 F.when(F.shiftright("hv", b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
             ).alias(f"s{b}")
-            for b in range(_BITS)
+            for b in range(bits)
         ]
     )
     sig = None
-    for b in range(_BITS):
+    for b in range(bits):
         term = F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
         sig = term if sig is None else sig + term
     return votes.select("doc_id", sig.cast("long").alias("simhash"))
+
+
+def _simhash_sql(toks: str, bits: int, hex_width: int) -> str:
+    """DuckDB twin of :func:`_simhash` over the (doc_id, tok) relation
+    ``toks``."""
+    votes = ", ".join(
+        f"SUM(CASE WHEN (hv >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
+        for b in range(bits)
+    )
+    sig = " + ".join(
+        f"(CASE WHEN s{b} > 0 THEN (1::BIGINT << {b}) ELSE 0 END)"
+        for b in range(bits)
+    )
+    return f"""
+    SELECT doc_id, CAST({sig} AS BIGINT) AS simhash FROM (
+      SELECT doc_id, {votes} FROM (
+        SELECT doc_id,
+               CAST(('0x' || SUBSTRING(md5(tok), 1, {hex_width}))::VARCHAR AS UBIGINT) AS hv
+        FROM ({toks})
+      ) GROUP BY doc_id
+    )"""
+
+
+# 16-bit SimHash over each doc's distinct words
+_BITS = 16
+
+
+_Q32_ORACLE = _simhash_sql(
+    f"SELECT doc_id, unnest(list_distinct({_words_sql()})) AS tok FROM documents", _BITS, 4
+)
+
+
+@register("q32_simhash", oracle=_Q32_ORACLE)
+def q32_simhash(spark, sf_dir):
+    docs = load(spark, sf_dir, "documents")
+    toks = docs.select("doc_id", F.explode(F.array_distinct(_words())).alias("tok"))
+    return _simhash(toks, _BITS, 4)
 
 
 # --------------------------------------------------------------------------
@@ -582,33 +589,12 @@ _SH_RADIUS = _SH_BANDS - 1  # lossless pigeonhole radius
 
 
 def _simhash48_sql(corpus_cte: str) -> str:
-    """CTE chain ending in sigs(doc_id, simhash) — 48-bit q32 math."""
-    votes = ", ".join(
-        f"SUM(CASE WHEN (hv >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
-        for b in range(_SH_BITS)
-    )
-    sig = " + ".join(
-        f"(CASE WHEN s{b} > 0 THEN (1::BIGINT << {b}) ELSE 0 END)"
-        for b in range(_SH_BITS)
-    )
+    """CTE sigs(doc_id, simhash): DuckDB twin of :func:`_simhash48_col`."""
+    toks = f"""
+      SELECT doc_id, unnest(list_distinct({_bigrams_sql("w")})) AS tok
+      FROM (SELECT doc_id, string_split(text, ' ') AS w FROM ({corpus_cte}))"""
     return f"""
-    words AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM ({corpus_cte})
-    ), toks AS (
-      SELECT doc_id, unnest(list_distinct(
-        list_transform(range(1, GREATEST(LENGTH(w) - 1, 0) + 1),
-                       i -> w[i] || ' ' || w[i+1])
-      )) AS tok
-      FROM words
-    ), bits AS (
-      SELECT doc_id,
-             CAST(('0x' || SUBSTRING(md5(tok), 1, 12))::VARCHAR AS UBIGINT) AS hv
-      FROM toks WHERE tok != ''
-    ), votes AS (
-      SELECT doc_id, {votes} FROM bits GROUP BY doc_id
-    ), sigs AS (
-      SELECT doc_id, CAST({sig} AS BIGINT) AS simhash FROM votes
-    )"""
+    sigs AS ({_simhash_sql(toks, _SH_BITS, 12)})"""
 
 
 _Q68_CORPUS = """
@@ -650,44 +636,15 @@ _Q68_ORACLE = f"""
 
 
 def _simhash48_col(df):
-    """(doc_id, text) df -> (doc_id, simhash) — 48-bit q32 math over
-    distinct word BIGRAMS (unigram token sets barely differ between docs
-    drawn from a small shared vocabulary — measured: a unigram 48-bit
-    simhash still emitted 1.5M hamming<=5 pairs at sf0.1, a bigram one
-    emits ~50 at sf0.01, almost all the injected near-dups)."""
-    w = F.split("text", " ")
-    # single-word (spaceless) docs have no bigrams: sequence(1, 0) in Spark
-    # is the DESCENDING [1, 0], whose element_at(w, 0) aborts the job, while
-    # DuckDB's range(1, 1) is empty — guard to the empty list so both
-    # engines drop the doc from the signature set identically
-    bigrams = F.when(
-        F.size(w) >= 2,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(w) - 1),
-                lambda i: F.concat(
-                    F.element_at(w, i), F.lit(" "), F.element_at(w, i + 1)
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    toks = df.select("doc_id", F.explode(bigrams).alias("tok")).filter(
-        F.col("tok") != ""
-    )
-    hv = F.conv(F.substring(F.md5("tok"), 1, 12), 16, 10).cast("long")
-    votes = toks.select("doc_id", hv.alias("hv")).groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright("hv", b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"s{b}")
-            for b in range(_SH_BITS)
-        ]
-    )
-    sig = None
-    for b in range(_SH_BITS):
-        term = F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        sig = term if sig is None else sig + term
-    return votes.select("doc_id", sig.cast("long").alias("simhash"))
+    """(doc_id, text) df -> (doc_id, simhash) — the 48-bit SimHash of
+    the doc's distinct word BIGRAMS (unigram token sets barely differ
+    between docs drawn from a small shared vocabulary — measured: a
+    unigram 48-bit simhash still emitted 1.5M hamming<=5 pairs at sf0.1,
+    a bigram one emits ~50 at sf0.01, almost all the injected near-dups).
+    A single-word (spaceless) doc has no bigrams, so it drops out of the
+    signature set in both engines."""
+    bigrams = F.array_distinct(_bigrams(F.split("text", " ")))
+    return _simhash(df.select("doc_id", F.explode(bigrams).alias("tok")), _SH_BITS, 12)
 
 
 # signature-table memo, (applicationId, sf_dir)-keyed: repeated
@@ -799,9 +756,9 @@ def simhash_banded_pairs(sigs):
 # signature self-join (key cardinality 6*2^8) and the bigram votes agg;
 # the survivor join broadcasts the label frame (clustered nodes only, a
 # tiny fraction of the corpus).
-_Q94_EXTRACTED = """
+_Q94_EXTRACTED = f"""
   SELECT doc_id, text,
-         len(list_filter(string_split(text, ' '), t -> t <> '')) AS n_tokens
+         len({_words_sql()}) AS n_tokens
   FROM (
     SELECT doc_id, text FROM documents WHERE n_chars >= 100
     UNION ALL
@@ -858,11 +815,10 @@ def _q94_base(spark, sf_dir):
             ).alias("text"),
         )
         spans = extract_exploded(wrap_docs(docs.unionByName(injected)))
-        toks = F.filter(F.split("text", " "), lambda t: t != F.lit(""))
         return spans.filter(F.col("kind") == "text").select(
             F.col("doc_id").cast("long").alias("doc_id"),
             "text",
-            F.size(toks).cast("long").alias("n_tokens"),
+            F.size(_words()).cast("long").alias("n_tokens"),
         )
 
     return checkpoint_memo(spark, sf_dir, "q94_base", build)
@@ -1043,10 +999,7 @@ _Q96_BLOCK = 8
 
 
 _Q96_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS a
-  FROM documents
-),
+WITH toks AS (SELECT doc_id, {_words_sql()} AS a FROM documents),
 blocks AS (
   SELECT doc_id, i - 1 AS block_idx,
          array_to_string(a[(i - 1) * {_Q96_BLOCK} + 1 : i * {_Q96_BLOCK}], ' ')
@@ -1075,7 +1028,7 @@ GROUP BY doc_id
 @register("q96_block_dedup", oracle=_Q96_ORACLE)
 def q96_block_dedup(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
-    a = F.filter(F.split("text", " "), lambda t: t != F.lit(""))
+    a = _words()
     # size==0 guard: F.sequence(1, 0) is DESCENDING in Spark (the q84
     # advice bug class) — zero-token docs must yield an empty block list
     blocks = F.when(
@@ -1351,8 +1304,7 @@ _Q139_GRAM_SQL = "||'|'||".join(
 
 _Q139_ORACLE = f"""
 WITH t AS (
-  SELECT doc_id, lang, list_filter(string_split(text, ' '), x -> x <> '') AS l
-  FROM documents
+  SELECT doc_id, lang, {_words_sql()} AS l FROM documents
 ),
 gr AS (
   SELECT DISTINCT doc_id, lang,
@@ -1372,10 +1324,7 @@ cand AS (
   GROUP BY 1, 2
 ),
 s AS (
-  SELECT doc_id,
-         list_distinct(list_filter(string_split(text, ' '), x -> x <> ''))
-           AS s
-  FROM documents
+  SELECT doc_id, list_distinct({_words_sql()}) AS s FROM documents
 )
 SELECT c.left_id, c.right_id, c.n_shared_keys,
        CAST(ROUND(CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
@@ -1392,8 +1341,7 @@ JOIN s sb ON sb.doc_id = c.right_id
 def q139_bitext_candidates(spark, sf_dir):
     def _build_grams():
         docs = load(spark, sf_dir, "documents")
-        toks = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
-        t = docs.select("doc_id", "lang", toks.alias("l")).filter(
+        t = docs.select("doc_id", "lang", _words().alias("l")).filter(
             F.size("l") >= _Q139_K
         )
         l = F.col("l")
@@ -1433,10 +1381,7 @@ def q139_bitext_candidates(spark, sf_dir):
         .agg(F.count("*").cast("long").alias("n_shared_keys"))
     )
     sets = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.array_distinct(
-            F.filter(F.split("text", " "), lambda x: x != F.lit(""))
-        ).alias("s"),
+        "doc_id", F.array_distinct(_words()).alias("s")
     )
     sa = sets.select(F.col("doc_id").alias("a_id"), F.col("s").alias("sa"))
     sb = sets.select(F.col("doc_id").alias("b_id"), F.col("s").alias("sb"))
@@ -1739,9 +1684,7 @@ WITH cand AS (
   )
 ),
 sets AS (
-  SELECT doc_id,
-         list_distinct(list_filter(string_split(text, ' '), t -> t <> '')) AS s
-  FROM documents
+  SELECT doc_id, list_distinct({_words_sql()}) AS s FROM documents
 ),
 scored AS (
   SELECT c.left_id, c.right_id,
@@ -1787,12 +1730,7 @@ def q194_sorted_neighborhood(spark, sf_dir):
         F.substring(F.reverse(F.substring("text", 1, 24)), 1, 4),
     )
     cand = p1.unionByName(p2).distinct()
-    sets = docs.select(
-        "doc_id",
-        F.array_distinct(
-            F.filter(F.split("text", " "), lambda t: t != F.lit(""))
-        ).alias("s"),
-    )
+    sets = docs.select("doc_id", F.array_distinct(_words()).alias("s"))
     a = sets.select(F.col("doc_id").alias("left_id"), F.col("s").alias("sa"))
     b = sets.select(F.col("doc_id").alias("right_id"), F.col("s").alias("sb"))
     scored = (

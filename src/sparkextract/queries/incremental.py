@@ -35,6 +35,7 @@ from sparkextract.queries.base import (
     register,
 )
 from sparkextract.queries.extraction import ocr_sql
+from sparkextract.queries.text import _words, _words_sql
 
 
 # --------------------------------------------------------------------------
@@ -380,14 +381,10 @@ _DRIFT_OLD = """
 
 
 _DRIFT_ORACLE = f"""
-WITH old_toks AS (
-  SELECT unnest(string_split(text, ' ')) AS t FROM ({_DRIFT_OLD})
-),
-new_toks AS (
-  SELECT unnest(string_split(text, ' ')) AS t FROM documents
-),
-co_ AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS co FROM old_toks WHERE t <> '' GROUP BY t),
-cn_ AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS cn FROM new_toks WHERE t <> '' GROUP BY t),
+WITH old_toks AS (SELECT unnest({_words_sql()}) AS t FROM ({_DRIFT_OLD})),
+new_toks AS (SELECT unnest({_words_sql()}) AS t FROM documents),
+co_ AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS co FROM old_toks GROUP BY t),
+cn_ AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS cn FROM new_toks GROUP BY t),
 u AS (
   SELECT COALESCE(co_.t, cn_.t) AS token,
          COALESCE(co, 0) AS co, COALESCE(cn, 0) AS cn
@@ -434,8 +431,7 @@ def snapshot_token_drift(spark, sf_dir):
 
         def counts(df, name):
             return (
-                df.select(F.explode(F.split("text", " ")).alias("t"))
-                .filter(F.col("t") != "")
+                df.select(F.explode(_words()).alias("t"))
                 .groupBy("t")
                 .agg(F.count("*").alias(name))
             )

@@ -90,6 +90,7 @@ from sparkextract.queries.base import (
     md5_bucket_sql,
     register,
 )
+from sparkextract.queries.text import _bigrams, _bigrams_sql, _words, _words_sql
 
 
 # --------------------------------------------------------------------------
@@ -136,16 +137,16 @@ def q25_quality_score(spark, sf_dir):
 # q84: REPETITION-RATIO QUALITY RULES (Gopher-style) — per-document
 # duplicate-bigram fraction and most-common-word mass fraction, the two
 # repetition signals the Gopher/MassiveText filter family uses beyond
-# a length/diversity cascade. Bigram construction
-# guards size<2 explicitly (F.sequence(1,0) is DESCENDING in Spark —
-# the q68 advice bug class); both fractions are ROUND(...,6)-ed BEFORE
-# the threshold compare so the keep decision is identical in both
-# engines. Scale shape: ONE text scan — the bigram stats are
-# array-local, so they are computed before the word explode and carried
-# through both aggregations as grouping keys (functionally dependent on
-# doc_id); no big/tw join exists at all (r3 plan audit showed 2 scans +
-# a doc_id join). Both shuffles are key-partitioned and mergeable;
-# nothing is quadratic in doc length but the bigram list (linear).
+# a length/diversity cascade. Bigrams come from text._bigrams, which
+# yields none for fewer than two words in both engines; both fractions
+# are ROUND(...,6)-ed BEFORE the threshold compare so the keep decision
+# is identical in both engines. Scale shape: ONE text scan — the bigram
+# stats are array-local, so they are computed before the word explode
+# and carried through both aggregations as grouping keys (functionally
+# dependent on doc_id); no big/tw join exists at all (r3 plan audit
+# showed 2 scans + a doc_id join). Both shuffles are key-partitioned and
+# mergeable; nothing is quadratic in doc length but the bigram list
+# (linear).
 _Q84_DUP_MAX = 0.05   # duplicate-bigram fraction ceiling
 
 
@@ -153,19 +154,12 @@ _Q84_TOP_MAX = 0.15   # most-common-word mass ceiling
 
 
 _Q84_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS a
-  FROM documents
-),
+WITH toks AS (SELECT doc_id, {_words_sql()} AS a FROM documents),
 big AS (
   SELECT doc_id,
     len(grams) AS n_bigrams,
     len(list_distinct(grams)) AS n_distinct_bigrams
-  FROM (
-    SELECT doc_id,
-      list_transform(range(1, len(a)), i -> a[i] || ' ' || a[i+1]) AS grams
-    FROM toks
-  )
+  FROM (SELECT doc_id, {_bigrams_sql("a")} AS grams FROM toks)
 ),
 wc AS (
   SELECT doc_id, t AS word, COUNT(*) AS cnt
@@ -196,22 +190,8 @@ FROM scored
 @register("q84_repetition_rules", oracle=_Q84_ORACLE)
 def q84_repetition_rules(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.filter(F.split("text", " "), lambda t: t != F.lit("")).alias("a"),
-    )
-    grams = (
-        F.when(
-            F.size("a") >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size("a") - 1),
-                lambda i: F.concat_ws(
-                    " ", F.element_at("a", i), F.element_at("a", i + 1)
-                ),
-            ),
-        )
-        .otherwise(F.array().cast("array<string>"))
-    )
+    toks = docs.select("doc_id", _words().alias("a"))
+    grams = _bigrams(F.col("a"))
     # Per-doc stats MUST become attributes in their own select BEFORE the
     # explode: a generator select hoists every non-attribute expression
     # into a Project ABOVE the Generate, re-evaluating the O(len^2)
@@ -284,15 +264,8 @@ _Q87_MIN_LOGP = -3.45
 
 
 _Q87_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS a
-  FROM documents
-),
-inst AS (
-  SELECT doc_id,
-    unnest(list_transform(range(1, len(a)), i -> a[i] || ' ' || a[i+1])) AS bigram
-  FROM toks
-),
+WITH toks AS (SELECT doc_id, {_words_sql()} AS a FROM documents),
+inst AS (SELECT doc_id, unnest({_bigrams_sql("a")}) AS bigram FROM toks),
 c2 AS (SELECT bigram, CAST(COUNT(*) AS BIGINT) AS cnt2 FROM inst GROUP BY 1),
 c1 AS (
   SELECT split_part(bigram, ' ', 1) AS w1, CAST(COUNT(*) AS BIGINT) AS cnt1
@@ -326,25 +299,9 @@ def q87_lm_quality_score(spark, sf_dir):
         spark,
         sf_dir,
         "q87_toks",
-        lambda: load(spark, sf_dir, "documents").select(
-            "doc_id",
-            F.filter(F.split("text", " "), lambda t: t != F.lit("")).alias("a"),
-        ),
+        lambda: load(spark, sf_dir, "documents").select("doc_id", _words().alias("a")),
     )
-    inst = toks.select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size("a") >= 2,
-                F.transform(
-                    F.sequence(F.lit(1), F.size("a") - 1),
-                    lambda i: F.concat_ws(
-                        " ", F.element_at("a", i), F.element_at("a", i + 1)
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("bigram"),
-    )
+    inst = toks.select("doc_id", F.explode(_bigrams(F.col("a"))).alias("bigram"))
     c2 = inst.groupBy("bigram").agg(F.count("*").alias("cnt2"))
     c1 = (
         inst.select(F.substring_index("bigram", " ", 1).alias("w1"))
@@ -408,8 +365,7 @@ _Q130_LOW_ENTROPY = 3.0
 
 _Q130_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest(list_filter(string_split(text, ' '), t -> t <> '')) AS t
-  FROM documents
+  SELECT doc_id, unnest({_words_sql()}) AS t FROM documents
 ),
 wc AS (
   SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS c
@@ -435,11 +391,7 @@ FROM agg
 
 @register("q130_token_entropy", oracle=_Q130_ORACLE)
 def q130_token_entropy(spark, sf_dir):
-    toks = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(F.split("text", " ")).alias("t"))
-        .filter(F.col("t") != "")
-    )
+    toks = load(spark, sf_dir, "documents").select("doc_id", F.explode(_words()).alias("t"))
     c = F.col("c").cast("double")
     wc = toks.groupBy("doc_id", "t").agg(F.count("*").alias("c"))
     agg = wc.groupBy("doc_id").agg(
@@ -610,11 +562,7 @@ FROM (
              AS sum_len,
            CAST(len(list_filter(l, x -> x IN ({_Q135_STOP_SQL})))
                 AS BIGINT) AS n_stop
-    FROM (
-      SELECT doc_id,
-             list_filter(string_split(text, ' '), x -> x <> '') AS l
-      FROM documents
-    )
+    FROM (SELECT doc_id, {_words_sql()} AS l FROM documents)
     WHERE len(l) >= 1
   )
 )
@@ -624,9 +572,8 @@ FROM (
 @register("q135_quality_classifier", oracle=_Q135_ORACLE)
 def q135_quality_classifier(spark, sf_dir):
     # map-only: one documents scan, array exprs, no shuffle
-    toks = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
     t = load(spark, sf_dir, "documents").select(
-        "doc_id", toks.alias("l")
+        "doc_id", _words().alias("l")
     ).filter(F.size("l") >= 1)
     l = F.col("l")
 
@@ -676,8 +623,7 @@ _Q136_Z_FLAG_U = 2_000_000  # flag at z >= 2
 
 _Q136_ORACLE = f"""
 WITH t AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS l
-  FROM documents
+  SELECT doc_id, {_words_sql()} AS l FROM documents
 ),
 b AS (
   SELECT doc_id,
@@ -706,8 +652,7 @@ FROM g
 @register("q136_watermark_detect", oracle=_Q136_ORACLE)
 def q136_watermark_detect(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
-    t = docs.select("doc_id", toks.alias("l")).filter(F.size("l") >= 2)
+    t = docs.select("doc_id", _words().alias("l")).filter(F.size("l") >= 2)
     l = F.col("l")
     bg = F.transform(
         F.sequence(F.lit(2), F.size(l)),
@@ -875,8 +820,7 @@ _Q189_D = 0.75  # absolute discount (Chen & Goodman's fixed-D variant)
 
 _Q189_ORACLE = f"""
 WITH words AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS w
-  FROM documents
+  SELECT doc_id, {_words_sql()} AS w FROM documents
 ),
 inst AS (
   SELECT doc_id, w[i] AS a, w[i + 1] AS b
@@ -916,10 +860,7 @@ GROUP BY i.doc_id
 
 
 def _q189_inst(spark, sf_dir):
-    words = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.filter(F.split("text", " "), lambda t: t != F.lit("")).alias("w"),
-    )
+    words = load(spark, sf_dir, "documents").select("doc_id", _words().alias("w"))
     return words.select(
         "doc_id",
         F.explode(

@@ -69,6 +69,7 @@ from sparkextract.queries.base import (
     md5_bucket_sql,
     register,
 )
+from sparkextract.queries.text import _bigrams, _bigrams_sql, _words, _words_sql
 
 
 # --------------------------------------------------------------------------
@@ -77,25 +78,32 @@ from sparkextract.queries.base import (
 _QUERY_WORDS = "table join window filter merge"
 
 
+def _overlap(text="text"):
+    """The keyword overlap |words(_QUERY_WORDS) ∩ distinct words(text)|."""
+    return F.size(
+        F.array_intersect(
+            F.split(F.lit(_QUERY_WORDS), " "), F.array_distinct(F.split(text, " "))
+        )
+    )
+
+
+def _overlap_sql(text: str = "text") -> str:
+    """DuckDB twin of :func:`_overlap`."""
+    return (f"LENGTH(list_intersect(string_split('{_QUERY_WORDS}', ' '),"
+            f" list_distinct(string_split({text}, ' '))))")
+
+
 @register(
     "q36_keyword_overlap",
     oracle=f"""
-    SELECT doc_id,
-           ROUND(LENGTH(list_intersect(string_split('{_QUERY_WORDS}', ' '),
-                                       list_distinct(string_split(text, ' ')))) * 0.01,
-                 6) AS overlap_score
+    SELECT doc_id, ROUND({_overlap_sql()} * 0.01, 6) AS overlap_score
     FROM documents
-    WHERE LENGTH(list_intersect(string_split('{_QUERY_WORDS}', ' '),
-                                list_distinct(string_split(text, ' ')))) >= 3
+    WHERE {_overlap_sql()} >= 3
     """,
 )
 def q36_keyword_overlap(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
-    overlap = F.size(
-        F.array_intersect(
-            F.split(F.lit(_QUERY_WORDS), " "), F.array_distinct(F.split("text", " "))
-        )
-    )
+    overlap = _overlap()
     return (
         docs.select("doc_id", F.round(overlap * 0.01, 6).alias("overlap_score"), overlap.alias("_n"))
         .filter(F.col("_n") >= 3)
@@ -107,8 +115,7 @@ _Q55_ORACLE = f"""
     WITH cand AS ({_cos_top10_sql()}),
     scored AS (
       SELECT c.vec_id, c.cosine,
-             CAST(LENGTH(list_intersect(string_split('{_QUERY_WORDS}', ' '),
-                                        list_distinct(string_split(d.text, ' ')))) AS INT) AS overlap
+             CAST({_overlap_sql("d.text")} AS INT) AS overlap
       FROM cand c JOIN documents d ON d.doc_id = c.vec_id
     )
     SELECT vec_id, cosine, overlap,
@@ -123,14 +130,9 @@ _Q55_ORACLE = f"""
 def q55_rerank_topk(spark, sf_dir):
     cand = _cos_top10(spark, sf_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    overlap = F.size(
-        F.array_intersect(
-            F.split(F.lit(_QUERY_WORDS), " "), F.array_distinct(F.split("text", " "))
-        )
-    )
     scored = docs.join(
         F.broadcast(cand), docs["doc_id"] == cand["vec_id"]
-    ).select("vec_id", "cosine", overlap.alias("overlap"))
+    ).select("vec_id", "cosine", _overlap().alias("overlap"))
     return (
         scored.select(
             "vec_id",
@@ -169,10 +171,7 @@ _Q58_ORACLE = f"""
     ),
     reranked AS (
       SELECT vec_id, cosine, n_chars,
-             ROUND(cosine
-               + CAST(LENGTH(list_intersect(string_split('{_QUERY_WORDS}', ' '),
-                                            list_distinct(string_split(text, ' ')))) AS INT)
-                 * 0.01, 6) AS rerank_score
+             ROUND(cosine + CAST({_overlap_sql()} AS INT) * 0.01, 6) AS rerank_score
       FROM deduped
     ),
     budgeted AS (
@@ -203,15 +202,10 @@ def q58_retrieval_pipeline(spark, sf_dir):
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-    overlap = F.size(
-        F.array_intersect(
-            F.split(F.lit(_QUERY_WORDS), " "), F.array_distinct(F.split("text", " "))
-        )
-    )
     reranked = deduped.select(
         "vec_id",
         "n_chars",
-        F.round(F.col("cosine") + overlap * 0.01, 6).alias("rerank_score"),
+        F.round(F.col("cosine") + _overlap() * 0.01, 6).alias("rerank_score"),
     )
     w = (
         W.orderBy(F.desc("rerank_score"), F.asc("vec_id"))
@@ -237,8 +231,20 @@ def q58_retrieval_pipeline(spark, sf_dir):
 _Q73_K = 3
 
 
-_Q73_ORACLE = f"""
-WITH toks AS (
+def _term_tf(docs):
+    """(doc_id, text) -> (doc_id, token, tf): the count of each term of
+    each doc, where the terms are the runs of letters of lower(text) that
+    are at least 2 long."""
+    toks = docs.select(
+        "doc_id",
+        F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("token"),
+    ).filter(F.length("token") >= 2)
+    return toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
+
+
+# DuckDB twin of _term_tf over the documents table: the toks and tf CTEs
+_TERM_TF_SQL = """
+toks AS (
   SELECT doc_id, t AS token
   FROM (
     SELECT doc_id, unnest(regexp_split_to_array(lower(text), '[^a-z]+')) AS t
@@ -247,7 +253,11 @@ WITH toks AS (
 ),
 tf AS (
   SELECT doc_id, token, COUNT(*) AS tf FROM toks GROUP BY doc_id, token
-),
+)"""
+
+
+_Q73_ORACLE = f"""
+WITH {_TERM_TF_SQL},
 df AS (
   SELECT token, COUNT(DISTINCT doc_id) AS df FROM tf GROUP BY token
 ),
@@ -269,11 +279,7 @@ FROM (
 @register("q73_tfidf_topk", oracle=_Q73_ORACLE)
 def q73_tfidf_topk(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("token"),
-    ).filter(F.length("token") >= 2)
-    tf = toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
+    tf = _term_tf(docs)
     df = tf.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))
     # N as a lazy broadcast 1-row aggregate (the oracle's CROSS JOIN n
     # shape) — an eager docs.count() here would run an extra full-scan
@@ -317,15 +323,12 @@ _Q121_TOPK = 100
 
 
 def _tf_sql(gram: str) -> str:
-    if gram == "uni":
-        grams = "SELECT doc_id, unnest(string_split(text, ' ')) AS g FROM documents"
-    else:
-        grams = """
-        SELECT doc_id, t[i] || ' ' || t[i + 1] AS g
-        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-             UNNEST(range(1, len(t))) AS u(i)
-        """
-    return f"SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS c FROM ({grams}) WHERE g != '' GROUP BY 1, 2"
+    g = "t" if gram == "uni" else _bigrams_sql("t")
+    return f"""
+    SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS c FROM (
+      SELECT doc_id, unnest({g}) AS g
+      FROM (SELECT doc_id, {_words_sql()} AS t FROM documents)
+    ) GROUP BY 1, 2"""
 
 
 _Q121_ORACLE = f"""
@@ -369,18 +372,13 @@ LIMIT {_Q121_TOPK}
 
 
 def _tf_spark(docs, gram: str):
-    toks = docs.select(
-        "doc_id", F.filter(F.split("text", " "), lambda t: t != F.lit("")).alias("t")
+    toks = docs.select("doc_id", _words().alias("t"))
+    g = F.col("t") if gram == "uni" else _bigrams(F.col("t"))
+    return (
+        toks.select("doc_id", F.explode(g).alias("g"))
+        .groupBy("doc_id", "g")
+        .agg(F.count("*").cast("long").alias("c"))
     )
-    if gram == "uni":
-        g = toks.select("doc_id", F.explode("t").alias("g"))
-    else:
-        bi = F.transform(
-            F.slice(F.col("t"), 1, F.greatest(F.size("t") - 1, F.lit(0))),
-            lambda x, i: F.concat_ws(" ", x, F.element_at(F.col("t"), i + 2)),
-        )
-        g = toks.select("doc_id", F.explode(bi).alias("g"))
-    return g.groupBy("doc_id", "g").agg(F.count("*").cast("long").alias("c"))
 
 
 def _clipped_overlap(tf):
@@ -478,17 +476,10 @@ _Q125_STRIDE = 50
 _Q125_QTERMS = 5
 
 
-_Q125_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, t AS token
-  FROM (
-    SELECT doc_id, unnest(regexp_split_to_array(lower(text), '[^a-z]+')) AS t
-    FROM documents
-  ) WHERE LENGTH(t) >= 2
-),
-tf AS (
-  SELECT doc_id, token, COUNT(*) AS tf FROM toks GROUP BY doc_id, token
-),
+# the BM25 candidates: one row per (query, doc, shared term) carrying
+# tf, the term's df, the doc's length dl, n_docs and avgdl; q125 and
+# q127 both score these
+_BM25_CAND_SQL = f"""{_TERM_TF_SQL},
 dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY doc_id),
 stats AS (
   SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
@@ -502,26 +493,34 @@ qterms AS (
     FROM tf WHERE doc_id % {_Q125_STRIDE} = 0
   ) WHERE tn <= {_Q125_QTERMS}
 ),
-contrib AS (
-  SELECT q.query_id, tf.doc_id,
-         CAST(ROUND(
-           LN(CAST(1 AS DOUBLE)
-              + (CAST(s.n_docs - dfx.df AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                / (CAST(dfx.df AS DOUBLE) + CAST(0.5 AS DOUBLE)))
-           * (CAST(tf.tf AS DOUBLE) * CAST(2.2 AS DOUBLE)
-              / (CAST(tf.tf AS DOUBLE)
-                 + CAST(1.2 AS DOUBLE)
-                   * (CAST(0.25 AS DOUBLE)
-                      + CAST(0.75 AS DOUBLE) * CAST(dl.dl AS DOUBLE) / s.avgdl)))
-         , 6) AS DECIMAL(18,6)) AS c
+cand AS (
+  SELECT q.query_id, tf.doc_id, tf.tf, dfx.df, dl.dl, s.n_docs, s.avgdl
   FROM qterms q
   JOIN dfx ON dfx.token = q.token
   JOIN tf ON tf.token = q.token
   JOIN dl ON dl.doc_id = tf.doc_id
   CROSS JOIN stats s
-),
+)"""
+
+
+# DuckDB twin of _bm25_contrib over a cand row
+_BM25_CONTRIB_SQL = """CAST(ROUND(
+    LN(CAST(1 AS DOUBLE)
+       + (CAST(n_docs - df AS DOUBLE) + CAST(0.5 AS DOUBLE))
+         / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE)))
+    * (CAST(tf AS DOUBLE) * CAST(2.2 AS DOUBLE)
+       / (CAST(tf AS DOUBLE)
+          + CAST(1.2 AS DOUBLE)
+            * (CAST(0.25 AS DOUBLE)
+               + CAST(0.75 AS DOUBLE) * CAST(dl AS DOUBLE) / avgdl)))
+  , 6) AS DECIMAL(18,6))"""
+
+
+_Q125_ORACLE = f"""
+WITH {_BM25_CAND_SQL},
 scores AS (
-  SELECT query_id, doc_id, SUM(c) AS sc FROM contrib GROUP BY query_id, doc_id
+  SELECT query_id, doc_id, SUM({_BM25_CONTRIB_SQL}) AS sc
+  FROM cand GROUP BY query_id, doc_id
 )
 SELECT query_id, CAST(rnk AS BIGINT) AS rnk, doc_id, CAST(sc AS DOUBLE) AS score
 FROM (
@@ -533,31 +532,15 @@ ORDER BY query_id, rnk
 """
 
 
-def _bm25_tf(spark, sf_dir):
-    """The (doc_id, token, tf) table q125/q127 score over, memoized:
-    tf feeds FOUR subtrees per query (dl, avgdl stats, df, query terms,
-    candidates) — materialize the tokenized corpus once per (session,
-    input) instead of re-scanning the documents parquet per subtree
-    (the q68/q94 memo discipline; at real scale this is the
-    tokenized-corpus table write)."""
-    from sparkextract.queries.base import checkpoint_memo
-
-    def _build_tf():
-        docs = load(spark, sf_dir, "documents")
-        toks = docs.select(
-            "doc_id",
-            F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("token"),
-        ).filter(F.length("token") >= 2)
-        return toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
-
-    return checkpoint_memo(spark, sf_dir, "q125_tf", _build_tf)
-
-
-@register("q125_bm25_topk", oracle=_Q125_ORACLE)
-def q125_bm25_topk(spark, sf_dir):
-    from pyspark.sql import Window
-
-    tf = _bm25_tf(spark, sf_dir)
+def _bm25_cand(spark, sf_dir):
+    """Spark twin of _BM25_CAND_SQL. The (doc_id, token, tf) table feeds
+    five subtrees (dl, avgdl stats, df, query terms, candidates), so it
+    is materialized once per (session, input) instead of re-scanning the
+    documents parquet per subtree (the q68/q94 memo discipline; at real
+    scale this is the tokenized-corpus table write)."""
+    tf = checkpoint_memo(
+        spark, sf_dir, "q125_tf", lambda: _term_tf(load(spark, sf_dir, "documents"))
+    )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = dl.agg(
         F.count("*").alias("n_docs"),
@@ -575,9 +558,15 @@ def q125_bm25_topk(spark, sf_dir):
     # and the enriched (query_id, token, df) result broadcasts onto the
     # tf scan so candidate generation never shuffles the corpus by token
     qinfo = qterms.join(dfx, "token")
-    cand = tf.join(F.broadcast(qinfo), "token").join(dl, "doc_id").crossJoin(
+    return tf.join(F.broadcast(qinfo), "token").join(dl, "doc_id").crossJoin(
         F.broadcast(stats)
     )
+
+
+def _bm25_contrib():
+    """A candidate term's BM25 contribution
+    idf * tf*(k1+1) / (tf + k1*(1-b + b*dl/avgdl)), k1=1.2, b=0.75,
+    rounded to 6 places as DECIMAL(18,6)."""
     idf = F.log(
         F.lit(1.0)
         + ((F.col("n_docs") - F.col("df")).cast("double") + F.lit(0.5))
@@ -588,10 +577,14 @@ def q125_bm25_topk(spark, sf_dir):
         + F.lit(1.2)
         * (F.lit(0.25) + F.lit(0.75) * F.col("dl").cast("double") / F.col("avgdl"))
     )
+    return F.round(idf * tff, 6).cast("decimal(18,6)")
+
+
+@register("q125_bm25_topk", oracle=_Q125_ORACLE)
+def q125_bm25_topk(spark, sf_dir):
     scores = (
-        cand.select(
-            "query_id", "doc_id", F.round(idf * tff, 6).cast("decimal(18,6)").alias("c")
-        )
+        _bm25_cand(spark, sf_dir)
+        .select("query_id", "doc_id", _bm25_contrib().alias("c"))
         .groupBy("query_id", "doc_id")
         .agg(F.sum("c").alias("sc"))
     )
@@ -630,56 +623,16 @@ _Q127_RRF_C = 60
 
 
 _Q127_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, t AS token
-  FROM (
-    SELECT doc_id, unnest(regexp_split_to_array(lower(text), '[^a-z]+')) AS t
-    FROM documents
-  ) WHERE LENGTH(t) >= 2
-),
-tf AS (
-  SELECT doc_id, token, COUNT(*) AS tf FROM toks GROUP BY doc_id, token
-),
-dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY doc_id),
-stats AS (
-  SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
-  FROM dl
-),
-dfx AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
-qterms AS (
-  SELECT doc_id AS query_id, token FROM (
-    SELECT doc_id, token,
-           ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY token) AS tn
-    FROM tf WHERE doc_id % {_Q125_STRIDE} = 0
-  ) WHERE tn <= {_Q125_QTERMS}
-),
-contrib AS (
-  SELECT q.query_id, tf.doc_id,
-         CAST(ROUND(
-           LN(CAST(1 AS DOUBLE)
-              + (CAST(s.n_docs - dfx.df AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                / (CAST(dfx.df AS DOUBLE) + CAST(0.5 AS DOUBLE)))
-           * (CAST(tf.tf AS DOUBLE) * CAST(2.2 AS DOUBLE)
-              / (CAST(tf.tf AS DOUBLE)
-                 + CAST(1.2 AS DOUBLE)
-                   * (CAST(0.25 AS DOUBLE)
-                      + CAST(0.75 AS DOUBLE) * CAST(dl.dl AS DOUBLE) / s.avgdl)))
-         , 6) AS DECIMAL(18,6)) AS c_bm25,
-         CAST(ROUND(
-           CAST(tf.tf AS DOUBLE)
-           * LN((CAST(s.n_docs AS DOUBLE) + CAST(1 AS DOUBLE))
-                / (CAST(dfx.df AS DOUBLE) + CAST(1 AS DOUBLE)))
-         , 6) AS DECIMAL(18,6)) AS c_tfidf
-  FROM qterms q
-  JOIN dfx ON dfx.token = q.token
-  JOIN tf ON tf.token = q.token
-  JOIN dl ON dl.doc_id = tf.doc_id
-  CROSS JOIN stats s
-),
+WITH {_BM25_CAND_SQL},
 scores AS (
   SELECT query_id, doc_id,
-         SUM(c_bm25) AS sc_bm25, SUM(c_tfidf) AS sc_tfidf
-  FROM contrib GROUP BY query_id, doc_id
+         SUM({_BM25_CONTRIB_SQL}) AS sc_bm25,
+         SUM(CAST(ROUND(
+           CAST(tf AS DOUBLE)
+           * LN((CAST(n_docs AS DOUBLE) + CAST(1 AS DOUBLE))
+                / (CAST(df AS DOUBLE) + CAST(1 AS DOUBLE)))
+         , 6) AS DECIMAL(18,6))) AS sc_tfidf
+  FROM cand GROUP BY query_id, doc_id
 ),
 ranked AS (
   SELECT query_id, doc_id,
@@ -710,45 +663,15 @@ ORDER BY query_id, rnk
 
 @register("q127_rrf_fusion", oracle=_Q127_ORACLE)
 def q127_rrf_fusion(spark, sf_dir):
-    from pyspark.sql import Window
-
-    tf = _bm25_tf(spark, sf_dir)
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    stats = dl.agg(
-        F.count("*").alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-    )
-    dfx = tf.groupBy("token").agg(F.count("*").alias("df"))
-    wq = Window.partitionBy("doc_id").orderBy("token")
-    qterms = (
-        tf.filter(F.col("doc_id") % _Q125_STRIDE == 0)
-        .withColumn("tn", F.row_number().over(wq))
-        .filter(F.col("tn") <= _Q125_QTERMS)
-        .select(F.col("doc_id").alias("query_id"), "token")
-    )
-    qinfo = qterms.join(dfx, "token")
-    cand = tf.join(F.broadcast(qinfo), "token").join(dl, "doc_id").crossJoin(
-        F.broadcast(stats)
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + ((F.col("n_docs") - F.col("df")).cast("double") + F.lit(0.5))
-        / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    tff = (F.col("tf").cast("double") * F.lit(2.2)) / (
-        F.col("tf").cast("double")
-        + F.lit(1.2)
-        * (F.lit(0.25) + F.lit(0.75) * F.col("dl").cast("double") / F.col("avgdl"))
-    )
     tfidf = F.col("tf").cast("double") * F.log(
         (F.col("n_docs").cast("double") + F.lit(1.0))
         / (F.col("df").cast("double") + F.lit(1.0))
     )
     scores = (
-        cand.select(
+        _bm25_cand(spark, sf_dir).select(
             "query_id",
             "doc_id",
-            F.round(idf * tff, 6).cast("decimal(18,6)").alias("c_bm25"),
+            _bm25_contrib().alias("c_bm25"),
             F.round(tfidf, 6).cast("decimal(18,6)").alias("c_tfidf"),
         )
         .groupBy("query_id", "doc_id")

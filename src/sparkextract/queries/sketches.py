@@ -76,6 +76,7 @@ from sparkextract.queries.base import (
     md5_bucket_sql,
     register,
 )
+from sparkextract.queries.text import _words, _words_sql
 
 
 # --------------------------------------------------------------------------
@@ -142,7 +143,7 @@ def _kgram_hashes(df, k: int):
     """(doc_id, text) -> (doc_id, kh): distinct md5 keys of the doc's
     word k-grams, generated doc-locally (no shuffle until the consumer's
     own agg/join)."""
-    a = F.filter(F.split("text", " "), lambda t: t != F.lit(""))
+    a = _words()
     kgrams = F.when(
         F.size(a) >= k,
         F.transform(
@@ -164,9 +165,7 @@ def _kgram_keys_sql(src: str, k: int) -> str:
     SELECT doc_id,
            unnest(list_transform(range(1, len(a) - {k} + 2),
                   i -> array_to_string(a[i:i+{k - 1}], ' '))) AS kgram
-    FROM (SELECT doc_id,
-                 list_filter(string_split(text, ' '), t -> t <> '') AS a
-          FROM {src})
+    FROM (SELECT doc_id, {_words_sql()} AS a FROM {src})
     WHERE len(a) >= {k})"""
 
 
@@ -366,9 +365,7 @@ _Q179_ORACLE = f"""
 WITH tok AS (
   SELECT {md5_bucket_sql("doc_id", _Q179_P)} AS pid, t AS token
   FROM (
-    SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> ''))
-      AS t
-    FROM documents
+    SELECT doc_id, unnest({_words_sql()}) AS t FROM documents
   )
 ),
 pc AS (
@@ -425,8 +422,8 @@ def q179_misra_gries_heavy_hitters(spark, sf_dir):
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     tok = docs.select(
         md5_bucket(F.col("doc_id"), _Q179_P).alias("pid"),
-        F.explode(F.split("text", " ")).alias("token"),
-    ).filter(F.col("token") != "")
+        F.explode(_words()).alias("token"),
+    )
     pc = tok.groupBy("pid", "token").agg(F.count("*").cast("long").alias("cnt"))
     wp = Window.partitionBy("pid").orderBy(F.desc("cnt"), F.asc("token"))
     pranked = pc.withColumn("rn", F.row_number().over(wp))
@@ -497,7 +494,7 @@ _Q196_HV = "CAST(('0x' || SUBSTRING(md5(t), 1, 12)) AS UBIGINT)"
 _Q196_ORACLE = f"""
 WITH toks AS (
   SELECT DISTINCT CAST({md5_bucket_sql("doc_id", 2)} AS BIGINT) AS half,
-         unnest(list_filter(string_split(text, ' '), t -> t <> '')) AS t
+         unnest({_words_sql()}) AS t
   FROM documents
 ),
 hv AS (
@@ -565,9 +562,8 @@ def _q196_hv(spark, sf_dir):
         load(spark, sf_dir, "documents")
         .select(
             md5_bucket(F.col("doc_id"), 2).alias("half"),
-            F.explode(F.split("text", " ")).alias("t"),
+            F.explode(_words()).alias("t"),
         )
-        .filter(F.col("t") != "")
         .distinct()
     )
     return toks.select(

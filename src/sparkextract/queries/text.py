@@ -11,14 +11,43 @@ from pyspark.sql.window import Window as W
 from sparkextract.queries.base import load, register
 
 
+def _words(text="text"):
+    """The word tokens of a text column: split on ' ', '' dropped."""
+    return F.filter(F.split(text, " "), lambda t: t != F.lit(""))
+
+
+def _words_sql(text: str = "text") -> str:
+    """DuckDB twin of :func:`_words`."""
+    return f"list_filter(string_split({text}, ' '), t -> t <> '')"
+
+
+def _bigrams(a):
+    """Adjacent-word bigrams 'a[i] a[i+1]' of an array column. Indexing
+    the words of slice(a, 1, size - 1) needs no guard for a list of
+    fewer than two words: that slice is empty, like DuckDB's range(1, 1),
+    while Spark's sequence(1, 0) is the DESCENDING [1, 0], whose
+    element_at(a, 0) aborts the job. A when/otherwise guard with an
+    empty-array literal also works, but it stops Spark from reusing the
+    exchanges of a bigram table read twice (q121)."""
+    return F.transform(
+        F.slice(a, 1, F.greatest(F.size(a) - 1, F.lit(0))),
+        lambda x, i: F.concat_ws(" ", x, F.element_at(a, i + 2)),
+    )
+
+
+def _bigrams_sql(a: str) -> str:
+    """DuckDB twin of :func:`_bigrams` over the list expression ``a``."""
+    return f"list_transform(range(1, len({a})), i -> {a}[i] || ' ' || {a}[i+1])"
+
+
 # --------------------------------------------------------------------------
 # Top-20 token frequency (explode + agg + top-k with tie-break).
 @register(
     "q23_token_topk",
-    oracle="""
+    oracle=f"""
     SELECT token, CAST(COUNT(*) AS BIGINT) AS freq FROM (
-      SELECT unnest(string_split(text, ' ')) AS token FROM documents
-    ) WHERE token != ''
+      SELECT unnest({_words_sql()}) AS token FROM documents
+    )
     GROUP BY token
     ORDER BY freq DESC, token ASC
     LIMIT 20
@@ -27,8 +56,7 @@ from sparkextract.queries.base import load, register
 def q23_token_topk(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(F.split("text", " ")).alias("token"))
-        .filter(F.col("token") != "")
+        docs.select(F.explode(_words()).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("freq"))
         .orderBy(F.desc("freq"), F.asc("token"))
@@ -274,9 +302,7 @@ _Q88_MINSUP = 5
 
 _Q88_ORACLE = f"""
 WITH dt AS (
-  SELECT DISTINCT doc_id, t AS tok FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents
-  ) WHERE t != ''
+  SELECT DISTINCT doc_id, unnest({_words_sql()}) AS tok FROM documents
 ),
 dfa AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM dt GROUP BY tok),
 pairs AS (
@@ -300,14 +326,7 @@ def q88_pmi_cooccurrence(spark, sf_dir):
     from pyspark.sql.functions import broadcast
 
     docs = load(spark, sf_dir, "documents")
-    sets = docs.select(
-        "doc_id",
-        F.array_sort(
-            F.array_distinct(
-                F.filter(F.split("text", " "), lambda t: t != F.lit(""))
-            )
-        ).alias("s"),
-    )
+    sets = docs.select("doc_id", F.array_sort(F.array_distinct(_words())).alias("s"))
     pair_arr = F.flatten(
         F.transform(
             F.col("s"),
@@ -372,8 +391,7 @@ _Q122_TOPK = 10
 
 _Q122_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS t
-  FROM documents
+  SELECT doc_id, {_words_sql()} AS t FROM documents
 ),
 p0 AS (
   SELECT t[i] AS w1, t[i + 1] AS w2, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -453,9 +471,7 @@ def _topk_pairs(pairs, stage: int):
 @register("q122_bpe_merge", oracle=_Q122_ORACLE)
 def q122_bpe_merge(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.filter(F.split("text", " "), lambda x: x != F.lit("")).alias("t")
-    )
+    toks = docs.select("doc_id", _words().alias("t"))
     p0 = _adjacent_pairs(toks)
     best = (
         p0.filter(F.col("w1") != F.col("w2"))

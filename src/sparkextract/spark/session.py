@@ -31,6 +31,7 @@ already running, non-local masters) keep PySpark's default daemon.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import tempfile
@@ -43,18 +44,58 @@ _PKG_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))  # .../sr
 _SRC_DIR = os.path.dirname(_PKG_DIR)                                    # .../src
 
 
+def _package_sources() -> list[tuple[str, bytes]]:
+    """(archive name, bytes) of every .py file of the package, sorted."""
+    out = []
+    for root, dirs, files in os.walk(_PKG_DIR):
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
+        for fn in files:
+            if fn.endswith(".py"):
+                full = os.path.join(root, fn)
+                with open(full, "rb") as f:
+                    out.append((os.path.relpath(full, _SRC_DIR), f.read()))
+    return sorted(out)
+
+
+def _write_zip(path: str, sources: list[tuple[str, bytes]]) -> None:
+    # fixed entry times: the same sources always give the same bytes
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
+        for name, data in sources:
+            zf.writestr(zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0)), data,
+                        compress_type=zipfile.ZIP_DEFLATED)
+
+
 def build_pyfiles_zip(dest_dir: str | None = None) -> str:
-    """Zip the package for --py-files / addPyFile shipping."""
-    dest_dir = dest_dir or tempfile.mkdtemp(prefix="sparkextract_pyfiles_")
-    zip_path = os.path.join(dest_dir, "sparkextract.zip")
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(_PKG_DIR):
-            if "__pycache__" in root:
-                continue
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    zf.write(full, os.path.relpath(full, _SRC_DIR))
+    """Zip the package for --py-files / addPyFile shipping.
+
+    With ``dest_dir`` the zip is written there. Without it, there is one
+    zip per sha256 of the shipped sources, at a stable path under the
+    temp dir: the first call writes it under a temp name and renames it
+    into place, so no reader sees half a zip, and later calls and
+    sessions reuse it."""
+    sources = _package_sources()
+    if dest_dir:
+        zip_path = os.path.join(dest_dir, "sparkextract.zip")
+        _write_zip(zip_path, sources)
+        return zip_path
+    digest = hashlib.sha256()
+    for name, data in sources:
+        digest.update(f"{name}\0{len(data)}\0".encode())
+        digest.update(data)
+    cache_dir = os.path.join(
+        tempfile.gettempdir(), f"sparkextract_pyfiles_{digest.hexdigest()[:16]}"
+    )
+    zip_path = os.path.join(cache_dir, "sparkextract.zip")
+    if not os.path.exists(zip_path):
+        os.makedirs(cache_dir, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=cache_dir, suffix=".tmp")
+        os.close(fd)
+        try:
+            _write_zip(tmp, sources)
+            os.replace(tmp, zip_path)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
     return zip_path
 
 

@@ -1,5 +1,5 @@
 """Tests for the ANN query family (``queries/ann.py``): the PCA power
-step against numpy."""
+step against numpy, the q46 IVF probes and the q50 recall bounds."""
 
 import os
 
@@ -29,3 +29,24 @@ def test_q126_pca_power_step_numpy(spark):
     assert abs(lam - float(np.linalg.norm(w_sp))) < 5e-4
     v1 = np.array([r.v1 for r in out])
     assert abs(float(v1 @ v1) - 1.0) < 1e-4
+
+
+def test_ivf_topk_probes_two_cells(spark):
+    from sparkextract.queries.registry import SPARK_QUERIES
+
+    rows = SPARK_QUERIES["q46_ivf_topk"](spark, SF_DIR).collect()
+    assert len(rows) == 10
+    # every hit comes from one of the <=2 probed coarse cells
+    assert len({r["cell"] for r in rows}) <= 2
+    # scores sorted descending with vec_id tiebreak
+    cos = [r["cosine"] for r in rows]
+    assert cos == sorted(cos, reverse=True)
+
+
+def test_wave4_ann_recall_bounds(spark):
+    from sparkextract.queries.registry import ORACLE_SQL, SPARK_QUERIES
+
+    assert "q50_ann_recall" in ORACLE_SQL
+    row = SPARK_QUERIES["q50_ann_recall"](spark, SF_DIR).collect()[0]
+    assert 0 <= row["n_overlap"] <= 10
+    assert row["recall_at_10"] == row["n_overlap"] / 10.0

@@ -71,6 +71,20 @@ def test_chunk_text_min_filter_and_long_para():
     assert chunks and all(len(c) <= config.CHUNK_SIZE + config.CHUNK_OVERLAP + 1 for c in chunks)
 
 
+def test_hard_wrap_of_long_sentence_is_linear():
+    """A sentence with no '.', '!' or '?' is hard-wrapped every CHUNK_SIZE
+    chars. Re-slicing the rest of the sentence at each wrap made an
+    8M-char span take about 2.7 s on one core of a 4-vCPU VM; the wrap
+    now slices the rest once."""
+    import time
+
+    text = "abcdefg " * 1_000_000
+    t0 = time.perf_counter()
+    chunks = chunk_text(text)
+    assert time.perf_counter() - t0 < 1.0
+    assert len(chunks) >= len(text) // config.CHUNK_SIZE
+
+
 def test_chunk_boundary_exact():
     word = "boundary "
     para = (word * (config.CHUNK_SIZE // len(word) + 1))[: config.CHUNK_SIZE].strip()

@@ -1,9 +1,12 @@
 """Tests for the dedup query family (``queries/dedup.py``): pure-Python
-re-implementations next to the Spark plan and the DuckDB oracle, and a
-hot shingle on a constructed corpus."""
+re-implementations next to the Spark plan and the DuckDB oracle, a hot
+shingle on a constructed corpus, the q94/q96/q99 semantics and the
+bigram guard of the 48-bit simhash."""
 
 import os
 from collections import Counter
+
+from pyspark.sql import functions as F
 
 from conftest import SF_DIR, py_md5_bucket, read_docs
 
@@ -234,3 +237,119 @@ def test_q194_matches_python_snm(spark):
     for key, (inter, union, jac_u) in expected.items():
         r = rows[key]
         assert (r["n_common"], r["n_union"], r["jac_u"]) == (inter, union, jac_u)
+
+
+def test_q94_stage_semantics(spark):
+    """Injected near-dups lose to their originals; quality drops carry no
+    survivor; every kept doc is its own survivor."""
+    from sparkextract.queries.registry import SPARK_QUERIES
+    from sparkextract.queries.quality import _Q94_MIN_TOKENS
+
+    out = SPARK_QUERIES["q94_corpus_clean_pipeline"](spark, SF_DIR).cache()
+    # quality gate: stage agrees with the token count, survivor NULL
+    assert out.filter(
+        f"(n_tokens < {_Q94_MIN_TOKENS}) != (stage = 'dropped_quality')"
+    ).count() == 0
+    assert out.filter(
+        "stage = 'dropped_quality' AND survivor_id IS NOT NULL"
+    ).count() == 0
+    # kept docs survive as themselves
+    assert out.filter("stage = 'kept' AND survivor_id != doc_id").count() == 0
+    # injected near-dups (doc_id >= 2,000,000) that pass quality: a 10-char
+    # prefix rewrite keeps LONG docs within the simhash radius but can push
+    # very short ones past it (the banded join is radius-5 lossless, not a
+    # semantic guarantee for arbitrary edits), so require a detected
+    # MAJORITY — and every detected one must lose to its verbatim original
+    inj = out.filter(f"doc_id >= 2000000 AND n_tokens >= {_Q94_MIN_TOKENS}")
+    n_inj = inj.count()
+    assert n_inj > 0
+    dropped = inj.filter("stage = 'dropped_dup'")
+    n_drop = dropped.count()
+    assert n_drop > n_inj * 0.5
+    # min-label components: a survivor is always a strictly smaller id; it
+    # is the verbatim original unless the original itself sits in a larger
+    # transitive cluster, so require exact-original for the majority only
+    assert dropped.filter("survivor_id >= doc_id").count() == 0
+    exact = dropped.filter("survivor_id = doc_id - 2000000").count()
+    assert exact > n_drop * 0.5
+    out.unpersist()
+
+
+def test_q96_block_dedup_first_writer_wins(spark):
+    """A block's first occurrence (by doc_id, block_idx) is kept and every
+    later occurrence dropped; a fully-unique doc keeps everything and its
+    kept_text_md5 equals the md5 of its block-joined text."""
+    from sparkextract.queries.registry import SPARK_QUERIES
+
+    out = SPARK_QUERIES["q96_block_dedup"](spark, SF_DIR).cache()
+    rows = out.collect()
+    # n_kept == 0 is legal: a doc whose every block appeared earlier
+    assert rows and all(0 <= r["n_kept"] <= r["n_blocks"] for r in rows)
+    # corpus-wide: with a ~31-token vocabulary 8-token blocks collide, so
+    # SOME dedup must happen, but doc 0 (first writer for all its blocks
+    # unless it self-repeats) keeps its first block at minimum
+    assert any(r["n_kept"] < r["n_blocks"] for r in rows)
+    d0 = [r for r in rows if r["doc_id"] == 0][0]
+    assert d0["n_kept"] >= 1
+    out.unpersist()
+
+
+def test_q96_oracle_tiny(spark):
+    """3-doc frame with a verbatim duplicate: the copy keeps nothing, the
+    original keeps all."""
+    import duckdb
+
+    from sparkextract.queries.dedup import _Q96_ORACLE
+
+    t = " ".join(f"tok{i}" for i in range(20))
+    rows = [(1, t), (2, t), (3, "short unique words only here")]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM (VALUES "
+        + ", ".join(f"({i}, '{s}')" for i, s in rows)
+        + ") AS t(doc_id, text)"
+    )
+    got = {
+        r[0]: (r[1], r[2]) for r in con.execute(_Q96_ORACLE).fetchall()
+    }
+    assert got[1][1] == got[1][0]  # original keeps all blocks
+    assert got[2][1] == 0  # verbatim copy keeps none
+    assert got[3][1] == got[3][0]
+
+
+def test_q99_verbatim_pair_fully_duplicated(spark):
+    """Two identical long docs are 100% duplicated windows; a unique-vocab
+    doc has zero."""
+    from sparkextract.queries.dedup import _Q99_K
+    from sparkextract.queries.sketches import _kgram_hashes
+
+    t = " ".join(f"w{i}" for i in range(_Q99_K + 10))
+    u = " ".join(f"zq{i}" for i in range(_Q99_K + 5))
+    df = spark.createDataFrame(
+        [(1, t), (2, t), (3, u)], "doc_id long, text string"
+    )
+    wk = _kgram_hashes(df, _Q99_K)
+    cnt = wk.groupBy("kh").count()
+    j = wk.join(cnt, "kh").groupBy("doc_id").agg(
+        F.sum(F.when(F.col("count") >= 2, 1).otherwise(0)).alias("dup"),
+        F.count("*").alias("n"),
+    )
+    got = {r["doc_id"]: (r["dup"], r["n"]) for r in j.collect()}
+    assert got[1][0] == got[1][1] > 0
+    assert got[2][0] == got[2][1]
+    assert got[3][0] == 0
+
+
+def test_simhash_bigrams_spaceless_doc(spark):
+    # ADVICE r2: a doc with no space used to hit sequence(1, 0) == [1, 0]
+    # and abort on element_at(w, 0); now it simply has no bigrams and is
+    # absent from the signature set (matching DuckDB's empty range(1,1))
+    from sparkextract.queries.dedup import _simhash48_col
+
+    docs = spark.createDataFrame(
+        [(1, "spaceless"), (2, ""), (3, "two words here")],
+        "doc_id long, text string",
+    )
+    sigs = {r["doc_id"]: r["simhash"] for r in _simhash48_col(docs).collect()}
+    assert set(sigs) == {3}
+    assert isinstance(sigs[3], int)

@@ -1,8 +1,14 @@
 """Tests for the incremental query family (``queries/incremental.py``):
-streaming dedup and the Merkle diff against pure-Python twins."""
+streaming dedup and the Merkle diff against pure-Python twins, the q95
+crash+resume state and root reaping, the q103 snapshot statuses and
+q106's changed-only extraction."""
 
 import hashlib
+import os
+import time
 from collections import Counter
+
+from pyspark.sql import functions as F
 
 from conftest import SF_DIR, py_md5_bucket, read_docs
 
@@ -53,3 +59,94 @@ def test_q172_clean_leaves_skip_doc_work_and_counts_match(spark):
             assert r["clean"]
             assert r["n_added"] == r["n_changed"] == r["n_removed"] == 0
             assert r["old_count"] == per_leaf[leaf]
+
+
+def test_q95_crash_resume_split(spark):
+    """All buckets end 'done'; buckets below the crash point committed in
+    run 1, the rest in the resume run; doc counts cover the corpus."""
+    from sparkextract.queries.registry import SPARK_QUERIES
+    from sparkextract.queries.incremental import _Q95_BUCKETS, _Q95_FAIL_AFTER
+
+    rows = SPARK_QUERIES["q95_manifest_resume_state"](spark, SF_DIR).collect()
+    assert len(rows) == _Q95_BUCKETS
+    for r in rows:
+        assert r["status"] == "done"
+        assert r["run_seq"] == (1 if r["doc_id_bucket"] < _Q95_FAIL_AFTER else 2)
+        assert r["span_count"] >= r["doc_count"] >= 1
+        assert r["table_count"] == 0
+    n_docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).count()
+    assert sum(r["doc_count"] for r in rows) == n_docs
+
+
+def test_q95_root_reaps_only_day_old_siblings(tmp_path, monkeypatch):
+    """A sibling root of another, possibly still running, session survives
+    ``_session_root``; only one untouched for more than a day is reaped.
+    The streaming queries' roots (q108, q145) follow the same rule."""
+    import tempfile
+    import types
+
+    from sparkextract.queries.incremental import _ROOT_REAP_AGE_S, _session_root
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    fake = types.SimpleNamespace(sparkContext=types.SimpleNamespace(applicationId="app-1"))
+    for tag in ("q95", "q145"):
+        fresh = tmp_path / f"sparkextract_{tag}_fresh"
+        stale = tmp_path / f"sparkextract_{tag}_stale"
+        for d in (fresh, stale):
+            (d / "manifest").mkdir(parents=True)
+        old = time.time() - _ROOT_REAP_AGE_S - 60
+        os.utime(stale, (old, old))
+        root = _session_root(fake, "/data/sf", tag)
+        assert root.startswith(str(tmp_path)) and root not in (str(fresh), str(stale))
+        assert (fresh / "manifest").is_dir()
+        assert not stale.exists()
+        # the root in use is touched, so a later session does not reap it
+        os.makedirs(root)
+        os.utime(root, (old, old))
+        assert _session_root(fake, "/data/sf", tag) == root
+        assert os.path.getmtime(root) > old + 60
+
+
+def test_q103_statuses(spark):
+    """Bucket 0 docs are added, bucket 1 changed, the rest unchanged;
+    needs_extraction covers exactly added+changed."""
+    from sparkextract.queries.base import md5_bucket
+    from sparkextract.queries.incremental import _SNAPSHOT_BUCKETS, snapshot_diff
+
+    out = snapshot_diff(spark, SF_DIR)
+    b = md5_bucket(F.col("doc_id"), _SNAPSHOT_BUCKETS)
+    expect = (
+        F.when(b == 0, F.lit("added"))
+        .when(b == 1, F.lit("changed"))
+        .otherwise(F.lit("unchanged"))
+    )
+    checked = out.withColumn("expect", expect).cache()
+    assert checked.filter("status != expect").count() == 0
+    assert checked.filter(
+        "needs_extraction != (status IN ('added', 'changed'))"
+    ).count() == 0
+    assert {r["status"] for r in checked.select("status").distinct().collect()} == {
+        "added", "changed", "unchanged"
+    }
+    checked.unpersist()
+
+
+def test_q106_only_changed_docs_extracted(spark):
+    """Every output doc is added/changed; unchanged docs are absent; span
+    counts obey the passthrough property."""
+    from sparkextract.queries.registry import SPARK_QUERIES
+    from sparkextract.queries.base import md5_bucket
+    from sparkextract.queries.incremental import _SNAPSHOT_BUCKETS
+
+    out = SPARK_QUERIES["q106_incremental_extraction"](spark, SF_DIR)
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    joined = out.join(docs.select("doc_id", "n_chars"), "doc_id").withColumn(
+        "b", md5_bucket(F.col("doc_id"), _SNAPSHOT_BUCKETS)
+    ).cache()
+    assert joined.filter("b NOT IN (0, 1)").count() == 0
+    assert joined.filter("(b = 0) != (status = 'added')").count() == 0
+    expect = F.when(F.col("n_chars") >= 100, 1).otherwise(0) + F.when(
+        F.col("doc_id") % 3 == 0, 1
+    ).otherwise(0)
+    assert joined.filter(F.col("span_count") != expect).count() == 0
+    joined.unpersist()

@@ -1,0 +1,56 @@
+"""Tests for the media plumbing (``spark/multimodal.py``): featurize and
+dedup, frame sampling and resize."""
+
+
+def test_multimodal_featurize_and_dedup(spark):
+    from sparkextract.spark.multimodal import MEDIA_SCHEMA, featurize_media, media_dedup
+
+    rows = [
+        ("m1", "d1", "image", b"payload-a", 10, 10),
+        ("m2", "d1", "image", b"payload-a", 10, 10),   # exact dup of m1
+        ("m3", "d2", "audio", b"payload-b", None, None),
+        ("m4", "d2", "pdf",   b"payload-c", None, None),  # no decoder
+        ("m5", "d3", "video", b"", None, None),
+    ]
+    media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
+    feats = featurize_media(media).cache()
+    got = {r["media_id"]: r for r in feats.collect()}
+
+    assert got["m1"]["decode_ok"] and len(got["m1"]["feature"]) == 16
+    # deterministic stub: same payload -> same feature vector
+    assert got["m1"]["feature"] == got["m2"]["feature"]
+    assert got["m1"]["content_hash"] == got["m2"]["content_hash"]
+    # unknown media type -> decode_ok False, feature NULL (stubbed decoder)
+    assert not got["m4"]["decode_ok"] and got["m4"]["feature"] is None
+    assert got["m1"]["n_bytes"] == 9 and got["m5"]["n_bytes"] == 0
+
+    kept = media_dedup(feats).select("media_id").rdd.map(lambda r: r[0]).collect()
+    assert "m1" in kept and "m2" not in kept  # lowest media_id wins at equal size
+    assert len(kept) == 4
+
+
+def test_multimodal_frame_sample_and_resize(spark):
+    """Frame sampling (1-to-many mapInPandas) and resize (payload
+    replacement with metadata update) plumbing: row multiplicity, byte
+    accounting, and hash agreement with hashlib on the driver."""
+    import hashlib
+
+    from sparkextract.spark.multimodal import resize_media, sample_frames
+
+    payload = bytes(range(100))
+    media = spark.createDataFrame(
+        [("m1", "d1", "video", payload, 64, 64), ("m2", "d2", "video", b"abc", 64, 64)],
+        "media_id string, doc_id string, media_type string, payload binary, width int, height int",
+    )
+    frames = sample_frames(media, n_frames=4).collect()
+    by_id = {}
+    for r in frames:
+        by_id.setdefault(r["media_id"], []).append(r)
+    assert len(by_id["m1"]) == 4
+    assert [r["n_frame_bytes"] for r in sorted(by_id["m1"], key=lambda r: r["frame_idx"])] == [25, 25, 25, 25]
+    assert by_id["m1"][0]["frame_hash"] == hashlib.md5(payload[:25]).hexdigest()
+    assert len(by_id["m2"]) == 3  # payload shorter than n_frames*1? no: 3 bytes -> 3 frames
+    resized = resize_media(media, width=4, height=4).collect()
+    assert all(r["n_bytes"] == 16 and len(bytes(r["payload"])) == 16 for r in resized)
+    m2 = [r for r in resized if r["media_id"] == "m2"][0]
+    assert bytes(m2["payload"]) == b"abc" + b"\x00" * 13

@@ -30,7 +30,7 @@ from sparkextract.core.boilerplate import extract_html
 from sparkextract.core.extract import extract_document, extract_input_span, extract_run, finalize
 from sparkextract.core.normalize import collapse_ws, md5_hex, normalize_cell, normalize_text
 from sparkextract.core.ocr import pseudo_ocr_raw, pseudo_ocr_texts
-from sparkextract.core.segment import chunk_text
+from sparkextract.core.segment import _split_long_paragraph, chunk_text, split_sentences
 from sparkextract.core.tables import parse_pdf_layout
 
 _KINDS = ["text", "html", "pdf_layout", "media"]
@@ -114,6 +114,45 @@ def test_output_spans_well_formed(spans):
 def test_text_chunks_obey_min_gate(text):
     for chunk in chunk_text(normalize_text(text)):
         assert len(chunk) >= config.MIN_CHUNK_SIZE  # P4
+
+
+def _hard_wrap_spec(para):
+    """The hard-wrap of ``_split_long_paragraph`` as first written: it
+    re-slices and strips the rest of the sentence at every wrap."""
+    pieces, cur = [], ""
+    for sent in split_sentences(para):
+        while len(sent) > config.CHUNK_SIZE:
+            if cur:
+                pieces.append(cur)
+                cur = ""
+            pieces.append(sent[: config.CHUNK_SIZE])
+            sent = sent[config.CHUNK_SIZE:].strip()
+        if not sent:
+            continue
+        if cur and len(cur) + 2 + len(sent) > config.CHUNK_SIZE:
+            pieces.append(cur)
+            cur = sent
+        else:
+            cur = f"{cur}. {sent}" if cur else sent
+    if cur:
+        pieces.append(cur)
+    return pieces
+
+
+# long letter runs put wrap cuts next to whitespace runs of every kind
+_wrap_st = st.lists(
+    st.one_of(
+        st.text(alphabet="ab", max_size=1100),
+        st.sampled_from([" ", "   ", "\t", "\n", "\u3000", " \x0b\x1f ", ".", "!?"]),
+    ),
+    max_size=16,
+).map("".join)
+
+
+@settings(max_examples=150, deadline=None)
+@given(_wrap_st)
+def test_hard_wrap_equals_slicing_spec(para):
+    assert _split_long_paragraph(para) == _hard_wrap_spec(para)
 
 
 @settings(max_examples=150, deadline=None)

@@ -2,8 +2,9 @@
 import cycle hides behind the order in which another module loads them;
 every reference-file citation in the package names a file the survey
 cites; no query module keeps a top-level name that nothing reaches; each
-shared query kernel is spelled in one place; and the tests share one
-Spark fixture and one ``SF_DIR``."""
+shared query kernel is spelled in one place; the registry and the driver
+view stay within their caps; and the tests share one Spark fixture and
+one ``SF_DIR``."""
 
 import ast
 import os
@@ -197,16 +198,49 @@ def test_query_code_is_reachable():
 
 # --- one home per shared kernel ------------------------------------------
 #
-# The cosine and word k-gram kernels have one Spark and one DuckDB
-# implementation each, and the queries that need them call those. A
-# second spelling of a kernel body anywhere in queries/*.py is a copy
-# that a fix to the home would miss, so each pattern below (compared with
-# all whitespace removed) must occur exactly once, in its home.
+# Each shared text or vector kernel has one Spark and one DuckDB
+# implementation, and the queries that need it call those. A second
+# spelling of a kernel body anywhere in queries/*.py is a copy that a fix
+# to the home would miss, so each pattern below must occur exactly once,
+# in its home. A pattern is matched against the code with all whitespace
+# removed: a string literally, a compiled regex by ``findall``.
 _KERNEL_HOMES = {
     "sqrt(list_sum(list_transform(": ("ann", "_norm_sql"),  # DuckDB cosine
     "/ (_norm(": ("ann", "_cos"),  # Spark cosine
     "array_to_string(a[i:i+": ("sketches", "_kgram_keys_sql"),  # DuckDB k-grams
+    # word tokens: split on ' ', '' dropped
+    re.compile(r'F\.filter\(F\.split\([^()]*,""\),lambda(\w+):\1!=F\.lit\(""\)\)'):
+        ("text", "_words"),
+    re.compile(r"list_filter\(string_split\([^()]*,''\),(\w+)->\1(?:<>|!=)''\)"):
+        ("text", "_words_sql"),
+    # adjacent-word bigrams; the Spark pattern also matches the
+    # sequence(1, size - 1) form that earlier copies used
+    re.compile(
+        r'lambda(\w+),\w+:F\.concat_ws\("",\1,F\.element_at\('
+        r"|F\.sequence\(F\.lit\(1\),F\.size\([^()]*\)-1\)"
+    ): ("text", "_bigrams"),
+    "[i] || ' ' || ": ("text", "_bigrams_sql"),
+    # lowercase alphabetic terms and their per-doc counts
+    "F.split(F.lower(": ("retrieval", "_term_tf"),
+    "regexp_split_to_array(lower(": ("retrieval", "_TERM_TF_SQL"),
+    # BM25 corpus statistics and query terms, then the term contribution
+    '(F.sum("dl").cast("double") / F.count("*"))': ("retrieval", "_bm25_cand"),
+    "CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl": ("retrieval", "_BM25_CAND_SQL"),
+    "F.lit(0.75)": ("retrieval", "_bm25_contrib"),
+    "CAST(0.75 AS DOUBLE)": ("retrieval", "_BM25_CONTRIB_SQL"),
+    # keyword overlap against the fixed query words
+    "F.split(F.lit(_QUERY_WORDS)": ("retrieval", "_overlap"),
+    "string_split('{_QUERY_WORDS}'": ("retrieval", "_overlap_sql"),
+    # SimHash sign-vote fold
+    'F.shiftright("hv", b)': ("dedup", "_simhash"),
+    "THEN 1 ELSE -1 END": ("dedup", "_simhash_sql"),
 }
+
+
+def _count(pattern, body):
+    if isinstance(pattern, re.Pattern):
+        return len(pattern.findall(body))
+    return body.count(re.sub(r"\s+", "", pattern))
 
 
 def test_each_shared_kernel_is_spelled_once():
@@ -220,7 +254,7 @@ def test_each_shared_kernel_is_spelled_once():
             body = re.sub(r"\s+", "", "\n".join(lines[first - 1:stmt.end_lineno]))
             name = (_defined_names(stmt) or ["<statement>"])[0]
             for pattern, where in spelled.items():
-                where += [(mod, name)] * body.count(re.sub(r"\s+", "", pattern))
+                where += [(mod, name)] * _count(pattern, body)
     assert spelled == {pattern: [home] for pattern, home in _KERNEL_HOMES.items()}
 
 
@@ -243,3 +277,39 @@ def test_one_spark_fixture_and_one_sf_dir():
             if any(isinstance(t, ast.Name) and t.id == "SF_DIR" for t in targets):
                 extra.append(f"{name}: SF_DIR")
     assert not extra, extra
+
+
+def test_wave3_registered_with_oracles():
+    from sparkextract.queries.registry import ORACLE_SQL, SPARK_QUERIES
+
+    for name in (
+        "q44_media_featurize",
+        "q45_media_dedup",
+        "q46_ivf_topk",
+        "q47_retrieval_filters",
+    ):
+        assert name in SPARK_QUERIES and name in ORACLE_SQL
+
+
+def test_driver_view_fits_cap_and_covers_registry():
+    # the driver contract records at most 50 queries() entries: the
+    # exported view must leave at least 12 free slots, keep 1:1 oracles,
+    # and account for every fine-grained query directly or via a panel
+    from sparkextract.queries.panels import PANEL_SPECS, PANELED
+    from sparkextract.queries.registry import SPARK_QUERIES, driver_queries
+
+    sq, osql = driver_queries()
+    assert len(sq) <= 38
+    # the catalogue only shrinks: each cut stage lowers this bound
+    assert len(SPARK_QUERIES) <= 95
+    assert set(osql) == set(sq)
+    exported = set(sq)
+    for name in SPARK_QUERIES:
+        assert name in exported or name in PANELED, name
+    for pname, (cols, parts) in PANEL_SPECS.items():
+        tags = [t for t, _, _ in parts]
+        assert len(set(tags)) == len(tags), pname
+        colnames = {c for c, _ in cols}
+        for _tag, fine, mapping in parts:
+            assert fine in SPARK_QUERIES, fine
+            assert set(mapping) <= colnames, (pname, fine)

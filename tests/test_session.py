@@ -1,11 +1,12 @@
 """get_spark's worker import path: the daemon's sys.path rewrite, the guard
 that decides when workers can use it (no Spark), the core count it reads
-from a local master (no Spark), and spark-submit's --master surviving
-get_spark (slow)."""
+from a local master (no Spark), the package zip it ships (no Spark), and
+spark-submit's --master surviving get_spark (slow)."""
 
 import os
 import shutil
 import subprocess
+import tempfile
 import types
 import zipfile
 
@@ -100,6 +101,22 @@ def test_guard_off_on_a_live_gateway(fresh_launch):
 def test_guard_off_when_pythonpath_lacks_src(fresh_launch):
     fresh_launch.setenv("PYTHONPATH", "/elsewhere")
     assert not session._workers_import_src("local[4]")
+
+
+def test_pyfiles_zip_is_built_once_per_source_hash(monkeypatch, tmp_path):
+    """With no dest_dir, a second call returns the same zip and makes no
+    new directory, so sessions no longer leave one temp dir each."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    first = session.build_pyfiles_zip()
+    made = sorted(os.listdir(tmp_path))
+    assert session.build_pyfiles_zip() == first
+    assert sorted(os.listdir(tmp_path)) == made and len(made) == 1
+    assert os.listdir(os.path.dirname(first)) == ["sparkextract.zip"]
+    with zipfile.ZipFile(first) as zf:
+        assert "sparkextract/spark/session.py" in zf.namelist()
+    # the zip in a given dest_dir holds the same bytes
+    with open(first, "rb") as a, open(session.build_pyfiles_zip(str(tmp_path)), "rb") as b:
+        assert a.read() == b.read()
 
 
 class _Built(Exception):

@@ -1,9 +1,11 @@
 """Tests for the sketches query family (``queries/sketches.py``):
 pure-Python re-derivations of the cuckoo, Misra-Gries and KMV
-sketches."""
+sketches, the k-gram keys, q91 contamination and the q104 Bloom probe."""
 
 import hashlib
 from collections import Counter, defaultdict
+
+from pyspark.sql import functions as F
 
 from conftest import SF_DIR, py_md5_bucket, read_docs
 
@@ -163,3 +165,66 @@ def test_q196_matches_python_kmv(spark):
     assert r["k_eff"] == inter_k
     assert r["n_exact"] == len(set(hashes[0]) & set(hashes[1]))
     assert abs(r["est"] - round(inter_k * float(_Q196_MAXH) / th, 6)) < 1e-6
+
+
+def test_kgram_hashes_short_doc_and_overlap(spark):
+    """Docs shorter than k yield no k-grams; identical texts yield the
+    identical distinct k-gram key set."""
+    from sparkextract.queries.sketches import _Q91_K, _kgram_hashes
+
+    long_text = " ".join(f"w{i % 7}" for i in range(_Q91_K + 5))
+    rows = [
+        (1, "too short"),
+        (2, long_text),
+        (3, long_text),
+        (4, " ".join(["x"] * _Q91_K)),  # exactly k tokens -> exactly 1 k-gram
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    kh = _kgram_hashes(df, _Q91_K)
+    got = {
+        r["doc_id"]: r["n"]
+        for r in kh.groupBy("doc_id").agg(F.count("*").alias("n")).collect()
+    }
+    assert 1 not in got
+    assert got[4] == 1
+    assert got[2] == got[3] > 0
+    a = {r["kh"] for r in kh.filter("doc_id = 2").collect()}
+    b = {r["kh"] for r in kh.filter("doc_id = 3").collect()}
+    assert a == b
+
+
+def test_q91_injected_copies_are_contaminated(spark):
+    """Every injected verbatim eval copy (doc_id >= 3,000,000) with at
+    least one k-gram must score contam_frac 1.0 and keep=False; natural
+    corpus docs are overwhelmingly kept."""
+    from sparkextract.queries.registry import SPARK_QUERIES
+
+    out = SPARK_QUERIES["q91_ngram_decontamination"](spark, SF_DIR).cache()
+    injected = out.filter("doc_id >= 3000000")
+    n_inj = injected.count()
+    assert n_inj > 0
+    bad = injected.filter("contam_frac < 1.0 OR keep").count()
+    assert bad == 0
+    natural = out.filter("doc_id < 3000000")
+    kept_frac = natural.filter("keep").count() / natural.count()
+    assert kept_frac > 0.5
+    out.unpersist()
+
+
+def test_q104_bloom_no_false_negatives(spark):
+    """Every exact hit is bloom-positive (zero false negatives — the
+    Bloom contract); injected verbatim eval copies are 100% exact;
+    false positives stay under a few percent at the sized m/n."""
+    from sparkextract.queries.registry import SPARK_QUERIES
+
+    out = SPARK_QUERIES["q104_bloom_filter_probe"](spark, SF_DIR).cache()
+    assert out.filter("n_bloom < n_exact").count() == 0
+    assert out.filter("n_false_pos != n_bloom - n_exact").count() == 0
+    inj = out.filter("doc_id >= 3000000")
+    assert inj.count() > 0
+    assert inj.filter("n_exact != n_kgrams").count() == 0
+    tot = out.agg(
+        F.sum("n_kgrams").alias("k"), F.sum("n_false_pos").alias("fp")
+    ).collect()[0]
+    assert tot["fp"] / tot["k"] < 0.05
+    out.unpersist()
