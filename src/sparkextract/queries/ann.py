@@ -51,6 +51,15 @@ def _cos_sql(a: str, b: str) -> str:
     return f"({dot} / ({_norm_sql(a)} * {_norm_sql(b)}))"
 
 
+def _emb_double():
+    """The ``embedding`` column as array<double>, the element cast of the
+    vector kernels below."""
+    return F.transform("embedding", lambda x: x.cast("double"))
+
+
+_EMB_DOUBLE_SQL = "list_transform(embedding, x -> CAST(x AS DOUBLE))"  # DuckDB twin
+
+
 # --------------------------------------------------------------------------
 # T1/J3: brute-force cosine top-k against the vec_id=0 query vector.
 # Scale path: broadcast the query vector (a 1-row dim-64 array), score every
@@ -267,6 +276,44 @@ def q46_ivf_topk(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
+# Nearest-centroid assignment over the 8 IVF centroids (vec_ids 1..8, the
+# q46 table) by ROUND-6 cosine, lowest cent_id on a tie: q110 and the
+# incremental IVF. Scale shape: a broadcast of the 8 centroids and a
+# map-side-combinable max_by groupBy, never a window over vec_id. q46
+# ranks by the unrounded cosine with a window, a rule of its own.
+def _nearest_cell(spark, sf_dir, vecs, *carry):
+    """(vec_id, cell, *carry) for the (vec_id, e, *carry) rows of ``vecs``."""
+    cents = (
+        load(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id").between(1, 8))
+        .select(F.col("vec_id").alias("cent_id"), _emb_double().alias("cv"))
+    )
+    # argmax of (ccos, -cent_id): the ROUND-6 score, cent_id asc tie-break
+    score = F.struct(
+        F.round(_cos(F.col("e"), F.col("cv")), 6).alias("c"),
+        (-F.col("cent_id")).alias("t"),
+    )
+    return (
+        vecs.crossJoin(F.broadcast(cents))
+        .groupBy("vec_id")
+        .agg(F.max_by("cent_id", score).alias("cell"), *[F.first(c).alias(c) for c in carry])
+    )
+
+
+def _nearest_cell_sql(src: str, *carry: str) -> str:
+    """DuckDB twin of :func:`_nearest_cell` over the relation ``src``."""
+    cols = "".join(f", v.{c}" for c in carry)
+    return f"""
+      SELECT v.vec_id{cols}, ct.cent_id AS cell
+      FROM {src} v,
+           (SELECT vec_id AS cent_id, {_EMB_DOUBLE_SQL} AS cv
+            FROM embeddings WHERE vec_id BETWEEN 1 AND 8) ct
+      QUALIFY ROW_NUMBER() OVER (
+        PARTITION BY v.vec_id
+        ORDER BY ROUND({_cos_sql("v.e", "ct.cv")}, 6) DESC, ct.cent_id ASC) = 1"""
+
+
+# --------------------------------------------------------------------------
 # q47: the retrieval filter stack (P4 + P5 + P8 + P9 + P10) in one pass —
 # all pushed into the parquet scan as one conjunctive predicate (Catalyst
 # collapses the chained filters; only doc_id/lang/n_chars columns are read
@@ -392,10 +439,7 @@ def _l2sq_u_sql(a: str, b: str, dim: int) -> str:
 def _q111_oracle() -> str:
     m, sub, k, topk = _Q111_M, _Q111_SUB, _Q111_K, _Q111_TOPK
     return f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings
-    ),
+    WITH e AS (SELECT vec_id, {_EMB_DOUBLE_SQL} AS e FROM embeddings),
     sub AS (
       SELECT vec_id, m, list_transform(range(1, {sub + 1}), i -> e[m*{sub} + i]) AS sv
       FROM e CROSS JOIN (SELECT UNNEST(range(0, {m})) AS m)
@@ -441,9 +485,7 @@ def _q111_oracle() -> str:
 @register("q111_pq_adc_topk", oracle=_q111_oracle())
 def q111_pq_adc_topk(spark, sf_dir):
     m, sub, k, topk = _Q111_M, _Q111_SUB, _Q111_K, _Q111_TOPK
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
-    )
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", _emb_double().alias("e"))
     subv = (
         emb.withColumn("m", F.explode(F.sequence(F.lit(0), F.lit(m - 1))))
         .withColumn("sv", F.expr(f"slice(e, m*{sub} + 1, {sub})"))

@@ -99,10 +99,14 @@ from pyspark.sql.window import Window as W
 
 from sparkextract.queries.ann import (
     _DIM,
+    _EMB_DOUBLE_SQL,
     _bucket_col,
     _bucket_sql,
     _cos,
     _cos_sql,
+    _emb_double,
+    _nearest_cell,
+    _nearest_cell_sql,
     _plane_signs,
 )
 from sparkextract.queries.base import (
@@ -114,7 +118,7 @@ from sparkextract.queries.base import (
 )
 from sparkextract.queries.quality import _Q94_MIN_TOKENS
 from sparkextract.queries.sketches import _kgram_hashes, _kgram_keys_sql
-from sparkextract.queries.text import _bigrams, _bigrams_sql, _words, _words_sql
+from sparkextract.queries.text import _kgrams, _kgrams_sql, _words, _words_sql
 
 
 # --------------------------------------------------------------------------
@@ -428,17 +432,56 @@ def _band_sig_sql(band: int) -> str:
     return " + ".join(terms)
 
 
-_Q53_ORACLE = f"""
-WITH corpus AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
+def _band_pairs(buckets, id_col: str, key: str, *carry: str):
+    """Distinct pairs (l, r, l_<c>, r_<c> for c in carry) of ``id_col``
+    values, l < r, that share a (band, ``key``) bucket of ``buckets``: the
+    LSH candidate self-join of q53 and q68/q94. Shuffle-hash, not
+    broadcast: the bucket table is O(N x bands) rows, never
+    broadcastable at scale, and broadcasting it would funnel one side's
+    signature computation through a single-threaded driver collect. The
+    shuffle key (band, key) is exactly the LSH bucket id."""
+    x = buckets.hint("shuffle_hash").alias("x")
+    y = buckets.hint("shuffle_hash").alias("y")
+    return (
+        x.join(
+            y,
+            (F.col("x.band") == F.col("y.band"))
+            & (F.col(f"x.{key}") == F.col(f"y.{key}"))
+            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
+        )
+        .select(
+            F.col(f"x.{id_col}").alias("l"),
+            F.col(f"y.{id_col}").alias("r"),
+            *[F.col(f"{t}.{c}").alias(f"{side}_{c}")
+              for c in carry for t, side in (("x", "l"), ("y", "r"))],
+        )
+        .distinct()
+    )
+
+
+def _band_pairs_sql(buckets: str, id_col: str, key: str, *carry: str) -> str:
+    """DuckDB twin of :func:`_band_pairs` over the relation ``buckets``."""
+    cols = "".join(f", x.{c} AS l_{c}, y.{c} AS r_{c}" for c in carry)
+    return f"""
+      SELECT DISTINCT x.{id_col} AS l, y.{id_col} AS r{cols}
+      FROM {buckets} x JOIN {buckets} y
+        ON x.band = y.band AND x.{key} = y.{key} AND x.{id_col} < y.{id_col}"""
+
+
+# the embeddings plus a perturbed twin (+0.25 on dim 1) of every 7th
+# vector, as (vec_id, e double[]): the corpus of q53 and q110
+_BANDED_CORPUS_SQL = f"""
+  SELECT vec_id, {_EMB_DOUBLE_SQL} AS e FROM embeddings
   UNION ALL
   SELECT vec_id + 1000000,
          list_transform(range(1, {_DIM + 1}),
            i -> CASE WHEN i = 1 THEN CAST(embedding[1] AS DOUBLE) + 0.25
                      ELSE CAST(embedding[i] AS DOUBLE) END)
-  FROM embeddings WHERE vec_id % 7 = 0
-),
+  FROM embeddings WHERE vec_id % 7 = 0"""
+
+
+_Q53_ORACLE = f"""
+WITH corpus AS ({_BANDED_CORPUS_SQL}),
 sigs AS (
   SELECT vec_id, e,
          [{", ".join(f"CAST({_band_sig_sql(b)} AS INTEGER)" for b in range(_BANDS))}] AS s
@@ -448,11 +491,7 @@ buckets AS (
   SELECT vec_id, band, s[band + 1] AS sig
   FROM sigs, (SELECT UNNEST(range({_BANDS})) AS band)
 ),
-pairs AS (
-  SELECT DISTINCT x.vec_id AS l, y.vec_id AS r
-  FROM buckets x JOIN buckets y
-    ON x.band = y.band AND x.sig = y.sig AND x.vec_id < y.vec_id
-)
+pairs AS ({_band_pairs_sql("buckets", "vec_id", "sig")})
 SELECT p.l AS left_id, p.r AS right_id,
        ROUND({_cos_sql("cx.e", "cy.e")}, 6) AS cosine
 FROM pairs p
@@ -463,9 +502,8 @@ WHERE ROUND({_cos_sql("cx.e", "cy.e")}, 6) >= 0.8
 
 
 def _banded_corpus(spark, sf_dir):
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
-    )
+    """Spark twin of ``_BANDED_CORPUS_SQL``."""
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", _emb_double().alias("e"))
     perturbed = (
         load(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % 7 == 0)
@@ -528,23 +566,7 @@ def q53_banded_lsh_near_dup(spark, sf_dir):
         )
         .select("vec_id", F.posexplode("bs").alias("band", "sig"))
     )
-    # shuffle-hash, not broadcast: broadcasting the bucket table would
-    # funnel one side's 32-plane signature computation through the
-    # driver collect (single-threaded) — and at scale the bucket table
-    # is O(N x bands) rows, never broadcastable anyway. The shuffle key
-    # (band, sig) is exactly the LSH bucket id.
-    x = buckets.hint("shuffle_hash").alias("x")
-    y = buckets.hint("shuffle_hash").alias("y")
-    pairs = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.sig") == F.col("y.sig"))
-            & (F.col("x.vec_id") < F.col("y.vec_id")),
-        )
-        .select(F.col("x.vec_id").alias("l"), F.col("y.vec_id").alias("r"))
-        .distinct()
-    )
+    pairs = _band_pairs(buckets, "vec_id", "sig")
     cx = corpus.select(F.col("vec_id").alias("l"), F.col("e").alias("ex"))
     cy = corpus.select(F.col("vec_id").alias("r"), F.col("e").alias("ey"))
     # corpus arrays are already double, so _cos's cast is a no-op
@@ -591,7 +613,7 @@ _SH_RADIUS = _SH_BANDS - 1  # lossless pigeonhole radius
 def _simhash48_sql(corpus_cte: str) -> str:
     """CTE sigs(doc_id, simhash): DuckDB twin of :func:`_simhash48_col`."""
     toks = f"""
-      SELECT doc_id, unnest(list_distinct({_bigrams_sql("w")})) AS tok
+      SELECT doc_id, unnest(list_distinct({_kgrams_sql("w", 2)})) AS tok
       FROM (SELECT doc_id, string_split(text, ' ') AS w FROM ({corpus_cte}))"""
     return f"""
     sigs AS ({_simhash_sql(toks, _SH_BITS, 12)})"""
@@ -615,17 +637,12 @@ def simhash_pairs_sql(corpus_cte: str) -> str:
              (simhash >> (band * {_SH_BAND_BITS})) & {(1 << _SH_BAND_BITS) - 1} AS bv
       FROM sigs, (SELECT UNNEST(range({_SH_BANDS})) AS band)
     ),
-    pairs AS (
-      SELECT DISTINCT x.doc_id AS l, y.doc_id AS r,
-             x.simhash AS sx, y.simhash AS sy
-      FROM buckets x JOIN buckets y
-        ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id
-    ),
+    pairs AS ({_band_pairs_sql("buckets", "doc_id", "bv", "simhash")}),
     dup_pairs AS (
       SELECT l AS left_id, r AS right_id,
-             CAST(bit_count(CAST(xor(sx, sy) AS BIGINT)) AS INT) AS hamming
+             CAST(bit_count(CAST(xor(l_simhash, r_simhash) AS BIGINT)) AS INT) AS hamming
       FROM pairs
-      WHERE bit_count(CAST(xor(sx, sy) AS BIGINT)) <= {_SH_RADIUS}
+      WHERE bit_count(CAST(xor(l_simhash, r_simhash) AS BIGINT)) <= {_SH_RADIUS}
     )"""
 
 
@@ -643,19 +660,8 @@ def _simhash48_col(df):
     a bigram one emits ~50 at sf0.01, almost all the injected near-dups).
     A single-word (spaceless) doc has no bigrams, so it drops out of the
     signature set in both engines."""
-    bigrams = F.array_distinct(_bigrams(F.split("text", " ")))
+    bigrams = F.array_distinct(_kgrams(F.split("text", " "), 2))
     return _simhash(df.select("doc_id", F.explode(bigrams).alias("tok")), _SH_BITS, 12)
-
-
-# signature-table memo, (applicationId, sf_dir)-keyed: repeated
-# q68/panel constructions in one session must not run the build-time
-# checkpoint job again nor accumulate checkpoint blocks (data is
-# immutable per (session, dir)). FIFO-bounded; eviction unpersists the
-# blocks.
-_Q68_SIGS_MEMO: dict[tuple[str, str], object] = {}
-
-
-_Q68_SIGS_MEMO_CAP = 4
 
 
 @register("q68_simhash_near_dup", oracle=_Q68_ORACLE)
@@ -676,17 +682,9 @@ def q68_simhash_near_dup(spark, sf_dir):
     # persisted once, then banded and self-joined. The eager build-time
     # job is the documented cost (dump_plans notes it); the memo keeps
     # it to once per (session, input).
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    sigs = _Q68_SIGS_MEMO.get(memo_key)
-    if sigs is None:
-        sigs = _simhash48_col(docs.unionByName(near)).localCheckpoint()
-        while len(_Q68_SIGS_MEMO) >= _Q68_SIGS_MEMO_CAP:
-            evicted = _Q68_SIGS_MEMO.pop(next(iter(_Q68_SIGS_MEMO)))
-            try:
-                evicted.unpersist()
-            except Exception:
-                pass  # session already stopped; JVM refs are gone anyway
-        _Q68_SIGS_MEMO[memo_key] = sigs
+    sigs = checkpoint_memo(
+        spark, sf_dir, "q68_sigs", lambda: _simhash48_col(docs.unionByName(near))
+    )
     return simhash_banded_pairs(sigs)
 
 
@@ -711,24 +709,8 @@ def simhash_banded_pairs(sigs):
             )
         ).alias("band", "bv"),
     )
-    x = buckets.hint("shuffle_hash").alias("x")
-    y = buckets.hint("shuffle_hash").alias("y")
-    pairs = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bv") == F.col("y.bv"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("l"),
-            F.col("y.doc_id").alias("r"),
-            F.col("x.simhash").alias("sx"),
-            F.col("y.simhash").alias("sy"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sx").bitwiseXOR(F.col("sy"))).cast("int")
+    pairs = _band_pairs(buckets, "doc_id", "bv", "simhash")
+    hamming = F.bit_count(F.col("l_simhash").bitwiseXOR(F.col("r_simhash"))).cast("int")
     return (
         pairs.select(
             F.col("l").alias("left_id"), F.col("r").alias("right_id"), hamming.alias("hamming")
@@ -1029,17 +1011,13 @@ GROUP BY doc_id
 def q96_block_dedup(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     a = _words()
-    # size==0 guard: F.sequence(1, 0) is DESCENDING in Spark (the q84
-    # advice bug class) — zero-token docs must yield an empty block list
-    blocks = F.when(
-        F.size(a) >= 1,
-        F.transform(
-            F.sequence(F.lit(1), F.ceil(F.size(a) / _Q96_BLOCK).cast("int")),
-            lambda i: F.array_join(
-                F.slice(a, (i - 1) * _Q96_BLOCK + 1, _Q96_BLOCK), " "
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    # one block per element of slice(a, 1, ceil(size / B)), which is
+    # empty for a zero-token doc (where sequence(1, 0) runs DESCENDING),
+    # so no guard is needed (text._kgrams)
+    blocks = F.transform(
+        F.slice(a, 1, F.ceil(F.size(a) / _Q96_BLOCK).cast("int")),
+        lambda _, i: F.array_join(F.slice(a, i * _Q96_BLOCK + 1, _Q96_BLOCK), " "),
+    )
     # posexplode drops zero-token docs — matching the oracle's empty range
     exploded = docs.select(
         "doc_id", F.posexplode(blocks).alias("block_idx", "block")
@@ -1190,29 +1168,8 @@ _Q110_THRESHOLD = 0.95
 
 def _q110_oracle() -> str:
     return f"""
-    WITH corpus AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings
-      UNION ALL
-      SELECT vec_id + 1000000,
-             list_transform(range(1, {_DIM + 1}),
-               i -> CASE WHEN i = 1 THEN CAST(embedding[1] AS DOUBLE) + 0.25
-                         ELSE CAST(embedding[i] AS DOUBLE) END)
-      FROM embeddings WHERE vec_id % 7 = 0
-    ),
-    cents AS (
-      SELECT vec_id AS cent_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-      FROM embeddings WHERE vec_id BETWEEN 1 AND 8
-    ),
-    assign AS (
-      SELECT c.vec_id, c.e, ct.cent_id AS cell
-      FROM corpus c, cents ct
-      QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY c.vec_id
-        ORDER BY ROUND({_cos_sql("c.e", "ct.cv")}, 6) DESC,
-                 ct.cent_id ASC) = 1
-    ),
+    WITH corpus AS ({_BANDED_CORPUS_SQL}),
+    assign AS ({_nearest_cell_sql("corpus", "e")}),
     dups AS (
       SELECT DISTINCT b.vec_id
       FROM assign a JOIN assign b
@@ -1229,38 +1186,14 @@ def _q110_oracle() -> str:
 
 @register("q110_semantic_dedup", oracle=_q110_oracle())
 def q110_semantic_dedup(spark, sf_dir):
-    def build_assign():
-        corpus = _banded_corpus(spark, sf_dir)
-        cents = (
-            load(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id").between(1, 8))
-            .select(
-                F.col("vec_id").alias("cent_id"),
-                F.transform("embedding", lambda x: x.cast("double")).alias("cv"),
-            )
-        )
-        ccos = F.round(_cos(F.col("e"), F.col("cv")), 6)
-        # argmax via map-side-combinable max_by (ROUND-6 score, cent_id
-        # asc tie-break = max of (ccos, -cent_id)), not a window over
-        # vec_id
-        return (
-            corpus.crossJoin(F.broadcast(cents))
-            .withColumn("ccos", ccos)
-            .groupBy("vec_id")
-            .agg(
-                F.max_by(
-                    F.col("cent_id"),
-                    F.struct(F.col("ccos").alias("c"), (-F.col("cent_id")).alias("t")),
-                ).alias("cell"),
-                F.first("e").alias("e"),
-            )
-        )
-
     # The assignment table feeds three subtrees (pair-join left/right +
     # the ledger join); materialize it ONCE (at real scale this is the
     # cluster-assignment write every SemDeDup implementation persists
     # before the within-cluster pass).
-    assign = checkpoint_memo(spark, sf_dir, "q110_assign", build_assign)
+    assign = checkpoint_memo(
+        spark, sf_dir, "q110_assign",
+        lambda: _nearest_cell(spark, sf_dir, _banded_corpus(spark, sf_dir), "e"),
+    )
     a = assign.select(
         F.col("vec_id").alias("l"), F.col("cell").alias("cl"), F.col("e").alias("ea")
     )

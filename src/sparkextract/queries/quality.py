@@ -90,7 +90,7 @@ from sparkextract.queries.base import (
     md5_bucket_sql,
     register,
 )
-from sparkextract.queries.text import _bigrams, _bigrams_sql, _words, _words_sql
+from sparkextract.queries.text import _kgrams, _kgrams_sql, _words, _words_sql
 
 
 # --------------------------------------------------------------------------
@@ -137,7 +137,7 @@ def q25_quality_score(spark, sf_dir):
 # q84: REPETITION-RATIO QUALITY RULES (Gopher-style) — per-document
 # duplicate-bigram fraction and most-common-word mass fraction, the two
 # repetition signals the Gopher/MassiveText filter family uses beyond
-# a length/diversity cascade. Bigrams come from text._bigrams, which
+# a length/diversity cascade. Bigrams come from text._kgrams (k=2), which
 # yields none for fewer than two words in both engines; both fractions
 # are ROUND(...,6)-ed BEFORE the threshold compare so the keep decision
 # is identical in both engines. Scale shape: ONE text scan — the bigram
@@ -159,7 +159,7 @@ big AS (
   SELECT doc_id,
     len(grams) AS n_bigrams,
     len(list_distinct(grams)) AS n_distinct_bigrams
-  FROM (SELECT doc_id, {_bigrams_sql("a")} AS grams FROM toks)
+  FROM (SELECT doc_id, {_kgrams_sql("a", 2)} AS grams FROM toks)
 ),
 wc AS (
   SELECT doc_id, t AS word, COUNT(*) AS cnt
@@ -191,7 +191,7 @@ FROM scored
 def q84_repetition_rules(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", _words().alias("a"))
-    grams = _bigrams(F.col("a"))
+    grams = _kgrams(F.col("a"), 2)
     # Per-doc stats MUST become attributes in their own select BEFORE the
     # explode: a generator select hoists every non-attribute expression
     # into a Project ABOVE the Generate, re-evaluating the O(len^2)
@@ -265,7 +265,7 @@ _Q87_MIN_LOGP = -3.45
 
 _Q87_ORACLE = f"""
 WITH toks AS (SELECT doc_id, {_words_sql()} AS a FROM documents),
-inst AS (SELECT doc_id, unnest({_bigrams_sql("a")}) AS bigram FROM toks),
+inst AS (SELECT doc_id, unnest({_kgrams_sql("a", 2)}) AS bigram FROM toks),
 c2 AS (SELECT bigram, CAST(COUNT(*) AS BIGINT) AS cnt2 FROM inst GROUP BY 1),
 c1 AS (
   SELECT split_part(bigram, ' ', 1) AS w1, CAST(COUNT(*) AS BIGINT) AS cnt1
@@ -301,7 +301,7 @@ def q87_lm_quality_score(spark, sf_dir):
         "q87_toks",
         lambda: load(spark, sf_dir, "documents").select("doc_id", _words().alias("a")),
     )
-    inst = toks.select("doc_id", F.explode(_bigrams(F.col("a"))).alias("bigram"))
+    inst = toks.select("doc_id", F.explode(_kgrams(F.col("a"), 2)).alias("bigram"))
     c2 = inst.groupBy("bigram").agg(F.count("*").alias("cnt2"))
     c1 = (
         inst.select(F.substring_index("bigram", " ", 1).alias("w1"))

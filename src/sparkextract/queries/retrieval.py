@@ -61,7 +61,14 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 from pyspark.sql.window import Window as W
 
-from sparkextract.queries.ann import _cos, _cos_sql, _cos_top10, _cos_top10_sql
+from sparkextract.queries.ann import (
+    _EMB_DOUBLE_SQL,
+    _cos,
+    _cos_sql,
+    _cos_top10,
+    _cos_top10_sql,
+    _emb_double,
+)
 from sparkextract.queries.base import (
     checkpoint_memo,
     load,
@@ -69,7 +76,7 @@ from sparkextract.queries.base import (
     md5_bucket_sql,
     register,
 )
-from sparkextract.queries.text import _bigrams, _bigrams_sql, _words, _words_sql
+from sparkextract.queries.text import _kgrams, _kgrams_sql, _words, _words_sql
 
 
 # --------------------------------------------------------------------------
@@ -323,7 +330,7 @@ _Q121_TOPK = 100
 
 
 def _tf_sql(gram: str) -> str:
-    g = "t" if gram == "uni" else _bigrams_sql("t")
+    g = "t" if gram == "uni" else _kgrams_sql("t", 2)
     return f"""
     SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS c FROM (
       SELECT doc_id, unnest({g}) AS g
@@ -373,7 +380,7 @@ LIMIT {_Q121_TOPK}
 
 def _tf_spark(docs, gram: str):
     toks = docs.select("doc_id", _words().alias("t"))
-    g = F.col("t") if gram == "uni" else _bigrams(F.col("t"))
+    g = F.col("t") if gram == "uni" else _kgrams(F.col("t"), 2)
     return (
         toks.select("doc_id", F.explode(g).alias("g"))
         .groupBy("doc_id", "g")
@@ -721,10 +728,7 @@ def _cos_u_sql(a: str, b: str) -> str:
 
 def _q128_oracle() -> str:
     head = f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings
-    ),
+    WITH e AS (SELECT vec_id, {_EMB_DOUBLE_SQL} AS e FROM embeddings),
     q AS (SELECT vec_id AS query_id, e AS qe FROM e
           WHERE vec_id % {_Q128_STRIDE} = 0),
     rel AS (
@@ -787,9 +791,7 @@ def _q128_oracle() -> str:
 
 
 def _q128_cand(spark, sf_dir: str):
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
-    )
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", _emb_double().alias("e"))
     q = emb.filter(F.col("vec_id") % _Q128_STRIDE == 0).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
     )

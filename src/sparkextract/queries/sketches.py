@@ -76,7 +76,7 @@ from sparkextract.queries.base import (
     md5_bucket_sql,
     register,
 )
-from sparkextract.queries.text import _words, _words_sql
+from sparkextract.queries.text import _kgrams, _kgrams_sql, _words, _words_sql
 
 
 # --------------------------------------------------------------------------
@@ -143,16 +143,8 @@ def _kgram_hashes(df, k: int):
     """(doc_id, text) -> (doc_id, kh): distinct md5 keys of the doc's
     word k-grams, generated doc-locally (no shuffle until the consumer's
     own agg/join)."""
-    a = _words()
-    kgrams = F.when(
-        F.size(a) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size(a) - k + 1),
-            lambda i: F.array_join(F.slice(a, i, k), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return (
-        df.select("doc_id", F.explode(F.array_distinct(kgrams)).alias("kgram"))
+        df.select("doc_id", F.explode(F.array_distinct(_kgrams(_words(), k))).alias("kgram"))
         .select("doc_id", F.md5("kgram").alias("kh"))
     )
 
@@ -162,11 +154,8 @@ def _kgram_keys_sql(src: str, k: int) -> str:
     relation ``src``."""
     return f"""
   SELECT DISTINCT doc_id, md5(kgram) AS kh FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(a) - {k} + 2),
-                  i -> array_to_string(a[i:i+{k - 1}], ' '))) AS kgram
-    FROM (SELECT doc_id, {_words_sql()} AS a FROM {src})
-    WHERE len(a) >= {k})"""
+    SELECT doc_id, unnest({_kgrams_sql("a", k)}) AS kgram
+    FROM (SELECT doc_id, {_words_sql()} AS a FROM {src}))"""
 
 
 _Q91_ORACLE = f"""

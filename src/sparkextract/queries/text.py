@@ -21,23 +21,27 @@ def _words_sql(text: str = "text") -> str:
     return f"list_filter(string_split({text}, ' '), t -> t <> '')"
 
 
-def _bigrams(a):
-    """Adjacent-word bigrams 'a[i] a[i+1]' of an array column. Indexing
-    the words of slice(a, 1, size - 1) needs no guard for a list of
-    fewer than two words: that slice is empty, like DuckDB's range(1, 1),
-    while Spark's sequence(1, 0) is the DESCENDING [1, 0], whose
-    element_at(a, 0) aborts the job. A when/otherwise guard with an
-    empty-array literal also works, but it stops Spark from reusing the
-    exchanges of a bigram table read twice (q121)."""
+def _kgrams(a, k: int):
+    """Word k-grams 'a[i] .. a[i+k-1]' of an array column, in order.
+    Transforming slice(a, 1, size - k + 1) needs no guard for a list of
+    fewer than k words: that slice is empty, like DuckDB's range(1, 1),
+    while Spark's sequence(1, size - k + 1) would run DESCENDING there.
+    Two spellings return the same k-grams but stop Spark from reusing the
+    exchanges of a k-gram table read twice (q121: 6 → 8 scans): a
+    when/otherwise guard with an empty-array literal, and
+    array_join(slice(a, i + 1, k)) in place of the element_at chain."""
     return F.transform(
-        F.slice(a, 1, F.greatest(F.size(a) - 1, F.lit(0))),
-        lambda x, i: F.concat_ws(" ", x, F.element_at(a, i + 2)),
+        F.slice(a, 1, F.greatest(F.size(a) - (k - 1), F.lit(0))),
+        lambda x, i: F.concat_ws(" ", x, *[F.element_at(a, i + j + 1) for j in range(1, k)]),
     )
 
 
-def _bigrams_sql(a: str) -> str:
-    """DuckDB twin of :func:`_bigrams` over the list expression ``a``."""
-    return f"list_transform(range(1, len({a})), i -> {a}[i] || ' ' || {a}[i+1])"
+def _kgrams_sql(a: str, k: int) -> str:
+    """DuckDB twin of :func:`_kgrams` over the list expression ``a``."""
+    return (
+        f"list_transform(range(1, len({a}) - {k} + 2),"
+        f" i -> array_to_string({a}[i:i+{k - 1}], ' '))"
+    )
 
 
 # --------------------------------------------------------------------------

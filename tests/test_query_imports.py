@@ -3,13 +3,15 @@ import cycle hides behind the order in which another module loads them;
 every reference-file citation in the package names a file the survey
 cites; no query module keeps a top-level name that nothing reaches; each
 shared query kernel is spelled in one place; the registry and the driver
-view stay within their caps; and the tests share one Spark fixture and
-one ``SF_DIR``."""
+view stay within their caps; only ``base.py`` keys state on the Spark
+session, and its memos miss on a rewritten input; and the tests share
+one Spark fixture and one ``SF_DIR``."""
 
 import ast
 import os
 import pkgutil
 import re
+import shutil
 import subprocess
 import sys
 
@@ -17,6 +19,7 @@ import pytest
 
 import sparkextract
 import sparkextract.queries
+from conftest import write_docs
 
 SRC = os.path.dirname(os.path.dirname(os.path.abspath(sparkextract.__file__)))
 REPO = os.path.dirname(SRC)
@@ -207,19 +210,19 @@ def test_query_code_is_reachable():
 _KERNEL_HOMES = {
     "sqrt(list_sum(list_transform(": ("ann", "_norm_sql"),  # DuckDB cosine
     "/ (_norm(": ("ann", "_cos"),  # Spark cosine
-    "array_to_string(a[i:i+": ("sketches", "_kgram_keys_sql"),  # DuckDB k-grams
     # word tokens: split on ' ', '' dropped
     re.compile(r'F\.filter\(F\.split\([^()]*,""\),lambda(\w+):\1!=F\.lit\(""\)\)'):
         ("text", "_words"),
     re.compile(r"list_filter\(string_split\([^()]*,''\),(\w+)->\1(?:<>|!=)''\)"):
         ("text", "_words_sql"),
-    # adjacent-word bigrams; the Spark pattern also matches the
-    # sequence(1, size - 1) form that earlier copies used
+    # word k-grams; each pattern also matches the forms that earlier
+    # copies used (sequence(1, size - k + 1), concat_ws bigrams)
     re.compile(
-        r'lambda(\w+),\w+:F\.concat_ws\("",\1,F\.element_at\('
-        r"|F\.sequence\(F\.lit\(1\),F\.size\([^()]*\)-1\)"
-    ): ("text", "_bigrams"),
-    "[i] || ' ' || ": ("text", "_bigrams_sql"),
+        r"F\.greatest\(F\.size\(\w+\)-"
+        r"|F\.sequence\(F\.lit\(1\),F\.size\([^()]*\)-"
+        r'|lambda\w+,\w+:F\.concat_ws\("",\w+,F\.element_at\('
+    ): ("text", "_kgrams"),
+    re.compile(r"\[i:i\+|\[i\]\|\|''\|\|"): ("text", "_kgrams_sql"),
     # lowercase alphabetic terms and their per-doc counts
     "F.split(F.lower(": ("retrieval", "_term_tf"),
     "regexp_split_to_array(lower(": ("retrieval", "_TERM_TF_SQL"),
@@ -234,6 +237,19 @@ _KERNEL_HOMES = {
     # SimHash sign-vote fold
     'F.shiftright("hv", b)': ("dedup", "_simhash"),
     "THEN 1 ELSE -1 END": ("dedup", "_simhash_sql"),
+    # the FLOAT -> DOUBLE embedding cast
+    'F.transform("embedding", lambda x: x.cast("double"))': ("ann", "_emb_double"),
+    "list_transform(embedding, x -> CAST(x AS DOUBLE))": ("ann", "_EMB_DOUBLE_SQL"),
+    # ROUND-6 nearest-centroid argmax over the 8 IVF centroids
+    '(-F.col("cent_id")).alias("t")': ("ann", "_nearest_cell"),
+    re.compile(r'ORDERBYROUND\(\{_cos_sql\([^)]*"ct\.cv"\)\},6\)DESC'):
+        ("ann", "_nearest_cell_sql"),
+    # the LSH band-bucket pair self-join
+    '(F.col("x.band") == F.col("y.band"))': ("dedup", "_band_pairs"),
+    "x.band = y.band": ("dedup", "_band_pairs_sql"),
+    # the embeddings plus their +0.25 twins
+    'x.cast("double") + 0.25': ("dedup", "_banded_corpus"),
+    "AS DOUBLE) + 0.25": ("dedup", "_BANDED_CORPUS_SQL"),
 }
 
 
@@ -256,6 +272,18 @@ def test_each_shared_kernel_is_spelled_once():
             for pattern, where in spelled.items():
                 where += [(mod, name)] * _count(pattern, body)
     assert spelled == {pattern: [home] for pattern, home in _KERNEL_HOMES.items()}
+
+
+def test_session_keyed_state_lives_in_base():
+    """Every query that materializes or writes once per (session, input)
+    goes through ``base.checkpoint_memo`` or ``base.run_once``, whose keys
+    carry the input token: no other module keys state on the session."""
+    spelled = []
+    for mod in MODULES:
+        with open(os.path.join(QUERIES_DIR, mod + ".py")) as f:
+            if mod != "base" and "applicationId" in f.read():
+                spelled.append(mod)
+    assert not spelled
 
 
 def test_one_spark_fixture_and_one_sf_dir():
@@ -313,3 +341,51 @@ def test_driver_view_fits_cap_and_covers_registry():
         for _tag, fine, mapping in parts:
             assert fine in SPARK_QUERIES, fine
             assert set(mapping) <= colnames, (pname, fine)
+
+
+def test_checkpoint_memo_invalidates_on_rewrite(spark, tmp_path):
+    """Rewriting the parquet under the same dir in one session must MISS
+    the memo (input_token keys on file size/mtime), not serve stale
+    checkpointed data."""
+    from sparkextract.queries.base import checkpoint_memo, load
+
+    root = str(tmp_path / "memo")
+    write_docs(spark, [(1, "alpha", 0)], root)
+    build = lambda: load(spark, root, "documents").select("doc_id", "text")
+    first = checkpoint_memo(spark, root, "t", build).collect()
+    assert [r["text"] for r in first] == ["alpha"]
+    shutil.rmtree(os.path.join(root, "documents.parquet"))
+    write_docs(spark, [(1, "beta", 0)], root)
+    second = checkpoint_memo(spark, root, "t", build).collect()
+    assert [r["text"] for r in second] == ["beta"]
+
+
+def test_run_once_queries_follow_a_rewritten_input(spark, tmp_path):
+    """q68's signature memo and the run-once roots of q95, q108 and q145
+    key on the input's content: after documents.parquet is rewritten in
+    the same session, each returns rows of the new input. Docs 2 and 7
+    copy the text of docs 1 and 6, so they are q68's near-dup pairs and
+    share q145's content hashes; no id is a multiple of 11, so q68
+    injects no pair of its own."""
+    from sparkextract.queries.dedup import q68_simhash_near_dup
+    from sparkextract.queries.incremental import (
+        q95_manifest_resume_state,
+        q108_streaming_incremental,
+        q145_streaming_stateful_dedup,
+    )
+
+    root = str(tmp_path / "rewritten")
+
+    def text(d):
+        d = {2: 1, 7: 6}.get(d, d)
+        return " ".join(f"w{d}x{i}" for i in range(30))
+
+    for n, pairs in ((5, [(1, 2)]), (10, [(1, 2), (6, 7)])):
+        write_docs(spark, [(d, text(d), len(text(d))) for d in range(1, n + 1)], root)
+        resumed = q95_manifest_resume_state(spark, root).collect()
+        assert sum(r["doc_count"] for r in resumed) == n
+        streamed = q108_streaming_incremental(spark, root).collect()
+        assert {r["doc_id"] for r in streamed} == {str(d) for d in range(1, n + 1)}
+        assert q145_streaming_stateful_dedup(spark, root).count() == len({text(d) for d in range(1, n + 1)})
+        near = q68_simhash_near_dup(spark, root).collect()
+        assert sorted((r["left_id"], r["right_id"]) for r in near) == pairs

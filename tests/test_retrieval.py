@@ -1,7 +1,12 @@
 """Tests for the retrieval query family (``queries/retrieval.py``):
-ranking bounds and identities and BM25 on a constructed corpus."""
+ranking bounds and identities, BM25 on a constructed corpus and the q128
+MMR rerank against an independent numpy re-implementation of the greedy
+recursion."""
 
 import math
+import os
+
+import numpy as np
 
 from conftest import SF_DIR, write_docs
 
@@ -90,3 +95,79 @@ def test_q156_ndcg_bounds_and_identity(spark):
             assert r["ndcg_u"] == expect
             # rearrangement bound: the ideal reorder dominates
             assert r["dcg"] <= r["idcg"] + 1e-9
+
+
+def _numpy_mmr(sf_dir):
+    """Independent MMR over the parquet embeddings (pure numpy)."""
+    import pyarrow.parquet as pq
+
+    from sparkextract.queries.retrieval import _Q128_K, _Q128_NCAND, _Q128_STRIDE
+
+    t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    vec_ids = t.column("vec_id").to_pylist()
+    embs = {
+        v: np.asarray(e, dtype=np.float64)
+        for v, e in zip(vec_ids, t.column("embedding").to_pylist())
+    }
+
+    def cos_u(a, b):
+        c = float(np.dot(a, b)) / (
+            float(np.sqrt(np.dot(a, a))) * float(np.sqrt(np.dot(b, b)))
+        )
+        return int(np.round(c * 1_000_000))
+
+    out = []
+    for qid in sorted(v for v in embs if v % _Q128_STRIDE == 0):
+        qe = embs[qid]
+        rel = {v: cos_u(e, qe) for v, e in embs.items() if v != qid}
+        cand = sorted(rel, key=lambda v: (-rel[v], v))[:_Q128_NCAND]
+        selected = []
+        for step in range(1, _Q128_K + 1):
+            best = None
+            for v in cand:
+                if v in (s for s, _ in selected):
+                    continue
+                ms = max(
+                    (cos_u(embs[v], embs[s]) for s, _ in selected),
+                    default=0,
+                )
+                score = 7 * rel[v] - 3 * ms
+                key = (-score, v)
+                if best is None or key < best[0]:
+                    best = (key, v, score)
+            _, v, score = best
+            selected.append((v, score))
+            out.append((qid, step, v, rel[v], score))
+    return out
+
+
+def test_q128_matches_numpy_reference(spark):
+    from sparkextract.queries.retrieval import q128_mmr_rerank
+
+    got = [
+        (r["query_id"], r["step"], r["vec_id"], r["rel_u"], r["score_u"])
+        for r in q128_mmr_rerank(spark, SF_DIR).collect()
+    ]
+    assert got == _numpy_mmr(SF_DIR)
+
+
+def test_q128_greedy_invariants(spark):
+    from sparkextract.queries.retrieval import _Q128_K, q128_mmr_rerank
+
+    rows = q128_mmr_rerank(spark, SF_DIR).collect()
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r["query_id"], []).append(r)
+    assert by_q
+    for qid, picks in by_q.items():
+        picks.sort(key=lambda r: r["step"])
+        assert [r["step"] for r in picks] == list(range(1, _Q128_K + 1))
+        ids = [r["vec_id"] for r in picks]
+        assert len(set(ids)) == _Q128_K  # no repeats
+        assert qid not in ids  # query never retrieves itself
+        # step 1 is the pure-relevance argmax: its MMR score is 7*rel
+        assert picks[0]["score_u"] == 7 * picks[0]["rel_u"]
+        # later steps: score = 7*rel - 3*maxsim with maxsim a cosine in
+        # micro-units (may be negative), so it stays within 3e6 of 7*rel
+        for r in picks[1:]:
+            assert abs(r["score_u"] - 7 * r["rel_u"]) <= 3_000_000

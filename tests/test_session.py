@@ -119,6 +119,28 @@ def test_pyfiles_zip_is_built_once_per_source_hash(monkeypatch, tmp_path):
         assert a.read() == b.read()
 
 
+def test_pyfiles_zip_reaps_only_day_old_hash_dirs(monkeypatch, tmp_path):
+    """Building the zip removes another source hash's dir untouched for a
+    day, keeps a fresh one (a session that may still be running) and
+    touches its own dir when it reuses it."""
+    import time
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    own = os.path.dirname(session.build_pyfiles_zip())
+    fresh = tmp_path / "sparkextract_pyfiles_fresh"
+    stale = tmp_path / "sparkextract_pyfiles_stale"
+    for d in (fresh, stale):
+        d.mkdir()
+        (d / "sparkextract.zip").write_bytes(b"")
+    old = time.time() - session.REAP_AGE_S - 60
+    for d in (stale, own):
+        os.utime(d, (old, old))
+    assert os.path.dirname(session.build_pyfiles_zip()) == own
+    assert not stale.exists()
+    assert (fresh / "sparkextract.zip").is_file()
+    assert os.path.getmtime(own) > old + 60
+
+
 class _Built(Exception):
     pass
 

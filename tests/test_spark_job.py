@@ -1,8 +1,8 @@
 """End-to-end Spark tests (SURVEY.md §5.2): span-sequence equality vs the
 pure-pandas oracle, doc runs across Arrow batches, partitioning
 invariance, plan shape, checkpoint/resume idempotency, the debug sinks
-and span filters of ``spark/io.py``, the Excel summary sink and the
-alternate document sources."""
+and span filters of ``spark/io.py``, the Excel summary sink, the
+alternate document sources and the fail_after_buckets rule."""
 
 import os
 
@@ -660,3 +660,24 @@ def test_alternate_document_sources_roundtrip(spark, tmp_path):
     assert len(base) > 50
     assert spans(read_documents_jsonl(spark, jl)) == base
     assert spans(read_documents_orc(spark, oc)) == base
+
+
+def test_fail_after_buckets_is_bucket_id_rule(spark, tmp_path):
+    """fail_after_buckets commits exactly the buckets with id < N —
+    deterministic on the bucket ID, independent of which buckets happen
+    to be populated (round-4 ADVICE: the oracle derives run_seq from
+    this rule)."""
+    from sparkextract.schema import DOC_SCHEMA
+    from sparkextract.spark.manifest import read_manifest, run_extraction_job
+
+    docs = spark.createDataFrame(
+        [(f"d{i}", [{"kind": "text", "text": "x" * 120, "media_ref": None, "offset": 0}])
+         for i in range(64)],
+        schema=DOC_SCHEMA,
+    )
+    root = str(tmp_path / "failrule")
+    run_extraction_job(spark, docs, root, run_id="r1", num_buckets=8,
+                       fail_after_buckets=3)
+    m = read_manifest(spark, root).filter(F.col("status") == "done")
+    got = sorted(r["doc_id_bucket"] for r in m.collect())
+    assert all(b < 3 for b in got)

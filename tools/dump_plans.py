@@ -41,6 +41,7 @@ def summarize(plan: str) -> dict:
     joins = sorted(set(re.findall(r"(BroadcastHashJoin|SortMergeJoin|BroadcastNestedLoopJoin|ShuffledHashJoin)", plan)))
     # formatted mode lists each node once in the numbered section
     n_exchange = len(re.findall(r"\(\d+\) Exchange", plan))
+    n_reused = len(re.findall(r"\(\d+\) ReusedExchange", plan))
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     schemas = re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
     codegen = len(set(re.findall(r"codegen id : (\d+)", plan)))
@@ -51,6 +52,7 @@ def summarize(plan: str) -> dict:
         "read_schemas": schemas,
         "joins": joins,
         "shuffles": n_exchange,
+        "reused": n_reused,
         "codegen_stages": codegen,
     }
 
@@ -94,6 +96,8 @@ def main():
         lines.append("")
         lines.append(f"- parquet scans: {s['scans']}; shuffles (Exchange nodes): {s['shuffles']}; "
                      f"codegen stages: {s['codegen_stages']}")
+        if s["reused"]:
+            lines.append(f"- reused exchanges: {s['reused']}")
         if s["joins"]:
             lines.append(f"- join strategies: {', '.join(s['joins'])}")
         for i, p in enumerate(s["pushed"]):
