@@ -17,55 +17,18 @@ _SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "src")
 if _SRC not in sys.path:
     sys.path.insert(0, _SRC)
 
-
-def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def _interleaved_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministically wrap the driver's flat ``documents`` table into the
-    interleaved span-array shape of BASELINE.json input_hint: each row
-    becomes one document whose payload is routed to an html / pdf_layout /
-    text input span by doc_id, plus a trailing media span for every third
-    document."""
-    from pyspark.sql import functions as F
-
-    docs = _load(spark, sf_dir, "documents")
-    payload = F.col("text")
-    html_payload = F.concat(
-        F.lit("<html><body><nav><a href='/home'>home home home</a></nav><article><p>"),
-        payload,
-        F.lit("</p></article><footer><p>copyright footer boilerplate text</p></footer></body></html>"),
-    )
-    kind = F.element_at(
-        F.array(F.lit("text"), F.lit("html"), F.lit("pdf_layout")),
-        (F.col("doc_id") % 3 + 1).cast("int"),
-    )
-    first_span = F.struct(
-        kind.alias("kind"),
-        F.when(kind == "html", html_payload).otherwise(payload).alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
-        F.lit(0).alias("offset"),
-    )
-    media_span = F.struct(
-        F.lit("media").alias("kind"),
-        F.lit(None).cast("string").alias("text"),
-        F.concat(F.lit("img://"), F.col("doc_id").cast("string"), F.lit("/1")).alias("media_ref"),
-        F.lit(1).alias("offset"),
-    )
-    spans = F.when(F.col("doc_id") % 3 == 0, F.array(first_span, media_span)).otherwise(
-        F.array(first_span)
-    )
-    return docs.select(F.col("doc_id").cast("string").alias("doc_id"), spans.alias("spans"))
+_ENTRY_SF_DIR = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: interleaved corpus (from sf0.001 documents) → deterministic
-    span extraction via Arrow-batched mapInPandas → exploded output spans."""
+    """Flagship: the q40 interleaved corpus (``queries/extraction.py``
+    ``interleaved_docs`` over the sf0.001 documents) → deterministic span
+    extraction via Arrow-batched mapInPandas → exploded output spans, the
+    rows the gate checks against q40's DuckDB oracle."""
+    from sparkextract.queries.extraction import interleaved_docs
     from sparkextract.spark.job import extract_exploded
 
-    docs = _interleaved_docs(spark, "/root/testdata/sf0.001")
-    return extract_exploded(docs)
+    return extract_exploded(interleaved_docs(spark, _ENTRY_SF_DIR))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

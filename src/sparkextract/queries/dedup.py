@@ -1230,19 +1230,13 @@ _Q139_DF_LO = 2  # a key seen once links nothing
 _Q139_DF_HI = 10  # df cap: <= C(10,2) pairs per key, hot keys excluded
 
 
-_Q139_GRAM_SQL = "||'|'||".join(
-    f"l[i - {_Q139_K - 1 - j}]" for j in range(_Q139_K)
-)
-
-
 _Q139_ORACLE = f"""
 WITH t AS (
   SELECT doc_id, lang, {_words_sql()} AS l FROM documents
 ),
 gr AS (
   SELECT DISTINCT doc_id, lang,
-         unnest(list_transform(range({_Q139_K}, len(l) + 1),
-                               i -> {_Q139_GRAM_SQL})) AS g
+         unnest({_kgrams_sql("l", _Q139_K, "|")}) AS g
   FROM t WHERE len(l) >= {_Q139_K}
 ),
 keys AS (
@@ -1277,17 +1271,7 @@ def q139_bitext_candidates(spark, sf_dir):
         t = docs.select("doc_id", "lang", _words().alias("l")).filter(
             F.size("l") >= _Q139_K
         )
-        l = F.col("l")
-        gram = F.transform(
-            F.sequence(F.lit(_Q139_K), F.size(l)),
-            lambda i: F.concat_ws(
-                "|",
-                *[
-                    F.element_at(l, i - F.lit(_Q139_K - 1 - j))
-                    for j in range(_Q139_K)
-                ],
-            ),
-        )
+        gram = _kgrams(F.col("l"), _Q139_K, "|")
         return t.select(
             "doc_id", "lang", F.explode(F.array_distinct(gram)).alias("g")
         )

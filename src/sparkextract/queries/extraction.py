@@ -51,55 +51,80 @@ def _routed_payload(kind):
     return F.when(kind == "html", html_payload).otherwise(payload)
 
 
+def _span(kind, text, offset=0, media_ref=None):
+    """One input span struct in the engine's (kind, text, media_ref, offset)
+    layout. ``kind`` and ``offset`` may be Python literals; a missing
+    ``text`` or ``media_ref`` is a string NULL."""
+    null = F.lit(None).cast("string")
+    return F.struct(
+        F.lit(kind).alias("kind"),
+        (null if text is None else text).alias("text"),
+        (null if media_ref is None else media_ref).alias("media_ref"),
+        F.lit(offset).alias("offset"),
+    )
+
+
+def _span_docs(docs, spans):
+    """The (doc_id string, spans) input frame of a flat docs frame: one
+    row per doc, ``spans`` an array Column of :func:`_span` structs."""
+    return docs.select(F.col("doc_id").cast("string").alias("doc_id"), spans.alias("spans"))
+
+
 def interleaved_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wrap the flat ``documents`` table into the BASELINE.json input_hint
     shape. Routing is deterministic on doc_id: %3==0 → text (+media span),
-    %3==1 → html-wrapped, %3==2 → pdf_layout."""
+    %3==1 → html-wrapped, %3==2 → pdf_layout. ``__spark_entry__.entry``
+    extracts this corpus at sf0.001."""
     return wrap_docs(load(spark, sf_dir, "documents"))
 
 
 def wrap_docs(docs: DataFrame) -> DataFrame:
     """Wrap any flat (doc_id, text) frame into the interleaved span shape
     (same deterministic doc_id%3 routing); shared with q94's augmented
-    corpus."""
+    corpus and q106's changed docs."""
     kind = _routed_kind()
-    first_span = F.struct(
-        kind.alias("kind"),
-        _routed_payload(kind).alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
-        F.lit(0).alias("offset"),
+    first = _span(kind, _routed_payload(kind))
+    media = _span(
+        "media", None, 1, F.concat(F.lit("img://"), F.col("doc_id").cast("string"), F.lit("/1"))
     )
-    media_span = F.struct(
-        F.lit("media").alias("kind"),
-        F.lit(None).cast("string").alias("text"),
-        F.concat(F.lit("img://"), F.col("doc_id").cast("string"), F.lit("/1")).alias(
-            "media_ref"
-        ),
-        F.lit(1).alias("offset"),
+    return _span_docs(
+        docs, F.when(F.col("doc_id") % 3 == 0, F.array(first, media)).otherwise(F.array(first))
     )
-    spans = F.when(
-        F.col("doc_id") % 3 == 0, F.array(first_span, media_span)
-    ).otherwise(F.array(first_span))
-    return docs.select(F.col("doc_id").cast("string").alias("doc_id"), spans.alias("spans"))
 
 
-# --------------------------------------------------------------------------
-# THE extraction invariant, driver-checked: real pipeline vs SQL-derived
-# expected spans (kind, text, media_ref, offset) — span-sequence equality.
-@register(
-    "q40_extract_passthrough",
-    oracle=f"""
+# The interleaved wrap's passthrough property, in SQL: a doc has 1 text
+# span iff n_chars >= 100 and 1 image_ocr span iff doc_id % 3 == 0, after
+# the text span, and never a table span.
+_N_TEXT_SQL = "CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END"
+
+
+_N_MEDIA_SQL = "CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END"
+
+
+_SPAN_COUNT_SQL = f"({_N_TEXT_SQL} + {_N_MEDIA_SQL})"
+
+
+_MEDIA_REF_SQL = "'img://' || CAST(doc_id AS VARCHAR) || '/1'"
+
+
+# Every output span of the interleaved wrap: the expectation of q40 and
+# of q108's streamed copy.
+_PASSTHROUGH_SQL = f"""
     SELECT CAST(doc_id AS VARCHAR) AS doc_id, 'text' AS kind, text,
            CAST(NULL AS VARCHAR) AS media_ref, 0 AS offset
     FROM documents WHERE n_chars >= 100
     UNION ALL
     SELECT CAST(doc_id AS VARCHAR) AS doc_id, 'image_ocr' AS kind,
-           {ocr_sql("'img://' || CAST(doc_id AS VARCHAR) || '/1'")} AS text,
-           'img://' || CAST(doc_id AS VARCHAR) || '/1' AS media_ref,
-           CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END AS offset
+           {ocr_sql(_MEDIA_REF_SQL)} AS text, {_MEDIA_REF_SQL} AS media_ref,
+           {_N_TEXT_SQL} AS offset
     FROM documents WHERE doc_id % 3 = 0
-    """,
-)
+"""
+
+
+# --------------------------------------------------------------------------
+# THE extraction invariant, driver-checked: real pipeline vs SQL-derived
+# expected spans (kind, text, media_ref, offset) — span-sequence equality.
+@register("q40_extract_passthrough", oracle=_PASSTHROUGH_SQL)
 def q40_extract_passthrough(spark, sf_dir):
     from sparkextract.spark.job import extract_exploded
 
@@ -111,16 +136,10 @@ def q40_extract_passthrough(spark, sf_dir):
 @register(
     "q41_extract_kind_stats",
     oracle=f"""
-    WITH spans AS (
-      SELECT 'text' AS kind, n_chars AS len FROM documents WHERE n_chars >= 100
-      UNION ALL
-      SELECT 'image_ocr' AS kind, {OCR_TEXT_LEN} AS len
-      FROM documents WHERE doc_id % 3 = 0
-    )
     SELECT kind,
            CAST(COUNT(*) AS BIGINT) AS n_spans,
-           CAST(COALESCE(SUM(len), 0) AS BIGINT) AS total_chars
-    FROM spans GROUP BY kind
+           CAST(COALESCE(SUM(LENGTH(text)), 0) AS BIGINT) AS total_chars
+    FROM ({_PASSTHROUGH_SQL}) GROUP BY kind
     """,
 )
 def q41_extract_kind_stats(spark, sf_dir):
@@ -171,6 +190,8 @@ _Q42_ORACLE = f"""
 def mega_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fold the ``documents`` table into 4 mega docs (even doc_ids) plus
     singleton docs (odd doc_ids); doc_id%5==0 rows add a media span."""
+    from sparkextract.spark.job import assemble_spans
+
     docs = load(spark, sf_dir, "documents")
     out_doc = F.when(
         F.col("doc_id") % 2 == 0,
@@ -178,43 +199,13 @@ def mega_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.concat(F.lit("doc-"), F.col("doc_id").cast("string")))
     main_off = F.when(F.col("doc_id") % 2 == 0, F.col("doc_id")).otherwise(F.lit(0))
     kind = _routed_kind()
-    main = docs.select(
-        out_doc.alias("doc_id"),
-        F.struct(
-            kind.alias("kind"),
-            _routed_payload(kind).alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            main_off.cast("int").alias("offset"),
-        ).alias("s"),
+    main = _span(kind, _routed_payload(kind), main_off.cast("int"))
+    ref = F.concat(F.lit("img://"), F.col("doc_id").cast("string"), F.lit("/m"))
+    media = _span("media", None, (main_off + 1).cast("int"), ref)
+    rows = docs.select(out_doc.alias("doc_id"), main.alias("s")).unionByName(
+        docs.filter(F.col("doc_id") % 5 == 0).select(out_doc.alias("doc_id"), media.alias("s"))
     )
-    media = docs.filter(F.col("doc_id") % 5 == 0).select(
-        out_doc.alias("doc_id"),
-        F.struct(
-            F.lit("media").alias("kind"),
-            F.lit(None).cast("string").alias("text"),
-            F.concat(F.lit("img://"), F.col("doc_id").cast("string"), F.lit("/m")).alias(
-                "media_ref"
-            ),
-            (main_off + 1).cast("int").alias("offset"),
-        ).alias("s"),
-    )
-    return (
-        main.unionByName(media)
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(F.struct(F.col("s.offset").alias("offset"), F.col("s.kind").alias("kind"), F.col("s.text").alias("text"), F.col("s.media_ref").alias("media_ref")))).alias("_s"))
-        .select(
-            "doc_id",
-            F.transform(
-                "_s",
-                lambda x: F.struct(
-                    x["kind"].alias("kind"),
-                    x["text"].alias("text"),
-                    x["media_ref"].alias("media_ref"),
-                    x["offset"].alias("offset"),
-                ),
-            ).alias("spans"),
-        )
-    )
+    return assemble_spans(rows.select("doc_id", "s.*"))
 
 
 @register("q42_extract_mega_skew", oracle=_Q42_ORACLE)
@@ -232,12 +223,10 @@ def q42_extract_mega_skew(spark, sf_dir):
     "q43_extract_assembled",
     oracle=f"""
     SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-           CAST((CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END)
-              + (CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END) AS INT) AS n_spans,
-           CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS INT) AS n_media,
-           CAST((CASE WHEN n_chars >= 100 THEN n_chars ELSE 0 END)
-              + (CASE WHEN doc_id % 3 = 0 THEN {OCR_TEXT_LEN} ELSE 0 END)
-              AS INT) AS total_chars,
+           CAST({_SPAN_COUNT_SQL} AS INT) AS n_spans,
+           CAST({_N_MEDIA_SQL} AS INT) AS n_media,
+           CAST({_N_TEXT_SQL} * n_chars + {_N_MEDIA_SQL} * {OCR_TEXT_LEN} AS INT)
+             AS total_chars,
            CASE WHEN n_chars >= 100 THEN 'text'
                 WHEN doc_id % 3 = 0 THEN 'image_ocr' END AS first_kind
     FROM documents
@@ -309,22 +298,11 @@ _Q54_ORACLE = """
 def q54_chunk_overlap(spark, sf_dir):
     from sparkextract.spark.job import extract_exploded
 
-    docs = load(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        (F.lit(200) + F.col("n_chars") % 354).cast("int").alias("L"),
-        (F.lit(3) + F.col("doc_id") % 12).cast("int").alias("k"),
-    )
-    unit = F.repeat(F.lit("w"), F.col("L"))
-    body = F.array_join(F.array_repeat(unit, F.col("k")), "\n\n")
-    spans = F.array(
-        F.struct(
-            F.lit("text").alias("kind"),
-            body.alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).alias("offset"),
-        )
-    )
-    out = extract_exploded(docs.select("doc_id", spans.alias("spans")))
+    docs = load(spark, sf_dir, "documents")
+    unit = F.repeat(F.lit("w"), (F.lit(200) + F.col("n_chars") % 354).cast("int"))
+    k = (F.lit(3) + F.col("doc_id") % 12).cast("int")
+    body = F.array_join(F.array_repeat(unit, k), "\n\n")
+    out = extract_exploded(_span_docs(docs, F.array(_span("text", body))))
     return out.select(
         "doc_id",
         "offset",
@@ -409,10 +387,11 @@ def q56_ocr_clean_chain(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # q62: unknown-input-kind fallback through the gate. The extraction core
-# treats unrecognized span kinds as prose rather than dropping data
-# (core/extract.py extract_input_span else-branch) — a malformed-feed
-# guarantee previously pytest-only. Odd doc_ids get an invented kind;
-# their payloads must come through exactly like 'text' spans.
+# treats unrecognized span kinds as prose rather than dropping data (the
+# else-branch of core/extract.py _extract_content_span) — a
+# malformed-feed guarantee previously pytest-only. Odd doc_ids get an
+# invented kind; their payloads must come through exactly like 'text'
+# spans.
 @register(
     "q62_unknown_kind_fallback",
     oracle="""
@@ -428,17 +407,7 @@ def q62_unknown_kind_fallback(spark, sf_dir):
     kind = F.when(F.col("doc_id") % 2 == 1, F.lit("mystery_format_v2")).otherwise(
         F.lit("text")
     )
-    spans = F.array(
-        F.struct(
-            kind.alias("kind"),
-            F.col("text").alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).alias("offset"),
-        )
-    )
-    out = extract_exploded(
-        docs.select(F.col("doc_id").cast("string").alias("doc_id"), spans.alias("spans"))
-    )
+    out = extract_exploded(_span_docs(docs, F.array(_span(kind, F.col("text")))))
     return out.select("doc_id", "kind", "text", "offset")
 
 
@@ -469,18 +438,9 @@ def q63_duplicate_offsets(spark, sf_dir):
     from sparkextract.spark.job import extract_exploded
 
     docs = load(spark, sf_dir, "documents").filter(F.col("n_chars") >= 100)
-    mk = lambda txt: F.struct(
-        F.lit("text").alias("kind"),
-        txt.alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
-        F.lit(0).alias("offset"),
-    )
-    spans = F.array(
-        mk(F.col("text")), mk(F.concat(F.lit("zz dup tail "), F.col("text")))
-    )
-    out = extract_exploded(
-        docs.select(F.col("doc_id").cast("string").alias("doc_id"), spans.alias("spans"))
-    )
+    dup = F.concat(F.lit("zz dup tail "), F.col("text"))
+    spans = F.array(_span("text", F.col("text")), _span("text", dup))
+    out = extract_exploded(_span_docs(docs, spans))
     return out.select("doc_id", "text", "offset")
 
 
@@ -551,15 +511,7 @@ def _q64_docs(spark, sf_dir):
     layout = F.concat_ws(
         "\n", F.col("text"), table, F.lit(_Q64_MID), table, unruled, form
     )
-    spans = F.array(
-        F.struct(
-            F.lit("pdf_layout").alias("kind"),
-            layout.alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).alias("offset"),
-        )
-    )
-    return docs.select(d.alias("doc_id"), spans.alias("spans"))
+    return _span_docs(docs, F.array(_span("pdf_layout", layout)))
 
 
 @register("q64_pdf_table_form", oracle=_Q64_ORACLE)
@@ -627,15 +579,7 @@ def q65_html_table_form(spark, sf_dir):
             "</body></html>"
         ),
     )
-    spans = F.array(
-        F.struct(
-            F.lit("html").alias("kind"),
-            html.alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).alias("offset"),
-        )
-    )
-    out = extract_exploded(docs.select(d.alias("doc_id"), spans.alias("spans")))
+    out = extract_exploded(_span_docs(docs, F.array(_span("html", html))))
     return out.select("doc_id", "kind", "text", "offset")
 
 
@@ -756,15 +700,7 @@ def _q69_docs(spark, sf_dir):
         else:
             # concat_ws drops NULLs, so an excluded field leaves no line
             parts.append(F.when(F.col("doc_id") % mod == 0, line))
-    spans = F.array(
-        F.struct(
-            F.lit("pdf_layout").alias("kind"),
-            F.concat_ws("\n", *parts).alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).alias("offset"),
-        )
-    )
-    return docs.select(d.alias("doc_id"), spans.alias("spans"))
+    return _span_docs(docs, F.array(_span("pdf_layout", F.concat_ws("\n", *parts))))
 
 
 def _q69_oracle() -> str:

@@ -40,7 +40,7 @@ from sparkextract.queries.base import (
     register,
     run_once,
 )
-from sparkextract.queries.extraction import ocr_sql
+from sparkextract.queries.extraction import _PASSTHROUGH_SQL, _SPAN_COUNT_SQL
 from sparkextract.queries.text import _words, _words_sql
 from sparkextract.spark.session import REAP_AGE_S as _ROOT_REAP_AGE_S  # noqa: F401  (its reap age, likewise)
 
@@ -57,8 +57,7 @@ from sparkextract.spark.session import REAP_AGE_S as _ROOT_REAP_AGE_S  # noqa: F
 # The bucket function is the engine-portable md5 bucket (bucket_col
 # override) so the DuckDB oracle reproduces the assignment exactly;
 # span counts are SQL-derivable because the interleaved corpus has the
-# q40 passthrough property (1 text span iff n_chars>=100, 1 image_ocr
-# span iff doc_id%3==0, never a table span).
+# q40 passthrough property (extraction._SPAN_COUNT_SQL).
 # Scale shape: the manifest is <= num_buckets rows per run and is read
 # on the driver; the only corpus-sized work is the extraction write
 # itself, once per bucket across ALL runs combined (that is the point
@@ -77,9 +76,7 @@ WITH b AS (
 )
 SELECT CAST(doc_id_bucket AS INT) AS doc_id_bucket,
        CAST(COUNT(*) AS BIGINT) AS doc_count,
-       CAST(SUM(CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END
-                + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS span_count,
+       CAST(SUM({_SPAN_COUNT_SQL}) AS BIGINT) AS span_count,
        CAST(0 AS BIGINT) AS table_count,
        'done' AS status,
        CAST(CASE WHEN doc_id_bucket < {_Q95_FAIL_AFTER} THEN 1 ELSE 2 END AS INT)
@@ -198,10 +195,8 @@ def snapshot_diff(spark, sf_dir):
 # pipeline; unchanged docs never leave the lake. Mirrors q94's
 # composition proof for the incremental path, and the reference's
 # skip-if-ingested resume (reference src/rag/rag_pipeline.py:
-# 97-105) at content grain. Span counts are SQL-derivable from the q95
-# passthrough property of the interleaved wrap (1 text span iff
-# n_chars >= 100, 1 media span iff doc_id % 3 == 0, never a table
-# span on this corpus).
+# 97-105) at content grain. Span counts are SQL-derivable from the
+# passthrough property of the interleaved wrap (extraction._SPAN_COUNT_SQL).
 # Scale shape: the diff is map-only; the extraction runs over
 # the needs_extraction SUBSET only; the status join is one keyed
 # equi-join on doc_id. Nothing touches the unchanged majority.
@@ -215,9 +210,7 @@ WITH status AS (
   WHERE {md5_bucket_sql("doc_id", _SNAPSHOT_BUCKETS)} IN (0, 1)
 )
 SELECT doc_id, status,
-       CAST(CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END
-            + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS BIGINT)
-         AS span_count
+       CAST({_SPAN_COUNT_SQL} AS BIGINT) AS span_count
 FROM status
 """
 
@@ -256,28 +249,15 @@ def q106_incremental_extraction(spark, sf_dir):
 # half of the interleaved corpus, then the odd half lands and only IT is
 # processed — the checkpoint, not a manifest, carries the resume state),
 # then the exactly-once committed output is read back through the sink's
-# _spark_metadata log and compared full-row against the same SQL-derived
-# expectation as q40 (the passthrough property of the interleaved wrap).
+# _spark_metadata log and compared full-row against q40's expectation
+# (extraction._PASSTHROUGH_SQL).
 # Reference analog: idempotent re-ingest (reference src/rag/
 # rag_pipeline.py:97-105) as a *continuous arrival* pipeline instead of
 # a rerun loop.
 # Scale shape: the drain is the batch extraction map (zero shuffles after
 # the scan); each incremental run touches only newly-arrived files, so
 # steady-state cost tracks the arrival rate, never the corpus size.
-_Q108_ORACLE = f"""
-    SELECT CAST(doc_id AS VARCHAR) AS doc_id, 'text' AS kind, text,
-           CAST(NULL AS VARCHAR) AS media_ref, 0 AS offset
-    FROM documents WHERE n_chars >= 100
-    UNION ALL
-    SELECT CAST(doc_id AS VARCHAR) AS doc_id, 'image_ocr' AS kind,
-           {ocr_sql("'img://' || CAST(doc_id AS VARCHAR) || '/1'")} AS text,
-           'img://' || CAST(doc_id AS VARCHAR) || '/1' AS media_ref,
-           CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END AS offset
-    FROM documents WHERE doc_id % 3 = 0
-"""
-
-
-@register("q108_streaming_incremental", oracle=_Q108_ORACLE)
+@register("q108_streaming_incremental", oracle=_PASSTHROUGH_SQL)
 def q108_streaming_incremental(spark, sf_dir):
     from sparkextract.queries.extraction import interleaved_docs
     from sparkextract.streaming.incremental import incremental_extract

@@ -626,10 +626,7 @@ WITH t AS (
   SELECT doc_id, {_words_sql()} AS l FROM documents
 ),
 b AS (
-  SELECT doc_id,
-         list_transform(range(2, len(l) + 1),
-                        i -> l[i - 1] || '|' || l[i]) AS bg
-  FROM t WHERE len(l) >= 2
+  SELECT doc_id, {_kgrams_sql("l", 2, "|")} AS bg FROM t WHERE len(l) >= 2
 ),
 g AS (
   SELECT doc_id,
@@ -653,14 +650,7 @@ FROM g
 def q136_watermark_detect(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     t = docs.select("doc_id", _words().alias("l")).filter(F.size("l") >= 2)
-    l = F.col("l")
-    bg = F.transform(
-        F.sequence(F.lit(2), F.size(l)),
-        lambda i: F.concat(
-            F.element_at(l, i - F.lit(1)), F.lit("|"), F.element_at(l, i)
-        ),
-    )
-    b = t.select("doc_id", bg.alias("bg"))
+    b = t.select("doc_id", _kgrams(F.col("l"), 2, "|").alias("bg"))
     n = F.size("bg").cast("long")
     g = F.size(
         F.filter("bg", lambda x: md5_bucket(x, _Q136_GAMMA_DEN) == 0)

@@ -21,8 +21,9 @@ def _words_sql(text: str = "text") -> str:
     return f"list_filter(string_split({text}, ' '), t -> t <> '')"
 
 
-def _kgrams(a, k: int):
-    """Word k-grams 'a[i] .. a[i+k-1]' of an array column, in order.
+def _kgrams(a, k: int, sep: str = " "):
+    """Word k-grams 'a[i] .. a[i+k-1]' of an array column, in order,
+    their words joined by ``sep``.
     Transforming slice(a, 1, size - k + 1) needs no guard for a list of
     fewer than k words: that slice is empty, like DuckDB's range(1, 1),
     while Spark's sequence(1, size - k + 1) would run DESCENDING there.
@@ -32,15 +33,15 @@ def _kgrams(a, k: int):
     array_join(slice(a, i + 1, k)) in place of the element_at chain."""
     return F.transform(
         F.slice(a, 1, F.greatest(F.size(a) - (k - 1), F.lit(0))),
-        lambda x, i: F.concat_ws(" ", x, *[F.element_at(a, i + j + 1) for j in range(1, k)]),
+        lambda x, i: F.concat_ws(sep, x, *[F.element_at(a, i + j + 1) for j in range(1, k)]),
     )
 
 
-def _kgrams_sql(a: str, k: int) -> str:
+def _kgrams_sql(a: str, k: int, sep: str = " ") -> str:
     """DuckDB twin of :func:`_kgrams` over the list expression ``a``."""
     return (
         f"list_transform(range(1, len({a}) - {k} + 2),"
-        f" i -> array_to_string({a}[i:i+{k - 1}], ' '))"
+        f" i -> array_to_string({a}[i:i+{k - 1}], '{sep}'))"
     )
 
 

@@ -33,7 +33,6 @@ def incremental_extract(
     input_path: str,
     output_path: str,
     checkpoint_path: str,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Drain all currently-available document files, extract, append.
 
@@ -41,11 +40,8 @@ def incremental_extract(
     the drain completes. Re-running after new files arrive processes only
     the new files (checkpoint-tracked) — nothing is re-extracted.
     """
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return (
-        extract_exploded(reader.parquet(input_path))
+        extract_exploded(spark.readStream.schema(DOC_SCHEMA).parquet(input_path))
         .writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)

@@ -1,5 +1,9 @@
 """Tests for the extraction family's confidence metrics
-(``metrics.py``) over the extraction output."""
+(``metrics.py``) over the extraction output, and for the driver's
+flagship ``entry`` against the gate's q40 oracle."""
+
+import importlib.util
+import os
 
 from pyspark.sql import functions as F
 
@@ -22,3 +26,36 @@ def test_confidence_exprs(spark):
         "text", "table", "form", "image_ocr",
     )
     assert summary.filter(F.col("overall_conf") < 0).count() == 0
+
+
+def _load_by_path(name, *parts):
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), *parts)
+    spec = importlib.util.spec_from_file_location(name, path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_entry_rows_equal_the_q40_oracle(spark):
+    """The driver's flagship extracts the corpus the gate checks: the rows
+    of ``__spark_entry__.entry`` equal those of q40's DuckDB oracle over
+    the same documents, compared order-insensitively the way
+    ``tools/check_queries.py`` compares them."""
+    import duckdb
+
+    from sparkextract.queries.registry import ORACLE_SQL
+
+    entry_mod = _load_by_path("spark_entry", "__spark_entry__.py")
+    rows_to_set = _load_by_path("check_queries", "tools", "check_queries.py").rows_to_set
+    out = entry_mod.entry(spark)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM read_parquet("
+        f"'{entry_mod._ENTRY_SF_DIR}/documents.parquet')"
+    )
+    res = con.execute(ORACLE_SQL["q40_extract_passthrough"])
+    d_cols = [d[0].lower() for d in res.description]
+    s_cols = [c.lower() for c in out.columns]
+    assert sorted(s_cols) == sorted(d_cols)
+    expected = rows_to_set(d_cols, res.fetchall())
+    assert expected and rows_to_set(s_cols, [tuple(r) for r in out.collect()]) == expected

@@ -216,13 +216,14 @@ _KERNEL_HOMES = {
     re.compile(r"list_filter\(string_split\([^()]*,''\),(\w+)->\1(?:<>|!=)''\)"):
         ("text", "_words_sql"),
     # word k-grams; each pattern also matches the forms that earlier
-    # copies used (sequence(1, size - k + 1), concat_ws bigrams)
+    # copies used (sequence(1, size - k + 1), concat_ws bigrams, and the
+    # '|'-joined grams of q136 and q139 over sequence(k, size))
     re.compile(
         r"F\.greatest\(F\.size\(\w+\)-"
-        r"|F\.sequence\(F\.lit\(1\),F\.size\([^()]*\)-"
+        r"|F\.sequence\(F\.lit\(\w+\),F\.size\("
         r'|lambda\w+,\w+:F\.concat_ws\("",\w+,F\.element_at\('
     ): ("text", "_kgrams"),
-    re.compile(r"\[i:i\+|\[i\]\|\|''\|\|"): ("text", "_kgrams_sql"),
+    re.compile(r"\[i:i\+|\[i(?:-1)?\]\|\|'[^']*'\|\|"): ("text", "_kgrams_sql"),
     # lowercase alphabetic terms and their per-doc counts
     "F.split(F.lower(": ("retrieval", "_term_tf"),
     "regexp_split_to_array(lower(": ("retrieval", "_TERM_TF_SQL"),
@@ -250,6 +251,10 @@ _KERNEL_HOMES = {
     # the embeddings plus their +0.25 twins
     'x.cast("double") + 0.25': ("dedup", "_banded_corpus"),
     "AS DOUBLE) + 0.25": ("dedup", "_BANDED_CORPUS_SQL"),
+    # the input span struct body, and the media_ref of the interleaved
+    # wrap's media span in SQL
+    re.compile(r'\.alias\("media_ref"\),[^,]*\.alias\("offset"\)'): ("extraction", "_span"),
+    "'img://' || CAST(doc_id AS VARCHAR) || '/1'": ("extraction", "_MEDIA_REF_SQL"),
 }
 
 
